@@ -369,10 +369,7 @@ object BpeTrain {
     // 2^23: the loop falls back to the legacy gather+psort path
     // permanently (packedOk) if any count outgrows that — identical
     // order either way, byte-identity spec-pinned.
-    // SPARK_GRAFT_BPE_LEGACY=1 starts with the store disabled — the
-    // measurement knob for within-window A/B of the incremental path
-    // against the r19 gather+psort (spec-pinned identical output)
-    var packedOk = !sys.env.contains("SPARK_GRAFT_BPE_LEGACY")
+    var packedOk = true
     var scanId = 0
     var s0 = new Array[Long](0); var s0n = 0
     var mArr = new Array[Long](0); var mN = 0
@@ -397,12 +394,9 @@ object BpeTrain {
       * into ccnt/ckey in (count DESC, key ASC) order. Returns the
       * number produced, or -1 after flipping packedOk off (a count
       * outgrew the packable range; caller reruns the legacy path). */
-    var dSum = 0L; var scanSum = 0L; var mergeSum = 0L
     var forceRebuild = false
-    var rebuilds = 0
     def roundCandidates(t: Int): Int = {
       // 1. pack the dirty pairs (clearing flags); abort on overflow
-      dSum += dirtyN
       fArr = ensure(fArr, dirtyN)
       var fN = 0
       var di = 0
@@ -431,7 +425,6 @@ object BpeTrain {
         tmpArr = ensure(tmpArr, mN + fN)
         mergeDesc(mArr, mN, fArr, fN, tmpArr)
         val sw = mArr; mArr = tmpArr; tmpArr = sw; mN += fN
-        mergeSum += mN
       }
       // 3. promote M into S0 once it outgrows the delta budget
       if (mN > MPromote) {
@@ -447,7 +440,6 @@ object BpeTrain {
       // round)
       if (forceRebuild || s0n + mN > 2 * liveExact + 65536) {
         forceRebuild = false
-        rebuilds += 1
         var li = 0; var lw = 0; var n = 0
         s0 = ensure(s0, liveN)
         while (li < liveN) {
@@ -486,7 +478,6 @@ object BpeTrain {
           ccnt(found) = c; ckey(found) = key; found += 1
         }
       }
-      scanSum += scanned
       // stale rejects dominating the prefix → clean up before the next
       // scan pays for them again
       if (scanned > 2 * found + 1024) forceRebuild = true
@@ -502,9 +493,7 @@ object BpeTrain {
     val usedStamp = new Array[Int](256 + v + 1)
     var selScan = 0
     var rwBuf = new Array[Int](1024)
-    var tGather = 0L; var tSort = 0L; var tRewrite = 0L; var ciSum = 0L; var visitSum = 0L
     while (nm < v && go) {
-      val tg0 = System.nanoTime()
       // ---- incremental top-T path (r20, VERDICT #5) ----------------
       // When every count packs (cnt < 2^23 — checked continuously),
       // the round's ranked top-T prefix comes from the two-level
@@ -543,10 +532,8 @@ object BpeTrain {
         }
         liveN = lw
       }
-      tGather += System.nanoTime() - tg0; ciSum += ci
       if (ci == 0) go = false
       else {
-        val ts0 = System.nanoTime()
         // rank (count DESC, (lhs, rhs) ASC — the fixed-width carrier
         // string order), cap to the candidate window: a partial
         // quicksort fully orders positions [0, kTop) and prunes the
@@ -652,8 +639,6 @@ object BpeTrain {
           }
           psort(0, ci - 1)
         }
-        tSort += System.nanoTime() - ts0
-        val tr0 = System.nanoTime()
         // conservative parallel rule: selected iff no strictly
         // higher-ranked CANDIDATE shares a symbol. Symbol ids are
         // dense (< 256 + v), so "used" is a stamp array, not a boxed
@@ -735,12 +720,9 @@ object BpeTrain {
               }
             }
           }
-          tRewrite += System.nanoTime() - tr0
         }
       }
     }
-    if (sys.env.contains("SPARK_GRAFT_BPE_PROFILE"))
-      println(f"[bpe] rounds=$round gather=${tGather / 1e9}%.3f sort=${tSort / 1e9}%.3f rewrite=${tRewrite / 1e9}%.3f ciSum=$ciSum mcap=$mcap mn=$mn dSum=$dSum scanSum=$scanSum mergeSum=$mergeSum rebuilds=$rebuilds")
     out.result()
   }
 

@@ -97,34 +97,16 @@ object GraphOps {
     checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
-    // Never re-shuffle the graph (r20, guide §2.4): the symmetric edge
-    // list is staged once ADAPTIVELY (the caller's feeder — e.g. the
-    // MinHash candidate generation — keeps AQE); then, when the
-    // per-round join partner (the node-sized labels table) is too big
-    // to broadcast — so rounds would SMJ and re-exchange the graph
-    // every time — the staged list is laid out hash-partitioned on
-    // src (defaultParallelism partitions) and sorted, with the layout
-    // checkpoint planned AQE-off so it survives in the stored
-    // LogicalRDD (see withAqeOff/applyLayout). The per-round
-    // propagation join on src then reads the graph co-partitioned and
-    // pre-sorted instead of paying an Exchange+Sort of the whole edge
-    // list in EVERY round (twice per materialized round here: two
-    // propagation steps per job). When labels broadcast (small
-    // graphs) the layout is skipped — AQE already leaves the graph in
-    // place each round and the extra pass measured pure loss locally.
-    val p = edges.sparkSession.sparkContext.defaultParallelism
-    val symStaged = truncate(
+    // the symmetric edge list is staged once, ADAPTIVELY: the caller's
+    // feeder (e.g. the MinHash candidate generation) keeps AQE, and
+    // every round reads the staged copy instead of re-running it
+    val sym = truncate(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
         .distinct())
     var labels = truncate(
-      symStaged.select(col("src").as("id")).distinct()
+      sym.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")))
-    val sym =
-      if (applyLayout(labels))
-        withAqeOff(edges.sparkSession)(truncate(
-          symStaged.repartition(p, col("src")).sortWithinPartitions("src")))
-      else symStaged
     // decimal sum so huge id spaces can't overflow the comparison
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val v = df.agg(sum(col("lbl").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
@@ -135,10 +117,6 @@ object GraphOps {
     var converged = labels.isEmpty
     var it = 0
     val cleanup = new LaggedCleanup
-    // the staged (pre-layout) copy is never read again once `sym` and
-    // the initial labels are materialized — retire it first, so round
-    // 1's retire pushes it out of the two-slot lag immediately
-    if (sym ne symStaged) cleanup.retire(symStaged)
     // one min-label propagation step (no materialization)
     def step(ls: DataFrame): DataFrame = {
       val viaNeighbours = sym.join(ls, sym("src") === ls("id"))
@@ -163,14 +141,8 @@ object GraphOps {
         // the logical plan growing by one join per round until analysis
         // blows up on high-diameter graphs). Reliable mode: eager
         // checkpoint first.
-        // round jobs stay ADAPTIVE (no withAqeOff here): at small
-        // label counts AQE broadcasts the labels side at runtime —
-        // the graph side then never shuffles either — and forcing the
-        // co-partitioned SMJ shape instead measured 40% slower at
-        // sf0.1. At scale AQE falls back to SMJ and the pre-partitioned
-        // sym still joins exchange-free on the GRAPH side (RDDScanExec
-        // exposes the stored partitioning inside an adaptive plan);
-        // only the smaller labels leg pays an exchange per round.
+        // round jobs stay ADAPTIVE: the co-partitioned SMJ shape
+        // measured 40% slower at sf0.1 (SCALE.md, connected components).
         val next =
           if (reliable) truncate(joined)
           else joined.localCheckpoint(false)
@@ -355,21 +327,30 @@ object GraphOps {
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
   }
 
+  private val smallMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.rdd.RDD[_]]()
+
   /** Eagerly localCheckpoint a relation that downstream subtrees read
     * MANY times (edge lists feeding degree tables, orientation, and
     * closure probes): without it Spark recomputes the full upstream
     * subtree — e.g. a fact-table self-join — once per read, which
     * turned the sf0.1 triangle census into 6 redundant edge builds.
-    * Per-(session, tag) memo unpersists the previous call's blocks,
-    * so repeated invocations in a long-lived session (bench loops,
-    * notebooks) hold at most one checkpoint per tag. Blocks evicted
-    * early recompute deterministically — correctness is unaffected. */
-  private val smallMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.rdd.RDD[_]]()
-
-  /** Memo bookkeeping only: register `out`'s backing RDD under `tag`,
-    * unpersisting the PREVIOUS call's blocks for the same tag. */
-  private def memoTag(out: DataFrame, tag: String): DataFrame = {
+    * Per-(application, tag) memo unpersists the previous call's
+    * blocks, so repeated invocations in a long-lived session (bench
+    * loops, notebooks) hold at most one checkpoint per tag.
+    *
+    * Caveat — the blocks have no owner beyond that memo: a
+    * localCheckpoint truncates lineage, so its blocks CANNOT be
+    * recomputed. A block that is lost (evicted, or its executor gone)
+    * fails every later job reading it with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, and a second build with the
+    * same tag unpersists the first build's blocks, so acting on a
+    * DataFrame from the earlier build (held by a caller, or built
+    * concurrently in the same session) fails the same way. Giving
+    * these blocks a per-invocation owner and lifetime is ROADMAP
+    * item 2. */
+  private[graft] def materializeOnce(df: DataFrame, tag: String): DataFrame = {
+    val out = df.localCheckpoint()
     val key = out.sparkSession.sparkContext.applicationId + "|" + tag
     backingRdd(out).foreach { rdd =>
       val prev = smallMemo.put(key, rdd)
@@ -377,99 +358,6 @@ object GraphOps {
     }
     out
   }
-
-  private[graft] def materializeOnce(df: DataFrame, tag: String): DataFrame =
-    memoTag(df.localCheckpoint(), tag)
-
-  /** Run `thunk` with AQE disabled, restoring the previous setting.
-    *
-    * Why (r20, guide §2.4): Dataset.checkpoint/localCheckpoint stores
-    * the physical plan's outputPartitioning/outputOrdering in the
-    * resulting LogicalRDD — that is what lets a pre-partitioned graph
-    * skip the per-round Exchange+Sort. But under AQE the physical plan
-    * is AdaptiveSparkPlanExec, which reports UnknownPartitioning at
-    * checkpoint time, so the layout the caller just paid an explicit
-    * repartition+sort for is silently dropped and every downstream
-    * keyed join re-exchanges the relation. Measured (PartProbe,
-    * sf0.1 lineitem, join-on-key after repartition+checkpoint):
-    * 1 Exchange with AQE on → 0 with it off. Scope is ONLY the
-    * checkpoint's planning/materialization; consumers still run under
-    * AQE (RDDScanExec exposes the stored partitioning, which
-    * EnsureRequirements honors inside an adaptive plan). */
-  private[graft] def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(
-      thunk: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = try spark.conf.get(key) catch { case _: Throwable => "true" }
-    spark.conf.set(key, "false")
-    try thunk finally spark.conf.set(key, prev)
-  }
-
-  /** [[materializeOnce]] variant for relations the caller has just
-    * explicitly repartitioned/sorted: checkpoints with AQE off so the
-    * stored LogicalRDD keeps the layout (see [[withAqeOff]]).
-    * ONLY for cheap subtrees (e.g. reading an already-checkpointed
-    * relation): the whole plan runs non-adaptively. For an expensive
-    * feeder use [[materializeOnceKeyed]], which stages first. */
-  private[graft] def materializeOncePartitioned(df: DataFrame, tag: String): DataFrame =
-    withAqeOff(df.sparkSession)(materializeOnce(df, tag))
-
-  /** Stage-then-layout checkpoint: materialize `df` once with AQE ON
-    * (the upstream subtree — usually the expensive part, e.g. a
-    * candidate-generation pipeline — keeps runtime broadcast/skew/
-    * coalescing adaptivity), then lay the result out
-    * hash-partitioned + sorted on `keys` via a second, AQE-off
-    * checkpoint so the layout survives in the stored LogicalRDD and
-    * downstream keyed joins skip the per-use Exchange+Sort. The
-    * staging blocks are freed as soon as the laid-out copy is
-    * materialized. Measured (sf0.1 q_dup_clusters): AQE-off around
-    * the full subtree cost +55% (the MinHash feeder lost its runtime
-    * broadcasts); staging restores feeder adaptivity while keeping
-    * the layout.
-    *
-    * The layout itself is OFF unless forced (see [[applyLayout]] for
-    * the full measured rationale — it lost in every regime testable
-    * on this box, including forced-SMJ at sf1). */
-  private[graft] def materializeOnceKeyed(df: DataFrame, tag: String,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val staged = df.localCheckpoint()
-    if (!applyLayout(staged)) return memoTag(staged, tag)
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val out = materializeOncePartitioned(
-      staged.repartition(p, keys: _*).sortWithinPartitions(keys: _*), tag)
-    backingRdd(staged).foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** Gate for the graph layout pass: `spark.graft.graph.layout=1`
-    * applies it, anything else (the default) skips it.
-    *
-    * Default OFF, a measured decision, not an oversight (r20,
-    * interleaved A/B via graft.tools.GraphAb so hypervisor steal
-    * storms cancel out):
-    *  - sf0.1, default confs: layout +10–55% on q_dup_clusters /
-    *    q_pagerank / q_bfs_depth — the per-round join partner (the
-    *    node-sized labels/contribution side) is broadcastable, so AQE
-    *    never re-shuffles the graph ANYWAY and the layout is a pure
-    *    extra materialization pass;
-    *  - sf1 (10×, ~1 GB edge lists), default confs: same story
-    *    (q_pagerank 7.3 vs 6.7 s min-of-3) — the PROJECTED partner
-    *    (two longs/row) still broadcasts even when its stored gauge
-    *    exceeds the 10 MB threshold;
-    *  - sf1 with broadcasts disabled entirely (the forced-SMJ regime
-    *    that models a graph whose node table can never broadcast):
-    *    layout STILL loses (q_pagerank 13.5 vs 10.7 s, q_dup_clusters
-    *    9.4 vs 5.5 s) — a statically co-partitioned join cannot be
-    *    skew-split by AQE (there is no exchange left to re-divide),
-    *    and power-law graphs are the canonical skew case, so the
-    *    exchange-free rounds run at the speed of their hottest
-    *    hash(src) partition while the staging+layout pass adds two
-    *    full extra materializations of the edge list.
-    * The knob stays for cluster topologies where a round's exchange
-    * crosses a network the local box cannot model; on the evidence
-    * above it should stay off anywhere skew exists. */
-  private[graft] def applyLayout(gauge: DataFrame): Boolean =
-    (try gauge.sparkSession.conf.get("spark.graft.graph.layout")
-     catch { case _: Throwable => "0" }) == "1"
 
   /** Fixed-iteration PageRank over a DIRECTED edge list — the
     * importance-ranking companion to [[connectedComponents]]: dedup
@@ -497,43 +385,18 @@ object GraphOps {
     * unrolled plan needs no lineage truncation. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    // Never re-shuffle the graph (r20, guide §2.4): when the per-round
-    // join partner — the node-sized contribution table, gauged by
-    // `deg` — is too big to broadcast, rounds would SMJ and pay an
-    // Exchange+Sort of the EDGE LIST every round; in that regime the
-    // edge list and the degree spine are laid out once
-    // (hash-partition on the round key + sortWithinPartitions +
-    // AQE-off checkpoint, so the LogicalRDD keeps the layout) and
-    // every round's contribution join (on src) and rank-update join
-    // (on node) read them co-partitioned and pre-sorted. When the
-    // node side broadcasts (small graphs), AQE already leaves the
-    // edge list in place each round and the layout is skipped — it
-    // measured +55% at sf0.1 as a pure extra pass (see applyLayout).
-    val spark = edges.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val eStaged = materializeOnce(
+    val e = materializeOnce(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")),
       "pagerank_edges")
     val deg = materializeOnce(
-      eStaged.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
       "pagerank_deg")
     val nTab = deg.agg(count(lit(1)).as("n_nodes"))
-    val lay = applyLayout(deg)
-    val e =
-      if (lay) memoTag(withAqeOff(spark)(
-        eStaged.repartition(p, col("src")).sortWithinPartitions("src")
-          .localCheckpoint()), "pagerank_edges")
-      else eStaged
     // (node, outdeg, n_nodes) spine materialized ONCE: the old loop
     // re-embedded the 1-row N aggregate and its broadcast cross-join
     // in every round's plan (3× the degree aggregation + BNLJ)
-    val degN =
-      if (lay) memoTag(withAqeOff(spark)(
-        deg.crossJoin(broadcast(nTab))
-          .repartition(p, col("node")).sortWithinPartitions("node")
-          .localCheckpoint()), "pagerank_degN")
-      else materializeOnce(deg.crossJoin(broadcast(nTab)), "pagerank_degN")
+    val degN = materializeOnce(deg.crossJoin(broadcast(nTab)), "pagerank_degN")
     // rank table carries (node, outdeg, n_nodes, rank)
     var ranks = degN
       .withColumn("rank", lit(1.0) / col("n_nodes").cast("double"))

@@ -550,15 +550,11 @@ object AnalyticsQueries {
       .groupBy(col("p.s").as("s"), col("p.d").as("d"))
       .agg(count(lit(1)).as("w")).filter(col("w") >= 2)
       .select("s", "d")
-    // edge list staged adaptively, then laid out hash-partitioned on
-    // the expansion key s and sorted, with the layout checkpoint
-    // planned AQE-off so the stored LogicalRDD keeps it (r20, guide
-    // §2.4 — see GraphOps.materializeOnceKeyed): each of the 3
-    // frontier-expansion joins reads the graph co-partitioned and
-    // pre-sorted instead of re-exchanging it per round
-    val edges = graft.operators.GraphOps.materializeOnceKeyed(
+    // symmetric edge list materialized once: all 3 frontier-expansion
+    // rounds read it instead of re-running the co-purchase pipeline
+    val edges = graft.operators.GraphOps.materializeOnce(
       half.unionByName(half.select(col("d").as("s"), col("s").as("d"))),
-      "bfs_edges", col("s"))
+      "bfs_edges")
     var dist = Tables.part(spark, dir)
       .filter(col("p_partkey") % 100 === 0)
       .select(col("p_partkey").as("node"), lit(0).as("dist"))

@@ -274,9 +274,37 @@ class BpeTrainSpec extends SparkSpec {
     // decrements to zero, stale index visits, and psort's kTop
     // pruning; thousands of candidates per round survive to the
     // window).
+    val (words, wcnt) = arm32kInputs
+    assertMatchesNaive(words, wcnt)
+  }
+
+  test("legacy gather + two-array psort (counts >= 2^23) matches the naive trainer") {
+    // The incremental store packs counts into 23 bits; once any pair
+    // count reaches 2^23 the loop falls back for good to the legacy
+    // gather + two-array psort. Scaling every word count by 2^23 makes
+    // every pair count overflow the pack on round 1, so this case runs
+    // that fallback from the first round to the last.
+    val (words, wcnt0) = arm32kInputs
+    assert(wcnt0.forall(_ >= 1L) && words.exists(_.length >= 2),
+      "scaled input must hold a pair whose count overflows the pack")
+    val wcnt = wcnt0.map(_ * (1L << 23))
+    val got = assertMatchesNaive(words, wcnt)
+    assert(got.forall(_._4 >= (1L << 23)))
+  }
+
+  /** The 32k arm's gram width at reduced-but-realistic knobs; both
+    * loops clone the words before mutating them, so cases share it. */
+  private lazy val arm32kInputs: (Array[Array[Int]], Array[Long]) = {
     val (words, wcnt) =
       graft.operators.BpeTrain.artifact(spark, dir, m = 4096, gram = 5)
     assert(words.length > 512, "artifact too small to exercise the loop")
+    (words, wcnt)
+  }
+
+  /** mergeLoop must be byte-identical to naiveMergeLoop on the same
+    * input (V=2048, T=512); returns the engine's merge rows. */
+  private def assertMatchesNaive(words: Array[Array[Int]],
+      wcnt: Array[Long]): Vector[(Int, Int, Int, Long, Int)] = {
     val expect = naiveMergeLoop(words, wcnt, v = 2048, t = 512)
     val got = graft.operators.BpeTrain
       .mergeLoop(words.map(_.clone), wcnt, v = 2048, t = 512)
@@ -286,5 +314,6 @@ class BpeTrainSpec extends SparkSpec {
     got.zip(expect).zipWithIndex.foreach { case ((g, e), i) =>
       assert(g == e, s"merge row $i diverged: $g vs $e")
     }
+    got
   }
 }
