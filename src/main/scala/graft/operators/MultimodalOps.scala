@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Bytes
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -259,6 +260,17 @@ object MultimodalOps {
     } finally inf.end()
   }
 
+  /** TIFF header readers for [[decodeTiffRaster]] and
+    * [[decodeTiffGeoref]]. They return -1 out of range instead of
+    * refusing, because their callers branch on -1. The range check runs
+    * in LONG arithmetic BEFORE any toInt: a crafted 32-bit offset near
+    * 2^31 would otherwise truncate to a negative index and throw
+    * instead of returning the None contract. */
+  private def tiffU16(b: Array[Byte], off: Long, le: Boolean): Int =
+    if (off < 0 || off + 2 > b.length) -1 else Bytes.u16(b, off, le)
+  private def tiffU32(b: Array[Byte], off: Long, le: Boolean): Long =
+    if (off < 0 || off + 4 > b.length) -1L else Bytes.u32(b, off, le)
+
   /** General TIFF raster decoder. Beyond the baseline subset, supports
     * what the reference's real GeoTIFFs use (srtm.tif IFD:
     * Compression=8 deflate, tiled 256×256, PlanarConfiguration=2,
@@ -278,23 +290,8 @@ object MultimodalOps {
     val le = payload(0) == 'I'.toByte && payload(1) == 'I'.toByte
     val be = payload(0) == 'M'.toByte && payload(1) == 'M'.toByte
     if (!le && !be) return None
-    // bounds checks in LONG arithmetic BEFORE any toInt: a crafted
-    // 32-bit offset near 2^31 would otherwise truncate to a negative
-    // index and throw instead of returning the None contract
-    def u16(off: Long): Int = {
-      if (off < 0 || off + 2 > payload.length) return -1
-      val o = off.toInt
-      if (le) (payload(o) & 0xff) | ((payload(o + 1) & 0xff) << 8)
-      else ((payload(o) & 0xff) << 8) | (payload(o + 1) & 0xff)
-    }
-    def u32(off: Long): Long = {
-      if (off < 0 || off + 4 > payload.length) return -1L
-      val o = off.toInt
-      if (le) (payload(o) & 0xff).toLong | ((payload(o + 1) & 0xff).toLong << 8) |
-        ((payload(o + 2) & 0xff).toLong << 16) | ((payload(o + 3) & 0xff).toLong << 24)
-      else ((payload(o) & 0xff).toLong << 24) | ((payload(o + 1) & 0xff).toLong << 16) |
-        ((payload(o + 2) & 0xff).toLong << 8) | (payload(o + 3) & 0xff).toLong
-    }
+    def u16(off: Long): Int = tiffU16(payload, off, le)
+    def u32(off: Long): Long = tiffU32(payload, off, le)
     if (u16(2) != 42) return None
     val ifd = u32(4)
     val nEntries = u16(ifd)
@@ -516,20 +513,8 @@ object MultimodalOps {
     val le = payload(0) == 'I'.toByte && payload(1) == 'I'.toByte
     val be = payload(0) == 'M'.toByte && payload(1) == 'M'.toByte
     if (!le && !be) return None
-    def u16(off: Long): Int = {
-      if (off < 0 || off + 2 > payload.length) return -1
-      val o = off.toInt
-      if (le) (payload(o) & 0xff) | ((payload(o + 1) & 0xff) << 8)
-      else ((payload(o) & 0xff) << 8) | (payload(o + 1) & 0xff)
-    }
-    def u32(off: Long): Long = {
-      if (off < 0 || off + 4 > payload.length) return -1L
-      val o = off.toInt
-      if (le) (payload(o) & 0xff).toLong | ((payload(o + 1) & 0xff).toLong << 8) |
-        ((payload(o + 2) & 0xff).toLong << 16) | ((payload(o + 3) & 0xff).toLong << 24)
-      else ((payload(o) & 0xff).toLong << 24) | ((payload(o + 1) & 0xff).toLong << 16) |
-        ((payload(o + 2) & 0xff).toLong << 8) | (payload(o + 3) & 0xff).toLong
-    }
+    def u16(off: Long): Int = tiffU16(payload, off, le)
+    def u32(off: Long): Long = tiffU32(payload, off, le)
     def f64(off: Long): Option[Double] = {
       if (off < 0 || off + 8 > payload.length) return None
       var bits = 0L

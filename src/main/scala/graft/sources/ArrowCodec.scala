@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Arrow IPC codec — the columnar interchange format dataset tooling
   * actually trades: Feather V2 exports (IPC FILE format, trailing
   * footer) and the HuggingFace-datasets cache shape (IPC STREAM
@@ -111,35 +113,14 @@ object ArrowCodec {
     * stance): a compressed buffer declaring more refuses the file. */
   val MaxBufBytes: Long = GzipCodec.MaxInflatedBytes.toLong
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   /** Decode a `.arrow` object in either IPC framing, or None on any
     * structural fault or envelope refusal. Never throws. */
   def decode(bytes: Array[Byte]): Option[Vector[Cell]] =
-    try {
+    refusing {
       if (bytes.length >= 12 && hasMagic(bytes, 0) &&
           bytes(6) == 0 && bytes(7) == 0) decodeFile(bytes)
       else decodeStream(bytes)
-    } catch { case _: Fail => None }
-
-  // ---- byte readers (every access bounds-checked) --------------------
-
-  private def u8(b: Array[Byte], p: Long): Int = {
-    if (p < 0 || p + 1 > b.length) err()
-    b(p.toInt) & 0xff
-  }
-  private def uN(b: Array[Byte], p: Long, n: Int): Long = {
-    if (p < 0 || p + n > b.length) err()
-    var v = 0L; var j = 0
-    while (j < n) { v |= (b(p.toInt + j) & 0xffL) << (8 * j); j += 1 }
-    v
-  }
-  private def i16(b: Array[Byte], p: Long): Int = uN(b, p, 2).toShort.toInt
-  private def i32(b: Array[Byte], p: Long): Int = uN(b, p, 4).toInt
-  private def u32(b: Array[Byte], p: Long): Long = uN(b, p, 4)
-  private def i64(b: Array[Byte], p: Long): Long = uN(b, p, 8)
+    }.flatten
 
   private def hasMagic(b: Array[Byte], p: Int): Boolean =
     b.length >= p + 6 && b(p) == 'A' && b(p + 1) == 'R' && b(p + 2) == 'R' &&
@@ -149,33 +130,33 @@ object ArrowCodec {
 
   /** Absolute position of table field `id`, or -1 if absent. */
   private def field(b: Array[Byte], tpos: Long, id: Int): Long = {
-    val vt = tpos - i32(b, tpos)
-    if (vt < 0) err()
-    val vtSize = uN(b, vt, 2)
+    val vt = tpos - le32(b, tpos).toInt
+    if (vt < 0) refuse()
+    val vtSize = leN(b, vt, 2)
     val slot = 4 + 2 * id
     if (slot + 2 > vtSize) -1L
     else {
-      val fo = uN(b, vt + slot, 2)
+      val fo = leN(b, vt + slot, 2)
       if (fo == 0) -1L else tpos + fo
     }
   }
   /** Follow a table/string/vector offset field to its target. */
   private def indirect(b: Array[Byte], p: Long): Long = {
-    val t = p + u32(b, p)
-    if (t < 0 || t > b.length) err()
+    val t = p + le32(b, p)
+    if (t < 0 || t > b.length) refuse()
     t
   }
   private def str(b: Array[Byte], p: Long): String = {
     val t = indirect(b, p)
-    val n = u32(b, t)
-    if (n > MaxMetaBytes || t + 4 + n > b.length) err()
+    val n = le32(b, t)
+    if (n > MaxMetaBytes || t + 4 + n > b.length) refuse()
     new String(b, (t + 4).toInt, n.toInt, java.nio.charset.StandardCharsets.UTF_8)
   }
   /** (element count, absolute position of element 0). */
   private def vec(b: Array[Byte], p: Long, stride: Int): (Long, Long) = {
     val t = indirect(b, p)
-    val n = u32(b, t)
-    if (n * stride + t + 4 > b.length) err()
+    val n = le32(b, t)
+    if (n * stride + t + 4 > b.length) refuse()
     (n, t + 4)
   }
 
@@ -247,7 +228,7 @@ object ArrowCodec {
     case 1 => "ms"
     case 2 => "us"
     case 3 => "ns"
-    case _ => err()
+    case _ => refuse()
   }
 
   /** Dictionary encoding of a field: dictionary id + index width in
@@ -261,7 +242,7 @@ object ArrowCodec {
     * type_type(2) type(3) dictionary(4) children(5). */
   private def parseField(b: Array[Byte], fpos: Long, depth: Int): FieldSpec = {
     val namePos = field(b, fpos, 0)
-    if (namePos < 0) err()
+    if (namePos < 0) refuse()
     val name = str(b, namePos)
     // DictionaryEncoding: id(0) indexType(1) isOrdered(2)
     val dict = field(b, fpos, 4) match {
@@ -269,16 +250,16 @@ object ArrowCodec {
       case dp =>
         val dt = indirect(b, dp)
         val idPos = field(b, dt, 0)
-        val id = if (idPos < 0) 0L else i64(b, idPos)
+        val id = if (idPos < 0) 0L else le64(b, idPos)
         val itPos = field(b, dt, 1)
         val (w, signed) =
           if (itPos < 0) (4, true)
           else {
             val t = indirect(b, itPos)
             val bwPos = field(b, t, 0)
-            val bw = if (bwPos < 0) 0 else i32(b, bwPos)
+            val bw = if (bwPos < 0) 0 else le32(b, bwPos).toInt
             val sgPos = field(b, t, 1)
-            if (bw != 8 && bw != 16 && bw != 32 && bw != 64) err()
+            if (bw != 8 && bw != 16 && bw != 32 && bw != 64) refuse()
             (bw / 8, sgPos >= 0 && u8(b, sgPos) != 0)
           }
         Some(Dict(id, w, signed))
@@ -286,12 +267,12 @@ object ArrowCodec {
     val ttPos = field(b, fpos, 2)
     val tt = if (ttPos < 0) 0 else u8(b, ttPos)
     val tvPos = field(b, fpos, 3)
-    def typeTable: Long = { if (tvPos < 0) err(); indirect(b, tvPos) }
+    def typeTable: Long = { if (tvPos < 0) refuse(); indirect(b, tvPos) }
     def childField(i: Int): Long = {
       val ch = field(b, fpos, 5)
-      if (ch < 0) err()
+      if (ch < 0) refuse()
       val (n, at) = vec(b, ch, 4)
-      if (i >= n) err()
+      if (i >= n) refuse()
       indirect(b, at + 4L * i)
     }
     val typ: Typ = tt match {
@@ -299,21 +280,21 @@ object ArrowCodec {
       case 2 => // Int: bitWidth(0) is_signed(1)
         val t = typeTable
         val bwPos = field(b, t, 0)
-        val bw = if (bwPos < 0) 0 else i32(b, bwPos)
+        val bw = if (bwPos < 0) 0 else le32(b, bwPos).toInt
         val sgPos = field(b, t, 1)
         val signed = sgPos >= 0 && u8(b, sgPos) != 0
-        if (bw != 8 && bw != 16 && bw != 32 && bw != 64) err()
+        if (bw != 8 && bw != 16 && bw != 32 && bw != 64) refuse()
         Prim((if (signed) "i" else "u") + bw, bw / 8)
       case 3 => // FloatingPoint: precision(0) 0=half 1=single 2=double
         // HALF is the enum's zero value, so flatbuffers OMITS the
         // field for f16 — absent means half, not malformed
         val t = typeTable
         val prPos = field(b, t, 0)
-        (if (prPos < 0) 0 else i16(b, prPos)) match {
+        (if (prPos < 0) 0 else le16(b, prPos).toShort.toInt) match {
           case 0 => Prim("f16", 2)
           case 1 => Prim("f32", 4)
           case 2 => Prim("f64", 8)
-          case _ => err()
+          case _ => refuse()
         }
       case 4 => VarBytes("bin", 4)
       case 5 => VarBytes("utf8", 4)
@@ -321,43 +302,43 @@ object ArrowCodec {
       case 7 => // Decimal: precision(0) scale(1) bitWidth(2, default 128)
         val t = typeTable
         val prPos = field(b, t, 0)
-        val pr = if (prPos < 0) 0 else i32(b, prPos)
+        val pr = if (prPos < 0) 0 else le32(b, prPos).toInt
         val scPos = field(b, t, 1)
-        val sc = if (scPos < 0) 0 else i32(b, scPos)
+        val sc = if (scPos < 0) 0 else le32(b, scPos).toInt
         val bwPos = field(b, t, 2)
-        val bw = if (bwPos < 0) 128 else i32(b, bwPos)
-        if (bw != 128 && bw != 256) err()
-        if (pr < 1 || pr > 76 || sc < -256 || sc > 256) err()
+        val bw = if (bwPos < 0) 128 else le32(b, bwPos).toInt
+        if (bw != 128 && bw != 256) refuse()
+        if (pr < 1 || pr > 76 || sc < -256 || sc > 256) refuse()
         DecT(bw / 8, sc, s"dec${bw}_${pr}_$sc")
       case 8 => // Date: unit(0) 0=DAY(i32 days) 1=MILLISECOND(i64 ms);
         // the flatbuffers DEFAULT is MILLISECOND, so date64 fields are
         // written WITHOUT the unit slot — absent means 1, not 0
         (field(b, typeTable, 0) match {
           case x if x < 0 => 1
-          case x => i16(b, x)
+          case x => le16(b, x).toShort.toInt
         }) match {
           case 0 => Prim("date32", 4)
           case 1 => Prim("date64", 8)
-          case _ => err()
+          case _ => refuse()
         }
       case 9 => // Time: unit(0, default MILLISECOND) bitWidth(1, default 32)
         val t = typeTable
         val uPos = field(b, t, 0)
-        val u = if (uPos < 0) 1 else i16(b, uPos)
+        val u = if (uPos < 0) 1 else le16(b, uPos).toShort.toInt
         val bwPos = field(b, t, 1)
-        val bw = if (bwPos < 0) 32 else i32(b, bwPos)
+        val bw = if (bwPos < 0) 32 else le32(b, bwPos).toInt
         // the spec pairs 32-bit with s/ms and 64-bit with us/ns
         if (bw == 32 && (u == 0 || u == 1)) Prim(s"time32_${unitName(u)}", 4)
         else if (bw == 64 && (u == 2 || u == 3)) Prim(s"time64_${unitName(u)}", 8)
-        else err()
+        else refuse()
       case 10 => // Timestamp: unit(0, default SECOND) timezone(1)
         val t = typeTable
         val uPos = field(b, t, 0)
-        val u = if (uPos < 0) 0 else i16(b, uPos)
-        if (u < 0 || u > 3) err()
+        val u = if (uPos < 0) 0 else le16(b, uPos).toShort.toInt
+        if (u < 0 || u > 3) refuse()
         val tzPos = field(b, t, 1)
         val tz = if (tzPos < 0) "" else str(b, tzPos)
-        if (tz.length > 64) err()
+        if (tz.length > 64) refuse()
         Prim(s"ts_${unitName(u)}" + (if (tz.isEmpty) "" else s"[$tz]"), 8)
       case 11 => // Interval: unit(0, default YEAR_MONTH). Only the
         // MonthDayNano form is in envelope — it is the one modern
@@ -366,13 +347,13 @@ object ArrowCodec {
         // keep refusing. Elements are 16 LE bytes (months i32 +
         // days i32 + nanos i64), emitted as hex like fixed binary.
         val uPos = field(b, typeTable, 0)
-        val u = if (uPos < 0) 0 else i16(b, uPos)
-        if (u != 2) err()
+        val u = if (uPos < 0) 0 else le16(b, uPos).toShort.toInt
+        if (u != 2) refuse()
         FixedBytes(16, "interval_mdn")
       case 12 => // List
-        if (depth > 2) err()
+        if (depth > 2) refuse()
         val child = parseField(b, childField(0), depth + 1)
-        if (child.dict.isDefined) err() // dictionary-encoded list child: refuse
+        if (child.dict.isDefined) refuse() // dictionary-encoded list child: refuse
         child.typ match {
           case st: StructT if depth == 0 &&
               st.children.forall(k => isScalar(k.typ) || (k.typ match {
@@ -401,7 +382,7 @@ object ArrowCodec {
             // map kid guards all require scalar-leafed lists)
             ListT(l2, 0, s"list<${l2.label}>")
           case t if isScalar(t) => ListT(t, 0, s"list<${t.label}>")
-          case _ => err() // nesting past three list levels: refuse
+          case _ => refuse() // nesting past three list levels: refuse
         }
       case 13 => // Struct: scalar children, list-of-scalar children
         // (at depth <= 1), and STRUCT children — the nested metadata/
@@ -411,19 +392,19 @@ object ArrowCodec {
         // kid is accepted when its own children are ALL scalar — the
         // list-of-records-with-a-nested-record shape; deeper nesting
         // there (a list or struct inside that kid) still refuses.
-        if (depth > 2) err()
+        if (depth > 2) refuse()
         val ch = field(b, fpos, 5)
-        if (ch < 0) err()
+        if (ch < 0) refuse()
         val (nc, _) = vec(b, ch, 4)
-        if (nc < 1 || nc > 256) err()
+        if (nc < 1 || nc > 256) refuse()
         val kids = (0L until nc).map(i =>
           parseField(b, childField(i.toInt), depth + 1)).toVector
         kids.foreach { k =>
-          if (k.dict.isDefined) err() // dictionary-encoded child: refuse
+          if (k.dict.isDefined) refuse() // dictionary-encoded child: refuse
           k.typ match {
             case _: StructT => () // validated by its own parseField pass
             case ListT(c, _, _) if depth <= 1 && isScalar(c) => ()
-            case _: ListT => err()
+            case _: ListT => refuse()
             case _ => ()
           }
         }
@@ -433,56 +414,56 @@ object ArrowCodec {
         // shape (e.g. an int-or-string id). The union array itself has
         // NO validity bitmap (post-1.0 spec): null slots are null
         // CHILD slots, so each cell gates on the selected child.
-        if (depth > 0) err()
+        if (depth > 0) refuse()
         val t = typeTable
         val mPos = field(b, t, 0)
-        val dense = (if (mPos < 0) 0 else i16(b, mPos)) match {
+        val dense = (if (mPos < 0) 0 else le16(b, mPos).toShort.toInt) match {
           case 0 => false
           case 1 => true
-          case _ => err()
+          case _ => refuse()
         }
         val ch = field(b, fpos, 5)
-        if (ch < 0) err()
+        if (ch < 0) refuse()
         val (nc, _) = vec(b, ch, 4)
-        if (nc < 1 || nc > 64) err()
+        if (nc < 1 || nc > 64) refuse()
         val kids = (0L until nc).map(i =>
           parseField(b, childField(i.toInt), depth + 1)).toVector
-        kids.foreach(k => if (k.dict.isDefined || !isScalar(k.typ)) err())
+        kids.foreach(k => if (k.dict.isDefined || !isScalar(k.typ)) refuse())
         val tPos = field(b, t, 1)
         val tids: Vector[Int] =
           if (tPos < 0) (0 until nc.toInt).toVector
           else {
             val (n, at) = vec(b, tPos, 4)
-            if (n != nc) err()
-            (0L until n).map(i => i32(b, at + 4 * i)).toVector
+            if (n != nc) refuse()
+            (0L until n).map(i => le32(b, at + 4 * i).toInt).toVector
           }
         if (tids.exists(x => x < 0 || x > 127) ||
-            tids.distinct.size != tids.size) err()
+            tids.distinct.size != tids.size) refuse()
         UnionT(kids, tids, dense, if (dense) "union_dense" else "union_sparse")
       case 15 => // FixedSizeBinary: byteWidth(0)
         val bwPos = field(b, typeTable, 0)
-        if (bwPos < 0) err()
-        val w = i32(b, bwPos)
-        if (w <= 0 || w > 65536) err()
+        if (bwPos < 0) refuse()
+        val w = le32(b, bwPos).toInt
+        if (w <= 0 || w > 65536) refuse()
         FixedBytes(w, s"fsb$w")
       case 16 => // FixedSizeList: listSize(0)
-        if (depth > 2) err()
+        if (depth > 2) refuse()
         val lsPos = field(b, typeTable, 0)
-        val ls = if (lsPos < 0) err() else i32(b, lsPos)
-        if (ls <= 0 || ls > 65536) err()
+        val ls = if (lsPos < 0) refuse() else le32(b, lsPos).toInt
+        if (ls <= 0 || ls > 65536) refuse()
         val child = parseField(b, childField(0), depth + 1)
-        if (child.dict.isDefined) err()
+        if (child.dict.isDefined) refuse()
         child.typ match {
           case t if isScalar(t) => ListT(t, ls, s"fsl$ls<${t.label}>")
-          case _ => err()
+          case _ => refuse()
         }
       case 17 => // Map: physically List<Struct<key, value>> — one
         // "entries" child struct whose kids are the key/value fields
         // (keysSorted is irrelevant to decode). Emitted exactly like
         // list<struct>: a struct cell per entry + per-kid cells.
-        if (depth > 0) err()
+        if (depth > 0) refuse()
         val entries = parseField(b, childField(0), depth + 1)
-        if (entries.dict.isDefined) err()
+        if (entries.dict.isDefined) refuse()
         entries.typ match {
           case st: StructT if st.children.size == 2 &&
               isScalar(st.children(0).typ) &&
@@ -493,68 +474,68 @@ object ArrowCodec {
                 case _ => false
               })) =>
             ListT(st, 0, "map")
-          case _ => err() // deeper-nested map values: refuse
+          case _ => refuse() // deeper-nested map values: refuse
         }
       case 18 => // Duration: unit(0, default MILLISECOND), always 64-bit
         val uPos = field(b, typeTable, 0)
-        val u = if (uPos < 0) 1 else i16(b, uPos)
-        if (u < 0 || u > 3) err()
+        val u = if (uPos < 0) 1 else le16(b, uPos).toShort.toInt
+        if (u < 0 || u > 3) refuse()
         Prim(s"dur_${unitName(u)}", 8)
       case 19 => VarBytes("lbin", 8)  // LargeBinary: 64-bit offsets
       case 20 => VarBytes("lutf8", 8) // LargeUtf8: 64-bit offsets
       case 21 => // LargeList: 64-bit offsets, scalar leaf, top level
         // only — HF token arrays past the 2^31-element shard line
-        if (depth > 0) err()
+        if (depth > 0) refuse()
         val child = parseField(b, childField(0), depth + 1)
-        if (child.dict.isDefined) err()
+        if (child.dict.isDefined) refuse()
         child.typ match {
           case t if isScalar(t) => LargeListT(t, s"llist<${t.label}>")
-          case _ => err() // nested large-list child: refuse
+          case _ => refuse() // nested large-list child: refuse
         }
       case 22 => // RunEndEncoded: run_ends(child 0) + values(child 1)
-        if (depth > 0) err() // top-level REE only
+        if (depth > 0) refuse() // top-level REE only
         val re = parseField(b, childField(0), depth + 1)
-        if (re.dict.isDefined) err()
+        if (re.dict.isDefined) refuse()
         val runW = re.typ match {
           // the spec restricts run ends to SIGNED 16/32/64-bit ints
           case Prim("i16", w) => w
           case Prim("i32", w) => w
           case Prim("i64", w) => w
-          case _ => err()
+          case _ => refuse()
         }
         val vf = parseField(b, childField(1), depth + 1)
-        if (vf.dict.isDefined || !isScalar(vf.typ)) err()
+        if (vf.dict.isDefined || !isScalar(vf.typ)) refuse()
         RunEndT(vf.typ, runW, s"ree<${vf.typ.label}>")
       case 25 | 26 => // ListView / LargeListView: offsets + sizes
-        if (depth > 0) err() // top-level views only
+        if (depth > 0) refuse() // top-level views only
         val offw = if (tt == 25) 4 else 8
         val child = parseField(b, childField(0), depth + 1)
-        if (child.dict.isDefined) err()
+        if (child.dict.isDefined) refuse()
         child.typ match {
           case t if isScalar(t) =>
             ListViewT(t, offw,
               s"${if (offw == 4) "lview" else "llview"}<${t.label}>")
-          case _ => err() // nested list-view child: refuse
+          case _ => refuse() // nested list-view child: refuse
         }
       case 23 => // BinaryView
-        if (depth > 0) err() // top-level views only
+        if (depth > 0) refuse() // top-level views only
         ViewBytes("binview")
       case 24 => // Utf8View
-        if (depth > 0) err() // top-level views only
+        if (depth > 0) refuse() // top-level views only
         ViewBytes("utf8view")
-      case _ => err() // ListView/LargeListView/...: refuse
+      case _ => refuse() // ListView/LargeListView/...: refuse
     }
     if (dict.isDefined && !isScalar(typ))
-      err() // dict-of-nested/null/ree: refuse
+      refuse() // dict-of-nested/null/ree: refuse
     FieldSpec(name, typ, dict)
   }
 
   /** Parse a Schema table: fields(1). */
   private def parseSchema(b: Array[Byte], spos: Long): Vector[FieldSpec] = {
     val fPos = field(b, spos, 1)
-    if (fPos < 0) err()
+    if (fPos < 0) refuse()
     val (n, at) = vec(b, fPos, 4)
-    if (n > MaxFields) err()
+    if (n > MaxFields) refuse()
     (0L until n).map(i => parseField(b, indirect(b, at + 4 * i), 0)).toVector
   }
 
@@ -568,12 +549,12 @@ object ArrowCodec {
   private case class Buf(a: Array[Byte], at: Long, len: Long)
 
   private def bu8(x: Buf, i: Long): Int = {
-    if (i < 0 || i + 1 > x.len) err()
+    if (i < 0 || i + 1 > x.len) refuse()
     u8(x.a, x.at + i)
   }
   private def buN(x: Buf, i: Long, n: Int): Long = {
-    if (i < 0 || i + n > x.len) err()
-    uN(x.a, x.at + i, n)
+    if (i < 0 || i + n > x.len) refuse()
+    leN(x.a, x.at + i, n)
   }
 
   /** Decompress one buffer body per the spec codec enum:
@@ -582,15 +563,15 @@ object ArrowCodec {
     * must be exactly `ulen` with no trailing frame data. */
   private def decompress(b: Array[Byte], at: Long, clen: Long, ulen: Long,
       zstd: Boolean): Array[Byte] = {
-    if (clen < 0 || at < 0 || at + clen > b.length) err()
-    if (ulen < 0 || ulen > MaxBufBytes) err()
+    if (clen < 0 || at < 0 || at + clen > b.length) refuse()
+    if (ulen < 0 || ulen > MaxBufBytes) refuse()
     val src = java.util.Arrays.copyOfRange(b, at.toInt, (at + clen).toInt)
     val dst = new Array[Byte](ulen.toInt)
     try {
       if (zstd) {
         val n = com.github.luben.zstd.Zstd.decompressByteArray(
           dst, 0, dst.length, src, 0, src.length)
-        if (n != dst.length) err()
+        if (n != dst.length) refuse()
       } else {
         val in = new net.jpountz.lz4.LZ4FrameInputStream(
           new java.io.ByteArrayInputStream(src))
@@ -601,10 +582,10 @@ object ArrowCodec {
             n = in.read(dst, done, dst.length - done)
             if (n > 0) done += n
           }
-          if (done != dst.length || in.read() != -1) err()
+          if (done != dst.length || in.read() != -1) refuse()
         } finally in.close()
       }
-    } catch { case scala.util.control.NonFatal(_) => err() }
+    } catch { case scala.util.control.NonFatal(_) => refuse() }
     dst
   }
 
@@ -621,19 +602,19 @@ object ArrowCodec {
         val cdPos = field(b, ct, 0)
         val codec = if (cdPos < 0) 0 else u8(b, cdPos)
         val mPos = field(b, ct, 1)
-        if (mPos >= 0 && u8(b, mPos) != 0) err() // only BUFFER method exists
+        if (mPos >= 0 && u8(b, mPos) != 0) refuse() // only BUFFER method exists
         codec match {
           case 0 => Some(false) // LZ4_FRAME
           case 1 => Some(true)  // ZSTD
-          case _ => err()
+          case _ => refuse()
         }
     }
     val lenPos = field(b, rbPos, 0)
-    val rows = if (lenPos < 0) 0L else i64(b, lenPos)
-    if (rows < 0 || rows > MaxCells) err()
+    val rows = if (lenPos < 0) 0L else le64(b, lenPos)
+    if (rows < 0 || rows > MaxCells) refuse()
     val nodesPos = field(b, rbPos, 1)
     val bufsPos = field(b, rbPos, 2)
-    if (nodesPos < 0 || bufsPos < 0) err()
+    if (nodesPos < 0 || bufsPos < 0) refuse()
     val (nNodes, nodesAt) = vec(b, nodesPos, 16)
     val (nBufs, bufsAt) = vec(b, bufsPos, 16)
     // variadicBufferCounts(4): one int64 per view-typed array, in
@@ -647,29 +628,29 @@ object ArrowCodec {
     var bi = 0L
     var vci = 0L
     def nextVariadic(): Long = {
-      if (vci >= nVbc) err()
-      val n = i64(b, vbcAt + 8 * vci); vci += 1
-      if (n < 0 || n > nBufs) err()
+      if (vci >= nVbc) refuse()
+      val n = le64(b, vbcAt + 8 * vci); vci += 1
+      if (n < 0 || n > nBufs) refuse()
       n
     }
     def nextNode(): (Long, Long) = {
-      if (ni >= nNodes) err()
+      if (ni >= nNodes) refuse()
       val p = nodesAt + 16 * ni; ni += 1
-      (i64(b, p), i64(b, p + 8)) // (length, null_count)
+      (le64(b, p), le64(b, p + 8)) // (length, null_count)
     }
     def nextBuf(): Buf = {
-      if (bi >= nBufs) err()
+      if (bi >= nBufs) refuse()
       val p = bufsAt + 16 * bi; bi += 1
-      val off = i64(b, p); val len = i64(b, p + 8)
-      if (off < 0 || len < 0 || off + len > bodyLen) err()
+      val off = le64(b, p); val len = le64(b, p + 8)
+      if (off < 0 || len < 0 || off + len > bodyLen) refuse()
       val at = bodyAt + off
       comp match {
         case None => Buf(b, at, len)
         case Some(_) if len == 0 => Buf(b, at, 0)
         case Some(z) =>
           // int64 uncompressed-length prefix; -1 = stored uncompressed
-          if (len < 8) err()
-          val ulen = i64(b, at)
+          if (len < 8) refuse()
+          val ulen = le64(b, at)
           if (ulen == -1L) Buf(b, at + 8, len - 8)
           else {
             val d = decompress(b, at + 8, len - 8, ulen, z)
@@ -685,15 +666,15 @@ object ArrowCodec {
     def bitsAt(buf: Buf, width: Int, i: Long): Long = buN(buf, i * width, width)
     def boolAt(buf: Buf, i: Long): Long =
       (bu8(buf, i / 8) >> (i % 8).toInt & 1).toLong
-    if (out.size + rows * fields.size > MaxCells) err()
+    if (out.size + rows * fields.size > MaxCells) refuse()
 
     for (f <- fields) if (f.dict.isDefined) {
       // dictionary-encoded column: one node, validity + index buffer;
       // each index maps through the DictionaryBatch-delivered values
       val d = f.dict.get
-      val dictVals = dicts.getOrElse(d.id, err())
+      val dictVals = dicts.getOrElse(d.id, refuse())
       val (len, _) = nextNode()
-      if (len != rows) err()
+      if (len != rows) refuse()
       val v = valid(nextBuf(), len)
       val idx = nextBuf()
       var i = 0L
@@ -706,7 +687,7 @@ object ArrowCodec {
             val sh = 64 - 8 * d.w
             k = (k << sh) >> sh
           }
-          if (k < 0 || k >= dictVals.size) err()
+          if (k < 0 || k >= dictVals.size) refuse()
           val dv = dictVals(k.toInt)
           out += Cell(batchIdx, f.name, i, None, dv.vtype, dv.isNull, dv.bits, dv.str)
         }
@@ -733,7 +714,7 @@ object ArrowCodec {
           case FixedBytes(width, label) =>
             val dat = nextBuf()
             Leaf(label, len, v, null, { i =>
-              if ((i + 1) * width > dat.len) err()
+              if ((i + 1) * width > dat.len) refuse()
               val raw = new Array[Byte](width)
               System.arraycopy(dat.a, (dat.at + i * width).toInt, raw, 0, width)
               raw.map(x => f"${x & 0xff}%02x").mkString
@@ -741,7 +722,7 @@ object ArrowCodec {
           case DecT(width, scale, label) =>
             val dat = nextBuf()
             Leaf(label, len, v, null, { i =>
-              if ((i + 1) * width > dat.len) err()
+              if ((i + 1) * width > dat.len) refuse()
               // LE two's-complement unscaled value -> big-endian for
               // BigInteger, then scale to a plain decimal string
               val be = new Array[Byte](width)
@@ -755,24 +736,24 @@ object ArrowCodec {
             })
           case VarBytes(label, offw) =>
             val offs = nextBuf()
-            if ((len + 1) * offw > offs.len) err()
+            if ((len + 1) * offw > offs.len) refuse()
             val dat = nextBuf()
             val utf8 = label == "utf8" || label == "lutf8"
             Leaf(label, len, v, null, { i =>
               val s = buN(offs, offw.toLong * i, offw)
               val e = buN(offs, offw.toLong * (i + 1), offw)
-              if (e < s || e > dat.len) err()
+              if (e < s || e > dat.len) refuse()
               val raw = new Array[Byte]((e - s).toInt)
               System.arraycopy(dat.a, (dat.at + s).toInt, raw, 0, raw.length)
               if (utf8) new String(raw, java.nio.charset.StandardCharsets.UTF_8)
               else raw.map(x => f"${x & 0xff}%02x").mkString
             })
-          case _ => err() // nested leaf: unreachable by construction
+          case _ => refuse() // nested leaf: unreachable by construction
         }
       }
       def put(name: String, row: Long, elem: Option[Long], leaf: Leaf,
           i: Long, gate: Boolean): Unit = {
-        if (out.size >= MaxCells) err()
+        if (out.size >= MaxCells) refuse()
         if (gate && leaf.ok(i)) {
           if (leaf.str == null)
             out += Cell(batchIdx, name, row, elem, leaf.label,
@@ -785,56 +766,56 @@ object ArrowCodec {
       }
       def nullCell(name: String, row: Long, elem: Option[Long],
           label: String): Unit = {
-        if (out.size >= MaxCells) err()
+        if (out.size >= MaxCells) refuse()
         out += Cell(batchIdx, name, row, elem, label, isNull = true, None, None)
       }
 
       f.typ match {
         case t if isScalar(t) =>
           val leaf = readLeaf(t)
-          if (leaf.len != rows) err()
+          if (leaf.len != rows) refuse()
           var i = 0L
           while (i < rows) { put(f.name, i, None, leaf, i, gate = true); i += 1 }
 
         case NullT =>
           // one node, ZERO buffers: every slot is null by type
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           var i = 0L
           while (i < rows) { nullCell(f.name, i, None, "null"); i += 1 }
 
         case ViewBytes(label) =>
           // node + validity + views buffer + N variadic data buffers
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val v = valid(nextBuf(), len)
           val views = nextBuf()
-          if (len * 16 > views.len) err()
+          if (len * 16 > views.len) refuse()
           val nvar = nextVariadic()
           val dats = Array.tabulate(nvar.toInt)(_ => nextBuf())
           val utf8 = label == "utf8view"
           var i = 0L
           while (i < rows) {
-            if (out.size >= MaxCells) err()
+            if (out.size >= MaxCells) refuse()
             if (v(i)) {
               val base = 16 * i
               val l = buN(views, base, 4).toInt
-              if (l < 0) err()
+              if (l < 0) refuse()
               val raw = new Array[Byte](l)
               if (l <= 12) {
                 System.arraycopy(views.a, (views.at + base + 4).toInt, raw, 0, l)
               } else {
                 val bidx = buN(views, base + 8, 4).toInt
                 val off = buN(views, base + 12, 4).toInt
-                if (bidx < 0 || bidx >= nvar || off < 0) err()
+                if (bidx < 0 || bidx >= nvar || off < 0) refuse()
                 val dat = dats(bidx)
-                if (off.toLong + l > dat.len) err()
+                if (off.toLong + l > dat.len) refuse()
                 System.arraycopy(dat.a, (dat.at + off).toInt, raw, 0, l)
                 // the 4-byte prefix must mirror the data head (spec
                 // invariant; a mismatch marks a corrupt writer)
                 var j = 0
                 while (j < 4) {
-                  if (raw(j) != views.a((views.at + base + 4 + j).toInt)) err()
+                  if (raw(j) != views.a((views.at + base + 4 + j).toInt)) refuse()
                   j += 1
                 }
               }
@@ -856,21 +837,21 @@ object ArrowCodec {
           // the final run must reach the logical length (a sliced
           // array may overshoot; cells cap at `rows`)
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val (rlen, _) = nextNode()
-          if (rlen < 0 || rlen > MaxCells) err()
+          if (rlen < 0 || rlen > MaxCells) refuse()
           val rv = valid(nextBuf(), rlen)
           val rdat = nextBuf()
-          if (rlen * runW > rdat.len) err()
+          if (rlen * runW > rdat.len) refuse()
           val leaf = readLeaf(vt)
-          if (leaf.len != rlen) err()
+          if (leaf.len != rlen) refuse()
           var r = 0L
           var prev = 0L
           while (r < rlen && prev < rows) {
-            if (!rv(r)) err() // run ends are non-nullable per spec
+            if (!rv(r)) refuse() // run ends are non-nullable per spec
             var e = buN(rdat, r * runW, runW)
             if (runW < 8) { val sh = 64 - 8 * runW; e = (e << sh) >> sh }
-            if (e <= prev) err()
+            if (e <= prev) refuse()
             val until = math.min(e, rows)
             // materialize the run's value ONCE — a 4M-row run must
             // not decode the same string 4M times
@@ -881,7 +862,7 @@ object ArrowCodec {
                          else None
             var i = prev
             while (i < until) {
-              if (out.size >= MaxCells) err()
+              if (out.size >= MaxCells) refuse()
               out += Cell(batchIdx, f.name, i, None, leaf.label,
                 isNull = !runOk, runBits, runStr)
               i += 1
@@ -889,20 +870,20 @@ object ArrowCodec {
             prev = until
             r += 1
           }
-          if (prev != rows) err() // runs must cover the array
+          if (prev != rows) refuse() // runs must cover the array
 
         case ListT(child, fixed, label) =>
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val v = valid(nextBuf(), len)
           val offs = if (fixed == 0) nextBuf() else Buf(b, 0, 0)
-          if (fixed == 0 && (len + 1) * 4 > offs.len) err()
+          if (fixed == 0 && (len + 1) * 4 > offs.len) refuse()
           def span(i: Long): (Long, Long) =
             if (fixed > 0) (i * fixed, fixed.toLong)
             else {
               val s = buN(offs, 4 * i, 4)
               val e = buN(offs, 4 * (i + 1), 4)
-              if (e < s) err()
+              if (e < s) refuse()
               (s, e - s)
             }
           child match {
@@ -919,18 +900,18 @@ object ArrowCodec {
               val (clen, _) = nextNode()
               val cv = valid(nextBuf(), clen)
               val coffs = if (inner.fixed == 0) nextBuf() else Buf(b, 0, 0)
-              if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) err()
+              if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) refuse()
               val (dlen, _) = nextNode()
               val dv = valid(nextBuf(), dlen)
               val doffs = if (inner2.fixed == 0) nextBuf() else Buf(b, 0, 0)
-              if (inner2.fixed == 0 && (dlen + 1) * 4 > doffs.len) err()
+              if (inner2.fixed == 0 && (dlen + 1) * 4 > doffs.len) refuse()
               val leaf = readLeaf(inner2.child)
               def midSpan(ci: Long): (Long, Long) =
                 if (inner.fixed > 0) (ci * inner.fixed, inner.fixed.toLong)
                 else {
                   val s = buN(coffs, 4 * ci, 4)
                   val e = buN(coffs, 4 * (ci + 1), 4)
-                  if (e < s) err()
+                  if (e < s) refuse()
                   (s, e - s)
                 }
               def inSpan(di: Long): (Long, Long) =
@@ -938,7 +919,7 @@ object ArrowCodec {
                 else {
                   val s = buN(doffs, 4 * di, 4)
                   val e = buN(doffs, 4 * (di + 1), 4)
-                  if (e < s) err()
+                  if (e < s) refuse()
                   (s, e - s)
                 }
               var i = 0L
@@ -946,31 +927,31 @@ object ArrowCodec {
                 if (!v(i)) nullCell(f.name, i, None, label)
                 else {
                   val (s, n) = span(i)
-                  if (s + n > clen) err()
+                  if (s + n > clen) refuse()
                   var k = 0L
                   while (k < n) {
                     val ci = s + k
                     if (!cv(ci)) {
-                      if (out.size >= MaxCells) err()
+                      if (out.size >= MaxCells) refuse()
                       out += Cell(batchIdx, f.name, i, Some(k),
                         inner.label, isNull = true, None, None)
                     } else {
                       val (ms, mn2) = midSpan(ci)
-                      if (ms + mn2 > dlen) err()
+                      if (ms + mn2 > dlen) refuse()
                       var m2 = 0L
                       while (m2 < mn2) {
                         val di = ms + m2
                         if (!dv(di)) {
-                          if (out.size >= MaxCells) err()
+                          if (out.size >= MaxCells) refuse()
                           out += Cell(batchIdx, f.name, i, Some(k),
                             inner2.label, isNull = true, None, None,
                             Some(m2))
                         } else {
                           val (is, in) = inSpan(di)
-                          if (is + in > leaf.len) err()
+                          if (is + in > leaf.len) refuse()
                           var j = 0L
                           while (j < in) {
-                            if (out.size >= MaxCells) err()
+                            if (out.size >= MaxCells) refuse()
                             val li = is + j
                             if (leaf.ok(li)) {
                               if (leaf.str == null)
@@ -1006,14 +987,14 @@ object ArrowCodec {
               val (clen, _) = nextNode()
               val cv = valid(nextBuf(), clen)
               val coffs = if (inner.fixed == 0) nextBuf() else Buf(b, 0, 0)
-              if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) err()
+              if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) refuse()
               val leaf = readLeaf(inner.child)
               def innerSpan(ci: Long): (Long, Long) =
                 if (inner.fixed > 0) (ci * inner.fixed, inner.fixed.toLong)
                 else {
                   val s = buN(coffs, 4 * ci, 4)
                   val e = buN(coffs, 4 * (ci + 1), 4)
-                  if (e < s) err()
+                  if (e < s) refuse()
                   (s, e - s)
                 }
               var i = 0L
@@ -1021,20 +1002,20 @@ object ArrowCodec {
                 if (!v(i)) nullCell(f.name, i, None, label)
                 else {
                   val (s, n) = span(i)
-                  if (s + n > clen) err()
+                  if (s + n > clen) refuse()
                   var k = 0L
                   while (k < n) {
                     val ci = s + k
                     if (!cv(ci)) {
-                      if (out.size >= MaxCells) err()
+                      if (out.size >= MaxCells) refuse()
                       out += Cell(batchIdx, f.name, i, Some(k), inner.label,
                         isNull = true, None, None)
                     } else {
                       val (is, in) = innerSpan(ci)
-                      if (is + in > leaf.len) err()
+                      if (is + in > leaf.len) refuse()
                       var j = 0L
                       while (j < in) {
-                        if (out.size >= MaxCells) err()
+                        if (out.size >= MaxCells) refuse()
                         val li = is + j
                         if (leaf.ok(li)) {
                           if (leaf.str == null)
@@ -1085,25 +1066,25 @@ object ArrowCodec {
                 k.typ match {
                   case ListT(c, kfixed, klabel) =>
                     val (klen, _) = nextNode()
-                    if (klen != clen) err()
+                    if (klen != clen) refuse()
                     val kv = valid(nextBuf(), klen)
                     val koffs = if (kfixed == 0) nextBuf() else Buf(b, 0, 0)
-                    if (kfixed == 0 && (klen + 1) * 4 > koffs.len) err()
+                    if (kfixed == 0 && (klen + 1) * 4 > koffs.len) refuse()
                     val cl = readLeaf(c)
                     (k.name, ListK(kv, koffs, kfixed, cl, klabel): KidR)
                   case StructT(gk, glabel) =>
                     val (klen, _) = nextNode()
-                    if (klen != clen) err()
+                    if (klen != clen) refuse()
                     val skv = valid(nextBuf(), klen)
                     val gkids = gk.map { g =>
                       val gl = readLeaf(g.typ)
-                      if (gl.len != clen) err()
+                      if (gl.len != clen) refuse()
                       (g.name, gl)
                     }
                     (k.name, StructK(skv, glabel, gkids): KidR)
                   case t =>
                     val l = readLeaf(t)
-                    if (l.len != clen) err()
+                    if (l.len != clen) refuse()
                     (k.name, ScalarK(l): KidR)
                 }
               }
@@ -1112,11 +1093,11 @@ object ArrowCodec {
                 if (!v(i)) nullCell(f.name, i, None, label)
                 else {
                   val (s, n) = span(i)
-                  if (s + n > clen) err()
+                  if (s + n > clen) refuse()
                   var k = 0L
                   while (k < n) {
                     val ci = s + k
-                    if (out.size >= MaxCells) err()
+                    if (out.size >= MaxCells) refuse()
                     out += Cell(batchIdx, f.name, i, Some(k), "struct",
                       isNull = !cv(ci), None, None)
                     kids.foreach {
@@ -1126,7 +1107,7 @@ object ArrowCodec {
                       case (kn, StructK(skv, glabel, gkids)) =>
                         val kname = s"${f.name}.$kn"
                         val g = cv(ci) && skv(ci)
-                        if (out.size >= MaxCells) err()
+                        if (out.size >= MaxCells) refuse()
                         out += Cell(batchIdx, kname, i, Some(k), glabel,
                           isNull = !g, None, None)
                         gkids.foreach { case (gn, gl) =>
@@ -1142,13 +1123,13 @@ object ArrowCodec {
                             else {
                               val s0 = buN(koffs, 4 * ci, 4)
                               val e0 = buN(koffs, 4 * (ci + 1), 4)
-                              if (e0 < s0) err()
+                              if (e0 < s0) refuse()
                               (s0, e0 - s0)
                             }
-                          if (ks + kn2 > cl.len) err()
+                          if (ks + kn2 > cl.len) refuse()
                           var j = 0L
                           while (j < kn2) {
-                            if (out.size >= MaxCells) err()
+                            if (out.size >= MaxCells) refuse()
                             val li = ks + j
                             if (cl.ok(li)) {
                               if (cl.str == null)
@@ -1179,7 +1160,7 @@ object ArrowCodec {
                 if (!v(i)) nullCell(f.name, i, None, label)
                 else {
                   val (s, n) = span(i)
-                  if (s + n > cl.len) err()
+                  if (s + n > cl.len) refuse()
                   var k = 0L
                   while (k < n) {
                     put(f.name, i, Some(k), cl, s + k, gate = true)
@@ -1200,11 +1181,11 @@ object ArrowCodec {
           // metadata/config structs emit as deeper dotted paths
           // (`meta.cfg.opt.lr`), buffers still consumed depth-first.
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val v = valid(nextBuf(), len)
           var i = 0L
           while (i < len) {
-            if (out.size >= MaxCells) err()
+            if (out.size >= MaxCells) refuse()
             out += Cell(batchIdx, f.name, i, None, label, isNull = !v(i),
               None, None)
             i += 1
@@ -1215,11 +1196,11 @@ object ArrowCodec {
             k.typ match {
               case StructT(gkids, glabel) =>
                 val (klen, _) = nextNode()
-                if (klen != rows) err()
+                if (klen != rows) refuse()
                 val kv = valid(nextBuf(), klen)
                 var i2 = 0L
                 while (i2 < klen) {
-                  if (out.size >= MaxCells) err()
+                  if (out.size >= MaxCells) refuse()
                   out += Cell(batchIdx, kname, i2, None, glabel,
                     isNull = !gate(i2) || !kv(i2), None, None)
                   i2 += 1
@@ -1228,10 +1209,10 @@ object ArrowCodec {
               case ListT(c, kfixed, klabel) =>
                 // struct<list<scalar>> (the SQuAD-v1 answers shape)
                 val (klen, _) = nextNode()
-                if (klen != rows) err()
+                if (klen != rows) refuse()
                 val kv = valid(nextBuf(), klen)
                 val koffs = if (kfixed == 0) nextBuf() else Buf(b, 0, 0)
-                if (kfixed == 0 && (klen + 1) * 4 > koffs.len) err()
+                if (kfixed == 0 && (klen + 1) * 4 > koffs.len) refuse()
                 val cl = readLeaf(c)
                 var i2 = 0L
                 while (i2 < klen) {
@@ -1242,10 +1223,10 @@ object ArrowCodec {
                       else {
                         val s0 = buN(koffs, 4 * i2, 4)
                         val e0 = buN(koffs, 4 * (i2 + 1), 4)
-                        if (e0 < s0) err()
+                        if (e0 < s0) refuse()
                         (s0, e0 - s0)
                       }
-                    if (s + n > cl.len) err()
+                    if (s + n > cl.len) refuse()
                     var kk = 0L
                     while (kk < n) {
                       put(kname, i2, Some(kk), cl, s + kk, gate = true)
@@ -1256,7 +1237,7 @@ object ArrowCodec {
                 }
               case sc =>
                 val l = readLeaf(sc)
-                if (l.len != rows) err()
+                if (l.len != rows) refuse()
                 var i2 = 0L
                 while (i2 < rows) {
                   put(kname, i2, None, l, i2, gate = gate(i2))
@@ -1269,10 +1250,10 @@ object ArrowCodec {
           // one node + validity + 64-bit offsets, then the scalar
           // leaf; cell convention identical to list<scalar>
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val v = valid(nextBuf(), len)
           val offs = nextBuf()
-          if ((len + 1) * 8 > offs.len) err()
+          if ((len + 1) * 8 > offs.len) refuse()
           val cl = readLeaf(child)
           var i = 0L
           while (i < len) {
@@ -1280,7 +1261,7 @@ object ArrowCodec {
             else {
               val s = buN(offs, 8 * i, 8)
               val e = buN(offs, 8 * (i + 1), 8)
-              if (e < s || e > cl.len) err()
+              if (e < s || e > cl.len) refuse()
               var k = 0L
               while (k < e - s) {
                 put(f.name, i, Some(k), cl, s + k, gate = true)
@@ -1296,12 +1277,12 @@ object ArrowCodec {
           // sorted) — each valid slot's window is bounds-checked
           // against the child length
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val v = valid(nextBuf(), len)
           val offs = nextBuf()
-          if (len * offw > offs.len) err()
+          if (len * offw > offs.len) refuse()
           val sizes = nextBuf()
-          if (len * offw > sizes.len) err()
+          if (len * offw > sizes.len) refuse()
           val cl = readLeaf(child)
           var i = 0L
           while (i < len) {
@@ -1309,7 +1290,7 @@ object ArrowCodec {
             else {
               val s = buN(offs, offw.toLong * i, offw)
               val n = buN(sizes, offw.toLong * i, offw)
-              if (s < 0 || n < 0 || s + n > cl.len) err()
+              if (s < 0 || n < 0 || s + n > cl.len) refuse()
               var k = 0L
               while (k < n) {
                 put(f.name, i, Some(k), cl, s + k, gate = true)
@@ -1326,29 +1307,29 @@ object ArrowCodec {
           // the child its type id selects, carrying the child's
           // vtype; nullity is the selected child slot's.
           val (len, _) = nextNode()
-          if (len != rows) err()
+          if (len != rows) refuse()
           val types = nextBuf()
-          if (len > types.len) err()
+          if (len > types.len) refuse()
           val offs = if (dense) nextBuf() else Buf(b, 0, 0)
-          if (dense && len * 4 > offs.len) err()
+          if (dense && len * 4 > offs.len) refuse()
           val leaves = kids.map(k => readLeaf(k.typ))
-          if (!dense) leaves.foreach(l => if (l.len != rows) err())
+          if (!dense) leaves.foreach(l => if (l.len != rows) refuse())
           var i = 0L
           while (i < rows) {
             val ci = tids.indexOf(bu8(types, i))
-            if (ci < 0) err() // type id names no child
+            if (ci < 0) refuse() // type id names no child
             val leaf = leaves(ci)
             val j =
               if (dense) {
                 val o = buN(offs, 4 * i, 4)
-                if (o < 0 || o >= leaf.len) err()
+                if (o < 0 || o >= leaf.len) refuse()
                 o
               } else i
             put(f.name, i, None, leaf, j, gate = true)
             i += 1
           }
 
-        case _ => err() // unreachable: all Typ shapes dispatched above
+        case _ => refuse() // unreachable: all Typ shapes dispatched above
       }
     }
   }
@@ -1364,19 +1345,19 @@ object ArrowCodec {
       bodyLen: Long, fields: Vector[FieldSpec],
       dicts: scala.collection.mutable.Map[Long, Vector[Cell]]): Unit = {
     val idPos = field(b, dbPos, 0)
-    val id = if (idPos < 0) 0L else i64(b, idPos)
+    val id = if (idPos < 0) 0L else le64(b, idPos)
     val deltaPos = field(b, dbPos, 2)
     val isDelta = deltaPos >= 0 && u8(b, deltaPos) != 0
-    val spec = fields.find(_.dict.exists(_.id == id)).getOrElse(err())
+    val spec = fields.find(_.dict.exists(_.id == id)).getOrElse(refuse())
     val rbPos = field(b, dbPos, 1)
-    if (rbPos < 0) err()
+    if (rbPos < 0) refuse()
     val tmp = scala.collection.mutable.ArrayBuffer.empty[Cell]
     decodeBatch(b, indirect(b, rbPos), bodyAt, bodyLen,
       Vector(FieldSpec(spec.name, spec.typ, None)), 0, dicts, tmp)
     dicts(id) =
-      if (isDelta) dicts.getOrElse(id, err()) ++ tmp.toVector
+      if (isDelta) dicts.getOrElse(id, refuse()) ++ tmp.toVector
       else tmp.toVector
-    if (dicts(id).size > MaxCells) err()
+    if (dicts(id).size > MaxCells) refuse()
   }
 
   // ---- message framing ------------------------------------------------
@@ -1386,16 +1367,16 @@ object ArrowCodec {
     * Left(position past the marker) at a clean end-of-stream marker. */
   private def message(b: Array[Byte], p: Long): Either[Long, (Long, Long, Long, Long)] = {
     var q = p
-    var metaLen = u32(b, q)
+    var metaLen = le32(b, q)
     q += 4
-    if (metaLen == 0xffffffffL) { metaLen = u32(b, q); q += 4 } // continuation
+    if (metaLen == 0xffffffffL) { metaLen = le32(b, q); q += 4 } // continuation
     if (metaLen == 0) return Left(q) // end-of-stream
-    if (metaLen > MaxMetaBytes || q + metaLen > b.length) err()
-    val root = q + u32(b, q)
-    if (root >= q + metaLen) err()
+    if (metaLen > MaxMetaBytes || q + metaLen > b.length) refuse()
+    val root = q + le32(b, q)
+    if (root >= q + metaLen) refuse()
     val blPos = field(b, root, 3)
-    val bodyLen = if (blPos < 0) 0L else i64(b, blPos)
-    if (bodyLen < 0 || q + metaLen + bodyLen > b.length) err()
+    val bodyLen = if (blPos < 0) 0L else le64(b, blPos)
+    if (bodyLen < 0 || q + metaLen + bodyLen > b.length) refuse()
     Right((root, q + metaLen, bodyLen, q + metaLen + bodyLen))
   }
 
@@ -1405,9 +1386,9 @@ object ArrowCodec {
   }
 
   private def headerOf(b: Array[Byte], msgPos: Long, wantType: Int): Long = {
-    if (headerType(b, msgPos) != wantType) err()
+    if (headerType(b, msgPos) != wantType) refuse()
     val hPos = field(b, msgPos, 2)
-    if (hPos < 0) err()
+    if (hPos < 0) refuse()
     indirect(b, hPos)
   }
 
@@ -1418,47 +1399,47 @@ object ArrowCodec {
     * against them). */
   private def decodeFile(b: Array[Byte]): Option[Vector[Cell]] = {
     val n = b.length
-    if (n < 8 + 10 || !hasMagic(b, n - 6)) err()
-    val footerLen = u32(b, n - 10L)
+    if (n < 8 + 10 || !hasMagic(b, n - 6)) refuse()
+    val footerLen = le32(b, n - 10L)
     val footerPos = n - 10L - footerLen
-    if (footerLen < 4 || footerPos < 8) err()
-    val root = footerPos + u32(b, footerPos)
+    if (footerLen < 4 || footerPos < 8) refuse()
+    val root = footerPos + le32(b, footerPos)
     // Footer: version(0) schema(1) dictionaries(2) recordBatches(3)
     val sPos = field(b, root, 1)
-    if (sPos < 0) err()
+    if (sPos < 0) refuse()
     val fields = parseSchema(b, indirect(b, sPos))
     val dicts = scala.collection.mutable.Map.empty[Long, Vector[Cell]]
     def blockAt(at: Long, i: Long): (Long, Long, Long) = {
       val p = at + 24 * i
-      val off = i64(b, p)
-      val metaDataLen = i32(b, p + 8).toLong
-      val bodyLen = i64(b, p + 16)
+      val off = le64(b, p)
+      val metaDataLen = le32(b, p + 8).toInt.toLong
+      val bodyLen = le64(b, p + 16)
       if (off < 0 || metaDataLen < 8 || bodyLen < 0 ||
-          off + metaDataLen + bodyLen > n) err()
+          off + metaDataLen + bodyLen > n) refuse()
       (off, metaDataLen, bodyLen)
     }
     val dicPos = field(b, root, 2)
     if (dicPos >= 0) {
       val (nd, dat) = vec(b, dicPos, 24)
-      if (nd > MaxBatches) err()
+      if (nd > MaxBatches) refuse()
       var i = 0L
       while (i < nd) {
         val (off, metaDataLen, bodyLen) = blockAt(dat, i)
-        val (msgRoot, _, _, _) = message(b, off).getOrElse(err())
+        val (msgRoot, _, _, _) = message(b, off).getOrElse(refuse())
         decodeDictionary(b, headerOf(b, msgRoot, 2), off + metaDataLen,
           bodyLen, fields, dicts)
         i += 1
       }
     }
     val rbPos = field(b, root, 3)
-    if (rbPos < 0) err()
+    if (rbPos < 0) refuse()
     val (nb, at) = vec(b, rbPos, 24)
-    if (nb > MaxBatches) err()
+    if (nb > MaxBatches) refuse()
     val out = scala.collection.mutable.ArrayBuffer.empty[Cell]
     var i = 0L
     while (i < nb) {
       val (off, metaDataLen, bodyLen) = blockAt(at, i)
-      val (msgRoot, _, _, _) = message(b, off).getOrElse(err())
+      val (msgRoot, _, _, _) = message(b, off).getOrElse(refuse())
       val rb = headerOf(b, msgRoot, 3)
       decodeBatch(b, rb, off + metaDataLen, bodyLen, fields, i.toInt, dicts, out)
       i += 1
@@ -1471,7 +1452,7 @@ object ArrowCodec {
     * EOF). Trailing bytes past the marker refuse the file — the
     * strict-trailing-garbage stance the gzip/bz2/zip codecs share. */
   private def decodeStream(b: Array[Byte]): Option[Vector[Cell]] = {
-    val (sRoot, _, _, afterSchema) = message(b, 0).getOrElse(err())
+    val (sRoot, _, _, afterSchema) = message(b, 0).getOrElse(refuse())
     val fields = parseSchema(b, headerOf(b, sRoot, 1))
     val dicts = scala.collection.mutable.Map.empty[Long, Vector[Cell]]
     val out = scala.collection.mutable.ArrayBuffer.empty[Cell]
@@ -1481,7 +1462,7 @@ object ArrowCodec {
     while (!done && p < b.length) {
       message(b, p) match {
         case Left(after) =>
-          if (after != b.length) err() // trailing garbage after EOS
+          if (after != b.length) refuse() // trailing garbage after EOS
           done = true
         case Right((mRoot, bodyAt, bodyLen, next)) =>
           headerType(b, mRoot) match {
@@ -1489,7 +1470,7 @@ object ArrowCodec {
               decodeDictionary(b, headerOf(b, mRoot, 2), bodyAt, bodyLen,
                 fields, dicts)
             case _ =>
-              if (batch >= MaxBatches) err()
+              if (batch >= MaxBatches) refuse()
               val rb = headerOf(b, mRoot, 3)
               decodeBatch(b, rb, bodyAt, bodyLen, fields, batch, dicts, out)
               batch += 1

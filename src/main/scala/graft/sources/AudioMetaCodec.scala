@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Audio metadata codec — FLAC and MP3 are the audio half of a
   * multimodal crawl, and curation runs on METADATA (sample rate,
   * channels, duration, title/artist/language tags) long before any
@@ -36,47 +38,38 @@ object AudioMetaCodec {
   val MaxComments: Int = 10000
   val MaxTextBytes: Int = 1 << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decodeFlac(bytes: Array[Byte]): Option[Vector[Meta]] =
-    try Some(runFlac(bytes))
-    catch { case _: Fail => None }
+    refusing(runFlac(bytes))
 
   def decodeMp3(bytes: Array[Byte]): Option[Vector[Meta]] =
-    try Some(runMp3(bytes))
-    catch { case _: Fail => None }
+    refusing(runMp3(bytes))
 
   private def runFlac(b: Array[Byte]): Vector[Meta] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
     if (b.length < 8 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' ||
-        b(3) != 'C') err()
+        b(3) != 'C') refuse()
     val out = Vector.newBuilder[Meta]
     var p = 4
     var first = true
     var last = false
     while (!last) {
-      val h = u8(p)
+      val h = u8(b, p)
       last = (h & 0x80) != 0
       val btype = h & 0x7f
-      if (btype == 127) err() // forbidden by spec
-      val len = (u8(p + 1) << 16) | (u8(p + 2) << 8) | u8(p + 3)
+      if (btype == 127) refuse() // forbidden by spec
+      val len = be24(b, p + 1)
       val at = p + 4
-      if (at + len > b.length) err()
-      if (first && btype != 0) err() // STREAMINFO must lead
+      if (at + len > b.length) refuse()
+      if (first && btype != 0) refuse() // STREAMINFO must lead
       first = false
       btype match {
         case 0 =>
-          if (len != 34) err()
-          var packed = 0L
-          var i = 0
-          while (i < 8) { packed = (packed << 8) | u8(at + 10 + i); i += 1 }
+          if (len != 34) refuse()
+          val packed = be64(b, at + 10)
           val rate = (packed >>> 44) & 0xfffff
           val ch = ((packed >>> 41) & 7) + 1
           val bps = ((packed >>> 36) & 0x1f) + 1
           val total = packed & ((1L << 36) - 1)
-          if (rate == 0) err()
+          if (rate == 0) refuse()
           out += Meta("streaminfo", "sample_rate", null, rate)
           out += Meta("streaminfo", "channels", null, ch)
           out += Meta("streaminfo", "bits", null, bps)
@@ -85,28 +78,25 @@ object AudioMetaCodec {
             out += Meta("streaminfo", "duration_ms", null,
               total * 1000 / rate)
         case 4 =>
-          def u32le(q: Int): Long =
-            (u8(q) | (u8(q + 1) << 8) | (u8(q + 2) << 16) |
-              (u8(q + 3).toLong << 24)) & 0xffffffffL
           var q = at
           val bend = at + len
-          val vlen = u32le(q); q += 4
-          if (vlen > MaxTextBytes || q + vlen > bend) err()
+          val vlen = le32(b, q); q += 4
+          if (vlen > MaxTextBytes || q + vlen > bend) refuse()
           out += Meta("vendor", "vendor",
             new String(b, q, vlen.toInt,
               java.nio.charset.StandardCharsets.UTF_8), 0)
           q += vlen.toInt
-          val n = u32le(q); q += 4
-          if (n > MaxComments) err()
+          val n = le32(b, q); q += 4
+          if (n > MaxComments) refuse()
           var i = 0L
           while (i < n) {
-            val flen = u32le(q); q += 4
-            if (flen > MaxTextBytes || q + flen > bend) err()
+            val flen = le32(b, q); q += 4
+            if (flen > MaxTextBytes || q + flen > bend) refuse()
             val kv = new String(b, q, flen.toInt,
               java.nio.charset.StandardCharsets.UTF_8)
             q += flen.toInt
             val eq = kv.indexOf('=')
-            if (eq <= 0) err()
+            if (eq <= 0) refuse()
             out += Meta("comment",
               kv.substring(0, eq).toUpperCase(java.util.Locale.ROOT),
               kv.substring(eq + 1), 0)
@@ -135,8 +125,7 @@ object AudioMetaCodec {
       sval: String)
 
   def decodeOgg(bytes: Array[Byte]): Option[Vector[OpusMeta]] =
-    try Some(runOgg(bytes))
-    catch { case _: Fail => None }
+    refusing(runOgg(bytes))
 
   private val OggCrcTable: Array[Int] = {
     val t = new Array[Int](256)
@@ -155,12 +144,6 @@ object AudioMetaCodec {
   }
 
   private def runOgg(b: Array[Byte]): Vector[OpusMeta] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
-    def u16le(p: Int): Int = u8(p) | (u8(p + 1) << 8)
-    def u32le(p: Int): Long =
-      (u8(p) | (u8(p + 1) << 8) | (u8(p + 2) << 16) |
-        (u8(p + 3).toLong << 24)) & 0xffffffffL
-
     val out = Vector.newBuilder[OpusMeta]
     var p = 0
     var serial = -1L
@@ -171,29 +154,28 @@ object AudioMetaCodec {
     var partial = new java.io.ByteArrayOutputStream()
     var packetCount = 0
     while (p < b.length) {
-      if (sawEos) err() // trailing pages after EOS
-      if (p + 27 > b.length) err()
-      if (!(u8(p) == 'O' && u8(p + 1) == 'g' && u8(p + 2) == 'g' &&
-            u8(p + 3) == 'S')) err()
-      if (u8(p + 4) != 0) err() // stream structure version
-      val htype = u8(p + 5)
-      var granule = 0L
+      if (sawEos) refuse() // trailing pages after EOS
+      if (p + 27 > b.length) refuse()
+      if (!(u8(b, p) == 'O' && u8(b, p + 1) == 'g' && u8(b, p + 2) == 'g' &&
+            u8(b, p + 3) == 'S')) refuse()
+      if (u8(b, p + 4) != 0) refuse() // stream structure version
+      val htype = u8(b, p + 5)
+      val granule = le64(b, p + 6)
       var i = 0
-      while (i < 8) { granule |= (u8(p + 6 + i).toLong << (8 * i)); i += 1 }
-      val ser = u32le(p + 14)
+      val ser = le32(b, p + 14)
       if (serial < 0) serial = ser
-      else if (ser != serial) err() // multiplexed: out of envelope
-      val nsegs = u8(p + 26)
+      else if (ser != serial) refuse() // multiplexed: out of envelope
+      val nsegs = u8(b, p + 26)
       val lacingAt = p + 27
       var bodyLen = 0
       i = 0
-      while (i < nsegs) { bodyLen += u8(lacingAt + i); i += 1 }
+      while (i < nsegs) { bodyLen += u8(b, lacingAt + i); i += 1 }
       val bodyAt = lacingAt + nsegs
-      if (bodyAt + bodyLen > b.length) err()
+      if (bodyAt + bodyLen > b.length) refuse()
       // CRC over the page with a zeroed CRC field
       var crc = 0
       def feed(q: Int): Unit =
-        crc = (crc << 8) ^ OggCrcTable(((crc >>> 24) ^ u8(q)) & 0xff)
+        crc = (crc << 8) ^ OggCrcTable(((crc >>> 24) ^ u8(b, q)) & 0xff)
       i = p
       while (i < p + 22) { feed(i); i += 1 }
       i = 0
@@ -202,13 +184,13 @@ object AudioMetaCodec {
       }
       i = p + 26
       while (i < bodyAt + bodyLen) { feed(i); i += 1 }
-      if (crc != (u32le(p + 22)).toInt) err()
-      if ((htype & 1) == 0 && partial.size > 0 && nPages > 0) err()
+      if (crc != (le32(b, p + 22)).toInt) refuse()
+      if ((htype & 1) == 0 && partial.size > 0 && nPages > 0) refuse()
       // packet reassembly via lacing values
       var off = bodyAt
       i = 0
       while (i < nsegs) {
-        val ln = u8(lacingAt + i)
+        val ln = u8(b, lacingAt + i)
         partial.write(b, off, ln)
         off += ln
         if (ln < 255) {
@@ -223,18 +205,17 @@ object AudioMetaCodec {
       nPages += 1
       p = bodyAt + bodyLen
     }
-    if (nPages == 0 || !sawEos || partial.size > 0) err()
+    if (nPages == 0 || !sawEos || partial.size > 0) refuse()
     val ps = packets.result()
-    if (ps.length < 2) err()
+    if (ps.length < 2) refuse()
     val head = ps(0)
     if (head.length < 19 || !new String(head, 0, 8,
         java.nio.charset.StandardCharsets.US_ASCII).equals("OpusHead"))
-      err()
-    if ((head(8) & 0xff) != 1) err() // OpusHead version
+      refuse()
+    if ((head(8) & 0xff) != 1) refuse() // OpusHead version
     val ch = head(9) & 0xff
-    val preskip = (head(10) & 0xff) | ((head(11) & 0xff) << 8)
-    val rate = ((head(12) & 0xff) | ((head(13) & 0xff) << 8) |
-      ((head(14) & 0xff) << 16) | ((head(15) & 0xffL) << 24)) & 0xffffffffL
+    val preskip = le16(head, 10)
+    val rate = le32(head, 12)
     out += OpusMeta("stream", "channels", 0, ch, null)
     out += OpusMeta("stream", "preskip", 0, preskip, null)
     out += OpusMeta("stream", "input_rate", 0, rate, null)
@@ -244,30 +225,25 @@ object AudioMetaCodec {
     val tags = ps(1)
     if (tags.length < 12 || !new String(tags, 0, 8,
         java.nio.charset.StandardCharsets.US_ASCII).equals("OpusTags"))
-      err()
-    def t32le(q: Int): Long = {
-      if (q + 4 > tags.length) err()
-      ((tags(q) & 0xffL) | ((tags(q + 1) & 0xffL) << 8) |
-        ((tags(q + 2) & 0xffL) << 16) | ((tags(q + 3) & 0xffL) << 24))
-    }
+      refuse()
     var q = 8
-    val vlen = t32le(q); q += 4
-    if (vlen > MaxTextBytes || q + vlen > tags.length) err()
+    val vlen = le32(tags, q); q += 4
+    if (vlen > MaxTextBytes || q + vlen > tags.length) refuse()
     out += OpusMeta("vendor", "vendor", 0, 0,
       new String(tags, q, vlen.toInt,
         java.nio.charset.StandardCharsets.UTF_8))
     q += vlen.toInt
-    val n = t32le(q); q += 4
-    if (n > MaxComments) err()
+    val n = le32(tags, q); q += 4
+    if (n > MaxComments) refuse()
     var ci = 0L
     while (ci < n) {
-      val flen = t32le(q); q += 4
-      if (flen > MaxTextBytes || q + flen > tags.length) err()
+      val flen = le32(tags, q); q += 4
+      if (flen > MaxTextBytes || q + flen > tags.length) refuse()
       val kv = new String(tags, q, flen.toInt,
         java.nio.charset.StandardCharsets.UTF_8)
       q += flen.toInt
       val eq = kv.indexOf('=')
-      if (eq <= 0) err()
+      if (eq <= 0) refuse()
       out += OpusMeta("comment",
         kv.substring(0, eq).toUpperCase(java.util.Locale.ROOT),
         ci.toInt, 0, kv.substring(eq + 1))
@@ -283,43 +259,41 @@ object AudioMetaCodec {
   private val Mp3Rate = Array(44100, 48000, 32000, 0)
 
   private def runMp3(b: Array[Byte]): Vector[Meta] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
     def syncsafe(p: Int): Int = {
-      if ((u8(p) | u8(p + 1) | u8(p + 2) | u8(p + 3)) >= 0x80) err()
-      (u8(p) << 21) | (u8(p + 1) << 14) | (u8(p + 2) << 7) | u8(p + 3)
+      if ((u8(b, p) | u8(b, p + 1) | u8(b, p + 2) | u8(b, p + 3)) >= 0x80) refuse()
+      (u8(b, p) << 21) | (u8(b, p + 1) << 14) | (u8(b, p + 2) << 7) | u8(b, p + 3)
     }
     val out = Vector.newBuilder[Meta]
     var p = 0
     if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-      val ver = u8(3)
-      if (ver != 3 && ver != 4) err()
-      if (u8(5) != 0) err() // unsync/extended/footer: out of envelope
+      val ver = u8(b, 3)
+      if (ver != 3 && ver != 4) refuse()
+      if (u8(b, 5) != 0) refuse() // unsync/extended/footer: out of envelope
       val size = syncsafe(6)
-      if (10 + size > b.length) err()
+      if (10 + size > b.length) refuse()
       var q = 10
       val tend = 10 + size
       var inFrames = true
       while (inFrames && q + 10 <= tend) {
-        if (u8(q) == 0) inFrames = false // padding
+        if (u8(b, q) == 0) inFrames = false // padding
         else {
           val id = new String(b, q, 4,
             java.nio.charset.StandardCharsets.ISO_8859_1)
           if (!id.forall(c => (c >= 'A' && c <= 'Z') ||
-              (c >= '0' && c <= '9'))) err()
+              (c >= '0' && c <= '9'))) refuse()
           val fsz =
             if (ver == 4) syncsafe(q + 4)
-            else (u8(q + 4) << 24) | (u8(q + 5) << 16) | (u8(q + 6) << 8) |
-              u8(q + 7)
-          if (fsz < 0 || q + 10 + fsz > tend) err()
+            else be32(b, q + 4).toInt
+          if (fsz < 0 || q + 10 + fsz > tend) refuse()
           if (id.startsWith("T") && id != "TXXX" && fsz >= 1) {
-            val enc = u8(q + 10)
+            val enc = u8(b, q + 10)
             val raw = java.util.Arrays.copyOfRange(b, q + 11, q + 10 + fsz)
             val cs = enc match {
               case 0 => java.nio.charset.StandardCharsets.ISO_8859_1
               case 1 => java.nio.charset.StandardCharsets.UTF_16 // BOM
               case 2 => java.nio.charset.StandardCharsets.UTF_16BE
               case 3 => java.nio.charset.StandardCharsets.UTF_8
-              case _ => err()
+              case _ => refuse()
             }
             var s = new String(raw, cs)
             while (s.nonEmpty && s.charAt(s.length - 1) == '\u0000')
@@ -332,17 +306,17 @@ object AudioMetaCodec {
       p = tend
     }
     // first MPEG audio frame header
-    if (p + 4 > b.length) err()
-    if (u8(p) != 0xff || (u8(p + 1) & 0xe0) != 0xe0) err()
-    val verBits = (u8(p + 1) >> 3) & 3
-    val layerBits = (u8(p + 1) >> 1) & 3
-    if (verBits != 3 || layerBits != 1) err() // MPEG-1 Layer III only
-    val br = Mp3Bitrate((u8(p + 2) >> 4) & 0xf)
-    val rate = Mp3Rate((u8(p + 2) >> 2) & 3)
-    if (br == 0 || rate == 0) err()
-    val pad = (u8(p + 2) >> 1) & 1
+    if (p + 4 > b.length) refuse()
+    if (u8(b, p) != 0xff || (u8(b, p + 1) & 0xe0) != 0xe0) refuse()
+    val verBits = (u8(b, p + 1) >> 3) & 3
+    val layerBits = (u8(b, p + 1) >> 1) & 3
+    if (verBits != 3 || layerBits != 1) refuse() // MPEG-1 Layer III only
+    val br = Mp3Bitrate((u8(b, p + 2) >> 4) & 0xf)
+    val rate = Mp3Rate((u8(b, p + 2) >> 2) & 3)
+    if (br == 0 || rate == 0) refuse()
+    val pad = (u8(b, p + 2) >> 1) & 1
     val flen = 144 * br * 1000 / rate + pad
-    if (p + flen > b.length) err() // first frame must be whole
+    if (p + flen > b.length) refuse() // first frame must be whole
     out += Meta("stream", "mpeg_version", null, 1)
     out += Meta("stream", "layer", null, 3)
     out += Meta("stream", "bitrate_kbps", null, br)

@@ -1,5 +1,8 @@
 package graft.sources
 
+import Bytes._
+import Mp4Codec.boxes
+
 /** AVIF/HEIF metadata codec — AVIF is the fastest-growing web image
   * format and iPhones ship HEIC; both are ISO-BMFF `meta` files whose
   * first pass (dimensions, item table, byte extents, embedded EXIF)
@@ -29,47 +32,10 @@ object AvifCodec {
 
   val MaxItems: Int = 4096
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decode(bytes: Array[Byte]): Option[Vector[Meta]] =
-    try Some(run(bytes))
-    catch { case _: Fail => None }
+    refusing(run(bytes))
 
   private def run(b: Array[Byte]): Vector[Meta] = {
-    def u8(p: Long): Int = {
-      if (p < 0 || p >= b.length) err(); b(p.toInt) & 0xff
-    }
-    def u16(p: Long): Int = (u8(p) << 8) | u8(p + 1)
-    def u32(p: Long): Long =
-      ((u8(p).toLong << 24) | (u8(p + 1) << 16) | (u8(p + 2) << 8) |
-        u8(p + 3)) & 0xffffffffL
-    def uN(p: Long, n: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < n) { v = (v << 8) | u8(p + i); i += 1 }
-      v
-    }
-    def fourcc(p: Long): String =
-      new String(Array(u8(p).toByte, u8(p + 1).toByte, u8(p + 2).toByte,
-        u8(p + 3).toByte), java.nio.charset.StandardCharsets.US_ASCII)
-
-    def boxes(from: Long, to: Long)(f: (String, Long, Long) => Unit): Unit = {
-      var p = from
-      while (p < to) {
-        if (p + 8 > to) err()
-        val sz0 = u32(p)
-        val typ = fourcc(p + 4)
-        val (bodyAt, end) =
-          if (sz0 == 1) { if (p + 16 > to) err(); (p + 16, p + uN(p + 8, 8)) }
-          else if (sz0 == 0) (p + 8, to)
-          else (p + 8, p + sz0)
-        if (end < bodyAt || end > to) err()
-        f(typ, bodyAt, end)
-        p = end
-      }
-    }
-
     var primary = -1L
     val itemTypes = scala.collection.mutable.LinkedHashMap[Long, String]()
     val extents =
@@ -81,60 +47,67 @@ object AvifCodec {
 
     def readMeta(mFrom: Long, mTo: Long): Unit = {
       sawMeta = true
-      boxes(mFrom + 4, mTo) { (typ, at, end) => // meta is a FULL box
+      boxes(b, mFrom + 4, mTo) { (typ, at, end) => // meta is a FULL box
         typ match {
           case "pitm" =>
-            val v = u8(at)
-            primary = if (v == 0) u16(at + 4) else u32(at + 4)
+            val v = u8(b, at)
+            primary = if (v == 0) be16(b, at + 4) else be32(b, at + 4)
           case "iinf" =>
-            val v = u8(at)
-            val n = if (v == 0) u16(at + 4).toLong else u32(at + 4)
-            if (n > MaxItems) err()
+            val v = u8(b, at)
+            val n = if (v == 0) be16(b, at + 4).toLong else be32(b, at + 4)
+            if (n > MaxItems) refuse()
             val start = at + (if (v == 0) 6 else 8)
-            boxes(start, end) { (t2, a2, e2) =>
+            boxes(b, start, end) { (t2, a2, e2) =>
               if (t2 == "infe") {
-                val iv = u8(a2)
-                if (iv < 2) err() // v0/1: the pre-HEIF shape
+                val iv = u8(b, a2)
+                if (iv < 2) refuse() // v0/1: the pre-HEIF shape
                 // v2 carries a u16 item id; v3+ widens it to u32
                 // (ISO 14496-12 §8.11.6) and shifts item_type by 2
-                val id = if (iv >= 3) u32(a2 + 4) else u16(a2 + 4).toLong
-                itemTypes(id) = fourcc(a2 + (if (iv >= 3) 10 else 8))
+                val id = if (iv >= 3) be32(b, a2 + 4) else be16(b, a2 + 4).toLong
+                itemTypes(id) = fourcc(b, a2 + (if (iv >= 3) 10 else 8))
               }
             }
           case "iloc" =>
-            val v = u8(at)
-            if (v > 2) err()
-            val offSz = (u8(at + 4) >> 4) & 0xf
-            val lenSz = u8(at + 4) & 0xf
-            val baseSz = (u8(at + 5) >> 4) & 0xf
-            val idxSz = if (v >= 1) u8(at + 5) & 0xf else 0
+            val v = u8(b, at)
+            if (v > 2) refuse()
+            val offSz = (u8(b, at + 4) >> 4) & 0xf
+            val lenSz = u8(b, at + 4) & 0xf
+            val baseSz = (u8(b, at + 5) >> 4) & 0xf
+            val idxSz = if (v >= 1) u8(b, at + 5) & 0xf else 0
             if (!Set(0, 4, 8)(offSz) || !Set(0, 4, 8)(lenSz) ||
-                !Set(0, 4, 8)(baseSz) || !Set(0, 4, 8)(idxSz)) err()
+                !Set(0, 4, 8)(baseSz) || !Set(0, 4, 8)(idxSz)) refuse()
             var p = at + 6
-            val n = if (v < 2) { val x = u16(p); p += 2; x.toLong }
-              else { val x = u32(p); p += 4; x }
-            if (n > MaxItems) err()
+            // offset/length/base fields are 0, 4 or 8 bytes wide; a
+            // 0-byte field reads nothing
+            def field(n: Int): Long = {
+              val x = if (n == 0) 0L else beN(b, p, n)
+              p += n
+              x
+            }
+            val n = if (v < 2) { val x = be16(b, p); p += 2; x.toLong }
+              else { val x = be32(b, p); p += 4; x }
+            if (n > MaxItems) refuse()
             var i = 0L
             while (i < n) {
-              val id = if (v < 2) { val x = u16(p); p += 2; x.toLong }
-                else { val x = u32(p); p += 4; x }
+              val id = if (v < 2) { val x = be16(b, p); p += 2; x.toLong }
+                else { val x = be32(b, p); p += 4; x }
               if (v >= 1) {
-                val cm = u16(p) & 0xf; p += 2
-                if (cm != 0) err() // idat/item construction: refuse
+                val cm = be16(b, p) & 0xf; p += 2
+                if (cm != 0) refuse() // idat/item construction: refuse
               }
-              if (u16(p) != 0) err() // external data reference
+              if (be16(b, p) != 0) refuse() // external data reference
               p += 2
-              val base = uN(p, baseSz); p += baseSz
-              val ec = u16(p); p += 2
-              if (ec > MaxItems) err()
+              val base = field(baseSz)
+              val ec = be16(b, p); p += 2
+              if (ec > MaxItems) refuse()
               val exts = Vector.newBuilder[(Long, Long)]
               var e = 0
               while (e < ec) {
                 if (idxSz > 0) p += idxSz
-                val off = uN(p, offSz); p += offSz
-                val ln = uN(p, lenSz); p += lenSz
+                val off = field(offSz)
+                val ln = field(lenSz)
                 val abs = base + off
-                if (abs < 0 || ln < 0 || abs + ln > b.length) err()
+                if (abs < 0 || ln < 0 || abs + ln > b.length) refuse()
                 exts += ((abs, ln))
                 e += 1
               }
@@ -142,32 +115,32 @@ object AvifCodec {
               i += 1
             }
           case "iprp" =>
-            boxes(at, end) { (t2, a2, e2) =>
+            boxes(b, at, end) { (t2, a2, e2) =>
               t2 match {
                 case "ipco" =>
                   var slot = 1L
-                  boxes(a2, e2) { (t3, a3, _) =>
+                  boxes(b, a2, e2) { (t3, a3, _) =>
                     if (t3 == "ispe")
-                      ispeDims += ((slot, u32(a3 + 4), u32(a3 + 8)))
+                      ispeDims += ((slot, be32(b, a3 + 4), be32(b, a3 + 8)))
                     slot += 1
                   }
                 case "ipma" =>
-                  val v = u8(a2)
-                  val flags = u32(a2) & 0xffffff
-                  val n = u32(a2 + 4)
-                  if (n > MaxItems) err()
+                  val v = u8(b, a2)
+                  val flags = be32(b, a2) & 0xffffff
+                  val n = be32(b, a2 + 4)
+                  if (n > MaxItems) refuse()
                   var p = a2 + 8
                   var i = 0L
                   while (i < n) {
-                    val id = if (v < 1) { val x = u16(p); p += 2; x.toLong }
-                      else { val x = u32(p); p += 4; x }
-                    val cnt = u8(p); p += 1
+                    val id = if (v < 1) { val x = be16(b, p); p += 2; x.toLong }
+                      else { val x = be32(b, p); p += 4; x }
+                    val cnt = u8(b, p); p += 1
                     val props = Vector.newBuilder[Int]
                     var k = 0
                     while (k < cnt) {
                       val pi =
-                        if ((flags & 1) == 1) { val x = u16(p) & 0x7fff; p += 2; x }
-                        else { val x = u8(p) & 0x7f; p += 1; x }
+                        if ((flags & 1) == 1) { val x = be16(b, p) & 0x7fff; p += 2; x }
+                        else { val x = u8(b, p) & 0x7f; p += 1; x }
                       props += pi
                       k += 1
                     }
@@ -182,11 +155,11 @@ object AvifCodec {
       }
     }
 
-    boxes(0L, b.length.toLong) { (typ, at, end) =>
+    boxes(b, 0L, b.length.toLong) { (typ, at, end) =>
       if (typ == "meta") readMeta(at, end)
     }
     if (!sawMeta || primary < 0 || itemTypes.isEmpty || extents.isEmpty)
-      err()
+      refuse()
 
     val out = Vector.newBuilder[Meta]
     out += Meta("primary", "item_id", 0, primary, null)
@@ -199,7 +172,7 @@ object AvifCodec {
       out += Meta("canvas", "height", 0, h, null)
     }
     itemTypes.foreach { case (id, typ) =>
-      val exts = extents.getOrElse(id, err())
+      val exts = extents.getOrElse(id, refuse())
       val total = exts.map(_._2).sum
       out += Meta("item", typ, id.toInt, total, null)
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -211,17 +184,17 @@ object AvifCodec {
       if (typ == "Exif") {
         // ExifDataBlock: u32 tiff header offset, then the payload
         val (o0, _) = exts.head
-        if (exts.head._2 < 8) err()
-        val hdrOff = u32(o0)
+        if (exts.head._2 < 8) refuse()
+        val hdrOff = be32(b, o0)
         val buf = new java.io.ByteArrayOutputStream()
         exts.foreach { case (off, ln) =>
           buf.write(b, off.toInt, ln.toInt)
         }
         val payload = buf.toByteArray
-        if (4L + hdrOff >= payload.length) err()
+        if (4L + hdrOff >= payload.length) refuse()
         val tiff = java.util.Arrays.copyOfRange(
           payload, (4 + hdrOff).toInt, payload.length)
-        val tags = ExifCodec.parseTiff(tiff).getOrElse(err())
+        val tags = ExifCodec.parseTiff(tiff).getOrElse(refuse())
         def gps(tag: Int) =
           tags.find(t => t.ifd == "gps" && t.tag == tag && t.idx == 0)
         for (lat <- gps(2); ref <- gps(1)) {

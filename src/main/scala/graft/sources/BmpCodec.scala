@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** BMP codec (Windows DIB) — the uncompressed long-tail image format
   * web crawls still surface (old sites, screenshots, scanned-doc
   * dumps); a LAION-style pipeline decodes or skips one daily. Sibling
@@ -22,42 +24,32 @@ object BmpCodec {
 
   val MaxPixels: Long = 64L << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decode(bytes: Array[Byte]): Option[Image] =
-    try Some(run(bytes))
-    catch { case _: Fail => None }
+    refusing(run(bytes))
 
   private def run(b: Array[Byte]): Image = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
-    def u16(p: Int): Int = u8(p) | (u8(p + 1) << 8)
-    def i32(p: Int): Int =
-      u16(p) | (u16(p + 2) << 16)
-
-    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') err()
-    val dataOff = i32(10)
+    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') refuse()
+    val dataOff = le32(b, 10).toInt
     // a negative/out-of-file offset must refuse HERE: the 24/32-bit
     // branch reads pixel bytes raw, and `dataOff.toLong + size > len`
     // alone lets a negative offset through to an AIOOBE
-    if (dataOff < 14 || dataOff > b.length) err()
-    val hdrSize = i32(14)
-    if (hdrSize < 40 || hdrSize > 256) err() // v3/v4/v5 info headers
-    val w = i32(18)
-    val hRaw = i32(22)
+    if (dataOff < 14 || dataOff > b.length) refuse()
+    val hdrSize = le32(b, 14).toInt
+    if (hdrSize < 40 || hdrSize > 256) refuse() // v3/v4/v5 info headers
+    val w = le32(b, 18).toInt
+    val hRaw = le32(b, 22).toInt
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
-    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) err()
-    if (u16(26) != 1) err() // planes
-    val bpp = u16(28)
-    val compression = i32(30)
-    val colorsUsed = i32(46)
+    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) refuse()
+    if (le16(b, 26) != 1) refuse() // planes
+    val bpp = le16(b, 28)
+    val compression = le32(b, 30).toInt
+    val colorsUsed = le32(b, 46).toInt
 
     val paletteAt = 14 + hdrSize
     val palette: Array[Byte] = if (bpp <= 8) {
       val n = if (colorsUsed > 0) colorsUsed else 1 << bpp
-      if (n > 256 || paletteAt + 4 * n > b.length) err()
+      if (n > 256 || paletteAt + 4 * n > b.length) refuse()
       val t = new Array[Byte](3 * n)
       var i = 0
       while (i < n) { // BGRA quads → RGB
@@ -71,7 +63,7 @@ object BmpCodec {
 
     val rgb = new Array[Byte](3 * w * h)
     def setFromPalette(x: Int, y: Int, ci: Int): Unit = {
-      if (3 * ci + 2 >= palette.length) err()
+      if (3 * ci + 2 >= palette.length) refuse()
       val yy = if (topDown) y else h - 1 - y // y counts STORED rows
       val o = 3 * (yy * w + x)
       rgb(o) = palette(3 * ci)
@@ -83,7 +75,7 @@ object BmpCodec {
       case (24, 0) | (32, 0) =>
         val bytesPerPx = bpp / 8
         val stride = (w * bytesPerPx + 3) & ~3
-        if (dataOff.toLong + stride.toLong * h > b.length) err()
+        if (dataOff.toLong + stride.toLong * h > b.length) refuse()
         var y = 0
         while (y < h) {
           val yy = if (topDown) y else h - 1 - y
@@ -98,7 +90,7 @@ object BmpCodec {
         }
       case (1, 0) | (4, 0) | (8, 0) =>
         val stride = ((w * bpp + 31) / 32) * 4
-        if (dataOff.toLong + stride.toLong * h > b.length) err()
+        if (dataOff.toLong + stride.toLong * h > b.length) refuse()
         var y = 0
         while (y < h) {
           var x = 0
@@ -106,9 +98,9 @@ object BmpCodec {
             val bitPos = x * bpp
             val byteAt = dataOff + y * stride + bitPos / 8
             val ci = bpp match {
-              case 8 => u8(byteAt)
-              case 4 => (u8(byteAt) >> (4 - (bitPos % 8))) & 0xf
-              case 1 => (u8(byteAt) >> (7 - (bitPos % 8))) & 1
+              case 8 => u8(b, byteAt)
+              case 4 => (u8(b, byteAt) >> (4 - (bitPos % 8))) & 0xf
+              case 1 => (u8(b, byteAt) >> (7 - (bitPos % 8))) & 1
             }
             setFromPalette(x, y, ci)
             x += 1
@@ -127,28 +119,28 @@ object BmpCodec {
         var cy = 0
         var done = false
         while (!done) {
-          val n = u8(p); val v = u8(p + 1); p += 2
+          val n = u8(b, p); val v = u8(b, p + 1); p += 2
           if (n > 0) { // run
             var k = 0
             while (k < n) {
-              if (cx >= w || cy >= h) err()
+              if (cx >= w || cy >= h) refuse()
               setFromPalette(cx, cy, v); cx += 1; k += 1
             }
           } else v match {
             case 0 => cy += 1; cx = 0 // end of line
             case 1 => done = true // end of bitmap
-            case 2 => cx += u8(p); cy += u8(p + 1); p += 2 // delta
+            case 2 => cx += u8(b, p); cy += u8(b, p + 1); p += 2 // delta
             case cnt => // absolute mode, word-aligned
               var k = 0
               while (k < cnt) {
-                if (cx >= w || cy >= h) err()
-                setFromPalette(cx, cy, u8(p + k)); cx += 1; k += 1
+                if (cx >= w || cy >= h) refuse()
+                setFromPalette(cx, cy, u8(b, p + k)); cx += 1; k += 1
               }
               p += cnt + (cnt & 1)
           }
-          if (cy > h) err()
+          if (cy > h) refuse()
         }
-      case _ => err() // 16-bit, BI_BITFIELDS, RLE4, etc.
+      case _ => refuse() // 16-bit, BI_BITFIELDS, RLE4, etc.
     }
     Image(w, h, bpp, rgb)
   }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** EXIF metadata codec — image-side PII curation: crawled JPEGs carry
   * camera metadata in an APP1 `Exif` segment (a TIFF 6.0 IFD tree),
   * and the GPS sub-IFD inside it is personal data a corpus pipeline
@@ -34,36 +36,29 @@ object ExifCodec {
   val MaxValues: Int = 65536
   val MaxIfds: Int = 16
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def parse(jpeg: Array[Byte]): Option[Vector[Tag]] =
-    try Some(run(jpeg))
-    catch { case _: Fail => None }
+    refusing(run(jpeg))
 
   /** The bare TIFF IFD walk over a standalone block — WebP's EXIF
     * chunk carries the TIFF bytes with no `Exif\0\0` prefix. */
   def parseTiff(block: Array[Byte]): Option[Vector[Tag]] =
-    try Some(tiffWalk(block, 0, block.length))
-    catch { case _: Fail => None }
+    refusing(tiffWalk(block))
 
   private def run(b: Array[Byte]): Vector[Tag] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
-    if (b.length < 4 || u8(0) != 0xff || u8(1) != 0xd8) err()
+    if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) refuse()
     // marker walk for the Exif APP1
     var p = 2
     var tiffAt = -1
     var tiffEnd = -1
     var done = false
     while (!done && tiffAt < 0) {
-      if (u8(p) != 0xff) err()
-      val m = u8(p + 1)
+      if (u8(b, p) != 0xff) refuse()
+      val m = u8(b, p + 1)
       if (m == 0xd9 || m == 0xda) done = true // EOI / SOS: no metadata
       else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) p += 2 // bare markers
       else {
-        val len = (u8(p + 2) << 8) | u8(p + 3)
-        if (len < 2 || p + 2 + len > b.length) err()
+        val len = be16(b, p + 2)
+        if (len < 2 || p + 2 + len > b.length) refuse()
         if (m == 0xe1 && len >= 8 + 6 &&
             b(p + 4) == 'E' && b(p + 5) == 'x' && b(p + 6) == 'i' &&
             b(p + 7) == 'f' && b(p + 8) == 0 && b(p + 9) == 0) {
@@ -74,32 +69,21 @@ object ExifCodec {
       }
     }
     if (tiffAt < 0) return Vector.empty
-    tiffWalk(b, tiffAt, tiffEnd)
+    tiffWalk(java.util.Arrays.copyOfRange(b, tiffAt, tiffEnd))
   }
 
-  /** TIFF IFD tree in `b[tiffAt, tiffEnd)` → tag rows. Throws Fail. */
-  private def tiffWalk(b: Array[Byte], tiffAt: Int,
-      tiffEnd: Int): Vector[Tag] = {
-    if (tiffEnd - tiffAt < 8) err()
-    // TIFF block, all offsets relative to tiffAt, bounded by tiffEnd
-    def t8(off: Long): Int = {
-      val q = tiffAt + off
-      if (off < 0 || q >= tiffEnd) err()
-      b(q.toInt) & 0xff
-    }
-    val le = (t8(0), t8(1)) match {
+  /** TIFF IFD tree in block `t` (its own slice, so every offset is
+    * relative to the TIFF header and bounded by the block) → tag rows.
+    * Refuses via Bytes. */
+  private def tiffWalk(t: Array[Byte]): Vector[Tag] = {
+    if (t.length < 8) refuse()
+    val le = (u8(t, 0), u8(t, 1)) match {
       case ('I', 'I') => true
       case ('M', 'M') => false
-      case _ => err()
+      case _ => refuse()
     }
-    def t16(off: Long): Int =
-      if (le) t8(off) | (t8(off + 1) << 8)
-      else (t8(off) << 8) | t8(off + 1)
-    def t32(off: Long): Long =
-      if (le) (t16(off) | (t16(off + 2).toLong << 16)) & 0xffffffffL
-      else ((t16(off).toLong << 16) | t16(off + 2)) & 0xffffffffL
 
-    if (t16(2) != 42) err()
+    if (u16(t, 2, le) != 42) refuse()
     val out = Vector.newBuilder[Tag]
     var emitted = 0
     val seen = new java.util.HashSet[Long]()
@@ -115,35 +99,35 @@ object ExifCodec {
 
     def parseIfd(off0: Long, name: String): Unit = {
       if (off0 == 0) return
-      if (!seen.add(off0) || nIfds >= MaxIfds) err() // loop / bomb
+      if (!seen.add(off0) || nIfds >= MaxIfds) refuse() // loop / bomb
       nIfds += 1
-      val n = t16(off0)
-      if (off0 + 2 + n * 12L + 4 > tiffEnd - tiffAt) err()
+      val n = u16(t, off0, le)
+      if (off0 + 2 + n * 12L + 4 > t.length) refuse()
       var i = 0
       var exifPtr = 0L
       var gpsPtr = 0L
       while (i < n) {
         val e = off0 + 2 + i * 12L
-        val tag = t16(e)
-        val ttype = t16(e + 2)
-        val count = t32(e + 4)
+        val tag = u16(t, e, le)
+        val ttype = u16(t, e + 2, le)
+        val count = u32(t, e + 4, le)
         val sz = typeSize(ttype)
         if (sz > 0) {
-          if (count > MaxValues || emitted + count > MaxValues) err()
+          if (count > MaxValues || emitted + count > MaxValues) refuse()
           val byteLen = count * sz
-          val vAt = if (byteLen <= 4) e + 8 else t32(e + 8)
-          if (vAt + byteLen > tiffEnd - tiffAt) err()
+          val vAt = if (byteLen <= 4) e + 8 else u32(t, e + 8, le)
+          if (vAt + byteLen > t.length) refuse()
           if (name == "ifd0" && tag == 0x8769 && ttype == 4 && count == 1)
-            exifPtr = t32(vAt)
+            exifPtr = u32(t, vAt, le)
           else if (name == "ifd0" && tag == 0x8825 && ttype == 4 &&
               count == 1)
-            gpsPtr = t32(vAt)
+            gpsPtr = u32(t, vAt, le)
           else ttype match {
             case 2 =>
               val sb = new java.lang.StringBuilder()
               var k = 0L
               while (k < count) {
-                val c = t8(vAt + k)
+                val c = u8(t, vAt + k)
                 if (c != 0) sb.append(c.toChar)
                 k += 1
               }
@@ -153,7 +137,7 @@ object ExifCodec {
               val sb = new java.lang.StringBuilder()
               var k = 0L
               while (k < count) {
-                sb.append("%02x".format(t8(vAt + k)))
+                sb.append("%02x".format(u8(t, vAt + k)))
                 k += 1
               }
               out += Tag(name, tag, ttype, 0, 0, 0, sb.toString)
@@ -163,13 +147,14 @@ object ExifCodec {
               while (k < count) {
                 val at = vAt + k * sz
                 val (num, den) = ttype match {
-                  case 1 => (t8(at).toLong, 1L)
-                  case 3 => (t16(at).toLong, 1L)
-                  case 4 => (t32(at), 1L)
-                  case 9 => (t32(at).toInt.toLong, 1L)
-                  case 5 => (t32(at), t32(at + 4))
-                  case 10 => (t32(at).toInt.toLong, t32(at + 4).toInt.toLong)
-                  case _ => err()
+                  case 1 => (u8(t, at).toLong, 1L)
+                  case 3 => (u16(t, at, le).toLong, 1L)
+                  case 4 => (u32(t, at, le), 1L)
+                  case 9 => (u32(t, at, le).toInt.toLong, 1L)
+                  case 5 => (u32(t, at, le), u32(t, at + 4, le))
+                  case 10 =>
+                    (u32(t, at, le).toInt.toLong, u32(t, at + 4, le).toInt.toLong)
+                  case _ => refuse()
                 }
                 out += Tag(name, tag, ttype, k.toInt, num, den, null)
                 emitted += 1
@@ -181,11 +166,11 @@ object ExifCodec {
       }
       if (exifPtr != 0) parseIfd(exifPtr, "exif")
       if (gpsPtr != 0) parseIfd(gpsPtr, "gps")
-      val next = t32(off0 + 2 + n * 12L)
+      val next = u32(t, off0 + 2 + n * 12L, le)
       if (next != 0 && name == "ifd0") parseIfd(next, "ifd1")
     }
 
-    parseIfd(t32(4), "ifd0")
+    parseIfd(u32(t, 4, le), "ifd0")
     out.result()
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** GIF codec (GIF87a/89a) — still everywhere in web crawls; a
   * LAION-style multimodal pipeline decodes or skips one constantly,
   * and animated GIFs are the smallest real case of the frame-sample
@@ -51,12 +53,8 @@ object GifCodec {
   val MaxFrames: Int = 1024
   val MaxPixels: Long = 64L << 20
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decode(bytes: Array[Byte]): Option[Vector[Frame]] =
-    try Some(run(bytes)._3.map { f =>
+    refusing(run(bytes)._3.map { f =>
       val rgb = new Array[Byte](3 * f.w * f.h)
       var i = 0
       while (i < f.indices.length) {
@@ -68,7 +66,6 @@ object GifCodec {
       }
       Frame(f.idx, f.left, f.top, f.w, f.h, f.interlaced, rgb)
     })
-    catch { case _: Fail => None }
 
   /** Composited animation: every frame as a full-canvas RGBA snapshot
     * per the GCE disposal state machine. Canvas starts transparent;
@@ -79,16 +76,16 @@ object GifCodec {
     * [[decode]]'s: a frame rect off the logical screen, a reserved
     * disposal method (4..7), a screen over [[MaxPixels]]. */
   def composite(bytes: Array[Byte]): Option[Vector[CanvasFrame]] =
-    try {
+    refusing {
       val (sw, sh, raws) = run(bytes)
-      if (sw == 0 || sh == 0) err()
-      if (sw.toLong * sh > MaxPixels) err()
-      if (raws.length.toLong * sw * sh > MaxPixels) err()
+      if (sw == 0 || sh == 0) refuse()
+      if (sw.toLong * sh > MaxPixels) refuse()
+      if (raws.length.toLong * sw * sh > MaxPixels) refuse()
       val canvas = new Array[Byte](4 * sw * sh)
       val out = Vector.newBuilder[CanvasFrame]
       raws.foreach { f =>
-        if (f.disposal > 3) err() // 4..7: reserved by the spec
-        if (f.left + f.w > sw || f.top + f.h > sh) err()
+        if (f.disposal > 3) refuse() // 4..7: reserved by the spec
+        if (f.left + f.w > sw || f.top + f.h > sh) refuse()
         val before =
           if (f.disposal == 3) java.util.Arrays.copyOf(canvas, canvas.length)
           else null
@@ -122,8 +119,8 @@ object GifCodec {
           case _ => ()
         }
       }
-      Some(out.result())
-    } catch { case _: Fail => None }
+      out.result()
+    }
 
   /** Encode one full-canvas frame as GIF89a: global palette (length a
     * power of two ≥ 4 colors, 3 bytes each), one image descriptor, no
@@ -225,18 +222,15 @@ object GifCodec {
   }
 
   private def run(b: Array[Byte]): (Int, Int, Vector[Raw]) = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
-    def u16(p: Int): Int = u8(p) | (u8(p + 1) << 8)
-
     if (b.length < 13 || b(0) != 'G' || b(1) != 'I' || b(2) != 'F' ||
-        b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a') err()
-    val screenW = u16(6); val screenH = u16(8)
-    val packed = u8(10)
+        b(3) != '8' || (b(4) != '7' && b(4) != '9') || b(5) != 'a') refuse()
+    val screenW = le16(b, 6); val screenH = le16(b, 8)
+    val packed = u8(b, 10)
     var p = 13
     val global: Array[Byte] =
       if ((packed & 0x80) != 0) {
         val n = 3 * (1 << ((packed & 7) + 1))
-        if (p + n > b.length) err()
+        if (p + n > b.length) refuse()
         val t = java.util.Arrays.copyOfRange(b, p, p + n)
         p += n
         t
@@ -245,7 +239,7 @@ object GifCodec {
     /** Skip a sub-block chain, returning the position after its 0 end. */
     def skipSubBlocks(q0: Int): Int = {
       var q = q0
-      while (u8(q) != 0) q += 1 + u8(q)
+      while (u8(b, q) != 0) q += 1 + u8(b, q)
       q + 1
     }
 
@@ -253,9 +247,9 @@ object GifCodec {
     def readSubBlocks(q0: Int): (Array[Byte], Int) = {
       val out = new java.io.ByteArrayOutputStream()
       var q = q0
-      while (u8(q) != 0) {
-        val n = u8(q)
-        if (q + 1 + n > b.length) err()
+      while (u8(b, q) != 0) {
+        val n = u8(b, q)
+        if (q + 1 + n > b.length) refuse()
         out.write(b, q + 1, n)
         q += 1 + n
       }
@@ -264,7 +258,7 @@ object GifCodec {
 
     /** GIF LZW: LSB-first variable-width codes → `want` pixel indices. */
     def lzw(data: Array[Byte], minCode: Int, want: Int): Array[Byte] = {
-      if (minCode < 2 || minCode > 8) err()
+      if (minCode < 2 || minCode > 8) refuse()
       val clear = 1 << minCode
       val end = clear + 1
       // dictionary as (prefix link, appended byte); roots are self-terminal
@@ -286,23 +280,23 @@ object GifCodec {
         if (extra >= 0) { stack(top) = extra.toByte; top += 1 }
         var c = code0
         while (c >= clear + 2) {
-          if (top >= stack.length) err()
+          if (top >= stack.length) refuse()
           stack(top) = suffix(c); top += 1
           c = prefix(c)
         }
-        if (c >= clear) err()
-        if (top >= stack.length) err()
+        if (c >= clear) refuse()
+        if (top >= stack.length) refuse()
         stack(top) = c.toByte; top += 1
         while (top > 0) {
           top -= 1
           if (produced < want) { out(produced) = stack(top); produced += 1 }
-          else err() // more pixels than the frame declares
+          else refuse() // more pixels than the frame declares
         }
       }
       def firstByteOf(code: Int): Int = {
         var c = code
         while (c >= clear + 2) c = prefix(c)
-        if (c >= clear) err()
+        if (c >= clear) refuse()
         c
       }
 
@@ -313,7 +307,7 @@ object GifCodec {
           nbits += 8
           dp += 1
         }
-        if (nbits < cs) err() // ran out of bits before END
+        if (nbits < cs) refuse() // ran out of bits before END
         val code = (acc & ((1L << cs) - 1)).toInt
         acc >>= cs
         nbits -= cs
@@ -322,11 +316,11 @@ object GifCodec {
         } else if (code == end) {
           done = true
         } else if (prev < 0) {
-          if (code >= clear) err() // first code after clear must be a root
+          if (code >= clear) refuse() // first code after clear must be a root
           emitEntry(code, -1)
           prev = code
         } else {
-          if (code > next || (code == next && next >= 4096)) err()
+          if (code > next || (code == next && next >= 4096)) refuse()
           if (code == next) emitEntry(prev, firstByteOf(prev)) // kwkwk
           else emitEntry(code, -1)
           if (next < 4096) {
@@ -339,7 +333,7 @@ object GifCodec {
           prev = code
         }
       }
-      if (produced != want) err()
+      if (produced != want) refuse()
       out
     }
 
@@ -351,34 +345,34 @@ object GifCodec {
     var pendDisposal = 0
     var pendTransp = -1
     while (!done) {
-      u8(p) match {
+      u8(b, p) match {
         case 0x3b => done = true
         case 0x21 => // extension: label + sub-blocks
-          if (u8(p + 1) == 0xf9 && u8(p + 2) >= 4) {
-            val pk = u8(p + 3)
+          if (u8(b, p + 1) == 0xf9 && u8(b, p + 2) >= 4) {
+            val pk = u8(b, p + 3)
             pendDisposal = (pk >> 2) & 7
-            pendTransp = if ((pk & 1) != 0) u8(p + 6) else -1
+            pendTransp = if ((pk & 1) != 0) u8(b, p + 6) else -1
           }
           p = skipSubBlocks(p + 2)
         case 0x2c =>
-          if (idx >= MaxFrames) err()
-          val left = u16(p + 1); val top = u16(p + 3)
-          val w = u16(p + 5); val h = u16(p + 7)
-          val fp = u8(p + 9)
+          if (idx >= MaxFrames) refuse()
+          val left = le16(b, p + 1); val top = le16(b, p + 3)
+          val w = le16(b, p + 5); val h = le16(b, p + 7)
+          val fp = u8(b, p + 9)
           p += 10
-          if (w == 0 || h == 0) err()
-          if (w.toLong * h > pixelBudget) err()
+          if (w == 0 || h == 0) refuse()
+          if (w.toLong * h > pixelBudget) refuse()
           pixelBudget -= w.toLong * h
           val palette: Array[Byte] =
             if ((fp & 0x80) != 0) {
               val n = 3 * (1 << ((fp & 7) + 1))
-              if (p + n > b.length) err()
+              if (p + n > b.length) refuse()
               val t = java.util.Arrays.copyOfRange(b, p, p + n)
               p += n
               t
             } else if (global != null) global
-            else err() // no palette anywhere: undecodable
-          val minCode = u8(p)
+            else refuse() // no palette anywhere: undecodable
+          val minCode = u8(b, p)
           p += 1
           val (data, after) = readSubBlocks(p)
           p = after
@@ -397,7 +391,7 @@ object GifCodec {
             var x = 0
             while (x < w) {
               val ci = streamPix(src) & 0xff
-              if (3 * ci + 2 >= palette.length) err()
+              if (3 * ci + 2 >= palette.length) refuse()
               indices(y * w + x) = streamPix(src)
               src += 1; x += 1
             }
@@ -406,7 +400,7 @@ object GifCodec {
             palette, pendDisposal, pendTransp)
           pendDisposal = 0; pendTransp = -1
           idx += 1
-        case _ => err()
+        case _ => refuse()
       }
     }
     (screenW, screenH, frames.result())

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Pure-Scala RFC 1952 gzip member codec — the compression envelope
   * web-scale text corpora actually ship in (`.jsonl.gz` shards are the
   * Common-Crawl/web-corpus analogue of the reference's webdataset tars,
@@ -70,7 +72,10 @@ object GzipCodec {
     * first member's FNAME plus the concatenation; None on any
     * structural violation in ANY member, on trailing non-member
     * garbage, or past [[MaxInflatedBytes]] — never throws. */
-  def decode(bytes: Array[Byte]): Option[GzipFile] = {
+  def decode(bytes: Array[Byte]): Option[GzipFile] =
+    refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[GzipFile] = {
     if (bytes.length < 18) return None
     val out = new java.io.ByteArrayOutputStream(
       math.min(bytes.length.toLong * 4, 1L << 20).toInt)
@@ -101,7 +106,7 @@ object GzipCodec {
     var pos = off + 10
     if ((flg & 0x04) != 0) { // FEXTRA: 2-byte LE length + payload
       if (pos + 2 > bytes.length) return None
-      val xlen = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8)
+      val xlen = le16(bytes, pos)
       pos += 2 + xlen
       if (pos > bytes.length) return None
     }
@@ -144,11 +149,8 @@ object GzipCodec {
     inf.end()
     val tpos = pos + consumed
     if (tpos + 8 > bytes.length) return None
-    def le32(o: Int): Long =
-      (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-      ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-    if (le32(tpos) != crc.getValue) return None
-    if (le32(tpos + 4) != (memberLen & 0xffffffffL)) return None
+    if (le32(bytes, tpos) != crc.getValue) return None
+    if (le32(bytes, tpos + 4) != (memberLen & 0xffffffffL)) return None
     Some((name, tpos + 8))
   }
 }

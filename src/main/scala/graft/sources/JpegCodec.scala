@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable
+import Bytes.{be16, refuse}
 
 /** JPEG (ISO/IEC 10918-1) decoder for multimodal binary columns —
   * real LLM training corpora (LAION-style webdatasets, reference
@@ -77,9 +78,6 @@ object JpegCodec {
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-  private final class Refused extends RuntimeException(null, null, false, false)
-  private def refuse(): Nothing = throw new Refused
 
   // ------------------------------------------------------------- encode
   //
@@ -904,7 +902,7 @@ object JpegCodec {
     * profile or any malformed stream. Never throws. */
   def decode(bytes: Array[Byte]): Option[JpegImage] =
     try Some(decodeOrRefuse(bytes))
-    catch { case _: Refused | _: RuntimeException | _: IndexOutOfBoundsException => None }
+    catch { case _: RuntimeException => None } // refusals and index faults
 
   private def decodeOrRefuse(d: Array[Byte]): JpegImage = {
     if (d.length < 4 || (d(0) & 0xff) != 0xff || (d(1) & 0xff) != 0xd8) refuse()
@@ -923,11 +921,6 @@ object JpegCodec {
     val dcUa = Array.fill(16)(1)
     val acKa = Array.fill(16)(5)
 
-    def u16(o: Int): Int = {
-      if (o + 1 >= d.length) refuse()
-      ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    }
-
     while (true) {
       if (p + 1 >= d.length || (d(p) & 0xff) != 0xff) refuse()
       val m = d(p + 1) & 0xff
@@ -938,7 +931,7 @@ object JpegCodec {
         if (prog != null && prog.sawScan) return prog.reconstruct(quant)
         refuse()
       }
-      val ln = u16(p + 2)
+      val ln = be16(d, p + 2)
       if (ln < 2 || p + 2 + ln > d.length) refuse()
       val bo = p + 4 // body offset, length ln - 2
       val bend = p + 2 + ln
@@ -974,7 +967,7 @@ object JpegCodec {
           // or arithmetic (C9 sequential, CA progressive)
           if ((d(bo) & 0xff) != 8) refuse() // 8-bit precision only
           if (comps != null) refuse() // second frame header
-          height = u16(bo + 1); width = u16(bo + 3)
+          height = be16(d, bo + 1); width = be16(d, bo + 3)
           val nc = d(bo + 5) & 0xff
           if (width == 0 || height == 0 || (nc != 1 && nc != 3)) refuse()
           if (width.toLong * height > MaxPixels) refuse()
@@ -1014,7 +1007,7 @@ object JpegCodec {
           }
         case 0xdd => // DRI
           if (ln != 4) refuse()
-          restart = u16(bo)
+          restart = be16(d, bo)
         case 0xda if prog != null => // SOS — one progressive scan
           val ns = d(bo) & 0xff
           if (ns < 1 || ns > prog.nc || bo + 1 + 2 * ns + 3 > bend) refuse()
@@ -1568,7 +1561,7 @@ object JpegCodec {
 
   def decodeLossless(bytes: Array[Byte]): Option[JpegLosslessImage] =
     try Some(decodeLosslessOrRefuse(bytes))
-    catch { case _: Refused | _: RuntimeException | _: IndexOutOfBoundsException => None }
+    catch { case _: RuntimeException => None } // refusals and index faults
 
   private def decodeLosslessOrRefuse(d: Array[Byte]): JpegLosslessImage = {
     if (d.length < 4 || (d(0) & 0xff) != 0xff || (d(1) & 0xff) != 0xd8) refuse()
@@ -1581,11 +1574,6 @@ object JpegCodec {
     var planes: Array[Array[Int]] = null
     var decoded: Array[Boolean] = null
     var pt = -1
-
-    def u16(o: Int): Int = {
-      if (o + 1 >= d.length) refuse()
-      ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    }
 
     while (true) {
       if (p + 1 >= d.length || (d(p) & 0xff) != 0xff) refuse()
@@ -1603,7 +1591,7 @@ object JpegCodec {
         }
         return JpegLosslessImage(width, height, nc, precision, pt, out)
       }
-      val ln = u16(p + 2)
+      val ln = be16(d, p + 2)
       if (ln < 2 || p + 2 + ln > d.length) refuse()
       val bo = p + 4
       val bend = p + 2 + ln
@@ -1626,7 +1614,7 @@ object JpegCodec {
           if (compIds != null) refuse() // second frame header
           precision = d(bo) & 0xff
           if (precision < 2 || precision > 16) refuse()
-          height = u16(bo + 1); width = u16(bo + 3)
+          height = be16(d, bo + 1); width = be16(d, bo + 3)
           nc = d(bo + 5) & 0xff
           if (width == 0 || height == 0 || nc < 1 || nc > 4) refuse()
           if (width.toLong * height * nc > MaxPixels) refuse()
@@ -1643,7 +1631,7 @@ object JpegCodec {
           refuse() // DCT / differential / arithmetic frame in the lossless entry
         case 0xdd => // DRI
           if (ln != 4) refuse()
-          restart = u16(bo)
+          restart = be16(d, bo)
         case 0xdb => () // stray quantization table: legal to carry, unused
         case 0xda => // SOS: one lossless scan (interleaved or per-component)
           if (compIds == null) refuse()
@@ -1704,7 +1692,7 @@ object JpegCodec {
 
   def decode12(bytes: Array[Byte]): Option[Jpeg12Image] =
     try Some(decode12OrRefuse(bytes))
-    catch { case _: Refused | _: RuntimeException | _: IndexOutOfBoundsException => None }
+    catch { case _: RuntimeException => None } // refusals and index faults
 
   private def decode12OrRefuse(d: Array[Byte]): Jpeg12Image = {
     if (d.length < 4 || (d(0) & 0xff) != 0xff || (d(1) & 0xff) != 0xd8) refuse()
@@ -1716,16 +1704,11 @@ object JpegCodec {
     var comps: Array[Comp] = null
     var restart = 0
 
-    def u16(o: Int): Int = {
-      if (o + 1 >= d.length) refuse()
-      ((d(o) & 0xff) << 8) | (d(o + 1) & 0xff)
-    }
-
     while (true) {
       if (p + 1 >= d.length || (d(p) & 0xff) != 0xff) refuse()
       val m = d(p + 1) & 0xff
       if (m == 0xd9) refuse() // EOI before any scan
-      val ln = u16(p + 2)
+      val ln = be16(d, p + 2)
       if (ln < 2 || p + 2 + ln > d.length) refuse()
       val bo = p + 4
       val bend = p + 2 + ln
@@ -1742,7 +1725,7 @@ object JpegCodec {
             var i = 0
             while (i < 64) {
               tab(Zigzag(i)) =
-                if (pq == 1) u16(q + 1 + 2 * i) else d(q + 1 + i) & 0xff
+                if (pq == 1) be16(d, q + 1 + 2 * i) else d(q + 1 + i) & 0xff
               i += 1
             }
             quant(tid) = tab
@@ -1765,7 +1748,7 @@ object JpegCodec {
         case 0xc1 => // SOF1 extended sequential, 12-bit only here
           if ((d(bo) & 0xff) != 12) refuse()
           if (comps != null) refuse()
-          height = u16(bo + 1); width = u16(bo + 3)
+          height = be16(d, bo + 1); width = be16(d, bo + 3)
           val nc = d(bo + 5) & 0xff
           if (width == 0 || height == 0 || (nc != 1 && nc != 3)) refuse()
           if (width.toLong * height > MaxPixels) refuse()
@@ -1782,7 +1765,7 @@ object JpegCodec {
           refuse() // 8-bit/progressive/lossless/arithmetic in the 12-bit entry
         case 0xdd =>
           if (ln != 4) refuse()
-          restart = u16(bo)
+          restart = be16(d, bo)
         case 0xda => // SOS — single interleaved extended-sequential scan
           if (comps == null) refuse()
           val ns = d(bo) & 0xff

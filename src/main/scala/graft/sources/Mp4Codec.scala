@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** MP4 / ISO-BMFF sample-table walker (ISO/IEC 14496-12) — the first
   * thing a video pipeline does with a crawled MP4 is NOT decode: it
   * recovers the per-sample (offset, size, timestamp, sync) table from
@@ -69,13 +71,41 @@ object Mp4Codec {
   val MaxSamples: Int = 1 << 20
   val MaxTracks: Int = 64
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decode(bytes: Array[Byte]): Option[Vector[Sample]] =
-    try Some(run(bytes))
-    catch { case _: Fail => None }
+    refusing(run(bytes))
+
+  /** A 64-bit offset or size: past 2^63 is hostile, not media. */
+  private def off64(b: Array[Byte], p: Long): Long = {
+    val v = be64(b, p)
+    if (v < 0) refuse()
+    v
+  }
+
+  /** Walk the box sequence in [from, to), invoking f(type, header
+    * start, body start, body end). Size 1 → 64-bit largesize; size
+    * 0 → runs to the end of the enclosure. The header position is
+    * what `moof` anchoring needs: default-base-is-moof offsets are
+    * relative to the first byte of the moof BOX, header included.
+    * AvifCodec walks its HEIF boxes with the same walker. */
+  private[sources] def boxes4(b: Array[Byte], from: Long, to: Long)(
+      f: (String, Long, Long, Long) => Unit): Unit = {
+    var p = from
+    while (p < to) {
+      if (p + 8 > to) refuse()
+      val sz0 = be32(b, p)
+      val typ = fourcc(b, p + 4)
+      val (bodyAt, end) =
+        if (sz0 == 1) { if (p + 16 > to) refuse(); (p + 16, p + off64(b, p + 8)) }
+        else if (sz0 == 0) (p + 8, to)
+        else (p + 8, p + sz0)
+      if (end < bodyAt || end > to) refuse()
+      f(typ, p, bodyAt, end)
+      p = end
+    }
+  }
+  private[sources] def boxes(b: Array[Byte], from: Long, to: Long)(
+      f: (String, Long, Long) => Unit): Unit =
+    boxes4(b, from, to)((t, _, a, e) => f(t, a, e))
 
   /** Mux one video track: samples become the mdat payloads in chunks
     * of up to 4, one stts run (`dur` ticks each), sync every third
@@ -157,46 +187,6 @@ object Mp4Codec {
   }
 
   private def run(b: Array[Byte]): Vector[Sample] = {
-    def u8(p: Long): Int = {
-      if (p < 0 || p >= b.length) err(); b(p.toInt) & 0xff
-    }
-    def u16(p: Long): Int = (u8(p) << 8) | u8(p + 1)
-    def u32(p: Long): Long =
-      ((u8(p).toLong << 24) | (u8(p + 1) << 16) | (u8(p + 2) << 8) |
-        u8(p + 3)) & 0xffffffffL
-    def u64(p: Long): Long = {
-      val v = (u32(p) << 32) | u32(p + 4)
-      if (v < 0) err() // an offset past 2^63 is hostile, not media
-      v
-    }
-    def fourcc(p: Long): String =
-      new String(Array(u8(p).toByte, u8(p + 1).toByte, u8(p + 2).toByte,
-        u8(p + 3).toByte), java.nio.charset.StandardCharsets.US_ASCII)
-
-    /** Walk the box sequence in [from, to), invoking f(type, header
-      * start, body start, body end). Size 1 → 64-bit largesize; size
-      * 0 → runs to the end of the enclosure. The header position is
-      * what `moof` anchoring needs: default-base-is-moof offsets are
-      * relative to the first byte of the moof BOX, header included. */
-    def boxes4(from: Long, to: Long)(
-        f: (String, Long, Long, Long) => Unit): Unit = {
-      var p = from
-      while (p < to) {
-        if (p + 8 > to) err()
-        val sz0 = u32(p)
-        val typ = fourcc(p + 4)
-        val (bodyAt, end) =
-          if (sz0 == 1) { if (p + 16 > to) err(); (p + 16, p + u64(p + 8)) }
-          else if (sz0 == 0) (p + 8, to)
-          else (p + 8, p + sz0)
-        if (end < bodyAt || end > to) err()
-        f(typ, p, bodyAt, end)
-        p = end
-      }
-    }
-    def boxes(from: Long, to: Long)(f: (String, Long, Long) => Unit): Unit =
-      boxes4(from, to)((t, _, a, e) => f(t, a, e))
-
     val samples = Vector.newBuilder[Sample]
     var sawMoov = false
     var nTracks = 0
@@ -228,7 +218,7 @@ object Mp4Codec {
     val fragOrd = scala.collection.mutable.Map.empty[Int, Int]
 
     def readTrack(tFrom: Long, tTo: Long): Unit = {
-      if (nTracks >= MaxTracks) err()
+      if (nTracks >= MaxTracks) refuse()
       nTracks += 1
       var trackId = -1
       var handler = ""
@@ -249,68 +239,68 @@ object Mp4Codec {
       var sawElst = false
 
       def readStbl(sFrom: Long, sTo: Long): Unit =
-        boxes(sFrom, sTo) { (typ, at, end) =>
+        boxes(b, sFrom, sTo) { (typ, at, end) =>
           typ match {
             case "stsd" =>
-              if (end - at < 8) err()
-              val n = u32(at + 4)
+              if (end - at < 8) refuse()
+              val n = be32(b, at + 4)
               if (n >= 1) {
                 // first sample entry: size(4) + format 4cc; the
                 // codec-specific tail is opaque by design
-                if (end - at < 16) err()
-                codec = fourcc(at + 12)
+                if (end - at < 16) refuse()
+                codec = fourcc(b, at + 12)
               }
             case "stts" =>
-              val n = u32(at + 4)
-              if (at + 8 + n * 8 > end || n > MaxSamples) err()
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 8 > end || n > MaxSamples) refuse()
               sttsRuns = Array.tabulate(n.toInt)(i =>
-                (u32(at + 8 + i * 8L), u32(at + 12 + i * 8L)))
+                (be32(b, at + 8 + i * 8L), be32(b, at + 12 + i * 8L)))
             case "ctts" =>
-              val v = u8(at)
-              val n = u32(at + 4)
-              if (at + 8 + n * 8 > end || n > MaxSamples) err()
+              val v = u8(b, at)
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 8 > end || n > MaxSamples) refuse()
               cttsRuns = Array.tabulate(n.toInt) { i =>
-                val c = u32(at + 8 + i * 8L)
-                val raw = u32(at + 12 + i * 8L)
+                val c = be32(b, at + 8 + i * 8L)
+                val raw = be32(b, at + 12 + i * 8L)
                 (c, if (v == 1) raw.toInt.toLong else raw)
               }
             case "stsc" =>
-              val n = u32(at + 4)
-              if (at + 8 + n * 12 > end || n > MaxSamples) err()
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 12 > end || n > MaxSamples) refuse()
               stscEnts = Array.tabulate(n.toInt)(i =>
-                (u32(at + 8 + i * 12L), u32(at + 12 + i * 12L)))
+                (be32(b, at + 8 + i * 12L), be32(b, at + 12 + i * 12L)))
             case "stsz" =>
-              constSize = u32(at + 4)
-              sampleCount = u32(at + 8)
-              if (sampleCount > MaxSamples) err()
+              constSize = be32(b, at + 4)
+              sampleCount = be32(b, at + 8)
+              if (sampleCount > MaxSamples) refuse()
               if (constSize == 0) {
-                if (at + 12 + sampleCount * 4 > end) err()
+                if (at + 12 + sampleCount * 4 > end) refuse()
                 sizes = Array.tabulate(sampleCount.toInt)(i =>
-                  u32(at + 12 + i * 4L))
+                  be32(b, at + 12 + i * 4L))
               }
             case "stco" =>
-              val n = u32(at + 4)
-              if (at + 8 + n * 4 > end || n > MaxSamples) err()
-              chunkOffs = Array.tabulate(n.toInt)(i => u32(at + 8 + i * 4L))
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 4 > end || n > MaxSamples) refuse()
+              chunkOffs = Array.tabulate(n.toInt)(i => be32(b, at + 8 + i * 4L))
             case "co64" =>
-              val n = u32(at + 4)
-              if (at + 8 + n * 8 > end || n > MaxSamples) err()
-              chunkOffs = Array.tabulate(n.toInt)(i => u64(at + 8 + i * 8L))
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 8 > end || n > MaxSamples) refuse()
+              chunkOffs = Array.tabulate(n.toInt)(i => off64(b, at + 8 + i * 8L))
             case "stss" =>
-              val n = u32(at + 4)
-              if (at + 8 + n * 4 > end || n > MaxSamples) err()
+              val n = be32(b, at + 4)
+              if (at + 8 + n * 4 > end || n > MaxSamples) refuse()
               syncSet = new java.util.HashSet[Long]()
               var i = 0
-              while (i < n) { syncSet.add(u32(at + 8 + i * 4L)); i += 1 }
+              while (i < n) { syncSet.add(be32(b, at + 8 + i * 4L)); i += 1 }
             case _ => () // stsh/stdp/sgpd/…: not needed for the table
           }
         }
 
-      boxes(tFrom, tTo) { (typ, at, end) =>
+      boxes(b, tFrom, tTo) { (typ, at, end) =>
         typ match {
           case "tkhd" =>
-            val v = u8(at)
-            trackId = (if (v == 1) u32(at + 20) else u32(at + 12)).toInt
+            val v = u8(b, at)
+            trackId = (if (v == 1) be32(b, at + 20) else be32(b, at + 12)).toInt
           case "edts" =>
             // elst (§8.6.6): the presentation timeline mapping most
             // real-world encoders write — leading EMPTY edits
@@ -321,15 +311,15 @@ object Mp4Codec {
             // mdhd timescale the contiguity check needs may parse
             // after edts); dwell/speed rates refuse immediately —
             // no flat per-sample pts shift exists for them.
-            boxes(at, end) { (t2, a2, e2) =>
+            boxes(b, at, end) { (t2, a2, e2) =>
               if (t2 == "elst") {
-                if (sawElst) err()
+                if (sawElst) refuse()
                 sawElst = true
-                if (a2 + 8 > e2) err()
-                val v = u8(a2)
-                val cnt = u32(a2 + 4)
+                if (a2 + 8 > e2) refuse()
+                val v = u8(b, a2)
+                val cnt = be32(b, a2 + 4)
                 val esz = if (v == 1) 20 else 12
-                if (cnt > 64 || a2 + 8 + cnt * esz > e2) err()
+                if (cnt > 64 || a2 + 8 + cnt * esz > e2) refuse()
                 var i = 0L
                 while (i < cnt) {
                   val p = a2 + 8 + i * esz
@@ -337,23 +327,23 @@ object Mp4Codec {
                   // 64-bit so read it raw, not via the hostile-
                   // offset-guarded u64
                   val (segDur, mTime, rateInt, rateFrac) =
-                    if (v == 1) (u64(p), (u32(p + 8) << 32) | u32(p + 12),
-                      u16(p + 16), u16(p + 18))
-                    else (u32(p), u32(p + 4).toInt.toLong, u16(p + 8),
-                      u16(p + 10))
+                    if (v == 1) (off64(b, p), (be32(b, p + 8) << 32) | be32(b, p + 12),
+                      be16(b, p + 16), be16(b, p + 18))
+                    else (be32(b, p), be32(b, p + 4).toInt.toLong, be16(b, p + 8),
+                      be16(b, p + 10))
                   if (mTime == -1L) {
                     // empty edits only LEAD: one after a normal entry
                     // is a mid-presentation gap, not a flat shift
-                    if (normals.nonEmpty) err()
+                    if (normals.nonEmpty) refuse()
                     // bound the sum: two huge v1 durations must refuse,
                     // not wrap into a silent negative shift
-                    if (segDur > (1L << 53) - delayMovie) err()
+                    if (segDur > (1L << 53) - delayMovie) refuse()
                     delayMovie += segDur
                   } else {
                     // media_rate is 16.16 fixed-point: 1.5 has integer
                     // part 1 — a dwell/speed edit must refuse too
-                    if (mTime < 0 || rateInt != 1 || rateFrac != 0) err()
-                    if (segDur > (1L << 53)) err()
+                    if (mTime < 0 || rateInt != 1 || rateFrac != 0) refuse()
+                    if (segDur > (1L << 53)) refuse()
                     normals :+= ((segDur, mTime))
                   }
                   i += 1
@@ -361,16 +351,16 @@ object Mp4Codec {
               }
             }
           case "mdia" =>
-            boxes(at, end) { (t2, a2, e2) =>
+            boxes(b, at, end) { (t2, a2, e2) =>
               t2 match {
                 case "mdhd" =>
-                  val v = u8(a2)
-                  timescale = if (v == 1) u32(a2 + 20) else u32(a2 + 12)
+                  val v = u8(b, a2)
+                  timescale = if (v == 1) be32(b, a2 + 20) else be32(b, a2 + 12)
                 case "hdlr" =>
-                  if (e2 - a2 < 12) err()
-                  handler = fourcc(a2 + 8)
+                  if (e2 - a2 < 12) refuse()
+                  handler = fourcc(b, a2 + 8)
                 case "minf" =>
-                  boxes(a2, e2) { (t3, a3, e3) =>
+                  boxes(b, a2, e2) { (t3, a3, e3) =>
                     if (t3 == "stbl") readStbl(a3, e3)
                   }
                 case _ => ()
@@ -410,26 +400,26 @@ object Mp4Codec {
         val delayMedia =
           if (delayMovie == 0) 0L
           else {
-            if (movieTsc <= 0 || timescale <= 0) err()
+            if (movieTsc <= 0 || timescale <= 0) refuse()
             val prod = delayMovie * timescale
-            if (prod / delayMovie != timescale) err() // overflow: hostile
+            if (prod / delayMovie != timescale) refuse() // overflow: hostile
             prod / movieTsc
           }
         if (normals.size <= 1) {
           val mediaTime = if (normals.isEmpty) 0L else normals.head._2
           Vector((Long.MinValue, Long.MaxValue, delayMedia - mediaTime))
         } else {
-          if (movieTsc <= 0 || timescale <= 0) err()
+          if (movieTsc <= 0 || timescale <= 0) refuse()
           // convert each segment duration to media ticks (last entry
           // may be 0 = to-end-of-media → unbounded; mid-list 0 refuses)
           val dm = normals.zipWithIndex.map { case ((d, _), j) =>
             if (d == 0) {
-              if (j != normals.size - 1) err() // mid-list to-end: refuse
+              if (j != normals.size - 1) refuse() // mid-list to-end: refuse
               -1L
             } else {
               val prod = d * timescale
-              if (prod / d != timescale) err() // overflow: hostile
-              if (prod % movieTsc != 0) err()  // inexact: ambiguous pts
+              if (prod / d != timescale) refuse() // overflow: hostile
+              if (prod % movieTsc != 0) refuse()  // inexact: ambiguous pts
               prod / movieTsc
             }
           }
@@ -446,11 +436,11 @@ object Mp4Codec {
             var j = 0
             while (j < normals.size) {
               val m = normals(j)._2
-              if (m < prevEnd) err() // overlap/rewind: media re-presented
+              if (m < prevEnd) refuse() // overlap/rewind: media re-presented
               val end =
                 if (dm(j) < 0) Long.MaxValue
                 else {
-                  if (m > (1L << 53) || dm(j) > (1L << 53)) err()
+                  if (m > (1L << 53) || dm(j) > (1L << 53)) refuse()
                   m + dm(j)
                 }
               segs += ((m, end, pres - m))
@@ -476,30 +466,30 @@ object Mp4Codec {
       if (sampleCount == 0 &&
           (chunkOffs == null || chunkOffs.isEmpty)) return
       if (trackId < 0 || sampleCount < 0 || sttsRuns == null ||
-          stscEnts == null || chunkOffs == null) err()
-      if (timescale <= 0) err() // mdhd absent or zero: times unusable
+          stscEnts == null || chunkOffs == null) refuse()
+      if (timescale <= 0) refuse() // mdhd absent or zero: times unusable
       val n = sampleCount.toInt
-      if (constSize == 0 && (sizes == null || sizes.length != n)) err()
+      if (constSize == 0 && (sizes == null || sizes.length != n)) refuse()
 
       // expand stts → per-sample durations (total count must match)
       val durs = new Array[Long](n)
       var di = 0
       sttsRuns.foreach { case (count, delta) =>
-        if (count > n - di) err()
+        if (count > n - di) refuse()
         var k = 0L
         while (k < count) { durs(di) = delta; di += 1; k += 1 }
       }
-      if (di != n) err()
+      if (di != n) refuse()
       // expand ctts → per-sample composition offsets (0 when absent)
       val ctsOff = new Array[Long](n)
       if (cttsRuns != null) {
         var ci = 0
         cttsRuns.foreach { case (count, off) =>
-          if (count > n - ci) err()
+          if (count > n - ci) refuse()
           var k = 0L
           while (k < count) { ctsOff(ci) = off; ci += 1; k += 1 }
         }
-        if (ci != n) err()
+        if (ci != n) refuse()
       }
       // expand stsc runs → per-chunk sample counts
       val nChunks = chunkOffs.length
@@ -510,14 +500,14 @@ object Mp4Codec {
         val cnt = stscEnts(e)._2
         val last =
           if (e + 1 < stscEnts.length) stscEnts(e + 1)._1 else nChunks + 1L
-        if (first < 1 || first > last || last > nChunks + 1L) err()
+        if (first < 1 || first > last || last > nChunks + 1L) refuse()
         var c = first
         while (c < last) { spc((c - 1).toInt) = cnt; c += 1 }
         e += 1
       }
       var spcSum = 0L
       spc.foreach(spcSum += _)
-      if (spcSum != n) err()
+      if (spcSum != n) refuse()
 
       var si = 0
       var dts = 0L
@@ -527,7 +517,7 @@ object Mp4Codec {
         var k = 0L
         while (k < spc(ci2)) {
           val size = if (constSize != 0) constSize else sizes(si)
-          if (off < 0 || size < 0 || off + size > b.length) err()
+          if (off < 0 || size < 0 || off + size > b.length) refuse()
           val sync = syncSet == null || syncSet.contains(si + 1L)
           editedPts(editMap, dts + ctsOff(si)).foreach { pts =>
             samples += Sample(trackId, handler, codec, timescale, si, ci2,
@@ -559,46 +549,46 @@ object Mp4Codec {
       var baseIsMoof = false
       var tfdtTime = -1L
       val truns = Vector.newBuilder[(Long, Long)]
-      boxes(tFrom, tTo) { (typ, at, end) =>
+      boxes(b, tFrom, tTo) { (typ, at, end) =>
         typ match {
           case "tfhd" =>
-            if (at + 8 > end) err()
-            val flags = (u8(at + 1) << 16) | (u8(at + 2) << 8) | u8(at + 3)
-            trackId = u32(at + 4).toInt
+            if (at + 8 > end) refuse()
+            val flags = be24(b, at + 1)
+            trackId = be32(b, at + 4).toInt
             // every optional field read is bounded by the ENCLOSING
             // box end BEFORE the read — a trailing p > end check
             // would already have read the next box's header bytes
             var p = at + 8
             if ((flags & 0x01) != 0) {
-              if (p + 8 > end) err(); baseOff = u64(p); p += 8
+              if (p + 8 > end) refuse(); baseOff = off64(b, p); p += 8
             }
             if ((flags & 0x02) != 0) p += 4 // sample-description-index
             if ((flags & 0x08) != 0) {
-              if (p + 4 > end) err(); defDur = u32(p); p += 4
+              if (p + 4 > end) refuse(); defDur = be32(b, p); p += 4
             }
             if ((flags & 0x10) != 0) {
-              if (p + 4 > end) err(); defSize = u32(p); p += 4
+              if (p + 4 > end) refuse(); defSize = be32(b, p); p += 4
             }
             if ((flags & 0x20) != 0) {
-              if (p + 4 > end) err(); defFlags = u32(p); p += 4
+              if (p + 4 > end) refuse(); defFlags = be32(b, p); p += 4
             }
-            if (p > end) err()
+            if (p > end) refuse()
             baseIsMoof = (flags & 0x20000) != 0
           case "tfdt" =>
             // version 1 carries a u64 decode time: 12 body bytes, not
             // 8 — an 8-byte body with a version-1 flag would silently
             // splice the next box's header into the decode time
-            if (at + 8 > end) err()
-            val v1 = u8(at) == 1
-            if (v1 && at + 12 > end) err()
-            tfdtTime = if (v1) u64(at + 4) else u32(at + 4)
+            if (at + 8 > end) refuse()
+            val v1 = u8(b, at) == 1
+            if (v1 && at + 12 > end) refuse()
+            tfdtTime = if (v1) off64(b, at + 4) else be32(b, at + 4)
           case "trun" => truns += ((at, end))
           case _ => () // sbgp/sgpd/subs/…: not needed for the table
         }
       }
-      if (trackId < 0) err()
+      if (trackId < 0) refuse()
       val (handler, codec, timescale, moovChunks, editMap) =
-        trackMeta.getOrElse(trackId, err())
+        trackMeta.getOrElse(trackId, refuse())
       val trex = trexDefs.getOrElse(trackId, (-1L, -1L, -1L))
       val durDef = if (defDur >= 0) defDur else trex._1
       val sizeDef = if (defSize >= 0) defSize else trex._2
@@ -613,45 +603,45 @@ object Mp4Codec {
       fragOrd(trackId) = fragOrd.getOrElse(trackId, 0) + 1
       var dataPos = -1L
       truns.result().foreach { case (at, end) =>
-        if (at + 8 > end) err()
-        val v = u8(at)
-        val flags = (u8(at + 1) << 16) | (u8(at + 2) << 8) | u8(at + 3)
-        val n = u32(at + 4)
-        if (n > MaxSamples || nSamples + n > MaxSamples) err()
+        if (at + 8 > end) refuse()
+        val v = u8(b, at)
+        val flags = be24(b, at + 1)
+        val n = be32(b, at + 4)
+        if (n > MaxSamples || nSamples + n > MaxSamples) refuse()
         // fixed-size pre-check: header + optional head fields +
         // 4 bytes per set per-sample flag
         val perSample = 4L * (((flags >> 8) & 1) + ((flags >> 9) & 1) +
           ((flags >> 10) & 1) + ((flags >> 11) & 1))
         val headBytes = (if ((flags & 0x01) != 0) 4 else 0) +
           (if ((flags & 0x04) != 0) 4 else 0)
-        if (at + 8 + headBytes + n * perSample > end) err()
+        if (at + 8 + headBytes + n * perSample > end) refuse()
         var p = at + 8
         var off =
-          if ((flags & 0x01) != 0) { val d = u32(p).toInt; p += 4; base + d }
+          if ((flags & 0x01) != 0) { val d = be32(b, p).toInt; p += 4; base + d }
           else if (dataPos >= 0) dataPos
           else base
         var firstFlags = -1L
-        if ((flags & 0x04) != 0) { firstFlags = u32(p); p += 4 }
+        if ((flags & 0x04) != 0) { firstFlags = be32(b, p); p += 4 }
         var k = 0L
         while (k < n) {
           val dur =
-            if ((flags & 0x100) != 0) { val d = u32(p); p += 4; d }
+            if ((flags & 0x100) != 0) { val d = be32(b, p); p += 4; d }
             else durDef
           val size =
-            if ((flags & 0x200) != 0) { val s = u32(p); p += 4; s }
+            if ((flags & 0x200) != 0) { val s = be32(b, p); p += 4; s }
             else sizeDef
           val sflags =
-            if ((flags & 0x400) != 0) { val x = u32(p); p += 4; x }
+            if ((flags & 0x400) != 0) { val x = be32(b, p); p += 4; x }
             else if (k == 0 && firstFlags >= 0) firstFlags
             else if (flagsDef >= 0) flagsDef
             else 0L
           val cts =
             if ((flags & 0x800) != 0) {
-              val c = u32(p); p += 4
+              val c = be32(b, p); p += 4
               if (v >= 1) c.toInt.toLong else c
             } else 0L
-          if (dur < 0 || size < 0) err() // no duration/size source at all
-          if (off < 0 || off + size > b.length) err()
+          if (dur < 0 || size < 0) refuse() // no duration/size source at all
+          if (off < 0 || off + size > b.length) refuse()
           // sample_is_non_sync_sample is bit 16 of the flags word
           val sync = (sflags & 0x10000L) == 0
           editedPts(editMap, dts + cts).foreach { pts =>
@@ -673,7 +663,7 @@ object Mp4Codec {
 
     def readMoof(hdrAt: Long, mFrom: Long, mTo: Long): Unit = {
       var prevEnd = -1L
-      boxes(mFrom, mTo) { (typ, at, end) =>
+      boxes(b, mFrom, mTo) { (typ, at, end) =>
         typ match {
           case "traf" => prevEnd = readTraf(at, end, hdrAt, prevEnd)
           case _ => () // mfhd sequence number: informational
@@ -681,39 +671,39 @@ object Mp4Codec {
       }
     }
 
-    boxes4(0L, b.length.toLong) { (typ, hdrAt, at, end) =>
+    boxes4(b, 0L, b.length.toLong) { (typ, hdrAt, at, end) =>
       typ match {
         case "moof" =>
           // fragments reference moov-declared tracks; a moof before
           // any moov (or with no init data at all) is structurally
           // unanchorable — refuse rather than guess
-          if (!sawMoov) err()
+          if (!sawMoov) refuse()
           readMoof(hdrAt, at, end)
         case "moov" =>
           sawMoov = true
           // mvhd first (it need not precede traks in file order and
           // empty-edit conversion needs the movie timescale)
-          boxes(at, end) { (t2, a2, e2) =>
+          boxes(b, at, end) { (t2, a2, e2) =>
             if (t2 == "mvhd") {
-              if (a2 + 4 > e2) err()
-              val v = u8(a2)
-              if (a2 + (if (v == 1) 24 else 16) > e2) err()
-              movieTsc = if (v == 1) u32(a2 + 20) else u32(a2 + 12)
+              if (a2 + 4 > e2) refuse()
+              val v = u8(b, a2)
+              if (a2 + (if (v == 1) 24 else 16) > e2) refuse()
+              movieTsc = if (v == 1) be32(b, a2 + 20) else be32(b, a2 + 12)
             }
           }
-          boxes(at, end) { (t2, a2, e2) =>
+          boxes(b, at, end) { (t2, a2, e2) =>
             t2 match {
-              case "moof" => err() // moof nested in moov: invalid
+              case "moof" => refuse() // moof nested in moov: invalid
               case "trak" => readTrack(a2, e2)
               case "mvex" =>
                 // trex: per-track fragment defaults (§8.8.3) —
                 // FullBox, then track_ID, default_sample_description_
                 // index, default_sample_duration/_size/_flags
-                boxes(a2, e2) { (t3, a3, e3) =>
+                boxes(b, a2, e2) { (t3, a3, e3) =>
                   if (t3 == "trex") {
-                    if (a3 + 24 > e3) err()
-                    trexDefs(u32(a3 + 4).toInt) =
-                      (u32(a3 + 12), u32(a3 + 16), u32(a3 + 20))
+                    if (a3 + 24 > e3) refuse()
+                    trexDefs(be32(b, a3 + 4).toInt) =
+                      (be32(b, a3 + 12), be32(b, a3 + 16), be32(b, a3 + 20))
                   }
                 }
               case _ => ()
@@ -722,7 +712,7 @@ object Mp4Codec {
         case _ => () // ftyp/mdat/free/styp/sidx/…: skipped by size
       }
     }
-    if (!sawMoov) err()
+    if (!sawMoov) refuse()
     samples.result()
   }
 }

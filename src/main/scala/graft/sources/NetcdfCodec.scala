@@ -3,6 +3,7 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
+import Bytes.{be32, refuse}
 
 /** NetCDF classic (CDF-1) container codec — the reference's per-test
   * prediction sink is `ds.to_netcdf` of an xarray Dataset
@@ -181,17 +182,9 @@ object NetcdfCodec {
 
   // ------------------------------------------------------------- decode
 
-  private final class Refused extends RuntimeException(null, null, false, false)
-  private def refuse(): Nothing = throw new Refused
-
   private final class R(d: Array[Byte]) {
     var p = 0
-    def i32(): Int = {
-      if (p + 4 > d.length) refuse()
-      val v = ((d(p) & 0xff) << 24) | ((d(p + 1) & 0xff) << 16) |
-        ((d(p + 2) & 0xff) << 8) | (d(p + 3) & 0xff)
-      p += 4; v
-    }
+    def i32(): Int = { val v = be32(d, p).toInt; p += 4; v }
     def take(n: Int): Array[Byte] = {
       if (n < 0 || p + n > d.length) refuse()
       val a = java.util.Arrays.copyOfRange(d, p, p + n); p += n; a
@@ -228,7 +221,7 @@ object NetcdfCodec {
     * unsupported types, or any malformed header. Never throws. */
   def decode(bytes: Array[Byte]): Option[Nc] =
     try Some(decodeOrRefuse(bytes))
-    catch { case _: Refused | _: RuntimeException | _: IndexOutOfBoundsException => None }
+    catch { case _: RuntimeException => None } // refusals and index faults
 
   private def decodeOrRefuse(d: Array[Byte]): Nc = {
     if (d.length < 8 || d(0) != 'C' || d(1) != 'D' || d(2) != 'F') refuse()

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Pure-Scala codec for the NumPy `.npy` container, format v1.0
   * (public spec: numpy/lib/format.py — 6-byte magic `\x93NUMPY`,
   * version bytes, little-endian u16 header length, an ASCII literal
@@ -49,12 +51,14 @@ object NpyCodec {
   /** Decode an npy payload; None for anything outside the supported
     * envelope — never an exception (bounds are checked before every
     * read, counts before every allocation). */
-  def decode(bytes: Array[Byte]): Option[Npy] = {
+  def decode(bytes: Array[Byte]): Option[Npy] = refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[Npy] = {
     if (bytes.length < 12) return None
     var i = 0
     while (i < 6) { if (bytes(i) != Magic(i)) return None; i += 1 }
     if (bytes(6) != 1 || bytes(7) != 0) return None // v1.0 only
-    val hlen = (bytes(8) & 0xff) | ((bytes(9) & 0xff) << 8)
+    val hlen = le16(bytes, 8)
     val dataStart = 10 + hlen
     if (hlen <= 0 || dataStart > bytes.length) return None
     val header = new String(bytes, 10, hlen, "US-ASCII")

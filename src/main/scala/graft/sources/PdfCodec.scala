@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** PDF text-run codec — PDF is the dominant format of crawled
   * document corpora, and "extract the shown text" is the first
   * operator every document pipeline runs over one. This walks
@@ -59,10 +61,6 @@ object PdfCodec {
   val MaxPages: Int = 10000
   val MaxRuns: Int = 100000
   val MaxInflatedBytes: Int = GzipCodec.MaxInflatedBytes
-
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
 
   // ---- value model -------------------------------------------------
   private sealed trait PVal
@@ -320,17 +318,14 @@ object PdfCodec {
     }
   }
 
-  /** Never throws: Fail is the deliberate refusal signal, and any
+  /** Never throws: Refused is the deliberate refusal signal, and any
     * OTHER non-fatal escape (a parse-path oversight on hostile bytes)
     * must degrade to a per-file skip, not kill a whole Spark scan of
     * crawled PDFs. The specific known escapes (non-hex '#' names,
     * multi-dot numbers) are also refused at their parse sites. */
   def decode(bytes: Array[Byte]): Option[Vector[Run]] =
     try Some(run(bytes))
-    catch {
-      case _: Fail => None
-      case scala.util.control.NonFatal(_) => None
-    }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Write a one-page PDF whose content stream shows each byte run
     * with its own Tj (parens/backslash escaped) — the classic-xref
@@ -491,7 +486,7 @@ object PdfCodec {
       k = sha(Seq(256, 384, 512)(s % 3), e)
       i += 1
       if (i >= 64 && (e(e.length - 1) & 0xff) <= i - 32) done = true
-      if (i > 512) err() // spec terminates well before; hostile guard
+      if (i > 512) refuse() // spec terminates well before; hostile guard
     }
     k.take(32)
   }
@@ -514,7 +509,7 @@ object PdfCodec {
         d.update(salt)
         d.digest()
       }
-    if (!java.util.Arrays.equals(h(vsalt), hash)) err() // real password
+    if (!java.util.Arrays.equals(h(vsalt), hash)) refuse() // real password
     val inter = h(ksalt)
     try {
       val c = javax.crypto.Cipher.getInstance("AES/CBC/NoPadding")
@@ -522,7 +517,7 @@ object PdfCodec {
         new javax.crypto.spec.SecretKeySpec(inter, "AES"),
         new javax.crypto.spec.IvParameterSpec(new Array[Byte](16)))
       c.doFinal(ue)
-    } catch { case scala.util.control.NonFatal(_) => err() }
+    } catch { case scala.util.control.NonFatal(_) => refuse() }
   }
 
   /** Algorithm 1: decrypt one object's bytes with the per-object key.
@@ -540,7 +535,7 @@ object PdfCodec {
     if (!aes) rc4(ok, data)
     else {
       // AES-128-CBC, 16-byte IV prefix, PKCS#5 padding
-      if (data.length < 32 || data.length % 16 != 0) err()
+      if (data.length < 32 || data.length % 16 != 0) refuse()
       try {
         val c = javax.crypto.Cipher.getInstance("AES/CBC/NoPadding")
         c.init(javax.crypto.Cipher.DECRYPT_MODE,
@@ -548,17 +543,16 @@ object PdfCodec {
           new javax.crypto.spec.IvParameterSpec(data.take(16)))
         val plain = c.doFinal(data, 16, data.length - 16)
         val pad = plain(plain.length - 1) & 0xff
-        if (pad < 1 || pad > 16 || pad > plain.length) err()
+        if (pad < 1 || pad > 16 || pad > plain.length) refuse()
         java.util.Arrays.copyOfRange(plain, 0, plain.length - pad)
-      } catch { case scala.util.control.NonFatal(_) => err() }
+      } catch { case scala.util.control.NonFatal(_) => refuse() }
     }
   }
 
   private def run(b: Array[Byte]): Vector[Run] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
     if (b.length < 16 || !new String(b, 0, 5,
         java.nio.charset.StandardCharsets.ISO_8859_1).startsWith("%PDF-"))
-      err()
+      refuse()
 
     def isWs(c: Int) = c == ' ' || c == '\n' || c == '\r' || c == '\t' ||
       c == '\f' || c == 0
@@ -569,59 +563,56 @@ object PdfCodec {
     // (the file for xref/object parsing; a decompressed ObjStm for
     // compressed objects)
     final class P(buf: Array[Byte], var p: Int, val end: Int) {
-      private def u8(q: Int): Int = {
-        if (q < 0 || q >= buf.length) err(); buf(q) & 0xff
-      }
       def skipWs(): Unit = {
         var go = true
         while (go) {
-          while (p < end && isWs(u8(p))) p += 1
-          if (p < end && u8(p) == '%') { // comment to EOL
-            while (p < end && u8(p) != '\n' && u8(p) != '\r') p += 1
+          while (p < end && isWs(u8(buf, p))) p += 1
+          if (p < end && u8(buf, p) == '%') { // comment to EOL
+            while (p < end && u8(buf, p) != '\n' && u8(buf, p) != '\r') p += 1
           } else go = false
         }
       }
       def word(): String = {
         skipWs()
         val s = p
-        while (p < end && !isWs(u8(p)) && !isDelim(u8(p))) p += 1
-        if (p == s) err()
+        while (p < end && !isWs(u8(buf, p)) && !isDelim(u8(buf, p))) p += 1
+        if (p == s) refuse()
         new String(buf, s, p - s,
           java.nio.charset.StandardCharsets.ISO_8859_1)
       }
       /** Parse one value. Number-number-`R` lookahead folds to PRef. */
       def value(depth: Int): PVal = {
-        if (depth > 48) err()
+        if (depth > 48) refuse()
         skipWs()
-        if (p >= end) err()
-        u8(p) match {
+        if (p >= end) refuse()
+        u8(buf, p) match {
           case '/' =>
             p += 1
             val sb = new java.lang.StringBuilder()
-            while (p < end && !isWs(u8(p)) && !isDelim(u8(p))) {
+            while (p < end && !isWs(u8(buf, p)) && !isDelim(u8(buf, p))) {
               // '#' escapes require two HEX digits (ISO 32000 §7.3.5);
-              // '/A#zz' must refuse via err(), not leak a
-              // NumberFormatException past decode's Fail-only catch
-              if (u8(p) == '#' && p + 2 < end) {
-                val h1 = Character.digit(u8(p + 1), 16)
-                val h2 = Character.digit(u8(p + 2), 16)
-                if (h1 < 0 || h2 < 0) err()
+              // '/A#zz' must refuse via refuse(), not leak a
+              // NumberFormatException out of the parser
+              if (u8(buf, p) == '#' && p + 2 < end) {
+                val h1 = Character.digit(u8(buf, p + 1), 16)
+                val h2 = Character.digit(u8(buf, p + 2), 16)
+                if (h1 < 0 || h2 < 0) refuse()
                 sb.append(((h1 << 4) | h2).toChar)
                 p += 3
-              } else { sb.append(u8(p).toChar); p += 1 }
+              } else { sb.append(u8(buf, p).toChar); p += 1 }
             }
             PName(sb.toString)
           case '(' => PStr(literalString())
           case '<' =>
-            if (p + 1 < end && u8(p + 1) == '<') dict(depth)
+            if (p + 1 < end && u8(buf, p + 1) == '<') dict(depth)
             else PStr(hexString())
           case '[' =>
             p += 1
             val vs = Vector.newBuilder[PVal]
             skipWs()
-            while ({ skipWs(); p < end && u8(p) != ']' })
+            while ({ skipWs(); p < end && u8(buf, p) != ']' })
               vs += value(depth + 1)
-            if (p >= end) err()
+            if (p >= end) refuse()
             p += 1
             PArr(vs.result())
           case c if c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9') =>
@@ -630,11 +621,11 @@ object PdfCodec {
             val save = p
             if (n1 >= 0 && n1 == n1.floor) {
               skipWs()
-              if (p < end && u8(p) >= '0' && u8(p) <= '9') {
+              if (p < end && u8(buf, p) >= '0' && u8(buf, p) <= '9') {
                 number()
                 skipWs()
-                if (p < end && u8(p) == 'R' &&
-                    (p + 1 >= end || isWs(u8(p + 1)) || isDelim(u8(p + 1)))) {
+                if (p < end && u8(buf, p) == 'R' &&
+                    (p + 1 >= end || isWs(u8(buf, p + 1)) || isDelim(u8(buf, p + 1)))) {
                   p += 1
                   return PRef(n1.toInt)
                 }
@@ -647,38 +638,38 @@ object PdfCodec {
               case "true" => PBool(true)
               case "false" => PBool(false)
               case "null" => POther
-              case _ => err()
+              case _ => refuse()
             }
         }
       }
       def number(): Double = {
         skipWs()
         val s = p
-        if (p < end && (u8(p) == '+' || u8(p) == '-')) p += 1
+        if (p < end && (u8(buf, p) == '+' || u8(buf, p) == '-')) p += 1
         var digits = false
         var dots = 0
-        while (p < end && ((u8(p) >= '0' && u8(p) <= '9') || u8(p) == '.')) {
-          if (u8(p) != '.') digits = true else dots += 1
+        while (p < end && ((u8(buf, p) >= '0' && u8(buf, p) <= '9') || u8(buf, p) == '.')) {
+          if (u8(buf, p) != '.') digits = true else dots += 1
           p += 1
         }
         // multi-dot tokens like '1.2.3' would make parseDouble throw
-        // PAST decode's Fail-only catch — refuse them as malformed
-        if (!digits || dots > 1) err()
+        // out of the parser — refuse them as malformed
+        if (!digits || dots > 1) refuse()
         java.lang.Double.parseDouble(
           new String(buf, s, p - s,
             java.nio.charset.StandardCharsets.ISO_8859_1))
       }
       def literalString(): Array[Byte] = {
-        if (u8(p) != '(') err()
+        if (u8(buf, p) != '(') refuse()
         p += 1
         val out = new java.io.ByteArrayOutputStream()
         var nest = 1
         while (nest > 0) {
-          if (p >= end) err()
-          u8(p) match {
+          if (p >= end) refuse()
+          u8(buf, p) match {
             case '\\' =>
-              if (p + 1 >= end) err()
-              u8(p + 1) match {
+              if (p + 1 >= end) refuse()
+              u8(buf, p + 1) match {
                 case 'n' => out.write('\n'); p += 2
                 case 'r' => out.write('\r'); p += 2
                 case 't' => out.write('\t'); p += 2
@@ -688,12 +679,12 @@ object PdfCodec {
                 case ')' => out.write(')'); p += 2
                 case '\\' => out.write('\\'); p += 2
                 case '\r' => // line continuation
-                  p += 2; if (p < end && u8(p) == '\n') p += 1
+                  p += 2; if (p < end && u8(buf, p) == '\n') p += 1
                 case '\n' => p += 2
                 case d if d >= '0' && d <= '7' =>
                   var v = 0; var k = 0; p += 1
-                  while (k < 3 && p < end && u8(p) >= '0' && u8(p) <= '7') {
-                    v = v * 8 + (u8(p) - '0'); p += 1; k += 1
+                  while (k < 3 && p < end && u8(buf, p) >= '0' && u8(buf, p) <= '7') {
+                    v = v * 8 + (u8(buf, p) - '0'); p += 1; k += 1
                   }
                   out.write(v & 0xff)
                 case other => out.write(other); p += 2 // spec: drop the \
@@ -708,28 +699,28 @@ object PdfCodec {
               // literal string reads as a single LF, whatever form it
               // took in the file
               out.write('\n'); p += 1
-              if (p < end && u8(p) == '\n') p += 1
+              if (p < end && u8(buf, p) == '\n') p += 1
             case c => out.write(c); p += 1
           }
         }
         out.toByteArray
       }
       def hexString(): Array[Byte] = {
-        if (u8(p) != '<') err()
+        if (u8(buf, p) != '<') refuse()
         p += 1
         val out = new java.io.ByteArrayOutputStream()
         var hi = -1
         var go = true
         while (go) {
-          if (p >= end) err()
-          val c = u8(p)
+          if (p >= end) refuse()
+          val c = u8(buf, p)
           if (c == '>') {
             if (hi >= 0) out.write(hi << 4) // odd nibble: zero-padded
             p += 1; go = false
           } else if (isWs(c)) p += 1
           else {
             val d = Character.digit(c, 16)
-            if (d < 0) err()
+            if (d < 0) refuse()
             if (hi < 0) hi = d else { out.write((hi << 4) | d); hi = -1 }
             p += 1
           }
@@ -742,12 +733,12 @@ object PdfCodec {
         var go = true
         while (go) {
           skipWs()
-          if (p + 1 < end && u8(p) == '>' && u8(p + 1) == '>') {
+          if (p + 1 < end && u8(buf, p) == '>' && u8(buf, p + 1) == '>') {
             p += 2; go = false
           } else {
             val k = value(depth + 1) match {
               case PName(n) => n
-              case _ => err()
+              case _ => refuse()
             }
             m += (k -> value(depth + 1))
           }
@@ -756,12 +747,12 @@ object PdfCodec {
         // stream?
         val save = p
         skipWs()
-        if (p + 6 <= end && u8(p) == 's' && u8(p + 1) == 't' &&
-            u8(p + 2) == 'r' && u8(p + 3) == 'e' && u8(p + 4) == 'a' &&
-            u8(p + 5) == 'm') {
+        if (p + 6 <= end && u8(buf, p) == 's' && u8(buf, p + 1) == 't' &&
+            u8(buf, p + 2) == 'r' && u8(buf, p + 3) == 'e' && u8(buf, p + 4) == 'a' &&
+            u8(buf, p + 5) == 'm') {
           p += 6
-          if (p < end && u8(p) == '\r') p += 1
-          if (p < end && u8(p) == '\n') p += 1
+          if (p < end && u8(buf, p) == '\r') p += 1
+          if (p < end && u8(buf, p) == '\n') p += 1
           PStream(d, p) // caller resolves /Length and skips the data
         } else { p = save; d }
       }
@@ -772,7 +763,7 @@ object PdfCodec {
     val tail = new String(b, math.max(0, b.length - 2048),
       math.min(2048, b.length), java.nio.charset.StandardCharsets.ISO_8859_1)
     val sxAt = tail.lastIndexOf("startxref")
-    if (sxAt < 0) err()
+    if (sxAt < 0) refuse()
     val sx = new P(b, math.max(0, b.length - 2048) + sxAt + 9, b.length)
     val firstXref = sx.number().toLong
 
@@ -802,10 +793,10 @@ object PdfCodec {
         while (!inf.finished()) {
           val n =
             try inf.inflate(buf)
-            catch { case _: java.util.zip.DataFormatException => err() }
-          if (n == 0 && !inf.finished()) err() // truncated/stuck
+            catch { case _: java.util.zip.DataFormatException => refuse() }
+          if (n == 0 && !inf.finished()) refuse() // truncated/stuck
           out.write(buf, 0, n)
-          if (out.size > MaxInflatedBytes) err()
+          if (out.size > MaxInflatedBytes) refuse()
         }
         out.toByteArray
       } finally inf.end()
@@ -813,7 +804,7 @@ object PdfCodec {
     /** PNG row unfiltering (predictors 10–15; 1 byte/px as xref
       * streams use): filter byte per row, None/Sub/Up/Average/Paeth. */
     def pngUnfilter(data: Array[Byte], cols: Int): Array[Byte] = {
-      if (cols < 1 || data.length % (cols + 1) != 0) err()
+      if (cols < 1 || data.length % (cols + 1) != 0) refuse()
       val rows = data.length / (cols + 1)
       val out = new Array[Byte](rows * cols)
       var r = 0
@@ -837,7 +828,7 @@ object PdfCodec {
               val pc = math.abs(left + up - 2 * ul)
               raw + (if (pa <= pb && pa <= pc) left
                 else if (pb <= pc) up else ul)
-            case _ => err()
+            case _ => refuse()
           }
           out(r * cols + i) = recon.toByte
           i += 1
@@ -850,11 +841,11 @@ object PdfCodec {
       * /DecodeParms (PNG predictors); `resolve` supplies indirect
       * /Length — direct-only during the xref walk, full deref after. */
     def streamDataWith(s: PStream, resolve: PVal => PVal): Array[Byte] = {
-      val len = resolve(s.dict.m.getOrElse("Length", err())) match {
+      val len = resolve(s.dict.m.getOrElse("Length", refuse())) match {
         case PNum(v) if v >= 0 && v <= Int.MaxValue => v.toInt
-        case _ => err()
+        case _ => refuse()
       }
-      if (s.dataAt + len > b.length) err()
+      if (s.dataAt + len > b.length) refuse()
       val raw0 = java.util.Arrays.copyOfRange(b, s.dataAt, s.dataAt + len)
       // stream decryption precedes filters; xref streams never pass
       // here with a num (they load outside obj()) and are never
@@ -871,11 +862,11 @@ object PdfCodec {
             case PName(n) => n
             case PArr(Vector(one)) => resolve(one) match {
               case PName(n) => n
-              case _ => err()
+              case _ => refuse()
             }
-            case _ => err()
+            case _ => refuse()
           }
-          if (name != "FlateDecode") err()
+          if (name != "FlateDecode") refuse()
           val flat = inflate(raw)
           s.dict.m.get("DecodeParms") match {
             case None => flat
@@ -884,32 +875,32 @@ object PdfCodec {
                 val pred = pd.m.get("Predictor") match {
                   case Some(PNum(v)) => v.toInt
                   case None => 1
-                  case _ => err()
+                  case _ => refuse()
                 }
                 if (pred == 1) flat
                 else if (pred >= 10 && pred <= 15) {
                   pd.m.get("Colors").foreach {
                     case PNum(v) if v.toInt == 1 => ()
-                    case _ => err()
+                    case _ => refuse()
                   }
                   pd.m.get("BitsPerComponent").foreach {
                     case PNum(v) if v.toInt == 8 => ()
-                    case _ => err()
+                    case _ => refuse()
                   }
                   val cols = pd.m.get("Columns") match {
                     case Some(PNum(v)) if v >= 1 && v <= (1 << 20) => v.toInt
                     case None => 1
-                    case _ => err()
+                    case _ => refuse()
                   }
                   pngUnfilter(flat, cols)
-                } else err() // TIFF predictor 2: out of envelope
-              case _ => err()
+                } else refuse() // TIFF predictor 2: out of envelope
+              case _ => refuse()
             }
           }
       }
     }
     val directOnly: PVal => PVal = {
-      case PRef(_) => err() // xref-stream /Length must be direct
+      case PRef(_) => refuse() // xref-stream /Length must be direct
       case v => v
     }
 
@@ -918,66 +909,58 @@ object PdfCodec {
     /** Parse a cross-reference STREAM object at `at`, recording its
       * entries (first-seen-wins) and returning its trailer dict. */
     def xrefStreamAt(at: Long): PDict = {
-      if (at < 0 || at >= b.length || !seenXref.add(at)) err()
+      if (at < 0 || at >= b.length || !seenXref.add(at)) refuse()
       val px = new P(b, at.toInt, b.length)
       px.number(); px.number()
-      if (px.word() != "obj") err()
+      if (px.word() != "obj") refuse()
       px.value(0) match {
         case s: PStream
             if s.dict.m.get("Type").contains(PName("XRef")) =>
           val d = s.dict
           val data = streamDataWith(s, directOnly)
-          val w = d.m.getOrElse("W", err()) match {
+          val w = d.m.getOrElse("W", refuse()) match {
             case PArr(vs) if vs.length == 3 => vs.map {
               case PNum(v) if v >= 0 && v <= 4 => v.toInt
-              case _ => err()
+              case _ => refuse()
             }
-            case _ => err()
+            case _ => refuse()
           }
           val size = d.m.get("Size") match {
             case Some(PNum(v)) if v >= 0 && v <= MaxObjects => v.toLong
-            case _ => err()
+            case _ => refuse()
           }
           val index: Vector[(Long, Long)] = d.m.get("Index") match {
             case Some(PArr(vs)) if vs.length % 2 == 0 =>
               vs.grouped(2).map {
                 case Vector(PNum(a), PNum(c)) => (a.toLong, c.toLong)
-                case _ => err()
+                case _ => refuse()
               }.toVector
             case None => Vector((0L, size))
-            case _ => err()
+            case _ => refuse()
           }
           val rowLen = w.sum
-          if (rowLen == 0) err()
+          if (rowLen == 0) refuse()
           var pos = 0
           index.foreach { case (start, count) =>
             if (count < 0 || start < 0 || start + count > MaxObjects)
-              err()
+              refuse()
             var i = 0L
             while (i < count) {
-              if (pos + rowLen > data.length) err()
-              def fld(k: Int): Long = {
-                var v = 0L
-                var j = 0
-                val o = pos + w.take(k).sum
-                while (j < w(k)) {
-                  v = (v << 8) | (data(o + j) & 0xff); j += 1
-                }
-                v
-              }
+              if (pos + rowLen > data.length) refuse()
+              def fld(k: Int): Long = beN(data, pos + w.take(k).sum, w(k))
               val t = if (w(0) == 0) 1L else fld(0)
               val num = (start + i).toInt
               if (!known(num)) t match {
                 case 1 =>
                   val off = fld(1)
-                  if (off > Int.MaxValue) err()
+                  if (off > Int.MaxValue) refuse()
                   offsets.put(num, off.toInt)
                   val g = if (w(2) > 0) fld(2) else 0L
-                  if (g > 0xffff) err()
+                  if (g > 0xffff) refuse()
                   if (g != 0) gens.put(num, g.toInt)
                 case 2 =>
                   val stm = fld(1); val idx = fld(2)
-                  if (stm > MaxObjects || idx > MaxObjects) err()
+                  if (stm > MaxObjects || idx > MaxObjects) refuse()
                   inStm.put(num, (stm.toInt, idx.toInt))
                 case _ => () // 0 = free; higher types: ignore (spec)
               }
@@ -986,63 +969,63 @@ object PdfCodec {
             }
           }
           d
-        case _ => err()
+        case _ => refuse()
       }
     }
 
     var xat = firstXref
     while (xat >= 0) {
-      if (xat >= b.length) err()
+      if (xat >= b.length) refuse()
       val px = new P(b, xat.toInt, b.length)
       px.skipWs()
       val trailer: PDict =
-        if (px.p + 4 <= b.length && u8(px.p) == 'x' &&
-            u8(px.p + 1) == 'r' && u8(px.p + 2) == 'e' &&
-            u8(px.p + 3) == 'f') {
-          if (!seenXref.add(xat)) err()
+        if (px.p + 4 <= b.length && u8(b, px.p) == 'x' &&
+            u8(b, px.p + 1) == 'r' && u8(b, px.p + 2) == 'e' &&
+            u8(b, px.p + 3) == 'f') {
+          if (!seenXref.add(xat)) refuse()
           // classic cross-reference table
           px.p += 4
           var inTable = true
           while (inTable) {
             px.skipWs()
-            if (px.p + 7 <= b.length && u8(px.p) == 't' &&
-                u8(px.p + 1) == 'r') {
-              if (px.word() != "trailer") err()
+            if (px.p + 7 <= b.length && u8(b, px.p) == 't' &&
+                u8(b, px.p + 1) == 'r') {
+              if (px.word() != "trailer") refuse()
               inTable = false
             } else {
               val start = px.number().toLong
               val count = px.number().toLong
               if (count < 0 || count > MaxObjects || start < 0 ||
-                  start + count > MaxObjects) err()
+                  start + count > MaxObjects) refuse()
               var i = 0L
               while (i < count) {
                 px.skipWs()
-                if (px.p + 18 > b.length) err()
+                if (px.p + 18 > b.length) refuse()
                 val off = px.number().toLong
                 val gen = px.number().toLong
                 px.skipWs()
-                val kind = u8(px.p); px.p += 1
+                val kind = u8(b, px.p); px.p += 1
                 if (kind == 'n') {
                   if (off < 0 || off > Int.MaxValue ||
-                      gen < 0 || gen > 0xffff) err()
+                      gen < 0 || gen > 0xffff) refuse()
                   val num = (start + i).toInt
                   if (!known(num)) {
                     offsets.put(num, off.toInt)
                     if (gen != 0) gens.put(num, gen.toInt)
                   }
-                } else if (kind != 'f') err()
+                } else if (kind != 'f') refuse()
                 i += 1
               }
             }
           }
-          val tr = px.value(0) match { case d: PDict => d; case _ => err() }
+          val tr = px.value(0) match { case d: PDict => d; case _ => refuse() }
           // hybrid-reference files (the Acrobat compatibility shape):
           // the classic table marks compressed objects FREE and
           // /XRefStm points at the stream carrying their entries
           tr.m.get("XRefStm") match {
             case Some(PNum(v)) => xrefStreamAt(v.toLong)
             case None => ()
-            case _ => err()
+            case _ => refuse()
           }
           tr
         } else {
@@ -1065,10 +1048,10 @@ object PdfCodec {
       xat = trailer.m.get("Prev") match {
         case Some(PNum(v)) => v.toLong
         case None => -1L
-        case _ => err()
+        case _ => refuse()
       }
     }
-    if (root < 0) err()
+    if (root < 0) refuse()
 
     // ---- object loading --------------------------------------------
     val cache = new java.util.HashMap[Int, PVal]()
@@ -1078,8 +1061,8 @@ object PdfCodec {
     def obj(num: Int): PVal = {
       val hit = cache.get(num)
       if (hit != null) return hit
-      if (cache.size > MaxObjects) err()
-      if (!resolving.add(num)) err() // an object defined via itself
+      if (cache.size > MaxObjects) refuse()
+      if (!resolving.add(num)) refuse() // an object defined via itself
       try {
         val v = {
           // java.util.HashMap[Int, Int].get unboxes a missing key to
@@ -1087,13 +1070,13 @@ object PdfCodec {
           // must be asked explicitly
           if (offsets.containsKey(num)) {
             val pp = new P(b, offsets.get(num), b.length)
-            if (pp.number().toInt != num) err()
+            if (pp.number().toInt != num) refuse()
             val xgen = if (gens.containsKey(num)) gens.get(num) else 0
             // a header/xref generation split only matters when the
             // per-object key depends on it: refuse rather than
             // decrypt with a guessed gen; tolerate it unencrypted
-            if (pp.number().toInt != xgen && crypt.isDefined) err()
-            if (pp.word() != "obj") err()
+            if (pp.number().toInt != xgen && crypt.isDefined) refuse()
+            if (pp.word() != "obj") refuse()
             pp.value(0) match {
               // attach the owning object number + generation: the
               // security handler's per-object key derives from both
@@ -1101,16 +1084,16 @@ object PdfCodec {
               case v => v
             }
           } else inStm.get(num) match {
-            case null => err()
+            case null => refuse()
             case (stm, idx) =>
               val (data, first, pairs) = objStm(stm)
-              if (idx < 0 || idx >= pairs.length) err()
+              if (idx < 0 || idx >= pairs.length) refuse()
               val (onum, ooff) = pairs(idx)
               if (onum != num || ooff < 0 ||
-                  first.toLong + ooff > data.length) err()
+                  first.toLong + ooff > data.length) refuse()
               val vp = new P(data, first + ooff, data.length)
               vp.value(0) match {
-                case _: PStream => err() // streams cannot nest in ObjStm
+                case _: PStream => refuse() // streams cannot nest in ObjStm
                 case inner => inner
               }
           }
@@ -1127,16 +1110,16 @@ object PdfCodec {
       val s = obj(stm) match {
         case s: PStream
             if s.dict.m.get("Type").contains(PName("ObjStm")) => s
-        case _ => err()
+        case _ => refuse()
       }
       val data = streamData(s)
       val n = s.dict.m.get("N") match {
         case Some(PNum(v)) if v >= 0 && v <= MaxObjects => v.toInt
-        case _ => err()
+        case _ => refuse()
       }
       val first = s.dict.m.get("First") match {
         case Some(PNum(v)) if v >= 0 && v <= data.length => v.toInt
-        case _ => err()
+        case _ => refuse()
       }
       val hp = new P(data, 0, first)
       val pairs = Array.fill(n)((hp.number().toInt, hp.number().toInt))
@@ -1152,22 +1135,22 @@ object PdfCodec {
 
     // ---- arm decryption (standard security handler) -------------------
     if (encryptVal != null) {
-      val ed = deref(encryptVal) match { case d: PDict => d.m; case _ => err() }
+      val ed = deref(encryptVal) match { case d: PDict => d.m; case _ => refuse() }
       def ednum(k: String, dflt: Long): Long = ed.get(k) match {
         case Some(PNum(x)) => x.toLong
         case None => dflt
-        case _ => err()
+        case _ => refuse()
       }
-      if (!ed.get("Filter").contains(PName("Standard"))) err()
+      if (!ed.get("Filter").contains(PName("Standard"))) refuse()
       val v = ednum("V", 0)
       val r = ednum("R", 0)
       val oRaw = ed.get("O") match {
         case Some(PStr(x)) if x.length >= 32 => x
-        case _ => err()
+        case _ => refuse()
       }
       val uRaw = ed.get("U") match {
         case Some(PStr(x)) if x.length >= 32 => x
-        case _ => err()
+        case _ => refuse()
       }
       val o = oRaw.take(32)
       val u = uRaw.take(32)
@@ -1175,15 +1158,15 @@ object PdfCodec {
       val encMeta = ed.get("EncryptMetadata") match {
         case Some(PBool(x)) => x
         case None => true
-        case _ => err()
+        case _ => refuse()
       }
-      if (docId == null) err() // Algorithm 2 needs the first /ID element
+      if (docId == null) refuse() // Algorithm 2 needs the first /ID element
       // key length in BYTES, and whether V4's crypt filter is AES
       val (nBytes, aes) = v match {
         case 1 => (5, false)
         case 2 =>
           val bits = ednum("Length", 40)
-          if (bits < 40 || bits > 128 || bits % 8 != 0) err()
+          if (bits < 40 || bits > 128 || bits % 8 != 0) refuse()
           (bits.toInt / 8, false)
         case 4 =>
           // /CF << /StdCF << /CFM /V2|/AESV2 /Length n >> >>, with
@@ -1192,32 +1175,32 @@ object PdfCodec {
           if (stmf == PName("Identity")) {
             crypt = None
             (-1, false) // streams unencrypted: nothing to arm
-          } else if (stmf != PName("StdCF")) err()
+          } else if (stmf != PName("StdCF")) refuse()
           else {
-            val cf = deref(ed.getOrElse("CF", err())) match {
-              case d: PDict => deref(d.m.getOrElse("StdCF", err())) match {
+            val cf = deref(ed.getOrElse("CF", refuse())) match {
+              case d: PDict => deref(d.m.getOrElse("StdCF", refuse())) match {
                 case sd: PDict => sd.m
-                case _ => err()
+                case _ => refuse()
               }
-              case _ => err()
+              case _ => refuse()
             }
             val cfm = cf.get("CFM") match {
               case Some(PName(x)) => x
-              case _ => err()
+              case _ => refuse()
             }
             val isAes = cfm match {
               case "AESV2" => true
               case "V2" => false
-              case _ => err() // AESV3 etc.: out of envelope
+              case _ => refuse() // AESV3 etc.: out of envelope
             }
             // crypt-filter /Length: bytes per PDF 1.5, but bit counts
             // occur in the wild — values over 40 read as bits
             val l = cf.get("Length") match {
               case Some(PNum(x)) => if (x > 40) x.toLong / 8 else x.toLong
               case None => 16L
-              case _ => err()
+              case _ => refuse()
             }
-            if (l < 5 || l > 16) err()
+            if (l < 5 || l > 16) refuse()
             (l.toInt, isAes)
           }
         case 5 =>
@@ -1225,38 +1208,38 @@ object PdfCodec {
           // AESV3, 48-byte /U carrying hash + validation/key salts,
           // /UE wrapping the file key. R6 hashes via Algorithm 2.B;
           // R5 is the deprecated single-SHA-256 extension.
-          if (r != 5 && r != 6) err()
-          if (uRaw.length < 48) err()
+          if (r != 5 && r != 6) refuse()
+          if (uRaw.length < 48) refuse()
           val ue = ed.get("UE") match {
             case Some(PStr(x)) if x.length >= 32 => x.take(32)
-            case _ => err()
+            case _ => refuse()
           }
           val stmf = ed.get("StmF").getOrElse(PName("Identity"))
           if (stmf == PName("Identity")) ()
-          else if (stmf != PName("StdCF")) err()
+          else if (stmf != PName("StdCF")) refuse()
           else {
-            val cf = deref(ed.getOrElse("CF", err())) match {
-              case d: PDict => deref(d.m.getOrElse("StdCF", err())) match {
+            val cf = deref(ed.getOrElse("CF", refuse())) match {
+              case d: PDict => deref(d.m.getOrElse("StdCF", refuse())) match {
                 case sd: PDict => sd.m
-                case _ => err()
+                case _ => refuse()
               }
-              case _ => err()
+              case _ => refuse()
             }
-            if (!cf.get("CFM").contains(PName("AESV3"))) err()
+            if (!cf.get("CFM").contains(PName("AESV3"))) refuse()
             // empty-password check + file-key unwrap live together
             crypt = Some((fileKeyV5(uRaw.take(48), ue, r), true))
           }
           (-1, false) // legacy derivation below: skipped
-        case _ => err() // exotic V3: refused
+        case _ => refuse() // exotic V3: refused
       }
       if (nBytes > 0) {
-        if (r < 2 || r > 4) err()
+        if (r < 2 || r > 4) refuse()
         val key = fileKey(o, perm, docId, r, nBytes, encMeta)
         // the empty-user-password check: a mismatch means a REAL
         // password protects this document — refuse, don't guess
         val exp = expectU(key, docId, r)
         val got = if (r == 2) u else u.take(16)
-        if (!java.util.Arrays.equals(exp.take(got.length), got)) err()
+        if (!java.util.Arrays.equals(exp.take(got.length), got)) refuse()
         crypt = Some((key, aes))
       }
     }
@@ -1265,24 +1248,24 @@ object PdfCodec {
     val pages = Vector.newBuilder[PDict]
     var nPages = 0
     def walk(v: PVal, depth: Int): Unit = {
-      if (depth > 32) err()
+      if (depth > 32) refuse()
       deref(v) match {
         case d: PDict => d.m.get("Type") match {
           case Some(PName("Pages")) =>
-            deref(d.m.getOrElse("Kids", err())) match {
+            deref(d.m.getOrElse("Kids", refuse())) match {
               case PArr(kids) => kids.foreach(walk(_, depth + 1))
-              case _ => err()
+              case _ => refuse()
             }
           case Some(PName("Page")) =>
-            if (nPages >= MaxPages) err()
+            if (nPages >= MaxPages) refuse()
             pages += d; nPages += 1
-          case _ => err()
+          case _ => refuse()
         }
-        case _ => err()
+        case _ => refuse()
       }
     }
-    val rootDict = deref(obj(root)) match { case d: PDict => d; case _ => err() }
-    walk(rootDict.m.getOrElse("Pages", err()), 0)
+    val rootDict = deref(obj(root)) match { case d: PDict => d; case _ => refuse() }
+    walk(rootDict.m.getOrElse("Pages", refuse()), 0)
 
     // ---- ToUnicode CMaps (§9.10.3) -------------------------------------
     // Composed fonts (Type0/Identity-H) show 2-byte character CODES
@@ -1293,13 +1276,12 @@ object PdfCodec {
     def parseCMap(data: Array[Byte]): (Boolean, Map[Int, String]) = {
       var p = 0
       val n = data.length
-      def du8(i: Int): Int = { if (i < 0 || i >= n) err(); data(i) & 0xff }
       def skip(): Unit = {
         var again = true
         while (again) {
-          while (p < n && isWs(du8(p))) p += 1
-          if (p < n && du8(p) == '%') {
-            while (p < n && du8(p) != '\n' && du8(p) != '\r') p += 1
+          while (p < n && isWs(u8(data, p))) p += 1
+          if (p < n && u8(data, p) == '%') {
+            while (p < n && u8(data, p) != '\n' && u8(data, p) != '\r') p += 1
           } else again = false
         }
       }
@@ -1307,16 +1289,16 @@ object PdfCodec {
       def tok(): Option[Either[Array[Byte], String]] = {
         skip()
         if (p >= n) return None
-        du8(p) match {
+        u8(data, p) match {
           case '<' =>
             p += 1
             val out = new java.io.ByteArrayOutputStream()
             var hi = -1
-            while ({ if (p >= n) err(); du8(p) != '>' }) {
-              val c = du8(p)
+            while ({ if (p >= n) refuse(); u8(data, p) != '>' }) {
+              val c = u8(data, p)
               if (!isWs(c)) {
                 val d = Character.digit(c, 16)
-                if (d < 0) err()
+                if (d < 0) refuse()
                 if (hi < 0) hi = d else { out.write((hi << 4) | d); hi = -1 }
               }
               p += 1
@@ -1324,20 +1306,20 @@ object PdfCodec {
             if (hi >= 0) out.write(hi << 4)
             p += 1
             Some(Left(out.toByteArray))
-          case '[' | ']' => p += 1; Some(Right(du8(p - 1).toChar.toString))
+          case '[' | ']' => p += 1; Some(Right(u8(data, p - 1).toChar.toString))
           case _ =>
             val s = p
-            if (du8(p) == '/' || du8(p) == '(') p += 1
-            while (p < n && !isWs(du8(p)) && !isDelim(du8(p))) p += 1
-            if (p == s) err()
+            if (u8(data, p) == '/' || u8(data, p) == '(') p += 1
+            while (p < n && !isWs(u8(data, p)) && !isDelim(u8(data, p))) p += 1
+            if (p == s) refuse()
             Some(Right(new String(data, s, p - s,
               java.nio.charset.StandardCharsets.ISO_8859_1)))
         }
       }
       def hexOf(t: Option[Either[Array[Byte], String]]): Array[Byte] =
-        t match { case Some(Left(h)) => h; case _ => err() }
+        t match { case Some(Left(h)) => h; case _ => refuse() }
       def codeOf(h: Array[Byte]): Int = {
-        if (h.isEmpty || h.length > 2) err()
+        if (h.isEmpty || h.length > 2) refuse()
         h.foldLeft(0)((a, x) => (a << 8) | (x & 0xff))
       }
       def utf16(h: Array[Byte]): String =
@@ -1345,11 +1327,11 @@ object PdfCodec {
       /** dst string for code lo+k under the incrementing-bfrange rule:
         * the LAST UTF-16 unit increments. */
       def bump(dst: Array[Byte], k: Int): String = {
-        if (dst.length < 2 || dst.length % 2 != 0) err()
+        if (dst.length < 2 || dst.length % 2 != 0) refuse()
         val d = dst.clone()
-        val last = ((d(d.length - 2) & 0xff) << 8) | (d(d.length - 1) & 0xff)
+        val last = be16(d, d.length - 2)
         val v = last + k
-        if (v > 0xffff) err()
+        if (v > 0xffff) refuse()
         d(d.length - 2) = (v >> 8).toByte
         d(d.length - 1) = v.toByte
         utf16(d)
@@ -1364,7 +1346,7 @@ object PdfCodec {
             while (inner.exists(_.isLeft)) {
               val lo = hexOf(inner)
               val hi = hexOf(tok())
-              if (lo.length != hi.length || lo.length > 2) err()
+              if (lo.length != hi.length || lo.length > 2) refuse()
               if (lo.length == 2) twoByte = true
               inner = tok()
             }
@@ -1373,7 +1355,7 @@ object PdfCodec {
             while (inner.exists(_.isLeft)) {
               val src = codeOf(hexOf(inner))
               m(src) = utf16(hexOf(tok()))
-              if (m.size > 65536) err()
+              if (m.size > 65536) refuse()
               inner = tok()
             }
           case Some(Right("beginbfrange")) =>
@@ -1381,7 +1363,7 @@ object PdfCodec {
             while (inner.exists(_.isLeft)) {
               val lo = codeOf(hexOf(inner))
               val hi = codeOf(hexOf(tok()))
-              if (hi < lo || hi - lo > 65535) err()
+              if (hi < lo || hi - lo > 65535) refuse()
               tok() match {
                 case Some(Left(dst)) =>
                   var k = 0
@@ -1390,15 +1372,15 @@ object PdfCodec {
                   var k = 0
                   var el = tok()
                   while (el.exists(_.isLeft)) {
-                    if (lo + k > hi) err()
+                    if (lo + k > hi) refuse()
                     m(lo + k) = utf16(hexOf(el))
                     k += 1
                     el = tok()
                   }
-                  if (!el.contains(Right("]")) || k != hi - lo + 1) err()
-                case _ => err()
+                  if (!el.contains(Right("]")) || k != hi - lo + 1) refuse()
+                case _ => refuse()
               }
-              if (m.size > 65536) err()
+              if (m.size > 65536) refuse()
               inner = tok()
             }
           case _ => ()
@@ -1441,7 +1423,7 @@ object PdfCodec {
             val t = (deref(ed.m.getOrElse("BaseEncoding", POther)) match {
               case PName(n) => base(n)
               case POther => standardTable
-              case _ => err()
+              case _ => refuse()
             }).clone()
             deref(ed.m.getOrElse("Differences", POther)) match {
               case PArr(vs) =>
@@ -1449,17 +1431,17 @@ object PdfCodec {
                 vs.foreach { v =>
                   deref(v) match {
                     case PNum(x) =>
-                      if (x < 0 || x > 255 || x != Math.floor(x)) err()
+                      if (x < 0 || x > 255 || x != Math.floor(x)) refuse()
                       code = x.toInt
                     case PName(g) =>
-                      if (code < 0 || code > 255) err()
+                      if (code < 0 || code > 255) refuse()
                       t(code) = glyphUni(g)
                       code += 1
-                    case _ => err()
+                    case _ => refuse()
                   }
                 }
               case POther => ()
-              case _ => err()
+              case _ => refuse()
             }
             Some(SimpleDec(t))
           case _ => None
@@ -1497,7 +1479,7 @@ object PdfCodec {
     def latin1(s: Array[Byte]): String =
       new String(s, java.nio.charset.StandardCharsets.ISO_8859_1)
     def emit(page: Int, runIdx: Int, s: String): Int = {
-      if (emitted >= MaxRuns) err()
+      if (emitted >= MaxRuns) refuse()
       runs += Run(page, runIdx, s)
       emitted += 1
       runIdx + 1
@@ -1531,13 +1513,12 @@ object PdfCodec {
           sb.toString
         case CMapDec(twoByte, m) =>
           val w = if (twoByte) 2 else 1
-          if (t.length % w != 0) err()
+          if (t.length % w != 0) refuse()
           val sb = new java.lang.StringBuilder()
           var i = 0
           while (i < t.length) {
             val code =
-              if (w == 2) ((t(i) & 0xff) << 8) | (t(i + 1) & 0xff)
-              else t(i) & 0xff
+              if (w == 2) be16(t, i) else t(i) & 0xff
             // unmapped codes degrade to U+FFFD (content-level gap,
             // not a structural fault — don't refuse the file)
             sb.append(m.getOrElse(code, "�"))
@@ -1555,24 +1536,23 @@ object PdfCodec {
       val content = parts.map { part =>
         deref(part) match {
           case s: PStream => streamData(s)
-          case _ => err()
+          case _ => refuse()
         }
       }.foldLeft(Array.emptyByteArray)((a, c) =>
         if (a.isEmpty) c else a ++ Array[Byte]('\n') ++ c)
       // token scan: operands collect until an operator consumes them
       val cp = new P(content, 0, content.length)
       // re-bind the parser over the CONTENT bytes, not the file
-      def cu8(p: Int): Int = content(p) & 0xff
       var operands = List.empty[PVal]
       var runIdx = 0
       var go = true
       def cSkipWs(): Unit = {
         var again = true
         while (again) {
-          while (cp.p < content.length && isWs(cu8(cp.p))) cp.p += 1
-          if (cp.p < content.length && cu8(cp.p) == '%') {
-            while (cp.p < content.length && cu8(cp.p) != '\n' &&
-              cu8(cp.p) != '\r') cp.p += 1
+          while (cp.p < content.length && isWs(u8(content, cp.p))) cp.p += 1
+          if (cp.p < content.length && u8(content, cp.p) == '%') {
+            while (cp.p < content.length && u8(content, cp.p) != '\n' &&
+              u8(content, cp.p) != '\r') cp.p += 1
           } else again = false
         }
       }
@@ -1588,11 +1568,11 @@ object PdfCodec {
         cp.p += 1
         var nest = 1
         while (nest > 0) {
-          if (cp.p >= content.length) err()
-          cu8(cp.p) match {
+          if (cp.p >= content.length) refuse()
+          u8(content, cp.p) match {
             case '\\' =>
-              if (cp.p + 1 >= content.length) err()
-              cu8(cp.p + 1) match {
+              if (cp.p + 1 >= content.length) refuse()
+              u8(content, cp.p + 1) match {
                 case 'n' => out.write('\n'); cp.p += 2
                 case 'r' => out.write('\r'); cp.p += 2
                 case 't' => out.write('\t'); cp.p += 2
@@ -1603,13 +1583,13 @@ object PdfCodec {
                 case '\\' => out.write('\\'); cp.p += 2
                 case '\r' =>
                   cp.p += 2
-                  if (cp.p < content.length && cu8(cp.p) == '\n') cp.p += 1
+                  if (cp.p < content.length && u8(content, cp.p) == '\n') cp.p += 1
                 case '\n' => cp.p += 2
                 case d if d >= '0' && d <= '7' =>
                   var v = 0; var k = 0; cp.p += 1
                   while (k < 3 && cp.p < content.length &&
-                      cu8(cp.p) >= '0' && cu8(cp.p) <= '7') {
-                    v = v * 8 + (cu8(cp.p) - '0'); cp.p += 1; k += 1
+                      u8(content, cp.p) >= '0' && u8(content, cp.p) <= '7') {
+                    v = v * 8 + (u8(content, cp.p) - '0'); cp.p += 1; k += 1
                   }
                   out.write(v & 0xff)
                 case other => out.write(other); cp.p += 2
@@ -1620,7 +1600,7 @@ object PdfCodec {
             case '\r' =>
               // unescaped EOL in a literal string reads as LF (§7.3.4.2)
               out.write('\n'); cp.p += 1
-              if (cp.p < content.length && cu8(cp.p) == '\n') cp.p += 1
+              if (cp.p < content.length && u8(content, cp.p) == '\n') cp.p += 1
             case c => out.write(c); cp.p += 1
           }
         }
@@ -1632,15 +1612,15 @@ object PdfCodec {
         var hi = -1
         var inHex = true
         while (inHex) {
-          if (cp.p >= content.length) err()
-          val c = cu8(cp.p)
+          if (cp.p >= content.length) refuse()
+          val c = u8(content, cp.p)
           if (c == '>') {
             if (hi >= 0) out.write(hi << 4)
             cp.p += 1; inHex = false
           } else if (isWs(c)) cp.p += 1
           else {
             val d = Character.digit(c, 16)
-            if (d < 0) err()
+            if (d < 0) refuse()
             if (hi < 0) hi = d else { out.write((hi << 4) | d); hi = -1 }
             cp.p += 1
           }
@@ -1650,18 +1630,18 @@ object PdfCodec {
       while (go) {
         cSkipWs()
         if (cp.p >= content.length) go = false
-        else cu8(cp.p) match {
+        else u8(content, cp.p) match {
           case '(' => operands ::= PStr(cLiteral())
           case '<' =>
-            if (cp.p + 1 < content.length && cu8(cp.p + 1) == '<') {
+            if (cp.p + 1 < content.length && u8(content, cp.p + 1) == '<') {
               // inline dict (e.g. BDC properties): balanced skip
               var lvl = 0
               var scanning = true
               while (scanning) {
-                if (cp.p + 1 >= content.length) err()
-                if (cu8(cp.p) == '<' && cu8(cp.p + 1) == '<') {
+                if (cp.p + 1 >= content.length) refuse()
+                if (u8(content, cp.p) == '<' && u8(content, cp.p + 1) == '<') {
                   lvl += 1; cp.p += 2
-                } else if (cu8(cp.p) == '>' && cu8(cp.p + 1) == '>') {
+                } else if (u8(content, cp.p) == '>' && u8(content, cp.p + 1) == '>') {
                   lvl -= 1; cp.p += 2
                   if (lvl == 0) scanning = false
                 } else cp.p += 1
@@ -1674,17 +1654,17 @@ object PdfCodec {
             var inArr = true
             while (inArr) {
               cSkipWs()
-              if (cp.p >= content.length) err()
-              cu8(cp.p) match {
+              if (cp.p >= content.length) refuse()
+              u8(content, cp.p) match {
                 case ']' => cp.p += 1; inArr = false
                 case '(' => vs += PStr(cLiteral())
                 case '<' => vs += PStr(cHex())
                 case _ =>
                   // numbers (kerning) and anything else scalar
                   val s = cp.p
-                  while (cp.p < content.length && !isWs(cu8(cp.p)) &&
-                    !isDelim(cu8(cp.p))) cp.p += 1
-                  if (cp.p == s) err()
+                  while (cp.p < content.length && !isWs(u8(content, cp.p)) &&
+                    !isDelim(u8(content, cp.p))) cp.p += 1
+                  if (cp.p == s) refuse()
                   vs += POther
               }
             }
@@ -1692,34 +1672,34 @@ object PdfCodec {
           case '/' =>
             cp.p += 1
             val ns = cp.p
-            while (cp.p < content.length && !isWs(cu8(cp.p)) &&
-              !isDelim(cu8(cp.p))) cp.p += 1
+            while (cp.p < content.length && !isWs(u8(content, cp.p)) &&
+              !isDelim(u8(content, cp.p))) cp.p += 1
             // keep the name: Tf needs its font operand for ToUnicode
             operands ::= PName(new String(content, ns, cp.p - ns,
               java.nio.charset.StandardCharsets.ISO_8859_1))
           case c if c == '+' || c == '-' || c == '.' ||
               (c >= '0' && c <= '9') =>
-            while (cp.p < content.length && !isWs(cu8(cp.p)) &&
-              !isDelim(cu8(cp.p))) cp.p += 1
+            while (cp.p < content.length && !isWs(u8(content, cp.p)) &&
+              !isDelim(u8(content, cp.p))) cp.p += 1
             operands ::= POther
           case '%' =>
-            while (cp.p < content.length && cu8(cp.p) != '\n' &&
-              cu8(cp.p) != '\r') cp.p += 1
+            while (cp.p < content.length && u8(content, cp.p) != '\n' &&
+              u8(content, cp.p) != '\r') cp.p += 1
           case _ =>
             val s = cp.p
-            while (cp.p < content.length && !isWs(cu8(cp.p)) &&
-              !isDelim(cu8(cp.p))) cp.p += 1
-            if (cp.p == s) err() // stray delimiter: refuse
+            while (cp.p < content.length && !isWs(u8(content, cp.p)) &&
+              !isDelim(u8(content, cp.p))) cp.p += 1
+            if (cp.p == s) refuse() // stray delimiter: refuse
             val op = new String(content, s, cp.p - s,
               java.nio.charset.StandardCharsets.ISO_8859_1)
             op match {
               case "Tj" | "'" => operands match {
                 case PStr(t) :: _ => runIdx = emit(pageIdx, runIdx, decodeText(t))
-                case _ => err()
+                case _ => refuse()
               }
               case "\"" => operands match {
                 case PStr(t) :: _ => runIdx = emit(pageIdx, runIdx, decodeText(t))
-                case _ => err()
+                case _ => refuse()
               }
               case "TJ" => operands match {
                 case PArr(vs) :: _ =>
@@ -1727,7 +1707,7 @@ object PdfCodec {
                     case PStr(t) => runIdx = emit(pageIdx, runIdx, decodeText(t))
                     case _ => () // kerning numbers
                   }
-                case _ => err()
+                case _ => refuse()
               }
               case "Tf" => operands match {
                 // `/F1 12 Tf`: operands push in reverse (size on top)

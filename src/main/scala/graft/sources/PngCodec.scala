@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Pure-Scala PNG codec — the image container real multimodal corpora
   * actually ship (the reference's chips move as rasterio TIFFs and npy
   * tiles, process_data.py:64-90; web-scale image-text corpora are
@@ -99,15 +101,13 @@ object PngCodec {
 
   /** Decode a PNG; None on any structural violation. Palette images
     * expand to 3-channel RGB. */
-  def decode(bytes: Array[Byte]): Option[PngImage] = {
+  def decode(bytes: Array[Byte]): Option[PngImage] =
+    refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[PngImage] = {
     if (bytes.length < 8 + 12 + 13 + 12 + 12) return None
     var i = 0
     while (i < 8) { if (bytes(i) != Signature(i)) return None; i += 1 }
-    def be32(o: Int): Long = {
-      if (o < 0 || o + 4 > bytes.length) return -1L
-      ((bytes(o) & 0xffL) << 24) | ((bytes(o + 1) & 0xffL) << 16) |
-        ((bytes(o + 2) & 0xffL) << 8) | (bytes(o + 3) & 0xffL)
-    }
     // chunk walk: verify every CRC, concatenate IDATs, stop at IEND
     var pos = 8
     var width = 0; var height = 0; var colorType = -1; var bitDepth = 0
@@ -116,19 +116,20 @@ object PngCodec {
     var sawIhdr = false; var sawIend = false
     while (!sawIend) {
       if (pos + 12 > bytes.length) return None // truncated chunk header
-      val len = be32(pos)
+      val len = be32(bytes, pos)
       if (len < 0 || len > Int.MaxValue - 12 || pos + 12 + len > bytes.length)
         return None
-      val typ = new String(bytes, pos + 4, 4, "US-ASCII")
+      val typ = fourcc(bytes, pos + 4)
       val crc = new java.util.zip.CRC32()
       crc.update(bytes, pos + 4, 4 + len.toInt)
-      if (crc.getValue != be32(pos + 8 + len.toInt)) return None
+      if (crc.getValue != be32(bytes, pos + 8 + len.toInt)) return None
       val body = pos + 8
       typ match {
         case "IHDR" =>
           if (sawIhdr || len != 13) return None
           sawIhdr = true
-          width = be32(body).toInt; height = be32(body + 4).toInt
+          width = be32(bytes, body).toInt
+          height = be32(bytes, body + 4).toInt
           bitDepth = bytes(body + 8) & 0xff
           colorType = bytes(body + 9) & 0xff
           val interlace = bytes(body + 12) & 0xff

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** safetensors codec — the tensor-shard interchange format modern ML
   * artifacts actually ship in (model weights, precomputed embedding
   * shards, activation dumps). The reference materializes tensors as
@@ -48,13 +50,14 @@ object SafetensorsCodec {
   /** Decode a shard to its tensor elements, or None on any structural
     * fault (whole-file refusal — a weight shard is all-or-nothing in a
     * way an archive of independent members is not). Never throws. */
-  def decode(bytes: Array[Byte]): Option[Vector[Elem]] = {
-    if (bytes.length < 8) return None
-    var n = 0L
-    var j = 0
-    while (j < 8) { n |= (bytes(j) & 0xffL) << (8 * j); j += 1 }
-    if (n < 2 || n > MaxHeaderBytes || 8 + n > bytes.length) return None
-    val header = parseHeader(bytes, 8, (8 + n).toInt).getOrElse(return None)
+  def decode(bytes: Array[Byte]): Option[Vector[Elem]] =
+    refusing(run(bytes))
+
+  private def run(bytes: Array[Byte]): Vector[Elem] = {
+    if (bytes.length < 8) refuse()
+    val n = le64(bytes, 0)
+    if (n < 2 || n > MaxHeaderBytes || 8 + n > bytes.length) refuse()
+    val header = parseHeader(bytes, 8, (8 + n).toInt)
     val dataOff = 8 + n.toInt
     val dataLen = (bytes.length - dataOff).toLong
 
@@ -63,30 +66,30 @@ object SafetensorsCodec {
     val tensors = Vector.newBuilder[T]
     var totalElems = 0L
     header.find(_._1 == "__metadata__").foreach { case (_, m) =>
-      if (!m.values.forall(_.isInstanceOf[String])) return None
+      if (!m.values.forall(_.isInstanceOf[String])) refuse()
     }
     for ((name, fields) <- header if name != "__metadata__") {
       val dtype = fields.get("dtype") match {
         case Some(s: String) => s
-        case _ => return None
+        case _ => refuse()
       }
-      val size = DtypeSize.getOrElse(dtype, return None)
+      val size = DtypeSize.getOrElse(dtype, refuse())
       val shape = fields.get("shape") match {
         case Some(v: Vector[_]) =>
-          v.map { case l: Long if l >= 0 => l; case _ => return None }
-        case _ => return None
+          v.map { case l: Long if l >= 0 => l; case _ => refuse() }
+        case _ => refuse()
       }
       val elems = shape.foldLeft(1L) { (a, d) =>
-        if (d != 0 && a > MaxElems / d + 1) return None else a * d
+        if (d != 0 && a > MaxElems / d + 1) refuse() else a * d
       }
       val span = fields.get("data_offsets") match {
         case Some(Vector(a: Long, b: Long)) if a >= 0 && b >= a => (a, b)
-        case _ => return None
+        case _ => refuse()
       }
-      if (span._2 - span._1 != elems * size) return None
-      if (span._2 > dataLen) return None
+      if (span._2 - span._1 != elems * size) refuse()
+      if (span._2 > dataLen) refuse()
       totalElems += elems
-      if (totalElems > MaxElems) return None
+      if (totalElems > MaxElems) refuse()
       tensors += T(name, dtype, shape, span._1, span._2)
     }
     val ts = tensors.result()
@@ -94,10 +97,10 @@ object SafetensorsCodec {
     // spans must tile [0, dataLen) exactly: sort by begin, walk
     var cursor = 0L
     for (t <- ts.sortBy(t => (t.off, t.end))) {
-      if (t.off != cursor) return None
+      if (t.off != cursor) refuse()
       cursor = t.end
     }
-    if (cursor != dataLen) return None
+    if (cursor != dataLen) refuse()
 
     val out = Vector.newBuilder[Elem]
     for (t <- ts) {
@@ -107,14 +110,11 @@ object SafetensorsCodec {
       var i = 0L
       while (i < count) {
         val p = dataOff + t.off + i * size
-        var v = 0L
-        var k = 0
-        while (k < size) { v |= (bytes((p + k).toInt) & 0xffL) << (8 * k); k += 1 }
-        out += Elem(t.name, t.dtype, shapeStr, i, v)
+        out += Elem(t.name, t.dtype, shapeStr, i, leN(bytes, p, size))
         i += 1
       }
     }
-    Some(out.result())
+    out.result()
   }
 
   /** Encode named tensors to a shard in canonical form: header keys
@@ -165,21 +165,17 @@ object SafetensorsCodec {
 
   // ---- strict JSON for exactly the header grammar -------------------
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-
   /** Parse `{name: {field: value}}` where values are strings, integer
     * longs, or arrays of integer longs ("__metadata__" values are
     * strings). Duplicate keys at either level refuse. Returns entries
     * in file order. */
   private def parseHeader(
-      b: Array[Byte], from: Int, until: Int): Option[Vector[(String, Map[String, Any])]] = {
+      b: Array[Byte], from: Int, until: Int): Vector[(String, Map[String, Any])] = {
     var p = from
-    def err(): Nothing = throw fail
     def peek: Int = if (p < until) b(p) & 0xff else -1
-    def next(): Int = { val c = peek; if (c < 0) err(); p += 1; c }
+    def next(): Int = { val c = peek; if (c < 0) refuse(); p += 1; c }
     def ws(): Unit = while (peek == ' ' || peek == '\t' || peek == '\n' || peek == '\r') p += 1
-    def expect(c: Char): Unit = if (next() != c.toInt) err()
+    def expect(c: Char): Unit = if (next() != c.toInt) refuse()
 
     def string(): String = {
       expect('"')
@@ -204,20 +200,20 @@ object SafetensorsCodec {
                 if (h >= '0' && h <= '9') h - '0'
                 else if (h >= 'a' && h <= 'f') h - 'a' + 10
                 else if (h >= 'A' && h <= 'F') h - 'A' + 10
-                else err()
+                else refuse()
               v = (v << 4) | d
               k += 1
             }
             sb.append(v.toChar)
-          case _ => err()
+          case _ => refuse()
         }
-        else if (c < 0x20) err()
+        else if (c < 0x20) refuse()
         else if (c < 0x80) sb.append(c.toChar)
         else {
           // re-decode the UTF-8 sequence starting at c
           val len = if ((c & 0xe0) == 0xc0) 2 else if ((c & 0xf0) == 0xe0) 3
-            else if ((c & 0xf8) == 0xf0) 4 else err()
-          if (p - 1 + len > until) err()
+            else if ((c & 0xf8) == 0xf0) 4 else refuse()
+          if (p - 1 + len > until) refuse()
           sb.append(new String(b, p - 1, len, java.nio.charset.StandardCharsets.UTF_8))
           p += len - 1
         }
@@ -231,11 +227,11 @@ object SafetensorsCodec {
       var any = false
       while (peek >= '0' && peek <= '9') {
         val d = next() - '0'
-        if (v > (Long.MaxValue - d) / 10) err()
+        if (v > (Long.MaxValue - d) / 10) refuse()
         v = v * 10 + d
         any = true
       }
-      if (!any) err()
+      if (!any) refuse()
       v
     }
 
@@ -250,7 +246,7 @@ object SafetensorsCodec {
         next() match {
           case ',' => ()
           case ']' => more = false
-          case _ => err()
+          case _ => refuse()
         }
       }
       out.result()
@@ -262,7 +258,7 @@ object SafetensorsCodec {
         case '"' => string()
         case '[' => longArray()
         case c if c >= '0' && c <= '9' => long()
-        case _ => err()
+        case _ => refuse()
       }
     }
 
@@ -275,46 +271,44 @@ object SafetensorsCodec {
       while (more) {
         ws()
         val k = string()
-        if (m.contains(k)) err()
+        if (m.contains(k)) refuse()
         ws(); expect(':')
         m += (k -> value())
         ws()
         next() match {
           case ',' => ()
           case '}' => more = false
-          case _ => err()
+          case _ => refuse()
         }
       }
       m
     }
 
-    try {
-      ws()
-      expect('{')
-      ws()
-      val out = Vector.newBuilder[(String, Map[String, Any])]
-      var seen = Set.empty[String]
-      if (peek == '}') { p += 1 }
-      else {
-        var more = true
-        while (more) {
-          ws()
-          val k = string()
-          if (seen(k)) err()
-          seen += k
-          ws(); expect(':'); ws()
-          out += (k -> innerObject())
-          ws()
-          next() match {
-            case ',' => ()
-            case '}' => more = false
-            case _ => err()
-          }
+    ws()
+    expect('{')
+    ws()
+    val out = Vector.newBuilder[(String, Map[String, Any])]
+    var seen = Set.empty[String]
+    if (peek == '}') { p += 1 }
+    else {
+      var more = true
+      while (more) {
+        ws()
+        val k = string()
+        if (seen(k)) refuse()
+        seen += k
+        ws(); expect(':'); ws()
+        out += (k -> innerObject())
+        ws()
+        next() match {
+          case ',' => ()
+          case '}' => more = false
+          case _ => refuse()
         }
       }
-      ws()
-      if (p != until) err() // trailing bytes after the closing brace
-      Some(out.result())
-    } catch { case _: Fail => None }
+    }
+    ws()
+    if (p != until) refuse() // trailing bytes after the closing brace
+    out.result()
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** TFRecord + `tf.train.Example` codec — the classic ML training-shard
   * wire format (TensorFlow's `TFRecordDataset`; T5/C4 shipped this
   * way, and webdataset/tfrecord remain the two dominant "bucket of
@@ -61,23 +63,26 @@ object TfRecordCodec {
     * on any structural violation — truncated frame, length over
     * [[MaxRecordBytes]], record count over [[MaxRecords]], or either
     * CRC mismatch. Never throws. */
-  def parse(bytes: Array[Byte]): Option[Vector[Array[Byte]]] = {
+  def parse(bytes: Array[Byte]): Option[Vector[Array[Byte]]] =
+    refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[Vector[Array[Byte]]] = {
     val out = Vector.newBuilder[Array[Byte]]
     var pos = 0
     var n = 0
     while (pos < bytes.length) {
       if (n >= MaxRecords) return None
       if (pos + 12 > bytes.length) return None
-      val len = u64le(bytes, pos)
+      val len = le64(bytes, pos)
       if (len < 0 || len > MaxRecordBytes) return None
-      val lenCrc = u32le(bytes, pos + 8)
+      val lenCrc = le32(bytes, pos + 8).toInt
       if (maskedCrc32c(bytes, pos, 8) != lenCrc) return None
       val dataOff = pos + 12
       val ilen = len.toInt
       // Long arithmetic: near the 2 GiB array ceiling dataOff+ilen+4
       // wraps negative in Int and would pass the bound
       if (dataOff.toLong + ilen + 4 > bytes.length) return None
-      val dataCrc = u32le(bytes, dataOff + ilen)
+      val dataCrc = le32(bytes, dataOff + ilen).toInt
       if (maskedCrc32c(bytes, dataOff, ilen) != dataCrc) return None
       out += java.util.Arrays.copyOfRange(bytes, dataOff, dataOff + ilen)
       pos = dataOff + ilen + 4
@@ -93,17 +98,6 @@ object TfRecordCodec {
     c.update(bytes, off, len)
     val crc = c.getValue.toInt
     ((crc >>> 15) | (crc << 17)) + 0xa282ead8
-  }
-
-  private def u32le(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-      ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-
-  private def u64le(b: Array[Byte], p: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(p + i) & 0xffL); i -= 1 }
-    v
   }
 
   // ---- encoder (the sink's half) -------------------------------------
@@ -246,16 +240,17 @@ object TfRecordCodec {
     * in first-seen key order with last-wins on duplicates (the proto
     * map semantic). None if the payload is not a well-formed Example
     * — the caller keeps the record and degrades. */
-  def parseExample(bytes: Array[Byte]): Option[Vector[(String, Feature)]] = {
-    val entries = new scala.collection.mutable.LinkedHashMap[String, Feature]
-    val ok = walk(bytes, 0, bytes.length) { (field, wire, s, e) =>
-      if (field == 1 && wire == 2) {
-        if (parseFeatures(bytes, s, e, entries)) Some(e) else None
-      } else if (wire == 2) Some(e)
-      else skipField(bytes, s, e, wire)
-    }
-    if (ok) Some(entries.toVector) else None
-  }
+  def parseExample(bytes: Array[Byte]): Option[Vector[(String, Feature)]] =
+    refusing {
+      val entries = new scala.collection.mutable.LinkedHashMap[String, Feature]
+      val ok = walk(bytes, 0, bytes.length) { (field, wire, s, e) =>
+        if (field == 1 && wire == 2) {
+          if (parseFeatures(bytes, s, e, entries)) Some(e) else None
+        } else if (wire == 2) Some(e)
+        else skipField(bytes, s, e, wire)
+      }
+      if (ok) Some(entries.toVector) else None
+    }.flatten
 
   /** Features message: repeated map entries { 1: key, 2: Feature }. */
   private def parseFeatures(
@@ -347,13 +342,13 @@ object TfRecordCodec {
         if ((e - s) % 4 != 0 || n + (e - s) / 4 > MaxListElems) None
         else {
           var p = s
-          while (p < e) { out += u32le(b, p); p += 4; n += 1 }
+          while (p < e) { out += le32(b, p).toInt; p += 4; n += 1 }
           Some(e)
         }
       } else if (field == 1 && wire == 5) {
         n += 1
         if (n > MaxListElems || s + 4 > e) None
-        else { out += u32le(b, s); Some(s + 4) }
+        else { out += le32(b, s).toInt; Some(s + 4) }
       } else if (wire == 2) Some(e)
       else skipField(b, s, e, wire)
     }

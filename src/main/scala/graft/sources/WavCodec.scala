@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** RIFF/WAVE 16-bit PCM codec — the audio arm of the multimodal-column
   * mandate (BASELINE.json; completes the modality set next to PPM/TIFF
   * rasters, npy arrays, and tar shards). Same contract discipline as
@@ -15,36 +17,30 @@ object WavCodec {
   /** Decoded audio: interleaved 16-bit samples widened to Int. */
   case class Wav(sampleRate: Int, channels: Int, samples: Array[Int])
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xff).toLong | ((b(o + 1) & 0xff).toLong << 8) |
-      ((b(o + 2) & 0xff).toLong << 16) | ((b(o + 3) & 0xff).toLong << 24)
-  private def tag(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, "US-ASCII")
-
   /** Strict-but-skipping decode: walks the RIFF chunk list, requires
     * one PCM (format 1) 16-bit `fmt ` chunk and one `data` chunk,
     * skips everything else (word-aligned, per spec). */
-  def decode(bytes: Array[Byte]): Option[Wav] = {
+  def decode(bytes: Array[Byte]): Option[Wav] = refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[Wav] = {
     if (bytes.length < 44) return None
-    if (tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WAVE") return None
-    val riffLen = u32(bytes, 4)
+    if (fourcc(bytes, 0) != "RIFF" || fourcc(bytes, 8) != "WAVE") return None
+    val riffLen = le32(bytes, 4)
     if (riffLen + 8 > bytes.length) return None
     var pos = 12
     var rate = -1; var channels = -1
     var dataOff = -1; var dataLen = -1L
     while (pos + 8 <= bytes.length) {
-      val id = tag(bytes, pos)
-      val len = u32(bytes, pos + 4)
+      val id = fourcc(bytes, pos)
+      val len = le32(bytes, pos + 4)
       if (len < 0 || pos + 8 + len > bytes.length) return None
       id match {
         case "fmt " =>
           if (len < 16) return None
-          if (u16(bytes, pos + 8) != 1) return None // PCM only
-          channels = u16(bytes, pos + 10)
-          rate = u32(bytes, pos + 12).toInt
-          if (u16(bytes, pos + 22) != 16) return None // 16-bit only
+          if (le16(bytes, pos + 8) != 1) return None // PCM only
+          channels = le16(bytes, pos + 10)
+          rate = le32(bytes, pos + 12).toInt
+          if (le16(bytes, pos + 22) != 16) return None // 16-bit only
           if (channels < 1 || channels > 2 || rate <= 0) return None
         case "data" =>
           dataOff = pos + 8; dataLen = len
@@ -59,8 +55,7 @@ object WavCodec {
     val out = new Array[Int](n)
     var i = 0
     while (i < n) {
-      out(i) = ((bytes(dataOff + 2 * i) & 0xff) |
-        (bytes(dataOff + 2 * i + 1) << 8)).toShort.toInt
+      out(i) = le16(bytes, dataOff + 2 * i).toShort.toInt
       i += 1
     }
     Some(Wav(rate, channels, out))

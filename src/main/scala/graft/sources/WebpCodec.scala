@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** WebP container codec — WebP is the dominant image format of the
   * modern web, and a crawl pipeline's first pass needs canvas
   * dimensions, alpha/animation flags, the animation frame table and
@@ -27,26 +29,12 @@ object WebpCodec {
 
   val MaxChunks: Int = 4096
 
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private val fail = new Fail
-  private def err(): Nothing = throw fail
-
   def decode(bytes: Array[Byte]): Option[Vector[Meta]] =
-    try Some(run(bytes))
-    catch { case _: Fail => None }
+    refusing(run(bytes))
 
   private def run(b: Array[Byte]): Vector[Meta] = {
-    def u8(p: Int): Int = { if (p < 0 || p >= b.length) err(); b(p) & 0xff }
-    def u16(p: Int): Int = u8(p) | (u8(p + 1) << 8)
-    def u24(p: Int): Int = u8(p) | (u8(p + 1) << 8) | (u8(p + 2) << 16)
-    def u32(p: Int): Long =
-      (u24(p).toLong | (u8(p + 3).toLong << 24)) & 0xffffffffL
-    def fourcc(p: Int): String =
-      new String(Array(u8(p).toByte, u8(p + 1).toByte, u8(p + 2).toByte,
-        u8(p + 3).toByte), java.nio.charset.StandardCharsets.US_ASCII)
-
-    if (b.length < 20 || fourcc(0) != "RIFF" || fourcc(8) != "WEBP") err()
-    val riffEnd = math.min(8L + u32(4), b.length.toLong)
+    if (b.length < 20 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WEBP") refuse()
+    val riffEnd = math.min(8L + le32(b, 4), b.length.toLong)
 
     val out = Vector.newBuilder[Meta]
     var width = -1L
@@ -59,16 +47,16 @@ object WebpCodec {
 
     /** VP8 lossy frame header → (w, h); sync-checked. */
     def vp8Dims(at: Int, end: Long): (Long, Long) = {
-      if (at + 10 > end) err()
-      if (u8(at + 3) != 0x9d || u8(at + 4) != 0x01 || u8(at + 5) != 0x2a)
-        err()
-      ((u16(at + 6) & 0x3fff).toLong, (u16(at + 8) & 0x3fff).toLong)
+      if (at + 10 > end) refuse()
+      if (u8(b, at + 3) != 0x9d || u8(b, at + 4) != 0x01 ||
+          u8(b, at + 5) != 0x2a) refuse()
+      ((le16(b, at + 6) & 0x3fff).toLong, (le16(b, at + 8) & 0x3fff).toLong)
     }
     /** VP8L header → (w, h, alpha). */
     def vp8lDims(at: Int, end: Long): (Long, Long, Long) = {
-      if (at + 5 > end) err()
-      if (u8(at) != 0x2f) err()
-      val bits = u32(at + 1)
+      if (at + 5 > end) refuse()
+      if (u8(b, at) != 0x2f) refuse()
+      val bits = le32(b, at + 1)
       ((bits & 0x3fff) + 1, ((bits >> 14) & 0x3fff) + 1,
         (bits >> 28) & 1)
     }
@@ -76,11 +64,11 @@ object WebpCodec {
     def walkChunks(from: Long, to: Long, top: Boolean): Unit = {
       var p = from
       while (p + 8 <= to) {
-        if (chunkIdx >= MaxChunks) err()
-        val cc = fourcc(p.toInt)
-        val sz = u32((p + 4).toInt)
+        if (chunkIdx >= MaxChunks) refuse()
+        val cc = fourcc(b, p)
+        val sz = le32(b, p + 4)
         val at = (p + 8).toInt
-        if (p + 8 + sz > to) err()
+        if (p + 8 + sz > to) refuse()
         if (top) {
           out += Meta("chunk", cc, chunkIdx, sz, null)
           chunkIdx += 1
@@ -95,31 +83,31 @@ object WebpCodec {
               format = "VP8L"; width = w; height = h; alpha = a
             }
           case "VP8X" =>
-            if (sz < 10) err()
-            val flags = u8(at)
+            if (sz < 10) refuse()
+            val flags = u8(b, at)
             alpha = (flags >> 4) & 1
             anim = (flags >> 1) & 1
-            width = u24(at + 4) + 1L
-            height = u24(at + 7) + 1L
+            width = le24(b, at + 4) + 1L
+            height = le24(b, at + 7) + 1L
             format = "VP8X"
           case "ANIM" =>
-            if (sz < 6) err()
-            out += Meta("anim", "loop_count", 0, u16(at + 4), null)
+            if (sz < 6) refuse()
+            out += Meta("anim", "loop_count", 0, le16(b, at + 4), null)
           case "ANMF" =>
-            if (sz < 16) err()
+            if (sz < 16) refuse()
             val i = frameIdx
             frameIdx += 1
-            out += Meta("frame", "x", i, u24(at) * 2L, null)
-            out += Meta("frame", "y", i, u24(at + 3) * 2L, null)
-            out += Meta("frame", "width", i, u24(at + 6) + 1L, null)
-            out += Meta("frame", "height", i, u24(at + 9) + 1L, null)
-            out += Meta("frame", "duration_ms", i, u24(at + 12), null)
-            out += Meta("frame", "dispose", i, u8(at + 15) & 1, null)
+            out += Meta("frame", "x", i, le24(b, at) * 2L, null)
+            out += Meta("frame", "y", i, le24(b, at + 3) * 2L, null)
+            out += Meta("frame", "width", i, le24(b, at + 6) + 1L, null)
+            out += Meta("frame", "height", i, le24(b, at + 9) + 1L, null)
+            out += Meta("frame", "duration_ms", i, le24(b, at + 12), null)
+            out += Meta("frame", "dispose", i, u8(b, at + 15) & 1, null)
             walkChunks(at + 16L, at + sz, top = false) // the frame data
           case "EXIF" =>
             // raw TIFF block — the image-PII surface; malformed refuses
             val block = java.util.Arrays.copyOfRange(b, at, (at + sz).toInt)
-            val tags = ExifCodec.parseTiff(block).getOrElse(err())
+            val tags = ExifCodec.parseTiff(block).getOrElse(refuse())
             def gps(tag: Int): Option[ExifCodec.Tag] =
               tags.find(t => t.ifd == "gps" && t.tag == tag && t.idx == 0)
             for (lat <- gps(2); ref <- gps(1)) {
@@ -134,11 +122,11 @@ object WebpCodec {
         }
         p += 8 + sz + (sz & 1) // RIFF even padding
       }
-      if (p != to) err() // trailing garbage inside the walked span
+      if (p != to) refuse() // trailing garbage inside the walked span
     }
 
     walkChunks(12L, riffEnd, top = true)
-    if (format == null || width <= 0 || height <= 0) err()
+    if (format == null || width <= 0 || height <= 0) refuse()
     Vector(
       Meta("canvas", "width", 0, width, null),
       Meta("canvas", "height", 0, height, null),

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** ZIP archive codec (PKWARE APPNOTE) — the other archive shape
   * datasets actually ship in next to tar/webdataset: Kaggle exports,
   * image-caption bundles, scraped-document drops. The reference's
@@ -54,30 +56,33 @@ object ZipCodec {
 
   /** Decode an archive to its file members (per-member degrade), or
     * None if the central structure is broken. Never throws. */
-  def decode(bytes: Array[Byte]): Option[Vector[Member]] = {
+  def decode(bytes: Array[Byte]): Option[Vector[Member]] =
+    refusing(run(bytes)).flatten
+
+  private def run(bytes: Array[Byte]): Option[Vector[Member]] = {
     val eocd = findEocd(bytes).getOrElse(return None)
-    var total: Long = u16(bytes, eocd + 10)
-    var cdSize: Long = u32(bytes, eocd + 12)
-    var cdOff: Long = u32(bytes, eocd + 16)
-    val disk = u16(bytes, eocd + 4)
-    val cdDisk = u16(bytes, eocd + 6)
-    val onDisk = u16(bytes, eocd + 8)
+    var total: Long = le16(bytes, eocd + 10)
+    var cdSize: Long = le32(bytes, eocd + 12)
+    var cdOff: Long = le32(bytes, eocd + 16)
+    val disk = le16(bytes, eocd + 4)
+    val cdDisk = le16(bytes, eocd + 6)
+    val onDisk = le16(bytes, eocd + 8)
     if (total == 0xffffL || onDisk == 0xffff || cdSize == 0xffffffffL ||
         cdOff == 0xffffffffL || disk == 0xffff || cdDisk == 0xffff) {
       // ZIP64: the locator sits directly before the EOCD and names
       // the ZIP64 EOCD record holding the real 64-bit values
       val loc = eocd - 20
-      if (loc < 0 || u32(bytes, loc) != Loc64Sig) return None
-      if (u32(bytes, loc + 4) != 0 || u32(bytes, loc + 16) != 1) return None // multi-disk
-      val e64 = i64le(bytes, loc + 8)
-      if (e64 < 0 || e64 + 56 > loc || u32(bytes, e64.toInt) != Eocd64Sig)
+      if (loc < 0 || le32(bytes, loc) != Loc64Sig) return None
+      if (le32(bytes, loc + 4) != 0 || le32(bytes, loc + 16) != 1) return None // multi-disk
+      val e64 = le64(bytes, loc + 8)
+      if (e64 < 0 || e64 + 56 > loc || le32(bytes, e64.toInt) != Eocd64Sig)
         return None
       val p64 = e64.toInt
-      if (u32(bytes, p64 + 16) != 0 || u32(bytes, p64 + 20) != 0) return None // disks
-      total = i64le(bytes, p64 + 32)
-      if (i64le(bytes, p64 + 24) != total) return None // on-disk != total
-      cdSize = i64le(bytes, p64 + 40)
-      cdOff = i64le(bytes, p64 + 48)
+      if (le32(bytes, p64 + 16) != 0 || le32(bytes, p64 + 20) != 0) return None // disks
+      total = le64(bytes, p64 + 32)
+      if (le64(bytes, p64 + 24) != total) return None // on-disk != total
+      cdSize = le64(bytes, p64 + 40)
+      cdOff = le64(bytes, p64 + 48)
       if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > e64) return None
     } else {
       if (disk != 0 || cdDisk != 0 || onDisk != total) return None
@@ -89,17 +94,17 @@ object ZipCodec {
     var n = 0
     var budget = MaxTotalBytes
     while (n < total) {
-      if (p + 46 > bytes.length || u32(bytes, p) != CenSig) return None
-      val flags = u16(bytes, p + 8)
-      val method = u16(bytes, p + 10)
-      val crc = u32(bytes, p + 16)
-      var csize = u32(bytes, p + 20)
-      var usize = u32(bytes, p + 24)
-      val nameLen = u16(bytes, p + 28)
-      val extraLen = u16(bytes, p + 30)
-      val commentLen = u16(bytes, p + 32)
-      val diskStart = u16(bytes, p + 34)
-      var locOff = u32(bytes, p + 42)
+      if (p + 46 > bytes.length || le32(bytes, p) != CenSig) return None
+      val flags = le16(bytes, p + 8)
+      val method = le16(bytes, p + 10)
+      val crc = le32(bytes, p + 16)
+      var csize = le32(bytes, p + 20)
+      var usize = le32(bytes, p + 24)
+      val nameLen = le16(bytes, p + 28)
+      val extraLen = le16(bytes, p + 30)
+      val commentLen = le16(bytes, p + 32)
+      val diskStart = le16(bytes, p + 34)
+      var locOff = le32(bytes, p + 42)
       if (p + 46 + nameLen + extraLen > bytes.length) return None
       val name = new String(bytes, p + 46, nameLen, "UTF-8")
       // ZIP64 extra (id 0x0001): 64-bit values, present IN ORDER for
@@ -110,26 +115,26 @@ object ZipCodec {
         val qEnd = q + extraLen
         var found = false
         while (q + 4 <= qEnd && !found) {
-          val id = u16(bytes, q)
-          val sz = u16(bytes, q + 2)
+          val id = le16(bytes, q)
+          val sz = le16(bytes, q + 2)
           if (q + 4 + sz > qEnd) return None
           if (id == 0x0001) {
             var r = q + 4
             val rEnd = q + 4 + sz
             if (usize == 0xffffffffL) {
               if (r + 8 > rEnd) return None
-              usize = i64le(bytes, r); r += 8
+              usize = le64(bytes, r); r += 8
             }
             if (csize == 0xffffffffL) {
               if (r + 8 > rEnd) return None
-              csize = i64le(bytes, r); r += 8
+              csize = le64(bytes, r); r += 8
             }
             if (locOff == 0xffffffffL) {
               if (r + 8 > rEnd) return None
-              locOff = i64le(bytes, r); r += 8
+              locOff = le64(bytes, r); r += 8
             }
             if (diskStart == 0xffff) {
-              if (r + 4 > rEnd || u32(bytes, r) != 0) return None
+              if (r + 4 > rEnd || le32(bytes, r) != 0) return None
             }
             if (usize < 0 || csize < 0 || locOff < 0) return None
             found = true
@@ -150,20 +155,17 @@ object ZipCodec {
     Some(out.result())
   }
 
-  private def i64le(b: Array[Byte], p: Int): Long =
-    u32(b, p) | (u32(b, p + 4) << 32)
-
   /** One member: local-header check + decompress + CRC/size verify.
     * None skips the member, not the archive. */
   private def member(
       bytes: Array[Byte], name: String, flags: Int, method: Int, crc: Long,
       csize: Int, usize: Int, locOff: Long): Option[Member] = {
     if ((flags & 0x1) != 0) return None // encrypted
-    if (locOff + 30 > bytes.length || u32(bytes, locOff.toInt) != LocSig)
+    if (locOff + 30 > bytes.length || le32(bytes, locOff.toInt) != LocSig)
       return None
     val lp = locOff.toInt
-    val lNameLen = u16(bytes, lp + 26)
-    val lExtraLen = u16(bytes, lp + 28)
+    val lNameLen = le16(bytes, lp + 26)
+    val lExtraLen = le16(bytes, lp + 28)
     val dataOff = lp + 30 + lNameLen + lExtraLen
     if (csize < 0 || dataOff.toLong + csize > bytes.length) return None
     val data: Array[Byte] = method match {
@@ -212,16 +214,10 @@ object ZipCodec {
     val floor = math.max(0, bytes.length - 22 - 65535)
     var p = bytes.length - 22
     while (p >= floor) {
-      if (u32(bytes, p) == EocdSig &&
-        p + 22 + u16(bytes, p + 20) == bytes.length) return Some(p)
+      if (le32(bytes, p) == EocdSig &&
+        p + 22 + le16(bytes, p + 20) == bytes.length) return Some(p)
       p -= 1
     }
     None
   }
-
-  private def u16(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-
-  private def u32(b: Array[Byte], p: Int): Long =
-    (u16(b, p) | (u16(b, p + 2).toLong << 16)) & 0xffffffffL
 }

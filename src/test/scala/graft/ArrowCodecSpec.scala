@@ -199,13 +199,15 @@ class ArrowCodecSpec extends SparkSpec {
       Vector((Some(0L), false), (Some(1L), true)))
     // truncation + flip fuzz: never throws
     val f = fixture("nested333-25.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1978/963:911933a8fc6e0906", fz.hex)
   }
 
   test("struct-in-struct: dotted paths, ancestor-gated nullity, depth cap") {
@@ -244,13 +246,15 @@ class ArrowCodecSpec extends SparkSpec {
       "4-level struct nesting must refuse")
     // truncation + flip fuzz over the new fixture: never throws
     val f = fixture("structstruct-23.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "2416/1254:b06a0e900ae635a1", fz.hex)
   }
 
   test("depth-3 list<struct<list<scalar>>>: ragged fields per element") {
@@ -292,13 +296,15 @@ class ArrowCodecSpec extends SparkSpec {
       Vector(("fsl2<f32>", true, None)))
     // fuzz the fixture — truncations and flips must never throw
     val f = fixture("nested3-20.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "2426/1211:8c932eac48e5aa9b", fz.hex)
   }
 
   test("MonthDayNano intervals decode as 16 hex bytes; other units refuse") {
@@ -316,13 +322,15 @@ class ArrowCodecSpec extends SparkSpec {
     // every plausible byte is fragile, so assert via the API rule
     // instead: a fuzz sweep must never throw)
     val f = fixture("interval-22.arrow")
-    (0 until f.length by 5).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 5).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x33).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "867/428:91fe110825f43ae7", fz.hex)
   }
 
   test("Map columns decode as keyed entries; delta dictionaries append") {
@@ -358,16 +366,18 @@ class ArrowCodecSpec extends SparkSpec {
     assert(ds.filter(_.batch == 0).map(_.str.get) == Vector("x", "y", "x"))
     assert(ds.filter(_.batch == 1).map(_.str.get) == Vector("z", "y", "w"))
     // fuzz both
+    val fz = new FuzzDigest
     for (name <- Seq("map-15.arrow", "deltadict-16.arrow")) {
       val f = fixture(name)
-      (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+      (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
       var j = 0
       while (j < f.length) {
         val m = f.clone(); m(j) = (m(j) ^ 0x44).toByte
-        ArrowCodec.decode(m)
+        fz.add(ArrowCodec.decode(m))
         j += 1
       }
     }
+    assert(fz.hex == "2151/781:6b1bffc803c412f9", fz.hex)
   }
 
   test("doubly-nested lists: list<list<i64>> batches, list<fsl2<f32>> grids") {
@@ -398,13 +408,15 @@ class ArrowCodecSpec extends SparkSpec {
     assert(flat.forall(_.elem2.isEmpty))
     // fuzz the nested fixture
     val f = fixture("nested2-14.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x71).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1530/758:ddd73c045813527d", fz.hex)
   }
 
   test("Null columns decode all-null; RunEndEncoded expands to logical values") {
@@ -452,24 +464,28 @@ class ArrowCodecSpec extends SparkSpec {
 
   test("nested fixture survives truncation and fuzz without throwing") {
     val f = fixture("nested-13.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "2892/1423:eafba50cdb6d6b55", fz.hex)
   }
 
   test("logical fixture survives truncation and fuzz without throwing") {
     val f = fixture("logical-12.arrow")
-    (0 until f.length by 11).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 11).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x2d).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "3223/1788:7f54103680612d04", fz.hex)
   }
 
   test("refusals: truncation, trailing garbage after stream EOS") {
@@ -478,33 +494,37 @@ class ArrowCodecSpec extends SparkSpec {
     // one flipped byte in a compressed body must refuse, not throw
     val z = fixture("zstdipc-03.arrow")
     var j = z.length / 3
+    val fz = new FuzzDigest
     while (j < z.length / 3 + 40 && j < z.length) {
       val m = z.clone(); m(j) = (m(j) ^ 0x5a).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "40/0:40d69e0cf0f65c45", fz.hex)
   }
 
   test("hostile bytes never throw: truncations and fuzz over both framings") {
     val file = fixture("embed-01.arrow")
     val stream = fixture("stream-02.arrow")
     assert(ArrowCodec.decode(Array.emptyByteArray).isEmpty)
+    val fz = new FuzzDigest
     (0 until file.length by 7).foreach { k =>
-      ArrowCodec.decode(file.take(k))
-      ArrowCodec.decode(stream.take(math.min(k, stream.length)))
+      fz.add(ArrowCodec.decode(file.take(k)))
+      fz.add(ArrowCodec.decode(stream.take(math.min(k, stream.length))))
     }
     var j = 0
     while (j < file.length) {
       val m = file.clone(); m(j) = 0x55
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
     j = 0
     while (j < stream.length) {
       val m = stream.clone(); m(j) = (m(j) ^ 0x81).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "2258/1046:3d982720035e3520", fz.hex)
   }
 
   test("writer round-trips through the codec; committed fixture is byte-stable") {
@@ -644,13 +664,15 @@ class ArrowCodecSpec extends SparkSpec {
       "struct-inside-struct under list<struct> must refuse")
     // hostile-bytes sweep over the new graded fixture: never throws
     val f = fixture("liststructstruct-26.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1868/948:e722ee1d6a810e48", fz.hex)
   }
 
   test("top-level sparse and dense unions of scalar branches decode") {
@@ -688,13 +710,15 @@ class ArrowCodecSpec extends SparkSpec {
     assert(ll.filter(_.row == 3).map(_.bits) == Vector(Some(42L)))
     // hostile-bytes sweep: never throws
     val f = fixture("union-29.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1795/868:0a06f755f73548a1", fz.hex)
   }
 
   test("Utf8View/BinaryView columns decode; nested views refuse") {
@@ -724,13 +748,15 @@ class ArrowCodecSpec extends SparkSpec {
     // hostile-bytes sweep: never throws (the prefix-mirror check and
     // variadic bounds turn corruption into refusals)
     val f = fixture("view-32.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1520/673:0799901c86c20216", fz.hex)
   }
 
   test("ListView/LargeListView columns decode; nested child refuses") {
@@ -755,12 +781,14 @@ class ArrowCodecSpec extends SparkSpec {
       "list_view<list<i64>> must refuse")
     // hostile-bytes sweep: never throws
     val f = fixture("listview-34.arrow")
-    (0 until f.length by 7).foreach(k => ArrowCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 7).foreach(k => fz.add(ArrowCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x5c).toByte
-      ArrowCodec.decode(m)
+      fz.add(ArrowCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1301/601:2c87d06d25358748", fz.hex)
   }
 }

@@ -66,21 +66,23 @@ class AudioMetaCodecSpec extends SparkSpec {
 
   test("hostile bytes never throw: truncations and single-byte fuzz") {
     val f = fx("q_flac_meta", "tone-00.flac")
-    (0 until f.length by 2).foreach(k => AudioMetaCodec.decodeFlac(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 2).foreach(k => fz.add(AudioMetaCodec.decodeFlac(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x77).toByte
-      AudioMetaCodec.decodeFlac(m)
+      fz.add(AudioMetaCodec.decodeFlac(m))
       j += 1
     }
     val s = fx("q_id3_tags", "song-00.mp3")
-    (0 until s.length by 7).foreach(k => AudioMetaCodec.decodeMp3(s.take(k)))
+    (0 until s.length by 7).foreach(k => fz.add(AudioMetaCodec.decodeMp3(s.take(k))))
     j = 0
     while (j < s.length) {
       val m = s.clone(); m(j) = 0x2a
-      AudioMetaCodec.decodeMp3(m)
+      fz.add(AudioMetaCodec.decodeMp3(m))
       j += 3
     }
+    assert(fz.hex == "1151/881:13e4cf2736fc5ead", fz.hex)
   }
 
   test("Ogg/Opus: page CRC, spanning tags packet, duration, refusals") {
@@ -107,14 +109,16 @@ class AudioMetaCodecSpec extends SparkSpec {
     assert(AudioMetaCodec.decodeOgg(Array.emptyByteArray).isEmpty)
     // fuzz: never throw
     val good = fx("q_opus_meta", "talk-00.opus")
+    val fz = new FuzzDigest
     (0 until good.length by 3).foreach(k =>
-      AudioMetaCodec.decodeOgg(good.take(k)))
+      fz.add(AudioMetaCodec.decodeOgg(good.take(k))))
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = (m(j) ^ 0x19).toByte
-      AudioMetaCodec.decodeOgg(m)
+      fz.add(AudioMetaCodec.decodeOgg(m))
       j += 1
     }
+    assert(fz.hex == "970/0:4efcea6cfecb728d", fz.hex)
   }
 
   test("distributed ingest: both dirs, refused files absent") {

@@ -79,20 +79,22 @@ class GifCodecSpec extends SparkSpec {
 
   test("hostile bytes never throw: truncations and single-byte fuzz") {
     val good = fixture("anim-00.gif")
-    (0 until good.length).foreach(k => GifCodec.decode(good.take(k)))
+    val fz = new FuzzDigest
+    (0 until good.length).foreach(k => fz.add(GifCodec.decode(good.take(k))))
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = (m(j) ^ 0x2d).toByte
-      GifCodec.decode(m)
+      fz.add(GifCodec.decode(m))
       j += 1
     }
     val il = fixture("interlace-01.gif")
     j = 0
     while (j < il.length) {
       val m = il.clone(); m(j) = 0x55
-      GifCodec.decode(m)
+      fz.add(GifCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "298/72:88128b3ab7d3fe54", fz.hex)
   }
 
   test("encoder round-trips through the decoder, including a dictionary-full stream") {
@@ -213,13 +215,15 @@ class GifCodecSpec extends SparkSpec {
 
   test("composite never throws under truncation and single-byte fuzz") {
     val good = frameFixture("dispose-00.gif")
-    (0 until good.length).foreach(k => GifCodec.composite(good.take(k)))
+    val fz = new FuzzDigest
+    (0 until good.length).foreach(k => fz.add(GifCodec.composite(good.take(k))))
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = (m(j) ^ 0x4b).toByte
-      GifCodec.composite(m)
+      fz.add(GifCodec.composite(m))
       j += 1
     }
+    assert(fz.hex == "300/46:f09b340179dbfc47", fz.hex)
   }
 
   test("distributed canvas ingest: full-canvas rows, refused files absent") {

@@ -143,4 +143,8 @@ class GzipCodecSpec extends SparkSpec {
     assert((fhd >> 6) != 0 || ((fhd >> 5) & 1) == 1, f"no FCS: fhd=$fhd%02x")
   }
 
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    val d = FuzzDigest.sweep(goldenGz)(GzipCodec.decode)
+    assert(d == "160/6:e083607551c052a3", d)
+  }
 }

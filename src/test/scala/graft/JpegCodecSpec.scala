@@ -171,4 +171,20 @@ class JpegCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(JpegCodec.decode(Array.fill[Byte](64)(0x41)).isEmpty)
     assert(JpegCodec.decode(Array[Byte](0xff.toByte, 0xd8.toByte, 0x00, 0x00)).isEmpty)
   }
+
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    // one fixture per decoder entry point: baseline, lossless, 12-bit
+    val d = Seq(
+      FuzzDigest.sweep(readFix("rgb420_21x13.jpg"))(JpegCodec.decode),
+      FuzzDigest.sweep(Files.readAllBytes(
+        Paths.get("tools/fixtures/q_jpeg_lossless/gray8-p1.jpg")))(
+        JpegCodec.decodeLossless),
+      FuzzDigest.sweep(Files.readAllBytes(
+        Paths.get("tools/fixtures/q_jpeg12/gray12_11x9.jpg")))(
+        JpegCodec.decode12))
+    assert(d == Seq(
+      "1496/594:7ee9cd3d847c936b",
+      "380/33:72c915bfd5d3d799",
+      "962/367:f01a7dc669f4468a"), d)
+  }
 }

@@ -196,31 +196,35 @@ class Mp4CodecSpec extends SparkSpec {
 
   test("fragmented fixture survives truncation and fuzz without throwing") {
     val f = fixture("fmp4-07.mp4")
-    (0 until f.length by 5).foreach(k => Mp4Codec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 5).foreach(k => fz.add(Mp4Codec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x4b).toByte
-      Mp4Codec.decode(m)
+      fz.add(Mp4Codec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1589/1033:49255ede1eabeeea", fz.hex)
   }
 
   test("hostile bytes never throw: truncations and single-byte fuzz") {
     val good = fixture("vid-00.mp4")
-    (0 until good.length by 3).foreach(k => Mp4Codec.decode(good.take(k)))
+    val fz = new FuzzDigest
+    (0 until good.length by 3).foreach(k => fz.add(Mp4Codec.decode(good.take(k))))
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = (m(j) ^ 0x6e).toByte
-      Mp4Codec.decode(m)
+      fz.add(Mp4Codec.decode(m))
       j += 1
     }
     val av = fixture("av-01.mp4")
     j = 0
     while (j < av.length) {
       val m = av.clone(); m(j) = 0x7f
-      Mp4Codec.decode(m)
+      fz.add(Mp4Codec.decode(m))
       j += 2
     }
+    assert(fz.hex == "6207/4618:0991d28770d4f08d", fz.hex)
   }
 
   test("distributed ingest: per-sample rows with fetch-proving md5s") {

@@ -115,4 +115,9 @@ class NpyCodecSpec extends SparkSpec {
     assert(back(1L) == ((Seq(2, 2), Seq(1.0, 2.0, 3.0, 4.0))))
     assert(back(2L) == ((Seq(3), Seq(-1.0, 0.5, 9.0))))
   }
+
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    val d = FuzzDigest.sweep(goldenF4)(NpyCodec.decode)
+    assert(d == "304/91:aa58de75949e5128", d)
+  }
 }

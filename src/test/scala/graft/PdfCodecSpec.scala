@@ -48,18 +48,20 @@ class PdfCodecSpec extends SparkSpec {
     // fuzzing the modern shapes must never throw either
     val g = fixture("xrefstm-05.pdf")
     var j = 0
+    val fz = new FuzzDigest
     while (j < g.length) {
       val m = g.clone(); m(j) = (m(j) ^ 0x1c).toByte
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
     val o = fixture("objstm-06.pdf")
     j = 0
     while (j < o.length) {
       val m = o.clone(); m(j) = 0x37
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1046/307:7fb0ec1e6e7898e4", fz.hex)
   }
 
   test("refusals: dangling startxref, rootless xref stream, garbage, encryption") {
@@ -80,20 +82,22 @@ class PdfCodecSpec extends SparkSpec {
 
   test("hostile bytes never throw: truncations and single-byte fuzz") {
     val good = fixture("doc-00.pdf")
-    (0 until good.length by 5).foreach(k => PdfCodec.decode(good.take(k)))
+    val fz = new FuzzDigest
+    (0 until good.length by 5).foreach(k => fz.add(PdfCodec.decode(good.take(k))))
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = (m(j) ^ 0x31).toByte
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
     val fl = fixture("doc-01.pdf")
     j = 0
     while (j < fl.length) {
       val m = fl.clone(); m(j) = 0x41
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 2
     }
+    assert(fz.hex == "1294/400:7eeab4140feb78eb", fz.hex)
   }
 
   test("empty-password encryption decrypts: RC4-128 and AES-128 crypt filter") {
@@ -116,13 +120,15 @@ class PdfCodecSpec extends SparkSpec {
       "plain latin1"))       // Tf back to a no-CMap font
     // fuzz: CMap bytes are attacker-controlled too
     val f = fixture("cmap-11.pdf")
-    (0 until f.length by 9).foreach(k => PdfCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 9).foreach(k => fz.add(PdfCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x63).toByte
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1608/476:ffe08ab381ba1c43", fz.hex)
   }
 
   test("AES-256 (V5/R6, the Acrobat-X+ default) decrypts under the empty password") {
@@ -130,13 +136,15 @@ class PdfCodecSpec extends SparkSpec {
     assert(rs.map(_.text) == Vector(
       "modern aes-256 body", "second run under v5"))
     val f = fixture("enc-aes256-12.pdf")
-    (0 until f.length by 9).foreach(k => PdfCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 9).foreach(k => fz.add(PdfCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x2b).toByte
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1278/184:b8fef2059416a86f", fz.hex)
   }
 
   test("the modern encrypted shape: xref stream + ObjStm + AES-256 compose") {
@@ -147,13 +155,15 @@ class PdfCodecSpec extends SparkSpec {
     assert(rs.map(_.text) ==
       Vector("modern encrypted: objstm under aes-256"))
     val f = fixture("encmodern-14.pdf")
-    (0 until f.length by 9).foreach(k => PdfCodec.decode(f.take(k)))
+    val fz = new FuzzDigest
+    (0 until f.length by 9).foreach(k => fz.add(PdfCodec.decode(f.take(k))))
     var j = 0
     while (j < f.length) {
       val m = f.clone(); m(j) = (m(j) ^ 0x19).toByte
-      PdfCodec.decode(m)
+      fz.add(PdfCodec.decode(m))
       j += 1
     }
+    assert(fz.hex == "1286/164:4776e1e778a6d7b9", fz.hex)
   }
 
   test("a REAL user password fails the /U check and refuses whole-file") {
@@ -162,16 +172,18 @@ class PdfCodecSpec extends SparkSpec {
   }
 
   test("encrypted fixtures survive truncation and fuzz without throwing") {
+    val fz = new FuzzDigest
     for (name <- Seq("enc-rc4-08.pdf", "enc-aes-09.pdf")) {
       val f = fixture(name)
-      (0 until f.length by 9).foreach(k => PdfCodec.decode(f.take(k)))
+      (0 until f.length by 9).foreach(k => fz.add(PdfCodec.decode(f.take(k))))
       var j = 0
       while (j < f.length) {
         val m = f.clone(); m(j) = (m(j) ^ 0x37).toByte
-        PdfCodec.decode(m)
+        fz.add(PdfCodec.decode(m))
         j += 1
       }
     }
+    assert(fz.hex == "1984/399:b8513e6c53501335", fz.hex)
   }
 
   test("malformed name escapes and multi-dot numbers refuse, never throw") {

@@ -155,4 +155,9 @@ class PngCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(PngCodec.decode(hostile).isEmpty, "FDICT stream accepted")
     assert((System.nanoTime() - t0) < 5e9, "decode did not return promptly")
   }
+
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    val d = FuzzDigest.sweep(goldenRgb)(PngCodec.decode)
+    assert(d == "170/0:308ae8a272d4900d", d)
+  }
 }

@@ -100,18 +100,20 @@ class SafetensorsCodecSpec extends SparkSpec {
 
   test("hostile bytes never throw: truncations and single-byte fuzz refuse or decode") {
     assert(SafetensorsCodec.decode(Array.emptyByteArray).isEmpty)
+    val fz = new FuzzDigest
     (0 until basic.length).foreach { k =>
-      SafetensorsCodec.decode(basic.take(k))
+      fz.add(SafetensorsCodec.decode(basic.take(k)))
     }
     var j = 0
     while (j < basic.length) {
       val m = basic.clone(); m(j) = 0x55
-      SafetensorsCodec.decode(m)
+      fz.add(SafetensorsCodec.decode(m))
       j += 1
     }
     // header length field claiming past EOF, and a giant header claim
     val big = basic.clone(); big(0) = -1; big(6) = 0x7f
     assert(SafetensorsCodec.decode(big).isEmpty)
+    assert(fz.hex == "304/36:7f28fc408ec7dac7", fz.hex)
   }
 
   test("element budget refuses a shard claiming billions of elements") {

@@ -139,6 +139,7 @@ class TfRecordCodecSpec extends AnyFunSuite {
       entry("f", packedFloats(7, 8)))) ++
       frame(example(entry("u", packedInts(4))))
     val rnd = new scala.util.Random(42)
+    val fz = new FuzzDigest
     (0 until 500).foreach { _ =>
       val b = base.clone
       val flips = 1 + rnd.nextInt(4)
@@ -146,7 +147,10 @@ class TfRecordCodecSpec extends AnyFunSuite {
         b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
       }
       val cut = if (rnd.nextBoolean()) b.take(rnd.nextInt(b.length)) else b
-      TfRecordCodec.parse(cut).foreach(_.foreach(TfRecordCodec.parseExample))
+      val recs = TfRecordCodec.parse(cut)
+      fz.add(recs)
+      recs.foreach(_.foreach(r => fz.add(TfRecordCodec.parseExample(r))))
     }
+    assert(fz.hex == "503/5:58c3af2b9fd7526d", fz.hex)
   }
 }

@@ -289,4 +289,22 @@ class TiffRasterSpec extends SparkSpec {
     assert(far._5 == 10.0 + 2.5 * 0.25 && far._6 == 20.0 - 1.5 * 0.125)
     assert(far._4 == 5.0)
   }
+
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    // both byte orders through the raster decoder, and a georeferenced
+    // container through the georef decoder
+    val geo = MultimodalOps.encodeTiffRaster(4, 3, 1, "i16",
+      Array.tabulate(12)(i => (i * 7 % 50 - 25).toDouble),
+      lzw = true, predictor = true, georef = Some(MultimodalOps.TiffGeoref(
+        0.001953125, 0.0009765625, 0.0, 0.0, -17.25, 14.75, 4326,
+        pixelIsArea = true)))
+    val d = Seq(
+      FuzzDigest.sweep(goldenLzwI16)(MultimodalOps.decodeTiffRaster),
+      FuzzDigest.sweep(goldenLzwF32be)(MultimodalOps.decodeTiffRaster),
+      FuzzDigest.sweep(geo)(MultimodalOps.decodeTiffGeoref))
+    assert(d == Seq(
+      "428/50:7abba6abb17d4c19",
+      "388/62:9bfdf778d8c44a8b",
+      "632/335:c610d8c0ad476406"), d)
+  }
 }

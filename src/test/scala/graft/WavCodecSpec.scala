@@ -93,4 +93,9 @@ class WavCodecSpec extends SparkSpec {
     assert(back(1L) == ((8000, 1, Seq(5, -5, 300, -300))))
     assert(back(2L) == ((16000, 2, Seq(1, 2, 3, 4, -32768, 32767))))
   }
+
+  test("hostile bytes never throw: every truncation and flip, digest-pinned") {
+    val d = FuzzDigest.sweep(goldenStereo)(WavCodec.decode)
+    assert(d == "120/26:0f178030b8c5f94d", d)
+  }
 }
