@@ -327,38 +327,6 @@ object GraphOps {
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
   }
 
-  private val smallMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.rdd.RDD[_]]()
-
-  /** Eagerly localCheckpoint a relation that downstream subtrees read
-    * MANY times (edge lists feeding degree tables, orientation, and
-    * closure probes): without it Spark recomputes the full upstream
-    * subtree — e.g. a fact-table self-join — once per read, which
-    * turned the sf0.1 triangle census into 6 redundant edge builds.
-    * Per-(application, tag) memo unpersists the previous call's
-    * blocks, so repeated invocations in a long-lived session (bench
-    * loops, notebooks) hold at most one checkpoint per tag.
-    *
-    * Caveat — the blocks have no owner beyond that memo: a
-    * localCheckpoint truncates lineage, so its blocks CANNOT be
-    * recomputed. A block that is lost (evicted, or its executor gone)
-    * fails every later job reading it with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, and a second build with the
-    * same tag unpersists the first build's blocks, so acting on a
-    * DataFrame from the earlier build (held by a caller, or built
-    * concurrently in the same session) fails the same way. Giving
-    * these blocks a per-invocation owner and lifetime is ROADMAP
-    * item 2. */
-  private[graft] def materializeOnce(df: DataFrame, tag: String): DataFrame = {
-    val out = df.localCheckpoint()
-    val key = out.sparkSession.sparkContext.applicationId + "|" + tag
-    backingRdd(out).foreach { rdd =>
-      val prev = smallMemo.put(key, rdd)
-      if (prev != null && (prev ne rdd)) prev.unpersist(blocking = false)
-    }
-    out
-  }
-
   /** Fixed-iteration PageRank over a DIRECTED edge list — the
     * importance-ranking companion to [[connectedComponents]]: dedup
     * clusters tell you what is the same, PageRank tells you what is
@@ -385,18 +353,16 @@ object GraphOps {
     * unrolled plan needs no lineage truncation. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
-    val e = materializeOnce(
+    val e = ScaleOps.materializeOnce(
       edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")),
-      "pagerank_edges")
-    val deg = materializeOnce(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
-      "pagerank_deg")
+        col(dstCol).cast("long").as("dst")))
+    val deg = ScaleOps.materializeOnce(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")))
     val nTab = deg.agg(count(lit(1)).as("n_nodes"))
     // (node, outdeg, n_nodes) spine materialized ONCE: the old loop
     // re-embedded the 1-row N aggregate and its broadcast cross-join
     // in every round's plan (3× the degree aggregation + BNLJ)
-    val degN = materializeOnce(deg.crossJoin(broadcast(nTab)), "pagerank_degN")
+    val degN = ScaleOps.materializeOnce(deg.crossJoin(broadcast(nTab)))
     // rank table carries (node, outdeg, n_nodes, rank)
     var ranks = degN
       .withColumn("rank", lit(1.0) / col("n_nodes").cast("double"))
@@ -435,11 +401,11 @@ object GraphOps {
     *         each triangle exactly once
     */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = materializeOnce(
+    val e = ScaleOps.materializeOnce(
       edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
         .where(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct(), "triangle_edges")
+        .distinct())
     val deg = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // orient: src = lower (deg, id), dst = higher; carry dst's ordkey

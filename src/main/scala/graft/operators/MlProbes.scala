@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * `spark.ml` estimators, so fitting is distributed and the fitted
   * model broadcasts for scoring. Train/val assignment uses the
   * deterministic hash split ([[PipelineOps.hashSplit]]), never a
-  * stateful sampler. */
+  * stateful sampler. Each probe caches its prepared table for the fit
+  * and the scoring and releases it before returning, so no
+  * CacheManager entry outlives the call. */
 object MlProbes {
 
   /** embeddings table → (features: Vector, label, split). */
@@ -37,19 +39,23 @@ object MlProbes {
   /** Multinomial logistic-regression probe (eval/eval.py:191-199). */
   def logisticProbe(embeddings: DataFrame): ProbeResult = {
     val df = prepare(embeddings).cache()
-    val train = df.filter(col("split") === "train")
-    val lr = new LogisticRegression().setMaxIter(50).setRegParam(0.01)
-    val m = lr.fit(train)
-    evaluate(m.transform(_), df.filter(col("split") === "val"), train.count())
+    try {
+      val train = df.filter(col("split") === "train")
+      val lr = new LogisticRegression().setMaxIter(50).setRegParam(0.01)
+      val m = lr.fit(train)
+      evaluate(m.transform(_), df.filter(col("split") === "val"), train.count())
+    } finally df.unpersist()
   }
 
   /** Random-forest probe (eval/eval.py:200-205). */
   def forestProbe(embeddings: DataFrame, seed: Long = 42L): ProbeResult = {
     val df = prepare(embeddings).cache()
-    val train = df.filter(col("split") === "train")
-    val rf = new RandomForestClassifier()
-      .setNumTrees(50).setMaxDepth(8).setSeed(seed)
-    val m = rf.fit(train)
-    evaluate(m.transform(_), df.filter(col("split") === "val"), train.count())
+    try {
+      val train = df.filter(col("split") === "train")
+      val rf = new RandomForestClassifier()
+        .setNumTrees(50).setMaxDepth(8).setSeed(seed)
+      val m = rf.fit(train)
+      evaluate(m.transform(_), df.filter(col("split") === "val"), train.count())
+    } finally df.unpersist()
   }
 }

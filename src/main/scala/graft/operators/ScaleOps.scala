@@ -47,19 +47,14 @@ object ScaleOps {
     * persist, not Dataset.persist — no CacheManager entry to leak
     * past the query. Storage is SERIALIZED (MEMORY_AND_DISK_SER) to
     * bound the footprint — deserialized Row caches of a full table
-    * run several× larger — and each call unpersists the PREVIOUS
-    * call's blocks for its session (the long-lived-session pattern:
-    * a bench or notebook re-invoking the operator would otherwise
-    * stack full-table caches until a driver GC lets the
-    * ContextCleaner catch up). An evicted or early-unpersisted block
-    * recomputes deterministically (the shuffle map output is fixed,
-    * the local sort total), so eager cleanup can never change
-    * results. Output: the input columns + `shuffle_rank` (1-based).
-    * Deterministic and partition-count-invariant (spec-pinned against
-    * the bounded declared query). */
-  private val lastShuffleRdd =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.rdd.RDD[_]]()
-
+    * run several× larger. The blocks live as long as the returned
+    * DataFrame (the lifetime contract is at [[materializeOnce]]); an
+    * evicted block recomputes deterministically (the shuffle map
+    * output is fixed, the local sort total), so storage pressure can
+    * never change results. Output: the input columns +
+    * `shuffle_rank` (1-based). Deterministic and
+    * partition-count-invariant (spec-pinned against the bounded
+    * declared query). */
   def deterministicShuffle(df: DataFrame, idCol: String, seed: String,
                            numPartitions: Int = 0): DataFrame = {
     val keyed = df.withColumn("_mk",
@@ -80,8 +75,8 @@ object ScaleOps {
     * This is the distributed primitive behind exact rank statistics —
     * q_shuffle_rank's corpus permutation and q_auc's Mann–Whitney
     * rank sums — where a `Window.orderBy` with no partition would
-    * funnel 100 TB through one task. Persistence/cleanup contract is
-    * documented above. */
+    * funnel 100 TB through one task. Persistence is documented at
+    * [[deterministicShuffle]]. */
   def globalRank(df: DataFrame, sortCols: Seq[Column], rankCol: String,
                  numPartitions: Int = 0,
                  dropAfterSort: Seq[String] = Nil): DataFrame = {
@@ -96,8 +91,6 @@ object ScaleOps {
         rankCol, org.apache.spark.sql.types.LongType, nullable = false))
     val rows = sorted.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val prev = lastShuffleRdd.put(spark.sparkContext.applicationId, rows)
-    if (prev != null && (prev ne rows)) prev.unpersist(blocking = false)
     val ranked = rows.zipWithIndex.map { case (row, idx) =>
       org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (idx + 1L))
     }
@@ -111,10 +104,7 @@ object ScaleOps {
     * consumers (q_ks_test, q_max_concurrency) that previously ran two
     * or three [[globalRank]] passes over the same total order and
     * joined them back on a row key: three range shuffles + a
-    * sort-merge join collapse into one shuffle and zero joins, and
-    * the [[lastShuffleRdd]] single-slot cleanup no longer evicts the
-    * earlier passes' blocks before execution (each extra call
-    * unpersisted the previous one's cache, forcing recomputes).
+    * sort-merge join collapse into one shuffle and zero joins.
     *
     * Mechanics are exactly zipWithIndex's, generalized: one counting
     * pass collects per-(partition, group) row counts — a
@@ -140,8 +130,6 @@ object ScaleOps {
     val gIdx = sorted.schema.fieldIndex(groupCol)
     val rows = sorted.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val prev = lastShuffleRdd.put(spark.sparkContext.applicationId, rows)
-    if (prev != null && (prev ne rows)) prev.unpersist(blocking = false)
     // counting pass (the zipWithIndex offset job, plus per-group tallies)
     val counts: Array[(Long, Map[Any, Long])] = rows
       .mapPartitionsWithIndex { (pi, it) =>
@@ -169,6 +157,28 @@ object ScaleOps {
     }
     spark.createDataFrame(ranked, schema)
   }
+
+  /** Eagerly localCheckpoint a relation that downstream subtrees read
+    * MANY times (edge lists feeding degree tables, orientation, and
+    * closure probes): without it Spark recomputes the full upstream
+    * subtree — e.g. a fact-table self-join — once per read, which
+    * turned the sf0.1 triangle census into 6 redundant edge builds.
+    *
+    * Lifetime of intermediate state — this object is its one home
+    * (this helper and the persisted sort of [[globalRank]] /
+    * [[globalRankDual]]): blocks belong to the DataFrame that reads
+    * them. Nothing global holds the RDD; `localCheckpoint` and
+    * `RDD.persist` register it with Spark's ContextCleaner, which
+    * releases the blocks once the last DataFrame referencing them is
+    * garbage-collected. Building a query twice, or concurrently in
+    * one session, therefore yields independent blocks that no other
+    * build can free. Iterative loops that retire state per round own
+    * it themselves (GraphOps' lagged cleanup). The one remaining
+    * limit: localCheckpoint truncates lineage, so a LOST block (its
+    * executor or disk gone) cannot be recomputed and fails the
+    * reading job with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
+  private[graft] def materializeOnce(df: DataFrame): DataFrame =
+    df.localCheckpoint()
 
   /** Salted join for skewed keys (SURVEY §2 "salting for skew"): the
     * build side replicates `salt` times, the probe side picks its

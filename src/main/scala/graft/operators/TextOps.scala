@@ -143,12 +143,11 @@ object TextOps {
     // byte-identical to the rows the equi-join shipped through its
     // shuffle. Materialized once: the sizes leg and the pair leg both
     // read it (broadcast legs don't runtime-reuse exchanges).
-    val posts = GraphOps.materializeOnce(
+    val posts = ScaleOps.materializeOnce(
       sh0.groupBy(col("shingle"))
         .agg(sort_array(collect_list(col(idCol))).as("ids"))
         .filter(size(col("ids")) <= maxDf)
-        .select(col("ids")),
-      s"jaccard_posts_$idCol")
+        .select(col("ids")))
     val sizes = posts.select(explode(col("ids")).as(idCol))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     val inter = posts.select(explode(expr(
@@ -241,11 +240,10 @@ object TextOps {
     // materialize the 4-rows-per-doc band table once (r19 opt): the
     // self-join's build side is a BroadcastExchange, so the signature
     // aggregate above the reused exchange re-ran per side
-    val bands = GraphOps.materializeOnce(
+    val bands = ScaleOps.materializeOnce(
       sigs.select(col(idCol), col("simhash"),
         posexplode(expr("transform(sequence(0, 3), i -> shiftright(simhash, i * 8) & 255)"))
-          .as(Seq("band", "byte"))),
-      s"simhash_bands_$idCol")
+          .as(Seq("band", "byte"))))
     val a = bands.as("a")
     val b = bands.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.byte") === col("b.byte") &&

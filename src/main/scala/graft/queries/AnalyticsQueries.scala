@@ -193,7 +193,7 @@ object AnalyticsQueries {
     // pairs the strict join predicate never produced.
     // materialize once: the support aggregate would otherwise re-run
     // for each of the three census aggregates.
-    val edges = graft.operators.GraphOps.materializeOnce(
+    val edges = graft.operators.ScaleOps.materializeOnce(
       Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_list(col("l_partkey"))).as("ps"))
@@ -205,7 +205,7 @@ object AnalyticsQueries {
         .groupBy(col("p.s").as("a"), col("p.d").as("b"))
         .agg(count(lit(1)).as("sup"))
         .where(col("sup") >= 2)
-        .select("a", "b"), "q_triangles_edges")
+        .select("a", "b"))
     val nNodes = edges.select(col("a").as("node"))
       .union(edges.select(col("b").as("node")))
       .agg(count_distinct(col("node")).as("n_nodes"))
@@ -263,9 +263,8 @@ object AnalyticsQueries {
     // re-ran the corpus-sized point bucketing; every consumer (dense's
     // two join legs + noise) now reads the one materialized aggregate
     // and dense itself is a cheap filter over it
-    val cells = graft.operators.GraphOps.materializeOnce(
-      pts.groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("n")),
-      "density_cells")
+    val cells = graft.operators.ScaleOps.materializeOnce(
+      pts.groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("n")))
     val dense = cells.where(col("n") >= minPts)
       .withColumn("cid", cellId(col("cx"), col("cy")))
     val offs = Seq((-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 0), (0, 1),
@@ -401,11 +400,10 @@ object AnalyticsQueries {
     * the a-priori candidate step — the same plan with a
     * hashed-aggregate pair count. */
   def qAssocRules(spark: SparkSession, dir: String): DataFrame = {
-    val baskets = graft.operators.GraphOps.materializeOnce(
+    val baskets = graft.operators.ScaleOps.materializeOnce(
       Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")),
-      "assoc_baskets")
+        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
     val supp = baskets.select(explode(col("ps")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("supp"))
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
@@ -480,7 +478,7 @@ object AnalyticsQueries {
     // materialize the sessionization once (r19 opt): both sides of the
     // broadcast self-join below would each re-run the events window +
     // groupBy (the corpus-sized subtree)
-    val sessM = graft.operators.GraphOps.materializeOnce(sess, "overlap_sess")
+    val sessM = graft.operators.ScaleOps.materializeOnce(sess)
     val hourUs = 3600L * 1000000L
     val binned = sessM.withColumn("bucket",
       explode(expr(s"sequence(st div $hourUs, en div $hourUs)")))
@@ -552,9 +550,8 @@ object AnalyticsQueries {
       .select("s", "d")
     // symmetric edge list materialized once: all 3 frontier-expansion
     // rounds read it instead of re-running the co-purchase pipeline
-    val edges = graft.operators.GraphOps.materializeOnce(
-      half.unionByName(half.select(col("d").as("s"), col("s").as("d"))),
-      "bfs_edges")
+    val edges = graft.operators.ScaleOps.materializeOnce(
+      half.unionByName(half.select(col("d").as("s"), col("s").as("d"))))
     var dist = Tables.part(spark, dir)
       .filter(col("p_partkey") % 100 === 0)
       .select(col("p_partkey").as("node"), lit(0).as("dist"))
@@ -634,12 +631,12 @@ object AnalyticsQueries {
     // materialize the block bitmaps once (r19 opt): the sizes leg and
     // both sides of the broadcast self-join would each re-run the
     // events DISTINCT + bitmap build
-    val blocks = graft.operators.GraphOps.materializeOnce(
+    val blocks = graft.operators.ScaleOps.materializeOnce(
       Tables.events(spark, dir)
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy(col("event_type"), expr("user_id div 32").as("blk"))
       .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT)))")
-        .as("bm")), "bitmap_blocks")
+        .as("bm")))
     val sizes = blocks.groupBy(col("event_type"))
       .agg(sum(expr("bit_count(bm)")).as("card"), count(lit(1)).as("n_blocks"))
     blocks.as("x").join(blocks.as("y"),

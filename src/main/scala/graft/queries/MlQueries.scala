@@ -559,13 +559,12 @@ object MlQueries {
     // each contribution weighted by tf (lpq is a quantized long, so
     // tf·lpq equals the per-occurrence sum EXACTLY). The old plan
     // re-ran the scan+regexp subtree for each half.
-    val tf = graft.operators.GraphOps.materializeOnce(
+    val tf = graft.operators.ScaleOps.materializeOnce(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("w"))
         .groupBy(col("doc_id"), col("lang"), col("w"))
-        .agg(count(lit(1)).as("tf")),
-      "nb_tf")
+        .agg(count(lit(1)).as("tf")))
     val cw = tf.filter(col("doc_id") % 2 === 0)
       .groupBy(col("lang").as("cls"), col("w"))
       .agg(sum(col("tf")).as("cw"))

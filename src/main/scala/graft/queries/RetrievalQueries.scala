@@ -411,7 +411,7 @@ object RetrievalQueries {
       .filter(col("crank") <= 20)
       .select(col("qid"), col("vec_id").as("doc_id"), col("crank"))
     if (materialize)
-      graft.operators.GraphOps.materializeOnce(ranked, "rrf_cos20")
+      graft.operators.ScaleOps.materializeOnce(ranked)
     else ranked
   }
 
@@ -636,7 +636,7 @@ object RetrievalQueries {
     // 40 rows, but the subtree above it is a corpus-wide cosine top-8
     // — and the greedy rounds below read it ~8 times. Materialize once
     // (same recompute trap as the triangle census edge build).
-    val cand = graft.operators.GraphOps.materializeOnce(
+    val cand = graft.operators.ScaleOps.materializeOnce(
       e.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("cosine", graft.functions.VectorOps.cosine("qe", "embedding"))
@@ -644,7 +644,7 @@ object RetrievalQueries {
         .filter(col("rk") <= 8)
         .select(col("qid"), col("vec_id").as("doc_id"),
           floor(col("cosine") * lit(1e9)).cast("long").as("relq"),
-          col("embedding").as("de")), "mmr_cand")
+          col("embedding").as("de")))
     val pair = cand.select(col("qid"), col("doc_id").as("d1"), col("de").as("e1"))
       .join(cand.select(col("qid"), col("doc_id").as("d2"), col("de").as("e2")), Seq("qid"))
       .filter(col("d1") =!= col("d2"))

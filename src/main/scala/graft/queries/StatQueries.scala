@@ -827,10 +827,9 @@ object StatQueries {
     // materialize the distinct audience once (r19 opt): the sizes leg
     // and both sides of the broadcast self-join would each re-run the
     // events DISTINCT (broadcast exchanges are not runtime-reusable)
-    val aud = graft.operators.GraphOps.materializeOnce(
+    val aud = graft.operators.ScaleOps.materializeOnce(
       Tables.events(spark, dir)
-        .select(col("event_type"), col("user_id")).distinct(),
-      "audience_aud")
+        .select(col("event_type"), col("user_id")).distinct())
     val sizes = aud.groupBy(col("event_type")).agg(count(lit(1)).as("sz"))
     aud.as("x").join(aud.as("y"),
         col("x.user_id") === col("y.user_id") &&
@@ -1042,7 +1041,7 @@ object StatQueries {
     // count would otherwise each re-run the events window + groupBy —
     // the corpus-sized subtree — ~4×; the checkpointed session table
     // (one row per session) is the right cut point at any scale.
-    val sess = graft.operators.GraphOps.materializeOnce(
+    val sess = graft.operators.ScaleOps.materializeOnce(
       Tables.events(spark, dir)
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("brk",
@@ -1052,8 +1051,7 @@ object StatQueries {
       .withColumn("session_id", sum(col("brk")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("session_id"))
-      .agg(unix_micros(min(col("ts"))).as("st"), unix_micros(max(col("ts"))).as("en")),
-      "maxconc_sess")
+      .agg(unix_micros(min(col("ts"))).as("st"), unix_micros(max(col("ts"))).as("en")))
     val pts = sess.select(col("st").as("t"), lit(0).as("kind"),
         col("user_id"), col("session_id"))
       .unionByName(sess.select(col("en").as("t"), lit(1).as("kind"),

@@ -206,11 +206,11 @@ object TextQueries {
     // self-join's build side is a BroadcastExchange, so the final
     // signature sort-aggregate and the band md5s re-ran per side
     // (only the partial-agg exchange below them is runtime-reused)
-    val bands = graft.operators.GraphOps.materializeOnce(
+    val bands = graft.operators.ScaleOps.materializeOnce(
       sig.select(col("doc_id"), posexplode(array(
         md5(concat(col("h0"), col("h1"))), md5(concat(col("h2"), col("h3"))),
         md5(concat(col("h4"), col("h5"))), md5(concat(col("h6"), col("h7")))))
-      .as(Seq("band", "key"))), "minhash_bands")
+      .as(Seq("band", "key"))))
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.doc_id") < col("b.doc_id"))
@@ -255,8 +255,8 @@ object TextQueries {
     // both intersection-join legs consume it through broadcast joins,
     // which re-run the scan→explode→distinct pipeline per consumer
     // (broadcast exchanges are not runtime-reusable across shapes)
-    val sh = graft.operators.GraphOps.materializeOnce(
-      TextOps.shingles(docs, "doc_id", "text", 3), "minhashxx_sh")
+    val sh = graft.operators.ScaleOps.materializeOnce(
+      TextOps.shingles(docs, "doc_id", "text", 3))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = cand
       .join(sh.select(col("doc_id").as("ida"), col("shingle")), "ida")
@@ -1256,15 +1256,14 @@ object TextQueries {
     // the scoring rows; now one corpus pass builds (doc_id, w1, w2, k)
     // and both consume counts — each bigram's quantized-long lq
     // weights by k, which equals the per-occurrence sum EXACTLY
-    val bik = graft.operators.GraphOps.materializeOnce(
+    val bik = graft.operators.ScaleOps.materializeOnce(
       docs.where(size(col("t")) >= 2)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(0, size(t) - 2), i -> struct(t[i] AS w1, t[i + 1] AS w2))"))
           .as("bg"))
         .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
         .groupBy(col("doc_id"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("k")),
-      "bigram_k")
+        .agg(count(lit(1)).as("k")))
     val c2 = bik.groupBy(col("w1"), col("w2")).agg(sum(col("k")).as("c2"))
     // c1 is the w1-marginal of the vocab²-sized c2 table (r19 opt) —
     // no second aggregation over the corpus bigram stream; exact

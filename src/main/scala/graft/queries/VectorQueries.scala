@@ -277,10 +277,9 @@ object VectorQueries {
     // only (vec_id, band, bucket), and checkpointing 4 copies of every
     // vector would cost more than the saved explode (guide §2.3:
     // shuffle/store keys, not payloads).
-    val bands = graft.operators.GraphOps.materializeOnce(
+    val bands = graft.operators.ScaleOps.materializeOnce(
       e.select(col("vec_id"),
-        posexplode(VectorOps.signBands("embedding", 4, 4)).as(Seq("band", "bucket"))),
-      "embed_neardup_bands")
+        posexplode(VectorOps.signBands("embedding", 4, 4)).as(Seq("band", "bucket"))))
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -643,10 +642,9 @@ object VectorQueries {
     // plan re-ran the parquet scan + 64-way posexplode fan-out four
     // times per run. The checkpoint re-executes inside every timed
     // run; nothing crosses runs.
-    val exp = graft.operators.GraphOps.materializeOnce(
+    val exp = graft.operators.ScaleOps.materializeOnce(
       e.select(col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v"))),
-      "kmeans_refine_exp")
+        posexplode(col("embedding")).as(Seq("pos", "v"))))
     // the shared Lloyd machinery ([[lloydAssign]]/[[lloydCentroids]] —
     // the same steps ivfRouting trains its k=32 quantizer with),
     // unrolled here for two iterations at k=8
