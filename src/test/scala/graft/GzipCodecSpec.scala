@@ -38,6 +38,8 @@ class GzipCodecSpec extends SparkSpec {
     assert(dec.isDefined)
     assert(dec.get.name == "shard_0.jsonl")
     assert(dec.get.data.toSeq == data.toSeq)
+    // the encoder's exact bytes, pinned so a writer refactor stays identical
+    assert(Sha256.hex(Seq(enc)) == "74d7d891673f277de3137a1f8e9268670b1ea66579957477d05aec3a7e18d562", Sha256.hex(Seq(enc)))
   }
 
   test("refusal contract: every corruption class returns None, never throws") {

@@ -228,14 +228,16 @@ class Hdf5CodecSpec extends SparkSpec {
 
   test("single-byte fuzz sweep: decode never throws (catch-all contract)") {
     val good = goldenInstance
+    val fz = new FuzzDigest
     var i = 0
     while (i < good.length) {
       val c = good.clone(); c(i) = 0xff.toByte
-      Hdf5Codec.decode(c) // any result is fine; a throw fails the suite
+      fz.add(Hdf5Codec.decode(c))
       val d = good.clone(); d(i) = 0x00
-      Hdf5Codec.decode(d)
+      fz.add(Hdf5Codec.decode(d))
       i += 3
     }
+    assert(fz.hex == "816/666:1c769ec1a23a4463", fz.hex)
   }
 
   test("chunked + deflate datasets decode exactly, edge chunks clipped") {
@@ -345,12 +347,14 @@ class Hdf5CodecSpec extends SparkSpec {
     assert(Hdf5Codec.decode(c).isEmpty, "FAHD bytes accepted as an EA header")
     val c5 = good.clone(); c5(idxTypeAt) = 5
     assert(Hdf5Codec.decode(c5).isEmpty, "v2-btree index accepted")
+    val fz = new FuzzDigest
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = 0x13
-      Hdf5Codec.decode(m)
+      fz.add(Hdf5Codec.decode(m))
       j += 4
     }
+    assert(fz.hex == "224/65:74793077ed836b55", fz.hex)
   }
 
   test("layout-v4 extensible array: index-block elements, EADB and EASB walks decode exactly") {
@@ -409,12 +413,14 @@ class Hdf5CodecSpec extends SparkSpec {
       "non-pow2 min-elmts accepted")
     // truncation anywhere in the chunk tail must refuse, never alias
     assert(Hdf5Codec.decode(good.dropRight(8)).isEmpty, "truncated EA payload")
+    val fz = new FuzzDigest
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = 0x13
-      Hdf5Codec.decode(m) // fuzz: any result, no throw
+      fz.add(Hdf5Codec.decode(m))
       j += 4
     }
+    assert(fz.hex == "5478/1806:0b79a4360db6b856", fz.hex)
   }
 
   test("layout-v4 v2 B-tree: depth-0 leaf roots and a depth-1 BTIN tree decode exactly") {
@@ -473,12 +479,14 @@ class Hdf5CodecSpec extends SparkSpec {
     assert(Hdf5Codec.decode(mutate(bthdAt + 5, 10)).isEmpty,
       "raw record type accepted for a filtered dataset")
     assert(Hdf5Codec.decode(good.dropRight(8)).isEmpty, "truncated payload")
+    val fz = new FuzzDigest
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = 0x13
-      Hdf5Codec.decode(m) // fuzz: any result, no throw
+      fz.add(Hdf5Codec.decode(m))
       j += 4
     }
+    assert(fz.hex == "60718/30945:d82b85227fef3d4d", fz.hex)
   }
 
   test("paged fixed array: bitmap-gated element pages decode exactly") {
@@ -508,12 +516,14 @@ class Hdf5CodecSpec extends SparkSpec {
     assert(fap2.values.drop(4096).forall(_ == 0.0))
     // truncating the pages region must refuse, never alias
     assert(Hdf5Codec.decode(bytes.dropRight(8)).isEmpty, "truncated pages")
+    val fz = new FuzzDigest
     var j = 0
     while (j < bytes.length) {
       val m = bytes.clone(); m(j) = 0x13
-      Hdf5Codec.decode(m) // fuzz: any result, no throw
+      fz.add(Hdf5Codec.decode(m))
       j += 8
     }
+    assert(fz.hex == "5126/735:f6ed4dd0ca832d81", fz.hex)
   }
 
   test("paged extensible array: EASB page-init bitmasks gate element pages") {
@@ -552,12 +562,14 @@ class Hdf5CodecSpec extends SparkSpec {
     assert(v2.drop(640).toSeq == eap.values.drop(640).toSeq)
     // truncating the trailing chunk region must refuse, never alias
     assert(Hdf5Codec.decode(bytes.dropRight(8)).isEmpty, "truncated")
+    val fz = new FuzzDigest
     var j = 0
     while (j < bytes.length) {
       val m = bytes.clone(); m(j) = 0x5a
-      Hdf5Codec.decode(m) // fuzz: any result, no throw
+      fz.add(Hdf5Codec.decode(m))
       j += 7
     }
+    assert(fz.hex == "2054/946:98ca425315763066", fz.hex)
   }
 
   test("paged data blocks referenced from the EA index block decode") {
@@ -606,12 +618,14 @@ class Hdf5CodecSpec extends SparkSpec {
       (ckCorrupt(pagesAt + pageLen - 1) ^ 0x41).toByte
     assert(Hdf5Codec.decode(ckCorrupt).isEmpty,
       "corrupted live-page checksum accepted")
+    val fz = new FuzzDigest
     var j = 0
     while (j < bytes.length) {
       val m = bytes.clone(); m(j) = 0x2e
-      Hdf5Codec.decode(m) // fuzz: any result, no throw
+      fz.add(Hdf5Codec.decode(m))
       j += 5
     }
+    assert(fz.hex == "1739/809:ae875aa7bf431df6", fz.hex)
   }
 
   test("v2 refusals: dense link storage and hostile continuations return None") {
@@ -634,13 +648,15 @@ class Hdf5CodecSpec extends SparkSpec {
     // superblock version 4 (nonexistent) refused
     val v4 = good.clone(); v4(8) = 4
     assert(Hdf5Codec.decode(v4).isEmpty)
-    // single-byte fuzz: never throws
+    // single-byte fuzz: never throws, outcomes digest-pinned
+    val fz = new FuzzDigest
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = 0x7f
-      Hdf5Codec.decode(m)
+      fz.add(Hdf5Codec.decode(m))
       j += 4
     }
+    assert(fz.hex == "237/123:e41095ec7f5a33d6", fz.hex)
   }
 
   test("dense link storage: root direct block and FHIB + depth-1 name tree decode exactly") {
@@ -676,17 +692,17 @@ class Hdf5CodecSpec extends SparkSpec {
     // record-size mismatch vs heap ID length
     val r = dense.clone(); r(bthd + 10) = 19
     assert(Hdf5Codec.decode(r).isEmpty)
-    // truncation anywhere never throws; a cut inside the heap refuses
-    (0 until 40).foreach { k =>
-      Hdf5Codec.decode(dense.take(frhp + k * 7))
-    }
-    // single-byte fuzz over the dense structures: never throws
+    // truncations and single-byte fuzz over the dense structures:
+    // never throw, outcomes digest-pinned
+    val fz = new FuzzDigest
+    (0 until 40).foreach(k => fz.add(Hdf5Codec.decode(dense.take(frhp + k * 7))))
     var j = frhp
     while (j < dense.length) {
       val m = dense.clone(); m(j) = 0x55
-      Hdf5Codec.decode(m)
+      fz.add(Hdf5Codec.decode(m))
       j += 3
     }
+    assert(fz.hex == "212/105:133a2d94ba166bcd", fz.hex)
   }
 
   test("filter refusals: unknown ids, triple pipelines, hostile tree graphs return None") {
@@ -701,13 +717,15 @@ class Hdf5CodecSpec extends SparkSpec {
     val c = good.clone()
     c(pipeAt + 8) = 3
     assert(Hdf5Codec.decode(c).isEmpty, "unknown filter id accepted")
-    // single-byte fuzz over the new file: never throws
+    // single-byte fuzz over the new file: never throws, outcomes digest-pinned
+    val fz = new FuzzDigest
     var j = 0
     while (j < good.length) {
       val m = good.clone(); m(j) = 0xff.toByte
-      Hdf5Codec.decode(m)
+      fz.add(Hdf5Codec.decode(m))
       j += 5
     }
+    assert(fz.hex == "644/393:93d9979a29f3a165", fz.hex)
   }
 
   test("chunked refusals: hostile chunk-tree levels and truncated chunk streams return None") {

@@ -244,7 +244,7 @@ class Mp4CodecSpec extends SparkSpec {
   }
 
   test("mux round-trips through the walker: chunking, timing, sync, bytes") {
-    for (n <- Seq(1, 3, 4, 5, 8, 9)) {
+    val outs = for (n <- Seq(1, 3, 4, 5, 8, 9)) yield {
       val subs = (0 until n).map(i =>
         s"payload-$i-${"x" * (i % 5)}".getBytes("UTF-8"))
       val bytes = Mp4Codec.mux(subs, 1000, 100)
@@ -259,7 +259,10 @@ class Mp4CodecSpec extends SparkSpec {
           (s.off + s.size).toInt)
         assert(java.util.Arrays.equals(got, subs(i)), s"n=$n i=$i bytes")
       }
+      bytes
     }
+    // the muxer's exact bytes, pinned so a writer refactor stays identical
+    assert(Sha256.hex(outs) == "025e8d17532b14b32d7128e3957b1896ecf5eb0f1b343d056487adcf0638fe88", Sha256.hex(outs))
   }
 
   test("track timescale rides every sample (the wall-time conversion key)") {

@@ -94,7 +94,10 @@ class MultimodalSpec extends SparkSpec {
 
   test("encodeTiff → decodeTiff round-trips a two-strip raster") {
     val raster = (10 until 26).map(_.toByte).toArray // 8×2, RowsPerStrip=1
-    val img = MultimodalOps.decodeTiff(MultimodalOps.encodeTiff(8, 2, raster))
+    val enc = MultimodalOps.encodeTiff(8, 2, raster)
+    // the writer's exact bytes, pinned so a writer refactor stays identical
+    assert(Sha256.hex(Seq(enc)) == "30d2f52760a12fb1fa6c9c4bff9a3fdc072aab21815125d90a6593d775081d7a", Sha256.hex(Seq(enc)))
+    val img = MultimodalOps.decodeTiff(enc)
     assert(img.isDefined)
     assert(img.get.width == 8 && img.get.height == 2)
     assert(img.get.samples.toSeq == (10 until 26))

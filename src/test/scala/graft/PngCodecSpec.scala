@@ -76,14 +76,17 @@ class PngCodecSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("encode -> decode round-trips every channel count") {
-    for (ch <- Seq(1, 2, 3, 4)) {
+    val outs = for (ch <- Seq(1, 2, 3, 4)) yield {
       val w = 7; val h = 5
       val pix = Array.tabulate(w * h * ch)(i => ((i * 89 + 31) % 256).toByte)
       val enc = PngCodec.encode(w, h, ch, pix)
       val dec = PngCodec.decode(enc).getOrElse(fail(s"own png refused ch=$ch"))
       assert((dec.width, dec.height, dec.channels) == ((w, h, ch)))
       assert(dec.pixels.toSeq == pix.toSeq, s"ch=$ch")
+      enc
     }
+    // the encoder's exact bytes, pinned so a writer refactor stays identical
+    assert(Sha256.hex(outs) == "dc8ec944a0513e6cf318cd3066bdcc2a7e23a312d678cf1b23839bca55036ba4", Sha256.hex(outs))
   }
 
   test("refusal contract: every corruption class returns None, never throws") {

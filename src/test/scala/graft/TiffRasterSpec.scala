@@ -105,8 +105,8 @@ class TiffRasterSpec extends SparkSpec {
       ("i16", 5, 4, 2, (i: Int) => (i * 193 % 30000 - 15000).toDouble),
       ("u16", 6, 2, 3, (i: Int) => (i * 7919 % 60000).toDouble),
       ("f32", 4, 4, 2, (i: Int) => i * 0.25 - 3.5))
-    for ((fmt, w, h, spp, gen) <- cases; comp <- Seq("none", "lzw", "deflate");
-         pred <- Seq(false, true) if !(pred && fmt == "f32")) {
+    val outs = for ((fmt, w, h, spp, gen) <- cases; comp <- Seq("none", "lzw", "deflate");
+         pred <- Seq(false, true) if !(pred && fmt == "f32")) yield {
       val vals = Array.tabulate(w * h * spp)(gen(_))
       val enc = MultimodalOps.encodeTiffRaster(w, h, spp, fmt, vals,
         lzw = comp == "lzw", predictor = pred, deflate = comp == "deflate")
@@ -115,7 +115,10 @@ class TiffRasterSpec extends SparkSpec {
       assert((dec.width, dec.height, dec.bands, dec.fmt) == ((w, h, spp, fmt)),
         s"$fmt $comp pred=$pred")
       assert(dec.values.toSeq == vals.toSeq, s"$fmt $comp pred=$pred")
+      enc
     }
+    // the writer's exact bytes, pinned so a writer refactor stays identical
+    assert(Sha256.hex(outs) == "813a112995aaf0ddfa58562c103d7f1dcde7c32841663aa1f8d40a90155f9677", Sha256.hex(outs))
   }
 
   test("lzw round-trips arbitrary byte streams across width boundaries") {
@@ -259,6 +262,7 @@ class TiffRasterSpec extends SparkSpec {
     assert(r.values.toSeq == vals.toSeq)
     val back = MultimodalOps.decodeTiffGeoref(enc).getOrElse(fail("georef"))
     assert(back == g, "georef round-trip drifted")
+    assert(Sha256.hex(Seq(enc)) == "4a420952387f8ade8be472b1185f58fb365136b350053e34d9d3c4224218f149", Sha256.hex(Seq(enc)))
     // without georef the same raster parses pixels but refuses coords
     val bare = MultimodalOps.encodeTiffRaster(4, 3, 1, "i16", vals,
       lzw = true, predictor = true)
