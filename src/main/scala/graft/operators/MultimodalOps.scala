@@ -260,17 +260,6 @@ object MultimodalOps {
     } finally inf.end()
   }
 
-  /** TIFF header readers for [[decodeTiffRaster]] and
-    * [[decodeTiffGeoref]]. They return -1 out of range instead of
-    * refusing, because their callers branch on -1. The range check runs
-    * in LONG arithmetic BEFORE any toInt: a crafted 32-bit offset near
-    * 2^31 would otherwise truncate to a negative index and throw
-    * instead of returning the None contract. */
-  private def tiffU16(b: Array[Byte], off: Long, le: Boolean): Int =
-    if (off < 0 || off + 2 > b.length) -1 else Bytes.u16(b, off, le)
-  private def tiffU32(b: Array[Byte], off: Long, le: Boolean): Long =
-    if (off < 0 || off + 4 > b.length) -1L else Bytes.u32(b, off, le)
-
   /** General TIFF raster decoder. Beyond the baseline subset, supports
     * what the reference's real GeoTIFFs use (srtm.tif IFD:
     * Compression=8 deflate, tiled 256×256, PlanarConfiguration=2,
@@ -282,48 +271,50 @@ object MultimodalOps {
     *    edge tiles padded to full size per spec
     *  - 8/16/32-bit samples, SampleFormat 1/2/3 (uint/int/float32)
     *  - both byte orders
-    * Anything else — or any segment that does not decompress to its
-    * exact expected size — returns None: skip, never throw, never
-    * mis-decode. */
-  def decodeTiffRaster(payload: Array[Byte]): Option[DecodedRaster] = {
+    * Anything else — any read past the end of the file, or any
+    * segment that does not decompress to its exact expected size —
+    * returns None: skip, never throw, never mis-decode. A truncated
+    * IFD refuses rather than reading its lost entries as absent tags
+    * (absent tags take their spec defaults, so that would mis-decode). */
+  def decodeTiffRaster(payload: Array[Byte]): Option[DecodedRaster] =
+    Bytes.refusing(tiffRaster(payload)).flatten
+
+  private def tiffRaster(payload: Array[Byte]): Option[DecodedRaster] = {
+    import Bytes.{u16, u32}
     if (payload.length < 8) return None
     val le = payload(0) == 'I'.toByte && payload(1) == 'I'.toByte
     val be = payload(0) == 'M'.toByte && payload(1) == 'M'.toByte
     if (!le && !be) return None
-    def u16(off: Long): Int = tiffU16(payload, off, le)
-    def u32(off: Long): Long = tiffU32(payload, off, le)
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    val nEntries = u16(ifd)
-    if (nEntries <= 0) return None
+    if (u16(payload, 2, le) != 42) return None
+    val ifd = u32(payload, 4, le)
+    val nEntries = u16(payload, ifd, le)
+    if (nEntries == 0) return None
     // TIFF types: 3 = SHORT (2 bytes), 4 = LONG (4 bytes); values of
     // total size <= 4 live inline in the value field, larger ones at
     // the offset the field holds. A tag that is PRESENT but
-    // unparseable (unsupported type, insane count, out-of-bounds
-    // value array) poisons the whole decode rather than reading as
-    // "absent" — absent falls back to the tag's spec default, and a
-    // crafted Compression=LZW stored as type BYTE must not sneak
-    // through that fallback as "uncompressed".
+    // unparseable (unsupported type, insane count) poisons the whole
+    // decode rather than reading as "absent" — absent falls back to
+    // the tag's spec default, and a crafted Compression=LZW stored as
+    // type BYTE must not sneak through that fallback as "uncompressed".
     var malformed = false
     def values(tag: Int): Option[Seq[Long]] = {
       var i = 0
       while (i < nEntries) {
         val off = ifd + 2 + i * 12
-        if (u16(off) == tag) {
-          val typ = u16(off + 2)
-          val count = u32(off + 4)
+        if (u16(payload, off, le) == tag) {
+          val typ = u16(payload, off + 2, le)
+          val count = u32(payload, off + 4, le)
           val width = typ match {
             case 3 => 2L
             case 4 => 4L
             case _ => malformed = true; return None
           }
           if (count <= 0 || count > 65536) { malformed = true; return None }
-          val base = if (count * width <= 4) off + 8 else u32(off + 8)
-          val vs = (0L until count).map { j =>
-            if (typ == 3) u16(base + 2 * j).toLong else u32(base + 4 * j)
-          }
-          if (vs.exists(_ < 0)) { malformed = true; return None }
-          return Some(vs)
+          val base = if (count * width <= 4) off + 8 else u32(payload, off + 8, le)
+          return Some((0L until count).map { j =>
+            if (typ == 3) u16(payload, base + 2 * j, le).toLong
+            else u32(payload, base + 4 * j, le)
+          })
         }
         i += 1
       }
@@ -436,16 +427,9 @@ object MultimodalOps {
         while (x < rowSamples) {
           val o = rowOff + x * bytesPer
           var word: Int =
-            if (bits == 8L) raw(o) & 0xff
-            else if (bits == 16L) {
-              if (le) (raw(o) & 0xff) | ((raw(o + 1) & 0xff) << 8)
-              else ((raw(o) & 0xff) << 8) | (raw(o + 1) & 0xff)
-            } else {
-              if (le) (raw(o) & 0xff) | ((raw(o + 1) & 0xff) << 8) |
-                ((raw(o + 2) & 0xff) << 16) | ((raw(o + 3) & 0xff) << 24)
-              else ((raw(o) & 0xff) << 24) | ((raw(o + 1) & 0xff) << 16) |
-                ((raw(o + 2) & 0xff) << 8) | (raw(o + 3) & 0xff)
-            }
+            if (bits == 8L) Bytes.u8(raw, o)
+            else if (bits == 16L) u16(raw, o, le)
+            else u32(raw, o, le).toInt
           val ch = x % segSpp
           if (predictor == 2L) {
             // horizontal differencing accumulates per channel, modulo
@@ -507,38 +491,30 @@ object MultimodalOps {
     * decoder, but georef consumers must not invent coordinates).
     * EPSG comes from GeographicTypeGeoKey (2048) or, failing that,
     * ProjectedCSTypeGeoKey (3072); 0 when no GeoKey directory — the
-    * tags can legally appear without one. Never throws. */
-  def decodeTiffGeoref(payload: Array[Byte]): Option[TiffGeoref] = {
+    * tags can legally appear without one. A read past the end of the
+    * file returns None. Never throws. */
+  def decodeTiffGeoref(payload: Array[Byte]): Option[TiffGeoref] =
+    Bytes.refusing(tiffGeoref(payload)).flatten
+
+  private def tiffGeoref(payload: Array[Byte]): Option[TiffGeoref] = {
+    import Bytes.{be64, le64, u16, u32}
     if (payload.length < 8) return None
     val le = payload(0) == 'I'.toByte && payload(1) == 'I'.toByte
     val be = payload(0) == 'M'.toByte && payload(1) == 'M'.toByte
     if (!le && !be) return None
-    def u16(off: Long): Int = tiffU16(payload, off, le)
-    def u32(off: Long): Long = tiffU32(payload, off, le)
-    def f64(off: Long): Option[Double] = {
-      if (off < 0 || off + 8 > payload.length) return None
-      var bits = 0L
-      var j = 0
-      while (j < 8) {
-        val b = payload(off.toInt + j) & 0xffL
-        bits |= (if (le) b << (8 * j) else b << (8 * (7 - j)))
-        j += 1
-      }
-      Some(java.lang.Double.longBitsToDouble(bits))
-    }
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    val nEntries = u16(ifd)
-    if (nEntries <= 0) return None
+    if (u16(payload, 2, le) != 42) return None
+    val ifd = u32(payload, 4, le)
+    val nEntries = u16(payload, ifd, le)
+    if (nEntries == 0) return None
     // locate a tag's (type, count, value-offset); inline vs external
     // per the usual <=4-byte rule
     def field(tag: Int): Option[(Int, Long, Long)] = {
       var i = 0
       while (i < nEntries) {
         val off = ifd + 2 + i * 12
-        if (u16(off) == tag) {
-          val typ = u16(off + 2)
-          val count = u32(off + 4)
+        if (u16(payload, off, le) == tag) {
+          val typ = u16(payload, off + 2, le)
+          val count = u32(payload, off + 4, le)
           if (count <= 0 || count > 65536) return None
           val width = typ match {
             case 3 => 2L
@@ -546,7 +522,7 @@ object MultimodalOps {
             case 12 => 8L
             case _ => return None
           }
-          val base = if (count * width <= 4) off + 8 else u32(off + 8)
+          val base = if (count * width <= 4) off + 8 else u32(payload, off + 8, le)
           return Some((typ, count, base))
         }
         i += 1
@@ -556,8 +532,11 @@ object MultimodalOps {
     def doubles(tag: Int, minCount: Int): Option[IndexedSeq[Double]] =
       field(tag) match {
         case Some((12, count, base)) if count >= minCount =>
-          val vs = (0L until count).map(j => f64(base + 8 * j))
-          if (vs.exists(_.isEmpty)) None else Some(vs.map(_.get))
+          Some((0L until count).map { j =>
+            val at = base + 8 * j
+            java.lang.Double.longBitsToDouble(
+              if (le) le64(payload, at) else be64(payload, at))
+          })
         case _ => None
       }
     val scale = doubles(33550, 3).getOrElse(return None)
@@ -569,15 +548,15 @@ object MultimodalOps {
     var rasterType = 1 // spec default RasterPixelIsArea
     field(34735) match {
       case Some((3, count, base)) if count >= 4 =>
-        val nKeys = u16(base + 6)
+        val nKeys = u16(payload, base + 6, le)
         var k = 0
         var geodetic = 0
         var projected = 0
         while (k < nKeys && 4L * (k + 2) <= count) {
           val ko = base + 8L * (k + 1)
-          val keyId = u16(ko)
-          val loc = u16(ko + 2)
-          val value = u16(ko + 6)
+          val keyId = u16(payload, ko, le)
+          val loc = u16(payload, ko + 2, le)
+          val value = u16(payload, ko + 6, le)
           if (loc == 0) keyId match {
             case 1025 => rasterType = value
             case 2048 => geodetic = value
@@ -640,17 +619,7 @@ object MultimodalOps {
     }
     val raw = new Array[Byte](values.length * bytesPer)
     i = 0
-    while (i < words.length) {
-      val v = words(i)
-      val o = i * bytesPer
-      raw(o) = (v & 0xff).toByte
-      if (bytesPer > 1) raw(o + 1) = ((v >>> 8) & 0xff).toByte
-      if (bytesPer > 2) {
-        raw(o + 2) = ((v >>> 16) & 0xff).toByte
-        raw(o + 3) = ((v >>> 24) & 0xff).toByte
-      }
-      i += 1
-    }
+    while (i < words.length) { Bytes.putLe(raw, i * bytesPer, words(i), bytesPer); i += 1 }
     val strip =
       if (lzw) lzwEncode(raw)
       else if (deflate) {
@@ -664,14 +633,7 @@ object MultimodalOps {
         } finally d.end()
       } else raw
     val out = new java.io.ByteArrayOutputStream(strip.length + 256)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-    out.write('I'); out.write('I'); w16(42); w32(8)
-    def w64(v: Double): Unit = {
-      val bits64 = java.lang.Double.doubleToLongBits(v)
-      var j = 0
-      while (j < 8) { out.write(((bits64 >>> (8 * j)) & 0xff).toInt); j += 1 }
-    }
+    out.write('I'); out.write('I'); out.write(Bytes.le(42, 2)); out.write(Bytes.le(8, 4))
     val nEntries = 12 + (if (georef.isDefined) 3 else 0)
     val ifdEnd = 8 + 2 + nEntries * 12 + 4
     // external SHORT arrays for BitsPerSample/SampleFormat when spp > 2
@@ -684,9 +646,10 @@ object MultimodalOps {
     val tieOff = geoBase + 24
     val keysOff = geoBase + 72
     val dataStart = geoBase + (if (georef.isDefined) 104 else 0)
-    w16(nEntries)
+    out.write(Bytes.le(nEntries, 2))
     def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      w16(tag); w16(typ); w32(count); w32(value)
+      out.write(Bytes.le(tag, 2)); out.write(Bytes.le(typ, 2))
+      out.write(Bytes.le(count, 4)); out.write(Bytes.le(value, 4))
     }
     def shortPair(a: Int, b: Int): Int = (a & 0xffff) | (b << 16)
     entry(256, 3, 1, w)
@@ -708,22 +671,21 @@ object MultimodalOps {
       entry(33922, 12, 6, tieOff)    // ModelTiepoint
       entry(34735, 3, 16, keysOff)   // GeoKeyDirectory
     }
-    w32(0)
+    out.write(Bytes.le(0, 4))
     if (spp > 2) {
-      (0 until spp).foreach(_ => w16(bits))
-      (0 until spp).foreach(_ => w16(sf))
+      (0 until spp).foreach(_ => out.write(Bytes.le(bits, 2)))
+      (0 until spp).foreach(_ => out.write(Bytes.le(sf, 2)))
     }
     georef.foreach { g =>
-      w64(g.scaleX); w64(g.scaleY); w64(0.0)
-      w64(g.tieCol); w64(g.tieRow); w64(0.0)
-      w64(g.tieX); w64(g.tieY); w64(0.0)
+      Seq(g.scaleX, g.scaleY, 0.0, g.tieCol, g.tieRow, 0.0, g.tieX, g.tieY, 0.0)
+        .foreach(d => out.write(Bytes.le(java.lang.Double.doubleToLongBits(d), 8)))
       // GeoKey directory header (version 1.1, 3 keys) + GTModelType=2
       // (geographic), GTRasterType, GeographicType=epsg — the minimal
       // directory GDAL writes for an EPSG:4326 raster
       Seq(1, 1, 0, 3,
         1024, 0, 1, 2,
         1025, 0, 1, if (g.pixelIsArea) 1 else 2,
-        2048, 0, 1, g.epsg).foreach(w16)
+        2048, 0, 1, g.epsg).foreach(k => out.write(Bytes.le(k, 2)))
     }
     out.write(strip, 0, strip.length)
     out.toByteArray
@@ -735,18 +697,17 @@ object MultimodalOps {
   private[graft] def encodeTiff(w: Int, h: Int, raster: Array[Byte]): Array[Byte] = {
     require(raster.length == w * h, s"raster ${raster.length} != $w x $h")
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Int): Unit = { w16(v & 0xffff); w16((v >>> 16) & 0xffff) }
-    out.write('I'); out.write('I'); w16(42)
+    out.write('I'); out.write('I'); out.write(Bytes.le(42, 2))
     val dataStart = 8
     val ifdOff = dataStart + raster.length
-    w32(ifdOff)
+    out.write(Bytes.le(ifdOff, 4))
     out.write(raster, 0, raster.length)
     val nEntries = 9
     val arrBase = ifdOff + 2 + nEntries * 12 + 4
-    w16(nEntries)
+    out.write(Bytes.le(nEntries, 2))
     def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
-      w16(tag); w16(typ); w32(count); w32(value)
+      out.write(Bytes.le(tag, 2)); out.write(Bytes.le(typ, 2))
+      out.write(Bytes.le(count, 4)); out.write(Bytes.le(value, 4))
     }
     entry(256, 4, 1, w) // ImageWidth
     entry(257, 4, 1, h) // ImageLength
@@ -757,10 +718,10 @@ object MultimodalOps {
     entry(277, 3, 1, 1) // SamplesPerPixel
     entry(278, 4, 1, 1) // RowsPerStrip
     entry(279, 4, h, if (h == 1) raster.length else arrBase + 4 * h) // StripByteCounts
-    w32(0) // next-IFD terminator
+    out.write(Bytes.le(0, 4)) // next-IFD terminator
     if (h > 1) {
-      (0 until h).foreach(r => w32(dataStart + r * w))
-      (0 until h).foreach(_ => w32(w))
+      (0 until h).foreach(r => out.write(Bytes.le(dataStart + r * w, 4)))
+      (0 until h).foreach(_ => out.write(Bytes.le(w, 4)))
     }
     out.toByteArray
   }

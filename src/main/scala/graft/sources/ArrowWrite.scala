@@ -49,8 +49,7 @@ object ArrowWrite {
 
     private def putRaw(width: Int, v: Long): Unit = {
       space -= width
-      var i = 0
-      while (i < width) { buf(space + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
+      Bytes.putLe(buf, space, v, width)
     }
     def pushI8(v: Int): Unit = { prep(1, 0); putRaw(1, v.toLong) }
     def pushI16(v: Int): Unit = { prep(2, 0); putRaw(2, v.toLong) }
@@ -124,9 +123,7 @@ object ArrowWrite {
       // patch the table's soffset = table_addr - vtable_addr
       val vtPos = offset
       val at = buf.length - tablePos
-      val so = (vtPos - tablePos).toLong // positive: vtable before table in addresses
-      var j = 0
-      while (j < 4) { buf(at + j) = ((so >> (8 * j)) & 0xff).toByte; j += 1 }
+      Bytes.putLe(buf, at, vtPos - tablePos, 4) // positive: vtable before table in addresses
       tablePos
     }
 
@@ -224,8 +221,7 @@ object ArrowWrite {
     val metaLen = pad8(fb.length)
     val out = new Array[Byte](8 + metaLen)
     out(0) = -1; out(1) = -1; out(2) = -1; out(3) = -1
-    var i = 0
-    while (i < 4) { out(4 + i) = ((metaLen >> (8 * i)) & 0xff).toByte; i += 1 }
+    Bytes.putLe(out, 4, metaLen, 4)
     System.arraycopy(fb, 0, out, 8, fb.length)
     out
   }
@@ -262,13 +258,13 @@ object ArrowWrite {
       // Buffer structs: (offset i64, length i64), reversed for backward build
       val bufRaw = new Array[Byte](16 * 5)
       for (i <- 0 until 5) {
-        le64(bufRaw, 16 * i, bufOffs(i)); le64(bufRaw, 16 * i + 8, bufLens(i))
+        Bytes.putLe(bufRaw, 16 * i, bufOffs(i), 8); Bytes.putLe(bufRaw, 16 * i + 8, bufLens(i), 8)
       }
       val buffers = b.createRawVector(5, 8, bufRaw)
       // FieldNode structs: (length i64, null_count i64): id, emb, child
       val nodeRaw = new Array[Byte](16 * 3)
-      le64(nodeRaw, 0, n.toLong); le64(nodeRaw, 16, n.toLong)
-      le64(nodeRaw, 32, n.toLong * dim)
+      Bytes.putLe(nodeRaw, 0, n, 8); Bytes.putLe(nodeRaw, 16, n, 8)
+      Bytes.putLe(nodeRaw, 32, n.toLong * dim, 8)
       val nodes = b.createRawVector(3, 8, nodeRaw)
       b.startTable(4) // RecordBatch: length(0) nodes(1) buffers(2)
       b.slotI64(0, n.toLong, 0)
@@ -279,10 +275,10 @@ object ArrowWrite {
 
     val body = new Array[Byte](bodyLen)
     var p = 0
-    for (i <- 0 until n) { le64(body, p, ids(i)); p += 8 }
+    for (i <- 0 until n) { Bytes.putLe(body, p, ids(i), 8); p += 8 }
     p = pad8(idBytes)
     for (i <- 0 until n * dim) {
-      le32(body, p, java.lang.Float.floatToRawIntBits(emb(i)).toLong); p += 4
+      Bytes.putLe(body, p, java.lang.Float.floatToRawIntBits(emb(i)), 4); p += 4
     }
     (schemaMsg, batchMsg, body)
   }
@@ -310,11 +306,11 @@ object ArrowWrite {
     val batchMsg = encapsulate(messageFb(3, bodyLen.toLong) { b =>
       val bufRaw = new Array[Byte](16 * 5)
       for (i <- 0 until 5) {
-        le64(bufRaw, 16 * i, bufOffs(i)); le64(bufRaw, 16 * i + 8, bufLens(i))
+        Bytes.putLe(bufRaw, 16 * i, bufOffs(i), 8); Bytes.putLe(bufRaw, 16 * i + 8, bufLens(i), 8)
       }
       val buffers = b.createRawVector(5, 8, bufRaw)
       val nodeRaw = new Array[Byte](16 * 2)
-      le64(nodeRaw, 0, n.toLong); le64(nodeRaw, 16, n.toLong)
+      Bytes.putLe(nodeRaw, 0, n, 8); Bytes.putLe(nodeRaw, 16, n, 8)
       val nodes = b.createRawVector(2, 8, nodeRaw)
       b.startTable(4)
       b.slotI64(0, n.toLong, 0)
@@ -325,11 +321,11 @@ object ArrowWrite {
 
     val body = new Array[Byte](bodyLen)
     var p = 0
-    for (i <- 0 until n) { le64(body, p, ids(i)); p += 8 }
+    for (i <- 0 until n) { Bytes.putLe(body, p, ids(i), 8); p += 8 }
     p = offAt
     var acc = 0
     for (i <- 0 to n) {
-      le32(body, p, acc.toLong); p += 4
+      Bytes.putLe(body, p, acc, 4); p += 4
       if (i < n) acc += raw(i).length
     }
     p = datAt
@@ -346,9 +342,9 @@ object ArrowWrite {
       val b = new Fbb()
       val schema = textSchemaTable(b)
       val blockRaw = new Array[Byte](24)
-      le64(blockRaw, 0, batchOffset.toLong)
-      le32(blockRaw, 8, batchMsg.length.toLong)
-      le64(blockRaw, 16, body.length.toLong)
+      Bytes.putLe(blockRaw, 0, batchOffset, 8)
+      Bytes.putLe(blockRaw, 8, batchMsg.length, 4)
+      Bytes.putLe(blockRaw, 16, body.length, 8)
       val blocks = b.createRawVector(1, 8, blockRaw)
       b.startTable(5)
       b.slotI16(0, 4, 0)
@@ -362,8 +358,7 @@ object ArrowWrite {
     out.write(batchMsg)
     out.write(body)
     out.write(footerFb)
-    var i = 0
-    while (i < 4) { out.write((footerFb.length >> (8 * i)) & 0xff); i += 1 }
+    out.write(Bytes.le(footerFb.length, 4))
     out.write("ARROW1".getBytes)
     out.toByteArray
   }
@@ -403,9 +398,9 @@ object ArrowWrite {
       val b = new Fbb()
       val schema = schemaTable(b, dim)
       val blockRaw = new Array[Byte](24)
-      le64(blockRaw, 0, batchOffset.toLong)
-      le32(blockRaw, 8, batchMsg.length.toLong)
-      le64(blockRaw, 16, bodyLen.toLong)
+      Bytes.putLe(blockRaw, 0, batchOffset, 8)
+      Bytes.putLe(blockRaw, 8, batchMsg.length, 4)
+      Bytes.putLe(blockRaw, 16, bodyLen, 8)
       val blocks = b.createRawVector(1, 8, blockRaw)
       b.startTable(5) // Footer: version(0) schema(1) dictionaries(2) recordBatches(3)
       b.slotI16(0, 4, 0)
@@ -420,18 +415,8 @@ object ArrowWrite {
     out.write(batchMsg)
     out.write(body)
     out.write(footerFb)
-    var i = 0
-    while (i < 4) { out.write((footerFb.length >> (8 * i)) & 0xff); i += 1 }
+    out.write(Bytes.le(footerFb.length, 4))
     out.write("ARROW1".getBytes)
     out.toByteArray
-  }
-
-  private def le64(b: Array[Byte], at: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { b(at + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-  }
-  private def le32(b: Array[Byte], at: Int, v: Long): Unit = {
-    var i = 0
-    while (i < 4) { b(at + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
   }
 }

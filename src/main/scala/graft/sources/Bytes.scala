@@ -1,20 +1,23 @@
 package graft.sources
 
-/** The one home for the `sources` codecs' byte readers and their
-  * failure signal.
+/** The one home for the codecs' byte readers and writers and the
+  * readers' failure signal: every `sources` codec and the TIFF codec in
+  * `operators.MultimodalOps` read and write multi-byte integers here.
   *
-  * Every codec promises None on a hostile file, never a throw. Inside
+  * Every decoder promises None on a hostile file, never a throw. Inside
   * a decode, a structural fault calls `refuse()`, and the entry point
   * wraps its work in `refusing`, which turns that one signal into None.
   * Every reader takes `(bytes, pos: Long)`, checks `pos >= 0` and
   * `pos + n <= bytes.length` (in Long arithmetic, so a position past
   * 2^31 refuses instead of truncating), and refuses or returns the
-  * unsigned value. Readers of width 4 and up return Long.
+  * unsigned value. Readers of width 4 and up return Long. No reader
+  * returns a sentinel: a read past the end is a refusal, never a value
+  * a caller could mistake for one in the file.
   *
-  * Two documented exceptions return a sentinel instead of refusing,
-  * because their callers branch on it: `Hdf5Codec`'s own readers, and
-  * the TIFF decoders in `operators.MultimodalOps`, which wrap these
-  * readers in a -1 sentinel. */
+  * The writers store the low `n` bytes of `v` (0 <= n <= 8): `putLe`
+  * and `putBe` into an array at `at`, `le` and `be` as a new array. A
+  * writer never refuses, because the encoder computes where it writes;
+  * an out-of-range `at` is a program bug and throws. */
 object Bytes {
 
   /** The refusal signal: a stackless singleton, so throwing it costs
@@ -73,6 +76,17 @@ object Bytes {
     if (le) le16(b, p) else be16(b, p)
   def u32(b: Array[Byte], p: Long, le: Boolean): Long =
     if (le) le32(b, p) else be32(b, p)
+
+  def putLe(b: Array[Byte], at: Int, v: Long, n: Int): Unit = {
+    var j = 0
+    while (j < n) { b(at + j) = (v >>> (8 * j)).toByte; j += 1 }
+  }
+  def putBe(b: Array[Byte], at: Int, v: Long, n: Int): Unit = {
+    var j = 0
+    while (j < n) { b(at + j) = (v >>> (8 * (n - 1 - j))).toByte; j += 1 }
+  }
+  def le(v: Long, n: Int): Array[Byte] = { val b = new Array[Byte](n); putLe(b, 0, v, n); b }
+  def be(v: Long, n: Int): Array[Byte] = { val b = new Array[Byte](n); putBe(b, 0, v, n); b }
 
   /** Four ASCII bytes as a String (chunk and box types). */
   def fourcc(b: Array[Byte], p: Long): String =

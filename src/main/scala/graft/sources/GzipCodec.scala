@@ -46,12 +46,8 @@ object GzipCodec {
     while (!d.finished()) { val n = d.deflate(buf); out.write(buf, 0, n) }
     d.end()
     val crc = new java.util.zip.CRC32(); crc.update(data)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(crc.getValue)
-    le32(data.length.toLong & 0xffffffffL)
+    out.write(le(crc.getValue, 4))
+    out.write(le(data.length, 4)) // ISIZE: the length mod 2^32
     out.toByteArray
   }
 

@@ -1,5 +1,7 @@
 package graft.sources
 
+import Bytes._
+
 /** Minimal pure-Scala HDF5 reader for the fixed CropHarvest layout —
   * the one reference container format that previously had only a
   * parquet stand-in (SURVEY §2.1): `h5py.File(path, 'w')` +
@@ -113,41 +115,20 @@ object Hdf5Codec {
     var i = 0
     while (i < 8) { if (bytes(i) != Signature(i)) return None; i += 1 }
 
-    def u8(o: Long): Int = {
-      if (o < 0 || o + 1 > bytes.length) return -1
-      bytes(o.toInt) & 0xff
-    }
-    def u16(o: Long): Int = {
-      if (o < 0 || o + 2 > bytes.length) return -1
-      (bytes(o.toInt) & 0xff) | ((bytes(o.toInt + 1) & 0xff) << 8)
-    }
-    def u32(o: Long): Long = {
-      if (o < 0 || o + 4 > bytes.length) return -1L
-      var v = 0L; var j = 0
-      while (j < 4) { v |= (bytes(o.toInt + j) & 0xffL) << (8 * j); j += 1 }
-      v
-    }
-    def u64(o: Long): Long = {
-      if (o < 0 || o + 8 > bytes.length) return Long.MinValue
-      var v = 0L; var j = 0
-      while (j < 8) { v |= (bytes(o.toInt + j) & 0xffL) << (8 * j); j += 1 }
-      v
-    }
-
     // ---- superblock: v0 (symbol-table root) or v2/v3 (OHDR root —
     // the h5py libver='latest' world; v3 shares v2's field layout)
-    val sbVersion = u8(8)
+    val sbVersion = u8(bytes, 8)
     val rootHeader = sbVersion match {
       case 0 =>
-        if (u8(13) != 8 || u8(14) != 8) return None // offsets/lengths must be 8 bytes
+        if (u8(bytes, 13) != 8 || u8(bytes, 14) != 8) return None // offsets/lengths must be 8 bytes
         // root group symbol table entry at offset 56: header address at
         // +8, cache type at +16 (0 = none, 1 = cached stab — both fine,
         // the header's own stab message is authoritative)
-        u64(56 + 8)
+        le64(bytes, 56 + 8)
       case 2 | 3 =>
-        if (u8(9) != 8 || u8(10) != 8) return None // offsets/lengths must be 8 bytes
+        if (u8(bytes, 9) != 8 || u8(bytes, 10) != 8) return None // offsets/lengths must be 8 bytes
         // base addr +12, extension +20, EOF +28, root header +36
-        u64(36)
+        le64(bytes, 36)
       case _ => return None // v1 never shipped; anything else is hostile
     }
     if (rootHeader <= 0) return None
@@ -157,18 +138,13 @@ object Hdf5Codec {
     // trailing lookup3 checksums are not verified (every read is
     // bounds-checked, so a corrupt header degrades to a refusal)
     def messagesV2(headerAt: Long): Option[Seq[(Int, Long, Int)]] = {
-      if (u8(headerAt + 4) != 2) return None
-      val flags = u8(headerAt + 5)
+      if (u8(bytes, headerAt + 4) != 2) return None
+      val flags = u8(bytes, headerAt + 5)
       var pos = headerAt + 6
       if ((flags & 0x20) != 0) pos += 16 // 4 timestamps
       if ((flags & 0x10) != 0) pos += 4 // attribute phase-change
       val szBytes = 1 << (flags & 0x03)
-      val chunk0 = szBytes match {
-        case 1 => u8(pos).toLong
-        case 2 => u16(pos).toLong
-        case 4 => u32(pos)
-        case _ => u64(pos)
-      }
+      val chunk0 = leN(bytes, pos, szBytes)
       pos += szBytes
       if (chunk0 < 0 || chunk0 > (1 << 26) || pos + chunk0 > bytes.length) return None
       val track = (flags & 0x04) != 0
@@ -183,16 +159,16 @@ object Hdf5Codec {
         blocks = blocks.tail
         var p2 = start
         while (p2 + hdrLen <= end) {
-          val typ = u8(p2)
-          val msize = u16(p2 + 1)
+          val typ = u8(bytes, p2)
+          val msize = le16(bytes, p2 + 1)
           val bodyAt = p2 + hdrLen
-          if (msize < 0 || bodyAt + msize > end) return None
+          if (bodyAt + msize > end) return None
           if (typ == 0x10) { // continuation: OCHK block, checksum-tailed
             if (msize < 16) return None
-            val off = u64(bodyAt); val len = u64(bodyAt + 8)
+            val off = le64(bytes, bodyAt); val len = le64(bytes, bodyAt + 8)
             if (off < 0 || len < 12 || off + len > bytes.length) return None
-            if (!(u8(off) == 'O' && u8(off + 1) == 'C' &&
-                  u8(off + 2) == 'H' && u8(off + 3) == 'K')) return None
+            if (!(u8(bytes, off) == 'O' && u8(bytes, off + 1) == 'C' &&
+                  u8(bytes, off + 2) == 'H' && u8(bytes, off + 3) == 'K')) return None
             blocks = blocks :+ ((off + 4, off + len - 4))
           } else out += ((typ, bodyAt, msize))
           p2 = bodyAt + msize
@@ -203,13 +179,13 @@ object Hdf5Codec {
 
     // ---- v1 object header walk: returns (msgType, bodyOffset, bodySize)
     def messages(headerAt: Long): Option[Seq[(Int, Long, Int)]] = {
-      if (u8(headerAt) == 'O' && u8(headerAt + 1) == 'H' &&
-          u8(headerAt + 2) == 'D' && u8(headerAt + 3) == 'R')
+      if (u8(bytes, headerAt) == 'O' && u8(bytes, headerAt + 1) == 'H' &&
+          u8(bytes, headerAt + 2) == 'D' && u8(bytes, headerAt + 3) == 'R')
         return messagesV2(headerAt)
-      if (u8(headerAt) != 1) return None // v1 only
-      val nmsgs = u16(headerAt + 2)
-      val hdrSize = u32(headerAt + 8)
-      if (nmsgs < 0 || nmsgs > 1024 || hdrSize < 0) return None
+      if (u8(bytes, headerAt) != 1) return None // v1 only
+      val nmsgs = le16(bytes, headerAt + 2)
+      val hdrSize = le32(bytes, headerAt + 8)
+      if (nmsgs > 1024) return None
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Int)]
       // blocks: (start, size) — continuation messages extend the walk
       var blocks = List((headerAt + 16, hdrSize))
@@ -220,12 +196,12 @@ object Hdf5Codec {
         var pos = start
         val end = start + size
         while (remaining > 0 && pos + 8 <= end) {
-          val typ = u16(pos)
-          val msize = u16(pos + 2)
-          if (msize < 0 || pos + 8 + msize > end) return None
+          val typ = le16(bytes, pos)
+          val msize = le16(bytes, pos + 2)
+          if (pos + 8 + msize > end) return None
           if (typ == 0x0010) { // continuation: offset u64 + length u64
             if (msize < 16) return None
-            blocks = blocks :+ ((u64(pos + 8), u64(pos + 16)))
+            blocks = blocks :+ ((le64(bytes, pos + 8), le64(bytes, pos + 16)))
           } else out += ((typ, pos + 8, msize))
           remaining -= 1
           pos += 8 + msize
@@ -241,15 +217,15 @@ object Hdf5Codec {
     val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     rootMsgs.find(_._1 == 0x0011) match {
       case Some(stab) =>
-        val btreeAt = u64(stab._2)
-        val heapAt = u64(stab._2 + 8)
+        val btreeAt = le64(bytes, stab._2)
+        val heapAt = le64(bytes, stab._2 + 8)
         if (btreeAt <= 0 || heapAt <= 0) return None
 
         // local heap: data segment address at +24 (after sig+ver+res,
         // seg size u64, free-list head u64)
-        if (!(u8(heapAt) == 'H' && u8(heapAt + 1) == 'E' &&
-              u8(heapAt + 2) == 'A' && u8(heapAt + 3) == 'P')) return None
-        val heapData = u64(heapAt + 24)
+        if (!(u8(bytes, heapAt) == 'H' && u8(bytes, heapAt + 1) == 'E' &&
+              u8(bytes, heapAt + 2) == 'A' && u8(bytes, heapAt + 3) == 'P')) return None
+        val heapData = le64(bytes, heapAt + 24)
         def heapName(off: Long): Option[String] = {
           val at = heapData + off
           if (at < 0 || at >= bytes.length) return None
@@ -261,28 +237,28 @@ object Hdf5Codec {
 
         // b-tree: single leaf (level 0) is the CropHarvest shape; deeper
         // trees (thousands of links) are out of envelope
-        if (!(u8(btreeAt) == 'T' && u8(btreeAt + 1) == 'R' &&
-              u8(btreeAt + 2) == 'E' && u8(btreeAt + 3) == 'E')) return None
-        if (u8(btreeAt + 4) != 0) return None // node type: group
-        if (u8(btreeAt + 5) != 0) return None // level 0 (leaf)
-        val nChildren = u16(btreeAt + 6)
-        if (nChildren < 0 || nChildren > 64) return None
+        if (!(u8(bytes, btreeAt) == 'T' && u8(bytes, btreeAt + 1) == 'R' &&
+              u8(bytes, btreeAt + 2) == 'E' && u8(bytes, btreeAt + 3) == 'E')) return None
+        if (u8(bytes, btreeAt + 4) != 0) return None // node type: group
+        if (u8(bytes, btreeAt + 5) != 0) return None // level 0 (leaf)
+        val nChildren = le16(bytes, btreeAt + 6)
+        if (nChildren > 64) return None
 
         // symbol nodes → (name, object header address)
         var ci = 0
         while (ci < nChildren) {
           // child i address sits after the 24-byte node header + key 0,
           // alternating key/child (keys and children are 8 bytes each)
-          val childAt = u64(btreeAt + 24 + 8 + ci * 16L)
-          if (!(u8(childAt) == 'S' && u8(childAt + 1) == 'N' &&
-                u8(childAt + 2) == 'O' && u8(childAt + 3) == 'D')) return None
-          val nsyms = u16(childAt + 6)
-          if (nsyms < 0 || nsyms > 1024) return None
+          val childAt = le64(bytes, btreeAt + 24 + 8 + ci * 16L)
+          if (!(u8(bytes, childAt) == 'S' && u8(bytes, childAt + 1) == 'N' &&
+                u8(bytes, childAt + 2) == 'O' && u8(bytes, childAt + 3) == 'D')) return None
+          val nsyms = le16(bytes, childAt + 6)
+          if (nsyms > 1024) return None
           var si = 0
           while (si < nsyms) {
             val ste = childAt + 8 + si * 40L
-            val nameOff = u64(ste)
-            val objAt = u64(ste + 8)
+            val nameOff = le64(bytes, ste)
+            val objAt = le64(bytes, ste + 8)
             val name = heapName(nameOff).getOrElse(return None)
             entries += ((name, objAt))
             si += 1
@@ -295,43 +271,33 @@ object Hdf5Codec {
         // group past its compact-storage threshold gets: heap objects
         // are link messages, enumerated via the name-index v2 B-tree)
         rootMsgs.find(_._1 == 0x0002).foreach { case (_, b, _) =>
-          if (u8(b) != 0) return None
-          val liFlags = u8(b + 1)
+          if (u8(bytes, b) != 0) return None
+          val liFlags = u8(bytes, b + 1)
           var q = b + 2
           if ((liFlags & 1) != 0) q += 8 // max creation index
-          // bounds-check BEFORE the Undef compare: u64 on a truncated
-          // buffer returns -1L == Undef, which would alias "truncated
-          // link-info" to "no fractal heap" and pass the gate instead
-          // of refusing (the fixed-array reader guards the same way)
-          if (q + 8 > bytes.length) return None
-          val fheapAt = u64(q)
+          val fheapAt = le64(bytes, q)
           if (fheapAt != Undef) {
-            val nameBtAt = u64(q + 8)
-            if (nameBtAt == Long.MinValue || nameBtAt == Undef) return None
+            val nameBtAt = le64(bytes, q + 8)
+            if (nameBtAt == Undef) return None
             entries ++= denseLinks(bytes, fheapAt, nameBtAt)
               .getOrElse(return None)
           }
         }
         for ((t, b, _) <- rootMsgs if t == 0x0006) {
-          if (u8(b) != 1) return None // link message v1 only
-          val lf = u8(b + 1)
+          if (u8(bytes, b) != 1) return None // link message v1 only
+          val lf = u8(bytes, b + 1)
           var q = b + 2
-          val ltype = if ((lf & 0x08) != 0) { val v = u8(q); q += 1; v } else 0
+          val ltype = if ((lf & 0x08) != 0) { val v = u8(bytes, q); q += 1; v } else 0
           if (ltype != 0) return None // hard links only
           if ((lf & 0x04) != 0) q += 8 // creation order
           if ((lf & 0x10) != 0) q += 1 // charset
           val lenSz = 1 << (lf & 0x03)
-          val nameLen = lenSz match {
-            case 1 => u8(q).toLong
-            case 2 => u16(q).toLong
-            case 4 => u32(q)
-            case _ => u64(q)
-          }
+          val nameLen = leN(bytes, q, lenSz)
           q += lenSz
           if (nameLen <= 0 || nameLen > 255 || q + nameLen + 8 > bytes.length) return None
           val name = new String(bytes, q.toInt, nameLen.toInt, "UTF-8")
           q += nameLen
-          val objAt = u64(q)
+          val objAt = le64(bytes, q)
           if (objAt <= 0) return None
           entries += ((name, objAt))
         }
@@ -350,25 +316,25 @@ object Hdf5Codec {
       // (version, rank, flags, type, dims); maxdims skipped in both
       val (shape: Seq[Long]) = msgs.find(_._1 == 0x0001) match {
         case Some((_, b, _)) =>
-          val ver = u8(b)
-          val rank = u8(b + 1)
-          if (rank < 0 || rank > 8) return None
+          val ver = u8(bytes, b)
+          val rank = u8(bytes, b + 1)
+          if (rank > 8) return None
           val dimsAt = ver match {
             case 1 => b + 8
             case 2 => b + 4
             case _ => return None
           }
-          (0 until rank).map(d => u64(dimsAt + 8L * d))
+          (0 until rank).map(d => le64(bytes, dimsAt + 8L * d))
         case None => return None
       }
       if (shape.exists(_ < 0)) return None
       // datatype: class 0 fixed / class 1 float, LE scalar
       val dtype: String = msgs.find(_._1 == 0x0003) match {
         case Some((_, b, _)) =>
-          val clsVer = u8(b)
+          val clsVer = u8(bytes, b)
           val cls = clsVer & 0x0f
-          val bits0 = u8(b + 1)
-          val size = u32(b + 4)
+          val bits0 = u8(bytes, b + 1)
+          val size = le32(bytes, b + 4)
           if ((bits0 & 0x01) != 0) return None // big-endian out of envelope
           (cls, size) match {
             case (1, 4L) => "f4"
@@ -398,18 +364,18 @@ object Hdf5Codec {
       val filters: List[Int] = msgs.find(_._1 == 0x000b) match {
         case None => Nil
         case Some((_, b, _)) =>
-          if (u8(b) != 1) return None // pipeline v2+ out of envelope
-          val nf = u8(b + 1)
+          if (u8(bytes, b) != 1) return None // pipeline v2+ out of envelope
+          val nf = u8(bytes, b + 1)
           if (nf < 1 || nf > 2) return None
           var fs = List.empty[Int]
           var q = b + 8
           var k = 0
           while (k < nf) {
-            val fid = u16(q)
+            val fid = le16(bytes, q)
             if (fid != 1 && fid != 2) return None // deflate/shuffle only
-            if (u16(q + 2) != 0) return None // named filters out of envelope
-            val nvals = u16(q + 6)
-            if (nvals < 0 || nvals > 8) return None
+            if (le16(bytes, q + 2) != 0) return None // named filters out of envelope
+            val nvals = le16(bytes, q + 6)
+            if (nvals > 8) return None
             fs = fs :+ fid
             q += 8 + 4L * nvals + (if (nvals % 2 == 1) 4L else 0L)
             k += 1
@@ -423,21 +389,21 @@ object Hdf5Codec {
       // fixed-array indexes — the libver='latest' chunked world)
       val raw: Array[Byte] = msgs.find(_._1 == 0x0008) match {
         case None => return None
-        case Some((_, b, _)) => u8(b) match {
-          case 3 => u8(b + 1) match {
+        case Some((_, b, _)) => u8(bytes, b) match {
+          case 3 => u8(bytes, b + 1) match {
             case 1 => // contiguous: address + size
               if (filters.nonEmpty) return None // filters need chunked layout
-              val dataAt = u64(b + 2); val dataSize = u64(b + 10)
+              val dataAt = le64(bytes, b + 2); val dataSize = le64(bytes, b + 10)
               if (nElems * width != dataSize) return None
               if (dataAt < 0 || dataAt + dataSize > bytes.length) return None
               java.util.Arrays.copyOfRange(bytes, dataAt.toInt, (dataAt + dataSize).toInt)
             case 2 => // chunked: dimensionality, B-tree address, chunk dims
-              val dimy = u8(b + 2)
+              val dimy = u8(bytes, b + 2)
               val rank = shape.size
               if (dimy != rank + 1) return None
-              val btreeAt = u64(b + 3)
-              val chunkDims = (0 until rank).map(d => u32(b + 11 + 4L * d))
-              if (u32(b + 11 + 4L * rank) != width) return None
+              val btreeAt = le64(bytes, b + 3)
+              val chunkDims = (0 until rank).map(d => le32(bytes, b + 11 + 4L * d))
+              if (le32(bytes, b + 11 + 4L * rank) != width) return None
               if (chunkDims.exists(d => d <= 0 || d > (1 << 24))) return None
               val chunkElems = chunkDims.product
               if (chunkElems <= 0 || chunkElems > MaxElements) return None
@@ -446,21 +412,15 @@ object Hdf5Codec {
             case _ => return None // compact (0) out of envelope
           }
           case 4 =>
-            if (u8(b + 1) != 2) return None // v4 is chunked-only here
+            if (u8(bytes, b + 1) != 2) return None // v4 is chunked-only here
             // flags(1), dimensionality(1), dim-size-encoded-length(1),
             // dims (rank+1, last = element size), index type, info
-            val dimy = u8(b + 3)
+            val dimy = u8(bytes, b + 3)
             val rank = shape.size
             if (dimy != rank + 1) return None
-            val encLen = u8(b + 4)
+            val encLen = u8(bytes, b + 4)
             if (encLen < 1 || encLen > 8) return None
-            def dimAt(i: Int): Long = {
-              val o = b + 5 + i.toLong * encLen
-              if (o + encLen > bytes.length) return -1L
-              var v = 0L; var j = 0
-              while (j < encLen) { v |= (bytes(o.toInt + j) & 0xffL) << (8 * j); j += 1 }
-              v
-            }
+            def dimAt(i: Int): Long = leN(bytes, b + 5 + i.toLong * encLen, encLen)
             val chunkDims = (0 until rank).map(dimAt(_))
             if (dimAt(rank) != width) return None
             if (chunkDims.exists(d => d <= 0 || d > (1 << 24))) return None
@@ -473,25 +433,21 @@ object Hdf5Codec {
         }
       }
 
-      def ru16(o: Int): Int = (raw(o) & 0xff) | ((raw(o + 1) & 0xff) << 8)
-      def ru32(o: Int): Long =
-        (ru16(o).toLong) | (ru16(o + 2).toLong << 16)
-      def ru64(o: Int): Long = ru32(o) | (ru32(o + 4) << 32)
       val values = new Array[Double](nElems.toInt)
       var k = 0
       while (k < values.length) {
         val o = k * width
         values(k) = dtype match {
-          case "f4" => java.lang.Float.intBitsToFloat(ru32(o).toInt).toDouble
-          case "f8" => java.lang.Double.longBitsToDouble(ru64(o))
+          case "f4" => java.lang.Float.intBitsToFloat(le32(raw, o).toInt).toDouble
+          case "f8" => java.lang.Double.longBitsToDouble(le64(raw, o))
           case "i1" => raw(o).toDouble
-          case "u1" => (raw(o) & 0xff).toDouble
-          case "i2" => ru16(o).toShort.toDouble
-          case "u2" => ru16(o).toDouble
-          case "i4" => ru32(o).toInt.toDouble
-          case "u4" => ru32(o).toDouble
-          case "i8" => ru64(o).toDouble
-          case "u8" => ru64(o).toDouble // ≥2^63 widens like numpy→float
+          case "u1" => u8(raw, o).toDouble
+          case "i2" => le16(raw, o).toShort.toDouble
+          case "u2" => le16(raw, o).toDouble
+          case "i4" => le32(raw, o).toInt.toDouble
+          case "u4" => le32(raw, o).toDouble
+          case "i8" => le64(raw, o).toDouble
+          case "u8" => le64(raw, o).toDouble // ≥2^63 widens like numpy→float
         }
         k += 1
       }
@@ -648,17 +604,9 @@ object Hdf5Codec {
     * default creation parameters) return None. */
   private def denseLinks(
       bytes: Array[Byte], fheapAt: Long, btAt: Long): Option[Seq[(String, Long)]] = {
-    def u8(o: Long): Int =
-      if (o < 0 || o + 1 > bytes.length) -1 else bytes(o.toInt) & 0xff
-    def uN(o: Long, n: Int): Long = {
-      if (n <= 0 || n > 8 || o < 0 || o + n > bytes.length) return Long.MinValue
-      var v = 0L; var j = 0
-      while (j < n) { v |= (bytes(o.toInt + j) & 0xffL) << (8 * j); j += 1 }
-      v
-    }
     def sig4(o: Long, s: String): Boolean =
-      u8(o) == s.charAt(0) && u8(o + 1) == s.charAt(1) &&
-        u8(o + 2) == s.charAt(2) && u8(o + 3) == s.charAt(3)
+      u8(bytes, o) == s.charAt(0) && u8(bytes, o + 1) == s.charAt(1) &&
+        u8(bytes, o + 2) == s.charAt(2) && u8(bytes, o + 3) == s.charAt(3)
     def encSize(x: Long): Int = {
       var n = 1
       while (n < 8 && x >= (1L << (8 * n))) n += 1
@@ -667,29 +615,29 @@ object Hdf5Codec {
 
     // ---- FRHP header
     if (fheapAt < 0 || fheapAt + 146 > bytes.length) return None
-    if (!sig4(fheapAt, "FRHP") || u8(fheapAt + 4) != 0) return None
-    val heapIdLen = uN(fheapAt + 5, 2).toInt
-    val ioFilterLen = uN(fheapAt + 7, 2).toInt
+    if (!sig4(fheapAt, "FRHP") || u8(bytes, fheapAt + 4) != 0) return None
+    val heapIdLen = le16(bytes, fheapAt + 5)
+    val ioFilterLen = le16(bytes, fheapAt + 7)
     if (ioFilterLen != 0) return None // filtered heap: out of envelope
-    val maxManaged = uN(fheapAt + 10, 4)
-    val nManaged = uN(fheapAt + 70, 8)
-    val nHuge = uN(fheapAt + 86, 8)
-    val nTiny = uN(fheapAt + 102, 8)
+    val maxManaged = le32(bytes, fheapAt + 10)
+    val nManaged = le64(bytes, fheapAt + 70)
+    val nHuge = le64(bytes, fheapAt + 86)
+    val nTiny = le64(bytes, fheapAt + 102)
     if (nHuge != 0 || nTiny != 0) return None
     if (nManaged < 0 || nManaged > 100000) return None
-    val tblWidth = uN(fheapAt + 110, 2).toInt
-    val startSize = uN(fheapAt + 112, 8)
-    val maxDirect = uN(fheapAt + 120, 8)
-    val maxHeapBits = uN(fheapAt + 128, 2).toInt
-    val rootAddr = uN(fheapAt + 132, 8)
-    val curRows = uN(fheapAt + 140, 2).toInt
+    val tblWidth = le16(bytes, fheapAt + 110)
+    val startSize = le64(bytes, fheapAt + 112)
+    val maxDirect = le64(bytes, fheapAt + 120)
+    val maxHeapBits = le16(bytes, fheapAt + 128)
+    val rootAddr = le64(bytes, fheapAt + 132)
+    val curRows = le16(bytes, fheapAt + 140)
     if (tblWidth < 1 || tblWidth > 1024) return None
     if (startSize < 16 || startSize > (1L << 30) ||
         java.lang.Long.bitCount(startSize) != 1) return None
     if (maxDirect < startSize || maxDirect > (1L << 30) ||
         java.lang.Long.bitCount(maxDirect) != 1) return None
     if (maxHeapBits < 8 || maxHeapBits > 64) return None
-    if (rootAddr == Long.MinValue || rootAddr == Undef) return None
+    if (rootAddr == Undef) return None
     val offBytes = (maxHeapBits + 7) / 8
     val lenBytes = encSize(maxManaged)
     if (heapIdLen != 1 + offBytes + lenBytes) return None
@@ -725,8 +673,8 @@ object Hdf5Codec {
         val blockStart = rowStart(r) + col.toLong * rowSize(r)
         if (off + len > blockStart + rowSize(r)) return None
         val childAt = rootAddr + 4 + 1 + 8 + offBytes + (r.toLong * tblWidth + col) * 8
-        val child = uN(childAt, 8)
-        if (child == Long.MinValue || child == Undef) return None
+        val child = le64(bytes, childAt)
+        if (child == Undef) return None
         if (!sig4(child, "FHDB")) return None
         Some(child + (off - blockStart))
       }
@@ -736,19 +684,19 @@ object Hdf5Codec {
     def linkAt(at: Long, len: Long): Option[(String, Long)] = {
       val end = at + len
       if (end > bytes.length) return None
-      if (u8(at) != 1) return None
-      val lf = u8(at + 1)
+      if (u8(bytes, at) != 1) return None
+      val lf = u8(bytes, at + 1)
       var q = at + 2
-      val ltype = if ((lf & 0x08) != 0) { val v = u8(q); q += 1; v } else 0
+      val ltype = if ((lf & 0x08) != 0) { val v = u8(bytes, q); q += 1; v } else 0
       if (ltype != 0) return None // hard links only
       if ((lf & 0x04) != 0) q += 8 // creation order
       if ((lf & 0x10) != 0) q += 1 // charset
       val lenSz = 1 << (lf & 0x03)
-      val nameLen = uN(q, lenSz)
+      val nameLen = leN(bytes, q, lenSz)
       q += lenSz
       if (nameLen <= 0 || nameLen > 255 || q + nameLen + 8 > end) return None
       val name = new String(bytes, q.toInt, nameLen.toInt, "UTF-8")
-      val objAt = uN(q + nameLen, 8)
+      val objAt = le64(bytes, q + nameLen)
       if (objAt <= 0) return None
       Some((name, objAt))
     }
@@ -757,13 +705,11 @@ object Hdf5Codec {
       * heap ID. */
     val found = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def rec(at: Long): Boolean = {
-      val id0 = u8(at + 4)
-      if (id0 < 0) return false
+      val id0 = u8(bytes, at + 4)
       if ((id0 >>> 6) != 0) return false      // heap ID version
       if (((id0 >>> 4) & 3) != 0) return false // managed only (no huge/tiny)
-      val off = uN(at + 5, offBytes)
-      val len = uN(at + 5 + offBytes, lenBytes)
-      if (off == Long.MinValue || len == Long.MinValue) return false
+      val off = leN(bytes, at + 5, offBytes)
+      val len = leN(bytes, at + 5 + offBytes, lenBytes)
       if (len > maxManaged) return false
       val fp = filePos(off, len).getOrElse(return false)
       val lk = linkAt(fp, len).getOrElse(return false)
@@ -774,13 +720,13 @@ object Hdf5Codec {
     // ---- name-index v2 B-tree (same traversal discipline as the
     // chunk-index walker; record type 5, record payload = hash + id)
     if (btAt < 0 || btAt + 38 > bytes.length) return None
-    if (!sig4(btAt, "BTHD") || u8(btAt + 4) != 0) return None
-    if (u8(btAt + 5) != 5) return None // link-name records
-    val nodeSize = uN(btAt + 6, 4)
-    val recSize = uN(btAt + 10, 2).toInt
-    val depth = uN(btAt + 12, 2).toInt
-    val rootNAddr = uN(btAt + 16, 8)
-    val rootNrec = uN(btAt + 24, 2).toInt
+    if (!sig4(btAt, "BTHD") || u8(bytes, btAt + 4) != 0) return None
+    if (u8(bytes, btAt + 5) != 5) return None // link-name records
+    val nodeSize = le32(bytes, btAt + 6)
+    val recSize = le16(bytes, btAt + 10)
+    val depth = le16(bytes, btAt + 12)
+    val rootNAddr = le64(bytes, btAt + 16)
+    val rootNrec = le16(bytes, btAt + 24)
     if (recSize != 4 + heapIdLen) return None
     if (depth > 8) return None
     if (nodeSize < 10 + recSize || nodeSize > (1L << 26)) return None
@@ -809,7 +755,7 @@ object Hdf5Codec {
         if (nrec > maxLeaf) return false
         if (at + 6 + nrec.toLong * recSize + 4 > bytes.length) return false
         if (!sig4(at, "BTLF")) return false
-        if (u8(at + 4) != 0 || u8(at + 5) != 5) return false
+        if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != 5) return false
         var i = 0
         while (i < nrec) {
           if (!rec(at + 6 + i.toLong * recSize)) return false
@@ -823,7 +769,7 @@ object Hdf5Codec {
         val ptrsAt = recsAt + nrec.toLong * recSize
         if (ptrsAt + (nrec + 1).toLong * psz + 4 > bytes.length) return false
         if (!sig4(at, "BTIN")) return false
-        if (u8(at + 4) != 0 || u8(at + 5) != 5) return false
+        if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != 5) return false
         var i = 0
         while (i < nrec) {
           if (!rec(recsAt + i.toLong * recSize)) return false
@@ -832,7 +778,7 @@ object Hdf5Codec {
         var c = 0
         while (c <= nrec) {
           val pAt = ptrsAt + c.toLong * psz
-          if (!readNode(uN(pAt, 8), d - 1, uN(pAt + 8, nrecSz).toInt))
+          if (!readNode(le64(bytes, pAt), d - 1, leN(bytes, pAt + 8, nrecSz).toInt))
             return false
           c += 1
         }
@@ -846,18 +792,6 @@ object Hdf5Codec {
 
   private def readChunked(bytes: Array[Byte], btreeAt: Long, shape: Seq[Long],
       chunkDims: Seq[Long], width: Int, filters: Seq[Int]): Option[Array[Byte]] = {
-    def u8(o: Long): Int =
-      if (o < 0 || o + 1 > bytes.length) -1 else bytes(o.toInt) & 0xff
-    def u16(o: Long): Int =
-      if (o < 0 || o + 2 > bytes.length) -1
-      else (bytes(o.toInt) & 0xff) | ((bytes(o.toInt + 1) & 0xff) << 8)
-    def u32(o: Long): Long =
-      if (o < 0 || o + 4 > bytes.length) -1L
-      else u16(o).toLong | (u16(o + 2).toLong << 16)
-    def u64(o: Long): Long =
-      if (o < 0 || o + 8 > bytes.length) -1L
-      else u32(o) | (u32(o + 4) << 32)
-
     val asm = new ChunkAssembler(bytes, shape, chunkDims, width, filters)
     if (!asm.valid) return None
     val rank = shape.size
@@ -871,26 +805,25 @@ object Hdf5Codec {
       if (depth > 8) return false
       nodesSeen += 1
       if (nodesSeen > 4096) return false
-      if (!(u8(nodeAt) == 'T' && u8(nodeAt + 1) == 'R' &&
-            u8(nodeAt + 2) == 'E' && u8(nodeAt + 3) == 'E')) return false
-      if (u8(nodeAt + 4) != 1) return false // node type 1 = raw data chunks
-      val level = u8(nodeAt + 5)
-      if (level < 0) return false
-      val n = u16(nodeAt + 6)
-      if (n < 0 || n > 4096) return false
+      if (!(u8(bytes, nodeAt) == 'T' && u8(bytes, nodeAt + 1) == 'R' &&
+            u8(bytes, nodeAt + 2) == 'E' && u8(bytes, nodeAt + 3) == 'E')) return false
+      if (u8(bytes, nodeAt + 4) != 1) return false // node type 1 = raw data chunks
+      val level = u8(bytes, nodeAt + 5)
+      val n = le16(bytes, nodeAt + 6)
+      if (n > 4096) return false
       var i = 0
       while (i < n) {
         val kAt = nodeAt + 24 + i.toLong * (keySize + 8)
         if (level == 0) {
           chunksSeen += 1
           if (chunksSeen > asm.gridChunks) return false
-          val nbytes = u32(kAt)
-          val mask = u32(kAt + 4)
-          val offs = Array.tabulate(rank)(d => u64(kAt + 8 + 8L * d))
-          val childAt = u64(kAt + keySize)
+          val nbytes = le32(bytes, kAt)
+          val mask = le32(bytes, kAt + 4)
+          val offs = Array.tabulate(rank)(d => le64(bytes, kAt + 8 + 8L * d))
+          val childAt = le64(bytes, kAt + keySize)
           if (!asm.chunkEntry(offs, childAt, nbytes, mask)) return false
         } else {
-          val childAt = u64(kAt + keySize)
+          val childAt = le64(bytes, kAt + keySize)
           if (childAt < 0) return false
           if (!walk(childAt, depth + 1)) return false
         }
@@ -921,35 +854,27 @@ object Hdf5Codec {
     * indexing-type byte inside the layout message. */
   private def readChunkedV4(bytes: Array[Byte], infoAt: Long, shape: Seq[Long],
       chunkDims: Seq[Long], width: Int, filters: Seq[Int]): Option[Array[Byte]] = {
-    def u8(o: Long): Int =
-      if (o < 0 || o + 1 > bytes.length) -1 else bytes(o.toInt) & 0xff
-    def uN(o: Long, n: Int): Long = {
-      if (n <= 0 || n > 8 || o < 0 || o + n > bytes.length) return -1L
-      var v = 0L; var j = 0
-      while (j < n) { v |= (bytes(o.toInt + j) & 0xffL) << (8 * j); j += 1 }
-      v
-    }
     val asm = new ChunkAssembler(bytes, shape, chunkDims, width, filters)
     if (!asm.valid) return None
     if (asm.gridChunks > (1 << 20)) return None
 
-    val idxType = u8(infoAt)
+    val idxType = u8(bytes, infoAt)
     idxType match {
       case 1 => // single chunk covering the whole (padded) dataset
         if (asm.gridChunks != 1) return None
         var q = infoAt + 1
         val (nbytes, mask) =
           if (filters.nonEmpty) {
-            val sz = uN(q, 8); val m = uN(q + 8, 4); q += 12
+            val sz = le64(bytes, q); val m = le32(bytes, q + 8); q += 12
             (sz, m)
           } else (asm.fullChunkBytes.toLong, 0L)
-        val addr = uN(q, 8)
+        val addr = le64(bytes, q)
         if (!asm.chunkEntry(new Array[Long](shape.size), addr, nbytes, mask))
           None
         else Some(asm.raw)
       case 2 => // implicit: full unfiltered chunks, contiguous, grid order
         if (filters.nonEmpty) return None
-        val base = uN(infoAt + 1, 8)
+        val base = le64(bytes, infoAt + 1)
         if (base < 0) return None
         var i = 0L
         while (i < asm.gridChunks) {
@@ -961,38 +886,35 @@ object Hdf5Codec {
         Some(asm.raw)
       case 3 => // fixed array, unpaged
         // indexing info: page bits (1 byte), then the FAHD address
-        val fahd = uN(infoAt + 2, 8)
+        val fahd = le64(bytes, infoAt + 2)
         if (fahd < 0) return None
-        if (!(u8(fahd) == 'F' && u8(fahd + 1) == 'A' &&
-              u8(fahd + 2) == 'H' && u8(fahd + 3) == 'D')) return None
-        if (u8(fahd + 4) != 0) return None // FA version 0
-        val clientId = u8(fahd + 5)
+        if (!(u8(bytes, fahd) == 'F' && u8(bytes, fahd + 1) == 'A' &&
+              u8(bytes, fahd + 2) == 'H' && u8(bytes, fahd + 3) == 'D')) return None
+        if (u8(bytes, fahd + 4) != 0) return None // FA version 0
+        val clientId = u8(bytes, fahd + 5)
         if (clientId != 0 && clientId != 1) return None
         if ((clientId == 1) != filters.nonEmpty) return None
-        val entrySize = u8(fahd + 6)
-        val pageBits = u8(fahd + 7)
-        val maxN = uN(fahd + 8, 8)
-        val fadb = uN(fahd + 16, 8)
+        val entrySize = u8(bytes, fahd + 6)
+        val pageBits = u8(bytes, fahd + 7)
+        val maxN = le64(bytes, fahd + 8)
+        val fadb = le64(bytes, fahd + 16)
         if (maxN != asm.gridChunks) return None
         if (pageBits < 1 || pageBits > 20) return None
         if (fadb < 0) return None
-        if (!(u8(fadb) == 'F' && u8(fadb + 1) == 'A' &&
-              u8(fadb + 2) == 'D' && u8(fadb + 3) == 'B')) return None
-        if (u8(fadb + 4) != 0 || u8(fadb + 5) != clientId) return None
+        if (!(u8(bytes, fadb) == 'F' && u8(bytes, fadb + 1) == 'A' &&
+              u8(bytes, fadb + 2) == 'D' && u8(bytes, fadb + 3) == 'B')) return None
+        if (u8(bytes, fadb + 4) != 0 || u8(bytes, fadb + 5) != clientId) return None
         val szBytes = entrySize - 12 // filtered: addr(8) + size + mask(4)
         if (clientId == 1 && (szBytes < 1 || szBytes > 8)) return None
         if (clientId == 0 && entrySize != 8) return None
-        // one element, global grid index gi; arrays are bounds-checked
-        // BEFORE their loops: an out-of-range uN read returns -1L,
-        // which is indistinguishable from the legitimate
-        // undefined-address sentinel — a truncated array would
-        // otherwise decode silently as all-unallocated instead of
-        // refusing
+        // one element, global grid index gi; each element array is
+        // bounds-checked whole before its loop, so a truncated array
+        // refuses before any chunk is placed
         def faElem(eAt: Long, gi: Long): Boolean = {
-          val addr = uN(eAt, 8)
+          val addr = le64(bytes, eAt)
           if (addr == Undef) return true // unallocated chunk
           val (nbytes, mask) =
-            if (clientId == 1) (uN(eAt + 8, szBytes), uN(eAt + 8 + szBytes, 4))
+            if (clientId == 1) (leN(bytes, eAt + 8, szBytes), le32(bytes, eAt + 8 + szBytes))
             else (asm.fullChunkBytes.toLong, 0L)
           asm.chunkEntry(asm.gridOffsets(gi), addr, nbytes, mask)
         }
@@ -1024,7 +946,7 @@ object Hdf5Codec {
           while (p < npages) {
             val inPage = math.min(pageElems, maxN - gi)
             val initialized =
-              ((u8(bitmapAt + p / 8) >> (p % 8).toInt) & 1) == 1
+              ((u8(bytes, bitmapAt + p / 8) >> (p % 8).toInt) & 1) == 1
             if (initialized) {
               var t = 0L
               while (t < inPage) {
@@ -1043,20 +965,20 @@ object Hdf5Codec {
         // the header is authoritative): element size, max-nelmts bits,
         // index-block elmts, data-block min elmts, super-block min
         // data ptrs, max data-block-page nelmts bits
-        val eahd = uN(infoAt + 6, 8)
+        val eahd = le64(bytes, infoAt + 6)
         if (eahd < 0 || eahd + 72 > bytes.length) return None
-        if (!(u8(eahd) == 'E' && u8(eahd + 1) == 'A' &&
-              u8(eahd + 2) == 'H' && u8(eahd + 3) == 'D')) return None
-        if (u8(eahd + 4) != 0) return None // EA version 0
-        val clientId = u8(eahd + 5)
+        if (!(u8(bytes, eahd) == 'E' && u8(bytes, eahd + 1) == 'A' &&
+              u8(bytes, eahd + 2) == 'H' && u8(bytes, eahd + 3) == 'D')) return None
+        if (u8(bytes, eahd + 4) != 0) return None // EA version 0
+        val clientId = u8(bytes, eahd + 5)
         if (clientId != 0 && clientId != 1) return None
         if ((clientId == 1) != filters.nonEmpty) return None
-        val elmtSize = u8(eahd + 6)
-        val maxBits = u8(eahd + 7)
-        val idxElmts = u8(eahd + 8)
-        val minElmts = u8(eahd + 9)
-        val minPtrs = u8(eahd + 10)
-        val pgBits = u8(eahd + 11)
+        val elmtSize = u8(bytes, eahd + 6)
+        val maxBits = u8(bytes, eahd + 7)
+        val idxElmts = u8(bytes, eahd + 8)
+        val minElmts = u8(bytes, eahd + 9)
+        val minPtrs = u8(bytes, eahd + 10)
+        val pgBits = u8(bytes, eahd + 11)
         // the doubling math requires power-of-two knobs (the library
         // enforces the same at creation)
         if (maxBits < 1 || maxBits > 64) return None
@@ -1079,19 +1001,18 @@ object Hdf5Codec {
 
         // one chunk-index element; gi = global grid index
         def elemEntry(at: Long, gi: Long): Boolean = {
-          val addr = uN(at, 8)
+          val addr = le64(bytes, at)
           if (addr == Undef) return true // unallocated chunk
           val (nb, mask) =
-            if (clientId == 1) (uN(at + 8, szBytes), uN(at + 8 + szBytes, 4))
+            if (clientId == 1) (leN(bytes, at + 8, szBytes), le32(bytes, at + 8 + szBytes))
             else (asm.fullChunkBytes.toLong, 0L)
           asm.chunkEntry(asm.gridOffsets(gi), addr, nb, mask)
         }
         val pageElems = 1L << math.min(pgBits, 62)
         // data block (UNPAGED): prefix + block offset, then dnel
         // elements whose grid indexes start at idxElmts + startElem.
-        // Whole element array bounds-checked BEFORE reading (a
-        // truncated block must refuse, not alias to all-unallocated —
-        // the fixed-array rule). A PAGED block reached from the INDEX
+        // Whole element array bounds-checked BEFORE reading (the
+        // fixed-array rule). A PAGED block reached from the INDEX
         // block carries no page-init bitmap anywhere on disk (the
         // library's doubling math keeps index-block data blocks
         // unpaged under its own creation invariant
@@ -1102,9 +1023,9 @@ object Hdf5Codec {
         def readDblk(at: Long, startElem: Long, dnel: Long): Boolean = {
           if (dnel > pageElems) // paged off the index block: no bitmap
             return readPagedDblk(at, startElem, dnel, -1L)
-          if (!(u8(at) == 'E' && u8(at + 1) == 'A' &&
-                u8(at + 2) == 'D' && u8(at + 3) == 'B')) return false
-          if (u8(at + 4) != 0 || u8(at + 5) != clientId) return false
+          if (!(u8(bytes, at) == 'E' && u8(bytes, at + 1) == 'A' &&
+                u8(bytes, at + 2) == 'D' && u8(bytes, at + 3) == 'B')) return false
+          if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != clientId) return false
           val eAt = at + 6 + 8 + offSz // header addr + block offset
           if (eAt + dnel * elmtSize + 4 > bytes.length) return false
           var t = 0L
@@ -1129,9 +1050,9 @@ object Hdf5Codec {
         // the chunk grid.
         def readPagedDblk(at: Long, startElem: Long, dnel: Long,
             bmAt: Long): Boolean = {
-          if (!(u8(at) == 'E' && u8(at + 1) == 'A' &&
-                u8(at + 2) == 'D' && u8(at + 3) == 'B')) return false
-          if (u8(at + 4) != 0 || u8(at + 5) != clientId) return false
+          if (!(u8(bytes, at) == 'E' && u8(bytes, at + 1) == 'A' &&
+                u8(bytes, at + 2) == 'D' && u8(bytes, at + 3) == 'B')) return false
+          if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != clientId) return false
           val npages = dnel / pageElems // both powers of two: exact
           val pageLen = pageElems * elmtSize + 4
           val pagesAt = at + 6 + 8 + offSz + 4 // prefix + its checksum
@@ -1141,7 +1062,7 @@ object Hdf5Codec {
             val init =
               if (bmAt < 0)
                 idxElmts + startElem + p * pageElems < asm.gridChunks
-              else (u8(bmAt + p / 8) >> (p % 8).toInt & 1) == 1
+              else (u8(bytes, bmAt + p / 8) >> (p % 8).toInt & 1) == 1
             // no bitmap exists for the index-block layout, so the
             // grid bound alone can't distinguish a written page from
             // junk — a genuinely uninitialized mid-grid page would
@@ -1151,7 +1072,7 @@ object Hdf5Codec {
             if (init && bmAt < 0 &&
                 (lookup3(bytes, (pagesAt + p * pageLen).toInt,
                   (pageLen - 4).toInt).toLong & 0xffffffffL) !=
-                  uN(pagesAt + (p + 1) * pageLen - 4, 4)) return false
+                  le32(bytes, pagesAt + (p + 1) * pageLen - 4)) return false
             if (init) {
               val eAt = pagesAt + p * pageLen
               var t = 0L
@@ -1171,9 +1092,9 @@ object Hdf5Codec {
         // page-init bitmask PER data block, then the data block
         // addresses
         def readSblk(at: Long, u: Int, startIdx: Long): Boolean = {
-          if (!(u8(at) == 'E' && u8(at + 1) == 'A' &&
-                u8(at + 2) == 'S' && u8(at + 3) == 'B')) return false
-          if (u8(at + 4) != 0 || u8(at + 5) != clientId) return false
+          if (!(u8(bytes, at) == 'E' && u8(bytes, at + 1) == 'A' &&
+                u8(bytes, at + 2) == 'S' && u8(bytes, at + 3) == 'B')) return false
+          if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != clientId) return false
           val nd = sNdblks(u); val dn = sDnel(u)
           val paged = dn > pageElems
           val bmSize = if (paged) (dn / pageElems + 7) / 8 else 0L
@@ -1182,7 +1103,7 @@ object Hdf5Codec {
           if (aAt + nd * 8 + 4 > bytes.length) return false
           var j = 0L
           while (j < nd) {
-            val da = uN(aAt + j * 8, 8)
+            val da = le64(bytes, aAt + j * 8)
             if (da != Undef) {
               val ok =
                 if (paged) readPagedDblk(da, startIdx + j * dn, dn,
@@ -1197,11 +1118,11 @@ object Hdf5Codec {
 
         // index block: direct elements, then the first iblkSblks super
         // blocks' data block addresses, then secondary block addresses
-        val iblk = uN(eahd + 60, 8)
+        val iblk = le64(bytes, eahd + 60)
         if (iblk < 0) return None
-        if (!(u8(iblk) == 'E' && u8(iblk + 1) == 'A' &&
-              u8(iblk + 2) == 'I' && u8(iblk + 3) == 'B')) return None
-        if (u8(iblk + 4) != 0 || u8(iblk + 5) != clientId) return None
+        if (!(u8(bytes, iblk) == 'E' && u8(bytes, iblk + 1) == 'A' &&
+              u8(bytes, iblk + 2) == 'I' && u8(bytes, iblk + 3) == 'B')) return None
+        if (u8(bytes, iblk + 4) != 0 || u8(bytes, iblk + 5) != clientId) return None
         val elemsAt = iblk + 6 + 8
         val dblkAddrsAt = elemsAt + idxElmts.toLong * elmtSize
         val sblkAddrsAt = dblkAddrsAt + ndblkAddrs.toLong * 8
@@ -1219,7 +1140,7 @@ object Hdf5Codec {
           val nd = sNdblks(u).toInt; val dn = sDnel(u)
           var j = 0
           while (j < nd) {
-            val da = uN(dblkAddrsAt + slot.toLong * 8, 8)
+            val da = le64(bytes, dblkAddrsAt + slot.toLong * 8)
             if (da != Undef && !readDblk(da, startIdx + j.toLong * dn, dn))
               return None
             slot += 1; j += 1
@@ -1231,7 +1152,7 @@ object Hdf5Codec {
         while (s + iblkSblks < nsblks &&
                idxElmts + startIdx < asm.gridChunks) {
           val su = iblkSblks + s
-          val sa = uN(sblkAddrsAt + s.toLong * 8, 8)
+          val sa = le64(bytes, sblkAddrsAt + s.toLong * 8)
           if (sa != Undef && !readSblk(sa, su, startIdx)) return None
           startIdx += sNdblks(su) * sDnel(su)
           s += 1
@@ -1242,19 +1163,19 @@ object Hdf5Codec {
         // tree holds only WRITTEN chunks — records carry the chunk's
         // scaled (grid) offsets, so placement needs no capacity math.
         // layout info: node size (4), split % (1), merge % (1)
-        val bthd = uN(infoAt + 7, 8)
+        val bthd = le64(bytes, infoAt + 7)
         if (bthd < 0 || bthd + 38 > bytes.length) return None
-        if (!(u8(bthd) == 'B' && u8(bthd + 1) == 'T' &&
-              u8(bthd + 2) == 'H' && u8(bthd + 3) == 'D')) return None
-        if (u8(bthd + 4) != 0) return None // v2 B-tree version 0
-        val btype = u8(bthd + 5) // record type: 10 raw / 11 filtered
+        if (!(u8(bytes, bthd) == 'B' && u8(bytes, bthd + 1) == 'T' &&
+              u8(bytes, bthd + 2) == 'H' && u8(bytes, bthd + 3) == 'D')) return None
+        if (u8(bytes, bthd + 4) != 0) return None // v2 B-tree version 0
+        val btype = u8(bytes, bthd + 5) // record type: 10 raw / 11 filtered
         if (btype != 10 && btype != 11) return None
         if ((btype == 11) != filters.nonEmpty) return None
-        val nodeSize = uN(bthd + 6, 4)
-        val recSize = uN(bthd + 10, 2).toInt
-        val depth = uN(bthd + 12, 2).toInt
-        val rootAddr = uN(bthd + 16, 8)
-        val rootNrec = uN(bthd + 24, 2).toInt
+        val nodeSize = le32(bytes, bthd + 6)
+        val recSize = le16(bytes, bthd + 10)
+        val depth = le16(bytes, bthd + 12)
+        val rootAddr = le64(bytes, bthd + 16)
+        val rootNrec = le16(bytes, bthd + 24)
         val rank = shape.size
         val base = if (btype == 11) 12 + 8 * rank else 8 + 8 * rank
         val szChunk = recSize - base // filtered: encoded-chunk-size len
@@ -1293,18 +1214,18 @@ object Hdf5Codec {
         }
 
         def rec(at: Long): Boolean = {
-          val addr = uN(at, 8)
+          val addr = le64(bytes, at)
           var p = at + 8
           val (nb, mask) =
             if (btype == 11) {
-              val s = uN(p, szChunk); val m = uN(p + szChunk, 4)
+              val s = leN(bytes, p, szChunk); val m = le32(bytes, p + szChunk)
               p += szChunk + 4
               (s, m)
             } else (asm.fullChunkBytes.toLong, 0L)
           val offs = new Array[Long](rank)
           var k = 0
           while (k < rank) {
-            val scaled = uN(p + k * 8, 8)
+            val scaled = le64(bytes, p + k * 8)
             if (scaled < 0) return false
             offs(k) = scaled * chunkDims(k)
             k += 1
@@ -1323,9 +1244,9 @@ object Hdf5Codec {
             if (nrec > maxLeaf) return false
             if (at + 6 + nrec.toLong * recSize + 4 > bytes.length)
               return false
-            if (!(u8(at) == 'B' && u8(at + 1) == 'T' &&
-                  u8(at + 2) == 'L' && u8(at + 3) == 'F')) return false
-            if (u8(at + 4) != 0 || u8(at + 5) != btype) return false
+            if (!(u8(bytes, at) == 'B' && u8(bytes, at + 1) == 'T' &&
+                  u8(bytes, at + 2) == 'L' && u8(bytes, at + 3) == 'F')) return false
+            if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != btype) return false
             var i = 0
             while (i < nrec) {
               if (!rec(at + 6 + i.toLong * recSize)) return false
@@ -1342,9 +1263,9 @@ object Hdf5Codec {
             val ptrsAt = recsAt + nrec.toLong * recSize
             if (ptrsAt + (nrec + 1).toLong * psz + 4 > bytes.length)
               return false
-            if (!(u8(at) == 'B' && u8(at + 1) == 'T' &&
-                  u8(at + 2) == 'I' && u8(at + 3) == 'N')) return false
-            if (u8(at + 4) != 0 || u8(at + 5) != btype) return false
+            if (!(u8(bytes, at) == 'B' && u8(bytes, at + 1) == 'T' &&
+                  u8(bytes, at + 2) == 'I' && u8(bytes, at + 3) == 'N')) return false
+            if (u8(bytes, at + 4) != 0 || u8(bytes, at + 5) != btype) return false
             var i = 0
             while (i < nrec) {
               if (!rec(recsAt + i.toLong * recSize)) return false
@@ -1353,8 +1274,8 @@ object Hdf5Codec {
             var c = 0
             while (c <= nrec) {
               val pAt = ptrsAt + c.toLong * psz
-              val childAddr = uN(pAt, 8)
-              val childN = uN(pAt + 8, nrecSz)
+              val childAddr = le64(bytes, pAt)
+              val childN = leN(bytes, pAt + 8, nrecSz)
               if (!readNode(childAddr, d - 1, childN.toInt)) return false
               c += 1
             }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import scala.collection.mutable
-import Bytes.{be16, refuse}
+import Bytes.{be, be16, refuse}
 
 /** JPEG (ISO/IEC 10918-1) decoder for multimodal binary columns —
   * real LLM training corpora (LAION-style webdatasets, reference
@@ -246,8 +246,7 @@ object JpegCodec {
   private def seg(out: java.io.ByteArrayOutputStream, marker: Int,
       payload: Array[Byte]): Unit = {
     out.write(0xff); out.write(marker)
-    val len = payload.length + 2
-    out.write((len >> 8) & 0xff); out.write(len & 0xff)
+    out.write(be(payload.length + 2, 2))
     out.write(payload, 0, payload.length)
   }
 
@@ -290,8 +289,7 @@ object JpegCodec {
     if (channels == 1) {
       val plane = Array.tabulate(width * height)(i => pixels(i) & 0xff)
       seg(out, 0xdb, Array[Byte](0) ++ zzBytes(QuantLuma))
-      seg(out, 0xc0, Array[Byte](8, (height >> 8).toByte, height.toByte,
-        (width >> 8).toByte, width.toByte, 1, 1, 0x11, 0))
+      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++ Array[Byte](1, 1, 0x11, 0))
       seg(out, 0xc4, dht(0, 0, DcLumaBits, DcVals))
       seg(out, 0xc4, dht(1, 0, AcLumaBits, AcLumaVals))
       seg(out, 0xda, Array[Byte](1, 1, 0x00, 0, 63, 0))
@@ -322,8 +320,7 @@ object JpegCodec {
       }
       seg(out, 0xdb, Array[Byte](0) ++ zzBytes(QuantLuma))
       seg(out, 0xdb, Array[Byte](1) ++ zzBytes(QuantChroma))
-      seg(out, 0xc0, Array[Byte](8, (height >> 8).toByte, height.toByte,
-        (width >> 8).toByte, width.toByte, 3,
+      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++ Array[Byte](3,
         1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
       seg(out, 0xc4, dht(0, 0, DcLumaBits, DcVals))
       seg(out, 0xc4, dht(1, 0, AcLumaBits, AcLumaVals))

@@ -118,58 +118,55 @@ object Mp4Codec {
     require(samples.nonEmpty && samples.size <= 4096, s"${samples.size}")
     val n = samples.size
     val nChunks = (n + 3) / 4
-    def u16(v: Int) = Array[Byte]((v >> 8).toByte, v.toByte)
-    def u32(v: Long) = Array[Byte]((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
-      u32(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
+      be(8L + body.length, 4) ++ typ.getBytes("US-ASCII") ++ body
     def full(typ: String, body: Array[Byte]): Array[Byte] =
       box(typ, Array[Byte](0, 0, 0, 0) ++ body)
     val total = n.toLong * dur
-    val mvhd = full("mvhd", u32(3) ++ u32(4) ++ u32(timescale) ++
-      u32(total) ++ u32(0x00010000) ++ u16(0x0100) ++ new Array[Byte](10) ++
+    val mvhd = full("mvhd", be(3, 4) ++ be(4, 4) ++ be(timescale, 4) ++
+      be(total, 4) ++ be(0x00010000, 4) ++ be(0x0100, 2) ++ new Array[Byte](10) ++
       Array(0x10000L, 0L, 0L, 0L, 0x10000L, 0L, 0L, 0L, 0x40000000L)
-        .flatMap(u32) ++ new Array[Byte](24) ++ u32(2))
-    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 3) ++ u32(3) ++ u32(4) ++
-      u32(1) ++ u32(0) ++ u32(total) ++ new Array[Byte](8) ++
-      u16(0) ++ u16(0) ++ u16(0x0100) ++ u16(0) ++
+        .flatMap(be(_, 4)) ++ new Array[Byte](24) ++ be(2, 4))
+    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 3) ++ be(3, 4) ++ be(4, 4) ++
+      be(1, 4) ++ be(0, 4) ++ be(total, 4) ++ new Array[Byte](8) ++
+      be(0, 2) ++ be(0, 2) ++ be(0x0100, 2) ++ be(0, 2) ++
       Array(0x10000L, 0L, 0L, 0L, 0x10000L, 0L, 0L, 0L, 0x40000000L)
-        .flatMap(u32) ++ u32(640L << 16) ++ u32(480L << 16))
-    val mdhd = full("mdhd", u32(3) ++ u32(4) ++ u32(timescale) ++
-      u32(total) ++ u16(0x55c4) ++ u16(0))
-    val hdlr = full("hdlr", u32(0) ++ "vide".getBytes ++
+        .flatMap(be(_, 4)) ++ be(640L << 16, 4) ++ be(480L << 16, 4))
+    val mdhd = full("mdhd", be(3, 4) ++ be(4, 4) ++ be(timescale, 4) ++
+      be(total, 4) ++ be(0x55c4, 2) ++ be(0, 2))
+    val hdlr = full("hdlr", be(0, 4) ++ "vide".getBytes ++
       new Array[Byte](12) ++ "graft mux".getBytes ++ Array[Byte](0))
-    val dref = full("dref", u32(1) ++
+    val dref = full("dref", be(1, 4) ++
       box("url ", Array[Byte](0, 0, 0, 1)))
-    val entry = box("avc1", new Array[Byte](6) ++ u16(1) ++
+    val entry = box("avc1", new Array[Byte](6) ++ be(1, 2) ++
       Array.fill[Byte](16)(0xaa.toByte))
-    val stsd = full("stsd", u32(1) ++ entry)
-    val stts = full("stts", u32(1) ++ u32(n) ++ u32(dur))
+    val stsd = full("stsd", be(1, 4) ++ entry)
+    val stts = full("stts", be(1, 4) ++ be(n, 4) ++ be(dur, 4))
     val stsc = {
       val lastCount = n - 4 * (nChunks - 1)
       val entries =
         if (nChunks == 1) Vector((1, n))
         else if (lastCount == 4) Vector((1, 4))
         else Vector((1, 4), (nChunks, lastCount))
-      full("stsc", u32(entries.size) ++
-        entries.toArray.flatMap { case (f, c) => u32(f) ++ u32(c) ++ u32(1) })
+      full("stsc", be(entries.size, 4) ++
+        entries.toArray.flatMap { case (f, c) => be(f, 4) ++ be(c, 4) ++ be(1, 4) })
     }
-    val stsz = full("stsz", u32(0) ++ u32(n) ++
-      samples.toArray.flatMap(s => u32(s.length)))
+    val stsz = full("stsz", be(0, 4) ++ be(n, 4) ++
+      samples.toArray.flatMap(s => be(s.length, 4)))
     val stss = {
       val syncs = (0 until n).filter(_ % 3 == 0).map(_ + 1)
-      full("stss", u32(syncs.size) ++ syncs.toArray.flatMap(i => u32(i)))
+      full("stss", be(syncs.size, 4) ++ syncs.toArray.flatMap(i => be(i, 4)))
     }
     // chunk offsets need the header length: build moov with zeroed
     // stco to measure, then rebuild with truth (the writer two-pass)
     def assemble(offs: Seq[Long]): Array[Byte] = {
-      val stco = full("stco", u32(offs.size) ++ offs.toArray.flatMap(u32))
+      val stco = full("stco", be(offs.size, 4) ++ offs.toArray.flatMap(be(_, 4)))
       val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco ++ stss)
       val vmhd = box("vmhd", Array[Byte](0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0))
       val minf = box("minf", vmhd ++ box("dinf", dref) ++ stbl)
       val mdia = box("mdia", mdhd ++ hdlr ++ minf)
       val moov = box("moov", mvhd ++ box("trak", tkhd ++ mdia))
-      val ftyp = box("ftyp", "isom".getBytes ++ u32(512) ++
+      val ftyp = box("ftyp", "isom".getBytes ++ be(512, 4) ++
         "isommp41".getBytes)
       ftyp ++ moov
     }

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import Bytes.{be32, refuse}
+import Bytes.{be, be32, refuse}
 
 /** NetCDF classic (CDF-1) container codec — the reference's per-test
   * prediction sink is `ds.to_netcdf` of an xarray Dataset
@@ -83,10 +83,7 @@ object NetcdfCodec {
 
   private final class W {
     val out = new ByteArrayOutputStream()
-    def i32(v: Int): Unit = {
-      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
+    def i32(v: Int): Unit = out.write(be(v, 4))
     def bytes(b: Array[Byte]): Unit = out.write(b, 0, b.length)
     def padTo4(): Unit = while (out.size() % 4 != 0) out.write(0)
     def name(s: String): Unit = {

@@ -39,7 +39,7 @@ object NpyCodec {
     val out = new java.io.ByteArrayOutputStream()
     out.write(Magic, 0, 6)
     out.write(1); out.write(0) // version 1.0
-    out.write(header.length & 0xff); out.write((header.length >> 8) & 0xff)
+    out.write(le(header.length, 2))
     out.write(header.getBytes("US-ASCII"))
     val buf = java.nio.ByteBuffer.allocate(4 * n)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)

@@ -423,8 +423,7 @@ object PdfCodec {
   /** Algorithm 2: file key from the (empty) user password. */
   private def fileKey(o: Array[Byte], p: Int, id0: Array[Byte], r: Long,
       n: Int, encryptMetadata: Boolean): Array[Byte] = {
-    val pLe = Array[Byte](p.toByte, (p >> 8).toByte, (p >> 16).toByte,
-      (p >> 24).toByte)
+    val pLe = le(p, 4)
     val extra =
       if (r >= 4 && !encryptMetadata)
         Array[Byte](-1, -1, -1, -1)
@@ -526,8 +525,7 @@ object PdfCodec {
     * handlers. */
   private def decryptObj(key: Array[Byte], aes: Boolean, num: Int,
       gen: Int, data: Array[Byte]): Array[Byte] = {
-    val tail = Array[Byte](num.toByte, (num >> 8).toByte, (num >> 16).toByte,
-      gen.toByte, (gen >> 8).toByte) ++ // low 2 bytes of the generation
+    val tail = le(num, 3) ++ le(gen, 2) ++ // low 3 bytes of the number, 2 of the generation
       (if (aes) Array[Byte](0x73, 0x41, 0x6C, 0x54) else Array.emptyByteArray)
     val ok =
       if (key.length == 32) key
@@ -1320,7 +1318,7 @@ object PdfCodec {
         t match { case Some(Left(h)) => h; case _ => refuse() }
       def codeOf(h: Array[Byte]): Int = {
         if (h.isEmpty || h.length > 2) refuse()
-        h.foldLeft(0)((a, x) => (a << 8) | (x & 0xff))
+        beN(h, 0, h.length).toInt
       }
       def utf16(h: Array[Byte]): String =
         new String(h, java.nio.charset.StandardCharsets.UTF_16BE)
@@ -1332,8 +1330,7 @@ object PdfCodec {
         val last = be16(d, d.length - 2)
         val v = last + k
         if (v > 0xffff) refuse()
-        d(d.length - 2) = (v >> 8).toByte
-        d(d.length - 1) = v.toByte
+        putBe(d, d.length - 2, v, 2)
         utf16(d)
       }
       var twoByte = false

@@ -75,21 +75,18 @@ object PngCodec {
     d.end()
     val out = new java.io.ByteArrayOutputStream(zOut.size() + 64)
     Signature.foreach(b => out.write(b & 0xff))
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
     def chunk(typ: String, payload: Array[Byte]): Unit = {
-      out.write(be32(payload.length.toLong), 0, 4)
+      out.write(be(payload.length, 4), 0, 4)
       val tb = typ.getBytes("US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(tb); crc.update(payload)
       out.write(tb, 0, 4)
       out.write(payload, 0, payload.length)
-      out.write(be32(crc.getValue), 0, 4)
+      out.write(be(crc.getValue, 4), 0, 4)
     }
     val ihdr = new java.io.ByteArrayOutputStream(13)
-    ihdr.write(be32(width.toLong), 0, 4)
-    ihdr.write(be32(height.toLong), 0, 4)
+    ihdr.write(be(width, 4), 0, 4)
+    ihdr.write(be(height, 4), 0, 4)
     ihdr.write(8)          // bit depth
     ihdr.write(colorType)
     ihdr.write(0); ihdr.write(0); ihdr.write(0) // compression, filter, interlace

@@ -105,13 +105,11 @@ object TfRecordCodec {
   /** Frame one record payload per the TFRecord spec. */
   def frame(rec: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(rec.length + 16)
-    val ln = new Array[Byte](8)
-    var i = 0
-    while (i < 8) { ln(i) = (rec.length.toLong >> (8 * i)).toByte; i += 1 }
+    val ln = le(rec.length, 8)
     out.write(ln)
-    writeLe32(out, maskedCrc32c(ln, 0, 8))
+    out.write(le(maskedCrc32c(ln, 0, 8), 4))
     out.write(rec)
-    writeLe32(out, maskedCrc32c(rec, 0, rec.length))
+    out.write(le(maskedCrc32c(rec, 0, rec.length), 4))
     out.toByteArray
   }
 
@@ -129,10 +127,11 @@ object TfRecordCodec {
           f.bytess.foreach(v => writeLd(body, 1, v))
           writeLd(fb, 1, body.toByteArray)
         case "float" =>
-          val packed = new java.io.ByteArrayOutputStream(f.floatBits.size * 4)
-          f.floatBits.foreach(writeLe32(packed, _))
+          val packed = new Array[Byte](f.floatBits.size * 4)
+          var i = 0
+          while (i < f.floatBits.size) { putLe(packed, 4 * i, f.floatBits(i), 4); i += 1 }
           val body = new java.io.ByteArrayOutputStream()
-          writeLd(body, 1, packed.toByteArray)
+          writeLd(body, 1, packed)
           writeLd(fb, 2, body.toByteArray)
         case "int64" =>
           val packed = new java.io.ByteArrayOutputStream()
@@ -160,11 +159,6 @@ object TfRecordCodec {
       x = x >>> 7
       if (x != 0) out.write(b | 0x80) else { out.write(b); more = false }
     }
-  }
-
-  private def writeLe32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
   }
 
   private def writeLd(

@@ -69,23 +69,17 @@ object WavCodec {
     require(channels == 1 || samples.length % 2 == 0, "stereo needs whole frames")
     val dataLen = 2 * samples.length
     val out = new Array[Byte](44 + dataLen)
-    def w16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def w32(o: Int, v: Long): Unit = {
-      w16(o, (v & 0xffff).toInt); w16(o + 2, ((v >> 16) & 0xffff).toInt)
-    }
     def wtag(o: Int, s: String): Unit =
       s.getBytes("US-ASCII").copyToArray(out, o)
-    wtag(0, "RIFF"); w32(4, 36L + dataLen); wtag(8, "WAVE")
-    wtag(12, "fmt "); w32(16, 16L)
-    w16(20, 1); w16(22, channels); w32(24, sampleRate.toLong)
-    w32(28, sampleRate.toLong * channels * 2) // byte rate
-    w16(32, channels * 2); w16(34, 16) // block align, bits
-    wtag(36, "data"); w32(40, dataLen.toLong)
+    wtag(0, "RIFF"); putLe(out, 4, 36L + dataLen, 4); wtag(8, "WAVE")
+    wtag(12, "fmt "); putLe(out, 16, 16, 4)
+    putLe(out, 20, 1, 2); putLe(out, 22, channels, 2); putLe(out, 24, sampleRate, 4)
+    putLe(out, 28, sampleRate.toLong * channels * 2, 4) // byte rate
+    putLe(out, 32, channels * 2, 2); putLe(out, 34, 16, 2) // block align, bits
+    wtag(36, "data"); putLe(out, 40, dataLen, 4)
     var i = 0
     while (i < samples.length) {
-      w16(44 + 2 * i, samples(i) & 0xffff)
+      putLe(out, 44 + 2 * i, samples(i), 2)
       i += 1
     }
     out

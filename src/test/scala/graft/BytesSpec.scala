@@ -8,9 +8,10 @@ import scala.jdk.CollectionConverters._
 
 import graft.sources.Bytes
 
-/** `sources.Bytes`: the shared byte readers against `java.nio.ByteBuffer`,
+/** `sources.Bytes`: the shared byte readers and writers against
+  * `java.nio.ByteBuffer`,
   * their refusal edges, the `refusing` contract, and a scan that keeps
-  * the readers and the failure signal in that one home. */
+  * the readers, the writers and the failure signal in that one home. */
 class BytesSpec extends AnyFunSuite {
 
   private val buf: Array[Byte] = {
@@ -77,13 +78,64 @@ class BytesSpec extends AnyFunSuite {
     assert(Bytes.Refused.getStackTrace.isEmpty, "refusal must be stackless")
   }
 
+  private def bytesOf(b: ByteBuffer): Array[Byte] = b.array()
+
+  test("every writer matches ByteBuffer in both byte orders for n = 1..8") {
+    val values = Seq(0L, 1L, -1L, 0x0123456789abcdefL, Long.MinValue,
+      Long.MaxValue, 0x80L, 0xfedcba98L)
+    for (v <- values; n <- 1 to 8) {
+      // ByteBuffer writes all 8 bytes; the writers keep the low n
+      val le = bytesOf(ByteBuffer.allocate(8).order(LE).putLong(v)).take(n)
+      val be = bytesOf(ByteBuffer.allocate(8).order(BE).putLong(v)).drop(8 - n)
+      assert(Bytes.le(v, n).sameElements(le), s"le($v, $n)")
+      assert(Bytes.be(v, n).sameElements(be), s"be($v, $n)")
+      val b = Array.fill[Byte](n + 3)(0x5a)
+      Bytes.putLe(b, 2, v, n)
+      assert(b.slice(2, 2 + n).sameElements(le), s"putLe($v, $n)")
+      assert(b.take(2).forall(_ == 0x5a) && b.drop(2 + n).forall(_ == 0x5a),
+        s"putLe($v, $n) wrote outside its n bytes")
+      Bytes.putBe(b, 1, v, n)
+      assert(b.slice(1, 1 + n).sameElements(be), s"putBe($v, $n)")
+    }
+  }
+
+  test("a write then a read through the Bytes readers is the identity") {
+    val r = new scala.util.Random(11)
+    for (_ <- 0 until 200; n <- 1 to 8) {
+      val v = r.nextLong()
+      val mask = if (n == 8) -1L else (1L << (8 * n)) - 1
+      val b = new Array[Byte](n + 4)
+      Bytes.putLe(b, 3, v, n)
+      assert(Bytes.leN(b, 3, n) == (v & mask), s"le $v $n")
+      Bytes.putBe(b, 1, v, n)
+      assert(Bytes.beN(b, 1, n) == (v & mask), s"be $v $n")
+    }
+    val b = new Array[Byte](8)
+    Bytes.putLe(b, 0, 0xbeefL, 2); assert(Bytes.le16(b, 0) == 0xbeef)
+    Bytes.putBe(b, 0, 0xbeefL, 2); assert(Bytes.be16(b, 0) == 0xbeef)
+    Bytes.putLe(b, 4, 0xdeadbeefL, 4); assert(Bytes.le32(b, 4) == 0xdeadbeefL)
+    Bytes.putBe(b, 4, 0xdeadbeefL, 4); assert(Bytes.be32(b, 4) == 0xdeadbeefL)
+    Bytes.putLe(b, 0, -2L, 8); assert(Bytes.le64(b, 0) == -2L)
+    Bytes.putBe(b, 0, -2L, 8); assert(Bytes.be64(b, 0) == -2L)
+  }
+
   test("sources: only Bytes declares a failure class or assembles integers") {
-    // Hdf5Codec keeps its sentinel-returning readers: callers branch on
-    // Long.MinValue / -1L, and -1L is also HDF5's undefined address.
-    val exempt = Set("Bytes.scala", "Hdf5Codec.scala")
+    // "assembles" covers both directions: reading integers and writing them
+    // every `sources` codec, and the TIFF codec in MultimodalOps
     val stackless = "RuntimeException(null, null, false, false)"
+    // a reader-named def (tiffU16 and f64 included)
     val readerDef =
-      """def\s+((?:b?u|i|le|be|t)(?:8|16|24|32|64|N)(?:le|be)?|fourcc)\s*(\([^)]*\))?""".r
+      """def\s+((?:b?u|i|le|be|t|tiffU|f)(?:8|16|24|32|64|N)(?:le|be)?|fourcc)\s*(\([^)]*\))?""".r
+    // any def, for the writer rule: its name and parameter list
+    val anyDef = """def\s+(\w+)\s*(\([^)]*\))?""".r
+    // a masked byte shifted left by a whole number of bytes: integer
+    // assembly (a bit reader shifts by a bit count instead)
+    val assembles = """& 0xffL?\)\s*<<\s*\(?\s*(?:8|16|24|32|40|48|56|8\s*\*)""".r
+    // a value shifted right by whole bytes, then masked or narrowed
+    // to one byte
+    val splits =
+      """\(\s*[\w.]+\s*>>>?\s*\(?(?:8|16|24|32|40|48|56|8\s*\*\s*\w+)\)?\s*\)\s*(?:&\s*0xff\b|\.toByte)""".r
+    val sentinel = """-1L?\b|Long\.MinValue""".r
     val dir = Paths.get("src/main/scala/graft/sources")
     val files = {
       val s = Files.list(dir)
@@ -91,27 +143,50 @@ class BytesSpec extends AnyFunSuite {
       finally s.close()
     }
     assert(files.exists(_.getFileName.toString == "Bytes.scala"))
-    val found = files.filterNot(f => exempt(f.getFileName.toString))
-      .sortBy(_.toString).flatMap { f =>
+    val scanned = files.filterNot(_.getFileName.toString == "Bytes.scala")
+      .sortBy(_.toString) :+ Paths.get("src/main/scala/graft/operators/MultimodalOps.scala")
+    val found = scanned.flatMap { f =>
         val name = f.getFileName.toString
         val text = new String(Files.readAllBytes(f), "UTF-8")
         val lines = text.split("\n", -1)
         def lineOf(off: Int) = text.substring(0, off).count(_ == '\n') + 1
+        // a def's own line and its next lines up to the next def
+        def bodyAt(ln: Int) = (lines(ln - 1) +: lines.slice(ln, ln + 5)
+          .takeWhile(!_.contains("def "))).mkString("\n")
+        def takesV(params: String) = """\bv\s*:""".r.findFirstIn(params).nonEmpty
         val classes = lines.zipWithIndex.collect {
           case (l, i) if l.contains(stackless) => s"$name:${i + 1} failure class"
         }
-        // a reader: a reader-named def that takes no value to write
-        // (`v`) and masks bytes itself within its first lines
-        val defs = readerDef.findAllMatchIn(text).flatMap { m =>
-          val params = Option(m.group(2)).getOrElse("")
+        // a reader: a reader-named def that takes no value to write and
+        // masks bytes itself or answers a sentinel instead of refusing
+        val readers = readerDef.findAllMatchIn(text).flatMap { m =>
           val ln = lineOf(m.start)
-          val body = (lines(ln - 1) +: lines.slice(ln, ln + 5)
-            .takeWhile(!_.contains("def "))).mkString("\n")
-          if ("""\bv\s*:""".r.findFirstIn(params).isEmpty && body.contains("0xff"))
+          val body = bodyAt(ln)
+          val params = Option(m.group(2)).getOrElse("")
+          if (!takesV(params) &&
+              (body.contains("0xff") || sentinel.findFirstIn(body).nonEmpty))
             Some(s"$name:$ln reader ${m.group(1)}")
           else None
         }
-        classes ++ defs
+        // a writer: a def that takes a value `v` and shifts it, masking
+        // or narrowing its bytes itself
+        val writers = anyDef.findAllMatchIn(text).flatMap { m =>
+          val ln = lineOf(m.start)
+          val body = bodyAt(ln)
+          if (takesV(Option(m.group(2)).getOrElse("")) && body.contains(">>") &&
+              (body.contains("0xff") || body.contains(".toByte")))
+            Some(s"$name:$ln writer ${m.group(1)}")
+          else None
+        }
+        val inline = lines.zipWithIndex.flatMap { case (l, i) =>
+          val code = l.takeWhile(_ != '/') // comments may show arithmetic
+          if (assembles.findFirstIn(code).nonEmpty) Some(s"$name:${i + 1} assembles bytes")
+          else if (splits.findFirstIn(code).nonEmpty &&
+              (code.contains(".toByte") || code.contains(".write(")))
+            Some(s"$name:${i + 1} splits bytes")
+          else None
+        }
+        classes ++ readers ++ writers ++ inline
       }
     if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
   }

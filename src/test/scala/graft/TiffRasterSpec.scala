@@ -194,6 +194,40 @@ class TiffRasterSpec extends SparkSpec {
       "raw pixels mis-tagged as LZW must be refused")
   }
 
+  test("an IFD-last TIFF cut inside its IFD refuses instead of reading lost tags as absent") {
+    // the layout encodeTiff and libtiff write: header, strip, then the
+    // IFD; every entry is one inline SHORT and the given tag comes last
+    def ifdLast(w: Int, bits: Int, strip: Array[Byte], lastTag: Int,
+        lastValue: Int): Array[Byte] = {
+      val entries = Seq((256, w), (257, 1), (258, bits), (259, 1), (262, 1),
+        (273, 8), (277, 1), (279, strip.length), (lastTag, lastValue))
+      val bb = java.nio.ByteBuffer.allocate(8 + strip.length + 2 + 12 * entries.size + 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put('I'.toByte).put('I'.toByte).putShort(42.toShort)
+        .putInt(8 + strip.length).put(strip).putShort(entries.size.toShort)
+      for ((tag, v) <- entries)
+        bb.putShort(tag.toShort).putShort(3.toShort).putInt(1).putInt(v)
+      bb.putInt(0).array()
+    }
+    // uint8, Predictor=2 last: without it the differences read as pixels
+    val pred = ifdLast(4, 8, Array[Byte](10, 1, 1, 1), 317, 2)
+    assert(pred.length == 126)
+    val p = MultimodalOps.decodeTiffRaster(pred).getOrElse(fail("predictor file refused"))
+    assert(p.fmt == "u8" && p.values.toSeq == Seq(10.0, 11.0, 12.0, 13.0))
+    // float32, SampleFormat=3 last: without it the words read as uint32
+    val floats = Seq(1.5f, -2.25f, 0.0f, 7.0f)
+    val fb = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    floats.foreach(fb.putFloat)
+    val f32 = ifdLast(4, 32, fb.array(), 339, 3)
+    val f = MultimodalOps.decodeTiffRaster(f32).getOrElse(fail("float file refused"))
+    assert(f.fmt == "f32" && f.values.toSeq == floats.map(_.toDouble))
+    // the last entry (and the next-IFD offset) cut off, or cut mid-entry
+    for (good <- Seq(pred, f32); cut <- Seq(16, 10)) {
+      assert(MultimodalOps.decodeTiffRaster(good.dropRight(cut)).isEmpty,
+        s"${good.length}-byte file cut by $cut decoded")
+    }
+  }
+
   test("the reference's real GDAL GeoTIFFs decode against independently pinned stats") {
     // deflate-compressed tiled planar float32 (srtm), uncompressed
     // strips float32/uint8 — stats pinned from a from-scratch Python
@@ -306,9 +340,11 @@ class TiffRasterSpec extends SparkSpec {
       FuzzDigest.sweep(goldenLzwI16)(MultimodalOps.decodeTiffRaster),
       FuzzDigest.sweep(goldenLzwF32be)(MultimodalOps.decodeTiffRaster),
       FuzzDigest.sweep(geo)(MultimodalOps.decodeTiffGeoref))
+    // a read past the end refuses: cuts inside the GeoKey directory and
+    // flips that send the IFD or the directory past the end are None
     assert(d == Seq(
-      "428/50:7abba6abb17d4c19",
-      "388/62:9bfdf778d8c44a8b",
-      "632/335:c610d8c0ad476406"), d)
+      "428/48:1d757e3402c1eb7b",
+      "388/60:dc82024f628b92bd",
+      "632/299:17fb8be824b98b72"), d)
   }
 }
