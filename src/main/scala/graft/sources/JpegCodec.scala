@@ -289,7 +289,8 @@ object JpegCodec {
     if (channels == 1) {
       val plane = Array.tabulate(width * height)(i => pixels(i) & 0xff)
       seg(out, 0xdb, Array[Byte](0) ++ zzBytes(QuantLuma))
-      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++ Array[Byte](1, 1, 0x11, 0))
+      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
+        Array[Byte](1, 1, 0x11, 0))
       seg(out, 0xc4, dht(0, 0, DcLumaBits, DcVals))
       seg(out, 0xc4, dht(1, 0, AcLumaBits, AcLumaVals))
       seg(out, 0xda, Array[Byte](1, 1, 0x00, 0, 63, 0))
@@ -320,8 +321,8 @@ object JpegCodec {
       }
       seg(out, 0xdb, Array[Byte](0) ++ zzBytes(QuantLuma))
       seg(out, 0xdb, Array[Byte](1) ++ zzBytes(QuantChroma))
-      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++ Array[Byte](3,
-        1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
+      seg(out, 0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
+        Array[Byte](3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
       seg(out, 0xc4, dht(0, 0, DcLumaBits, DcVals))
       seg(out, 0xc4, dht(1, 0, AcLumaBits, AcLumaVals))
       seg(out, 0xc4, dht(0, 1, DcChromaBits, DcVals))
