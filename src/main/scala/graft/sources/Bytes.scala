@@ -2,7 +2,9 @@ package graft.sources
 
 /** The one home for the codecs' byte readers and writers and the
   * readers' failure signal: every `sources` codec and the TIFF codec in
-  * `operators.MultimodalOps` read and write multi-byte integers here.
+  * `operators.MultimodalOps` read and write multi-byte integers here
+  * (bulk `java.nio.ByteBuffer` encodes and `Hdf5Codec.lookup3`, a
+  * checksum kernel over a range its caller has bounded, aside).
   *
   * Every decoder promises None on a hostile file, never a throw. Inside
   * a decode, a structural fault calls `refuse()`, and the entry point
