@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** Intermediate state has one owner and one lifetime: the DataFrame
   * that reads it. Every query that materializes state while it is
@@ -39,28 +39,7 @@ class ReentrancySpec extends SparkSpec {
 
   private def build(q: String): DataFrame = queries(q)(spark, dir)
 
-  /** Canonical text of one value: doubles and floats by their bits,
-    * binaries as hex, maps with sorted entries. */
-  private def render(v: Any): String = v match {
-    case null => "null"
-    case d: Double => "d" + java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))
-    case f: Float => "f" + Integer.toHexString(java.lang.Float.floatToIntBits(f))
-    case b: Array[Byte] => b.map("%02x".format(_)).mkString("x", "", "")
-    case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
-    case m: scala.collection.Map[_, _] =>
-      m.toSeq.map { case (k, x) => render(k) + "->" + render(x) }.sorted
-        .mkString("{", ",", "}")
-    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
-    case other => other.toString
-  }
-
-  /** `rows:md5` of the sorted rendered rows. */
-  private def digest(df: DataFrame): String = {
-    val rows = df.collect().map(render).sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    rows.length + ":" + md.digest().map("%02x".format(_)).mkString
-  }
+  private def digest(df: DataFrame): String = RowDigest.of(df)
 
   /** Digest of one single build, computed once per query. */
   private val single = scala.collection.mutable.Map.empty[String, String]
