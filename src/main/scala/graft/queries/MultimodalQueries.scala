@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.MultimodalOps
 import graft.queries.Exact._
-import graft.sources.PngCodec
+import graft.sources.{GeoIngest, JpegCodec, PngCodec}
 
 /** Multimodal-column surface: binary payloads + typed metadata
   * (BASELINE.json mandate). The features query runs through the real
@@ -629,38 +629,31 @@ object MultimodalQueries {
   def qJpegArith(spark: SparkSession, dir: String): DataFrame =
     jpegPixels(spark, graft.Fixtures.path("q_jpeg_arith"))
 
-  private def jpegPixels(spark: SparkSession, fixtureDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.jpg")
-      .load(fixtureDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".jpg")
-        val img = graft.sources.JpegCodec.decode(bytes)
-          .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
-        val out = new Array[(String, Int, Int, Int, Int, Int)](img.width * img.height)
-        var y = 0
-        while (y < img.height) {
-          var x = 0
-          while (x < img.width) {
-            val i = y * img.width + x
-            val (r, g, b): (Int, Int, Int) =
-              if (img.channels == 1) {
-                val v = img.pixels(i) & 0xff; (v, v, v)
-              } else
-                (img.pixels(i * 3) & 0xff, img.pixels(i * 3 + 1) & 0xff,
-                  img.pixels(i * 3 + 2) & 0xff)
-            out(i) = (name, y, x, r, g, b)
-            x += 1
-          }
-          y += 1
+  private def jpegPixels(spark: SparkSession, fixtureDir: String): DataFrame =
+    GeoIngest.decodeFiles(GeoIngest.scan(spark, fixtureDir, "*.jpg"),
+        "name", "y", "x", "r", "g", "b") { (file, bytes) =>
+      val name = file.stripSuffix(".jpg")
+      val img = JpegCodec.decode(bytes)
+        .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
+      val out = new Array[(String, Int, Int, Int, Int, Int)](img.width * img.height)
+      var y = 0
+      while (y < img.height) {
+        var x = 0
+        while (x < img.width) {
+          val i = y * img.width + x
+          val (r, g, b): (Int, Int, Int) =
+            if (img.channels == 1) {
+              val v = img.pixels(i) & 0xff; (v, v, v)
+            } else
+              (img.pixels(i * 3) & 0xff, img.pixels(i * 3 + 1) & 0xff,
+                img.pixels(i * 3 + 2) & 0xff)
+          out(i) = (name, y, x, r, g, b)
+          x += 1
         }
-        out
+        y += 1
       }
-      .toDF("name", "y", "x", "r", "g", "b")
-  }
+      out.iterator
+    }
 
   /** Lossless (SOF3, T.81 process 14) JPEG decode, oracle-graded per
     * SAMPLE against committed foreign fixtures: the seven `.jpg`
@@ -678,37 +671,39 @@ object MultimodalQueries {
     * grayscale) that the DCT entry refuses. Distributed shape:
     * binaryFile scan → per-file decode fan-out → per-sample explode;
     * no shuffle. */
-  def qJpegLossless(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.jpg")
-      .load(graft.Fixtures.path("q_jpeg_lossless"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".jpg")
-        val img = graft.sources.JpegCodec.decodeLossless(bytes)
-          .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
-        val out = new Array[(String, Int, Int, Int, Int)](
-          img.width * img.height * img.channels)
-        var y = 0
-        while (y < img.height) {
-          var x = 0
-          while (x < img.width) {
-            var c = 0
-            while (c < img.channels) {
-              val i = (y * img.width + x) * img.channels + c
-              out(i) = (name, y, x, c, img.samples(i))
-              c += 1
-            }
-            x += 1
+  def qJpegLossless(spark: SparkSession, dir: String): DataFrame =
+    jpegSamples(spark, "q_jpeg_lossless")(
+      JpegCodec.decodeLossless(_).map(i => (i.width, i.height, i.channels, i.samples)))
+
+  /** Per-sample rows (name, y, x, c, v) of the committed `.jpg`
+    * fixtures under `fixture`; `decode` gives (width, height,
+    * channels, row-major channel-interleaved samples). A pinned
+    * fixture must decode, so an undecodable one throws rather than
+    * skip. */
+  private def jpegSamples(spark: SparkSession, fixture: String)(
+      decode: Array[Byte] => Option[(Int, Int, Int, Array[Int])]): DataFrame =
+    GeoIngest.decodeFiles(GeoIngest.scan(spark, graft.Fixtures.path(fixture), "*.jpg"),
+        "name", "y", "x", "c", "v") { (file, bytes) =>
+      val name = file.stripSuffix(".jpg")
+      val (width, height, channels, samples) = decode(bytes)
+        .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
+      val out = new Array[(String, Int, Int, Int, Int)](width * height * channels)
+      var y = 0
+      while (y < height) {
+        var x = 0
+        while (x < width) {
+          var c = 0
+          while (c < channels) {
+            val i = (y * width + x) * channels + c
+            out(i) = (name, y, x, c, samples(i))
+            c += 1
           }
-          y += 1
+          x += 1
         }
-        out
+        y += 1
       }
-      .toDF("name", "y", "x", "c", "v")
-  }
+      out.iterator
+    }
 
   /** 12-bit extended-sequential (SOF1, T.81 process 2) JPEG decode,
     * oracle-graded per SAMPLE — the same discipline as
@@ -723,37 +718,9 @@ object MultimodalQueries {
     * [[graft.sources.JpegCodec.decode12]] must agree or the hash
     * flips. Completes the DICOM JPEG story next to [[qJpegLossless]]
     * (process 14). */
-  def qJpeg12(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.jpg")
-      .load(graft.Fixtures.path("q_jpeg12"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".jpg")
-        val img = graft.sources.JpegCodec.decode12(bytes)
-          .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
-        val out = new Array[(String, Int, Int, Int, Int)](
-          img.width * img.height * img.channels)
-        var y = 0
-        while (y < img.height) {
-          var x = 0
-          while (x < img.width) {
-            var c = 0
-            while (c < img.channels) {
-              val i = (y * img.width + x) * img.channels + c
-              out(i) = (name, y, x, c, img.samples(i))
-              c += 1
-            }
-            x += 1
-          }
-          y += 1
-        }
-        out
-      }
-      .toDF("name", "y", "x", "c", "v")
-  }
+  def qJpeg12(spark: SparkSession, dir: String): DataFrame =
+    jpegSamples(spark, "q_jpeg12")(
+      JpegCodec.decode12(_).map(i => (i.width, i.height, i.channels, i.samples)))
 
   val qJpeg12Sql: String =
     s"""SELECT name, y, x, c, v

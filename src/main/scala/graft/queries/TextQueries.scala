@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{PipelineOps, TextOps}
 import graft.queries.Exact
+import graft.sources.GeoIngest
 
 /** Text analysis + deduplication over the documents table — the
   * LLM-data-pipeline surface mandated by BASELINE.json, built from
@@ -2170,21 +2171,16 @@ object TextQueries {
   /** Parsed rules shared by both robots queries. Matching happens in
     * the native `robots_match` expression downstream, so no regexes
     * are carried here. */
-  private def robotsRules(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.txt")
-      .load(graft.Fixtures.path("q_robots_rules"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val host = path.split('/').last.stripSuffix(".txt")
-        graft.sources.RobotsCodec
-          .parse(new String(bytes,
-            java.nio.charset.StandardCharsets.UTF_8))
-          .map(r => (host, r.agent, r.verb, r.value, r.seq))
-      }.toDF("host", "agent", "verb", "value", "seq")
-  }
+  private def robotsRules(spark: SparkSession): DataFrame =
+    GeoIngest.decodeFiles(
+        GeoIngest.scan(spark, graft.Fixtures.path("q_robots_rules"), "*.txt"),
+        "host", "agent", "verb", "value", "seq") { (file, bytes) =>
+      val host = file.stripSuffix(".txt")
+      graft.sources.RobotsCodec
+        .parse(new String(bytes,
+          java.nio.charset.StandardCharsets.UTF_8))
+        .map(r => (host, r.agent, r.verb, r.value, r.seq))
+    }
 
   val qRobotsRulesSql: String =
     s"""SELECT host, agent, verb, value, seq

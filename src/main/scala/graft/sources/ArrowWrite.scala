@@ -363,17 +363,6 @@ object ArrowWrite {
     out.toByteArray
   }
 
-  /** (id, text) shard in the IPC STREAM framing (the HF cache shape). */
-  def encodeTextStream(ids: Array[Long], texts: Array[String]): Array[Byte] = {
-    val (schemaMsg, batchMsg, body) = buildTextParts(ids, texts)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(schemaMsg)
-    out.write(batchMsg)
-    out.write(body)
-    out.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)) // EOS
-    out.toByteArray
-  }
-
   /** One shard in the IPC STREAM framing — the HuggingFace-datasets
     * cache shape: schema message, one record batch, end-of-stream
     * marker; no footer, readable by `pyarrow.ipc.open_stream`. */

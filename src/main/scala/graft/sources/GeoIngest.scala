@@ -1,17 +1,19 @@
 package graft.sources
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GeoJSON ingestion (SURVEY §2.1: `gpd.read_file` /
-  * `read_geojson_from_gcs`, monthly.py:168,745-749): a
-  * FeatureCollection file → one row per feature with its properties
-  * flattened and the geometry rendered as a WKT string column — the
-  * engine's geometry interchange format (SURVEY §1.1 geometries row).
-  * One reader per geometry layer type, like the reference's one
-  * layer per file. Schema-on-read: properties keep inferred types,
-  * with downstream required-column checks (SURVEY §1.1 schema
-  * system).
+/** The file readers of the engine (SURVEY §2.1 source rows): GeoJSON
+  * layers through Spark's JSON reader, and every binary format —
+  * GeoTIFF, NetCDF, HDF5, npy, WAV, tar/zip archives, compressed
+  * JSONL, WARC, Arrow, safetensors, TFRecord and the image, audio,
+  * video and document containers — through one batch file [[scan]]
+  * and one per-file [[decodeFiles]], so every binary reader shares one
+  * listing, one executor-side decode and one corrupt-file contract.
+  * Schema-on-read: GeoJSON properties keep inferred types, with
+  * downstream required-column checks (SURVEY §1.1 schema system).
   */
 object GeoIngest {
 
@@ -34,7 +36,13 @@ object GeoIngest {
       StructType(Seq(StructField("wkt", StringType))))
   }
 
-  /** Point layer → properties.* + `wkt` (`POINT (x y)`). */
+  /** GeoJSON ingestion (`gpd.read_file` / `read_geojson_from_gcs`,
+    * monthly.py:168,745-749), one reader per geometry layer type like
+    * the reference's one layer per file: a FeatureCollection file →
+    * one row per feature with its properties flattened and the
+    * geometry rendered as a WKT string column — the engine's geometry
+    * interchange format (SURVEY §1.1 geometries row). Point layer →
+    * properties.* + `wkt` (`POINT (x y)`). */
   def readPoints(spark: SparkSession, path: String): DataFrame =
     features(spark, path).map(_.select(
       col("f.properties.*"),
@@ -55,385 +63,294 @@ object GeoIngest {
         lit("))")).as("wkt")))
       .getOrElse(emptyLayer(spark))
 
-  /** GeoTIFF FILE ingest (SURVEY §2.1 "GeoTIFF read", the rasterio
-    * path process_data.py:64-66): scans a directory of `.tif` files
-    * through Spark's `binaryFile` source — a real distributed file
-    * scan with partition-parallel reads and pathGlobFilter pushdown —
-    * and decodes each container executor-side with
-    * [[graft.operators.MultimodalOps.decodeTiff]]. Files that are not
-    * decodable baseline TIFFs are SKIPPED (the decoder's None
-    * contract), never task failures — one corrupt tile cannot kill a
-    * 100 TB ingest. Output: (tile_id from the `tile_<id>.tif` naming
-    * convention or -1, width, height, samples) — the exact round-trip
-    * of [[Sinks.writeTiffTiles]]. */
-  def readTiffTiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        graft.operators.MultimodalOps.decodeTiff(bytes).map { img =>
-          val name = path.split('/').last.stripSuffix(".tif")
-          val id = if (name.startsWith("tile_")) {
-            val tail = name.stripPrefix("tile_")
-            tail.toLongOption.getOrElse(-1L) // 20+-digit / Unicode-digit names map to -1, never throw
-          } else -1L
-          (id, img.width, img.height, img.samples)
-        }
-      }.toDF("tile_id", "width", "height", "samples")
-  }
+  /** The one batch file scan: every file under `dir` whose name
+    * matches `glob`, through Spark's `binaryFile` source — a
+    * distributed scan with partition-parallel reads and the glob
+    * pushed into the listing (`pathGlobFilter`). Rows have the
+    * binaryFile schema (path, modificationTime, length, content) that
+    * [[decodeFiles]] reads; the streaming ingests land the same schema
+    * through their one `readStream` scan. */
+  def scan(spark: SparkSession, dir: String, glob: String): DataFrame =
+    spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
 
-  /** Distributed NetCDF prediction-dataset ingest — the combine half
-    * of the reference's eval loop (`TestInstance.load_from_nc` over
-    * `results_dir.glob("*.nc")`, cropharvest_eval.py:216-218): a
-    * binaryFile scan over `.nc` files written by
-    * [[Sinks.writeNetcdfFiles]] (or any conforming CDF-1 writer),
-    * decoded executor-side by [[NetcdfCodec.decode]] into one row per
-    * instance (test_id, lat, lon, pred). Files that are not CDF-1, use
-    * record variables, or lack the lat/lon/preds schema are SKIPPED,
-    * not failed — the corrupt-shard contract of every scan here. The
-    * per-file fan-out is data-parallel; downstream metric aggregation
-    * is an ordinary groupBy. */
-  def readNetcdfFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeNetcdfBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.nc")
-        .load(dir))
-
-  /** The decode half of [[readNetcdfFiles]] over any binaryFile-schema
-    * relation — shared verbatim by the batch scan above and the
-    * streaming landing-zone ingest ([[graft.streaming
-    * .StreamingPipelines.netcdfIngest]]), so batch and stream cannot
-    * drift. */
-  def decodeNetcdfBatch(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
+  /** The one per-file decode over a binaryFile-schema relation (a
+    * [[scan]] or one streaming micro-batch): `decode` runs
+    * executor-side on each file's name (its last path component) and
+    * bytes, and its rows come out as columns `names`.
+    *
+    * The corrupt-file contract of every reader here: a decoder that
+    * yields nothing SKIPS its file, so one undecodable object costs
+    * its own rows, never the task or the job. A reader over pinned
+    * fixtures that must not skip throws inside its own `decode`. */
+  def decodeFiles[T <: Product : TypeTag](files: DataFrame, names: String*)(
+      decode: (String, Array[Byte]) => IterableOnce[T]): DataFrame = {
+    import files.sparkSession.implicits._
     files
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        NetcdfCodec.decode(bytes).toSeq.flatMap { nc =>
-          val byName = nc.vars.map(v => v.name -> v.data).toMap
-          (byName.get("lat"), byName.get("lon"), byName.get("preds"),
-            byName.get("test_id")) match {
-            case (Some(NetcdfCodec.DoubleData(lat)), Some(NetcdfCodec.DoubleData(lon)),
-                Some(NetcdfCodec.DoubleData(preds)), Some(NetcdfCodec.CharData(id)))
-                if lat.length == lon.length && lon.length == preds.length =>
-              lat.indices.map(i => (id, i, lat(i), lon(i), preds(i)))
-            case _ => Nil // schema mismatch: skip the file, never throw
-          }
-        }
-      }.toDF("test_id", "instance", "lat", "lon", "pred")
+      .flatMap { case (path, bytes) =>
+        decode(path.substring(path.lastIndexOf('/') + 1), bytes)
+      }.toDF(names: _*)
   }
+
+  /** The id in a `<prefix><id>` file name (suffix already stripped):
+    * the tail as a Long — signs, leading zeros and Unicode digits
+    * parse — or -1 for another prefix or a tail that is not a Long
+    * (empty, non-numeric, 20+ digits), never a failed scan. */
+  private[graft] def fileId(name: String, prefix: String): Long =
+    if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption.getOrElse(-1L)
+    else -1L
+
+  /** GeoTIFF FILE ingest (SURVEY §2.1 "GeoTIFF read", the rasterio
+    * path process_data.py:64-66): `.tif` files decoded with
+    * [[graft.operators.MultimodalOps.decodeTiff]]; files that are not
+    * decodable baseline TIFFs skip. Output: (tile_id from the
+    * `tile_<id>.tif` naming convention or -1, width, height, samples)
+    * — the exact round-trip of [[Sinks.writeTiffTiles]]. */
+  def readTiffTiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.tif"), "tile_id", "width", "height", "samples") {
+      (file, bytes) =>
+        graft.operators.MultimodalOps.decodeTiff(bytes).map { img =>
+          (fileId(file.stripSuffix(".tif"), "tile_"), img.width, img.height, img.samples)
+        }
+    }
+
+  /** Distributed NetCDF prediction-dataset ingest — the combine half
+    * of the reference's eval loop (`TestInstance.load_from_nc` over
+    * `results_dir.glob("*.nc")`, cropharvest_eval.py:216-218): `.nc`
+    * files written by [[Sinks.writeNetcdfFiles]] (or any conforming
+    * CDF-1 writer), decoded by [[NetcdfCodec.decode]] into one row per
+    * instance (test_id, lat, lon, pred). Files that are not CDF-1, use
+    * record variables, or lack the lat/lon/preds schema skip. The
+    * per-file fan-out is data-parallel; downstream metric aggregation
+    * is an ordinary groupBy. */
+  def readNetcdfFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeNetcdfBatch(scan(spark, dir, "*.nc"))
+
+  /** The decode half of [[readNetcdfFiles]] — shared verbatim by the
+    * batch scan above and the streaming landing-zone ingest
+    * ([[graft.streaming.StreamingPipelines.netcdfIngest]]), so batch
+    * and stream cannot drift. */
+  def decodeNetcdfBatch(files: DataFrame): DataFrame =
+    decodeFiles(files, "test_id", "instance", "lat", "lon", "pred") { (_, bytes) =>
+      NetcdfCodec.decode(bytes).toSeq.flatMap { nc =>
+        val byName = nc.vars.map(v => v.name -> v.data).toMap
+        (byName.get("lat"), byName.get("lon"), byName.get("preds"),
+          byName.get("test_id")) match {
+          case (Some(NetcdfCodec.DoubleData(lat)), Some(NetcdfCodec.DoubleData(lon)),
+              Some(NetcdfCodec.DoubleData(preds)), Some(NetcdfCodec.CharData(id)))
+              if lat.length == lon.length && lon.length == preds.length =>
+            lat.indices.map(i => (id, i, lat(i), lon(i), preds(i)))
+          case _ => Nil // schema mismatch: skip the file, never throw
+        }
+      }
+    }
 
   /** Georeferenced per-pixel GeoTIFF ingest — the presto ingest shape:
     * the reference derives a lon/lat for every raster pixel from the
     * file's affine transform (rioxarray coords / the meshgrid in its
-    * EE pipeline) and lands (lon, lat, band values) rows. Same
-    * distributed binaryFile scan + corrupt-skip as [[readTiffTiles]],
-    * but through the typed decoder + [[graft.operators.MultimodalOps
+    * EE pipeline) and lands (lon, lat, band values) rows. `.tif` files
+    * through the typed decoder + [[graft.operators.MultimodalOps
     * .decodeTiffGeoref]]: files without ModelPixelScale/ModelTiepoint
-    * are SKIPPED (coordinates are never invented). Output one row per
+    * skip (coordinates are never invented). Output one row per
     * (pixel, band): (tile, band, row, col, value, lon, lat) with
     * pixel-CENTER coordinates under the raster-is-area convention —
-    * ready to join/groupBy like the `observations` table. The per-file
-    * flatMap fan-out is data-parallel; at 100 TB the scan partitions
-    * by file and no shuffle happens until the caller aggregates. */
-  def readTiffGeoPixels(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.split('/').last.stripSuffix(".tif")
-        for {
-          r <- graft.operators.MultimodalOps.decodeTiffRaster(bytes).toSeq
-          g <- graft.operators.MultimodalOps.decodeTiffGeoref(bytes).toSeq
-          row <- 0 until r.height
-          c <- 0 until r.width
-          b <- 0 until r.bands
-        } yield (name, b, row, c,
-          r.values((row * r.width + c) * r.bands + b),
-          g.pixelLon(c), g.pixelLat(row))
-      }.toDF("tile", "band", "row", "col", "value", "lon", "lat")
-  }
+    * ready to join/groupBy like the `observations` table. At 100 TB
+    * the scan partitions by file and no shuffle happens until the
+    * caller aggregates. */
+  def readTiffGeoPixels(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.tif"),
+        "tile", "band", "row", "col", "value", "lon", "lat") { (file, bytes) =>
+      val name = file.stripSuffix(".tif")
+      for {
+        r <- graft.operators.MultimodalOps.decodeTiffRaster(bytes).toSeq
+        g <- graft.operators.MultimodalOps.decodeTiffGeoref(bytes).toSeq
+        row <- 0 until r.height
+        c <- 0 until r.width
+        b <- 0 until r.bands
+      } yield (name, b, row, c,
+        r.values((row * r.width + c) * r.bands + b),
+        g.pixelLon(c), g.pixelLat(row))
+    }
 
   /** HDF5 FILE ingest (SURVEY §2.1 "HDF5 read" — the CropHarvest
     * test-instance containers, eval/cropharvest_extensions.py:323-377):
-    * same distributed binaryFile scan + corrupt-skip as the tif/npy
-    * siblings, through [[Hdf5Codec.decode]]. One output row per
+    * `.h5` files through [[Hdf5Codec.decode]]. One output row per
     * DATASET per file: (file, dataset, shape, dtype, values) with
     * values widened to Double — the h5py `hf[key][:]` read, as rows a
     * pipeline explodes/aggregates from there. Files outside the
-    * decoder's envelope (chunked, compressed, v2 headers) skip whole,
-    * never throw. */
-  def readH5Files(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.h5")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.split('/').last.stripSuffix(".h5")
+    * decoder's envelope (chunked, compressed, v2 headers) skip whole. */
+  def readH5Files(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.h5"), "file", "dataset", "shape", "dtype", "values") {
+      (file, bytes) =>
+        val name = file.stripSuffix(".h5")
         Hdf5Codec.decode(bytes).toSeq.flatten.map { d =>
           (name, d.name, d.shape, d.dtype, d.values)
         }
-      }.toDF("file", "dataset", "shape", "dtype", "values")
-  }
+    }
 
   /** NumPy `.npy` FILE ingest (SURVEY §2.1 "NumPy read", the
     * reference's raster interchange format — tif→npy transform,
-    * dataops/main.py:24-43): same distributed binaryFile scan +
-    * executor-side decode + corrupt-file skip as [[readTiffTiles]],
-    * through [[NpyCodec.decode]]. Output: (tile_id, shape, values)
-    * with values widened to Double. */
-  def readNpyFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.npy")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        NpyCodec.decode(bytes).map { npy =>
-          val name = path.split('/').last.stripSuffix(".npy")
-          val id = if (name.startsWith("tile_")) {
-            val tail = name.stripPrefix("tile_")
-            tail.toLongOption.getOrElse(-1L) // 20+-digit / Unicode-digit names map to -1, never throw
-          } else -1L
-          (id, npy.shape, npy.values)
-        }
-      }.toDF("tile_id", "shape", "values")
-  }
+    * dataops/main.py:24-43) through [[NpyCodec.decode]]. Output:
+    * (tile_id from `tile_<id>.npy` or -1, shape, values) with values
+    * widened to Double. */
+  def readNpyFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.npy"), "tile_id", "shape", "values") { (file, bytes) =>
+      NpyCodec.decode(bytes).map { npy =>
+        (fileId(file.stripSuffix(".npy"), "tile_"), npy.shape, npy.values)
+      }
+    }
 
   /** WAV clip ingest — the audio arm of the multimodal file-source
-    * family: same distributed binaryFile scan + executor-side decode +
-    * corrupt-file skip as [[readTiffTiles]]/[[readNpyFiles]], through
-    * [[WavCodec.decode]]. Output: (clip_id, rate, channels, samples). */
-  def readWavClips(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.wav")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
+    * family, through [[WavCodec.decode]]. Output: (clip_id from
+    * `clip_<id>.wav` or -1, rate, channels, samples). */
+  def readWavClips(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.wav"), "clip_id", "rate", "channels", "samples") {
+      (file, bytes) =>
         WavCodec.decode(bytes).map { wav =>
-          val name = path.split('/').last.stripSuffix(".wav")
-          val id = if (name.startsWith("clip_"))
-            name.stripPrefix("clip_").toLongOption.getOrElse(-1L)
-          else -1L
-          (id, wav.sampleRate, wav.channels, wav.samples)
+          (fileId(file.stripSuffix(".wav"), "clip_"), wav.sampleRate, wav.channels, wav.samples)
         }
-      }.toDF("clip_id", "rate", "channels", "samples")
-  }
+    }
 
-  /** Compressed JSONL shard scan: distributed binaryFile scan over
-    * `.jsonl.gz` shards, each member inflated + CRC-verified
-    * executor-side by [[GzipCodec.decode]] and exploded into one row
-    * per JSON line. Corrupt shards (bad magic, truncated body, CRC or
-    * length mismatch) are skipped — the None contract — so one bad
-    * object in a 100 TB bucket costs its shard, not the job.
-    * Output: (shard, member_name, line). */
-  def readJsonlGz(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gz")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.split('/').last
-        GzipCodec.decode(bytes).toSeq.flatMap { gz =>
-          new String(gz.data, "UTF-8").split('\n').toSeq
-            .filter(_.nonEmpty)
-            .map(line => (shard, gz.name, line))
-        }
-      }.toDF("shard", "member_name", "line")
-  }
+  /** Compressed JSONL shard scan: `.jsonl.gz` shards, each member
+    * inflated + CRC-verified by [[GzipCodec.decode]] and exploded into
+    * one row per JSON line. Corrupt shards (bad magic, truncated body,
+    * CRC or length mismatch) skip, so one bad object in a 100 TB
+    * bucket costs its shard, not the job. Output: (shard,
+    * member_name, line). */
+  def readJsonlGz(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.gz"), "shard", "member_name", "line") { (shard, bytes) =>
+      GzipCodec.decode(bytes).toSeq.flatMap { gz =>
+        new String(gz.data, "UTF-8").split('\n').toSeq
+          .filter(_.nonEmpty)
+          .map(line => (shard, gz.name, line))
+      }
+    }
 
   /** Webdataset tar-shard scan (SURVEY §2.1 "webdataset tar scan",
-    * dataops/dataset.py:31): distributed binaryFile scan over `.tar`
-    * shards — plus the compressed deliveries webdataset actually
-    * ships (`.tar.gz` / `.tgz` via [[GzipCodec]], `.tar.zst` via
-    * [[ZstdCodec]]) — each archive parsed executor-side by
-    * [[TarCodec.decode]] and exploded into one row per
-    * webdataset-grouped record part. Undecodable shards are skipped
-    * (None contract, at either layer). Output: (shard, key, part,
-    * payload). */
-  def readTarShards(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.{tar,tar.gz,tgz,tar.zst}")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.split('/').last
-        val raw: Option[Array[Byte]] =
-          if (shard.endsWith(".tar.gz") || shard.endsWith(".tgz"))
-            GzipCodec.decode(bytes).map(_.data)
-          else if (shard.endsWith(".tar.zst")) ZstdCodec.decode(bytes)
-          else Some(bytes)
-        raw.flatMap(TarCodec.decode).toSeq.flatMap { members =>
-          TarCodec.groupByKey(members).flatMap { case (key, parts) =>
-            parts.map { case (part, data) => (shard, key, part, data) }
-          }
+    * dataops/dataset.py:31): `.tar` shards — plus the compressed
+    * deliveries webdataset actually ships (`.tar.gz` / `.tgz` via
+    * [[GzipCodec]], `.tar.zst` via [[ZstdCodec]]) — each archive
+    * parsed by [[TarCodec.decode]] and exploded into one row per
+    * webdataset-grouped record part. A shard undecodable at either
+    * layer skips. Output: (shard, key, part, payload). */
+  def readTarShards(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.{tar,tar.gz,tgz,tar.zst}"),
+        "shard", "key", "part", "payload") { (shard, bytes) =>
+      val raw: Option[Array[Byte]] =
+        if (shard.endsWith(".tar.gz") || shard.endsWith(".tgz"))
+          GzipCodec.decode(bytes).map(_.data)
+        else if (shard.endsWith(".tar.zst")) ZstdCodec.decode(bytes)
+        else Some(bytes)
+      raw.flatMap(TarCodec.decode).toSeq.flatMap { members =>
+        TarCodec.groupByKey(members).flatMap { case (key, parts) =>
+          parts.map { case (part, data) => (shard, key, part, data) }
         }
-      }.toDF("shard", "key", "part", "payload")
-  }
+      }
+    }
 
   /** Zstd-compressed JSONL shard scan — the `.jsonl.zst` wire format
     * modern web corpora ship in (RedPajama/Dolma/FineWeb), the zstd
-    * sibling of [[readJsonlGz]]: distributed binaryFile scan, each
-    * shard's frames inflated executor-side by [[ZstdCodec.decode]]
-    * (multi-frame + skippable-frame aware, inflation-capped) and
-    * exploded into one row per JSON line. Corrupt shards decode to
-    * None and are skipped. Output: (shard, line_idx, line). */
+    * sibling of [[readJsonlGz]]: each shard's frames inflated by
+    * [[ZstdCodec.decode]] (multi-frame + skippable-frame aware,
+    * inflation-capped) and exploded into one row per JSON line.
+    * Output: (shard, line_idx, line). */
   def readJsonlZst(spark: SparkSession, dir: String): DataFrame =
-    decodeJsonlZstBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zst")
-        .load(dir))
+    decodeJsonlZstBatch(scan(spark, dir, "*.zst"))
 
-  /** One batch of (path, content) `.jsonl.zst` shards → per-line rows —
-    * shared by the batch scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.zstIngest]]). A corrupt
-    * shard decodes to nothing (per-file skip). */
-  def decodeJsonlZstBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.split('/').last
-        ZstdCodec.decode(bytes).toSeq.flatMap { data =>
-          new String(data, "UTF-8").split('\n').toSeq
-            .filter(_.nonEmpty).zipWithIndex
-            .map { case (l, i) => (shard, i.toLong, l) }
-        }
-      }.toDF("shard", "line_idx", "line")
-  }
+  /** One batch of `.jsonl.zst` shards → per-line rows — shared by the
+    * batch scan above and the streaming ingest arm
+    * ([[graft.streaming.StreamingPipelines.zstIngest]]). */
+  def decodeJsonlZstBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "shard", "line_idx", "line") { (shard, bytes) =>
+      ZstdCodec.decode(bytes).toSeq.flatMap { data =>
+        new String(data, "UTF-8").split('\n').toSeq
+          .filter(_.nonEmpty).zipWithIndex
+          .map { case (l, i) => (shard, i.toLong, l) }
+      }
+    }
 
   /** bzip2-compressed JSONL shard scan — the compression the long
     * tail of public corpora still ships in (Wikipedia dumps,
     * pushshift archives), the bzip2 sibling of [[readJsonlGz]] /
-    * [[readJsonlZst]]: distributed binaryFile scan, each shard's
-    * streams decompressed executor-side by [[Bz2Codec.decode]]
-    * (multi-stream aware, inflation-capped) and exploded into one row
-    * per JSON line. Corrupt shards decode to None and are skipped.
-    * Output: (shard, line_idx, line). */
+    * [[readJsonlZst]]: each shard's streams decompressed by
+    * [[Bz2Codec.decode]] (multi-stream aware, inflation-capped) and
+    * exploded into one row per JSON line. Output: (shard, line_idx,
+    * line). */
   def readJsonlBz2(spark: SparkSession, dir: String): DataFrame =
-    decodeJsonlBz2Batch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bz2")
-        .load(dir))
+    decodeJsonlBz2Batch(scan(spark, dir, "*.bz2"))
 
-  /** One batch of (path, content) `.jsonl.bz2` shards → per-line rows —
-    * shared by the batch scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.bz2Ingest]]). A corrupt
-    * shard decodes to nothing (per-file skip). */
-  def decodeJsonlBz2Batch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.split('/').last
-        Bz2Codec.decode(bytes).toSeq.flatMap { data =>
-          new String(data, "UTF-8").split('\n').toSeq
-            .filter(_.nonEmpty).zipWithIndex
-            .map { case (l, i) => (shard, i.toLong, l) }
-        }
-      }.toDF("shard", "line_idx", "line")
-  }
+  /** One batch of `.jsonl.bz2` shards → per-line rows — shared by the
+    * batch scan above and the streaming ingest arm
+    * ([[graft.streaming.StreamingPipelines.bz2Ingest]]). */
+  def decodeJsonlBz2Batch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "shard", "line_idx", "line") { (shard, bytes) =>
+      Bz2Codec.decode(bytes).toSeq.flatMap { data =>
+        new String(data, "UTF-8").split('\n').toSeq
+          .filter(_.nonEmpty).zipWithIndex
+          .map { case (l, i) => (shard, i.toLong, l) }
+      }
+    }
 
   /** MediaWiki dump scan — `pages-articles.xml.bz2` as Wikipedia
     * actually publishes it (the wiki slice of every serious
-    * pretraining mix): distributed binaryFile scan over `*.xml.bz2`
-    * (+ plain `*.xml`), each shard bzip2-decompressed by
-    * [[Bz2Codec.decode]] and page-scanned by [[WikiXml.parse]]
-    * executor-side. A shard that is not a mediawiki document (or
-    * fails decompression) is skipped whole; a malformed page inside a
-    * valid dump is skipped alone. Output: (shard, page_id, ns, title,
-    * redirect, text). */
+    * pretraining mix): `*.xml.bz2` (+ plain `*.xml`), each shard
+    * bzip2-decompressed by [[Bz2Codec.decode]] and page-scanned by
+    * [[WikiXml.parse]]. A shard that is not a mediawiki document (or
+    * fails decompression) skips whole; a malformed page inside a valid
+    * dump skips alone. Output: (shard, page_id, ns, title, redirect,
+    * text). */
   def readWikiDumps(spark: SparkSession, dir: String): DataFrame =
-    decodeWikiBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml*")
-        .load(dir))
+    decodeWikiBatch(scan(spark, dir, "*.xml*"))
 
-  /** One batch of (path, content) dump shards → per-page rows —
-    * shared by the batch scan above and the streaming ingest arm
+  /** One batch of dump shards → per-page rows — shared by the batch
+    * scan above and the streaming ingest arm
     * ([[graft.streaming.StreamingPipelines.wikiIngest]]) so the two
-    * paths cannot drift. A non-mediawiki or corrupt shard decodes to
-    * nothing (per-shard skip); a malformed page degrades alone. */
-  def decodeWikiBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.split('/').last
+    * paths cannot drift. */
+  def decodeWikiBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "shard", "page_id", "ns", "title", "redirect", "text") {
+      (shard, bytes) =>
         val xml =
           if (shard.endsWith(".bz2")) Bz2Codec.decode(bytes)
           else Some(bytes)
         xml.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
           .flatMap(WikiXml.parse).toSeq.flatten
           .map(p => (shard, p.id, p.ns, p.title, p.redirect, p.text))
-      }.toDF("shard", "page_id", "ns", "title", "redirect", "text")
-  }
+    }
 
   /** WARC crawl-archive scan — the Common Crawl ingest front door:
-    * distributed binaryFile scan over `.warc.gz` (one gzip member per
-    * record; [[GzipCodec.decode]] concatenates members) and plain
-    * `.warc` files, each parsed executor-side by [[WarcCodec.parse]].
-    * Response records additionally decode their HTTP payload
-    * ([[WarcCodec.httpResponse]]: status line, chunked transfer
-    * coding, gzip content coding); a response whose payload cannot be
-    * decoded keeps its record row with a NULL status (per-record
-    * degrade), while a structurally corrupt FILE is skipped whole
-    * (per-file None contract). Output: (file, rec_idx, warc_type,
-    * target_uri, http_status, mime, payload). */
+    * `.warc.gz` (one gzip member per record; [[GzipCodec.decode]]
+    * concatenates members) and plain `.warc` files, each parsed by
+    * [[WarcCodec.parse]]. Response records additionally decode their
+    * HTTP payload ([[WarcCodec.httpResponse]]: status line, chunked
+    * transfer coding, gzip content coding); a response whose payload
+    * cannot be decoded keeps its record row with a NULL status
+    * (per-record degrade), while a structurally corrupt FILE skips
+    * whole. Output: (file, rec_idx, warc_type, target_uri,
+    * http_status, mime, payload). */
   def readWarcFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWarcBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .load(dir))
+    decodeWarcBatch(scan(spark, dir, "*.warc*"))
 
-  /** One batch of (path, content) WARC files → per-record rows —
-    * shared by the batch scan above and the streaming ingest arm
+  /** One batch of WARC files → per-record rows — shared by the batch
+    * scan above and the streaming ingest arm
     * ([[graft.streaming.StreamingPipelines.warcIngest]]) so the two
-    * paths cannot drift. Per-file refusal (a corrupt archive yields
-    * no rows), per-record payload degrade (an undecodable HTTP body
-    * falls back to the raw block). */
-  def decodeWarcBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        val raw =
-          if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
-          else Some(bytes)
-        raw.flatMap(WarcCodec.parse).toSeq.flatten.map { r =>
-          val http =
-            if (r.warcType == "response") WarcCodec.httpResponse(r.block)
-            else None
-          val status: Option[Int] = http.map(_.status)
-          val mime = http.map(_.contentType).getOrElse(r.contentType)
-          val payload = http.map(_.payload).getOrElse(r.block)
-          (file, r.idx, r.warcType, r.targetUri, status, mime, payload)
-        }
-      }.toDF("file", "rec_idx", "warc_type", "target_uri",
-        "http_status", "mime", "payload")
-  }
+    * paths cannot drift. */
+  def decodeWarcBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "rec_idx", "warc_type", "target_uri",
+        "http_status", "mime", "payload") { (file, bytes) =>
+      val raw =
+        if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
+        else Some(bytes)
+      raw.flatMap(WarcCodec.parse).toSeq.flatten.map { r =>
+        val http =
+          if (r.warcType == "response") WarcCodec.httpResponse(r.block)
+          else None
+        val status: Option[Int] = http.map(_.status)
+        val mime = http.map(_.contentType).getOrElse(r.contentType)
+        val payload = http.map(_.payload).getOrElse(r.block)
+        (file, r.idx, r.warcType, r.targetUri, status, mime, payload)
+      }
+    }
 
   /** WET extracted-text scan — Common Crawl's second deliverable
     * (`*.warc.wet.gz`): the same WARC framing, but each `conversion`
@@ -444,16 +361,13 @@ object GeoIngest {
     * Output: (file, rec_idx, target_uri, mime, text) — text decoded
     * as UTF-8 from the record block. */
   def readWetFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWetBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wet*")
-        .load(dir))
+    decodeWetBatch(scan(spark, dir, "*.wet*"))
 
-  /** One batch of (path, content) WET files → per-page text rows —
-    * shared by the batch scan and the streaming arm
+  /** One batch of WET files → per-page text rows — shared by the
+    * batch scan and the streaming arm
     * ([[graft.streaming.StreamingPipelines.wetIngest]]). Rides
-    * [[decodeWarcBatch]]'s framing walk (per-file refusal), keeping
-    * only `conversion` records; the block is the text. */
+    * [[decodeWarcBatch]]'s framing walk, keeping only `conversion`
+    * records; the block is the text. */
   def decodeWetBatch(batch: DataFrame): DataFrame =
     decodeWarcBatch(batch)
       .filter(col("warc_type") === "conversion")
@@ -469,16 +383,13 @@ object GeoIngest {
     * field extraction stays declarative via `get_json_object` in the
     * query layer (the q_json_extract machinery, no UDFs). */
   def readWatFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWatBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wat*")
-        .load(dir))
+    decodeWatBatch(scan(spark, dir, "*.wat*"))
 
-  /** One batch of (path, content) WAT files → per-record JSON rows —
-    * shared by the batch scan and the streaming arm
+  /** One batch of WAT files → per-record JSON rows — shared by the
+    * batch scan and the streaming arm
     * ([[graft.streaming.StreamingPipelines.watIngest]]). Rides
-    * [[decodeWarcBatch]]'s framing walk (per-file refusal), keeping
-    * only `metadata` records; the block is the JSON envelope. */
+    * [[decodeWarcBatch]]'s framing walk, keeping only `metadata`
+    * records; the block is the JSON envelope. */
   def decodeWatBatch(batch: DataFrame): DataFrame =
     decodeWarcBatch(batch)
       .filter(col("warc_type") === "metadata")
@@ -486,46 +397,30 @@ object GeoIngest {
         decode(col("payload"), "UTF-8").as("json"))
 
   /** BMP scan — the uncompressed long-tail image format old sites and
-    * scanned-doc dumps still surface: distributed binaryFile scan
-    * over `*.bmp`, each decoded executor-side by [[BmpCodec.decode]]
-    * (indexed/BGR/BGRX/RLE8 envelope; whole-file refusal). Output:
-    * one row per pixel, top-down coordinates. */
-  def readBmpFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.bmp")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        BmpCodec.decode(bytes).toSeq.flatMap { img =>
-          (0 until img.h).iterator.flatMap { y =>
-            (0 until img.w).iterator.map { x =>
-              val o = 3 * (y * img.w + x)
-              (file, y, x, img.rgb(o) & 0xff, img.rgb(o + 1) & 0xff,
-                img.rgb(o + 2) & 0xff)
-            }
+    * scanned-doc dumps still surface: `*.bmp`, each decoded by
+    * [[BmpCodec.decode]] (indexed/BGR/BGRX/RLE8 envelope; whole-file
+    * refusal). Output: one row per pixel, top-down coordinates. */
+  def readBmpFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.bmp"), "file", "y", "x", "r", "g", "b") { (file, bytes) =>
+      BmpCodec.decode(bytes).toSeq.flatMap { img =>
+        (0 until img.h).iterator.flatMap { y =>
+          (0 until img.w).iterator.map { x =>
+            val o = 3 * (y * img.w + x)
+            (file, y, x, img.rgb(o) & 0xff, img.rgb(o + 1) & 0xff,
+              img.rgb(o + 2) & 0xff)
           }
         }
-      }.toDF("file", "y", "x", "r", "g", "b")
-  }
+      }
+    }
 
   /** GIF scan — the web-corpus long-tail image format (and the
-    * smallest real frame-sampling case: animated GIFs): distributed
-    * binaryFile scan over `*.gif`, each decoded executor-side by
-    * [[GifCodec.decode]] (spec LZW, interlace, local palettes;
-    * whole-file refusal on any structural fault). Output: one row per
-    * pixel per frame at CANVAS coordinates. */
-  def readGifFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
+    * smallest real frame-sampling case: animated GIFs): `*.gif`, each
+    * decoded by [[GifCodec.decode]] (spec LZW, interlace, local
+    * palettes; whole-file refusal on any structural fault). Output:
+    * one row per pixel per frame at CANVAS coordinates. */
+  def readGifFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.gif"), "file", "frame", "y", "x", "r", "g", "b") {
+      (file, bytes) =>
         GifCodec.decode(bytes).toSeq.flatten.flatMap { f =>
           (0 until f.h).iterator.flatMap { y =>
             (0 until f.w).iterator.map { x =>
@@ -535,8 +430,7 @@ object GeoIngest {
             }
           }
         }
-      }.toDF("file", "frame", "y", "x", "r", "g", "b")
-  }
+    }
 
   /** Composited GIF animation scan — what a vision pipeline actually
     * samples from an animated GIF: full-canvas frames after the GCE
@@ -545,15 +439,9 @@ object GeoIngest {
     * [[GifCodec.composite]]. One row per canvas pixel per frame;
     * alpha 0 = never painted. Whole-file refusal on any structural
     * fault, off-screen rect, or reserved disposal method. */
-  def readGifCanvases(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gif")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
+  def readGifCanvases(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.gif"), "file", "frame", "y", "x", "r", "g", "b", "a") {
+      (file, bytes) =>
         GifCodec.composite(bytes).toSeq.flatten.flatMap { f =>
           (0 until f.h).iterator.flatMap { y =>
             (0 until f.w).iterator.map { x =>
@@ -563,132 +451,84 @@ object GeoIngest {
             }
           }
         }
-      }.toDF("file", "frame", "y", "x", "r", "g", "b", "a")
-  }
+    }
 
   /** Arrow IPC scan — Feather V2 exports and HF-datasets-style
-    * streams on their way into a corpus: distributed binaryFile scan
-    * over `*.arrow`, each decoded executor-side by
+    * streams on their way into a corpus: `*.arrow`, each decoded by
     * [[ArrowCodec.decode]] (from-scratch flatbuffers walk over both
     * IPC framings; whole-file refusal on any structural fault,
     * dictionary encoding, or compressed bodies). Output: one row per
     * value cell, raw LE bits zero-extended to a long (bit-exact for
     * every numeric type), strings as UTF-8, binary as hex. */
   def readArrowFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeArrowBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrow")
-        .load(dir))
+    decodeArrowBatch(scan(spark, dir, "*.arrow"))
 
-  /** One batch of (path, content) Arrow objects → per-cell rows —
-    * shared by the batch scan above and the streaming ingest arm
+  /** One batch of Arrow objects → per-cell rows — shared by the batch
+    * scan above and the streaming ingest arm
     * ([[graft.streaming.StreamingPipelines.arrowIngest]]) so the two
-    * paths cannot drift. A corrupt object decodes to nothing
-    * (whole-file skip). */
-  def decodeArrowBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        ArrowCodec.decode(bytes).toSeq.flatten.map { c =>
-          (file, c.batch, c.col, c.row, c.elem, c.elem2, c.elem3,
-            c.vtype, c.isNull, c.bits, c.str)
-        }
-      }.toDF("file", "batch", "col", "row", "elem_idx", "elem_idx2",
-        "elem_idx3", "vtype", "is_null", "bits", "str_val")
-  }
+    * paths cannot drift. */
+  def decodeArrowBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "batch", "col", "row", "elem_idx", "elem_idx2",
+        "elem_idx3", "vtype", "is_null", "bits", "str_val") { (file, bytes) =>
+      ArrowCodec.decode(bytes).toSeq.flatten.map { c =>
+        (file, c.batch, c.col, c.row, c.elem, c.elem2, c.elem3,
+          c.vtype, c.isNull, c.bits, c.str)
+      }
+    }
 
   /** safetensors shard scan — named-tensor artifacts (weight shards,
     * precomputed embedding dumps) on their way into a corpus:
-    * distributed binaryFile scan over `*.safetensors`, each decoded
-    * executor-side by [[SafetensorsCodec.decode]] (8-byte LE header
-    * length, strict JSON header, span-tiling validation; whole-file
-    * refusal on any structural fault — a weight shard is
-    * all-or-nothing). Output: one row per tensor ELEMENT with the raw
-    * little-endian bits zero-extended to a long, so every dtype
-    * (f16/bf16/f32/f64/ints/bool) grades bit-exactly. */
+    * `*.safetensors`, each decoded by [[SafetensorsCodec.decode]]
+    * (8-byte LE header length, strict JSON header, span-tiling
+    * validation; whole-file refusal on any structural fault — a
+    * weight shard is all-or-nothing). Output: one row per tensor
+    * ELEMENT with the raw little-endian bits zero-extended to a long,
+    * so every dtype (f16/bf16/f32/f64/ints/bool) grades bit-exactly. */
   def readSafetensorsFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeSafetensorsBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.safetensors")
-        .load(dir))
+    decodeSafetensorsBatch(scan(spark, dir, "*.safetensors"))
 
-  /** One batch of (path, content) safetensors shards → per-element
-    * rows — shared by the batch scan above and the streaming ingest
-    * arm ([[graft.streaming.StreamingPipelines.safetensorsIngest]])
-    * so the two paths cannot drift. A corrupt shard decodes to
-    * nothing (whole-file skip). */
-  def decodeSafetensorsBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
+  /** One batch of safetensors shards → per-element rows — shared by
+    * the batch scan above and the streaming ingest arm
+    * ([[graft.streaming.StreamingPipelines.safetensorsIngest]]) so the
+    * two paths cannot drift. */
+  def decodeSafetensorsBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "tensor", "dtype", "shape", "elem_idx", "bits") {
+      (file, bytes) =>
         SafetensorsCodec.decode(bytes).toSeq.flatten.map { e =>
           (file, e.name, e.dtype, e.shape, e.idx, e.bits)
         }
-      }.toDF("file", "tensor", "dtype", "shape", "elem_idx", "bits")
-  }
+    }
 
   /** ZIP archive scan — the other dataset archive shape next to
-    * tar/webdataset (Kaggle exports, image-caption bundles):
-    * distributed binaryFile scan over `*.zip`, each decoded
-    * executor-side by [[ZipCodec.decode]] (central-directory walk;
+    * tar/webdataset (Kaggle exports, image-caption bundles): `*.zip`,
+    * each decoded by [[ZipCodec.decode]] (central-directory walk;
     * stored + deflate members; per-member CRC verify). A structurally
-    * broken archive is skipped whole; a single bad member (unsupported
+    * broken archive skips whole; a single bad member (unsupported
     * method, encryption, CRC fail) skips that member only. Output:
     * (file, member, method, content). */
-  def readZipFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.zip")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
+  def readZipFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.zip"), "file", "member", "method", "content") {
+      (file, bytes) =>
         ZipCodec.decode(bytes).toSeq.flatten.map { m =>
           (file, m.name, m.method, m.data)
         }
-      }.toDF("file", "member", "method", "content")
-  }
+    }
 
   /** Avro object-container scan — warehouse/Kafka-archive interchange
-    * on its way into a corpus: distributed binaryFile scan over
-    * `*.avro`, each decoded executor-side by [[AvroIngest.decode]]
-    * (platform Avro runtime; whole-file refusal on any decode fault).
-    * Output: one row per record field (per element for arrays), with
-    * float/double as raw IEEE bits. */
-  def readAvroFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.avro")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
+    * on its way into a corpus: `*.avro`, each decoded by
+    * [[AvroIngest.decode]] (platform Avro runtime; whole-file refusal
+    * on any decode fault). Output: one row per record field (per
+    * element for arrays), with float/double as raw IEEE bits. */
+  def readAvroFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.avro"), "file", "rec_idx", "field", "elem_idx",
+        "vtype", "long_val", "float_bits", "double_bits", "str_val", "bytes_val") {
+      (file, bytes) =>
         AvroIngest.decode(bytes).toSeq.flatten.map { case (idx, c) =>
           (file, idx, c.field, c.elem_idx, c.vtype, c.long_val,
             c.float_bits, c.double_bits, c.str_val, c.bytes_val)
         }
-      }.toDF("file", "rec_idx", "field", "elem_idx", "vtype",
-        "long_val", "float_bits", "double_bits", "str_val", "bytes_val")
-  }
+    }
 
-  /** TFRecord shard scan — the classic training-example wire format:
-    * distributed binaryFile scan over `.tfrecord` (and whole-file
-    * gzipped `.tfrecord.gz`) shards, each frame-checked and
-    * proto-decoded executor-side by [[TfRecordCodec]]. Output is one
-    * row per feature ELEMENT (file, rec_idx, key, kind, elem_idx,
-    * int_val, float_bits, bytes_val) — float elements carry their raw
-    * LE wire bits so the grade is bit-exact. A record whose payload
-    * is not a parseable `tf.train.Example` keeps a single degraded
-    * row (kind `unparsed`, payload in bytes_val); a file with any
-    * framing/CRC violation is skipped whole. */
   /** MP4 / ISO-BMFF sample-table scan — the container walk a video
     * pipeline runs BEFORE any decode: per-sample (offset, size, dts,
     * pts, sync) rows from `moov/trak/mdia/minf/stbl` via
@@ -697,31 +537,21 @@ object GeoIngest {
     * ranged-read contract an object store serves). Whole-file refusal
     * on structural faults or fragmented (moof) files. */
   def readMp4Files(spark: SparkSession, dir: String): DataFrame =
-    decodeMp4Batch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(dir))
+    decodeMp4Batch(scan(spark, dir, "*.mp4"))
 
-  /** One batch of (path, content) MP4 files → per-sample rows —
-    * shared by the batch scan and the streaming arm so the two
-    * paths cannot drift. */
-  def decodeMp4Batch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        Mp4Codec.decode(bytes).toSeq.flatten.map { s =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          md.update(bytes, s.off.toInt, s.size.toInt)
-          val hex = md.digest().map("%02x".format(_)).mkString
-          (file, s.track, s.handler, s.codec, s.tsc, s.smp, s.chunk,
-            s.off, s.size, s.dts, s.dur, s.pts, if (s.sync) 1 else 0, hex)
-        }
-      }.toDF("file", "track", "handler", "codec", "tsc", "smp", "chunk",
-        "off", "size", "dts", "dur", "pts", "sync", "md5")
-  }
+  /** One batch of MP4 files → per-sample rows — shared by the batch
+    * scan and the streaming arm so the two paths cannot drift. */
+  def decodeMp4Batch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "track", "handler", "codec", "tsc", "smp", "chunk",
+        "off", "size", "dts", "dur", "pts", "sync", "md5") { (file, bytes) =>
+      Mp4Codec.decode(bytes).toSeq.flatten.map { s =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        md.update(bytes, s.off.toInt, s.size.toInt)
+        val hex = md.digest().map("%02x".format(_)).mkString
+        (file, s.track, s.handler, s.codec, s.tsc, s.smp, s.chunk,
+          s.off, s.size, s.dts, s.dur, s.pts, if (s.sync) 1 else 0, hex)
+      }
+    }
 
   /** WebP container scan — canvas dims, alpha/animation flags, the
     * ANMF frame table and embedded EXIF GPS via [[WebpCodec.decode]]:
@@ -729,71 +559,44 @@ object GeoIngest {
     * dominant image format, no VP8 decoder needed. Whole-file refusal
     * on structural faults. */
   def readWebpFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWebpBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(dir))
+    decodeWebpBatch(scan(spark, dir, "*.webp"))
 
-  /** One batch of (path, content) WebP files → metadata rows —
-    * shared by the batch scan and any streaming arm. */
-  def decodeWebpBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        WebpCodec.decode(bytes).toSeq.flatten.map(m =>
-          (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-      }.toDF("file", "kind", "key", "idx", "num", "sval")
-  }
+  /** One batch of WebP files → metadata rows — shared by the batch
+    * scan and any streaming arm. */
+  def decodeWebpBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+      WebpCodec.decode(bytes).toSeq.flatten.map(m =>
+        (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
+    }
 
   /** Ogg/Opus metadata scan — podcast/speech corpora: channels,
     * preskip, duration (last granule at 48 kHz), pages, vendor +
     * comment tags via [[AudioMetaCodec.decodeOgg]]. Whole-file
     * refusal on structural faults (CRC, lacing, multiplexing). */
   def readOpusFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeOpusBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{opus,ogg}")
-        .load(dir))
+    decodeOpusBatch(scan(spark, dir, "*.{opus,ogg}"))
 
-  /** One batch of (path, content) Ogg/Opus files → metadata rows. */
-  def decodeOpusBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        AudioMetaCodec.decodeOgg(bytes).toSeq.flatten.map(m =>
-          (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-      }.toDF("file", "kind", "key", "idx", "num", "sval")
-  }
+  /** One batch of Ogg/Opus files → metadata rows. */
+  def decodeOpusBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+      AudioMetaCodec.decodeOgg(bytes).toSeq.flatten.map(m =>
+        (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
+    }
 
   /** AVIF/HEIF metadata scan — primary item, canvas dims (ispe via
     * ipma), item/extent table with fetch-proving md5s, and embedded
     * EXIF GPS via [[AvifCodec.decode]]. Whole-file refusal on
     * structural faults or extents past EOF. */
   def readAvifFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeAvifBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{avif,heic}")
-        .load(dir))
+    decodeAvifBatch(scan(spark, dir, "*.{avif,heic}"))
 
-  /** One batch of (path, content) AVIF/HEIC files → metadata rows —
-    * shared by the batch scan and any streaming arm. */
-  def decodeAvifBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        AvifCodec.decode(bytes).toSeq.flatten.map(m =>
-          (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-      }.toDF("file", "kind", "key", "idx", "num", "sval")
-  }
+  /** One batch of AVIF/HEIC files → metadata rows — shared by the
+    * batch scan and any streaming arm. */
+  def decodeAvifBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+      AvifCodec.decode(bytes).toSeq.flatten.map(m =>
+        (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
+    }
 
   /** Audio metadata scan — FLAC STREAMINFO/Vorbis comments and MP3
     * ID3v2 tags + first-frame stream shape via [[AudioMetaCodec]]:
@@ -801,27 +604,18 @@ object GeoIngest {
     * durations, titles/languages) with the sample decode left at the
     * stub boundary. Whole-file refusal on structural faults. */
   def readAudioMetaFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeAudioMetaBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{flac,mp3}")
-        .load(dir))
+    decodeAudioMetaBatch(scan(spark, dir, "*.{flac,mp3}"))
 
-  /** One batch of (path, content) audio files → metadata rows —
-    * shared by the batch scan and any streaming arm. */
-  def decodeAudioMetaBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        val meta =
-          if (file.endsWith(".flac")) AudioMetaCodec.decodeFlac(bytes)
-          else AudioMetaCodec.decodeMp3(bytes)
-        meta.toSeq.flatten.map(m =>
-          (file, m.kind, m.key, Option(m.sval), m.num))
-      }.toDF("file", "kind", "key", "sval", "num")
-  }
+  /** One batch of audio files → metadata rows — shared by the batch
+    * scan and any streaming arm. */
+  def decodeAudioMetaBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "kind", "key", "sval", "num") { (file, bytes) =>
+      val meta =
+        if (file.endsWith(".flac")) AudioMetaCodec.decodeFlac(bytes)
+        else AudioMetaCodec.decodeMp3(bytes)
+      meta.toSeq.flatten.map(m =>
+        (file, m.kind, m.key, Option(m.sval), m.num))
+    }
 
   /** PDF text scan — one row per shown text run from each document's
     * content streams, via [[PdfCodec.decode]]: the first operator a
@@ -829,127 +623,101 @@ object GeoIngest {
     * format. Whole-file refusal on envelope faults (xref streams,
     * encryption, non-Flate filters, truncation). */
   def readPdfFiles(spark: SparkSession, dir: String): DataFrame =
-    decodePdfBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(dir))
+    decodePdfBatch(scan(spark, dir, "*.pdf"))
 
-  /** One batch of (path, content) PDFs → per-text-run rows — shared
-    * by the batch scan and any streaming arm so paths cannot drift. */
-  def decodePdfBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        PdfCodec.decode(bytes).toSeq.flatten.map(r =>
-          (file, r.page, r.run, r.text))
-      }.toDF("file", "page", "run", "text")
-  }
+  /** One batch of PDFs → per-text-run rows — shared by the batch scan
+    * and any streaming arm so paths cannot drift. */
+  def decodePdfBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "page", "run", "text") { (file, bytes) =>
+      PdfCodec.decode(bytes).toSeq.flatten.map(r =>
+        (file, r.page, r.run, r.text))
+    }
 
   /** EXIF metadata scan — one row per tag value from the APP1 TIFF
     * tree of each JPEG, via [[ExifCodec.parse]]: the image-side PII
     * surface (GPS sub-IFD) plus orientation/camera metadata. A JPEG
     * without an Exif segment contributes zero rows; a malformed TIFF
     * block refuses the whole file. */
-  def readExifFiles(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.jpg")
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        ExifCodec.parse(bytes).toSeq.flatten.map(t =>
-          (file, t.ifd, t.tag, t.ttype, t.idx, t.num, t.den,
-            Option(t.sval)))
-      }.toDF("file", "ifd", "tag", "ttype", "idx", "num", "den", "sval")
-  }
+  def readExifFiles(spark: SparkSession, dir: String): DataFrame =
+    decodeFiles(scan(spark, dir, "*.jpg"),
+        "file", "ifd", "tag", "ttype", "idx", "num", "den", "sval") { (file, bytes) =>
+      ExifCodec.parse(bytes).toSeq.flatten.map(t =>
+        (file, t.ifd, t.tag, t.ttype, t.idx, t.num, t.den,
+          Option(t.sval)))
+    }
 
   /** Subtitle-cue scan — WebVTT and SRT caption files (the text half
-    * of caption-to-frame alignment), parsed executor-side by
-    * [[SubtitleCodec]] with whole-file refusal on structural faults.
-    * One row per cue: [start_ms, end_ms) wall time + payload text. */
+    * of caption-to-frame alignment), parsed by [[SubtitleCodec]] with
+    * whole-file refusal on structural faults. One row per cue:
+    * [start_ms, end_ms) wall time + payload text. */
   def readSubtitleFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeSubtitleBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{vtt,srt}")
-        .load(dir))
+    decodeSubtitleBatch(scan(spark, dir, "*.{vtt,srt}"))
 
-  /** One batch of (path, content) caption files → per-cue rows —
-    * shared by the batch scan and the streaming arm so the two
-    * paths cannot drift. */
-  def decodeSubtitleBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        val cues =
-          if (file.endsWith(".srt")) SubtitleCodec.decodeSrt(bytes)
-          else SubtitleCodec.decodeVtt(bytes)
-        cues.toSeq.flatten.map(c =>
-          (file, c.idx, c.startMs, c.endMs, c.text))
-      }.toDF("file", "cue", "start_ms", "end_ms", "text")
-  }
+  /** One batch of caption files → per-cue rows — shared by the batch
+    * scan and the streaming arm so the two paths cannot drift. */
+  def decodeSubtitleBatch(batch: DataFrame): DataFrame =
+    decodeFiles(batch, "file", "cue", "start_ms", "end_ms", "text") { (file, bytes) =>
+      val cues =
+        if (file.endsWith(".srt")) SubtitleCodec.decodeSrt(bytes)
+        else SubtitleCodec.decodeVtt(bytes)
+      cues.toSeq.flatten.map(c =>
+        (file, c.idx, c.startMs, c.endMs, c.text))
+    }
 
+  /** TFRecord shard scan — the classic training-example wire format:
+    * `.tfrecord` (and whole-file gzipped `.tfrecord.gz`) shards, each
+    * frame-checked and proto-decoded by [[TfRecordCodec]]. Output is
+    * one row per feature ELEMENT (file, rec_idx, key, kind, elem_idx,
+    * int_val, float_bits, bytes_val) — float elements carry their raw
+    * LE wire bits so the grade is bit-exact. A record whose payload
+    * is not a parseable `tf.train.Example` keeps a single degraded
+    * row (kind `unparsed`, payload in bytes_val); a file with any
+    * framing/CRC violation skips whole. */
   def readTfRecordFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeTfRecordBatch(
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tfrecord*")
-        .load(dir))
+    decodeTfRecordBatch(scan(spark, dir, "*.tfrecord*"))
 
-  /** One batch of (path, content) TFRecord shards → per-element rows —
-    * shared by the batch scan and any streaming arm so the two paths
-    * cannot drift. */
+  /** One batch of TFRecord shards → per-element rows — shared by the
+    * batch scan and any streaming arm so the two paths cannot drift. */
   def decodeTfRecordBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
     import GeoIngest.{TfElem => R}
-    batch
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val file = path.split('/').last
-        val raw =
-          if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
-          else Some(bytes)
-        raw.flatMap(TfRecordCodec.parse).toSeq.flatten.zipWithIndex
-          .flatMap { case (rec, idx) =>
-            TfRecordCodec.parseExample(rec) match {
-              case None =>
-                Seq(R(file, idx, None, "unparsed", None, None, None,
-                  Some(rec)))
-              case Some(entries) if entries.isEmpty =>
-                Seq(R(file, idx, None, "empty", None, None, None, None))
-              case Some(entries) => entries.flatMap { case (k, f) =>
-                val kind = if (f.kind.isEmpty) "none" else f.kind
-                val n = f.kind match {
-                  case "bytes" => f.bytess.size
-                  case "float" => f.floatBits.size
-                  case "int64" => f.ints.size
-                  case _       => 0
-                }
-                if (n == 0)
-                  Seq(R(file, idx, Some(k), kind, None, None, None, None))
-                else f.kind match {
-                  case "int64" => f.ints.zipWithIndex.map { case (v, i) =>
-                    R(file, idx, Some(k), kind, Some(i), Some(v), None,
-                      None) }
-                  case "float" => f.floatBits.zipWithIndex.map { case (v, i) =>
-                    R(file, idx, Some(k), kind, Some(i), None, Some(v),
-                      None) }
-                  case _ => f.bytess.zipWithIndex.map { case (v, i) =>
-                    R(file, idx, Some(k), kind, Some(i), None, None,
-                      Some(v)) }
-                }
+    decodeFiles(batch, "file", "rec_idx", "key", "kind", "elem_idx",
+        "int_val", "float_bits", "bytes_val") { (file, bytes) =>
+      val raw =
+        if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
+        else Some(bytes)
+      raw.flatMap(TfRecordCodec.parse).toSeq.flatten.zipWithIndex
+        .flatMap { case (rec, idx) =>
+          TfRecordCodec.parseExample(rec) match {
+            case None =>
+              Seq(R(file, idx, None, "unparsed", None, None, None,
+                Some(rec)))
+            case Some(entries) if entries.isEmpty =>
+              Seq(R(file, idx, None, "empty", None, None, None, None))
+            case Some(entries) => entries.flatMap { case (k, f) =>
+              val kind = if (f.kind.isEmpty) "none" else f.kind
+              val n = f.kind match {
+                case "bytes" => f.bytess.size
+                case "float" => f.floatBits.size
+                case "int64" => f.ints.size
+                case _       => 0
+              }
+              if (n == 0)
+                Seq(R(file, idx, Some(k), kind, None, None, None, None))
+              else f.kind match {
+                case "int64" => f.ints.zipWithIndex.map { case (v, i) =>
+                  R(file, idx, Some(k), kind, Some(i), Some(v), None,
+                    None) }
+                case "float" => f.floatBits.zipWithIndex.map { case (v, i) =>
+                  R(file, idx, Some(k), kind, Some(i), None, Some(v),
+                    None) }
+                case _ => f.bytess.zipWithIndex.map { case (v, i) =>
+                  R(file, idx, Some(k), kind, Some(i), None, None,
+                    Some(v)) }
               }
             }
           }
-      }.toDF("file", "rec_idx", "key", "kind", "elem_idx",
-        "int_val", "float_bits", "bytes_val")
+        }
+    }
   }
 
   /** Row shape of [[decodeTfRecordBatch]] — one feature element. */

@@ -522,41 +522,36 @@ object StreamingPipelines {
     * carries both. The skip contract composes: a corrupt SHARD drops
     * whole, an undecodable or unpaired MEMBER drops that sample, and
     * neither kills the stream. */
-  def decodeWebdatasetBatch(batch: DataFrame): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch.select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val shard = path.substring(path.lastIndexOf('/') + 1)
-        graft.sources.TarCodec.decode(bytes) match {
-          case None => Seq.empty // corrupt shard: skip, not kill
-          case Some(members) =>
-            // webdataset key: basename AFTER the last '/', up to the
-            // first '.' — real shards (tar -cf shard.tar .) prefix
-            // members with "./", which a naive takeWhile would
-            // collapse into one group and silently mispair
-            def sampleKey(n: String): String =
-              n.substring(n.lastIndexOf('/') + 1).takeWhile(_ != '.')
-            members.groupBy(m => sampleKey(m.name)).toSeq
-              .filter(_._1.nonEmpty) // directory entries / dotfiles
-              .sortBy(_._1)
-              .flatMap { case (sample, ms) =>
-                for {
-                  txt <- ms.find(_.name.endsWith(".txt"))
-                  jpg <- ms.find(_.name.endsWith(".jpg"))
-                  img <- graft.sources.JpegCodec.decode(jpg.data)
-                } yield {
-                  var px = 0L
-                  var i = 0
-                  while (i < img.pixels.length) { px += img.pixels(i) & 0xff; i += 1 }
-                  (shard, sample, txt.data.length, img.width, img.height,
-                    img.channels, px)
-                }
+  def decodeWebdatasetBatch(batch: DataFrame): DataFrame =
+    graft.sources.GeoIngest.decodeFiles(batch, "shard", "sample", "caption_bytes",
+        "width", "height", "channels", "px_sum") { (shard, bytes) =>
+      graft.sources.TarCodec.decode(bytes) match {
+        case None => Seq.empty // corrupt shard: skip, not kill
+        case Some(members) =>
+          // webdataset key: basename AFTER the last '/', up to the
+          // first '.' — real shards (tar -cf shard.tar .) prefix
+          // members with "./", which a naive takeWhile would
+          // collapse into one group and silently mispair
+          def sampleKey(n: String): String =
+            n.substring(n.lastIndexOf('/') + 1).takeWhile(_ != '.')
+          members.groupBy(m => sampleKey(m.name)).toSeq
+            .filter(_._1.nonEmpty) // directory entries / dotfiles
+            .sortBy(_._1)
+            .flatMap { case (sample, ms) =>
+              for {
+                txt <- ms.find(_.name.endsWith(".txt"))
+                jpg <- ms.find(_.name.endsWith(".jpg"))
+                img <- graft.sources.JpegCodec.decode(jpg.data)
+              } yield {
+                var px = 0L
+                var i = 0
+                while (i < img.pixels.length) { px += img.pixels(i) & 0xff; i += 1 }
+                (shard, sample, txt.data.length, img.width, img.height,
+                  img.channels, px)
               }
-        }
+            }
       }
-      .toDF("shard", "sample", "caption_bytes", "width", "height",
-        "channels", "px_sum")
-  }
+    }
 
   /** Webdataset shard stream — the LAION crawl AS A STREAM: tar
     * shards land in a directory, each micro-batch decodes its members

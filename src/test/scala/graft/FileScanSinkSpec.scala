@@ -227,13 +227,52 @@ class FileScanSinkSpec extends SparkSpec {
     val wav = ids(GeoIngest.readWavClips, "clip_", "wav",
       k => WavCodec.encode(8000 + k, 1, Array(1)), _.getInt(1) - 8000)
     // a Unicode-digit tail cannot be a file name under a POSIX-locale
-    // JVM, so the readers' parse of it is pinned on its own
-    val unicode = "\u0667".toLongOption.getOrElse(-1L)
+    // JVM, so it goes through the readers' one parse directly
+    val unicode = GeoIngest.fileId("tile_\u0667", "tile_")
     val pinned = Map("7" -> 7L, "-3" -> -3L, "+7" -> 7L, "007" -> 7L,
       "99999999999999999999" -> -1L, "" -> -1L, "x" -> -1L, "other_5" -> -1L)
     assert(tiff == pinned + ("clip_7" -> -1L), tiff)
     assert(npy == pinned + ("clip_7" -> -1L), npy)
     assert(wav == pinned + ("tile_7" -> -1L), wav)
     assert(unicode == 7L, unicode)
+  }
+
+  test("src/main has one batch binaryFile scan, one path/content decode and one _SUCCESS write") {
+    // each line with its comments stripped and every string literal
+    // emptied except the few these shapes are spelled with
+    val comment = """^\s*(\*|/\*|//)""".r
+    val literal = """"(?:[^"\\]|\\.)*"""".r
+    val kept = Set("\"binaryFile\"", "\"path\"", "\"content\"", "\"_SUCCESS\"")
+    val shapes = Seq(
+      // a streaming scan is `readStream.format(...)`: it stays apart
+      ("batch binaryFile scan", "GeoIngest.scala",
+        """\b(?!readStream\b)\w+\s*\.\s*format\s*\(\s*"binaryFile"\s*\)""".r),
+      ("path/content decode half", "GeoIngest.scala",
+        """select\s*\(\s*(?:col\s*\(\s*)?"path"\s*\)?\s*,\s*(?:col\s*\(\s*)?"content"""".r),
+      ("_SUCCESS marker", "Sinks.scala", "\"_SUCCESS\"".r))
+    val files = {
+      val s = Files.walk(Paths.get("src/main/scala"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sortBy(_.toString)
+      finally s.close()
+    }
+    assert(files.nonEmpty)
+    val code = files.map { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8").split("\n", -1).map { l =>
+        if (comment.findFirstIn(l).nonEmpty) ""
+        else literal.replaceAllIn(l, m =>
+          java.util.regex.Matcher.quoteReplacement(if (kept(m.matched)) m.matched else "\"\""))
+          .replaceAll("//.*", "")
+      }.mkString("\n")
+      f.getFileName.toString -> text
+    }
+    val found = shapes.flatMap { case (shape, home, re) =>
+      val sites = code.flatMap { case (name, text) =>
+        re.findAllMatchIn(text).map(m => (name, text.substring(0, m.start).count(_ == '\n') + 1))
+      }
+      if (sites.size == 1 && sites.head._1 == home) Nil
+      else s"${sites.size} of $shape (one, in $home, allowed):" +:
+        sites.map { case (n, l) => s"  $n:$l" }
+    }
+    if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
   }
 }
