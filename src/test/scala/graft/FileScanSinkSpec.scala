@@ -34,6 +34,13 @@ class FileScanSinkSpec extends SparkSpec {
       Sha256.hex(fs.map(p => Files.readAllBytes(p)))
   }
 
+  /** Fails on every `name -> value` of `got` that `expected` does not
+    * hold, listing each one that differs. */
+  private def assertPinned(expected: Map[String, String], got: Seq[(String, String)]): Unit = {
+    val bad = got.filterNot { case (n, v) => expected.get(n).contains(v) }
+    assert(bad.isEmpty, bad.map { case (n, v) => s"""  "$n" -> "$v",""" }.mkString("\n", "\n", ""))
+  }
+
   private def tmp(tag: String): String = Files.createTempDirectory(s"graft_$tag").toString
 
   /** Each writer on its fixed input, written once: name → directory. */
@@ -100,9 +107,7 @@ class FileScanSinkSpec extends SparkSpec {
       "tfrecord" -> "_SUCCESS,shard_0_0.tfrecord,shard_0_1.tfrecord,shard_1_0.tfrecord,shard_1_1.tfrecord 21c139aa19e1551b76873069a168e2240c2535f71c02c60a98d366ec39acc252",
       "tiff" -> "_SUCCESS,tile_-5.tif,tile_1.tif,tile_2.tif,tile_3.tif 4887a68e768225bbd2bb19493f1ebf770561bb1b3dd6a964873c0c29fb372cfe",
       "wav" -> "_SUCCESS,clip_1.wav,clip_2.wav 9805beb6e4ab1c16e35c8ce524e90b1b667d260abf6708ecafa8fe9daea0f223")
-    val got = sunk.toSeq.sortBy(_._1).map { case (n, d) => n -> pin(d) }
-    val bad = got.filterNot { case (n, p) => expected.get(n).contains(p) }
-    assert(bad.isEmpty, bad.map { case (n, p) => s"""  "$n" -> "$p",""" }.mkString("\n", "\n", ""))
+    assertPinned(expected, sunk.toSeq.sortBy(_._1).map { case (n, d) => n -> pin(d) })
   }
 
   /** A copy of one sink's output plus the given extra files. */
@@ -148,9 +153,7 @@ class FileScanSinkSpec extends SparkSpec {
       "readWavClips" -> "2:1f89dbc571887d65dadc75db835b0b3f",
       "readJsonlGz" -> "7:7cca0e28a62bbc010dc1480709431f5f",
       "readTarShards" -> "13:d7aabd6002c3673d0dff809df2d6ce4b")
-    val got = readers.map { case (n, df) => n -> RowDigest.of(df) }
-    val bad = got.filterNot { case (n, d) => expected.get(n).contains(d) }
-    assert(bad.isEmpty, bad.map { case (n, d) => s"""  "$n" -> "$d",""" }.mkString("\n", "\n", ""))
+    assertPinned(expected, readers.map { case (n, df) => n -> RowDigest.of(df) })
   }
 
   test("every fixture-backed binaryFile reader gives its pinned rows") {
@@ -205,9 +208,7 @@ class FileScanSinkSpec extends SparkSpec {
       "readExifFiles q_exif_meta" -> "35:cd5ef615f9b0646264d17a9543d9755d",
       "readSubtitleFiles q_vtt_cues" -> "19:9937a02939d93c76f1873f14ac7a3736",
       "readTfRecordFiles q_tfrecord_read" -> "48:db933d1630d781989e4ae398fc1bf6ab")
-    val got = readers.map { case (n, read, q) => s"$n $q" -> RowDigest.of(read(spark, fx(q))) }
-    val bad = got.filterNot { case (n, d) => expected.get(n).contains(d) }
-    assert(bad.isEmpty, bad.map { case (n, d) => s"""  "$n" -> "$d",""" }.mkString("\n", "\n", ""))
+    assertPinned(expected, readers.map { case (n, read, q) => s"$n $q" -> RowDigest.of(read(spark, fx(q))) })
   }
 
   test("tile_ and clip_ file ids parse alike in the tiff, npy and wav readers") {
