@@ -94,12 +94,17 @@ object GeoIngest {
   }
 
   /** The id in a `<prefix><id>` file name (suffix already stripped):
-    * the tail as a Long — signs, leading zeros and Unicode digits
-    * parse — or -1 for another prefix or a tail that is not a Long
-    * (empty, non-numeric, 20+ digits), never a failed scan. */
+    * the tail as a Long when it is that Long's own rendering, as the
+    * writers name files (`s"$id"`, negatives included), or -1 for
+    * another prefix or any other tail (empty, non-numeric, 20+ digits,
+    * a `+` sign, leading zeros, non-ASCII digits), never a failed scan.
+    * So two distinct names never share an id. */
   private[graft] def fileId(name: String, prefix: String): Long =
-    if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption.getOrElse(-1L)
-    else -1L
+    if (!name.startsWith(prefix)) -1L
+    else {
+      val tail = name.stripPrefix(prefix)
+      tail.toLongOption.filter(_.toString == tail).getOrElse(-1L)
+    }
 
   /** GeoTIFF FILE ingest (SURVEY §2.1 "GeoTIFF read", the rasterio
     * path process_data.py:64-66): `.tif` files decoded with

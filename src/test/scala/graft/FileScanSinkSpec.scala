@@ -230,12 +230,12 @@ class FileScanSinkSpec extends SparkSpec {
     // a Unicode-digit tail cannot be a file name under a POSIX-locale
     // JVM, so it goes through the readers' one parse directly
     val unicode = GeoIngest.fileId("tile_\u0667", "tile_")
-    val pinned = Map("7" -> 7L, "-3" -> -3L, "+7" -> 7L, "007" -> 7L,
+    val pinned = Map("7" -> 7L, "-3" -> -3L, "+7" -> -1L, "007" -> -1L,
       "99999999999999999999" -> -1L, "" -> -1L, "x" -> -1L, "other_5" -> -1L)
     assert(tiff == pinned + ("clip_7" -> -1L), tiff)
     assert(npy == pinned + ("clip_7" -> -1L), npy)
     assert(wav == pinned + ("tile_7" -> -1L), wav)
-    assert(unicode == 7L, unicode)
+    assert(unicode == -1L, unicode)
   }
 
   test("src/main has one batch binaryFile scan, one path/content decode and one _SUCCESS write") {
