@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Loaders for the driver-generated synthetic tables (see TESTDATA.md).
   *
@@ -11,8 +17,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator layer assumes single-file inputs.
   */
 object Tables {
+  /** A batch parquet read that starts no Spark job: the schema is the
+    * footer schema of the first data file, read on the driver, which is
+    * the file Spark's own inference reads without `mergeSchema` (sorted
+    * path order, `_`/`.` names skipped). The converter is built from the
+    * session conf at call time, so it sees settings such as `events`'
+    * `nanosAsLong`. `path` is one parquet file or a flat directory of
+    * them; a partitioned directory is read with `spark.read.parquet`. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val (dirs, files) = root.getFileSystem(conf).listStatus(root)
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .partition(_.isDirectory)
+    require(dirs.isEmpty, s"$path holds directories; read a partitioned table with spark.read.parquet")
+    val first = files.sortBy(_.getPath.toString).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")

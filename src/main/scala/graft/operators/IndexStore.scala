@@ -114,7 +114,7 @@ object IndexStore {
         if (Files.exists(tmp)) rm(tmp.toFile) // crashed-build debris
       }
     }
-    spark.read.parquet(dir.toString)
+    graft.Tables.parquet(spark, dir.toString)
   }
 
   /** Drop one stored artifact (rebuild hygiene — e.g. after the

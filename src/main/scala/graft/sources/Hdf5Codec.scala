@@ -485,6 +485,10 @@ object Hdf5Codec {
     private val cStr = strides(chunkDims)
     val chunkElems: Int = chunkDims.product.toInt
     val fullChunkBytes: Int = chunkElems * width
+    // one inflater for every chunk, reset per chunk; the assembler's
+    // owner ends it
+    private val inf = new java.util.zip.Inflater()
+    def end(): Unit = inf.end()
 
     /** Byte-unshuffle: stored layout groups byte j of every element
       * together (out(i*w + j) = in(j*n + i)). Length-preserving. */
@@ -517,8 +521,8 @@ object Hdf5Codec {
           filters(fi) match {
             case 1 => // deflate: inflate to exactly the full chunk size
               if (data != null) return false // deflate must see stored bytes
-              val inf = new java.util.zip.Inflater()
               try {
+                inf.reset()
                 inf.setInput(bytes, childAt.toInt, nbytes.toInt)
                 val outBuf = new Array[Byte](fullChunkBytes)
                 var got = 0
@@ -533,7 +537,7 @@ object Hdf5Codec {
                 data = outBuf
               } catch {
                 case _: java.util.zip.DataFormatException => return false
-              } finally inf.end()
+              }
             case 2 => // byte shuffle
               if (data == null) {
                 if (nbytes != fullChunkBytes) return false
@@ -793,8 +797,13 @@ object Hdf5Codec {
   private def readChunked(bytes: Array[Byte], btreeAt: Long, shape: Seq[Long],
       chunkDims: Seq[Long], width: Int, filters: Seq[Int]): Option[Array[Byte]] = {
     val asm = new ChunkAssembler(bytes, shape, chunkDims, width, filters)
+    try assembleChunked(asm, bytes, btreeAt) finally asm.end()
+  }
+
+  private def assembleChunked(asm: ChunkAssembler, bytes: Array[Byte],
+      btreeAt: Long): Option[Array[Byte]] = {
     if (!asm.valid) return None
-    val rank = shape.size
+    val rank = asm.rank
     val keySize = 8 + 8 * (rank + 1)
 
     // recursive node walk; the budgets make the worst hostile pointer
@@ -855,6 +864,11 @@ object Hdf5Codec {
   private def readChunkedV4(bytes: Array[Byte], infoAt: Long, shape: Seq[Long],
       chunkDims: Seq[Long], width: Int, filters: Seq[Int]): Option[Array[Byte]] = {
     val asm = new ChunkAssembler(bytes, shape, chunkDims, width, filters)
+    try assembleChunkedV4(asm, bytes, infoAt, shape, chunkDims, filters) finally asm.end()
+  }
+
+  private def assembleChunkedV4(asm: ChunkAssembler, bytes: Array[Byte], infoAt: Long,
+      shape: Seq[Long], chunkDims: Seq[Long], filters: Seq[Int]): Option[Array[Byte]] = {
     if (!asm.valid) return None
     if (asm.gridChunks > (1 << 20)) return None
 

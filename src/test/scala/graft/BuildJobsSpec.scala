@@ -20,60 +20,14 @@ class BuildJobsSpec extends SparkSpec {
 
   /** Queries whose warm build at sf0.001 starts at least one job. */
   private val starting = Set(
-    "q1_agg", "q_ab_test", "q_acf", "q_ann_recall", "q_ann_sign_lsh", "q_anomaly_zscore",
-    "q_arrow_roundtrip", "q_asof_backward", "q_asof_nearest", "q_assoc_rules", "q_attribution",
-    "q_auc", "q_audience_overlap", "q_band_join", "q_bfs_depth", "q_bigram_lm",
-    "q_bilinear_resample", "q_bitmap_index", "q_bitmask_qa", "q_bm25", "q_bm25_params",
-    "q_bpe_apply", "q_bpe_merges", "q_bpe_train", "q_bpe_train_32k", "q_bpe_train_scale",
-    "q_bpe_train_tokens", "q_calendar", "q_caption_align_scale", "q_centroid_assign",
-    "q_centroid_classify", "q_chi2", "q_chipping", "q_chunk_overlap", "q_class_balance",
-    "q_cluster_balance", "q_cms_guarantee", "q_column_profile", "q_corpus_curation",
-    "q_corr_stats", "q_cosine_topk", "q_cosine_topk_native", "q_count_gate", "q_cube",
-    "q_cusum", "q_cyclic_index", "q_data_mixture", "q_date_funcs", "q_dau_wau",
-    "q_decontaminate", "q_dedup_exact", "q_dedup_incremental", "q_dedup_keep", "q_degree_dist",
-    "q_density_cluster", "q_deterministic_shuffle", "q_distinct", "q_distinct_approx",
-    "q_doc_entropy", "q_dup_clusters", "q_dup_clusters_star", "q_embed_neardup",
-    "q_encoder_embed", "q_entity_resolution", "q_equidepth", "q_eval_metrics",
-    "q_eval_metrics_exact", "q_ewma", "q_explode_outer", "q_feature_hash",
-    "q_filter_predicates", "q_fingerprint", "q_first_composite", "q_focal_min",
-    "q_fp16_roundtrip", "q_frame_sample", "q_funnel", "q_fuzzy_join", "q_geo_cells",
-    "q_gif_roundtrip", "q_gopher_rules", "q_grouping_id", "q_grouping_sets",
-    "q_growth_accounting", "q_heavy_hitters", "q_hilbert", "q_histogram", "q_histogram_2d",
-    "q_hopping", "q_html_extract", "q_idw_interp", "q_image_decode", "q_incr_agg",
-    "q_info_gain", "q_input_assembly", "q_interpolate", "q_interval_overlap", "q_ivf_build",
-    "q_ivf_recall", "q_ivf_search", "q_ivfpq_search", "q_join_outer", "q_join_star",
-    "q_json_extract", "q_jsonl_gz", "q_kfold_ols", "q_kmeans_refine", "q_kmv_sketch",
-    "q_knn_classify", "q_knn_exact", "q_knn_k100_banded", "q_knn_k100_exact",
-    "q_knn_k20_banded", "q_knn_k20_exact", "q_knn_regress", "q_ks_test", "q_lang_id", "q_locf",
-    "q_lr_probe", "q_ltv_cohort", "q_macro_f1", "q_mad_outliers", "q_map_lookup",
-    "q_markov_transitions", "q_mask_generation", "q_max_concurrency", "q_media_features",
-    "q_media_manifest", "q_merge_scd1", "q_minhash_lsh", "q_minhash_lsh_xx", "q_mmr_rerank",
-    "q_mode_composite", "q_month_spine", "q_monthly_median", "q_mosaiks1d", "q_mp4_roundtrip",
-    "q_multi_count", "q_nb_lang", "q_netcdf_roundtrip", "q_ngram_jaccard", "q_normalize_bands",
-    "q_npy_roundtrip", "q_nullsafe_join", "q_ols_by_group", "q_pack_sequences", "q_pad_clip",
-    "q_pagerank", "q_pca_power", "q_pdf_roundtrip", "q_percentile_disc", "q_pii_scan",
-    "q_pivot", "q_pmi_tokens", "q_png_decode", "q_pq_search", "q_pq_search_fast",
-    "q_pq_search_trained", "q_prefix_filter_join", "q_quad_pyramid", "q_quality_score",
-    "q_quantile_sketch", "q_quantiles", "q_regression_metrics", "q_repetition", "q_reproject",
-    "q_reproject_to_utm", "q_reproject_utm", "q_resize_features", "q_resurrection",
-    "q_retention", "q_retrieval_eval", "q_rf_vote", "q_rfm", "q_robots_filter",
-    "q_robots_filter_scale", "q_rolling_range", "q_rollup", "q_rrf_fusion", "q_rrf_recall",
-    "q_safetensors_roundtrip", "q_salted_join", "q_scale_normalize", "q_scaling_probe",
-    "q_scd2", "q_seasonal_naive", "q_semdedup", "q_semi_anti", "q_sentence_dedup",
-    "q_sentences", "q_sessionize", "q_setops", "q_share_of_region", "q_shuffle_rank",
-    "q_simhash", "q_skyline", "q_sort_limit", "q_span_dedup", "q_spatial_join",
-    "q_stratified_split", "q_string_agg", "q_string_funcs", "q_sufficient_stats",
-    "q_suffstats_typed", "q_tar_shards", "q_terrain", "q_terrain_gradient", "q_tfidf",
-    "q_tiff_decode", "q_tiff_deflate", "q_tiff_georef", "q_tiff_lzw", "q_token_stats",
-    "q_top_movers", "q_topk_per_group", "q_tpch_q1", "q_tpch_q10", "q_tpch_q11", "q_tpch_q12",
-    "q_tpch_q13", "q_tpch_q14", "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q21", "q_tpch_q22", "q_tpch_q3",
-    "q_tpch_q4", "q_tpch_q5", "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_triangles",
-    "q_unicode_norm", "q_unigram_typicality", "q_union_sensors", "q_unpivot", "q_url_normalize",
-    "q_vector_stats", "q_veg_indices", "q_veg_indices_rows", "q_view_to_purchase",
-    "q_vocab_topk", "q_wav_features", "q_webdataset", "q_webdataset_jpeg", "q_weighted_sample",
-    "q_wikitext_clean", "q_window_distinct", "q_window_ranks", "q_window_running",
-    "q_winsorize", "q_wow_growth", "q_zipf_fit", "q_zorder")
+    "q_assoc_rules", "q_auc", "q_audience_overlap", "q_bfs_depth", "q_bigram_lm",
+    "q_bitmap_index", "q_bpe_train_32k", "q_bpe_train_scale", "q_cms_guarantee",
+    "q_density_cluster", "q_deterministic_shuffle", "q_dup_clusters", "q_dup_clusters_star",
+    "q_embed_neardup", "q_entity_resolution", "q_equidepth", "q_heavy_hitters",
+    "q_interval_overlap", "q_kmeans_refine", "q_ks_test", "q_macro_f1", "q_max_concurrency",
+    "q_minhash_lsh", "q_minhash_lsh_xx", "q_mmr_rerank", "q_nb_lang", "q_ngram_jaccard",
+    "q_pagerank", "q_pca_power", "q_retrieval_eval", "q_robots_filter", "q_rrf_recall",
+    "q_shuffle_rank", "q_simhash", "q_triangles")
 
   test("only the allowlisted queries start a Spark job while they are built") {
     val queries = SparkEntry.queries

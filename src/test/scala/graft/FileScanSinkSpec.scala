@@ -239,10 +239,6 @@ class FileScanSinkSpec extends SparkSpec {
   }
 
   test("src/main has one batch binaryFile scan, one path/content decode and one _SUCCESS write") {
-    // each line with its comments stripped and every string literal
-    // emptied except the few these shapes are spelled with
-    val comment = """^\s*(\*|/\*|//)""".r
-    val literal = """"(?:[^"\\]|\\.)*"""".r
     val kept = Set("\"binaryFile\"", "\"path\"", "\"content\"", "\"_SUCCESS\"")
     val shapes = Seq(
       // a streaming scan is `readStream.format(...)`: it stays apart
@@ -251,25 +247,9 @@ class FileScanSinkSpec extends SparkSpec {
       ("path/content decode half", "GeoIngest.scala",
         """select\s*\(\s*(?:col\s*\(\s*)?"path"\s*\)?\s*,\s*(?:col\s*\(\s*)?"content"""".r),
       ("_SUCCESS marker", "Sinks.scala", "\"_SUCCESS\"".r))
-    val files = {
-      val s = Files.walk(Paths.get("src/main/scala"))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sortBy(_.toString)
-      finally s.close()
-    }
-    assert(files.nonEmpty)
-    val code = files.map { f =>
-      val text = new String(Files.readAllBytes(f), "UTF-8").split("\n", -1).map { l =>
-        if (comment.findFirstIn(l).nonEmpty) ""
-        else literal.replaceAllIn(l, m =>
-          java.util.regex.Matcher.quoteReplacement(if (kept(m.matched)) m.matched else "\"\""))
-          .replaceAll("//.*", "")
-      }.mkString("\n")
-      f.getFileName.toString -> text
-    }
+    val code = SourceScan.code(kept)
     val found = shapes.flatMap { case (shape, home, re) =>
-      val sites = code.flatMap { case (name, text) =>
-        re.findAllMatchIn(text).map(m => (name, text.substring(0, m.start).count(_ == '\n') + 1))
-      }
+      val sites = SourceScan.sites(code, re)
       if (sites.size == 1 && sites.head._1 == home) Nil
       else s"${sites.size} of $shape (one, in $home, allowed):" +:
         sites.map { case (n, l) => s"  $n:$l" }
