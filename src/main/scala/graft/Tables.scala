@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   * DataFrames as inputs; at 100 TB the same loaders would point at a
   * partitioned table root (`PARTITIONED BY (date_month, tile)`) and
   * Catalyst partition pruning keeps scans bounded — nothing in the
-  * operator layer assumes single-file inputs.
+  * operator layer assumes single-file inputs. Such a root needs
+  * partition discovery, which [[parquet]] refuses rather than skips.
   */
 object Tables {
   /** A batch parquet read that starts no Spark job: the schema is the

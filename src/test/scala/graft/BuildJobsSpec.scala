@@ -1,6 +1,6 @@
 package graft
 
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 
 /** Building a query is declarative: `fn(spark, dir)` should return a
   * plan and start no Spark job; only the action does work. This pins
@@ -34,17 +34,18 @@ class BuildJobsSpec extends SparkSpec {
     def jobs(q: String): Try[Int] = Try(JobCount.during(spark)(queries(q)(spark, dir))._2)
     val t0 = System.nanoTime()
     val built = queries.keys.toSeq.sorted.map { q =>
-      q -> jobs(q).flatMap(n => if (n == 0) Try(0) else jobs(q))
+      q -> jobs(q).flatMap(n => if (n == 0) Success(0) else jobs(q))
     }
     info(f"${built.size} queries built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    val failed = built.collect { case (q, scala.util.Failure(e)) => s"  $q: $e" }
-    val starts = built.collect { case (q, scala.util.Success(n)) if n > 0 => q }.toSet
+    val failed = built.collect { case (q, Failure(e)) => s"$q: $e" }
+    val starts = built.collect { case (q, Success(n)) if n > 0 => q }.toSet
     val added = (starts -- starting).toSeq.sorted
     val left = (starting -- starts).toSeq.sorted
-    val msg =
-      (if (failed.isEmpty) Nil else "build failed:" +: failed) ++
-        (if (added.isEmpty) Nil else s"${added.size} start a job, not in `starting`:" +: added.map("  " + _)) ++
-        (if (left.isEmpty) Nil else s"${left.size} in `starting` start none (remove them):" +: left.map("  " + _))
+    def section(title: String, lines: Seq[String]) =
+      if (lines.isEmpty) Nil else s"${lines.size} $title:" +: lines.map("  " + _)
+    val msg = section("failed to build", failed) ++
+      section("start a job, not in `starting`", added) ++
+      section("in `starting` start none (remove them)", left)
     if (msg.nonEmpty) fail(msg.mkString("\n", "\n", ""))
   }
 }

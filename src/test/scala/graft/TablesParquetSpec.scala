@@ -14,15 +14,13 @@ import graft.operators.IndexStore
 class TablesParquetSpec extends SparkSpec {
 
   private val sfDirs = Seq("sf0.001", "sf0.01", "sf0.1").map("/root/testdata/" + _)
-  private val tables = Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-    "region", "events", "documents", "embeddings")
-
   private val loads = Seq[(String, String => Unit)](
     "lineitem" -> (Tables.lineitem(spark, _)), "orders" -> (Tables.orders(spark, _)),
     "customer" -> (Tables.customer(spark, _)), "supplier" -> (Tables.supplier(spark, _)),
     "part" -> (Tables.part(spark, _)), "nation" -> (Tables.nation(spark, _)),
     "region" -> (Tables.region(spark, _)), "events" -> (Tables.events(spark, _)),
     "documents" -> (Tables.documents(spark, _)), "embeddings" -> (Tables.embeddings(spark, _)))
+  private val tables = loads.map(_._1)
 
   /** A multi-file IndexStore artifact with nested, non-nullable and
     * metadata-carrying columns, and the directory it is stored in. */
