@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -35,6 +37,11 @@ package graft
   *    detail file and the printed line carries the total, so a
   *    number that REMAINS inflated is visibly flagged rather than
   *    silently trusted.
+  *
+  * Every timed or warmed run goes through [[timeQuery]]: the query is
+  * built inside the timer and written to the noop sink, so every
+  * output column is computed (a `count()` lets Catalyst prune the
+  * projections it does not need and times a different program).
   *
   * A warmup query runs first (untimed) so the first measured query
   * doesn't absorb JVM/codegen/session startup; queries run in sorted
@@ -135,6 +142,18 @@ object Bench {
     else Map.empty
   }
 
+  /** Seconds to build `fn(spark, dir)` and write every row and column
+    * of it to the noop sink. The build is inside the timer because
+    * iterative operators run their driver loops while the query is
+    * built. A query that throws propagates; callers decide what an
+    * error counts as. */
+  private[graft] def timeQuery(
+      spark: SparkSession, fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Cumulative hypervisor steal ticks (USER_HZ, summed over all
     * cpus) from /proc/stat — field 8 of the aggregate "cpu" line.
     * -1 when unreadable (non-Linux): every consumer treats that as
@@ -164,7 +183,7 @@ object Bench {
     val spark = Sessions.local(cpus)
     require(SparkEntry.queries.contains("q1_agg"), "warmup query q1_agg is not declared")
     // warmup: a representative agg touches parquet read + shuffle + codegen paths
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
+    try timeQuery(spark, SparkEntry.queries("q1_agg"), sfDir)
     catch { case _: Throwable => () }
 
     // local-iteration filter (the driver never sets it): time just the
@@ -174,13 +193,12 @@ object Bench {
       .map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def pass(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)]):
+    // a run that throws records -1 seconds beside its error class
+    def pass(qs: Seq[(String, (SparkSession, String) => DataFrame)]):
         Map[String, (Double, Option[String], Double)] = qs.map { case (name, fn) =>
       val s0 = stealTicks()
-      val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None }
-                catch { case e: Throwable => Some(e.getClass.getSimpleName) }
-      val t = (System.nanoTime() - t0) / 1e9
+      val (t, err) = try (timeQuery(spark, fn, sfDir), None)
+                     catch { case e: Throwable => (-1.0, Some(e.getClass.getSimpleName)) }
       name -> ((t, err, stealSec(s0, stealTicks())))
     }.toMap
     // pass 2 runs in REVERSE order: external noise on a shared box
@@ -218,10 +236,8 @@ object Bench {
         val needsRetry = (t: Double) =>
           err.isEmpty && reference.get(name).exists(r => t > 3 * r && t > 0.5)
         while (needsRetry(cur) && retries < 2) {
-          val t0 = System.nanoTime()
-          val ok = try { byName(name)(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          if (ok) cur = math.min(cur, (System.nanoTime() - t0) / 1e9)
+          try cur = math.min(cur, timeQuery(spark, byName(name), sfDir))
+          catch { case _: Throwable => () }
           retries += 1
         }
         (name, cur, err, retries)
@@ -241,10 +257,8 @@ object Bench {
     val controlSec: Double = SparkEntry.queries.get(ControlQuery) match {
       case Some(fn) =>
         try {
-          if (!ordered.exists(_._1 == ControlQuery)) fn(spark, sfDir).count()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
+          if (!ordered.exists(_._1 == ControlQuery)) timeQuery(spark, fn, sfDir)
+          timeQuery(spark, fn, sfDir)
         } catch { case _: Throwable => -1.0 }
       case None => -1.0
     }

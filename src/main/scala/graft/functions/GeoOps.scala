@@ -58,13 +58,4 @@ object GeoOps {
       (cos(lat * rad) * sin(lon * rad)).as("cart_y"),
       sin(lat * rad).as("cart_z"))
   }
-
-  /** Approximate square-buffer bounds (the reference's
-    * centroid_to_square, monthly.py:147-161): half-side in degrees of
-    * latitude and of longitude at the given reference-latitude
-    * cosine. Returns (dLatDeg, dLonDeg). */
-  def squareHalfExtentDeg(sideMeters: Double, cosRefLat: Double): (Double, Double) = {
-    val half = sideMeters / 2.0 / 1000.0
-    (half / KmPerDegLat, half / (KmPerDegLat * cosRefLat))
-  }
 }

@@ -836,8 +836,8 @@ object VectorQueries {
     pqQdAgainst(pqExp(Tables.embeddings(spark, dir)),
       pqTrainedCodebook(spark, dir))
 
-  /** Declared-path codes under the trained codebook (for the
-    * PqFastSpec identity pin). */
+  /** Declared-path codes under the trained codebook (PqFastSpec's
+    * "training moves the codebook" case). */
   private[graft] def pqCodesQuantizedTrained(spark: SparkSession, dir: String): DataFrame =
     argminCodes(pqQdTrained(spark, dir))
 
@@ -896,33 +896,6 @@ object VectorQueries {
   def qPqSearchTrained(spark: SparkSession, dir: String): DataFrame = {
     val qd = pqQdTrained(spark, dir)
     adcSearch(argminCodes(qd), qd)
-  }
-
-  /** Engine fast encoder under the TRAINED codebook: the
-    * [[pqCodesFast]] slice-and-fold shape, but trained centroids are
-    * quantized-mean DOUBLES (not float-representable), so the fused
-    * distance kernel is the codegen'd zip_with/aggregate fold over
-    * ARRAY<DOUBLE> instead of `l2_sq`'s ARRAY<FLOAT>. Raw-double
-    * argmin with code tie-break — equal codes to the declared
-    * quantized path unless two centroids sit within ~1e-9 of the
-    * same distance (PqFastSpec pins equality on the fixtures). */
-  private[graft] def pqCodesFastTrained(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val slices = "transform(sequence(0, 7), s -> slice(embedding, s * 8 + 1, 8))"
-    val subs = e.select(col("vec_id"), posexplode(expr(slices)).as(Seq("sub", "svec")))
-    val cvecs = pqTrainedCodebook(spark, dir)
-      .groupBy(col("code"), expr("CAST(pos DIV 8 AS INT)").as("sub"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("cvec"))
-    val wEnc = Window.partitionBy(col("vec_id"), col("sub"))
-      .orderBy(col("d"), col("code"))
-    subs.join(broadcast(cvecs), Seq("sub"))
-      .withColumn("d", expr(
-        """aggregate(zip_with(svec, cvec,
-          |  (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
-          |  0.0D, (a, b) -> a + b)""".stripMargin))
-      .withColumn("rk", row_number().over(wEnc))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("sub"), col("code"))
   }
 
   val qPqSearchSql: String =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Scale checkpoint: measure each selected query at sf0.1 AND at the
   * derived sf1 (10× rows, [[ScaleGen]]) back-to-back in ONE JVM, and
@@ -10,9 +10,10 @@ import graft.{Sessions, SparkEntry}
   * (first run per scale also absorbs codegen). Writes
   * `BENCH_sf1_r14.json` and prints one summary JSON line.
   *
-  * Coverage: every declared query EXCEPT the five golden-pinned ones
+  * Coverage: every declared query EXCEPT the [[GoldenPinned]] ones
   * (committed foreign fixtures whose size does not scale with SF) —
-  * the complement is pinned by ScaleBenchSpec.
+  * the complement is pinned by ScaleBenchSpec. Each run is timed by
+  * [[graft.Bench.timeQuery]] (build plus noop sink).
   *
   * Exponent semantics: e = log(t_big/t_small) / log(10) — 1.0 is
   * perfectly linear in rows, < 1 means fixed per-query overhead still
@@ -21,108 +22,24 @@ import graft.{Sessions, SparkEntry}
   * artifacts) legitimately sit far below 1.
   */
 object ScaleBench {
-  private[graft] val Selected: Seq[String] = Seq(
-    // top-30 by committed reference time
-    "q_dup_clusters_star", "q_entity_resolution", "q_bfs_depth",
-    "q_fuzzy_join", "q_pagerank", "q_max_concurrency", "q_mmr_rerank",
-    "q_dup_clusters", "q_triangles", "q_ngram_jaccard", "q_degree_dist",
-    "q_assoc_rules", "q_density_cluster", "q_minhash_lsh_xx",
-    "q_eval_metrics", "q_simhash", "q_nb_lang", "q_bpe_apply",
-    "q_top_movers", "q_rrf_recall", "q_minhash_lsh",
-    "q_prefix_filter_join", "q_decontaminate", "q_bigram_lm",
-    "q_ivfpq_search", "q_pca_power", "q_retrieval_eval",
-    "q_heavy_hitters", "q_eval_metrics_exact", "q_rrf_fusion",
-    // mandated families + drift re-baselines + core relational
-    "q_ks_test", "q_cluster_balance", "q_ivf_build", "q_ivf_search",
-    "q_pq_search", "q_semdedup", "q_embed_neardup", "q_span_dedup",
-    "q_dedup_exact", "q_cosine_topk_native", "q_knn_classify",
-    "q1_agg", "q_join_star", "q_monthly_median", "q_window_running",
-    "q_sessionize", "q_tfidf", "q_bm25", "q_token_stats", "q_gopher_rules",
-    // round-20: the CPU-bound core-scaling probe — per-row digest
-    // chain over lineitem, expected ~linear in rows
-    "q_scaling_probe",
-    // round-12 corpus-dependent additions (container encode/decode per
-    // source group — expected ~linear in corpus bytes)
-    "q_webdataset", "q_netcdf_roundtrip",
-    // round-13 widening to the full corpus-driven surface (verdict
-    // ask: ≥100 queries in the measured decade).
-    // TPC-H, all 22 shapes:
-    "q_tpch_q1", "q_tpch_q2", "q_tpch_q3", "q_tpch_q4", "q_tpch_q5",
-    "q_tpch_q6", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9", "q_tpch_q10",
-    "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q14", "q_tpch_q15",
-    "q_tpch_q16", "q_tpch_q17", "q_tpch_q18", "q_tpch_q19", "q_tpch_q20",
-    "q_tpch_q21", "q_tpch_q22",
-    // text-quality / curation tier:
-    "q_lang_id", "q_pii_scan", "q_repetition", "q_doc_entropy",
-    "q_unigram_typicality", "q_quality_score", "q_pmi_tokens",
-    "q_chunk_overlap", "q_data_mixture", "q_corpus_curation",
-    "q_pack_sequences", "q_dedup_keep", "q_dedup_incremental",
-    "q_fingerprint", "q_feature_hash", "q_vocab_topk", "q_bpe_merges",
-    "q_zipf_fit", "q_webdataset_jpeg",
-    // analytics / funnels:
-    "q_dau_wau", "q_retention", "q_funnel", "q_attribution", "q_rfm",
-    "q_ltv_cohort", "q_growth_accounting", "q_resurrection",
-    "q_wow_growth", "q_markov_transitions", "q_view_to_purchase",
-    "q_audience_overlap", "q_interval_overlap", "q_multi_count",
-    // stats tier:
-    "q_quantiles", "q_histogram", "q_histogram_2d", "q_equidepth",
-    "q_corr_stats", "q_chi2", "q_info_gain", "q_mad_outliers",
-    "q_winsorize", "q_anomaly_zscore", "q_cusum", "q_ewma",
-    "q_ols_by_group", "q_kfold_ols", "q_ab_test",
-    // windows / time series:
-    "q_window_ranks", "q_window_distinct", "q_rolling_range", "q_locf",
-    "q_interpolate", "q_scd2", "q_hopping", "q_asof_nearest",
-    "q_asof_backward", "q_topk_per_group",
-    // ML / vector tier:
-    "q_knn_k20_banded", "q_knn_k100_banded", "q_knn_regress",
-    "q_knn_exact", "q_lr_probe", "q_rf_vote", "q_centroid_assign",
-    "q_kmeans_refine", "q_stratified_split", "q_class_balance",
-    "q_ann_sign_lsh", "q_cosine_topk", "q_ann_recall", "q_ivf_recall",
-    "q_pq_search_fast", "q_pq_search_trained", "q_kmv_sketch",
-    "q_quantile_sketch", "q_distinct", "q_distinct_approx",
-    // core relational shapes:
-    "q_join_outer", "q_semi_anti", "q_setops", "q_salted_join",
-    "q_band_join", "q_nullsafe_join", "q_sort_limit", "q_string_agg",
-    "q_filter_predicates", "q_month_spine", "q_calendar",
-    // round-14 widening to the WHOLE declared surface except the five
-    // golden-pinned queries (q_hdf5_read, q_jpeg_decode,
-    // q_jpeg_progressive, q_warc_extract, q_jsonl_zst) whose input is
-    // a committed foreign fixture that does not scale with SF — see
-    // SCALE.md's exemption table. Everything below reads the sfDir
-    // corpus (the container-codec rows synthesize their containers
-    // FROM corpus tables, so decode cost does scale with SF):
-    "q_acf", "q_auc", "q_bilinear_resample", "q_bitmap_index",
-    "q_bitmask_qa", "q_bm25_params", "q_bpe_train",
-    "q_bpe_train_tokens", "q_bpe_train_scale", "q_bpe_train_32k",
-    "q_centroid_classify",
-    "q_chipping", "q_cms_guarantee", "q_column_profile", "q_count_gate",
-    "q_cube", "q_cyclic_index", "q_date_funcs",
-    "q_deterministic_shuffle", "q_encoder_embed", "q_explode_outer",
-    "q_first_composite", "q_focal_min", "q_fp16_roundtrip",
-    "q_frame_sample", "q_geo_cells", "q_grouping_id", "q_grouping_sets",
-    "q_hilbert", "q_html_extract", "q_wikitext_clean", "q_unicode_norm",
-    "q_sentences", "q_sentence_dedup", "q_gif_roundtrip",
-    "q_safetensors_roundtrip", "q_arrow_roundtrip",
-    "q_mp4_roundtrip", "q_pdf_roundtrip", "q_idw_interp",
-    "q_robots_filter_scale", "q_caption_align_scale",
-    "q_image_decode", "q_incr_agg",
-    "q_input_assembly", "q_json_extract", "q_jsonl_gz",
-    "q_knn_k100_exact", "q_knn_k20_exact", "q_macro_f1",
-    "q_mae_reconstruct", "q_map_lookup", "q_mask_generation",
-    "q_media_features", "q_media_manifest", "q_merge_scd1",
-    "q_mode_composite", "q_mosaiks1d", "q_normalize_bands",
-    "q_npy_roundtrip", "q_pad_clip", "q_percentile_disc", "q_pivot",
-    "q_png_decode", "q_quad_pyramid", "q_regression_metrics",
-    "q_reproject", "q_reproject_to_utm", "q_reproject_utm",
-    "q_resize_features", "q_rollup", "q_scale_normalize",
-    "q_seasonal_naive", "q_share_of_region", "q_shuffle_rank",
-    "q_skyline", "q_spatial_join", "q_string_funcs",
-    "q_sufficient_stats", "q_suffstats_typed", "q_tar_shards",
-    "q_terrain", "q_terrain_gradient", "q_tiff_decode",
-    "q_tiff_deflate", "q_tiff_georef", "q_tiff_lzw", "q_union_sensors",
-    "q_unpivot", "q_url_normalize", "q_vector_stats", "q_veg_indices",
-    "q_veg_indices_rows", "q_wav_features", "q_weighted_sample",
-    "q_zorder")
+  /** Queries whose input is a committed foreign fixture that does not
+    * scale with SF, so a decade exponent would measure the fixture,
+    * not the operator. Each has a row in SCALE.md's "Golden-pinned
+    * exemptions" table; a new query is measured unless it joins both. */
+  private[graft] val GoldenPinned: Set[String] = Set(
+    "q_hdf5_read", "q_jpeg_decode", "q_jpeg_progressive",
+    "q_jpeg_lossless", "q_jpeg12", "q_jpeg_arith", "q_warc_extract",
+    "q_wet_extract", "q_wat_extract", "q_jsonl_zst", "q_tfrecord_read",
+    "q_zip_scan", "q_avro_read", "q_safetensors_read", "q_arrow_read",
+    "q_jsonl_bz2", "q_gif_decode", "q_wiki_pages", "q_wiki_clean",
+    "q_bmp_decode", "q_gif_frames", "q_mp4_samples", "q_vtt_cues",
+    "q_caption_align", "q_exif_meta", "q_exif_gps", "q_pdf_text",
+    "q_flac_meta", "q_id3_tags", "q_robots_rules", "q_robots_filter",
+    "q_webp_meta", "q_avif_meta", "q_opus_meta")
+
+  /** Every declared query except the golden-pinned ones, sorted. */
+  private[graft] val Selected: Seq[String] =
+    (SparkEntry.queries.keySet -- GoldenPinned).toSeq.sorted
 
   def main(args: Array[String]): Unit = {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
@@ -135,16 +52,12 @@ object ScaleBench {
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
 
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(name: String, dir: String): Double =
+      Bench.timeQuery(spark, SparkEntry.queries(name), dir)
     // warmup both scales (parquet footers, codegen, session init)
     once("q1_agg", small); once("q1_agg", big)
 
-    val rows = Selected.filter(SparkEntry.queries.contains)
-      .filter(n => subset.forall(_.contains(n))).map { name =>
+    val rows = Selected.filter(n => subset.forall(_.contains(n))).map { name =>
       val s1 = once(name, small); val b1 = once(name, big)
       val s2 = once(name, small); val b2 = once(name, big)
       val s = math.min(s1, s2); val b = math.min(b1, b2)

@@ -1,14 +1,18 @@
 #!/bin/bash
-# Epoch control probe: run the control query (q_tpch_q9 warm run3) once,
-# log wall time + steal bookends to /tmp/control_log.txt. Used by the
-# round-18 re-promotion hunt (see .claude/skills/verify/SKILL.md).
-cd /root/repo
+# Epoch control probe: every 9 minutes, run a filtered Bench of the
+# control query (q_tpch_q9) and log its warm control run (`control_sec`
+# and `control`, the ratio to its BENCH_REF row, from
+# BENCH_DETAIL.partial.json) plus steal bookends to
+# /tmp/control_log.txt. Run from the repository root. SPARK_GRAFT_CPUS
+# matches the cpus_effective of the committed BENCH_REF capture, so the
+# ratio compares like with like.
 while true; do
+  rm -f BENCH_DETAIL.partial.json
   st1=$(awk '/^cpu /{print $9}' /proc/stat)
-  out=$(SPARK_GRAFT_CPUS=8 sbt "runMain graft.tools.DebugPq q_tpch_q9 /root/testdata/sf0.1" 2>&1 | grep -E '^run[0-9]')
+  SPARK_GRAFT_BENCH_ONLY=q_tpch_q9 SPARK_GRAFT_CPUS=4 sbt "runMain graft.Bench" > /dev/null 2>&1
   st2=$(awk '/^cpu /{print $9}' /proc/stat)
-  r3=$(echo "$out" | awk '/run3/{print $3}' | sed 's/took=//;s/s$//')
-  echo "$(date +%H:%M:%S) run3=${r3}s steal_ticks=$((st2-st1)) | $out" | tr '\n' ' ' >> /tmp/control_log.txt
-  echo >> /tmp/control_log.txt
+  c=$(grep -o '"control_sec":[-0-9.]*' BENCH_DETAIL.partial.json 2>/dev/null | cut -d: -f2)
+  r=$(grep -o '"control":[-0-9.]*' BENCH_DETAIL.partial.json 2>/dev/null | cut -d: -f2)
+  echo "$(date +%H:%M:%S) control_sec=${c:-none}s control=${r:-none} steal_ticks=$((st2-st1))" >> /tmp/control_log.txt
   sleep 540
 done
