@@ -78,16 +78,18 @@ object IndexStore {
       .take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Delete `f` and, for a directory, everything under it. */
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles.foreach(rm)
+    f.delete(): Unit
+  }
+
   /** Scan the stored artifact `name`/`key`, building it first iff
     * absent. Build-once-read-many: the returned plan is always a
     * parquet scan, never the training subtree. */
   def materialize(spark: SparkSession, name: String, key: String)
                  (compute: => DataFrame): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(): Unit
-    }
     val dir = root(spark).resolve(s"${name}_$key")
     if (!Files.exists(dir)) {
       val tmp = Paths.get(dir.toString + s"_build_${java.util.UUID.randomUUID()}")
@@ -120,20 +122,12 @@ object IndexStore {
   /** Drop one stored artifact (rebuild hygiene — e.g. after the
     * underlying corpus partition is rewritten). */
   def drop(spark: SparkSession, name: String, key: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(): Unit
-    }
     val d = root(spark).resolve(s"${name}_$key").toFile
     if (d.exists()) rm(d)
   }
 
   /** Drop every stored artifact (test hygiene). */
   def clear(spark: SparkSession): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(): Unit
-    }
     val r = root(spark).toFile
     if (r.exists()) rm(r)
   }

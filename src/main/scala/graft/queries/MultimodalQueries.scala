@@ -630,30 +630,30 @@ object MultimodalQueries {
     jpegPixels(spark, graft.Fixtures.path("q_jpeg_arith"))
 
   private def jpegPixels(spark: SparkSession, fixtureDir: String): DataFrame =
-    GeoIngest.decodeFiles(GeoIngest.scan(spark, fixtureDir, "*.jpg"),
-        "name", "y", "x", "r", "g", "b") { (file, bytes) =>
-      val name = file.stripSuffix(".jpg")
-      val img = JpegCodec.decode(bytes)
-        .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
-      val out = new Array[(String, Int, Int, Int, Int, Int)](img.width * img.height)
-      var y = 0
-      while (y < img.height) {
-        var x = 0
-        while (x < img.width) {
-          val i = y * img.width + x
-          val (r, g, b): (Int, Int, Int) =
-            if (img.channels == 1) {
-              val v = img.pixels(i) & 0xff; (v, v, v)
-            } else
-              (img.pixels(i * 3) & 0xff, img.pixels(i * 3 + 1) & 0xff,
-                img.pixels(i * 3 + 2) & 0xff)
-          out(i) = (name, y, x, r, g, b)
-          x += 1
+    GeoIngest.Format(GeoIngest.exif.glob, // the .jpg files
+      GeoIngest.decodeFiles(_, "name", "y", "x", "r", "g", "b") { (file, bytes) =>
+        val name = file.stripSuffix(".jpg")
+        val img = JpegCodec.decode(bytes)
+          .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
+        val out = new Array[(String, Int, Int, Int, Int, Int)](img.width * img.height)
+        var y = 0
+        while (y < img.height) {
+          var x = 0
+          while (x < img.width) {
+            val i = y * img.width + x
+            val (r, g, b): (Int, Int, Int) =
+              if (img.channels == 1) {
+                val v = img.pixels(i) & 0xff; (v, v, v)
+              } else
+                (img.pixels(i * 3) & 0xff, img.pixels(i * 3 + 1) & 0xff,
+                  img.pixels(i * 3 + 2) & 0xff)
+            out(i) = (name, y, x, r, g, b)
+            x += 1
+          }
+          y += 1
         }
-        y += 1
-      }
-      out.iterator
-    }
+        out.iterator
+      }).read(spark, fixtureDir)
 
   /** Lossless (SOF3, T.81 process 14) JPEG decode, oracle-graded per
     * SAMPLE against committed foreign fixtures: the seven `.jpg`
@@ -682,28 +682,28 @@ object MultimodalQueries {
     * skip. */
   private def jpegSamples(spark: SparkSession, fixture: String)(
       decode: Array[Byte] => Option[(Int, Int, Int, Array[Int])]): DataFrame =
-    GeoIngest.decodeFiles(GeoIngest.scan(spark, graft.Fixtures.path(fixture), "*.jpg"),
-        "name", "y", "x", "c", "v") { (file, bytes) =>
-      val name = file.stripSuffix(".jpg")
-      val (width, height, channels, samples) = decode(bytes)
-        .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
-      val out = new Array[(String, Int, Int, Int, Int)](width * height * channels)
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          var c = 0
-          while (c < channels) {
-            val i = (y * width + x) * channels + c
-            out(i) = (name, y, x, c, samples(i))
-            c += 1
+    GeoIngest.Format(GeoIngest.exif.glob, // the .jpg files
+      GeoIngest.decodeFiles(_, "name", "y", "x", "c", "v") { (file, bytes) =>
+        val name = file.stripSuffix(".jpg")
+        val (width, height, channels, samples) = decode(bytes)
+          .getOrElse(throw new IllegalStateException(s"fixture undecodable: $name"))
+        val out = new Array[(String, Int, Int, Int, Int)](width * height * channels)
+        var y = 0
+        while (y < height) {
+          var x = 0
+          while (x < width) {
+            var c = 0
+            while (c < channels) {
+              val i = (y * width + x) * channels + c
+              out(i) = (name, y, x, c, samples(i))
+              c += 1
+            }
+            x += 1
           }
-          x += 1
+          y += 1
         }
-        y += 1
-      }
-      out.iterator
-    }
+        out.iterator
+      }).read(spark, graft.Fixtures.path(fixture))
 
   /** 12-bit extended-sequential (SOF1, T.81 process 2) JPEG decode,
     * oracle-graded per SAMPLE — the same discipline as
@@ -807,7 +807,7 @@ object MultimodalQueries {
     * in `tools/fixtures/q_hdf5_read/` were written by the independent
     * from-scratch Python HDF5 writer (tools/h5_golden.py — superblock
     * v0, v1 B-tree root group, contiguous storage, the layout h5py
-    * emits by default); [[graft.sources.GeoIngest.readH5Files]] scans
+    * emits by default); [[graft.sources.GeoIngest.h5]] scans
     * them distributed (one corrupt file injected — it must SKIP, so
     * its absence from the output is itself graded) and the oracle
     * reads the expected elements. f8/f4/i8/i4 datasets all covered;
@@ -816,8 +816,8 @@ object MultimodalQueries {
     * `dir` — pinned goldens, same at every SF. */
   def qHdf5Read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.sources.GeoIngest
-      .readH5Files(spark, graft.Fixtures.path("q_hdf5_read"))
+    graft.sources.GeoIngest.h5
+      .read(spark, graft.Fixtures.path("q_hdf5_read"))
       .select(col("file"), col("dataset"),
         posexplode(col("values")).as(Seq("idx", "value")))
       .select(col("file"), col("dataset"), col("idx").cast("int").as("idx"),
@@ -841,12 +841,12 @@ object MultimodalQueries {
     * undecodable (brotli) payload that must keep its record with a
     * NULL http_status (per-record degrade) and two structurally
     * corrupt archives whose ABSENCE from the output is itself graded
-    * (per-file skip). [[graft.sources.GeoIngest.readWarcFiles]] scans
+    * (per-file skip). [[graft.sources.GeoIngest.warc]] scans
     * them distributed; the oracle reads the expected rows (payload
     * md5 computed by Python hashlib, never by Spark). */
   def qWarcExtract(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readWarcFiles(spark, graft.Fixtures.path("q_warc_extract"))
+    graft.sources.GeoIngest.warc
+      .read(spark, graft.Fixtures.path("q_warc_extract"))
       .select(col("file"), col("rec_idx"), col("warc_type"),
         col("target_uri"), col("http_status"), col("mime"),
         length(col("payload")).as("payload_len"),
@@ -872,8 +872,8 @@ object MultimodalQueries {
     * (identity for valid UTF-8) — all golden values computed by
     * Python len/count/hashlib, never by Spark. */
   def qWetExtract(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readWetFiles(spark, graft.Fixtures.path("q_wet_extract"))
+    graft.sources.GeoIngest.wet
+      .read(spark, graft.Fixtures.path("q_wet_extract"))
       .select(col("file"), col("rec_idx"), col("target_uri"), col("mime"),
         length(col("text")).as("text_chars"),
         (length(col("text")) -
@@ -900,8 +900,8 @@ object MultimodalQueries {
     * computed by Python's json module. */
   def qWatExtract(spark: SparkSession, dir: String): DataFrame = {
     val hrm = "$.Envelope['Payload-Metadata']['HTTP-Response-Metadata']"
-    graft.sources.GeoIngest
-      .readWatFiles(spark, graft.Fixtures.path("q_wat_extract"))
+    graft.sources.GeoIngest.wat
+      .read(spark, graft.Fixtures.path("q_wat_extract"))
       .select(col("file"), col("rec_idx"), col("target_uri"),
         get_json_object(col("json"),
           "$.Envelope['WARC-Header-Metadata']['WARC-Type']").as("src_type"),
@@ -930,8 +930,8 @@ object MultimodalQueries {
     * with the native `get_json_object` expression (no UDF); the
     * oracle reads rows computed by Python json+hashlib. */
   def qJsonlZst(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readJsonlZst(spark, graft.Fixtures.path("q_jsonl_zst"))
+    graft.sources.GeoIngest.jsonlZst
+      .read(spark, graft.Fixtures.path("q_jsonl_zst"))
       .select(col("shard"), col("line_idx"),
         get_json_object(col("line"), "$.doc_id").cast("long").as("doc_id"),
         get_json_object(col("line"), "$.lang").as("lang"),
@@ -954,8 +954,8 @@ object MultimodalQueries {
     * skip). Decoded by [[graft.sources.Bz2Codec]] — the platform
     * block decode behind this engine's framing/refusal contract. */
   def qJsonlBz2(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readJsonlBz2(spark, graft.Fixtures.path("q_jsonl_bz2"))
+    graft.sources.GeoIngest.jsonlBz2
+      .read(spark, graft.Fixtures.path("q_jsonl_bz2"))
       .select(col("shard"), col("line_idx"),
         get_json_object(col("line"), "$.doc_id").cast("long").as("doc_id"),
         get_json_object(col("line"), "$.lang").as("lang"),
@@ -1158,11 +1158,11 @@ object MultimodalQueries {
     * non-proto record kept as a degraded `unparsed` row, a whole-file
     * gzipped shard, and two corrupt shards whose ABSENCE from the
     * output is itself graded (CRC flip / truncation → per-file skip).
-    * [[graft.sources.GeoIngest.readTfRecordFiles]] scans distributed;
+    * [[graft.sources.GeoIngest.tfrecord]] scans distributed;
     * floats are graded by their raw LE wire bits (bit-exact). */
   def qTfrecordRead(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readTfRecordFiles(spark, graft.Fixtures.path("q_tfrecord_read"))
+    graft.sources.GeoIngest.tfrecord
+      .read(spark, graft.Fixtures.path("q_tfrecord_read"))
       .select(col("file"), col("rec_idx"), col("key"), col("kind"),
         col("elem_idx"), col("int_val"), col("float_bits"),
         length(col("bytes_val")).as("bytes_len"),
@@ -1192,8 +1192,8 @@ object MultimodalQueries {
     * widths; cross-validated by Python zipfile's own reader), the
     * NORMAL >4 GiB / >65k-member delivery shape at 100 TB scale. */
   def qZipScan(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readZipFiles(spark, graft.Fixtures.path("q_zip_scan"))
+    graft.sources.GeoIngest.zip
+      .read(spark, graft.Fixtures.path("q_zip_scan"))
       .select(col("file"), col("member"), col("method"),
         length(col("content")).as("size"),
         md5(col("content")).as("md5"))
@@ -1215,8 +1215,8 @@ object MultimodalQueries {
     * an unknown-codec file whose ABSENCE is graded (whole-file
     * refusal). Floats/doubles grade by raw IEEE bits. */
   def qAvroRead(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readAvroFiles(spark, graft.Fixtures.path("q_avro_read"))
+    graft.sources.GeoIngest.avro
+      .read(spark, graft.Fixtures.path("q_avro_read"))
       .select(col("file"), col("rec_idx"), col("field"), col("elem_idx"),
         col("vtype"), col("long_val"), col("float_bits"),
         col("double_bits"), col("str_val"),
@@ -1239,8 +1239,8 @@ object MultimodalQueries {
     * early end-of-line; a truncated file and a BI_BITFIELDS file
     * whose ABSENCE is graded (whole-file refusal). */
   def qBmpDecode(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readBmpFiles(spark, graft.Fixtures.path("q_bmp_decode"))
+    graft.sources.GeoIngest.bmp
+      .read(spark, graft.Fixtures.path("q_bmp_decode"))
       .select(col("file"), col("y"), col("x"), col("r"), col("g"), col("b"))
   }
 
@@ -1458,8 +1458,8 @@ object MultimodalQueries {
     * self-closed empty `<text/>`; a truncated shard and a
     * non-mediawiki shard whose ABSENCE is graded. */
   def qWikiPages(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readWikiDumps(spark, graft.Fixtures.path("q_wiki_pages"))
+    graft.sources.GeoIngest.wiki
+      .read(spark, graft.Fixtures.path("q_wiki_pages"))
       .select(col("shard"), col("page_id"), col("ns"), col("title"),
         col("redirect"), length(col("text")).as("text_len"),
         md5(col("text")).as("text_md5"))
@@ -1482,8 +1482,8 @@ object MultimodalQueries {
     * hash flips. This is the first two stages of every wiki slice in
     * a pretraining mix, composed. */
   def qWikiClean(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readWikiDumps(spark, graft.Fixtures.path("q_wiki_pages"))
+    graft.sources.GeoIngest.wiki
+      .read(spark, graft.Fixtures.path("q_wiki_pages"))
       .select(col("page_id"), length(col("text")).as("n_raw"),
         graft.operators.TextOps.wikitextClean(col("text")).as("text_clean"))
       .withColumn("n_clean", length(col("text_clean")))
@@ -1508,8 +1508,8 @@ object MultimodalQueries {
     * truncated file and an out-of-range-code file whose ABSENCE is
     * graded (whole-file refusal). */
   def qGifDecode(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readGifFiles(spark, graft.Fixtures.path("q_gif_decode"))
+    graft.sources.GeoIngest.gif
+      .read(spark, graft.Fixtures.path("q_gif_decode"))
       .select(col("file"), col("frame"), col("y"), col("x"),
         col("r"), col("g"), col("b"))
   }
@@ -1532,8 +1532,8 @@ object MultimodalQueries {
     * Golden computed by an independent Python compositor over the
     * encode-side palette indices (tools/gif_golden.py). */
   def qGifFrames(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readGifCanvases(spark, graft.Fixtures.path("q_gif_frames"))
+    graft.sources.GeoIngest.gifCanvases
+      .read(spark, graft.Fixtures.path("q_gif_frames"))
       .select(col("file"), col("frame"), col("y"), col("x"),
         col("r"), col("g"), col("b"), col("a"))
   }
@@ -1558,8 +1558,8 @@ object MultimodalQueries {
     * column hashes each sample's actual byte span: the table is only
     * correct if the payloads it names are fetchable. */
   def qMp4Samples(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readMp4Files(spark, graft.Fixtures.path("q_mp4_samples"))
+    graft.sources.GeoIngest.mp4
+      .read(spark, graft.Fixtures.path("q_mp4_samples"))
       .select(col("file"), col("track"), col("handler"), col("codec"),
         col("tsc"), col("smp"), col("chunk"), col("off"), col("size"),
         col("dts"), col("dur"), col("pts"), col("sync"), col("md5"))
@@ -1578,8 +1578,8 @@ object MultimodalQueries {
     * with comma decimals, a header-only file (zero rows), and a
     * headerless file whose ABSENCE is graded (whole-file refusal). */
   def qVttCues(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readSubtitleFiles(spark, graft.Fixtures.path("q_vtt_cues"))
+    graft.sources.GeoIngest.subtitles
+      .read(spark, graft.Fixtures.path("q_vtt_cues"))
       .select(col("file"), col("cue"), col("start_ms"), col("end_ms"),
         col("text"))
   }
@@ -1693,8 +1693,8 @@ object MultimodalQueries {
     * (tools/webp_golden.py); a chunk-past-EOF file and a broken-sync
     * file are refused — their ABSENCE is graded. */
   def qWebpMeta(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readWebpFiles(spark, graft.Fixtures.path("q_webp_meta"))
+    graft.sources.GeoIngest.webp
+      .read(spark, graft.Fixtures.path("q_webp_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
         col("num"), col("sval"))
   }
@@ -1713,8 +1713,8 @@ object MultimodalQueries {
     * from-scratch Python ISO-BMFF writer (tools/avif_golden.py); an
     * extent-past-EOF file's ABSENCE is graded. */
   def qAvifMeta(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readAvifFiles(spark, graft.Fixtures.path("q_avif_meta"))
+    graft.sources.GeoIngest.avif
+      .read(spark, graft.Fixtures.path("q_avif_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
         col("num"), col("sval"))
   }
@@ -1732,8 +1732,8 @@ object MultimodalQueries {
     * (tools/audio_meta_golden.py); a short-STREAMINFO file's ABSENCE
     * is graded. */
   def qFlacMeta(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readAudioMetaFiles(spark, graft.Fixtures.path("q_flac_meta"))
+    graft.sources.GeoIngest.audioMeta
+      .read(spark, graft.Fixtures.path("q_flac_meta"))
       .select(col("file"), col("kind"), col("key"), col("sval"), col("num"))
   }
 
@@ -1748,8 +1748,8 @@ object MultimodalQueries {
     * length (the duration estimator's inputs). A tagless file still
     * reports its stream shape; an ID3 size past EOF refuses. */
   def qId3Tags(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readAudioMetaFiles(spark, graft.Fixtures.path("q_id3_tags"))
+    graft.sources.GeoIngest.audioMeta
+      .read(spark, graft.Fixtures.path("q_id3_tags"))
       .select(col("file"), col("kind"), col("key"), col("sval"), col("num"))
   }
 
@@ -1767,8 +1767,8 @@ object MultimodalQueries {
     * (tools/ogg_golden.py); a flipped-CRC file and a multiplexed
     * two-serial file are refused — their ABSENCE is graded. */
   def qOpusMeta(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readOpusFiles(spark, graft.Fixtures.path("q_opus_meta"))
+    graft.sources.GeoIngest.opus
+      .read(spark, graft.Fixtures.path("q_opus_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
         col("num"), col("sval"))
   }
@@ -1790,8 +1790,8 @@ object MultimodalQueries {
     * supersedes the old, an xref-STREAM file and a truncated file
     * whose ABSENCE is graded. */
   def qPdfText(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readPdfFiles(spark, graft.Fixtures.path("q_pdf_text"))
+    graft.sources.GeoIngest.pdf
+      .read(spark, graft.Fixtures.path("q_pdf_text"))
       .select(col("file"), col("page"), col("run"), col("text"))
   }
 
@@ -1809,8 +1809,8 @@ object MultimodalQueries {
     * types, EXIF + GPS sub-IFD pointers; a no-Exif JPEG contributes
     * zero rows and a truncated-IFD file's ABSENCE is graded. */
   def qExifMeta(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readExifFiles(spark, graft.Fixtures.path("q_exif_meta"))
+    graft.sources.GeoIngest.exif
+      .read(spark, graft.Fixtures.path("q_exif_meta"))
       .select(col("file"), col("ifd"), col("tag"), col("ttype"),
         col("idx"), col("num"), col("den"), col("sval"))
   }
@@ -1898,13 +1898,13 @@ object MultimodalQueries {
   def qCaptionAlign(spark: SparkSession, dir: String): DataFrame = {
     val stem = (c: org.apache.spark.sql.Column) =>
       regexp_replace(c, "\\.[a-z0-9]+$", "")
-    val samples = graft.sources.GeoIngest
-      .readMp4Files(spark, graft.Fixtures.path("q_mp4_samples"))
+    val samples = graft.sources.GeoIngest.mp4
+      .read(spark, graft.Fixtures.path("q_mp4_samples"))
       .filter(col("handler") === "vide")
       .withColumn("pts_ms", expr("pts * 1000L DIV tsc"))
       .withColumn("vid", stem(col("file")))
-    val cues = graft.sources.GeoIngest
-      .readSubtitleFiles(spark, graft.Fixtures.path("q_vtt_cues"))
+    val cues = graft.sources.GeoIngest.subtitles
+      .read(spark, graft.Fixtures.path("q_vtt_cues"))
       .select(stem(col("file")).as("vid"), col("cue"),
         col("start_ms"), col("end_ms"), col("text"))
     samples.join(cues,
@@ -1991,8 +1991,8 @@ object MultimodalQueries {
     * (truncated footer, trailing bytes after the stream EOS marker)
     * whose ABSENCE is graded. */
   def qArrowRead(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readArrowFiles(spark, graft.Fixtures.path("q_arrow_read"))
+    graft.sources.GeoIngest.arrow
+      .read(spark, graft.Fixtures.path("q_arrow_read"))
       .select(col("file"), col("batch"), col("col"), col("row"),
         col("elem_idx"), col("elem_idx2"), col("elem_idx3"), col("vtype"),
         col("is_null"), col("bits"), col("str_val"))
@@ -2020,8 +2020,8 @@ object MultimodalQueries {
     * little-endian bits zero-extended to a long: bit-exact for every
     * dtype. */
   def qSafetensorsRead(spark: SparkSession, dir: String): DataFrame = {
-    graft.sources.GeoIngest
-      .readSafetensorsFiles(spark, graft.Fixtures.path("q_safetensors_read"))
+    graft.sources.GeoIngest.safetensors
+      .read(spark, graft.Fixtures.path("q_safetensors_read"))
       .select(col("file"), col("tensor"), col("dtype"), col("shape"),
         col("elem_idx"), col("bits"))
   }

@@ -1268,14 +1268,13 @@ object RelationalQueries {
       .agg(
         countDistinct(col("user_id")).as("exact_distinct"),
         approx_count_distinct(col("user_id"), 0.05).as("ad"),
-        percentile(col("value"), lit(0.49)).as("plo"),
-        percentile(col("value"), lit(0.51)).as("phi"),
+        percentile(col("value"), array(lit(0.49), lit(0.51))).as("p"),
         percentile_approx(col("value"), lit(0.5), lit(10000)).as("pa"))
       .select(col("event_type"), col("exact_distinct"),
         (abs(col("ad") - col("exact_distinct")) <=
           greatest(lit(0.15) * col("exact_distinct"), lit(1.0)))
           .as("distinct_within_bound"),
-        (col("pa") >= col("plo") && col("pa") <= col("phi"))
+        (col("pa") >= col("p").getItem(0) && col("pa") <= col("p").getItem(1))
           .as("p50_within_bound"))
   }
 
@@ -1297,18 +1296,21 @@ object RelationalQueries {
   def qQuantileSketch(spark: SparkSession, dir: String): DataFrame = {
     val qs = Seq("10" -> 0.10, "25" -> 0.25, "50" -> 0.50,
       "75" -> 0.75, "90" -> 0.90, "99" -> 0.99)
-    val aggs = qs.flatMap { case (tag, q) => Seq(
-      percentile(col("value"), lit(math.max(q - 0.01, 0.0))).as(s"lo_$tag"),
-      percentile(col("value"), lit(math.min(q + 0.01, 1.0))).as(s"hi_$tag"),
-      percentile_approx(col("value"), lit(q), lit(10000)).as(s"pa_$tag"))
-    }
-    val checks = qs.map { case (tag, _) =>
-      (col(s"pa_$tag") >= col(s"lo_$tag") && col(s"pa_$tag") <= col(s"hi_$tag"))
+    // one exact buffer holds the [q-0.01, q+0.01] bracket of every q
+    // (items 2i, 2i+1) and one sketch answers every q (item i)
+    val brackets = qs.flatMap { case (_, q) =>
+      Seq(math.max(q - 0.01, 0.0), math.min(q + 0.01, 1.0)) }
+    val checks = qs.zipWithIndex.map { case ((tag, _), i) =>
+      val pa = col("pa").getItem(i)
+      (pa >= col("p").getItem(2 * i) && pa <= col("p").getItem(2 * i + 1))
         .as(s"within_q$tag")
     }
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), aggs: _*)
+      .agg(count(lit(1)).as("n"),
+        percentile(col("value"), array(brackets.map(lit): _*)).as("p"),
+        percentile_approx(col("value"), array(qs.map(q => lit(q._2)): _*),
+          lit(10000)).as("pa"))
       .select(col("event_type") +: col("n") +: checks: _*)
   }
 

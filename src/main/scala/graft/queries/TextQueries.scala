@@ -2172,15 +2172,14 @@ object TextQueries {
     * the native `robots_match` expression downstream, so no regexes
     * are carried here. */
   private def robotsRules(spark: SparkSession): DataFrame =
-    GeoIngest.decodeFiles(
-        GeoIngest.scan(spark, graft.Fixtures.path("q_robots_rules"), "*.txt"),
-        "host", "agent", "verb", "value", "seq") { (file, bytes) =>
-      val host = file.stripSuffix(".txt")
-      graft.sources.RobotsCodec
-        .parse(new String(bytes,
-          java.nio.charset.StandardCharsets.UTF_8))
-        .map(r => (host, r.agent, r.verb, r.value, r.seq))
-    }
+    GeoIngest.Format("*.txt",
+      GeoIngest.decodeFiles(_, "host", "agent", "verb", "value", "seq") { (file, bytes) =>
+        val host = file.stripSuffix(".txt")
+        graft.sources.RobotsCodec
+          .parse(new String(bytes,
+            java.nio.charset.StandardCharsets.UTF_8))
+          .map(r => (host, r.agent, r.verb, r.value, r.seq))
+      }).read(spark, graft.Fixtures.path("q_robots_rules"))
 
   val qRobotsRulesSql: String =
     s"""SELECT host, agent, verb, value, seq

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * layers through Spark's JSON reader, and every binary format —
   * GeoTIFF, NetCDF, HDF5, npy, WAV, tar/zip archives, compressed
   * JSONL, WARC, Arrow, safetensors, TFRecord and the image, audio,
-  * video and document containers — through one batch file [[scan]]
-  * and one per-file [[decodeFiles]], so every binary reader shares one
-  * listing, one executor-side decode and one corrupt-file contract.
+  * video and document containers — as one [[Format]] value each: its
+  * glob and its decode, which the batch [[Format.read]] and the
+  * streaming ingest both take. Every format shares one batch file
+  * scan, one per-file [[decodeFiles]] and one corrupt-file contract.
   * Schema-on-read: GeoJSON properties keep inferred types, with
   * downstream required-column checks (SURVEY §1.1 schema system).
   */
@@ -63,24 +64,34 @@ object GeoIngest {
         lit("))")).as("wkt")))
       .getOrElse(emptyLayer(spark))
 
+  /** A binary file format: the glob its files match and its decode of
+    * a binaryFile-schema relation into rows. The batch [[Format.read]]
+    * and the streaming landing-zone ingest
+    * ([[graft.streaming.StreamingPipelines.ingest]]) both take this one
+    * value, so batch and stream cannot drift. */
+  final case class Format(glob: String, decode: DataFrame => DataFrame) {
+    /** Every file under `dir` that matches [[glob]], decoded. */
+    def read(spark: SparkSession, dir: String): DataFrame = decode(scan(spark, dir, glob))
+  }
+
   /** The one batch file scan: every file under `dir` whose name
     * matches `glob`, through Spark's `binaryFile` source — a
     * distributed scan with partition-parallel reads and the glob
     * pushed into the listing (`pathGlobFilter`). Rows have the
     * binaryFile schema (path, modificationTime, length, content) that
-    * [[decodeFiles]] reads; the streaming ingests land the same schema
-    * through their one `readStream` scan. */
-  def scan(spark: SparkSession, dir: String, glob: String): DataFrame =
+    * [[decodeFiles]] reads; the streaming ingest lands the same schema
+    * through its one `readStream` scan. */
+  private def scan(spark: SparkSession, dir: String, glob: String): DataFrame =
     spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
 
   /** The one per-file decode over a binaryFile-schema relation (a
-    * [[scan]] or one streaming micro-batch): `decode` runs
+    * batch scan or one streaming micro-batch): `decode` runs
     * executor-side on each file's name (its last path component) and
     * bytes, and its rows come out as columns `names`.
     *
-    * The corrupt-file contract of every reader here: a decoder that
+    * The corrupt-file contract of every format here: a decoder that
     * yields nothing SKIPS its file, so one undecodable object costs
-    * its own rows, never the task or the job. A reader over pinned
+    * its own rows, never the task or the job. A format over pinned
     * fixtures that must not skip throws inside its own `decode`. */
   def decodeFiles[T <: Product : TypeTag](files: DataFrame, names: String*)(
       decode: (String, Array[Byte]) => IterableOnce[T]): DataFrame = {
@@ -106,22 +117,21 @@ object GeoIngest {
       tail.toLongOption.filter(_.toString == tail).getOrElse(-1L)
     }
 
-  /** GeoTIFF FILE ingest (SURVEY §2.1 "GeoTIFF read", the rasterio
-    * path process_data.py:64-66): `.tif` files decoded with
+  /** GeoTIFF files (SURVEY §2.1 "GeoTIFF read", the rasterio path
+    * process_data.py:64-66): `.tif` files decoded with
     * [[graft.operators.MultimodalOps.decodeTiff]]; files that are not
     * decodable baseline TIFFs skip. Output: (tile_id from the
     * `tile_<id>.tif` naming convention or -1, width, height, samples)
     * — the exact round-trip of [[Sinks.writeTiffTiles]]. */
-  def readTiffTiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.tif"), "tile_id", "width", "height", "samples") {
-      (file, bytes) =>
-        graft.operators.MultimodalOps.decodeTiff(bytes).map { img =>
-          (fileId(file.stripSuffix(".tif"), "tile_"), img.width, img.height, img.samples)
-        }
-    }
+  val tiffTiles = Format("*.tif",
+    decodeFiles(_, "tile_id", "width", "height", "samples") { (file, bytes) =>
+      graft.operators.MultimodalOps.decodeTiff(bytes).map { img =>
+        (fileId(file.stripSuffix(".tif"), "tile_"), img.width, img.height, img.samples)
+      }
+    })
 
-  /** Distributed NetCDF prediction-dataset ingest — the combine half
-    * of the reference's eval loop (`TestInstance.load_from_nc` over
+  /** Distributed NetCDF prediction datasets — the combine half of the
+    * reference's eval loop (`TestInstance.load_from_nc` over
     * `results_dir.glob("*.nc")`, cropharvest_eval.py:216-218): `.nc`
     * files written by [[Sinks.writeNetcdfFiles]] (or any conforming
     * CDF-1 writer), decoded by [[NetcdfCodec.decode]] into one row per
@@ -129,15 +139,8 @@ object GeoIngest {
     * record variables, or lack the lat/lon/preds schema skip. The
     * per-file fan-out is data-parallel; downstream metric aggregation
     * is an ordinary groupBy. */
-  def readNetcdfFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeNetcdfBatch(scan(spark, dir, "*.nc"))
-
-  /** The decode half of [[readNetcdfFiles]] — shared verbatim by the
-    * batch scan above and the streaming landing-zone ingest
-    * ([[graft.streaming.StreamingPipelines.netcdfIngest]]), so batch
-    * and stream cannot drift. */
-  def decodeNetcdfBatch(files: DataFrame): DataFrame =
-    decodeFiles(files, "test_id", "instance", "lat", "lon", "pred") { (_, bytes) =>
+  val netcdf = Format("*.nc",
+    decodeFiles(_, "test_id", "instance", "lat", "lon", "pred") { (_, bytes) =>
       NetcdfCodec.decode(bytes).toSeq.flatMap { nc =>
         val byName = nc.vars.map(v => v.name -> v.data).toMap
         (byName.get("lat"), byName.get("lon"), byName.get("preds"),
@@ -149,23 +152,22 @@ object GeoIngest {
           case _ => Nil // schema mismatch: skip the file, never throw
         }
       }
-    }
+    })
 
-  /** Georeferenced per-pixel GeoTIFF ingest — the presto ingest shape:
-    * the reference derives a lon/lat for every raster pixel from the
+  /** Georeferenced per-pixel GeoTIFF — the presto ingest shape: the
+    * reference derives a lon/lat for every raster pixel from the
     * file's affine transform (rioxarray coords / the meshgrid in its
-    * EE pipeline) and lands (lon, lat, band values) rows. `.tif` files
-    * through the typed decoder + [[graft.operators.MultimodalOps
-    * .decodeTiffGeoref]]: files without ModelPixelScale/ModelTiepoint
-    * skip (coordinates are never invented). Output one row per
-    * (pixel, band): (tile, band, row, col, value, lon, lat) with
-    * pixel-CENTER coordinates under the raster-is-area convention —
-    * ready to join/groupBy like the `observations` table. At 100 TB
-    * the scan partitions by file and no shuffle happens until the
-    * caller aggregates. */
-  def readTiffGeoPixels(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.tif"),
-        "tile", "band", "row", "col", "value", "lon", "lat") { (file, bytes) =>
+    * EE pipeline) and lands (lon, lat, band values) rows. The
+    * [[tiffTiles]] files through the typed decoder +
+    * [[graft.operators.MultimodalOps.decodeTiffGeoref]]: files without
+    * ModelPixelScale/ModelTiepoint skip (coordinates are never
+    * invented). Output one row per (pixel, band): (tile, band, row,
+    * col, value, lon, lat) with pixel-CENTER coordinates under the
+    * raster-is-area convention — ready to join/groupBy like the
+    * `observations` table. At 100 TB the scan partitions by file and
+    * no shuffle happens until the caller aggregates. */
+  val tiffGeoPixels = Format(tiffTiles.glob,
+    decodeFiles(_, "tile", "band", "row", "col", "value", "lon", "lat") { (file, bytes) =>
       val name = file.stripSuffix(".tif")
       for {
         r <- graft.operators.MultimodalOps.decodeTiffRaster(bytes).toSeq
@@ -176,72 +178,69 @@ object GeoIngest {
       } yield (name, b, row, c,
         r.values((row * r.width + c) * r.bands + b),
         g.pixelLon(c), g.pixelLat(row))
-    }
+    })
 
-  /** HDF5 FILE ingest (SURVEY §2.1 "HDF5 read" — the CropHarvest
+  /** HDF5 files (SURVEY §2.1 "HDF5 read" — the CropHarvest
     * test-instance containers, eval/cropharvest_extensions.py:323-377):
     * `.h5` files through [[Hdf5Codec.decode]]. One output row per
     * DATASET per file: (file, dataset, shape, dtype, values) with
     * values widened to Double — the h5py `hf[key][:]` read, as rows a
     * pipeline explodes/aggregates from there. Files outside the
     * decoder's envelope (chunked, compressed, v2 headers) skip whole. */
-  def readH5Files(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.h5"), "file", "dataset", "shape", "dtype", "values") {
-      (file, bytes) =>
-        val name = file.stripSuffix(".h5")
-        Hdf5Codec.decode(bytes).toSeq.flatten.map { d =>
-          (name, d.name, d.shape, d.dtype, d.values)
-        }
-    }
+  val h5 = Format("*.h5",
+    decodeFiles(_, "file", "dataset", "shape", "dtype", "values") { (file, bytes) =>
+      val name = file.stripSuffix(".h5")
+      Hdf5Codec.decode(bytes).toSeq.flatten.map { d =>
+        (name, d.name, d.shape, d.dtype, d.values)
+      }
+    })
 
-  /** NumPy `.npy` FILE ingest (SURVEY §2.1 "NumPy read", the
-    * reference's raster interchange format — tif→npy transform,
+  /** NumPy `.npy` files (SURVEY §2.1 "NumPy read", the reference's
+    * raster interchange format — tif→npy transform,
     * dataops/main.py:24-43) through [[NpyCodec.decode]]. Output:
     * (tile_id from `tile_<id>.npy` or -1, shape, values) with values
     * widened to Double. */
-  def readNpyFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.npy"), "tile_id", "shape", "values") { (file, bytes) =>
-      NpyCodec.decode(bytes).map { npy =>
-        (fileId(file.stripSuffix(".npy"), "tile_"), npy.shape, npy.values)
+  val npy = Format("*.npy",
+    decodeFiles(_, "tile_id", "shape", "values") { (file, bytes) =>
+      NpyCodec.decode(bytes).map { a =>
+        (fileId(file.stripSuffix(".npy"), "tile_"), a.shape, a.values)
       }
-    }
+    })
 
-  /** WAV clip ingest — the audio arm of the multimodal file-source
-    * family, through [[WavCodec.decode]]. Output: (clip_id from
+  /** WAV clips — the audio arm of the multimodal file-source family,
+    * through [[WavCodec.decode]]. Output: (clip_id from
     * `clip_<id>.wav` or -1, rate, channels, samples). */
-  def readWavClips(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.wav"), "clip_id", "rate", "channels", "samples") {
-      (file, bytes) =>
-        WavCodec.decode(bytes).map { wav =>
-          (fileId(file.stripSuffix(".wav"), "clip_"), wav.sampleRate, wav.channels, wav.samples)
-        }
-    }
+  val wav = Format("*.wav",
+    decodeFiles(_, "clip_id", "rate", "channels", "samples") { (file, bytes) =>
+      WavCodec.decode(bytes).map { w =>
+        (fileId(file.stripSuffix(".wav"), "clip_"), w.sampleRate, w.channels, w.samples)
+      }
+    })
 
-  /** Compressed JSONL shard scan: `.jsonl.gz` shards, each member
+  /** Compressed JSONL shards: `.jsonl.gz` shards, each member
     * inflated + CRC-verified by [[GzipCodec.decode]] and exploded into
     * one row per JSON line. Corrupt shards (bad magic, truncated body,
     * CRC or length mismatch) skip, so one bad object in a 100 TB
     * bucket costs its shard, not the job. Output: (shard,
     * member_name, line). */
-  def readJsonlGz(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.gz"), "shard", "member_name", "line") { (shard, bytes) =>
+  val jsonlGz = Format("*.gz",
+    decodeFiles(_, "shard", "member_name", "line") { (shard, bytes) =>
       GzipCodec.decode(bytes).toSeq.flatMap { gz =>
         new String(gz.data, "UTF-8").split('\n').toSeq
           .filter(_.nonEmpty)
           .map(line => (shard, gz.name, line))
       }
-    }
+    })
 
-  /** Webdataset tar-shard scan (SURVEY §2.1 "webdataset tar scan",
+  /** Webdataset tar shards (SURVEY §2.1 "webdataset tar scan",
     * dataops/dataset.py:31): `.tar` shards — plus the compressed
     * deliveries webdataset actually ships (`.tar.gz` / `.tgz` via
     * [[GzipCodec]], `.tar.zst` via [[ZstdCodec]]) — each archive
     * parsed by [[TarCodec.decode]] and exploded into one row per
     * webdataset-grouped record part. A shard undecodable at either
     * layer skips. Output: (shard, key, part, payload). */
-  def readTarShards(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.{tar,tar.gz,tgz,tar.zst}"),
-        "shard", "key", "part", "payload") { (shard, bytes) =>
+  val tarShards = Format("*.{tar,tar.gz,tgz,tar.zst}",
+    decodeFiles(_, "shard", "key", "part", "payload") { (shard, bytes) =>
       val raw: Option[Array[Byte]] =
         if (shard.endsWith(".tar.gz") || shard.endsWith(".tgz"))
           GzipCodec.decode(bytes).map(_.data)
@@ -252,78 +251,94 @@ object GeoIngest {
           parts.map { case (part, data) => (shard, key, part, data) }
         }
       }
-    }
+    })
 
-  /** Zstd-compressed JSONL shard scan — the `.jsonl.zst` wire format
+  /** Webdataset caption+JPEG samples — the LAION crawl shape: `.tar`
+    * shards whose members pair by basename (the webdataset rule), each
+    * sample's image decoded through [[JpegCodec]] — baseline AND
+    * progressive, since a real crawl carries both. The skip contract
+    * composes: a corrupt SHARD drops whole, an undecodable or unpaired
+    * MEMBER drops that sample. Output: (shard, sample, caption_bytes,
+    * width, height, channels, px_sum). */
+  val webdataset = Format("*.tar",
+    decodeFiles(_, "shard", "sample", "caption_bytes",
+        "width", "height", "channels", "px_sum") { (shard, bytes) =>
+      TarCodec.decode(bytes) match {
+        case None => Seq.empty // corrupt shard: skip, not kill
+        case Some(members) =>
+          // webdataset key: basename AFTER the last '/', up to the
+          // first '.' — real shards (tar -cf shard.tar .) prefix
+          // members with "./", which a naive takeWhile would
+          // collapse into one group and silently mispair
+          def sampleKey(n: String): String =
+            n.substring(n.lastIndexOf('/') + 1).takeWhile(_ != '.')
+          members.groupBy(m => sampleKey(m.name)).toSeq
+            .filter(_._1.nonEmpty) // directory entries / dotfiles
+            .sortBy(_._1)
+            .flatMap { case (sample, ms) =>
+              for {
+                txt <- ms.find(_.name.endsWith(".txt"))
+                jpg <- ms.find(_.name.endsWith(".jpg"))
+                img <- JpegCodec.decode(jpg.data)
+              } yield {
+                var px = 0L
+                var i = 0
+                while (i < img.pixels.length) { px += img.pixels(i) & 0xff; i += 1 }
+                (shard, sample, txt.data.length, img.width, img.height,
+                  img.channels, px)
+              }
+            }
+      }
+    })
+
+  /** Zstd-compressed JSONL shards — the `.jsonl.zst` wire format
     * modern web corpora ship in (RedPajama/Dolma/FineWeb), the zstd
-    * sibling of [[readJsonlGz]]: each shard's frames inflated by
+    * sibling of [[jsonlGz]]: each shard's frames inflated by
     * [[ZstdCodec.decode]] (multi-frame + skippable-frame aware,
     * inflation-capped) and exploded into one row per JSON line.
     * Output: (shard, line_idx, line). */
-  def readJsonlZst(spark: SparkSession, dir: String): DataFrame =
-    decodeJsonlZstBatch(scan(spark, dir, "*.zst"))
-
-  /** One batch of `.jsonl.zst` shards → per-line rows — shared by the
-    * batch scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.zstIngest]]). */
-  def decodeJsonlZstBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "shard", "line_idx", "line") { (shard, bytes) =>
+  val jsonlZst = Format("*.zst",
+    decodeFiles(_, "shard", "line_idx", "line") { (shard, bytes) =>
       ZstdCodec.decode(bytes).toSeq.flatMap { data =>
         new String(data, "UTF-8").split('\n').toSeq
           .filter(_.nonEmpty).zipWithIndex
           .map { case (l, i) => (shard, i.toLong, l) }
       }
-    }
+    })
 
-  /** bzip2-compressed JSONL shard scan — the compression the long
-    * tail of public corpora still ships in (Wikipedia dumps,
-    * pushshift archives), the bzip2 sibling of [[readJsonlGz]] /
-    * [[readJsonlZst]]: each shard's streams decompressed by
-    * [[Bz2Codec.decode]] (multi-stream aware, inflation-capped) and
-    * exploded into one row per JSON line. Output: (shard, line_idx,
-    * line). */
-  def readJsonlBz2(spark: SparkSession, dir: String): DataFrame =
-    decodeJsonlBz2Batch(scan(spark, dir, "*.bz2"))
-
-  /** One batch of `.jsonl.bz2` shards → per-line rows — shared by the
-    * batch scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.bz2Ingest]]). */
-  def decodeJsonlBz2Batch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "shard", "line_idx", "line") { (shard, bytes) =>
+  /** bzip2-compressed JSONL shards — the compression the long tail of
+    * public corpora still ships in (Wikipedia dumps, pushshift
+    * archives), the bzip2 sibling of [[jsonlGz]] / [[jsonlZst]]: each
+    * shard's streams decompressed by [[Bz2Codec.decode]] (multi-stream
+    * aware, inflation-capped) and exploded into one row per JSON line.
+    * Output: (shard, line_idx, line). */
+  val jsonlBz2 = Format("*.bz2",
+    decodeFiles(_, "shard", "line_idx", "line") { (shard, bytes) =>
       Bz2Codec.decode(bytes).toSeq.flatMap { data =>
         new String(data, "UTF-8").split('\n').toSeq
           .filter(_.nonEmpty).zipWithIndex
           .map { case (l, i) => (shard, i.toLong, l) }
       }
-    }
+    })
 
-  /** MediaWiki dump scan — `pages-articles.xml.bz2` as Wikipedia
-    * actually publishes it (the wiki slice of every serious
-    * pretraining mix): `*.xml.bz2` (+ plain `*.xml`), each shard
-    * bzip2-decompressed by [[Bz2Codec.decode]] and page-scanned by
-    * [[WikiXml.parse]]. A shard that is not a mediawiki document (or
-    * fails decompression) skips whole; a malformed page inside a valid
-    * dump skips alone. Output: (shard, page_id, ns, title, redirect,
-    * text). */
-  def readWikiDumps(spark: SparkSession, dir: String): DataFrame =
-    decodeWikiBatch(scan(spark, dir, "*.xml*"))
+  /** MediaWiki dumps — `pages-articles.xml.bz2` as Wikipedia actually
+    * publishes it (the wiki slice of every serious pretraining mix):
+    * `*.xml.bz2` (+ plain `*.xml`), each shard bzip2-decompressed by
+    * [[Bz2Codec.decode]] and page-scanned by [[WikiXml.parse]]. A
+    * shard that is not a mediawiki document (or fails decompression)
+    * skips whole; a malformed page inside a valid dump skips alone.
+    * Output: (shard, page_id, ns, title, redirect, text). */
+  val wiki = Format("*.xml*",
+    decodeFiles(_, "shard", "page_id", "ns", "title", "redirect", "text") { (shard, bytes) =>
+      val xml =
+        if (shard.endsWith(".bz2")) Bz2Codec.decode(bytes)
+        else Some(bytes)
+      xml.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
+        .flatMap(WikiXml.parse).toSeq.flatten
+        .map(p => (shard, p.id, p.ns, p.title, p.redirect, p.text))
+    })
 
-  /** One batch of dump shards → per-page rows — shared by the batch
-    * scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.wikiIngest]]) so the two
-    * paths cannot drift. */
-  def decodeWikiBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "shard", "page_id", "ns", "title", "redirect", "text") {
-      (shard, bytes) =>
-        val xml =
-          if (shard.endsWith(".bz2")) Bz2Codec.decode(bytes)
-          else Some(bytes)
-        xml.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-          .flatMap(WikiXml.parse).toSeq.flatten
-          .map(p => (shard, p.id, p.ns, p.title, p.redirect, p.text))
-    }
-
-  /** WARC crawl-archive scan — the Common Crawl ingest front door:
+  /** WARC crawl archives — the Common Crawl ingest front door:
     * `.warc.gz` (one gzip member per record; [[GzipCodec.decode]]
     * concatenates members) and plain `.warc` files, each parsed by
     * [[WarcCodec.parse]]. Response records additionally decode their
@@ -333,15 +348,8 @@ object GeoIngest {
     * (per-record degrade), while a structurally corrupt FILE skips
     * whole. Output: (file, rec_idx, warc_type, target_uri,
     * http_status, mime, payload). */
-  def readWarcFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWarcBatch(scan(spark, dir, "*.warc*"))
-
-  /** One batch of WARC files → per-record rows — shared by the batch
-    * scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.warcIngest]]) so the two
-    * paths cannot drift. */
-  def decodeWarcBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "rec_idx", "warc_type", "target_uri",
+  val warc = Format("*.warc*",
+    decodeFiles(_, "file", "rec_idx", "warc_type", "target_uri",
         "http_status", "mime", "payload") { (file, bytes) =>
       val raw =
         if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
@@ -355,58 +363,47 @@ object GeoIngest {
         val payload = http.map(_.payload).getOrElse(r.block)
         (file, r.idx, r.warcType, r.targetUri, status, mime, payload)
       }
-    }
+    })
 
-  /** WET extracted-text scan — Common Crawl's second deliverable
+  /** WET extracted text — Common Crawl's second deliverable
     * (`*.warc.wet.gz`): the same WARC framing, but each `conversion`
     * record's block IS the page's extracted plain text (no HTTP
     * envelope). Real pretraining pipelines read WET at least as often
     * as raw WARC (C4 and FineWeb's ancestors start here; the
     * reference's corpus-ingest role is dataops/dataset.py:258-278).
-    * Output: (file, rec_idx, target_uri, mime, text) — text decoded
-    * as UTF-8 from the record block. */
-  def readWetFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWetBatch(scan(spark, dir, "*.wet*"))
-
-  /** One batch of WET files → per-page text rows — shared by the
-    * batch scan and the streaming arm
-    * ([[graft.streaming.StreamingPipelines.wetIngest]]). Rides
-    * [[decodeWarcBatch]]'s framing walk, keeping only `conversion`
-    * records; the block is the text. */
-  def decodeWetBatch(batch: DataFrame): DataFrame =
-    decodeWarcBatch(batch)
+    * Rides [[warc]]'s framing walk, keeping only `conversion` records.
+    * Output: (file, rec_idx, target_uri, mime, text) — text decoded as
+    * UTF-8 from the record block. A stream points it at a WET drop
+    * directory (`*.wet*` is a subset of [[warc]]'s `*.warc*`;
+    * deliverables land in separate prefixes, as on the real crawl
+    * buckets). */
+  val wet = Format("*.wet*", batch =>
+    warc.decode(batch)
       .filter(col("warc_type") === "conversion")
       .select(col("file"), col("rec_idx"), col("target_uri"),
-        col("mime"), decode(col("payload"), "UTF-8").as("text"))
+        col("mime"), decode(col("payload"), "UTF-8").as("text")))
 
-  /** WAT metadata scan — Common Crawl's third deliverable
+  /** WAT metadata — Common Crawl's third deliverable
     * (`*.warc.wat.gz`): WARC framing whose `metadata` records carry a
     * JSON envelope per crawled record (WARC-Header-Metadata +
     * Payload-Metadata with HTTP-Response-Metadata / HTML-Metadata —
     * the link graph and page-title source most crawl analytics read
-    * instead of raw WARC). Output: (file, rec_idx, target_uri, json);
+    * instead of raw WARC). Rides [[warc]]'s framing walk, keeping only
+    * `metadata` records. Output: (file, rec_idx, target_uri, json);
     * field extraction stays declarative via `get_json_object` in the
     * query layer (the q_json_extract machinery, no UDFs). */
-  def readWatFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWatBatch(scan(spark, dir, "*.wat*"))
-
-  /** One batch of WAT files → per-record JSON rows — shared by the
-    * batch scan and the streaming arm
-    * ([[graft.streaming.StreamingPipelines.watIngest]]). Rides
-    * [[decodeWarcBatch]]'s framing walk, keeping only `metadata`
-    * records; the block is the JSON envelope. */
-  def decodeWatBatch(batch: DataFrame): DataFrame =
-    decodeWarcBatch(batch)
+  val wat = Format("*.wat*", batch =>
+    warc.decode(batch)
       .filter(col("warc_type") === "metadata")
       .select(col("file"), col("rec_idx"), col("target_uri"),
-        decode(col("payload"), "UTF-8").as("json"))
+        decode(col("payload"), "UTF-8").as("json")))
 
-  /** BMP scan — the uncompressed long-tail image format old sites and
+  /** BMP — the uncompressed long-tail image format old sites and
     * scanned-doc dumps still surface: `*.bmp`, each decoded by
     * [[BmpCodec.decode]] (indexed/BGR/BGRX/RLE8 envelope; whole-file
     * refusal). Output: one row per pixel, top-down coordinates. */
-  def readBmpFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.bmp"), "file", "y", "x", "r", "g", "b") { (file, bytes) =>
+  val bmp = Format("*.bmp",
+    decodeFiles(_, "file", "y", "x", "r", "g", "b") { (file, bytes) =>
       BmpCodec.decode(bytes).toSeq.flatMap { img =>
         (0 until img.h).iterator.flatMap { y =>
           (0 until img.w).iterator.map { x =>
@@ -416,72 +413,64 @@ object GeoIngest {
           }
         }
       }
-    }
+    })
 
-  /** GIF scan — the web-corpus long-tail image format (and the
-    * smallest real frame-sampling case: animated GIFs): `*.gif`, each
-    * decoded by [[GifCodec.decode]] (spec LZW, interlace, local
-    * palettes; whole-file refusal on any structural fault). Output:
-    * one row per pixel per frame at CANVAS coordinates. */
-  def readGifFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.gif"), "file", "frame", "y", "x", "r", "g", "b") {
-      (file, bytes) =>
-        GifCodec.decode(bytes).toSeq.flatten.flatMap { f =>
-          (0 until f.h).iterator.flatMap { y =>
-            (0 until f.w).iterator.map { x =>
-              val o = 3 * (y * f.w + x)
-              (file, f.idx, f.top + y, f.left + x,
-                f.rgb(o) & 0xff, f.rgb(o + 1) & 0xff, f.rgb(o + 2) & 0xff)
-            }
+  /** GIF — the web-corpus long-tail image format (and the smallest
+    * real frame-sampling case: animated GIFs): `*.gif`, each decoded
+    * by [[GifCodec.decode]] (spec LZW, interlace, local palettes;
+    * whole-file refusal on any structural fault). Output: one row per
+    * pixel per frame at CANVAS coordinates. */
+  val gif = Format("*.gif",
+    decodeFiles(_, "file", "frame", "y", "x", "r", "g", "b") { (file, bytes) =>
+      GifCodec.decode(bytes).toSeq.flatten.flatMap { f =>
+        (0 until f.h).iterator.flatMap { y =>
+          (0 until f.w).iterator.map { x =>
+            val o = 3 * (y * f.w + x)
+            (file, f.idx, f.top + y, f.left + x,
+              f.rgb(o) & 0xff, f.rgb(o + 1) & 0xff, f.rgb(o + 2) & 0xff)
           }
         }
-    }
+      }
+    })
 
-  /** Composited GIF animation scan — what a vision pipeline actually
-    * samples from an animated GIF: full-canvas frames after the GCE
-    * disposal state machine (none / do-not-dispose / restore-to-
-    * background / restore-to-previous) and transparency, via
-    * [[GifCodec.composite]]. One row per canvas pixel per frame;
-    * alpha 0 = never painted. Whole-file refusal on any structural
-    * fault, off-screen rect, or reserved disposal method. */
-  def readGifCanvases(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.gif"), "file", "frame", "y", "x", "r", "g", "b", "a") {
-      (file, bytes) =>
-        GifCodec.composite(bytes).toSeq.flatten.flatMap { f =>
-          (0 until f.h).iterator.flatMap { y =>
-            (0 until f.w).iterator.map { x =>
-              val o = 4 * (y * f.w + x)
-              (file, f.idx, y, x, f.rgba(o) & 0xff, f.rgba(o + 1) & 0xff,
-                f.rgba(o + 2) & 0xff, f.rgba(o + 3) & 0xff)
-            }
+  /** Composited GIF animations — what a vision pipeline actually
+    * samples from an animated GIF: the [[gif]] files as full-canvas
+    * frames after the GCE disposal state machine (none /
+    * do-not-dispose / restore-to-background / restore-to-previous) and
+    * transparency, via [[GifCodec.composite]]. One row per canvas
+    * pixel per frame; alpha 0 = never painted. Whole-file refusal on
+    * any structural fault, off-screen rect, or reserved disposal
+    * method. */
+  val gifCanvases = Format(gif.glob,
+    decodeFiles(_, "file", "frame", "y", "x", "r", "g", "b", "a") { (file, bytes) =>
+      GifCodec.composite(bytes).toSeq.flatten.flatMap { f =>
+        (0 until f.h).iterator.flatMap { y =>
+          (0 until f.w).iterator.map { x =>
+            val o = 4 * (y * f.w + x)
+            (file, f.idx, y, x, f.rgba(o) & 0xff, f.rgba(o + 1) & 0xff,
+              f.rgba(o + 2) & 0xff, f.rgba(o + 3) & 0xff)
           }
         }
-    }
+      }
+    })
 
-  /** Arrow IPC scan — Feather V2 exports and HF-datasets-style
-    * streams on their way into a corpus: `*.arrow`, each decoded by
+  /** Arrow IPC — Feather V2 exports and HF-datasets-style streams on
+    * their way into a corpus: `*.arrow`, each decoded by
     * [[ArrowCodec.decode]] (from-scratch flatbuffers walk over both
     * IPC framings; whole-file refusal on any structural fault,
     * dictionary encoding, or compressed bodies). Output: one row per
     * value cell, raw LE bits zero-extended to a long (bit-exact for
     * every numeric type), strings as UTF-8, binary as hex. */
-  def readArrowFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeArrowBatch(scan(spark, dir, "*.arrow"))
-
-  /** One batch of Arrow objects → per-cell rows — shared by the batch
-    * scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.arrowIngest]]) so the two
-    * paths cannot drift. */
-  def decodeArrowBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "batch", "col", "row", "elem_idx", "elem_idx2",
+  val arrow = Format("*.arrow",
+    decodeFiles(_, "file", "batch", "col", "row", "elem_idx", "elem_idx2",
         "elem_idx3", "vtype", "is_null", "bits", "str_val") { (file, bytes) =>
       ArrowCodec.decode(bytes).toSeq.flatten.map { c =>
         (file, c.batch, c.col, c.row, c.elem, c.elem2, c.elem3,
           c.vtype, c.isNull, c.bits, c.str)
       }
-    }
+    })
 
-  /** safetensors shard scan — named-tensor artifacts (weight shards,
+  /** safetensors shards — named-tensor artifacts (weight shards,
     * precomputed embedding dumps) on their way into a corpus:
     * `*.safetensors`, each decoded by [[SafetensorsCodec.decode]]
     * (8-byte LE header length, strict JSON header, span-tiling
@@ -489,65 +478,50 @@ object GeoIngest {
     * weight shard is all-or-nothing). Output: one row per tensor
     * ELEMENT with the raw little-endian bits zero-extended to a long,
     * so every dtype (f16/bf16/f32/f64/ints/bool) grades bit-exactly. */
-  def readSafetensorsFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeSafetensorsBatch(scan(spark, dir, "*.safetensors"))
+  val safetensors = Format("*.safetensors",
+    decodeFiles(_, "file", "tensor", "dtype", "shape", "elem_idx", "bits") { (file, bytes) =>
+      SafetensorsCodec.decode(bytes).toSeq.flatten.map { e =>
+        (file, e.name, e.dtype, e.shape, e.idx, e.bits)
+      }
+    })
 
-  /** One batch of safetensors shards → per-element rows — shared by
-    * the batch scan above and the streaming ingest arm
-    * ([[graft.streaming.StreamingPipelines.safetensorsIngest]]) so the
-    * two paths cannot drift. */
-  def decodeSafetensorsBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "tensor", "dtype", "shape", "elem_idx", "bits") {
-      (file, bytes) =>
-        SafetensorsCodec.decode(bytes).toSeq.flatten.map { e =>
-          (file, e.name, e.dtype, e.shape, e.idx, e.bits)
-        }
-    }
-
-  /** ZIP archive scan — the other dataset archive shape next to
+  /** ZIP archives — the other dataset archive shape next to
     * tar/webdataset (Kaggle exports, image-caption bundles): `*.zip`,
     * each decoded by [[ZipCodec.decode]] (central-directory walk;
     * stored + deflate members; per-member CRC verify). A structurally
     * broken archive skips whole; a single bad member (unsupported
     * method, encryption, CRC fail) skips that member only. Output:
     * (file, member, method, content). */
-  def readZipFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.zip"), "file", "member", "method", "content") {
-      (file, bytes) =>
-        ZipCodec.decode(bytes).toSeq.flatten.map { m =>
-          (file, m.name, m.method, m.data)
-        }
-    }
+  val zip = Format("*.zip",
+    decodeFiles(_, "file", "member", "method", "content") { (file, bytes) =>
+      ZipCodec.decode(bytes).toSeq.flatten.map { m =>
+        (file, m.name, m.method, m.data)
+      }
+    })
 
-  /** Avro object-container scan — warehouse/Kafka-archive interchange
-    * on its way into a corpus: `*.avro`, each decoded by
+  /** Avro object containers — warehouse/Kafka-archive interchange on
+    * its way into a corpus: `*.avro`, each decoded by
     * [[AvroIngest.decode]] (platform Avro runtime; whole-file refusal
     * on any decode fault). Output: one row per record field (per
     * element for arrays), with float/double as raw IEEE bits. */
-  def readAvroFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.avro"), "file", "rec_idx", "field", "elem_idx",
-        "vtype", "long_val", "float_bits", "double_bits", "str_val", "bytes_val") {
-      (file, bytes) =>
-        AvroIngest.decode(bytes).toSeq.flatten.map { case (idx, c) =>
-          (file, idx, c.field, c.elem_idx, c.vtype, c.long_val,
-            c.float_bits, c.double_bits, c.str_val, c.bytes_val)
-        }
-    }
+  val avro = Format("*.avro",
+    decodeFiles(_, "file", "rec_idx", "field", "elem_idx", "vtype", "long_val",
+        "float_bits", "double_bits", "str_val", "bytes_val") { (file, bytes) =>
+      AvroIngest.decode(bytes).toSeq.flatten.map { case (idx, c) =>
+        (file, idx, c.field, c.elem_idx, c.vtype, c.long_val,
+          c.float_bits, c.double_bits, c.str_val, c.bytes_val)
+      }
+    })
 
-  /** MP4 / ISO-BMFF sample-table scan — the container walk a video
+  /** MP4 / ISO-BMFF sample tables — the container walk a video
     * pipeline runs BEFORE any decode: per-sample (offset, size, dts,
     * pts, sync) rows from `moov/trak/mdia/minf/stbl` via
     * [[Mp4Codec.decode]], plus the md5 of each sample's byte span —
     * proving the table actually names fetchable payloads (the
     * ranged-read contract an object store serves). Whole-file refusal
     * on structural faults or fragmented (moof) files. */
-  def readMp4Files(spark: SparkSession, dir: String): DataFrame =
-    decodeMp4Batch(scan(spark, dir, "*.mp4"))
-
-  /** One batch of MP4 files → per-sample rows — shared by the batch
-    * scan and the streaming arm so the two paths cannot drift. */
-  def decodeMp4Batch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "track", "handler", "codec", "tsc", "smp", "chunk",
+  val mp4 = Format("*.mp4",
+    decodeFiles(_, "file", "track", "handler", "codec", "tsc", "smp", "chunk",
         "off", "size", "dts", "dur", "pts", "sync", "md5") { (file, bytes) =>
       Mp4Codec.decode(bytes).toSeq.flatten.map { s =>
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -556,120 +530,90 @@ object GeoIngest {
         (file, s.track, s.handler, s.codec, s.tsc, s.smp, s.chunk,
           s.off, s.size, s.dts, s.dur, s.pts, if (s.sync) 1 else 0, hex)
       }
-    }
+    })
 
-  /** WebP container scan — canvas dims, alpha/animation flags, the
-    * ANMF frame table and embedded EXIF GPS via [[WebpCodec.decode]]:
-    * the first pass a crawl pipeline runs over the modern web's
-    * dominant image format, no VP8 decoder needed. Whole-file refusal
-    * on structural faults. */
-  def readWebpFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeWebpBatch(scan(spark, dir, "*.webp"))
-
-  /** One batch of WebP files → metadata rows — shared by the batch
-    * scan and any streaming arm. */
-  def decodeWebpBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+  /** WebP containers — canvas dims, alpha/animation flags, the ANMF
+    * frame table and embedded EXIF GPS via [[WebpCodec.decode]]: the
+    * first pass a crawl pipeline runs over the modern web's dominant
+    * image format, no VP8 decoder needed. Whole-file refusal on
+    * structural faults. */
+  val webp = Format("*.webp",
+    decodeFiles(_, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
       WebpCodec.decode(bytes).toSeq.flatten.map(m =>
         (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-    }
+    })
 
-  /** Ogg/Opus metadata scan — podcast/speech corpora: channels,
-    * preskip, duration (last granule at 48 kHz), pages, vendor +
-    * comment tags via [[AudioMetaCodec.decodeOgg]]. Whole-file
-    * refusal on structural faults (CRC, lacing, multiplexing). */
-  def readOpusFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeOpusBatch(scan(spark, dir, "*.{opus,ogg}"))
-
-  /** One batch of Ogg/Opus files → metadata rows. */
-  def decodeOpusBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+  /** Ogg/Opus metadata — podcast/speech corpora: channels, preskip,
+    * duration (last granule at 48 kHz), pages, vendor + comment tags
+    * via [[AudioMetaCodec.decodeOgg]]. Whole-file refusal on
+    * structural faults (CRC, lacing, multiplexing). */
+  val opus = Format("*.{opus,ogg}",
+    decodeFiles(_, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
       AudioMetaCodec.decodeOgg(bytes).toSeq.flatten.map(m =>
         (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-    }
+    })
 
-  /** AVIF/HEIF metadata scan — primary item, canvas dims (ispe via
-    * ipma), item/extent table with fetch-proving md5s, and embedded
-    * EXIF GPS via [[AvifCodec.decode]]. Whole-file refusal on
-    * structural faults or extents past EOF. */
-  def readAvifFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeAvifBatch(scan(spark, dir, "*.{avif,heic}"))
-
-  /** One batch of AVIF/HEIC files → metadata rows — shared by the
-    * batch scan and any streaming arm. */
-  def decodeAvifBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
+  /** AVIF/HEIF metadata — primary item, canvas dims (ispe via ipma),
+    * item/extent table with fetch-proving md5s, and embedded EXIF GPS
+    * via [[AvifCodec.decode]]. Whole-file refusal on structural faults
+    * or extents past EOF. */
+  val avif = Format("*.{avif,heic}",
+    decodeFiles(_, "file", "kind", "key", "idx", "num", "sval") { (file, bytes) =>
       AvifCodec.decode(bytes).toSeq.flatten.map(m =>
         (file, m.kind, m.key, m.idx, m.num, Option(m.sval)))
-    }
+    })
 
-  /** Audio metadata scan — FLAC STREAMINFO/Vorbis comments and MP3
-    * ID3v2 tags + first-frame stream shape via [[AudioMetaCodec]]:
-    * the curation surface of an audio corpus (rates, channels,
-    * durations, titles/languages) with the sample decode left at the
-    * stub boundary. Whole-file refusal on structural faults. */
-  def readAudioMetaFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeAudioMetaBatch(scan(spark, dir, "*.{flac,mp3}"))
-
-  /** One batch of audio files → metadata rows — shared by the batch
-    * scan and any streaming arm. */
-  def decodeAudioMetaBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "kind", "key", "sval", "num") { (file, bytes) =>
+  /** Audio metadata — FLAC STREAMINFO/Vorbis comments and MP3 ID3v2
+    * tags + first-frame stream shape via [[AudioMetaCodec]]: the
+    * curation surface of an audio corpus (rates, channels, durations,
+    * titles/languages) with the sample decode left at the stub
+    * boundary. Whole-file refusal on structural faults. */
+  val audioMeta = Format("*.{flac,mp3}",
+    decodeFiles(_, "file", "kind", "key", "sval", "num") { (file, bytes) =>
       val meta =
         if (file.endsWith(".flac")) AudioMetaCodec.decodeFlac(bytes)
         else AudioMetaCodec.decodeMp3(bytes)
       meta.toSeq.flatten.map(m =>
         (file, m.kind, m.key, Option(m.sval), m.num))
-    }
+    })
 
-  /** PDF text scan — one row per shown text run from each document's
+  /** PDF text — one row per shown text run from each document's
     * content streams, via [[PdfCodec.decode]]: the first operator a
     * document-corpus pipeline runs over the dominant crawled document
     * format. Whole-file refusal on envelope faults (xref streams,
     * encryption, non-Flate filters, truncation). */
-  def readPdfFiles(spark: SparkSession, dir: String): DataFrame =
-    decodePdfBatch(scan(spark, dir, "*.pdf"))
-
-  /** One batch of PDFs → per-text-run rows — shared by the batch scan
-    * and any streaming arm so paths cannot drift. */
-  def decodePdfBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "page", "run", "text") { (file, bytes) =>
+  val pdf = Format("*.pdf",
+    decodeFiles(_, "file", "page", "run", "text") { (file, bytes) =>
       PdfCodec.decode(bytes).toSeq.flatten.map(r =>
         (file, r.page, r.run, r.text))
-    }
+    })
 
-  /** EXIF metadata scan — one row per tag value from the APP1 TIFF
-    * tree of each JPEG, via [[ExifCodec.parse]]: the image-side PII
-    * surface (GPS sub-IFD) plus orientation/camera metadata. A JPEG
-    * without an Exif segment contributes zero rows; a malformed TIFF
-    * block refuses the whole file. */
-  def readExifFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeFiles(scan(spark, dir, "*.jpg"),
-        "file", "ifd", "tag", "ttype", "idx", "num", "den", "sval") { (file, bytes) =>
+  /** EXIF metadata — one row per tag value from the APP1 TIFF tree of
+    * each JPEG, via [[ExifCodec.parse]]: the image-side PII surface
+    * (GPS sub-IFD) plus orientation/camera metadata. A JPEG without an
+    * Exif segment contributes zero rows; a malformed TIFF block
+    * refuses the whole file. */
+  val exif = Format("*.jpg",
+    decodeFiles(_, "file", "ifd", "tag", "ttype", "idx", "num", "den", "sval") { (file, bytes) =>
       ExifCodec.parse(bytes).toSeq.flatten.map(t =>
         (file, t.ifd, t.tag, t.ttype, t.idx, t.num, t.den,
           Option(t.sval)))
-    }
+    })
 
-  /** Subtitle-cue scan — WebVTT and SRT caption files (the text half
-    * of caption-to-frame alignment), parsed by [[SubtitleCodec]] with
+  /** Subtitle cues — WebVTT and SRT caption files (the text half of
+    * caption-to-frame alignment), parsed by [[SubtitleCodec]] with
     * whole-file refusal on structural faults. One row per cue:
     * [start_ms, end_ms) wall time + payload text. */
-  def readSubtitleFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeSubtitleBatch(scan(spark, dir, "*.{vtt,srt}"))
-
-  /** One batch of caption files → per-cue rows — shared by the batch
-    * scan and the streaming arm so the two paths cannot drift. */
-  def decodeSubtitleBatch(batch: DataFrame): DataFrame =
-    decodeFiles(batch, "file", "cue", "start_ms", "end_ms", "text") { (file, bytes) =>
+  val subtitles = Format("*.{vtt,srt}",
+    decodeFiles(_, "file", "cue", "start_ms", "end_ms", "text") { (file, bytes) =>
       val cues =
         if (file.endsWith(".srt")) SubtitleCodec.decodeSrt(bytes)
         else SubtitleCodec.decodeVtt(bytes)
       cues.toSeq.flatten.map(c =>
         (file, c.idx, c.startMs, c.endMs, c.text))
-    }
+    })
 
-  /** TFRecord shard scan — the classic training-example wire format:
+  /** TFRecord shards — the classic training-example wire format:
     * `.tfrecord` (and whole-file gzipped `.tfrecord.gz`) shards, each
     * frame-checked and proto-decoded by [[TfRecordCodec]]. Output is
     * one row per feature ELEMENT (file, rec_idx, key, kind, elem_idx,
@@ -678,15 +622,10 @@ object GeoIngest {
     * is not a parseable `tf.train.Example` keeps a single degraded
     * row (kind `unparsed`, payload in bytes_val); a file with any
     * framing/CRC violation skips whole. */
-  def readTfRecordFiles(spark: SparkSession, dir: String): DataFrame =
-    decodeTfRecordBatch(scan(spark, dir, "*.tfrecord*"))
-
-  /** One batch of TFRecord shards → per-element rows — shared by the
-    * batch scan and any streaming arm so the two paths cannot drift. */
-  def decodeTfRecordBatch(batch: DataFrame): DataFrame = {
-    import GeoIngest.{TfElem => R}
-    decodeFiles(batch, "file", "rec_idx", "key", "kind", "elem_idx",
+  val tfrecord = Format("*.tfrecord*",
+    decodeFiles(_, "file", "rec_idx", "key", "kind", "elem_idx",
         "int_val", "float_bits", "bytes_val") { (file, bytes) =>
+      import GeoIngest.{TfElem => R}
       val raw =
         if (file.endsWith(".gz")) GzipCodec.decode(bytes).map(_.data)
         else Some(bytes)
@@ -722,10 +661,9 @@ object GeoIngest {
             }
           }
         }
-    }
-  }
+    })
 
-  /** Row shape of [[decodeTfRecordBatch]] — one feature element. */
+  /** Row shape of [[tfrecord]] — one feature element. */
   case class TfElem(
       file: String, rec_idx: Int, key: Option[String], kind: String,
       elem_idx: Option[Int], int_val: Option[Long],

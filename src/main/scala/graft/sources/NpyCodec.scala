@@ -73,7 +73,7 @@ object NpyCodec {
     if (dims.isEmpty || dims.length > 2) return None
     // toIntOption (not isDigit+toInt): an adversarial oversized dim
     // like 99999999999 must map to the None contract, not NFE-kill a
-    // readNpyFiles task; isDigit alone also admits Unicode digits.
+    // GeoIngest.npy task; isDigit alone also admits Unicode digits.
     val parsed = dims.map(_.toIntOption)
     if (parsed.exists(_.isEmpty)) return None
     val shape = parsed.map(_.get).toSeq

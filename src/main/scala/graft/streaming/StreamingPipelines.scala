@@ -470,25 +470,19 @@ object StreamingPipelines {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Streaming NetCDF landing-zone ingest — the eval recombine step
-    * ([[graft.sources.GeoIngest.readNetcdfFiles]], the reference's
-    * `load_from_nc` over a results dir) as a continuous pipeline:
-    * every `.nc` prediction shard that LANDS is decoded through the
-    * SAME shared kernel as the batch scan
-    * ([[graft.sources.GeoIngest.decodeNetcdfBatch]]) and upserted
-    * into a batch_id-partitioned parquet table, exactly-once under
-    * retries (checkpoint pins each batch's file set; the
-    * mode-overwrite per-batch-dir sink is replay-idempotent).
-    * Corrupt or out-of-profile files skip inside the kernel — a bad
-    * shard never stalls the stream. */
-  /** Shared landed-binary-shard ingest discipline: binaryFile stream
-    * over one glob, per-batch executor-side decode, batch_id-
-    * partitioned parquet sink (idempotent under batch retries via
-    * overwrite), checkpointed AvailableNow. One copy of the recipe so
-    * the per-format ingests can't drift. */
-  private def binaryShardIngest(spark: SparkSession, srcDir: String,
-      glob: String, destDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int)(decode: DataFrame => DataFrame): StreamingQuery =
+  /** Landing-zone ingest of one binary file format: every file that
+    * lands in `srcDir` matching the format's glob is decoded per
+    * micro-batch by the SAME decode as the batch
+    * [[graft.sources.GeoIngest.Format.read]] and written to a
+    * batch_id-partitioned parquet table, exactly-once under retries
+    * (the checkpoint pins each batch's file set; the mode-overwrite
+    * per-batch directory is replay-idempotent). Corrupt or
+    * out-of-profile files skip inside the decode — a bad shard never
+    * stalls the stream. Each trigger takes at most 100 files, the
+    * backpressure that lets a crawl-scale landing zone drain in
+    * bounded batches. */
+  def ingest(spark: SparkSession, format: graft.sources.GeoIngest.Format,
+      srcDir: String, destDir: String, checkpointDir: String): StreamingQuery =
     spark.readStream
       .format("binaryFile")
       // file stream sources require the schema up front; binaryFile's is fixed
@@ -497,213 +491,17 @@ object StreamingPipelines {
         StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
         StructField("length", org.apache.spark.sql.types.LongType),
         StructField("content", org.apache.spark.sql.types.BinaryType))))
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("pathGlobFilter", format.glob)
+      .option("maxFilesPerTrigger", 100)
       .load(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decode(batch)
+        format.decode(batch)
           .write.mode("overwrite").parquet(s"$destDir/batch_id=$batchId")
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  def netcdfIngest(spark: SparkSession, srcDir: String, destDir: String,
-                   checkpointDir: String, maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.nc", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeNetcdfBatch)
-
-  /** One micro-batch of landed webdataset shards → per-sample feature
-    * rows, executor-side: each tar decodes ([[graft.sources
-    * .TarCodec]]), members pair by basename (the webdataset rule),
-    * and each sample's image decodes through [[graft.sources
-    * .JpegCodec]] — baseline AND progressive, since a real crawl
-    * carries both. The skip contract composes: a corrupt SHARD drops
-    * whole, an undecodable or unpaired MEMBER drops that sample, and
-    * neither kills the stream. */
-  def decodeWebdatasetBatch(batch: DataFrame): DataFrame =
-    graft.sources.GeoIngest.decodeFiles(batch, "shard", "sample", "caption_bytes",
-        "width", "height", "channels", "px_sum") { (shard, bytes) =>
-      graft.sources.TarCodec.decode(bytes) match {
-        case None => Seq.empty // corrupt shard: skip, not kill
-        case Some(members) =>
-          // webdataset key: basename AFTER the last '/', up to the
-          // first '.' — real shards (tar -cf shard.tar .) prefix
-          // members with "./", which a naive takeWhile would
-          // collapse into one group and silently mispair
-          def sampleKey(n: String): String =
-            n.substring(n.lastIndexOf('/') + 1).takeWhile(_ != '.')
-          members.groupBy(m => sampleKey(m.name)).toSeq
-            .filter(_._1.nonEmpty) // directory entries / dotfiles
-            .sortBy(_._1)
-            .flatMap { case (sample, ms) =>
-              for {
-                txt <- ms.find(_.name.endsWith(".txt"))
-                jpg <- ms.find(_.name.endsWith(".jpg"))
-                img <- graft.sources.JpegCodec.decode(jpg.data)
-              } yield {
-                var px = 0L
-                var i = 0
-                while (i < img.pixels.length) { px += img.pixels(i) & 0xff; i += 1 }
-                (shard, sample, txt.data.length, img.width, img.height,
-                  img.channels, px)
-              }
-            }
-      }
-    }
-
-  /** Webdataset shard stream — the LAION crawl AS A STREAM: tar
-    * shards land in a directory, each micro-batch decodes its members
-    * through [[decodeWebdatasetBatch]], and per-sample rows append as
-    * a batch_id-partitioned parquet table, exactly-once under the
-    * checkpoint (same discipline as [[netcdfIngest]]). At crawl scale
-    * `maxFilesPerTrigger` is the backpressure knob and the per-shard
-    * decode fans out across executors — the batch q_webdataset_jpeg
-    * plan and this stream share every decode kernel. */
-  def webdatasetIngest(spark: SparkSession, srcDir: String, destDir: String,
-                       checkpointDir: String,
-                       maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.tar", destDir, checkpointDir,
-      maxFilesPerTrigger)(decodeWebdatasetBatch)
-
-  /** Streaming WARC ingest — crawl archives landing as `*.warc.gz`
-    * (the Common Crawl delivery shape) decoded to per-record rows per
-    * micro-batch, exactly-once, with the per-file refusal / per-record
-    * degrade contract of the batch path (one shared decode:
-    * [[graft.sources.GeoIngest.decodeWarcBatch]]). */
-  def warcIngest(spark: SparkSession, srcDir: String, destDir: String,
-                 checkpointDir: String,
-                 maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.warc*", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeWarcBatch)
-
-  /** Streaming WET ingest — extracted-text deliverables landing as
-    * `*.warc.wet.gz` decoded to per-page text rows per micro-batch,
-    * exactly-once; one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeWetBatch]]). Point it at a WET
-    * drop directory (the `*.wet*` glob is a subset of [[warcIngest]]'s
-    * `*.warc*` — deliverables land in separate prefixes, as on the
-    * real crawl buckets). */
-  def wetIngest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.wet*", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeWetBatch)
-
-  /** Streaming WAT ingest — per-record JSON metadata envelopes landing
-    * as `*.warc.wat.gz` decoded per micro-batch, exactly-once; one
-    * decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeWatBatch]]). */
-  def watIngest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.wat*", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeWatBatch)
-
-  /** Streaming TFRecord shard ingest — training-example shards
-    * decoded to per-feature-element rows per micro-batch,
-    * exactly-once; one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeTfRecordBatch]]) so the two
-    * cannot drift. */
-  def tfrecordIngest(spark: SparkSession, srcDir: String, destDir: String,
-                     checkpointDir: String,
-                     maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.tfrecord*", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeTfRecordBatch)
-
-  /** Streaming `.jsonl.zst` shard ingest — the compressed-JSONL
-    * delivery shape modern web corpora ship in, decoded to per-line
-    * rows per micro-batch, exactly-once; one decode shared with the
-    * batch path ([[graft.sources.GeoIngest.decodeJsonlZstBatch]]). */
-  def zstIngest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.zst", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeJsonlZstBatch)
-
-  /** Streaming Arrow shard ingest — Feather V2 exports or HF-cache
-    * stream files landing as `.arrow` shards, decoded to per-cell
-    * rows per micro-batch, exactly-once; one decode shared with the
-    * batch path ([[graft.sources.GeoIngest.decodeArrowBatch]]). */
-  def arrowIngest(spark: SparkSession, srcDir: String, destDir: String,
-                  checkpointDir: String,
-                  maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.arrow", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeArrowBatch)
-
-  /** Streaming PDF ingest — crawled documents landing as `.pdf`,
-    * each extracted to per-text-run rows per micro-batch,
-    * exactly-once; one walk shared with the batch path
-    * ([[graft.sources.GeoIngest.decodePdfBatch]]). */
-  def pdfIngest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.pdf", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodePdfBatch)
-
-  /** Streaming audio-metadata ingest — FLAC/MP3 files landing in a
-    * crawl directory, metadata rows per micro-batch, exactly-once;
-    * one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeAudioMetaBatch]]). */
-  def audioMetaIngest(spark: SparkSession, srcDir: String, destDir: String,
-                      checkpointDir: String,
-                      maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.{flac,mp3}", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeAudioMetaBatch)
-
-  /** Streaming caption ingest — WebVTT/SRT files landing as an ASR
-    * pipeline emits them, parsed to per-cue rows per micro-batch,
-    * exactly-once; one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeSubtitleBatch]]). */
-  def subtitleIngest(spark: SparkSession, srcDir: String, destDir: String,
-                     checkpointDir: String,
-                     maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.{vtt,srt}", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeSubtitleBatch)
-
-  /** Streaming MP4 ingest — video files landing in a crawl directory,
-    * each walked to its per-sample (offset, size, pts, sync) table
-    * per micro-batch, exactly-once; one walk shared with the batch
-    * path ([[graft.sources.GeoIngest.decodeMp4Batch]]) — the
-    * frame-fetch plan for a video corpus as a stream. */
-  def mp4Ingest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.mp4", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeMp4Batch)
-
-  /** Streaming MediaWiki dump ingest — `pages-articles` shards landing
-    * as `.xml.bz2`, parsed to per-page rows per micro-batch,
-    * exactly-once; one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeWikiBatch]]). */
-  def wikiIngest(spark: SparkSession, srcDir: String, destDir: String,
-                 checkpointDir: String,
-                 maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.xml*", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeWikiBatch)
-
-  /** Streaming safetensors shard ingest — embedding/weight dumps
-    * landing as `.safetensors` shards (the tensor sibling of the
-    * webdataset arm), decoded to per-element rows per micro-batch,
-    * exactly-once; one decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeSafetensorsBatch]]). */
-  def safetensorsIngest(spark: SparkSession, srcDir: String, destDir: String,
-                        checkpointDir: String,
-                        maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.safetensors", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeSafetensorsBatch)
-
-  /** Streaming `.jsonl.bz2` shard ingest — the bzip2 sibling of
-    * [[zstIngest]] (Wikipedia-dump / pushshift delivery shape),
-    * decoded to per-line rows per micro-batch, exactly-once; one
-    * decode shared with the batch path
-    * ([[graft.sources.GeoIngest.decodeJsonlBz2Batch]]). */
-  def bz2Ingest(spark: SparkSession, srcDir: String, destDir: String,
-                checkpointDir: String,
-                maxFilesPerTrigger: Int = 100): StreamingQuery =
-    binaryShardIngest(spark, srcDir, "*.bz2", destDir, checkpointDir,
-      maxFilesPerTrigger)(graft.sources.GeoIngest.decodeJsonlBz2Batch)
 
   /** Pattern 1: landing-zone file ingest → parquet, exactly-once
     * end-to-end: the checkpoint pins each batch's file set (a batch

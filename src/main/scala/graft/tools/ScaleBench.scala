@@ -2,9 +2,11 @@ package graft.tools
 
 import graft.{Bench, Sessions, SparkEntry}
 
-/** Scale checkpoint: measure each selected query at sf0.1 AND at the
-  * derived sf1 (10× rows, [[ScaleGen]]) back-to-back in ONE JVM, and
-  * report the per-query scaling ratio/exponent. Interleaving the two
+/** Scale checkpoint: measure each selected query at a small scale
+  * factor AND a big one (by default sf0.1 and the derived sf1, 10×
+  * rows, [[ScaleGen]]) back-to-back in ONE JVM, and report the
+  * per-query scaling ratio/exponent. Each directory's scale comes from
+  * the `sf<x>` in its last path component. Interleaving the two
   * scales per query keeps a hypervisor steal window from biasing one
   * scale's numbers; each (query, scale) takes the MIN of two runs
   * (first run per scale also absorbs codegen). Writes
@@ -15,11 +17,11 @@ import graft.{Bench, Sessions, SparkEntry}
   * the complement is pinned by ScaleBenchSpec. Each run is timed by
   * [[graft.Bench.timeQuery]] (build plus noop sink).
   *
-  * Exponent semantics: e = log(t_big/t_small) / log(10) — 1.0 is
-  * perfectly linear in rows, < 1 means fixed per-query overhead still
-  * dominates at sf1, > 1 superlinear. Queries whose work is bounded
-  * by a knob rather than the corpus (fixed query sets, k-row
-  * artifacts) legitimately sit far below 1.
+  * Exponent semantics: e = log(t_big/t_small) / log(sf_big/sf_small)
+  * — 1.0 is perfectly linear in rows, < 1 means fixed per-query
+  * overhead still dominates at the big scale, > 1 superlinear.
+  * Queries whose work is bounded by a knob rather than the corpus
+  * (fixed query sets, k-row artifacts) legitimately sit far below 1.
   */
 object ScaleBench {
   /** Queries whose input is a committed foreign fixture that does not
@@ -41,6 +43,17 @@ object ScaleBench {
   private[graft] val Selected: Seq[String] =
     (SparkEntry.queries.keySet -- GoldenPinned).toSeq.sorted
 
+  /** The scale factor named by the `sf<x>` in `dir`'s last path
+    * component (`sf0.1` → 0.1, `testdata_sf1` → 1.0); a directory
+    * whose name carries none is refused. */
+  private[graft] def scaleOf(dir: String): Double = {
+    val name = java.nio.file.Paths.get(dir).getFileName.toString
+    """sf(\d+(?:\.\d+)?)""".r.findFirstMatchIn(name)
+      .map(_.group(1).toDouble).filter(_ > 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no positive sf<x> scale in the last path component of $dir"))
+  }
+
   def main(args: Array[String]): Unit = {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val big = if (args.length > 1) args(1) else new java.io.File("testdata_sf1").getAbsolutePath
@@ -50,6 +63,8 @@ object ScaleBench {
     // provenance when merging)
     val subset: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
+    val (sfSmall, sfBig) = (scaleOf(small), scaleOf(big))
+    require(sfBig != sfSmall, s"both directories are sf$sfSmall")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
 
     def once(name: String, dir: String): Double =
@@ -62,23 +77,23 @@ object ScaleBench {
       val s2 = once(name, small); val b2 = once(name, big)
       val s = math.min(s1, s2); val b = math.min(b1, b2)
       val ratio = b / s
-      val expn = math.log(ratio) / math.log(10.0)
-      println(f"$name%-24s sf0.1=$s%7.2fs sf1=$b%7.2fs ratio=$ratio%6.2f exp=$expn%5.2f")
+      val expn = math.log(ratio) / math.log(sfBig / sfSmall)
+      println(f"$name%-24s sf$sfSmall=$s%7.2fs sf$sfBig=$b%7.2fs ratio=$ratio%6.2f exp=$expn%5.2f")
       (name, s, b, ratio, expn)
     }
     val totalS = rows.map(_._2).sum
     val totalB = rows.map(_._3).sum
     val json = new StringBuilder
-    json ++= s"""{"metric":"scale_checkpoint","sf_small":0.1,"sf_big":1.0,"""
-    json ++= s""""n_queries":${rows.size},"total_sf01":${f"$totalS%.2f"},"total_sf1":${f"$totalB%.2f"},"""
+    json ++= s"""{"metric":"scale_checkpoint","sf_small":$sfSmall,"sf_big":$sfBig,"""
+    json ++= s""""n_queries":${rows.size},"total_small":${f"$totalS%.2f"},"total_big":${f"$totalB%.2f"},"""
     json ++= s""""total_ratio":${f"${totalB / totalS}%.3f"},"queries":{"""
     json ++= rows.map { case (n, s, b, r, e) =>
-      s""""$n":{"sf01":${f"$s%.3f"},"sf1":${f"$b%.3f"},"ratio":${f"$r%.3f"},"exp":${f"$e%.3f"}}"""
+      s""""$n":{"small":${f"$s%.3f"},"big":${f"$b%.3f"},"ratio":${f"$r%.3f"},"exp":${f"$e%.3f"}}"""
     }.mkString(",")
     json ++= "}}"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json.toString)
     println(json.takeRight(200))
-    println(f"TOTALS sf0.1=$totalS%.1fs sf1=$totalB%.1fs ratio=${totalB / totalS}%.2f")
+    println(f"TOTALS sf$sfSmall=$totalS%.1fs sf$sfBig=$totalB%.1fs ratio=${totalB / totalS}%.2f")
     spark.stop()
   }
 }

@@ -587,7 +587,7 @@ class ArrowCodecSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("arrowsink").toString
     graft.sources.Sinks.writeArrowShards(df, dir, 4)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-    val back = graft.sources.GeoIngest.readArrowFiles(spark, dir)
+    val back = graft.sources.GeoIngest.arrow.read(spark, dir)
     val idBits = back.filter(col("col") === "id")
       .select(col("bits")).as[Long].collect().sorted
     assert(idBits.toSeq == (0L until 9L))
@@ -603,7 +603,7 @@ class ArrowCodecSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("arrowtext").toString
     graft.sources.Sinks.writeArrowTextShards(df, dir, rowsPerShard = 3)
     assert(new java.io.File(dir, "_SUCCESS").exists())
-    val back = graft.sources.GeoIngest.readArrowFiles(spark, dir)
+    val back = graft.sources.GeoIngest.arrow.read(spark, dir)
     val texts = back.filter(col("col") === "text")
       .select("str_val").collect().map(_.getString(0)).sorted
     assert(texts.toSeq ==
@@ -619,7 +619,7 @@ class ArrowCodecSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "t.arrow"), fixture("stream-02.arrow"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "bad.arrow"), Array[Byte](65, 82, 82))
-    val rows = graft.sources.GeoIngest.readArrowFiles(spark, dir)
+    val rows = graft.sources.GeoIngest.arrow.read(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(2)))
     assert(rows.length == 6)
     assert(rows.forall(_._1 == "t.arrow"))

@@ -122,12 +122,12 @@ class AudioMetaCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: both dirs, refused files absent") {
-    val fl = graft.sources.GeoIngest.readAudioMetaFiles(
+    val fl = graft.sources.GeoIngest.audioMeta.read(
       spark, graft.Fixtures.path("q_flac_meta"))
     assert(fl.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap ==
       Map("tone-00.flac" -> 10L, "nocomment-01.flac" -> 4L))
-    val mp = graft.sources.GeoIngest.readAudioMetaFiles(
+    val mp = graft.sources.GeoIngest.audioMeta.read(
       spark, graft.Fixtures.path("q_id3_tags"))
     assert(mp.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap ==

@@ -77,7 +77,7 @@ class AvifCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: refused files absent") {
-    val df = graft.sources.GeoIngest.readAvifFiles(
+    val df = graft.sources.GeoIngest.avif.read(
       spark, graft.Fixtures.path("q_avif_meta"))
     val files = df.select("file").distinct().collect()
       .map(_.getString(0)).toSet

@@ -88,7 +88,7 @@ class BmpCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: per-pixel rows, corrupt files skipped") {
-    val df = graft.sources.GeoIngest.readBmpFiles(
+    val df = graft.sources.GeoIngest.bmp.read(
       spark, graft.Fixtures.path("q_bmp_decode"))
     val byFile = df.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

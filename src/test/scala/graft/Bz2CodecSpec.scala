@@ -53,7 +53,7 @@ class Bz2CodecSpec extends SparkSpec {
 
   test("distributed ingest: per-line rows, corrupt and garbage shards skipped") {
     val fx = graft.Fixtures.path("q_jsonl_bz2")
-    val df = graft.sources.GeoIngest.readJsonlBz2(spark, fx)
+    val df = graft.sources.GeoIngest.jsonlBz2.read(spark, fx)
     val byShard = df.groupBy("shard").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(byShard == Map(

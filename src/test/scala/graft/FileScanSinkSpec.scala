@@ -3,11 +3,12 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.operators.MultimodalOps
 import graft.sources.{GeoIngest, NpyCodec, Sinks, WavCodec}
+import graft.streaming.StreamingPipelines
 
 /** Pins of the file layer around the codecs: every `Sinks` file
   * writer's file names and bytes on fixed inputs, and every
@@ -134,98 +135,116 @@ class FileScanSinkSpec extends SparkSpec {
       vals, lzw = false, predictor = false)) // no georef → skipped
     Files.write(Paths.get(geo, "bad.tif"), junk)
     val readers = Seq[(String, DataFrame)](
-      "readTiffTiles" -> GeoIngest.readTiffTiles(spark, withExtra("tiff", "tile_99.tif" -> junk)),
-      "readTiffGeoPixels" -> GeoIngest.readTiffGeoPixels(spark, geo),
-      "readNetcdfFiles" -> GeoIngest.readNetcdfFiles(spark, withExtra("netcdf", "broken.nc" -> junk)),
-      "readNpyFiles" -> GeoIngest.readNpyFiles(spark, withExtra("npy", "tile_99.npy" -> junk)),
-      "readWavClips" -> GeoIngest.readWavClips(spark, withExtra("wav", "clip_99.wav" -> junk)),
-      "readJsonlGz" -> GeoIngest.readJsonlGz(spark, withExtra("jsonl_gz", "bad.jsonl.gz" -> junk)),
-      "readTarShards" -> GeoIngest.readTarShards(spark, withExtra("tar",
+      "tiffTiles" -> GeoIngest.tiffTiles.read(spark, withExtra("tiff", "tile_99.tif" -> junk)),
+      "tiffGeoPixels" -> GeoIngest.tiffGeoPixels.read(spark, geo),
+      "netcdf" -> GeoIngest.netcdf.read(spark, withExtra("netcdf", "broken.nc" -> junk)),
+      "npy" -> GeoIngest.npy.read(spark, withExtra("npy", "tile_99.npy" -> junk)),
+      "wav" -> GeoIngest.wav.read(spark, withExtra("wav", "clip_99.wav" -> junk)),
+      "jsonlGz" -> GeoIngest.jsonlGz.read(spark, withExtra("jsonl_gz", "bad.jsonl.gz" -> junk)),
+      "tarShards" -> GeoIngest.tarShards.read(spark, withExtra("tar",
         "a.tar.gz" -> graft.sources.GzipCodec.encode("a.tar", tarBytes),
         "b.tgz" -> graft.sources.GzipCodec.encode("b.tar", tarBytes),
         "c.tar.zst" -> graft.sources.ZstdCodec.encode(tarBytes),
         "bad.tar" -> junk, "bad.tar.gz" -> junk)))
     val expected = Map[String, String](
-      "readTiffTiles" -> "4:17ae751e84046022b6431789230b4608",
-      "readTiffGeoPixels" -> "14:ea88c56ff4c2332239947679f31e2a16",
-      "readNetcdfFiles" -> "6:e9c5ca2d22258e7b44065f35a522148d",
-      "readNpyFiles" -> "3:00025e14fa492f3124b331b1b5b8fbc5",
-      "readWavClips" -> "2:1f89dbc571887d65dadc75db835b0b3f",
-      "readJsonlGz" -> "7:7cca0e28a62bbc010dc1480709431f5f",
-      "readTarShards" -> "13:d7aabd6002c3673d0dff809df2d6ce4b")
+      "tiffTiles" -> "4:17ae751e84046022b6431789230b4608",
+      "tiffGeoPixels" -> "14:ea88c56ff4c2332239947679f31e2a16",
+      "netcdf" -> "6:e9c5ca2d22258e7b44065f35a522148d",
+      "npy" -> "3:00025e14fa492f3124b331b1b5b8fbc5",
+      "wav" -> "2:1f89dbc571887d65dadc75db835b0b3f",
+      "jsonlGz" -> "7:7cca0e28a62bbc010dc1480709431f5f",
+      "tarShards" -> "13:d7aabd6002c3673d0dff809df2d6ce4b")
     assertPinned(expected, readers.map { case (n, df) => n -> RowDigest.of(df) })
   }
 
+  /** Every format with a committed fixture directory: (format name,
+    * format, fixture). */
+  private val fixtureFormats = Seq[(String, GeoIngest.Format, String)](
+    ("h5", GeoIngest.h5, "q_hdf5_read"),
+    ("jsonlZst", GeoIngest.jsonlZst, "q_jsonl_zst"),
+    ("jsonlBz2", GeoIngest.jsonlBz2, "q_jsonl_bz2"),
+    ("wiki", GeoIngest.wiki, "q_wiki_pages"),
+    ("warc", GeoIngest.warc, "q_warc_extract"),
+    ("wet", GeoIngest.wet, "q_wet_extract"),
+    ("wat", GeoIngest.wat, "q_wat_extract"),
+    ("bmp", GeoIngest.bmp, "q_bmp_decode"),
+    ("gif", GeoIngest.gif, "q_gif_decode"),
+    ("gifCanvases", GeoIngest.gifCanvases, "q_gif_frames"),
+    ("arrow", GeoIngest.arrow, "q_arrow_read"),
+    ("safetensors", GeoIngest.safetensors, "q_safetensors_read"),
+    ("zip", GeoIngest.zip, "q_zip_scan"),
+    ("avro", GeoIngest.avro, "q_avro_read"),
+    ("mp4", GeoIngest.mp4, "q_mp4_samples"),
+    ("webp", GeoIngest.webp, "q_webp_meta"),
+    ("opus", GeoIngest.opus, "q_opus_meta"),
+    ("avif", GeoIngest.avif, "q_avif_meta"),
+    ("audioMeta", GeoIngest.audioMeta, "q_flac_meta"),
+    ("audioMeta", GeoIngest.audioMeta, "q_id3_tags"),
+    ("pdf", GeoIngest.pdf, "q_pdf_text"),
+    ("exif", GeoIngest.exif, "q_exif_meta"),
+    ("subtitles", GeoIngest.subtitles, "q_vtt_cues"),
+    ("tfrecord", GeoIngest.tfrecord, "q_tfrecord_read"))
+
   test("every fixture-backed binaryFile reader gives its pinned rows") {
-    def fx(q: String) = Fixtures.path(q)
-    val readers = Seq[(String, (SparkSession, String) => DataFrame, String)](
-      ("readH5Files", GeoIngest.readH5Files, "q_hdf5_read"),
-      ("readJsonlZst", GeoIngest.readJsonlZst, "q_jsonl_zst"),
-      ("readJsonlBz2", GeoIngest.readJsonlBz2, "q_jsonl_bz2"),
-      ("readWikiDumps", GeoIngest.readWikiDumps, "q_wiki_pages"),
-      ("readWarcFiles", GeoIngest.readWarcFiles, "q_warc_extract"),
-      ("readWetFiles", GeoIngest.readWetFiles, "q_wet_extract"),
-      ("readWatFiles", GeoIngest.readWatFiles, "q_wat_extract"),
-      ("readBmpFiles", GeoIngest.readBmpFiles, "q_bmp_decode"),
-      ("readGifFiles", GeoIngest.readGifFiles, "q_gif_decode"),
-      ("readGifCanvases", GeoIngest.readGifCanvases, "q_gif_frames"),
-      ("readArrowFiles", GeoIngest.readArrowFiles, "q_arrow_read"),
-      ("readSafetensorsFiles", GeoIngest.readSafetensorsFiles, "q_safetensors_read"),
-      ("readZipFiles", GeoIngest.readZipFiles, "q_zip_scan"),
-      ("readAvroFiles", GeoIngest.readAvroFiles, "q_avro_read"),
-      ("readMp4Files", GeoIngest.readMp4Files, "q_mp4_samples"),
-      ("readWebpFiles", GeoIngest.readWebpFiles, "q_webp_meta"),
-      ("readOpusFiles", GeoIngest.readOpusFiles, "q_opus_meta"),
-      ("readAvifFiles", GeoIngest.readAvifFiles, "q_avif_meta"),
-      ("readAudioMetaFiles", GeoIngest.readAudioMetaFiles, "q_flac_meta"),
-      ("readAudioMetaFiles", GeoIngest.readAudioMetaFiles, "q_id3_tags"),
-      ("readPdfFiles", GeoIngest.readPdfFiles, "q_pdf_text"),
-      ("readExifFiles", GeoIngest.readExifFiles, "q_exif_meta"),
-      ("readSubtitleFiles", GeoIngest.readSubtitleFiles, "q_vtt_cues"),
-      ("readTfRecordFiles", GeoIngest.readTfRecordFiles, "q_tfrecord_read"))
     val expected = Map[String, String](
-      "readH5Files q_hdf5_read" -> "158:101d65e38d1a1f97db3ae7f2922b39b7",
-      "readJsonlZst q_jsonl_zst" -> "47:91fa56a4c74fb5a207c69e216ede45ee",
-      "readJsonlBz2 q_jsonl_bz2" -> "35:f93ed89423bdd7e26845b873a0652d89",
-      "readWikiDumps q_wiki_pages" -> "8:e2d5a25d56df36beaf9a54644ea485e6",
-      "readWarcFiles q_warc_extract" -> "14:06b1b769a7554d6e72d2cdab5e0e6984",
-      "readWetFiles q_wet_extract" -> "7:16c3493422ff6dfb9ea16cc272cede2d",
-      "readWatFiles q_wat_extract" -> "5:1a009d485544716c012ca85156980edc",
-      "readBmpFiles q_bmp_decode" -> "167:7a6628dddb88310aee0683d8b882e9f7",
-      "readGifFiles q_gif_decode" -> "12686:22b313b14408fd6640c758ee40ce77f0",
-      "readGifCanvases q_gif_frames" -> "680:318cdb7b9b3536aabdeabb813a99592f",
-      "readArrowFiles q_arrow_read" -> "657:2ec02abd262cd5352bdebee834fd9cdd",
-      "readSafetensorsFiles q_safetensors_read" -> "61:e498a909b65fdb0dd5546a4ec692bcf2",
-      "readZipFiles q_zip_scan" -> "11:1a491e15464bc97b326a5be48d53ca64",
-      "readAvroFiles q_avro_read" -> "120:a86ee93b39731023526516baf0045e4a",
-      "readMp4Files q_mp4_samples" -> "85:a67ccc12c4040b51e2c64b568d77a526",
-      "readWebpFiles q_webp_meta" -> "39:ebd390bb484081b81ab02932245c153e",
-      "readOpusFiles q_opus_meta" -> "15:ac096f0411a4ca753b76d94716d4639c",
-      "readAvifFiles q_avif_meta" -> "23:7c7e964b7a66bf1ddb10d2672fd7fe03",
-      "readAudioMetaFiles q_flac_meta" -> "14:20a057d5b71bc7bea033d3a7faa4f514",
-      "readAudioMetaFiles q_id3_tags" -> "20:9a0c9aeeadbb71880325134cedcfcb78",
-      "readPdfFiles q_pdf_text" -> "40:9b03b0f4bfcdab05bc4ba2864b7dd279",
-      "readExifFiles q_exif_meta" -> "35:cd5ef615f9b0646264d17a9543d9755d",
-      "readSubtitleFiles q_vtt_cues" -> "19:9937a02939d93c76f1873f14ac7a3736",
-      "readTfRecordFiles q_tfrecord_read" -> "48:db933d1630d781989e4ae398fc1bf6ab")
-    assertPinned(expected, readers.map { case (n, read, q) => s"$n $q" -> RowDigest.of(read(spark, fx(q))) })
+      "h5 q_hdf5_read" -> "158:101d65e38d1a1f97db3ae7f2922b39b7",
+      "jsonlZst q_jsonl_zst" -> "47:91fa56a4c74fb5a207c69e216ede45ee",
+      "jsonlBz2 q_jsonl_bz2" -> "35:f93ed89423bdd7e26845b873a0652d89",
+      "wiki q_wiki_pages" -> "8:e2d5a25d56df36beaf9a54644ea485e6",
+      "warc q_warc_extract" -> "14:06b1b769a7554d6e72d2cdab5e0e6984",
+      "wet q_wet_extract" -> "7:16c3493422ff6dfb9ea16cc272cede2d",
+      "wat q_wat_extract" -> "5:1a009d485544716c012ca85156980edc",
+      "bmp q_bmp_decode" -> "167:7a6628dddb88310aee0683d8b882e9f7",
+      "gif q_gif_decode" -> "12686:22b313b14408fd6640c758ee40ce77f0",
+      "gifCanvases q_gif_frames" -> "680:318cdb7b9b3536aabdeabb813a99592f",
+      "arrow q_arrow_read" -> "657:2ec02abd262cd5352bdebee834fd9cdd",
+      "safetensors q_safetensors_read" -> "61:e498a909b65fdb0dd5546a4ec692bcf2",
+      "zip q_zip_scan" -> "11:1a491e15464bc97b326a5be48d53ca64",
+      "avro q_avro_read" -> "120:a86ee93b39731023526516baf0045e4a",
+      "mp4 q_mp4_samples" -> "85:a67ccc12c4040b51e2c64b568d77a526",
+      "webp q_webp_meta" -> "39:ebd390bb484081b81ab02932245c153e",
+      "opus q_opus_meta" -> "15:ac096f0411a4ca753b76d94716d4639c",
+      "avif q_avif_meta" -> "23:7c7e964b7a66bf1ddb10d2672fd7fe03",
+      "audioMeta q_flac_meta" -> "14:20a057d5b71bc7bea033d3a7faa4f514",
+      "audioMeta q_id3_tags" -> "20:9a0c9aeeadbb71880325134cedcfcb78",
+      "pdf q_pdf_text" -> "40:9b03b0f4bfcdab05bc4ba2864b7dd279",
+      "exif q_exif_meta" -> "35:cd5ef615f9b0646264d17a9543d9755d",
+      "subtitles q_vtt_cues" -> "19:9937a02939d93c76f1873f14ac7a3736",
+      "tfrecord q_tfrecord_read" -> "48:db933d1630d781989e4ae398fc1bf6ab")
+    assertPinned(expected, fixtureFormats.map { case (n, format, q) =>
+      s"$n $q" -> RowDigest.of(format.read(spark, Fixtures.path(q)))
+    })
+  }
+
+  test("streaming ingest lands the rows of the batch read for every fixture-backed format") {
+    val differ = fixtureFormats.flatMap { case (n, format, q) =>
+      val src = tmp(s"${n}_src")
+      files(Fixtures.path(q)).filter(Files.isRegularFile(_))
+        .foreach(p => Files.copy(p, Paths.get(src, p.getFileName.toString)))
+      val dest = tmp(s"${n}_dest")
+      StreamingPipelines.ingest(spark, format, src, dest, tmp(s"${n}_ckpt")).awaitTermination()
+      val (read, streamed) = (RowDigest.of(format.read(spark, src)),
+        RowDigest.of(spark.read.parquet(dest).drop("batch_id")))
+      if (read == streamed) None else Some(s"  $n $q: read $read, ingest $streamed")
+    }
+    assert(differ.isEmpty, differ.mkString("\n", "\n", ""))
   }
 
   test("tile_ and clip_ file ids parse alike in the tiff, npy and wav readers") {
     // file k carries k in its container, so each row names its file
     val tails = Seq("7", "-3", "+7", "007", "99999999999999999999", "", "x")
-    def ids(read: (SparkSession, String) => DataFrame, prefix: String, ext: String,
+    def ids(format: GeoIngest.Format, prefix: String, ext: String,
         body: Int => Array[Byte], tag: org.apache.spark.sql.Row => Int): Map[String, Long] = {
       val d = tmp("ids")
       val names = (tails.map(prefix + _) ++ Seq("other_5", "tile_7", "clip_7")).distinct
       names.zipWithIndex.foreach { case (n, k) => Files.write(Paths.get(d, s"$n.$ext"), body(k)) }
-      read(spark, d).collect().map(r => names(tag(r)).stripPrefix(prefix) -> r.getLong(0)).toMap
+      format.read(spark, d).collect().map(r => names(tag(r)).stripPrefix(prefix) -> r.getLong(0)).toMap
     }
-    val tiff = ids(GeoIngest.readTiffTiles, "tile_", "tif",
+    val tiff = ids(GeoIngest.tiffTiles, "tile_", "tif",
       k => MultimodalOps.encodeTiff(k + 1, 1, new Array[Byte](k + 1)), _.getInt(1) - 1)
-    val npy = ids(GeoIngest.readNpyFiles, "tile_", "npy",
+    val npy = ids(GeoIngest.npy, "tile_", "npy",
       k => NpyCodec.encodeF4(1, 0, Array(k.toFloat)), _.getSeq[Double](2).head.toInt)
-    val wav = ids(GeoIngest.readWavClips, "clip_", "wav",
+    val wav = ids(GeoIngest.wav, "clip_", "wav",
       k => WavCodec.encode(8000 + k, 1, Array(1)), _.getInt(1) - 8000)
     // a Unicode-digit tail cannot be a file name under a POSIX-locale
     // JVM, so it goes through the readers' one parse directly
@@ -240,18 +259,25 @@ class FileScanSinkSpec extends SparkSpec {
 
   test("src/main has one batch binaryFile scan, one path/content decode and one _SUCCESS write") {
     val kept = Set("\"binaryFile\"", "\"path\"", "\"content\"", "\"_SUCCESS\"")
+    // (shape, home file, text of the one allowed line, pattern)
     val shapes = Seq(
       // a streaming scan is `readStream.format(...)`: it stays apart
-      ("batch binaryFile scan", "GeoIngest.scala",
+      ("batch binaryFile scan", "GeoIngest.scala", "",
         """\b(?!readStream\b)\w+\s*\.\s*format\s*\(\s*"binaryFile"\s*\)""".r),
-      ("path/content decode half", "GeoIngest.scala",
+      ("streaming binaryFile scan", "StreamingPipelines.scala", "",
+        """\breadStream\s*\.\s*format\s*\(\s*"binaryFile"\s*\)""".r),
+      // a member call like `prog.scan(` is another method
+      ("scan( call", "GeoIngest.scala", "def read(",
+        """(?<!def )(?<![\w.])scan\s*\(|\bGeoIngest\s*\.\s*scan\s*\(""".r),
+      ("path/content decode half", "GeoIngest.scala", "",
         """select\s*\(\s*(?:col\s*\(\s*)?"path"\s*\)?\s*,\s*(?:col\s*\(\s*)?"content"""".r),
-      ("_SUCCESS marker", "Sinks.scala", "\"_SUCCESS\"".r))
+      ("_SUCCESS marker", "Sinks.scala", "", "\"_SUCCESS\"".r))
     val code = SourceScan.code(kept)
-    val found = shapes.flatMap { case (shape, home, re) =>
+    val lines = code.toMap.map { case (n, text) => n -> text.split("\n", -1) }
+    val found = shapes.flatMap { case (shape, home, within, re) =>
       val sites = SourceScan.sites(code, re)
-      if (sites.size == 1 && sites.head._1 == home) Nil
-      else s"${sites.size} of $shape (one, in $home, allowed):" +:
+      if (sites.size == 1 && sites.head._1 == home && lines(home)(sites.head._2 - 1).contains(within)) Nil
+      else s"${sites.size} of $shape (one, in $home${if (within.isEmpty) "" else s" on the `$within` line"}, allowed):" +:
         sites.map { case (n, l) => s"  $n:$l" }
     }
     if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))

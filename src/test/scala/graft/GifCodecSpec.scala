@@ -227,7 +227,7 @@ class GifCodecSpec extends SparkSpec {
   }
 
   test("distributed canvas ingest: full-canvas rows, refused files absent") {
-    val df = graft.sources.GeoIngest.readGifCanvases(
+    val df = graft.sources.GeoIngest.gifCanvases.read(
       spark, graft.Fixtures.path("q_gif_frames"))
     val byFile = df.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
@@ -238,7 +238,7 @@ class GifCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: per-pixel rows at canvas coords, corrupt files skipped") {
-    val df = graft.sources.GeoIngest.readGifFiles(
+    val df = graft.sources.GeoIngest.gif.read(
       spark, graft.Fixtures.path("q_gif_decode"))
     val byFile = df.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

@@ -108,7 +108,7 @@ class GzipCodecSpec extends SparkSpec {
     Sinks.writeJsonlGz(
       rows.toDF("key", "json").repartition(3), dir, recordsPerShard = 4)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-    val back = GeoIngest.readJsonlGz(spark, dir)
+    val back = GeoIngest.jsonlGz.read(spark, dir)
     assert(back.count() == 20)
     // every line round-trips; member names match their shard files
     val lines = back.select("line").as[String].collect().toSet
@@ -120,7 +120,7 @@ class GzipCodecSpec extends SparkSpec {
       .filter(p => p.toString.endsWith(".gz")).findFirst().get()
     val bytes = java.nio.file.Files.readAllBytes(victim)
     java.nio.file.Files.write(victim, bytes.take(bytes.length / 2))
-    val after = GeoIngest.readJsonlGz(spark, dir).count()
+    val after = GeoIngest.jsonlGz.read(spark, dir).count()
     assert(after < 20, "corrupt shard still contributed rows")
     assert(after > 0, "one corrupt shard killed the whole scan")
   }
@@ -132,7 +132,7 @@ class GzipCodecSpec extends SparkSpec {
     graft.sources.Sinks.writeJsonlZst(
       rows.toDF("key", "json").repartition(3), dir, recordsPerShard = 4)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-    val back = graft.sources.GeoIngest.readJsonlZst(spark, dir)
+    val back = graft.sources.GeoIngest.jsonlZst.read(spark, dir)
     assert(back.count() == 20)
     assert(back.select("line").as[String].collect().toSet == rows.map(_._2).toSet)
     // single-shot frames must carry the content size (FCS) so one-shot

@@ -752,7 +752,7 @@ class Hdf5CodecSpec extends SparkSpec {
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "instance_a.h5"), goldenInstance)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "one_b.h5"), goldenF32)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bad.h5"), Array[Byte](1, 2, 3))
-    val rows = graft.sources.GeoIngest.readH5Files(spark, dir)
+    val rows = graft.sources.GeoIngest.h5.read(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(rows.length == 5, s"expected 4 + 1 dataset rows, got ${rows.length}")
     assert(rows.count(_._1 == "instance_a") == 4)

@@ -228,7 +228,7 @@ class Mp4CodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: per-sample rows with fetch-proving md5s") {
-    val df = graft.sources.GeoIngest.readMp4Files(
+    val df = graft.sources.GeoIngest.mp4.read(
       spark, graft.Fixtures.path("q_mp4_samples"))
     val byFile = df.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

@@ -109,7 +109,7 @@ class NpyCodecSpec extends SparkSpec {
     // a 20-digit (> Long.MaxValue) tile id must map to -1, not throw
     Files.write(Paths.get(dir, "tile_99999999999999999999.npy"),
       NpyCodec.encodeF4(1, 0, Array(5.0f)))
-    val back = GeoIngest.readNpyFiles(spark, dir).collect()
+    val back = GeoIngest.npy.read(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getSeq[Int](1), r.getSeq[Double](2)))).toMap
     assert(back.keySet == Set(1L, 2L, -1L), s"unexpected tiles: ${back.keySet}")
     assert(back(1L) == ((Seq(2, 2), Seq(1.0, 2.0, 3.0, 4.0))))

@@ -243,7 +243,7 @@ class PdfCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: per-run rows, refused files absent") {
-    val df = graft.sources.GeoIngest.readPdfFiles(
+    val df = graft.sources.GeoIngest.pdf.read(
       spark, graft.Fixtures.path("q_pdf_text"))
     val byFile = df.groupBy("file").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

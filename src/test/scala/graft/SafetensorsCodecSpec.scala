@@ -158,7 +158,7 @@ class SafetensorsCodecSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("stsink").toString
     graft.sources.Sinks.writeSafetensorsShards(df, dir, 3)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-    val back = graft.sources.GeoIngest.readSafetensorsFiles(spark, dir)
+    val back = graft.sources.GeoIngest.safetensors.read(spark, dir)
     val embRows = back.filter(col("tensor") === "embeddings").count()
     val idRows = back.where(col("tensor") === "ids")
       .select(col("bits")).as[Long].collect().sorted
@@ -179,7 +179,7 @@ class SafetensorsCodecSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "good_a.safetensors"), basic)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "bad.safetensors"), Array[Byte](1, 2, 3))
-    val rows = graft.sources.GeoIngest.readSafetensorsFiles(spark, dir)
+    val rows = graft.sources.GeoIngest.safetensors.read(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(5)))
     assert(rows.length == 6)
     assert(rows.count(_._1 == "good_a.safetensors") == 6)

@@ -102,7 +102,7 @@ class SourcesSinksSpec extends SparkSpec {
     // and the distributed file source round-trips the sink's output,
     // skipping (not failing on) an injected corrupt tile
     Files.write(Paths.get(dir, "tile_99.tif"), "not a tiff".getBytes("UTF-8"))
-    val back = GeoIngest.readTiffTiles(spark, dir)
+    val back = GeoIngest.tiffTiles.read(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](3)).toMap
     assert(back.keySet == Set(1L, 2L), s"unexpected tiles: ${back.keySet}")
     assert(back(1L) == (0 until 8) && back(2L) == (10 until 16))
@@ -155,7 +155,7 @@ class SourcesSinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_ncread").toString
     Sinks.writeNetcdfFiles(groups, dir)
     Files.write(Paths.get(dir, "broken.nc"), "not a netcdf".getBytes("UTF-8"))
-    val back = GeoIngest.readNetcdfFiles(spark, dir)
+    val back = GeoIngest.netcdf.read(spark, dir)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(4)))
     assert(back.length == 3, s"expected 3 instances, got ${back.toSeq}")
     assert(back.toSet == Set(("t1", 0, 0.25), ("t2", 0, 0.5), ("t2", 1, 0.75)))

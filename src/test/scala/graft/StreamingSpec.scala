@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.sources.GeoIngest
 import graft.streaming.StreamingPipelines
 import graft.streaming.StreamingPipelines.{Obs, RunningStats}
 
@@ -347,7 +348,7 @@ class StreamingSpec extends SparkSpec {
 
   test("netcdfIngest streams landed .nc shards through the batch decode kernel exactly once") {
     import spark.implicits._
-    import graft.sources.{GeoIngest, Sinks}
+    import graft.sources.Sinks
     val src = Files.createTempDirectory("graft_nc_src").toString
     val dest = Files.createTempDirectory("graft_nc_dest").toString
     val ckpt = Files.createTempDirectory("graft_nc_ckpt").toString
@@ -359,24 +360,24 @@ class StreamingSpec extends SparkSpec {
         .toDF("group_id", "lat", "lon", "preds"), src)
     Files.write(java.nio.file.Paths.get(src, "broken.nc"),
       "not a netcdf".getBytes("UTF-8"))
-    StreamingPipelines.netcdfIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.netcdf, src, dest, ckpt).awaitTermination()
     val first = spark.read.parquet(dest)
     assert(first.count() == 3, "corrupt shard must skip, good ones decode")
 
     // replay with same checkpoint: nothing reprocessed
-    StreamingPipelines.netcdfIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.netcdf, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == 3)
 
     // a newly landed shard is picked up incrementally
     Sinks.writeNetcdfFiles(
       Seq(("t3", Array(16.0), Array(-15.0), Array(0.875)))
         .toDF("group_id", "lat", "lon", "preds"), src)
-    StreamingPipelines.netcdfIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.netcdf, src, dest, ckpt).awaitTermination()
     val streamed = spark.read.parquet(dest)
       .select("test_id", "instance", "lat", "lon", "pred")
 
     // stream/batch parity: identical rows to the one-shot batch scan
-    val batch = GeoIngest.readNetcdfFiles(spark, src)
+    val batch = GeoIngest.netcdf.read(spark, src)
     assert(streamed.count() == 4)
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
       "streaming ingest diverged from the batch decode")
@@ -415,11 +416,11 @@ class StreamingSpec extends SparkSpec {
     Files.write(java.nio.file.Paths.get(src, "broken.tar"),
       "not a tar at all".getBytes("UTF-8"))
 
-    StreamingPipelines.webdatasetIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.webdataset, src, dest, ckpt).awaitTermination()
     val out = spark.read.parquet(dest)
     assert(out.count() == 3, "3 decodable pairs: a01, a02, b01")
     // replay with the same checkpoint: nothing reprocessed
-    StreamingPipelines.webdatasetIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.webdataset, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == 3)
 
     // per-sample features match a direct decode of the same fixtures
@@ -440,7 +441,7 @@ class StreamingSpec extends SparkSpec {
     // a newly landed shard is picked up incrementally
     Files.write(java.nio.file.Paths.get(src, "s2.tar"), shard(Seq(
       ("c01", "late arrival", prog))))
-    StreamingPipelines.webdatasetIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.webdataset, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == 4)
   }
 
@@ -457,11 +458,11 @@ class StreamingSpec extends SparkSpec {
       Files.copy(java.nio.file.Paths.get(fx, f),
         java.nio.file.Paths.get(src, f))
 
-    StreamingPipelines.warcIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.warc, src, dest, ckpt).awaitTermination()
     val streamed = spark.read.parquet(dest)
       .select("file", "rec_idx", "warc_type", "target_uri", "http_status",
         "mime", "payload")
-    val batch = graft.sources.GeoIngest.readWarcFiles(spark, src)
+    val batch = GeoIngest.warc.read(spark, src)
       .select("file", "rec_idx", "warc_type", "target_uri", "http_status",
         "mime", "payload")
     assert(streamed.count() > 0)
@@ -472,12 +473,12 @@ class StreamingSpec extends SparkSpec {
 
     // replay with the same checkpoint: nothing reprocessed
     val n1 = streamed.count()
-    StreamingPipelines.warcIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.warc, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == n1)
     // a newly landed archive is picked up incrementally
     Files.copy(java.nio.file.Paths.get(fx, "crawl-00.warc.gz"),
       java.nio.file.Paths.get(src, "late-05.warc.gz"))
-    StreamingPipelines.warcIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.warc, src, dest, ckpt).awaitTermination()
     val after = spark.read.parquet(dest)
     assert(after.count() > n1, "late archive not ingested")
     assert(after.filter($"file" === "late-05.warc.gz").count() ==
@@ -495,11 +496,11 @@ class StreamingSpec extends SparkSpec {
       Files.copy(java.nio.file.Paths.get(fx, f),
         java.nio.file.Paths.get(src, f))
 
-    StreamingPipelines.tfrecordIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.tfrecord, src, dest, ckpt).awaitTermination()
     val cols = Seq("file", "rec_idx", "key", "kind", "elem_idx",
       "int_val", "float_bits", "bytes_val")
     val streamed = spark.read.parquet(dest).select(cols.head, cols.tail: _*)
-    val batch = graft.sources.GeoIngest.readTfRecordFiles(spark, src)
+    val batch = GeoIngest.tfrecord.read(spark, src)
       .select(cols.head, cols.tail: _*)
     assert(streamed.count() > 0)
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
@@ -509,7 +510,7 @@ class StreamingSpec extends SparkSpec {
 
     // replay with the same checkpoint: nothing reprocessed
     val n1 = streamed.count()
-    StreamingPipelines.tfrecordIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.tfrecord, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == n1)
   }
 
@@ -524,10 +525,10 @@ class StreamingSpec extends SparkSpec {
       Files.copy(java.nio.file.Paths.get(fx, f),
         java.nio.file.Paths.get(src, f))
 
-    StreamingPipelines.zstIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.jsonlZst, src, dest, ckpt).awaitTermination()
     val streamed = spark.read.parquet(dest)
       .select("shard", "line_idx", "line")
-    val batch = graft.sources.GeoIngest.readJsonlZst(spark, src)
+    val batch = GeoIngest.jsonlZst.read(spark, src)
     assert(streamed.count() > 0)
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
       "streaming zst ingest diverged from the batch decode")
@@ -535,7 +536,7 @@ class StreamingSpec extends SparkSpec {
       "corrupt shard leaked lines")
     // replay with the same checkpoint: nothing reprocessed
     val n1 = streamed.count()
-    StreamingPipelines.zstIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.jsonlZst, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == n1)
   }
 
@@ -550,10 +551,10 @@ class StreamingSpec extends SparkSpec {
       Files.copy(java.nio.file.Paths.get(fx, f),
         java.nio.file.Paths.get(src, f))
 
-    StreamingPipelines.bz2Ingest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.jsonlBz2, src, dest, ckpt).awaitTermination()
     val streamed = spark.read.parquet(dest)
       .select("shard", "line_idx", "line")
-    val batch = graft.sources.GeoIngest.readJsonlBz2(spark, src)
+    val batch = GeoIngest.jsonlBz2.read(spark, src)
     assert(streamed.count() > 0)
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
       "streaming bz2 ingest diverged from the batch decode")
@@ -561,7 +562,7 @@ class StreamingSpec extends SparkSpec {
       "corrupt shard leaked lines")
     // replay with the same checkpoint: nothing reprocessed
     val n1 = streamed.count()
-    StreamingPipelines.bz2Ingest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.jsonlBz2, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == n1)
   }
 
@@ -576,10 +577,10 @@ class StreamingSpec extends SparkSpec {
       Files.copy(java.nio.file.Paths.get(fx, f),
         java.nio.file.Paths.get(src, f))
 
-    StreamingPipelines.safetensorsIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.safetensors, src, dest, ckpt).awaitTermination()
     val streamed = spark.read.parquet(dest)
       .select("file", "tensor", "dtype", "shape", "elem_idx", "bits")
-    val batch = graft.sources.GeoIngest.readSafetensorsFiles(spark, src)
+    val batch = GeoIngest.safetensors.read(spark, src)
     assert(streamed.count() > 0)
     assert(batch.exceptAll(streamed).isEmpty && streamed.exceptAll(batch).isEmpty,
       "streaming safetensors ingest diverged from the batch decode")
@@ -587,7 +588,7 @@ class StreamingSpec extends SparkSpec {
       "corrupt shard leaked elements")
     // replay with the same checkpoint: nothing reprocessed
     val n1 = streamed.count()
-    StreamingPipelines.safetensorsIngest(spark, src, dest, ckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.safetensors, src, dest, ckpt).awaitTermination()
     assert(spark.read.parquet(dest).count() == n1)
   }
 
@@ -601,11 +602,11 @@ class StreamingSpec extends SparkSpec {
     for (f <- Seq("table-00.arrow", "stream-02.arrow", "trunc-05.arrow"))
       Files.copy(java.nio.file.Paths.get(afx, f),
         java.nio.file.Paths.get(asrc, f))
-    StreamingPipelines.arrowIngest(spark, asrc, adest, ackpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.arrow, asrc, adest, ackpt).awaitTermination()
     val astreamed = spark.read.parquet(adest)
       .select("file", "batch", "col", "row", "elem_idx", "elem_idx2",
         "elem_idx3", "vtype", "is_null", "bits", "str_val")
-    val abatch = graft.sources.GeoIngest.readArrowFiles(spark, asrc)
+    val abatch = GeoIngest.arrow.read(spark, asrc)
     assert(astreamed.count() > 0)
     assert(abatch.exceptAll(astreamed).isEmpty &&
       astreamed.exceptAll(abatch).isEmpty,
@@ -619,10 +620,10 @@ class StreamingSpec extends SparkSpec {
     for (f <- Seq("wiki-00.xml.bz2", "wiki-01.xml.bz2", "corrupt-02.xml.bz2"))
       Files.copy(java.nio.file.Paths.get(wfx, f),
         java.nio.file.Paths.get(wsrc, f))
-    StreamingPipelines.wikiIngest(spark, wsrc, wdest, wckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.wiki, wsrc, wdest, wckpt).awaitTermination()
     val wstreamed = spark.read.parquet(wdest)
       .select("shard", "page_id", "ns", "title", "redirect", "text")
-    val wbatch = graft.sources.GeoIngest.readWikiDumps(spark, wsrc)
+    val wbatch = GeoIngest.wiki.read(spark, wsrc)
     assert(wstreamed.count() == 8)
     assert(wbatch.exceptAll(wstreamed).isEmpty &&
       wstreamed.exceptAll(wbatch).isEmpty,
@@ -639,11 +640,11 @@ class StreamingSpec extends SparkSpec {
     for (f <- Seq("vid-00.mp4", "av-01.mp4", "frag-03.mp4"))
       Files.copy(java.nio.file.Paths.get(mfx, f),
         java.nio.file.Paths.get(msrc, f))
-    StreamingPipelines.mp4Ingest(spark, msrc, mdest, mckpt).awaitTermination()
+    StreamingPipelines.ingest(spark, GeoIngest.mp4, msrc, mdest, mckpt).awaitTermination()
     val mstreamed = spark.read.parquet(mdest)
       .select("file", "track", "handler", "codec", "tsc", "smp", "chunk",
         "off", "size", "dts", "dur", "pts", "sync", "md5")
-    val mbatch = graft.sources.GeoIngest.readMp4Files(spark, msrc)
+    val mbatch = GeoIngest.mp4.read(spark, msrc)
     assert(mstreamed.count() == 23) // 10 + 13; frag-03 refused
     assert(mbatch.exceptAll(mstreamed).isEmpty &&
       mstreamed.exceptAll(mbatch).isEmpty,
@@ -656,11 +657,11 @@ class StreamingSpec extends SparkSpec {
     for (f <- Seq("talk-00.vtt", "talk-01.srt", "bad-03.vtt"))
       Files.copy(java.nio.file.Paths.get(sfx, f),
         java.nio.file.Paths.get(ssrc, f))
-    StreamingPipelines.subtitleIngest(spark, ssrc, sdest, sckpt)
+    StreamingPipelines.ingest(spark, GeoIngest.subtitles, ssrc, sdest, sckpt)
       .awaitTermination()
     val sstreamed = spark.read.parquet(sdest)
       .select("file", "cue", "start_ms", "end_ms", "text")
-    val sbatch = graft.sources.GeoIngest.readSubtitleFiles(spark, ssrc)
+    val sbatch = GeoIngest.subtitles.read(spark, ssrc)
     assert(sstreamed.count() == 7) // 4 + 3; bad-03 refused
     assert(sbatch.exceptAll(sstreamed).isEmpty &&
       sstreamed.exceptAll(sbatch).isEmpty,
@@ -676,11 +677,11 @@ class StreamingSpec extends SparkSpec {
     for (f <- Seq("doc-00.pdf", "objstm-06.pdf", "bad-03.pdf"))
       Files.copy(java.nio.file.Paths.get(pfx, f),
         java.nio.file.Paths.get(psrc, f))
-    StreamingPipelines.pdfIngest(spark, psrc, pdest, pckpt)
+    StreamingPipelines.ingest(spark, GeoIngest.pdf, psrc, pdest, pckpt)
       .awaitTermination()
     val pstreamed = spark.read.parquet(pdest)
       .select("file", "page", "run", "text")
-    val pbatch = graft.sources.GeoIngest.readPdfFiles(spark, psrc)
+    val pbatch = GeoIngest.pdf.read(spark, psrc)
     assert(pstreamed.count() == 7) // 6 + 1; bad-03 refused
     assert(pbatch.exceptAll(pstreamed).isEmpty &&
       pstreamed.exceptAll(pbatch).isEmpty,
@@ -695,11 +696,11 @@ class StreamingSpec extends SparkSpec {
     Files.copy(java.nio.file.Paths.get(
       graft.Fixtures.path("q_id3_tags"), "song-01.mp3"),
       java.nio.file.Paths.get(asrc, "song-01.mp3"))
-    StreamingPipelines.audioMetaIngest(spark, asrc, adest, ackpt)
+    StreamingPipelines.ingest(spark, GeoIngest.audioMeta, asrc, adest, ackpt)
       .awaitTermination()
     val astreamed = spark.read.parquet(adest)
       .select("file", "kind", "key", "sval", "num")
-    val abatch = graft.sources.GeoIngest.readAudioMetaFiles(spark, asrc)
+    val abatch = GeoIngest.audioMeta.read(spark, asrc)
     assert(astreamed.count() == 17) // 10 flac + 7 mp3 rows
     assert(abatch.exceptAll(astreamed).isEmpty &&
       astreamed.exceptAll(abatch).isEmpty,

@@ -92,7 +92,7 @@ class TarCodecSpec extends SparkSpec {
     assert(Files.exists(Paths.get(dir, "_SUCCESS")))
     // a corrupt shard must be skipped, not kill the scan
     Files.write(Paths.get(dir, "shard_bad.tar"), "junk".getBytes("US-ASCII"))
-    val back = GeoIngest.readTarShards(spark, dir).collect()
+    val back = GeoIngest.tarShards.read(spark, dir).collect()
       .map(r => r.getString(1) -> new String(r.getAs[Array[Byte]](3), "US-ASCII"))
       .toMap
     assert(back.keySet == (1 to 5).map(i => f"doc_$i%03d").toSet,
@@ -118,7 +118,7 @@ class TarCodecSpec extends SparkSpec {
     Files.write(Paths.get(dir, "d.tar"), tarBytes)
     // corrupt compressed shard: skipped at the gzip layer, scan survives
     Files.write(Paths.get(dir, "bad.tar.gz"), "not gzip".getBytes("US-ASCII"))
-    val back = GeoIngest.readTarShards(spark, dir)
+    val back = GeoIngest.tarShards.read(spark, dir)
     assert(back.count() == 4L * 4) // 4 good shards x 4 records
     val shards = back.select("shard").distinct().collect().map(_.getString(0)).toSet
     assert(shards == Set("a.tar.gz", "b.tgz", "c.tar.zst", "d.tar"))

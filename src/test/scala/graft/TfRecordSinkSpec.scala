@@ -20,7 +20,7 @@ class TfRecordSinkSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_tfr").toString
     Sinks.writeTfRecordShards(df, dir, 10)
 
-    val back = GeoIngest.readTfRecordFiles(spark, dir)
+    val back = GeoIngest.tfrecord.read(spark, dir)
       .orderBy("rec_idx", "key", "elem_idx")
     val rows = back.collect()
     def of(rec: Int, key: String) =

@@ -316,7 +316,7 @@ class TiffRasterSpec extends SparkSpec {
       MultimodalOps.encodeTiffRaster(3, 2, 1, "i16", vals,
         lzw = false, predictor = false)) // no georef → skipped
     Files.write(Paths.get(dir, "bad.tif"), Array[Byte](1, 2, 3))
-    val px = graft.sources.GeoIngest.readTiffGeoPixels(spark, dir)
+    val px = graft.sources.GeoIngest.tiffGeoPixels.read(spark, dir)
     val rows = px.collect().map(r => (r.getString(0), r.getInt(2), r.getInt(3),
       r.getDouble(4), r.getDouble(5), r.getDouble(6)))
     assert(rows.length == 6, "one referenced 3x2 tile → 6 pixel rows")

@@ -87,7 +87,7 @@ class WavCodecSpec extends SparkSpec {
     assert(Files.exists(Paths.get(dir, "_SUCCESS")))
     // corrupt file must be skipped, not kill the scan
     Files.write(Paths.get(dir, "clip_99.wav"), "RIFFgarbage!".getBytes("US-ASCII"))
-    val back = GeoIngest.readWavClips(spark, dir).collect()
+    val back = GeoIngest.wav.read(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getSeq[Int](3)))).toMap
     assert(back.keySet == Set(1L, 2L), s"unexpected clips: ${back.keySet}")
     assert(back(1L) == ((8000, 1, Seq(5, -5, 300, -300))))

@@ -68,7 +68,7 @@ class WebpCodecSpec extends SparkSpec {
   }
 
   test("distributed ingest: refused files absent") {
-    val df = graft.sources.GeoIngest.readWebpFiles(
+    val df = graft.sources.GeoIngest.webp.read(
       spark, graft.Fixtures.path("q_webp_meta"))
     val files = df.select("file").distinct().collect()
       .map(_.getString(0)).toSet

@@ -46,11 +46,11 @@ class WetWatSpec extends SparkSpec {
   }
 
   test("wet/wat framing rides the WARC walk: warcinfo is filtered, types kept") {
-    val wet = graft.sources.GeoIngest
-      .readWetFiles(spark, graft.Fixtures.path("q_wet_extract"))
+    val wet = graft.sources.GeoIngest.wet
+      .read(spark, graft.Fixtures.path("q_wet_extract"))
     assert(wet.select("file").distinct().count() == 3) // corrupt skipped
-    val wat = graft.sources.GeoIngest
-      .readWatFiles(spark, graft.Fixtures.path("q_wat_extract"))
+    val wat = graft.sources.GeoIngest.wat
+      .read(spark, graft.Fixtures.path("q_wat_extract"))
     assert(wat.select("file").distinct().count() == 2)
     // the JSON column parses: every row yields an Envelope.Format
     val fmts = wat.select(get_json_object(col("json"), "$.Envelope.Format")
@@ -68,10 +68,10 @@ class WetWatSpec extends SparkSpec {
                   "crawl-02.warc.wet", "corrupt-03.warc.wet.gz"))
       Files.copy(Paths.get(fxW, f), Paths.get(srcW, f))
     graft.streaming.StreamingPipelines
-      .wetIngest(spark, srcW, destW, ckptW).awaitTermination()
+      .ingest(spark, graft.sources.GeoIngest.wet, srcW, destW, ckptW).awaitTermination()
     val streamedW = spark.read.parquet(destW)
       .select("file", "rec_idx", "target_uri", "mime", "text")
-    val batchW = graft.sources.GeoIngest.readWetFiles(spark, srcW)
+    val batchW = graft.sources.GeoIngest.wet.read(spark, srcW)
       .select("file", "rec_idx", "target_uri", "mime", "text")
     assert(streamedW.count() == 7)
     assert(streamedW.exceptAll(batchW).isEmpty &&
@@ -86,10 +86,10 @@ class WetWatSpec extends SparkSpec {
                   "corrupt-02.warc.wat.gz"))
       Files.copy(Paths.get(fxA, f), Paths.get(srcA, f))
     graft.streaming.StreamingPipelines
-      .watIngest(spark, srcA, destA, ckptA).awaitTermination()
+      .ingest(spark, graft.sources.GeoIngest.wat, srcA, destA, ckptA).awaitTermination()
     val streamedA = spark.read.parquet(destA)
       .select("file", "rec_idx", "target_uri", "json")
-    val batchA = graft.sources.GeoIngest.readWatFiles(spark, srcA)
+    val batchA = graft.sources.GeoIngest.wat.read(spark, srcA)
       .select("file", "rec_idx", "target_uri", "json")
     assert(streamedA.count() == 5)
     assert(streamedA.exceptAll(batchA).isEmpty &&

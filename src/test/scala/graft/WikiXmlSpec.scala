@@ -64,7 +64,7 @@ class WikiXmlSpec extends SparkSpec {
   }
 
   test("distributed ingest: per-page rows, corrupt and non-wiki shards skipped") {
-    val df = graft.sources.GeoIngest.readWikiDumps(
+    val df = graft.sources.GeoIngest.wiki.read(
       spark, graft.Fixtures.path("q_wiki_pages"))
     val byShard = df.groupBy("shard").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap

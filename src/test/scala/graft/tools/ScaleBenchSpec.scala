@@ -53,6 +53,15 @@ class ScaleBenchSpec extends AnyFunSuite {
     assert(unknown.isEmpty, s"ScaleBench selects undeclared queries: $unknown")
   }
 
+  test("each scale is the sf<x> in its directory's last path component") {
+    assert(ScaleBench.scaleOf("/data/sf0.1") === 0.1)
+    assert(ScaleBench.scaleOf("/data/sf0.001/") === 0.001)
+    assert(ScaleBench.scaleOf("testdata_sf1") === 1.0)
+    assert(ScaleBench.scaleOf("/sf0.1/big_sf10") === 10.0)
+    for (bad <- Seq("/data/sf0.1/tables", "/data/scale", "/data/sf", "/data/sf0"))
+      intercept[IllegalArgumentException](ScaleBench.scaleOf(bad))
+  }
+
   test("the unmeasured complement is exactly the golden-pinned exemptions") {
     val declared = graft.SparkEntry.queries.keySet
     val unmeasured = declared -- ScaleBench.Selected.toSet
