@@ -2,34 +2,25 @@ package graft
 
 /** Resolver for the committed byte-pinned fixture corpus under
   * `tools/fixtures/`. Queries that grade codecs against foreign golden
-  * bytes (JPEG, HDF5, encoder goldens) scan these COMMITTED files, so
-  * the path must work for any checkout location, not just the
-  * historical `/root/repo`: resolution order is the
-  * `graft.fixtures.dir` system property, then `$GRAFT_FIXTURES_DIR`,
-  * then `tools/fixtures` under the working directory, then the
-  * historical absolute path as a last resort. The first candidate that
-  * exists wins; if NONE exists, resolution FAILS FAST with a message
-  * naming the override knobs — a relocated checkout must die at first
-  * fixture access, not return empty query results an hour later. */
+  * bytes (JPEG, HDF5, encoder goldens) scan these COMMITTED files. The
+  * one root is the `graft.fixtures.dir` system property: build.sbt sets
+  * it for every forked run and test, and a JVM started outside sbt
+  * passes `-Dgraft.fixtures.dir=<checkout>/tools/fixtures`. A missing
+  * property, or one that names no directory, fails at first access to
+  * [[base]] (loading the query registry reads it for the oracle SQL)
+  * with a message naming the property — never a silent read of some
+  * other checkout's fixtures. */
 object Fixtures {
-  /** Pure resolution over explicit candidates — testable without
-    * mutating JVM-global properties. Throws [[IllegalStateException]]
-    * when no candidate is an existing directory. */
-  def resolve(cands: Seq[String]): String =
-    cands.find(p => new java.io.File(p).isDirectory).getOrElse {
-      throw new IllegalStateException(
-        "graft fixtures directory not found; tried: " +
-          cands.mkString(", ") +
-          " — set -Dgraft.fixtures.dir=<path> or $GRAFT_FIXTURES_DIR " +
-          "to the checkout's tools/fixtures")
-    }
+  /** The root named by `dir`, the property's value. Throws
+    * [[IllegalStateException]] when it is unset or not a directory. */
+  def resolve(dir: Option[String]): String = dir match {
+    case Some(p) if new java.io.File(p).isDirectory => p
+    case _ => throw new IllegalStateException(
+      "graft fixtures directory " + dir.fold("not set")(p => s"$p is not a directory") +
+        "; set -Dgraft.fixtures.dir=<checkout>/tools/fixtures")
+  }
 
-  lazy val base: String = resolve(Seq(
-    sys.props.get("graft.fixtures.dir"),
-    sys.env.get("GRAFT_FIXTURES_DIR"),
-    Some(new java.io.File("tools/fixtures").getAbsolutePath),
-    Some("/root/repo/tools/fixtures")
-  ).flatten)
+  lazy val base: String = resolve(sys.props.get("graft.fixtures.dir"))
 
   def path(rel: String): String = s"$base/$rel"
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's smoke check: run [[SparkEntry.entry]]
   * on sf0.001 and require rows > 0. */

@@ -14,7 +14,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private lazy val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (RelationalQueries.queries, RelationalQueries.oracle),
       (TimeSeriesQueries.queries, TimeSeriesQueries.oracle),
@@ -31,6 +31,11 @@ object SparkEntry {
       (RetrievalQueries.queries, RetrievalQueries.oracle),
       (AnalyticsQueries.queries, AnalyticsQueries.oracle),
     )
+
+  /** The fixed-input kind: queries whose input is a committed fixture
+    * or data generated in-process, so they take no sf directory. */
+  private lazy val fixedModules: Seq[Map[String, SparkSession => DataFrame]] =
+    Seq(TextQueries.fixedInput, MultimodalQueries.fixedInput, EncoderQueries.fixedInput)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     *
@@ -55,15 +60,19 @@ object SparkEntry {
         (col("median_value") + col("mean_value"))).otherwise(lit(0.0)))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** The queries whose input does not scale with SF. */
+  def fixedInput: Map[String, SparkSession => DataFrame] = fixedModules.reduce(_ ++ _)
+
+  /** One entry per implemented operator from SURVEY.md §2; a fixed-input
+    * query is adapted to the driver's shape and ignores the directory. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val merged = modules.map(_._1).reduce(_ ++ _)
-    // a name collision across modules would silently drop a query
-    require(merged.size == modules.map(_._1.size).sum,
-      s"duplicate query names across modules: ${
-        modules.flatMap(_._1.keys).groupBy(identity)
-          .collect { case (k, vs) if vs.size > 1 => k }.mkString(", ")}")
-    merged
+    val named = modules.flatMap(_._1) ++ fixedModules.flatMap(_.map { case (name, q) =>
+      name -> ((spark: SparkSession, _: String) => q(spark)) })
+    // a name collision across modules or kinds would silently drop a query
+    require(named.map(_._1).distinct.size == named.size,
+      s"duplicate query names: ${
+        named.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }.mkString(", ")}")
+    named.toMap
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

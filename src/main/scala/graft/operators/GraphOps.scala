@@ -110,7 +110,7 @@ object GraphOps {
     // decimal sum so huge id spaces can't overflow the comparison
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val v = df.agg(sum(col("lbl").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head.getDecimal(0)
+        .head().getDecimal(0)
       if (v == null) java.math.BigDecimal.ZERO else v
     }
     var prevSum = labelSum(labels)

@@ -91,7 +91,7 @@ object ScaleOps {
         rankCol, org.apache.spark.sql.types.LongType, nullable = false))
     val rows = sorted.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val ranked = rows.zipWithIndex.map { case (row, idx) =>
+    val ranked = rows.zipWithIndex().map { case (row, idx) =>
       org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (idx + 1L))
     }
     spark.createDataFrame(ranked, schema)

@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.AsOfJoin
 
 /** The reference's flagship pipeline (SURVEY §3.1, monthly.py

@@ -73,7 +73,7 @@ object EncoderQueries {
     * Rows-only like q_encoder_embed (a transformer is not ANSI SQL);
     * TinyDecoderSpec pins determinism, masked-position prediction,
     * and finiteness. */
-  def qMaeReconstruct(spark: SparkSession, dir: String): DataFrame = {
+  def qMaeReconstruct(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val ex = PretrainingTable.build(ObservationsGen.observations(spark))
       .withColumn("id", concat_ws("|", col("tile"), col("cell_x"), col("cell_y")))
@@ -92,6 +92,10 @@ object EncoderQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_encoder_embed" -> (qEncoderEmbed _),
+  )
+
+  /** Queries whose input does not scale with SF ([[graft.SparkEntry.fixedInput]]). */
+  val fixedInput: Map[String, SparkSession => DataFrame] = Map(
     "q_mae_reconstruct" -> (qMaeReconstruct _),
   )
 

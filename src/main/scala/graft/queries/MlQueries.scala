@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -37,7 +37,6 @@ import graft.queries.Exact._
   */
 object MlQueries {
 
-  private val splitSpark = PipelineOps.hashSplitSql("cast(vec_id AS string)", 12)
   private val splitDuck = PipelineOps.hashSplitSql("cast(vec_id AS VARCHAR)", 12)
     .replace("instr(", "strpos(")
 
@@ -66,12 +65,6 @@ object MlQueries {
     "CASE " + (3 to 9).map(w => s"WHEN n <= ${1L << (w + 7)} THEN $w")
       .mkString(" ") + " ELSE 10 END"
 
-  /** (band id, bit offset, width) uniform layout at width w — the
-    * production bucket rule (band b = bits [b·w, (b+1)·w)) in the
-    * form the completeness property test consumes. */
-  private[graft] def bandDefs(w: Int): Seq[(Int, Int, Int)] =
-    (0 until 6).map(b => (b, b * w, w))
-
   /** 6w-bit sign signature of the first 6·bw embedding dims (bw is
     * the corpus-scaled width column). */
   private val sigExpr =
@@ -80,8 +73,9 @@ object MlQueries {
       |  0L, (a, b) -> a | b)""".stripMargin
 
   /** Uniform band explode at runtime width bw: band b keys on bits
-    * [b·bw, (b+1)·bw) of the signature. */
-  private val bandsExpr =
+    * [b·bw, (b+1)·bw) of the signature. PropertySpec proves the
+    * layout pigeonhole-complete at every width. */
+  private[graft] val bandsExpr =
     """transform(sequence(0, 5), b -> named_struct(
       |  'band', b,
       |  'bucket', shiftright(sig, b * bw) & (shiftleft(1L, bw) - 1)))""".stripMargin

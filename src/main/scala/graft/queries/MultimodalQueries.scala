@@ -585,11 +585,12 @@ object MultimodalQueries {
     * per-pixel explode; no shuffle (grayscale replicates to r=g=b,
     * matching the golden's convention).
     *
-    * Note the scan reads the COMMITTED repo fixtures, not `dir`: the
-    * inputs are pinned goldens, same on every SF (the single-node
-    * harness shares one filesystem; a cluster deployment would stage
-    * `tools/fixtures/` to shared storage). */
-  def qJpegDecode(spark: SparkSession, dir: String): DataFrame =
+    * Note the scan reads the COMMITTED repo fixtures, so the query
+    * takes no sf directory: the inputs are pinned goldens, same on
+    * every SF (the single-node harness shares one filesystem; a
+    * cluster deployment would stage `tools/fixtures/` to shared
+    * storage). */
+  def qJpegDecode(spark: SparkSession): DataFrame =
     jpegPixels(spark, graft.Fixtures.path("q_jpeg_decode"))
 
   /** Progressive (SOF2) JPEG decode, oracle-graded per pixel — the
@@ -607,7 +608,7 @@ object MultimodalQueries {
     * restart resets — must be exact or the hash flips. Progressive is
     * the dominant web-image coding, so this closes the biggest
     * real-corpus coverage gap a LAION-style crawl would hit. */
-  def qJpegProgressive(spark: SparkSession, dir: String): DataFrame =
+  def qJpegProgressive(spark: SparkSession): DataFrame =
     jpegPixels(spark, graft.Fixtures.path("q_jpeg_progressive"))
 
   /** Arithmetic-coded JPEG decode (SOF9 sequential + SOF10 progressive,
@@ -626,7 +627,7 @@ object MultimodalQueries {
     * this, the codec covers every non-differential 8-bit T.81 process;
     * arithmetic JPEG is rare in web corpora (~1%) but standard in
     * DICOM-adjacent pipelines. */
-  def qJpegArith(spark: SparkSession, dir: String): DataFrame =
+  def qJpegArith(spark: SparkSession): DataFrame =
     jpegPixels(spark, graft.Fixtures.path("q_jpeg_arith"))
 
   private def jpegPixels(spark: SparkSession, fixtureDir: String): DataFrame =
@@ -671,7 +672,7 @@ object MultimodalQueries {
     * grayscale) that the DCT entry refuses. Distributed shape:
     * binaryFile scan → per-file decode fan-out → per-sample explode;
     * no shuffle. */
-  def qJpegLossless(spark: SparkSession, dir: String): DataFrame =
+  def qJpegLossless(spark: SparkSession): DataFrame =
     jpegSamples(spark, "q_jpeg_lossless")(
       JpegCodec.decodeLossless(_).map(i => (i.width, i.height, i.channels, i.samples)))
 
@@ -718,7 +719,7 @@ object MultimodalQueries {
     * [[graft.sources.JpegCodec.decode12]] must agree or the hash
     * flips. Completes the DICOM JPEG story next to [[qJpegLossless]]
     * (process 14). */
-  def qJpeg12(spark: SparkSession, dir: String): DataFrame =
+  def qJpeg12(spark: SparkSession): DataFrame =
     jpegSamples(spark, "q_jpeg12")(
       JpegCodec.decode12(_).map(i => (i.width, i.height, i.channels, i.samples)))
 
@@ -812,10 +813,9 @@ object MultimodalQueries {
     * its absence from the output is itself graded) and the oracle
     * reads the expected elements. f8/f4/i8/i4 datasets all covered;
     * f4 widening pinned via float32 round-trip on both sides. Like
-    * [[qJpegDecode]], the scan reads the committed repo fixtures, not
-    * `dir` — pinned goldens, same at every SF. */
-  def qHdf5Read(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+    * [[qJpegDecode]], the scan reads the committed repo fixtures —
+    * pinned goldens, same at every SF. */
+  def qHdf5Read(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.h5
       .read(spark, graft.Fixtures.path("q_hdf5_read"))
       .select(col("file"), col("dataset"),
@@ -844,7 +844,7 @@ object MultimodalQueries {
     * (per-file skip). [[graft.sources.GeoIngest.warc]] scans
     * them distributed; the oracle reads the expected rows (payload
     * md5 computed by Python hashlib, never by Spark). */
-  def qWarcExtract(spark: SparkSession, dir: String): DataFrame = {
+  def qWarcExtract(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.warc
       .read(spark, graft.Fixtures.path("q_warc_extract"))
       .select(col("file"), col("rec_idx"), col("warc_type"),
@@ -871,7 +871,7 @@ object MultimodalQueries {
     * embedded `\n` count, and the md5 over the re-encoded bytes
     * (identity for valid UTF-8) — all golden values computed by
     * Python len/count/hashlib, never by Spark. */
-  def qWetExtract(spark: SparkSession, dir: String): DataFrame = {
+  def qWetExtract(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.wet
       .read(spark, graft.Fixtures.path("q_wet_extract"))
       .select(col("file"), col("rec_idx"), col("target_uri"), col("mime"),
@@ -898,7 +898,7 @@ object MultimodalQueries {
     * `get_json_object` / `json_array_length` over the envelope (the
     * q_json_extract machinery — codegen'd, no UDFs); golden values
     * computed by Python's json module. */
-  def qWatExtract(spark: SparkSession, dir: String): DataFrame = {
+  def qWatExtract(spark: SparkSession): DataFrame = {
     val hrm = "$.Envelope['Payload-Metadata']['HTTP-Response-Metadata']"
     graft.sources.GeoIngest.wat
       .read(spark, graft.Fixtures.path("q_wat_extract"))
@@ -929,7 +929,7 @@ object MultimodalQueries {
     * one truncated shard that must skip whole. Line JSON is parsed
     * with the native `get_json_object` expression (no UDF); the
     * oracle reads rows computed by Python json+hashlib. */
-  def qJsonlZst(spark: SparkSession, dir: String): DataFrame = {
+  def qJsonlZst(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.jsonlZst
       .read(spark, graft.Fixtures.path("q_jsonl_zst"))
       .select(col("shard"), col("line_idx"),
@@ -953,7 +953,7 @@ object MultimodalQueries {
     * trailing-garbage shard whose ABSENCE is graded (whole-file
     * skip). Decoded by [[graft.sources.Bz2Codec]] — the platform
     * block decode behind this engine's framing/refusal contract. */
-  def qJsonlBz2(spark: SparkSession, dir: String): DataFrame = {
+  def qJsonlBz2(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.jsonlBz2
       .read(spark, graft.Fixtures.path("q_jsonl_bz2"))
       .select(col("shard"), col("line_idx"),
@@ -1160,7 +1160,7 @@ object MultimodalQueries {
     * output is itself graded (CRC flip / truncation → per-file skip).
     * [[graft.sources.GeoIngest.tfrecord]] scans distributed;
     * floats are graded by their raw LE wire bits (bit-exact). */
-  def qTfrecordRead(spark: SparkSession, dir: String): DataFrame = {
+  def qTfrecordRead(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.tfrecord
       .read(spark, graft.Fixtures.path("q_tfrecord_read"))
       .select(col("file"), col("rec_idx"), col("key"), col("kind"),
@@ -1191,7 +1191,7 @@ object MultimodalQueries {
     * locator → zip64 EOCD record, per-entry 0x0001 extras at both
     * widths; cross-validated by Python zipfile's own reader), the
     * NORMAL >4 GiB / >65k-member delivery shape at 100 TB scale. */
-  def qZipScan(spark: SparkSession, dir: String): DataFrame = {
+  def qZipScan(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.zip
       .read(spark, graft.Fixtures.path("q_zip_scan"))
       .select(col("file"), col("member"), col("method"),
@@ -1214,7 +1214,7 @@ object MultimodalQueries {
     * union(null,string), array<long>, NaN floats; a sync-flipped and
     * an unknown-codec file whose ABSENCE is graded (whole-file
     * refusal). Floats/doubles grade by raw IEEE bits. */
-  def qAvroRead(spark: SparkSession, dir: String): DataFrame = {
+  def qAvroRead(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.avro
       .read(spark, graft.Fixtures.path("q_avro_read"))
       .select(col("file"), col("rec_idx"), col("field"), col("elem_idx"),
@@ -1238,7 +1238,7 @@ object MultimodalQueries {
     * odd-count absolute mode, a delta skip over background, and an
     * early end-of-line; a truncated file and a BI_BITFIELDS file
     * whose ABSENCE is graded (whole-file refusal). */
-  def qBmpDecode(spark: SparkSession, dir: String): DataFrame = {
+  def qBmpDecode(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.bmp
       .read(spark, graft.Fixtures.path("q_bmp_decode"))
       .select(col("file"), col("y"), col("x"), col("r"), col("g"), col("b"))
@@ -1457,7 +1457,7 @@ object MultimodalQueries {
     * mid-document), a redirect page, non-zero namespaces, a
     * self-closed empty `<text/>`; a truncated shard and a
     * non-mediawiki shard whose ABSENCE is graded. */
-  def qWikiPages(spark: SparkSession, dir: String): DataFrame = {
+  def qWikiPages(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.wiki
       .read(spark, graft.Fixtures.path("q_wiki_pages"))
       .select(col("shard"), col("page_id"), col("ns"), col("title"),
@@ -1481,7 +1481,7 @@ object MultimodalQueries {
     * entity decode, and all fifteen cleaning stages must agree or the
     * hash flips. This is the first two stages of every wiki slice in
     * a pretraining mix, composed. */
-  def qWikiClean(spark: SparkSession, dir: String): DataFrame = {
+  def qWikiClean(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.wiki
       .read(spark, graft.Fixtures.path("q_wiki_pages"))
       .select(col("page_id"), length(col("text")).as("n_raw"),
@@ -1507,7 +1507,7 @@ object MultimodalQueries {
     * fills the LZW dictionary to 4096 and resets mid-stream; a
     * truncated file and an out-of-range-code file whose ABSENCE is
     * graded (whole-file refusal). */
-  def qGifDecode(spark: SparkSession, dir: String): DataFrame = {
+  def qGifDecode(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.gif
       .read(spark, graft.Fixtures.path("q_gif_decode"))
       .select(col("file"), col("frame"), col("y"), col("x"),
@@ -1531,7 +1531,7 @@ object MultimodalQueries {
     * off-screen rect file's ABSENCE is graded (whole-file refusal).
     * Golden computed by an independent Python compositor over the
     * encode-side palette indices (tools/gif_golden.py). */
-  def qGifFrames(spark: SparkSession, dir: String): DataFrame = {
+  def qGifFrames(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.gifCanvases
       .read(spark, graft.Fixtures.path("q_gif_frames"))
       .select(col("file"), col("frame"), col("y"), col("x"),
@@ -1557,7 +1557,7 @@ object MultimodalQueries {
     * are refused — their ABSENCE from the golden is graded. The md5
     * column hashes each sample's actual byte span: the table is only
     * correct if the payloads it names are fetchable. */
-  def qMp4Samples(spark: SparkSession, dir: String): DataFrame = {
+  def qMp4Samples(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.mp4
       .read(spark, graft.Fixtures.path("q_mp4_samples"))
       .select(col("file"), col("track"), col("handler"), col("codec"),
@@ -1577,7 +1577,7 @@ object MultimodalQueries {
     * settings, short-form timestamps, hour-boundary cues, CRLF SRT
     * with comma decimals, a header-only file (zero rows), and a
     * headerless file whose ABSENCE is graded (whole-file refusal). */
-  def qVttCues(spark: SparkSession, dir: String): DataFrame = {
+  def qVttCues(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.subtitles
       .read(spark, graft.Fixtures.path("q_vtt_cues"))
       .select(col("file"), col("cue"), col("start_ms"), col("end_ms"),
@@ -1692,7 +1692,7 @@ object MultimodalQueries {
     * Fixtures from a from-scratch Python RIFF writer
     * (tools/webp_golden.py); a chunk-past-EOF file and a broken-sync
     * file are refused — their ABSENCE is graded. */
-  def qWebpMeta(spark: SparkSession, dir: String): DataFrame = {
+  def qWebpMeta(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.webp
       .read(spark, graft.Fixtures.path("q_webp_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
@@ -1712,7 +1712,7 @@ object MultimodalQueries {
     * byte spans — the ranged-fetch proof. Fixtures from a
     * from-scratch Python ISO-BMFF writer (tools/avif_golden.py); an
     * extent-past-EOF file's ABSENCE is graded. */
-  def qAvifMeta(spark: SparkSession, dir: String): DataFrame = {
+  def qAvifMeta(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.avif
       .read(spark, graft.Fixtures.path("q_avif_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
@@ -1731,7 +1731,7 @@ object MultimodalQueries {
     * skipped by length. Fixtures from a from-scratch Python writer
     * (tools/audio_meta_golden.py); a short-STREAMINFO file's ABSENCE
     * is graded. */
-  def qFlacMeta(spark: SparkSession, dir: String): DataFrame = {
+  def qFlacMeta(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.audioMeta
       .read(spark, graft.Fixtures.path("q_flac_meta"))
       .select(col("file"), col("kind"), col("key"), col("sval"), col("num"))
@@ -1747,7 +1747,7 @@ object MultimodalQueries {
     * skipped, then the first audio frame header's bitrate/rate/frame
     * length (the duration estimator's inputs). A tagless file still
     * reports its stream shape; an ID3 size past EOF refuses. */
-  def qId3Tags(spark: SparkSession, dir: String): DataFrame = {
+  def qId3Tags(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.audioMeta
       .read(spark, graft.Fixtures.path("q_id3_tags"))
       .select(col("file"), col("kind"), col("key"), col("sval"), col("num"))
@@ -1766,7 +1766,7 @@ object MultimodalQueries {
     * fixed 48 kHz rate. Fixtures from a from-scratch Python writer
     * (tools/ogg_golden.py); a flipped-CRC file and a multiplexed
     * two-serial file are refused — their ABSENCE is graded. */
-  def qOpusMeta(spark: SparkSession, dir: String): DataFrame = {
+  def qOpusMeta(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.opus
       .read(spark, graft.Fixtures.path("q_opus_meta"))
       .select(col("file"), col("kind"), col("key"), col("idx"),
@@ -1789,7 +1789,7 @@ object MultimodalQueries {
     * (tools/pdf_golden.py): an incremental update whose NEW content
     * supersedes the old, an xref-STREAM file and a truncated file
     * whose ABSENCE is graded. */
-  def qPdfText(spark: SparkSession, dir: String): DataFrame = {
+  def qPdfText(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.pdf
       .read(spark, graft.Fixtures.path("q_pdf_text"))
       .select(col("file"), col("page"), col("run"), col("text"))
@@ -1808,7 +1808,7 @@ object MultimodalQueries {
     * offset values, ASCII/SHORT/LONG/RATIONAL/UNDEFINED/SRATIONAL
     * types, EXIF + GPS sub-IFD pointers; a no-Exif JPEG contributes
     * zero rows and a truncated-IFD file's ABSENCE is graded. */
-  def qExifMeta(spark: SparkSession, dir: String): DataFrame = {
+  def qExifMeta(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.exif
       .read(spark, graft.Fixtures.path("q_exif_meta"))
       .select(col("file"), col("ifd"), col("tag"), col("ttype"),
@@ -1826,8 +1826,8 @@ object MultimodalQueries {
     * (the oracle recomputes from the golden tag rows with the same
     * fixed-order arithmetic — per-row double math is bit-exact across
     * engines). One row per geotagged image. */
-  def qExifGps(spark: SparkSession, dir: String): DataFrame = {
-    val g = qExifMeta(spark, dir).filter(col("ifd") === "gps")
+  def qExifGps(spark: SparkSession): DataFrame = {
+    val g = qExifMeta(spark).filter(col("ifd") === "gps")
     def comp(tag: Int, idx: Int): Column =
       max(when(col("tag") === tag && col("idx") === idx,
         col("num").cast("double") / col("den").cast("double")))
@@ -1895,7 +1895,7 @@ object MultimodalQueries {
     * broadcasts the fixture-scale side on its own. cap-08.mp4 bears
     * an edit list, so its rows align at the pts the elst SHIFTS
     * (frames presented before the edit start clip out as negative). */
-  def qCaptionAlign(spark: SparkSession, dir: String): DataFrame = {
+  def qCaptionAlign(spark: SparkSession): DataFrame = {
     val stem = (c: org.apache.spark.sql.Column) =>
       regexp_replace(c, "\\.[a-z0-9]+$", "")
     val samples = graft.sources.GeoIngest.mp4
@@ -1990,7 +1990,7 @@ object MultimodalQueries {
     * through DictionaryBatch messages; two refusal fixtures
     * (truncated footer, trailing bytes after the stream EOS marker)
     * whose ABSENCE is graded. */
-  def qArrowRead(spark: SparkSession, dir: String): DataFrame = {
+  def qArrowRead(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.arrow
       .read(spark, graft.Fixtures.path("q_arrow_read"))
       .select(col("file"), col("batch"), col("col"), col("row"),
@@ -2019,7 +2019,7 @@ object MultimodalQueries {
     * is graded — whole-file refusal. Every value grades by its raw
     * little-endian bits zero-extended to a long: bit-exact for every
     * dtype. */
-  def qSafetensorsRead(spark: SparkSession, dir: String): DataFrame = {
+  def qSafetensorsRead(spark: SparkSession): DataFrame = {
     graft.sources.GeoIngest.safetensors
       .read(spark, graft.Fixtures.path("q_safetensors_read"))
       .select(col("file"), col("tensor"), col("dtype"), col("shape"),
@@ -2031,50 +2031,18 @@ object MultimodalQueries {
       |FROM read_parquet('${graft.Fixtures.base}/q_safetensors_read/golden/*.parquet')""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_avro_read" -> (qAvroRead _),
-    "q_safetensors_read" -> (qSafetensorsRead _),
-    "q_arrow_read" -> (qArrowRead _),
-    "q_gif_decode" -> (qGifDecode _),
-    "q_gif_frames" -> (qGifFrames _),
-    "q_mp4_samples" -> (qMp4Samples _),
-    "q_vtt_cues" -> (qVttCues _),
-    "q_caption_align" -> (qCaptionAlign _),
     "q_caption_align_scale" -> (qCaptionAlignScale _),
-    "q_exif_meta" -> (qExifMeta _),
-    "q_exif_gps" -> (qExifGps _),
-    "q_pdf_text" -> (qPdfText _),
-    "q_flac_meta" -> (qFlacMeta _),
-    "q_id3_tags" -> (qId3Tags _),
     "q_mp4_roundtrip" -> (qMp4Roundtrip _),
     "q_pdf_roundtrip" -> (qPdfRoundtrip _),
-    "q_webp_meta" -> (qWebpMeta _),
-    "q_avif_meta" -> (qAvifMeta _),
-    "q_opus_meta" -> (qOpusMeta _),
-    "q_wiki_pages" -> (qWikiPages _),
-    "q_wiki_clean" -> (qWikiClean _),
     "q_gif_roundtrip" -> (qGifRoundtrip _),
-    "q_bmp_decode" -> (qBmpDecode _),
     "q_safetensors_roundtrip" -> (qSafetensorsRoundtrip _),
     "q_arrow_roundtrip" -> (qArrowRoundtrip _),
-    "q_zip_scan" -> (qZipScan _),
-    "q_tfrecord_read" -> (qTfrecordRead _),
     "q_webdataset" -> (qWebdataset _),
     "q_webdataset_jpeg" -> (qWebdatasetJpeg _),
-    "q_hdf5_read" -> (qHdf5Read _),
     "q_netcdf_roundtrip" -> (qNetcdfRoundtrip _),
-    "q_jpeg_decode" -> (qJpegDecode _),
-    "q_jpeg_progressive" -> (qJpegProgressive _),
-    "q_jpeg_lossless" -> (qJpegLossless _),
-    "q_jpeg12" -> (qJpeg12 _),
-    "q_jpeg_arith" -> (qJpegArith _),
     "q_png_decode" -> (qPngDecode _),
     "q_tiff_georef" -> (qTiffGeoref _),
     "q_jsonl_gz" -> (qJsonlGz _),
-    "q_jsonl_zst" -> (qJsonlZst _),
-    "q_jsonl_bz2" -> (qJsonlBz2 _),
-    "q_warc_extract" -> (qWarcExtract _),
-    "q_wet_extract" -> (qWetExtract _),
-    "q_wat_extract" -> (qWatExtract _),
     "q_media_manifest" -> (qMediaManifest _),
     "q_media_features" -> (qMediaFeatures _),
     "q_image_decode" -> (qImageDecode _),
@@ -2086,6 +2054,42 @@ object MultimodalQueries {
     "q_npy_roundtrip" -> (qNpyRoundtrip _),
     "q_frame_sample" -> (qFrameSample _),
     "q_resize_features" -> (qResizeFeatures _),
+  )
+
+  /** Queries whose input does not scale with SF ([[graft.SparkEntry.fixedInput]]). */
+  val fixedInput: Map[String, SparkSession => DataFrame] = Map(
+    "q_jpeg_decode" -> (qJpegDecode _),
+    "q_jpeg_progressive" -> (qJpegProgressive _),
+    "q_jpeg_arith" -> (qJpegArith _),
+    "q_jpeg_lossless" -> (qJpegLossless _),
+    "q_jpeg12" -> (qJpeg12 _),
+    "q_hdf5_read" -> (qHdf5Read _),
+    "q_warc_extract" -> (qWarcExtract _),
+    "q_wet_extract" -> (qWetExtract _),
+    "q_wat_extract" -> (qWatExtract _),
+    "q_jsonl_zst" -> (qJsonlZst _),
+    "q_jsonl_bz2" -> (qJsonlBz2 _),
+    "q_tfrecord_read" -> (qTfrecordRead _),
+    "q_zip_scan" -> (qZipScan _),
+    "q_avro_read" -> (qAvroRead _),
+    "q_bmp_decode" -> (qBmpDecode _),
+    "q_wiki_pages" -> (qWikiPages _),
+    "q_wiki_clean" -> (qWikiClean _),
+    "q_gif_decode" -> (qGifDecode _),
+    "q_gif_frames" -> (qGifFrames _),
+    "q_mp4_samples" -> (qMp4Samples _),
+    "q_vtt_cues" -> (qVttCues _),
+    "q_webp_meta" -> (qWebpMeta _),
+    "q_avif_meta" -> (qAvifMeta _),
+    "q_flac_meta" -> (qFlacMeta _),
+    "q_id3_tags" -> (qId3Tags _),
+    "q_opus_meta" -> (qOpusMeta _),
+    "q_pdf_text" -> (qPdfText _),
+    "q_exif_meta" -> (qExifMeta _),
+    "q_exif_gps" -> (qExifGps _),
+    "q_caption_align" -> (qCaptionAlign _),
+    "q_arrow_read" -> (qArrowRead _),
+    "q_safetensors_read" -> (qSafetensorsRead _),
   )
 
   val oracle: Map[String, String] = Map(

@@ -1263,13 +1263,18 @@ object RelationalQueries {
     * single-pass, mergeable, bounded-memory — the shapes that replace
     * exact distinct/percentile shuffles at corpus scale. */
   def qDistinctApprox(spark: SparkSession, dir: String): DataFrame = {
-    Tables.events(spark, dir)
+    val events = Tables.events(spark, dir)
+    // the exact distinct gets its own aggregate: mixed with the other
+    // aggregates it keys the whole plan by (event_type, user_id) first
+    val exact = events.groupBy(col("event_type").as("et"))
+      .agg(countDistinct(col("user_id")).as("exact_distinct"))
+    events
       .groupBy(col("event_type"))
       .agg(
-        countDistinct(col("user_id")).as("exact_distinct"),
         approx_count_distinct(col("user_id"), 0.05).as("ad"),
         percentile(col("value"), array(lit(0.49), lit(0.51))).as("p"),
         percentile_approx(col("value"), lit(0.5), lit(10000)).as("pa"))
+      .join(exact, col("event_type") <=> col("et"))
       .select(col("event_type"), col("exact_distinct"),
         (abs(col("ad") - col("exact_distinct")) <=
           greatest(lit(0.15) * col("exact_distinct"), lit(1.0)))

@@ -2163,7 +2163,7 @@ object TextQueries {
     * comments, case-insensitive directives, garbage tolerated. One
     * row per (rule × group agent); fixtures hand-written in
     * tools/robots_golden.py. */
-  def qRobotsRules(spark: SparkSession, dir: String): DataFrame =
+  def qRobotsRules(spark: SparkSession): DataFrame =
     robotsRules(spark)
       .select(col("host"), col("agent"), col("verb"), col("value"),
         col("seq"))
@@ -2204,7 +2204,7 @@ object TextQueries {
     * PlanQualitySpec pins that no URL-derived relation is broadcast.
     * q_robots_filter_scale measures this same plan's decade exponent
     * over an events-derived URL corpus. */
-  def qRobotsFilter(spark: SparkSession, dir: String): DataFrame = {
+  def qRobotsFilter(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val urls = spark.read.option("sep", "\t")
       .csv(graft.Fixtures.path("q_robots_filter") + "/urls.txt")
@@ -2353,8 +2353,6 @@ object TextQueries {
       |FROM dec""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_robots_rules" -> (qRobotsRules _),
-    "q_robots_filter" -> (qRobotsFilter _),
     "q_robots_filter_scale" -> (qRobotsFilterScale _),
     "q_entity_resolution" -> (qEntityResolution _),
     "q_explode_outer" -> (qExplodeOuter _),
@@ -2400,6 +2398,12 @@ object TextQueries {
     "q_vocab_topk" -> (qVocabTopk _),
     "q_decontaminate" -> (qDecontaminate _),
     "q_span_dedup" -> (qSpanDedup _),
+  )
+
+  /** Queries whose input does not scale with SF ([[graft.SparkEntry.fixedInput]]). */
+  val fixedInput: Map[String, SparkSession => DataFrame] = Map(
+    "q_robots_rules" -> (qRobotsRules _),
+    "q_robots_filter" -> (qRobotsFilter _),
   )
 
   val oracle: Map[String, String] = Map(

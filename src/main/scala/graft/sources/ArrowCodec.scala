@@ -659,7 +659,7 @@ object ArrowCodec {
       }
     }
     // validity bitmap reader; a zero-length buffer means all-valid
-    def valid(buf: Buf, n: Long): Long => Boolean = {
+    def valid(buf: Buf): Long => Boolean = {
       if (buf.len == 0) _ => true
       else i => (bu8(buf, i / 8) >> (i % 8).toInt & 1) == 1
     }
@@ -675,7 +675,7 @@ object ArrowCodec {
       val dictVals = dicts.getOrElse(d.id, refuse())
       val (len, _) = nextNode()
       if (len != rows) refuse()
-      val v = valid(nextBuf(), len)
+      val v = valid(nextBuf())
       val idx = nextBuf()
       var i = 0L
       while (i < len) {
@@ -703,7 +703,7 @@ object ArrowCodec {
           bits: Long => Long, str: Long => String)
       def readLeaf(typ: Typ): Leaf = {
         val (len, _) = nextNode()
-        val v = valid(nextBuf(), len)
+        val v = valid(nextBuf())
         typ match {
           case Prim(label, width) =>
             val dat = nextBuf()
@@ -788,7 +788,7 @@ object ArrowCodec {
           // node + validity + views buffer + N variadic data buffers
           val (len, _) = nextNode()
           if (len != rows) refuse()
-          val v = valid(nextBuf(), len)
+          val v = valid(nextBuf())
           val views = nextBuf()
           if (len * 16 > views.len) refuse()
           val nvar = nextVariadic()
@@ -840,7 +840,7 @@ object ArrowCodec {
           if (len != rows) refuse()
           val (rlen, _) = nextNode()
           if (rlen < 0 || rlen > MaxCells) refuse()
-          val rv = valid(nextBuf(), rlen)
+          val rv = valid(nextBuf())
           val rdat = nextBuf()
           if (rlen * runW > rdat.len) refuse()
           val leaf = readLeaf(vt)
@@ -875,7 +875,7 @@ object ArrowCodec {
         case ListT(child, fixed, label) =>
           val (len, _) = nextNode()
           if (len != rows) refuse()
-          val v = valid(nextBuf(), len)
+          val v = valid(nextBuf())
           val offs = if (fixed == 0) nextBuf() else Buf(b, 0, 0)
           if (fixed == 0 && (len + 1) * 4 > offs.len) refuse()
           def span(i: Long): (Long, Long) =
@@ -898,11 +898,11 @@ object ArrowCodec {
               // emit nothing at their level.
               val inner2 = inner.child.asInstanceOf[ListT]
               val (clen, _) = nextNode()
-              val cv = valid(nextBuf(), clen)
+              val cv = valid(nextBuf())
               val coffs = if (inner.fixed == 0) nextBuf() else Buf(b, 0, 0)
               if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) refuse()
               val (dlen, _) = nextNode()
-              val dv = valid(nextBuf(), dlen)
+              val dv = valid(nextBuf())
               val doffs = if (inner2.fixed == 0) nextBuf() else Buf(b, 0, 0)
               if (inner2.fixed == 0 && (dlen + 1) * 4 > doffs.len) refuse()
               val leaf = readLeaf(inner2.child)
@@ -985,7 +985,7 @@ object ArrowCodec {
               // index, elem2 = inner index; a null INNER list is one
               // elem2-less cell carrying the inner vtype
               val (clen, _) = nextNode()
-              val cv = valid(nextBuf(), clen)
+              val cv = valid(nextBuf())
               val coffs = if (inner.fixed == 0) nextBuf() else Buf(b, 0, 0)
               if (inner.fixed == 0 && (clen + 1) * 4 > coffs.len) refuse()
               val leaf = readLeaf(inner.child)
@@ -1061,13 +1061,13 @@ object ArrowCodec {
               case class StructK(skv: Long => Boolean, glabel: String,
                   gkids: Vector[(String, Leaf)]) extends KidR
               val (clen, _) = nextNode()
-              val cv = valid(nextBuf(), clen)
+              val cv = valid(nextBuf())
               val kids: Vector[(String, KidR)] = st.children.map { k =>
                 k.typ match {
                   case ListT(c, kfixed, klabel) =>
                     val (klen, _) = nextNode()
                     if (klen != clen) refuse()
-                    val kv = valid(nextBuf(), klen)
+                    val kv = valid(nextBuf())
                     val koffs = if (kfixed == 0) nextBuf() else Buf(b, 0, 0)
                     if (kfixed == 0 && (klen + 1) * 4 > koffs.len) refuse()
                     val cl = readLeaf(c)
@@ -1075,7 +1075,7 @@ object ArrowCodec {
                   case StructT(gk, glabel) =>
                     val (klen, _) = nextNode()
                     if (klen != clen) refuse()
-                    val skv = valid(nextBuf(), klen)
+                    val skv = valid(nextBuf())
                     val gkids = gk.map { g =>
                       val gl = readLeaf(g.typ)
                       if (gl.len != clen) refuse()
@@ -1182,7 +1182,7 @@ object ArrowCodec {
           // (`meta.cfg.opt.lr`), buffers still consumed depth-first.
           val (len, _) = nextNode()
           if (len != rows) refuse()
-          val v = valid(nextBuf(), len)
+          val v = valid(nextBuf())
           var i = 0L
           while (i < len) {
             if (out.size >= MaxCells) refuse()
@@ -1197,7 +1197,7 @@ object ArrowCodec {
               case StructT(gkids, glabel) =>
                 val (klen, _) = nextNode()
                 if (klen != rows) refuse()
-                val kv = valid(nextBuf(), klen)
+                val kv = valid(nextBuf())
                 var i2 = 0L
                 while (i2 < klen) {
                   if (out.size >= MaxCells) refuse()
@@ -1210,7 +1210,7 @@ object ArrowCodec {
                 // struct<list<scalar>> (the SQuAD-v1 answers shape)
                 val (klen, _) = nextNode()
                 if (klen != rows) refuse()
-                val kv = valid(nextBuf(), klen)
+                val kv = valid(nextBuf())
                 val koffs = if (kfixed == 0) nextBuf() else Buf(b, 0, 0)
                 if (kfixed == 0 && (klen + 1) * 4 > koffs.len) refuse()
                 val cl = readLeaf(c)
@@ -1251,7 +1251,7 @@ object ArrowCodec {
           // leaf; cell convention identical to list<scalar>
           val (len, _) = nextNode()
           if (len != rows) refuse()
-          val v = valid(nextBuf(), len)
+          val v = valid(nextBuf())
           val offs = nextBuf()
           if ((len + 1) * 8 > offs.len) refuse()
           val cl = readLeaf(child)
@@ -1278,7 +1278,7 @@ object ArrowCodec {
           // against the child length
           val (len, _) = nextNode()
           if (len != rows) refuse()
-          val v = valid(nextBuf(), len)
+          val v = valid(nextBuf())
           val offs = nextBuf()
           if (len * offw > offs.len) refuse()
           val sizes = nextBuf()

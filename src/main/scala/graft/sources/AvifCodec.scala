@@ -57,7 +57,7 @@ object AvifCodec {
             val n = if (v == 0) be16(b, at + 4).toLong else be32(b, at + 4)
             if (n > MaxItems) refuse()
             val start = at + (if (v == 0) 6 else 8)
-            boxes(b, start, end) { (t2, a2, e2) =>
+            boxes(b, start, end) { (t2, a2, _) =>
               if (t2 == "infe") {
                 val iv = u8(b, a2)
                 if (iv < 2) refuse() // v0/1: the pre-HEIF shape

@@ -172,11 +172,6 @@ object NetcdfCodec {
     out.toByteArray
   }
 
-  /** Exact container size for a file with the given layout — the
-    * first-principles arithmetic the q_netcdf_roundtrip oracle
-    * recomputes in SQL. */
-  def containerSize(nc: Nc): Int = encode(nc).length
-
   // ------------------------------------------------------------- decode
 
   private final class R(d: Array[Byte]) {

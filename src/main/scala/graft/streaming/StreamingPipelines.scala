@@ -374,7 +374,7 @@ object StreamingPipelines {
       .map { case (cid, rows) => (cid, rows.sortBy(_._2).map(_._3)) }
     require(cents.nonEmpty, "empty centroid relation")
     val centCol = array(cents.map { case (cid, cs) =>
-      struct(lit(cid).as("cid"), array(cs.map(lit(_)): _*).as("c"))
+      struct(lit(cid).as("cid"), array(cs.toSeq.map(lit(_)): _*).as("c"))
     }: _*)
     val header = spark.range(1).select(centCol.as("cents"))
     vectors.join(broadcast(header))

@@ -34,12 +34,12 @@ object FixtureGen {
     val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val enc = sfs.map { dir =>
       val nUsers = graft.Tables.events(spark, dir)
-        .agg(countDistinct(col("user_id"))).head.getLong(0)
+        .agg(countDistinct(col("user_id"))).head().getLong(0)
       graft.queries.EncoderQueries.qEncoderEmbed(spark, dir)
         .withColumn("n_users", lit(nUsers))
     }.reduce(_ unionByName _)
     enc.coalesce(1).write.mode("overwrite").parquet(s"$out/q_encoder_embed")
-    graft.queries.EncoderQueries.qMaeReconstruct(spark, sfs.head)
+    graft.queries.EncoderQueries.qMaeReconstruct(spark)
       .coalesce(1).write.mode("overwrite").parquet(s"$out/q_mae_reconstruct")
     spark.stop()
   }

@@ -12,8 +12,9 @@ import graft.{Bench, Sessions, SparkEntry}
   * (first run per scale also absorbs codegen). Writes
   * `BENCH_sf1_r14.json` and prints one summary JSON line.
   *
-  * Coverage: every declared query EXCEPT the [[GoldenPinned]] ones
-  * (committed foreign fixtures whose size does not scale with SF) —
+  * Coverage: every declared query EXCEPT the registry's fixed-input
+  * ones ([[graft.SparkEntry.fixedInput]]: committed fixtures or
+  * in-process generated input, whose size does not scale with SF) —
   * the complement is pinned by ScaleBenchSpec. Each run is timed by
   * [[graft.Bench.timeQuery]] (build plus noop sink).
   *
@@ -24,24 +25,9 @@ import graft.{Bench, Sessions, SparkEntry}
   * (fixed query sets, k-row artifacts) legitimately sit far below 1.
   */
 object ScaleBench {
-  /** Queries whose input is a committed foreign fixture that does not
-    * scale with SF, so a decade exponent would measure the fixture,
-    * not the operator. Each has a row in SCALE.md's "Golden-pinned
-    * exemptions" table; a new query is measured unless it joins both. */
-  private[graft] val GoldenPinned: Set[String] = Set(
-    "q_hdf5_read", "q_jpeg_decode", "q_jpeg_progressive",
-    "q_jpeg_lossless", "q_jpeg12", "q_jpeg_arith", "q_warc_extract",
-    "q_wet_extract", "q_wat_extract", "q_jsonl_zst", "q_tfrecord_read",
-    "q_zip_scan", "q_avro_read", "q_safetensors_read", "q_arrow_read",
-    "q_jsonl_bz2", "q_gif_decode", "q_wiki_pages", "q_wiki_clean",
-    "q_bmp_decode", "q_gif_frames", "q_mp4_samples", "q_vtt_cues",
-    "q_caption_align", "q_exif_meta", "q_exif_gps", "q_pdf_text",
-    "q_flac_meta", "q_id3_tags", "q_robots_rules", "q_robots_filter",
-    "q_webp_meta", "q_avif_meta", "q_opus_meta")
-
-  /** Every declared query except the golden-pinned ones, sorted. */
+  /** Every declared query except the fixed-input ones, sorted. */
   private[graft] val Selected: Seq[String] =
-    (SparkEntry.queries.keySet -- GoldenPinned).toSeq.sorted
+    (SparkEntry.queries.keySet -- SparkEntry.fixedInput.keySet).toSeq.sorted
 
   /** The scale factor named by the `sf<x>` in `dir`'s last path
     * component (`sf0.1` → 0.1, `testdata_sf1` → 1.0); a directory

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{Sessions, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× scale-up of the sf0.1 fixture tables → a

@@ -78,7 +78,7 @@ class CatalystExtensionsSpec extends SparkSpec {
     val df = Seq((Array(1.0f, 2.0f), Array(2.0f, 0.0f))).toDF("a", "b")
     val row = df.select(
       expr("l2_sq(a, b)").as("d1"), expr("l2_sq(b, a)").as("d2"),
-      expr("cosine_sim(a, b)").as("c1"), expr("cosine_sim(b, a)").as("c2")).head
+      expr("cosine_sim(a, b)").as("c1"), expr("cosine_sim(b, a)").as("c2")).head()
     assert(row.getDouble(0) == 5.0 && row.getDouble(1) == 5.0)
     assert(row.getDouble(2) == row.getDouble(3))
   }
@@ -86,7 +86,7 @@ class CatalystExtensionsSpec extends SparkSpec {
   test("l2_sq truncates to the common prefix on mismatched lengths (documented divergence from the fold)") {
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(2.0f, 2.0f))).toDF("a", "b")
-    assert(df.select(expr("l2_sq(a, b)")).head.getDouble(0) == 1.0)
+    assert(df.select(expr("l2_sq(a, b)")).head().getDouble(0) == 1.0)
   }
 
   test("l2_sq interpreted eval agrees with the hand-computed value") {

@@ -140,7 +140,7 @@ class EdgeCasesSpec extends SparkSpec {
     import spark.implicits._
     val tmp = Files.createTempDirectory("pqsmall").toFile.getAbsolutePath
     val vecs = (0L until 10L).map { i =>
-      (i, Array.tabulate(64)(j => math.sin(i * 64 + j).toFloat), i % 3)
+      (i, Array.tabulate(64)(j => math.sin((i * 64 + j).toDouble).toFloat), i % 3)
     }.toDF("vec_id", "embedding", "label")
     vecs.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val out = SparkEntry.queries("q_pq_search")(spark, tmp)

@@ -75,8 +75,7 @@ class ExifCodecSpec extends SparkSpec {
   }
 
   test("GPS decimal stage: signed degrees from the engine's own tag rows") {
-    val df = graft.queries.MultimodalQueries
-      .qExifGps(spark, graft.Fixtures.base)
+    val df = graft.queries.MultimodalQueries.qExifGps(spark)
     val rows = df.collect().map(r => (r.getString(0), r.getDouble(1),
       r.getDouble(2))).sortBy(_._1)
     assert(rows.length == 2)

@@ -250,7 +250,7 @@ class GifCodecSpec extends SparkSpec {
     // offset frame lands at canvas coords
     import org.apache.spark.sql.functions.{col, min}
     val r = df.filter(col("file") === "anim-00.gif" && col("frame") === 1)
-      .agg(min("y"), min("x")).head
+      .agg(min("y"), min("x")).head()
     assert(r.getInt(0) == 1 && r.getInt(1) == 2)
   }
 }

@@ -23,8 +23,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "env:SPARK_GRAFT_SF_DIR",     // Bench input directory
     "env:SPARK_GRAFT_BENCH_ONLY", // Bench query filter
     "env:SPARK_GRAFT_PLAN_ONLY",  // PlanAudit query filter
-    "env:GRAFT_FIXTURES_DIR",     // binary-fixture directory
-    "prop:graft.fixtures.dir",    // same, as a JVM property
+    "prop:graft.fixtures.dir",    // binary-fixture directory
   )
 
   private val confKey = "\"(spark\\.graft\\.[^\"]*)\"".r

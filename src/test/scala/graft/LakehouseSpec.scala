@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Sinks
-import org.apache.spark.sql.functions._
 
 /** Table-maintenance semantics a long-running lake depends on:
   * dynamic partition overwrite (replace only the partitions the batch

@@ -239,7 +239,7 @@ class Mp4CodecSpec extends SparkSpec {
       "elstgap-13.mp4" -> 4L))
     // md5s are all distinct across samples (every payload differs)
     import org.apache.spark.sql.functions.countDistinct
-    val n = df.agg(countDistinct("md5")).head.getLong(0)
+    val n = df.agg(countDistinct("md5")).head().getLong(0)
     assert(n == 85L)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.pipelines.PretrainingTable
 import graft.sources.ObservationsGen

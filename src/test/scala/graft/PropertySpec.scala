@@ -87,26 +87,38 @@ class PropertySpec extends SparkSpec {
   }
 
   test("KNN band partition is pigeonhole-complete at every corpus-scaled width") {
-    // the PRODUCTION band layout rule (uniform 6 bands of w bits,
-    // w = bandWidthFor(n) ∈ [3,10]) — a layout change re-proves (or
-    // fails) the completeness theorem here, never a stale mirror
-    for (w <- 3 to 10) {
-      val defs = graft.queries.MlQueries.bandDefs(w)
-      assert(defs.length == 6 && defs.map(_._3).sum == 6 * w)
-      def buckets(sig: Long): Seq[Long] =
-        defs.map { case (_, off, bw) => (sig >> off) & ((1L << bw) - 1) }
+    // the PRODUCTION band layout (MlQueries.bandsExpr at runtime width
+    // bw = bandWidthFor(n) ∈ [3,10]), evaluated by Spark over every
+    // sampled pair in one job — a layout change re-proves (or fails)
+    // the completeness theorem here, never a stale mirror
+    import spark.implicits._
+    val samples = (3 to 10).flatMap { w =>
       val bits = 6 * w
       val g = for {
         sig <- Gen.chooseNum(0L, (1L << bits) - 1)
         nFlips <- Gen.chooseNum(0, 5)
         flips <- Gen.listOfN(nFlips, Gen.chooseNum(0, bits - 1))
       } yield (sig, flips)
+      val out = Seq.newBuilder[(Int, Long, Long)]
       forSamples(g, n = 40) { case (sig, flips) =>
         val other = flips.foldLeft(sig)((s, b) => s ^ (1L << b))
         assert(java.lang.Long.bitCount(sig ^ other) <= 5)
-        val shared = buckets(sig).zip(buckets(other)).exists { case (a, b) => a == b }
-        assert(shared, s"w=$w pair within hamming 5 shares no band: $sig vs $other")
+        out += ((w, sig, other))
       }
+      out.result()
+    }
+    val bands = graft.queries.MlQueries.bandsExpr
+    val got = samples.toDF("bw", "sig", "other")
+      .select(col("bw"), col("sig"), col("other"),
+        expr(bands).getField("bucket").as("a"),
+        expr(bands.replace("sig", "other")).getField("bucket").as("b"))
+      .as[(Int, Long, Long, Seq[Long], Seq[Long])].collect()
+    assert(got.length == samples.length)
+    got.foreach { case (w, sig, other, a, b) =>
+      assert(a.length == 6 && b.length == 6, s"w=$w: ${a.length} bands")
+      assert((a ++ b).forall(k => k >= 0 && k < (1L << w)), s"w=$w bucket out of range")
+      assert(a.zip(b).exists { case (x, y) => x == y },
+        s"w=$w pair within hamming 5 shares no band: $sig vs $other")
     }
     // the width rule itself: integer thresholds == ceil(log2 n) - 7
     def ceilLog2(n: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(n - 1)

@@ -113,7 +113,7 @@ class RobotsCodecSpec extends SparkSpec {
   }
 
   test("decision join: group override, longest match, allow wins ties") {
-    val df = graft.queries.TextQueries.qRobotsFilter(spark, "")
+    val df = graft.queries.TextQueries.qRobotsFilter(spark)
     val rows = df.collect().map(r => ((r.getString(0), r.getString(1),
       r.getString(2)), (r.getInt(3), r.getString(4)))).toMap
     // graftbot's own group overrides * entirely

@@ -27,6 +27,6 @@ object RowDigest {
     val rows = df.collect().map(render).sorted
     val md = java.security.MessageDigest.getInstance("MD5")
     rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-    rows.length + ":" + md.digest().map("%02x".format(_)).mkString
+    s"${rows.length}:" + md.digest().map("%02x".format(_)).mkString
   }
 }

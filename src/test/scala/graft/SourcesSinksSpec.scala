@@ -184,13 +184,15 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("Fixtures.resolve fails fast on a bogus base, naming the override knobs") {
     val ex = intercept[IllegalStateException] {
-      Fixtures.resolve(Seq("/nonexistent/a", "/nonexistent/b"))
+      Fixtures.resolve(Some("/nonexistent/a"))
     }
     assert(ex.getMessage.contains("/nonexistent/a"))
     assert(ex.getMessage.contains("graft.fixtures.dir"))
-    assert(ex.getMessage.contains("GRAFT_FIXTURES_DIR"))
-    // and the happy path still resolves the first existing candidate
+    // an unset property fails the same way, naming the property
+    val unset = intercept[IllegalStateException](Fixtures.resolve(None))
+    assert(unset.getMessage.contains("graft.fixtures.dir"))
+    // and the happy path resolves the one root it is given
     val tmp = Files.createTempDirectory("graft_fix").toString
-    assert(Fixtures.resolve(Seq("/nonexistent/a", tmp)) == tmp)
+    assert(Fixtures.resolve(Some(tmp)) == tmp)
   }
 }

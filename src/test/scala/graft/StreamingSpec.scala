@@ -631,7 +631,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mp4Ingest and subtitleIngest stream files with batch parity") {
-    import spark.implicits._
     // mp4: the sample-table walk as a stream
     val msrc = Files.createTempDirectory("graft_mp_src").toString
     val mdest = Files.createTempDirectory("graft_mp_dest").toString
@@ -863,7 +862,7 @@ class StreamingSpec extends SparkSpec {
     }
     val t0 = System.currentTimeMillis() - 60000
     land(fileA.toSeq, t0)
-    land(fileC, t0 + 10000)
+    land(fileC.toSeq, t0 + 10000)
     val schema = Seq((1L, "en", "x")).toDF("doc_id", "lang", "text").schema
 
     val q1 = StreamingPipelines.curationIngest(spark, schema, src, dest, ckpt,

@@ -83,8 +83,7 @@ class SubtitleCodecSpec extends SparkSpec {
   }
 
   test("caption-to-frame alignment joins real container walks") {
-    val df = graft.queries.MultimodalQueries
-      .qCaptionAlign(spark, graft.Fixtures.base)
+    val df = graft.queries.MultimodalQueries.qCaptionAlign(spark)
     val all = df.collect().map(r => (r.getAs[String]("vid"),
       r.getAs[Int]("smp"), r.getAs[Long]("pts_ms"), r.getAs[Int]("cue")))
     val c6 = all.filter(_._1 == "cap-06").sortBy(_._2)

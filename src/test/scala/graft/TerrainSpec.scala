@@ -21,7 +21,7 @@ class TerrainSpec extends SparkSpec {
     val r = Seq(g).toDF("dzdx", "dzdy").select(
       TerrainOps.slopeDeg(col("dzdx"), col("dzdy")),
       TerrainOps.aspectDeg(col("dzdx"), col("dzdy")),
-      TerrainOps.hillshade(col("dzdx"), col("dzdy"))).head
+      TerrainOps.hillshade(col("dzdx"), col("dzdy"))).head()
     (r.getDouble(0), r.getDouble(1), r.getDouble(2))
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.sources.{GeoIngest, Sinks}
 
 /** TFRecord sink: schema-driven Example encoding, round-trip through

@@ -65,7 +65,7 @@ class TinyDecoderSpec extends SparkSpec {
   }
 
   test("q_mae_reconstruct runs end-to-end: all masked slots scored, finite MSE") {
-    val rows = EncoderQueries.qMaeReconstruct(spark, "unused")
+    val rows = EncoderQueries.qMaeReconstruct(spark)
       .select("n_masked", "masked_mse").collect()
     assert(rows.nonEmpty)
     for (r <- rows) {
@@ -73,7 +73,7 @@ class TinyDecoderSpec extends SparkSpec {
       assert(java.lang.Double.isFinite(r.getDouble(1)))
     }
     // deterministic across runs
-    val again = EncoderQueries.qMaeReconstruct(spark, "unused")
+    val again = EncoderQueries.qMaeReconstruct(spark)
       .select("n_masked", "masked_mse").collect()
     assert(rows.map(_.toString).sorted.toSeq == again.map(_.toString).sorted.toSeq)
   }

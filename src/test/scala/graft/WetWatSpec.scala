@@ -15,7 +15,7 @@ class WetWatSpec extends SparkSpec {
     val got = SparkEntry.queries("q_wet_extract")(spark, "/root/testdata/sf0.001")
     val want = spark.read
       .parquet(graft.Fixtures.path("q_wet_extract/golden"))
-      .select(got.columns.map(col): _*)
+      .select(got.columns.toSeq.map(col): _*)
     assert(got.count() == 7, "expected 7 conversion records")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "WET extraction diverged from the Python-computed golden")
@@ -33,7 +33,7 @@ class WetWatSpec extends SparkSpec {
     val got = SparkEntry.queries("q_wat_extract")(spark, "/root/testdata/sf0.001")
     val want = spark.read
       .parquet(graft.Fixtures.path("q_wat_extract/golden"))
-      .select(got.columns.map(col): _*)
+      .select(got.columns.toSeq.map(col): _*)
     assert(got.count() == 5, "expected 5 metadata records")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "WAT extraction diverged from the Python-computed golden")

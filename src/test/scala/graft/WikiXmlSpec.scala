@@ -70,10 +70,10 @@ class WikiXmlSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(byShard == Map("wiki-00.xml.bz2" -> 5L, "wiki-01.xml.bz2" -> 3L))
     import org.apache.spark.sql.functions.col
-    val redir = df.filter(col("page_id") === 3).head
+    val redir = df.filter(col("page_id") === 3).head()
     assert(redir.getString(4) == "Dakar")
     // the numeric-entity page decodes to the raw characters
-    val cafe = df.filter(col("page_id") === 2).head
+    val cafe = df.filter(col("page_id") === 2).head()
     assert(cafe.getString(3) == "Café Touba")
     assert(cafe.getString(5) == "Café with über flavor & <sugar>.")
   }
