@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -49,6 +51,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rounds. A query that throws is reported as -1 (never as a
   * normal-looking timing) and listed in an "errors" map so
   * regressions can't hide in the output.
+  *
+  * The header records the generated classes Janino compiled during
+  * the warm-up, pass 1 and pass 2 (`codegen_compiles`) and their
+  * compile seconds (`codegen_compile_s`). Pass 2 runs queries pass 1
+  * already compiled, so its count is the codegen-cache misses: a
+  * working set that outgrows the cache (see [[Sessions]]) shows as
+  * thousands there instead of about a hundred.
   */
 object Bench {
   private val MaxLineChars = 1500
@@ -154,6 +163,17 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Generated classes compiled in this JVM so far and their compile
+    * seconds; only a codegen-cache miss compiles. The first call
+    * initializes Spark's code generator, and with it the cache size,
+    * so call it only once [[Sessions.local]] has built the session. */
+  private[graft] final case class Codegen(compiles: Long, seconds: Double) {
+    def -(earlier: Codegen): Codegen = Codegen(compiles - earlier.compiles, seconds - earlier.seconds)
+  }
+
+  private[graft] def codegen(): Codegen =
+    Codegen(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e9)
+
   /** Cumulative hypervisor steal ticks (USER_HZ, summed over all
     * cpus) from /proc/stat — field 8 of the aggregate "cpu" line.
     * -1 when unreadable (non-Linux): every consumer treats that as
@@ -182,9 +202,11 @@ object Bench {
     val runSteal0 = stealTicks()
     val spark = Sessions.local(cpus)
     require(SparkEntry.queries.contains("q1_agg"), "warmup query q1_agg is not declared")
+    val cg0 = codegen()
     // warmup: a representative agg touches parquet read + shuffle + codegen paths
     try timeQuery(spark, SparkEntry.queries("q1_agg"), sfDir)
     catch { case _: Throwable => () }
+    val cg1 = codegen()
 
     // local-iteration filter (the driver never sets it): time just the
     // named queries, e.g. when quiet-measuring a new query's row for
@@ -209,7 +231,10 @@ object Bench {
     // Opposite orderings make the two passes' noise windows cover
     // disjoint query sets, so min-of-passes recovers the true timing.
     val p1 = pass(ordered)
+    val cg2 = codegen()
     val p2 = pass(ordered.reverse)
+    val cg3 = codegen()
+    val compiled = Seq("warmup" -> (cg1 - cg0), "p1" -> (cg2 - cg1), "p2" -> (cg3 - cg2))
     // per-query min ACROSS the two passes; a run that errored never
     // contributes a timing, and a query only counts as errored if it
     // failed in BOTH passes (a transient blip must not mask success)
@@ -286,8 +311,12 @@ object Bench {
     val cpusEffective = spark.sparkContext.defaultParallelism
     val shufflePartitions =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt catch { case _: Throwable => -1 }
+    def perPhase(f: Codegen => String): String =
+      compiled.map { case (phase, c) => s""""$phase":${f(c)}""" }.mkString("{", ",", "}")
+    val compiles = s""""codegen_compiles":${perPhase(_.compiles.toString)}"""
+    val codegenJson = s"""$compiles,"codegen_compile_s":${perPhase(c => sec3(c.seconds))}"""
     val detailJson =
-      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.size},"noisy":$noisyCount,"steal_sec":${sec3(runStealSec)},"control":${sec3(control)},"control_sec":${sec3(controlSec)},"control_steal_sec":${sec3(controlStealSec)},"cpus_effective":$cpusEffective,"shuffle_partitions":$shufflePartitions,"queries":$detail,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.size},"noisy":$noisyCount,"steal_sec":${sec3(runStealSec)},"control":${sec3(control)},"control_sec":${sec3(controlSec)},"control_steal_sec":${sec3(controlStealSec)},"cpus_effective":$cpusEffective,"shuffle_partitions":$shufflePartitions,$codegenJson,"queries":$detail,"sf":"$sfDir"}"""
     val detailName = detailFileName(only.isDefined)
     val detailPath = java.nio.file.Paths.get(detailName)
     try java.nio.file.Files.write(detailPath, (detailJson + "\n").getBytes("UTF-8"))
@@ -306,7 +335,7 @@ object Bench {
       .mkString("{", ",", "}")
     def assemble(entries: Seq[String]): String = {
       val qs = entries.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.size},"noisy":$noisyCount,"steal_sec":${sec3(runStealSec)},"control":${sec3(control)},"cpus_effective":$cpusEffective,"shuffle_partitions":$shufflePartitions,"qunit":"ms","queries":$qs,"errors":$errs,"detail":"$detailName","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","nq":${results.size},"noisy":$noisyCount,"steal_sec":${sec3(runStealSec)},"control":${sec3(control)},"cpus_effective":$cpusEffective,"shuffle_partitions":$shufflePartitions,$compiles,"qunit":"ms","queries":$qs,"errors":$errs,"detail":"$detailName","sf":"$sfDir"}"""
     }
     val all = errEntries ++ okEntries
     // largest prefix of (errors ++ slowest-first timings) that fits

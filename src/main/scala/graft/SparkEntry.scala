@@ -77,6 +77,13 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+  def oracleSql: Map[String, String] = oracleSqlOf(oracles.keySet)
+
+  /** [[oracleSql]] restricted to `names`. A fixture query's SQL names
+    * its golden files under [[Fixtures.Root]], resolved here, so only a
+    * selected fixture query needs the fixture root. */
+  def oracleSqlOf(names: collection.Set[String]): Map[String, String] =
+    oracles.collect { case (name, sql) if names(name) => name -> Fixtures.expand(sql) }
+
+  private lazy val oracles: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

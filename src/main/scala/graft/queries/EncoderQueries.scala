@@ -109,10 +109,10 @@ object EncoderQueries {
   val oracle: Map[String, String] = Map(
     "q_encoder_embed" ->
       s"""SELECT user_id, dim, sq_norm, e0
-        |FROM read_parquet('${graft.Fixtures.base}/q_encoder_embed/*.parquet')
+        |FROM read_parquet('${graft.Fixtures.Root}/q_encoder_embed/*.parquet')
         |WHERE n_users = (SELECT COUNT(DISTINCT user_id) FROM events)""".stripMargin,
     "q_mae_reconstruct" ->
       s"""SELECT id, n_masked, masked_mse, recon0
-        |FROM read_parquet('${graft.Fixtures.base}/q_mae_reconstruct/*.parquet')""".stripMargin,
+        |FROM read_parquet('${graft.Fixtures.Root}/q_mae_reconstruct/*.parquet')""".stripMargin,
   )
 }

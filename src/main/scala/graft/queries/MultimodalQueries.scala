@@ -725,23 +725,23 @@ object MultimodalQueries {
 
   val qJpeg12Sql: String =
     s"""SELECT name, y, x, c, v
-      |FROM read_parquet('${graft.Fixtures.base}/q_jpeg12/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jpeg12/golden/*.parquet')""".stripMargin
 
   val qJpegLosslessSql: String =
     s"""SELECT name, y, x, c, v
-      |FROM read_parquet('${graft.Fixtures.base}/q_jpeg_lossless/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_lossless/golden/*.parquet')""".stripMargin
 
   val qJpegDecodeSql: String =
     s"""SELECT name, y, x, r, g, b
-      |FROM read_parquet('${graft.Fixtures.base}/q_jpeg_decode/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_decode/golden/*.parquet')""".stripMargin
 
   val qJpegProgressiveSql: String =
     s"""SELECT name, y, x, r, g, b
-      |FROM read_parquet('${graft.Fixtures.base}/q_jpeg_progressive/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_progressive/golden/*.parquet')""".stripMargin
 
   val qJpegArithSql: String =
     s"""SELECT name, y, x, r, g, b
-      |FROM read_parquet('${graft.Fixtures.base}/q_jpeg_arith/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_arith/golden/*.parquet')""".stripMargin
 
   /** NetCDF classic (CDF-1) container round-trip, oracle-graded — the
     * reference's prediction sink is `ds.to_netcdf` per test instance,
@@ -826,7 +826,7 @@ object MultimodalQueries {
 
   val qHdf5ReadSql: String =
     s"""SELECT file, dataset, idx, value
-      |FROM read_parquet('${graft.Fixtures.base}/q_hdf5_read/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_hdf5_read/golden/*.parquet')""".stripMargin
 
   /** WARC crawl-archive extraction, oracle-graded per record — the
     * Common Crawl ingest every web-scale LLM corpus starts from
@@ -856,7 +856,7 @@ object MultimodalQueries {
   val qWarcExtractSql: String =
     s"""SELECT file, rec_idx, warc_type, target_uri, http_status, mime,
       |  payload_len, payload_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_warc_extract/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_warc_extract/golden/*.parquet')""".stripMargin
 
   /** WET extracted-text extraction, oracle-graded per page — Common
     * Crawl's second deliverable (`*.warc.wet.gz`), the corpus shape
@@ -883,7 +883,7 @@ object MultimodalQueries {
 
   val qWetExtractSql: String =
     s"""SELECT file, rec_idx, target_uri, mime, text_chars, n_lines, text_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_wet_extract/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_wet_extract/golden/*.parquet')""".stripMargin
 
   /** WAT metadata extraction, oracle-graded per record — Common
     * Crawl's third deliverable (`*.warc.wat.gz`): a JSON envelope per
@@ -918,7 +918,7 @@ object MultimodalQueries {
   val qWatExtractSql: String =
     s"""SELECT file, rec_idx, target_uri, src_type, http_status,
       |  content_type, title, n_links
-      |FROM read_parquet('${graft.Fixtures.base}/q_wat_extract/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_wat_extract/golden/*.parquet')""".stripMargin
 
   /** Zstd JSONL shard scan, oracle-graded per line — the `.jsonl.zst`
     * wire format modern text corpora ship in (RedPajama/Dolma/
@@ -941,7 +941,7 @@ object MultimodalQueries {
 
   val qJsonlZstSql: String =
     s"""SELECT shard, line_idx, doc_id, lang, text_len, text_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_jsonl_zst/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jsonl_zst/golden/*.parquet')""".stripMargin
 
   /** bzip2-compressed JSONL shard scan, oracle-graded per line — the
     * delivery shape of Wikipedia dumps and pushshift archives, the
@@ -965,7 +965,7 @@ object MultimodalQueries {
 
   val qJsonlBz2Sql: String =
     s"""SELECT shard, line_idx, doc_id, lang, text_len, text_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_jsonl_bz2/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_jsonl_bz2/golden/*.parquet')""".stripMargin
 
   /** Webdataset shard round-trip, oracle-graded — the LAION-style
     * layout web-scale multimodal training actually uses: ONE tar shard
@@ -1112,9 +1112,9 @@ object MultimodalQueries {
       |  SELECT name, ROW_NUMBER() OVER (ORDER BY name) - 1 AS fi,
       |    CAST(SUM(r + g + b) AS BIGINT) AS px, COUNT(*) AS npx
       |  FROM (
-      |    SELECT * FROM read_parquet('${graft.Fixtures.base}/q_jpeg_decode/golden/*.parquet')
+      |    SELECT * FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_decode/golden/*.parquet')
       |    UNION ALL
-      |    SELECT * FROM read_parquet('${graft.Fixtures.base}/q_jpeg_progressive/golden/*.parquet'))
+      |    SELECT * FROM read_parquet('${graft.Fixtures.Root}/q_jpeg_progressive/golden/*.parquet'))
       |  GROUP BY name),
       |n AS (SELECT COUNT(*) AS nfix FROM fx)
       |SELECT d.source, COUNT(*) AS n_txt, COUNT(*) AS n_jpg,
@@ -1172,7 +1172,7 @@ object MultimodalQueries {
   val qTfrecordReadSql: String =
     s"""SELECT file, rec_idx, key, kind, elem_idx, int_val, float_bits,
       |  bytes_len, bytes_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_tfrecord_read/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_tfrecord_read/golden/*.parquet')""".stripMargin
 
   /** ZIP archive scan, oracle-graded per member — the other archive
     * shape datasets ship in next to tar (Kaggle exports, scraped-doc
@@ -1201,7 +1201,7 @@ object MultimodalQueries {
 
   val qZipScanSql: String =
     s"""SELECT file, member, method, size, md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_zip_scan/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_zip_scan/golden/*.parquet')""".stripMargin
 
   /** Avro object-container scan, oracle-graded per field cell — the
     * warehouse/Kafka interchange format on its way into a corpus.
@@ -1227,7 +1227,7 @@ object MultimodalQueries {
   val qAvroReadSql: String =
     s"""SELECT file, rec_idx, field, elem_idx, vtype, long_val, float_bits,
       |  double_bits, str_val, bytes_len, bytes_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_avro_read/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_avro_read/golden/*.parquet')""".stripMargin
 
   /** BMP scan, oracle-graded per pixel — the uncompressed DIB format
     * web crawls still surface. Fixtures in
@@ -1246,7 +1246,7 @@ object MultimodalQueries {
 
   val qBmpDecodeSql: String =
     s"""SELECT file, y, x, r, g, b
-      |FROM read_parquet('${graft.Fixtures.base}/q_bmp_decode/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_bmp_decode/golden/*.parquet')""".stripMargin
 
   /** GIF encode→decode round-trip, oracle-graded — the corpus-driven
     * scale path of the GIF family (q_gif_decode grades the committed
@@ -1467,7 +1467,7 @@ object MultimodalQueries {
 
   val qWikiPagesSql: String =
     s"""SELECT shard, page_id, ns, title, redirect, text_len, text_md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_wiki_pages/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_wiki_pages/golden/*.parquet')""".stripMargin
 
   /** End-to-end wiki ingest: dump parse → wikitext clean, oracle-
     * graded per page over REAL wikitext (templates, piped links,
@@ -1491,7 +1491,7 @@ object MultimodalQueries {
 
   val qWikiCleanSql: String = graft.queries.TextQueries.wikitextCleanSqlFor(
     s"""SELECT page_id AS k, text AS w
-      |  FROM read_parquet('${graft.Fixtures.base}/q_wiki_pages/golden/*.parquet')""".stripMargin,
+      |  FROM read_parquet('${graft.Fixtures.Root}/q_wiki_pages/golden/*.parquet')""".stripMargin,
     "page_id")
 
   /** GIF scan, oracle-graded per pixel — the web-corpus long-tail
@@ -1516,7 +1516,7 @@ object MultimodalQueries {
 
   val qGifDecodeSql: String =
     s"""SELECT file, frame, y, x, r, g, b
-      |FROM read_parquet('${graft.Fixtures.base}/q_gif_decode/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_gif_decode/golden/*.parquet')""".stripMargin
 
   /** Composited GIF animation, oracle-graded per canvas pixel — what
     * a vision pipeline actually samples from an animated GIF (the
@@ -1540,7 +1540,7 @@ object MultimodalQueries {
 
   val qGifFramesSql: String =
     s"""SELECT file, frame, y, x, r, g, b, a
-      |FROM read_parquet('${graft.Fixtures.base}/q_gif_frames/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_gif_frames/golden/*.parquet')""".stripMargin
 
   /** MP4 / ISO-BMFF sample tables, oracle-graded per sample — a video
     * pipeline's first job over a crawled MP4 is recovering per-sample
@@ -1568,7 +1568,7 @@ object MultimodalQueries {
   val qMp4SamplesSql: String =
     s"""SELECT file, track, handler, codec, tsc, smp, chunk, off, size,
       |  dts, dur, pts, sync, md5
-      |FROM read_parquet('${graft.Fixtures.base}/q_mp4_samples/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_mp4_samples/golden/*.parquet')""".stripMargin
 
   /** Subtitle cues, oracle-graded per cue — WebVTT (YouTube-style ASR
     * output) and SRT (movie/TV corpora), the caption layer of a video
@@ -1586,7 +1586,7 @@ object MultimodalQueries {
 
   val qVttCuesSql: String =
     s"""SELECT file, cue, start_ms, end_ms, text
-      |FROM read_parquet('${graft.Fixtures.base}/q_vtt_cues/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_vtt_cues/golden/*.parquet')""".stripMargin
 
   /** MP4 mux∘walk roundtrip AT CORPUS SCALE — every document's text
     * is cut into 16-char samples (cap 8), muxed into a real ISO-BMFF
@@ -1701,7 +1701,7 @@ object MultimodalQueries {
 
   val qWebpMetaSql: String =
     s"""SELECT file, kind, key, idx, num, sval
-      |FROM read_parquet('${graft.Fixtures.base}/q_webp_meta/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_webp_meta/golden/*.parquet')""".stripMargin
 
   /** AVIF/HEIF metadata, oracle-graded — the fastest-growing web
     * image format (and the iPhone default, HEIC) is an ISO-BMFF
@@ -1721,7 +1721,7 @@ object MultimodalQueries {
 
   val qAvifMetaSql: String =
     s"""SELECT file, kind, key, idx, num, sval
-      |FROM read_parquet('${graft.Fixtures.base}/q_avif_meta/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_avif_meta/golden/*.parquet')""".stripMargin
 
   /** FLAC metadata, oracle-graded — the audio-corpus curation
     * surface: STREAMINFO's packed bitfields (rate/channels/bits/
@@ -1739,7 +1739,7 @@ object MultimodalQueries {
 
   val qFlacMetaSql: String =
     s"""SELECT file, kind, key, sval, num
-      |FROM read_parquet('${graft.Fixtures.base}/q_flac_meta/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_flac_meta/golden/*.parquet')""".stripMargin
 
   /** ID3v2 tags + MPEG-1 Layer III stream shape, oracle-graded — the
     * MP3 half of audio curation: v2.3 (plain frame sizes) and v2.4
@@ -1755,7 +1755,7 @@ object MultimodalQueries {
 
   val qId3TagsSql: String =
     s"""SELECT file, kind, key, sval, num
-      |FROM read_parquet('${graft.Fixtures.base}/q_id3_tags/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_id3_tags/golden/*.parquet')""".stripMargin
 
   /** Ogg/Opus metadata, oracle-graded — the podcast/speech-corpus
     * container: RFC 3533 page walk (capture pattern, CRC32 with the
@@ -1775,7 +1775,7 @@ object MultimodalQueries {
 
   val qOpusMetaSql: String =
     s"""SELECT file, kind, key, idx, num, sval
-      |FROM read_parquet('${graft.Fixtures.base}/q_opus_meta/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_opus_meta/golden/*.parquet')""".stripMargin
 
   /** PDF text runs, oracle-graded — PDF is the dominant document
     * format in crawled corpora, and "extract the shown text" is every
@@ -1797,7 +1797,7 @@ object MultimodalQueries {
 
   val qPdfTextSql: String =
     s"""SELECT file, page, run, text
-      |FROM read_parquet('${graft.Fixtures.base}/q_pdf_text/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_pdf_text/golden/*.parquet')""".stripMargin
 
   /** EXIF metadata, oracle-graded per tag value — the image-side PII
     * surface: crawled JPEGs carry camera metadata in an APP1 TIFF
@@ -1817,7 +1817,7 @@ object MultimodalQueries {
 
   val qExifMetaSql: String =
     s"""SELECT file, ifd, tag, ttype, idx, num, den, sval
-      |FROM read_parquet('${graft.Fixtures.base}/q_exif_meta/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_exif_meta/golden/*.parquet')""".stripMargin
 
   /** GPS coordinates decoded to signed decimal degrees — the actual
     * PII-curation output: degrees + minutes/60 + seconds/3600 from
@@ -1851,7 +1851,7 @@ object MultimodalQueries {
 
   val qExifGpsSql: String =
     s"""WITH g AS (
-      |  SELECT * FROM read_parquet('${graft.Fixtures.base}/q_exif_meta/golden/*.parquet')
+      |  SELECT * FROM read_parquet('${graft.Fixtures.Root}/q_exif_meta/golden/*.parquet')
       |  WHERE ifd = 'gps'),
       |piv AS (
       |  SELECT file,
@@ -1918,8 +1918,8 @@ object MultimodalQueries {
   val qCaptionAlignSql: String =
     s"""SELECT regexp_replace(s.file, '\\.[a-z0-9]+$$', '') AS vid,
       |  s.smp, s.pts * 1000 // s.tsc AS pts_ms, s.sync, c.cue, c.text
-      |FROM read_parquet('${graft.Fixtures.base}/q_mp4_samples/golden/*.parquet') s
-      |JOIN read_parquet('${graft.Fixtures.base}/q_vtt_cues/golden/*.parquet') c
+      |FROM read_parquet('${graft.Fixtures.Root}/q_mp4_samples/golden/*.parquet') s
+      |JOIN read_parquet('${graft.Fixtures.Root}/q_vtt_cues/golden/*.parquet') c
       |  ON regexp_replace(c.file, '\\.[a-z0-9]+$$', '') =
       |     regexp_replace(s.file, '\\.[a-z0-9]+$$', '')
       | AND c.start_ms <= s.pts * 1000 // s.tsc
@@ -2001,7 +2001,7 @@ object MultimodalQueries {
   val qArrowReadSql: String =
     s"""SELECT file, batch, col, row, elem_idx, elem_idx2, elem_idx3,
       |  vtype, is_null, bits, str_val
-      |FROM read_parquet('${graft.Fixtures.base}/q_arrow_read/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_arrow_read/golden/*.parquet')""".stripMargin
 
   /** safetensors shard scan, oracle-graded per tensor element — the
     * named-tensor interchange format modern ML artifacts ship in
@@ -2028,7 +2028,7 @@ object MultimodalQueries {
 
   val qSafetensorsReadSql: String =
     s"""SELECT file, tensor, dtype, shape, elem_idx, bits
-      |FROM read_parquet('${graft.Fixtures.base}/q_safetensors_read/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_safetensors_read/golden/*.parquet')""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_caption_align_scale" -> (qCaptionAlignScale _),

@@ -2183,7 +2183,7 @@ object TextQueries {
 
   val qRobotsRulesSql: String =
     s"""SELECT host, agent, verb, value, seq
-      |FROM read_parquet('${graft.Fixtures.base}/q_robots_rules/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_robots_rules/golden/*.parquet')""".stripMargin
 
   /** Per-URL robots decisions, oracle-graded — the RFC 9309 matcher
     * AS A JOIN, which is its 100 TB shape: per-host rules are bounded
@@ -2259,7 +2259,7 @@ object TextQueries {
 
   val qRobotsFilterSql: String =
     s"""SELECT host, agent, path, allowed, rule
-      |FROM read_parquet('${graft.Fixtures.base}/q_robots_filter/golden/*.parquet')""".stripMargin
+      |FROM read_parquet('${graft.Fixtures.Root}/q_robots_filter/golden/*.parquet')""".stripMargin
 
   /** Corpus-scale robots decision join, SF-scaled so ScaleBenchSpec
     * measures its decade exponent (the round-15 review noted both new

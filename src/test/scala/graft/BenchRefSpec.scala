@@ -72,4 +72,21 @@ class BenchRefSpec extends AnyFunSuite {
       assert(m == Map("q1_agg" -> 0.254, "q_ab" -> 0.1), s"parse failed on: $t")
     }
   }
+
+  test("a header carrying codegen compile counts parses like one without") {
+    def parseIn(name: String, text: String): Map[String, Double] = {
+      val dir = java.nio.file.Files.createTempDirectory("benchref")
+      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+      Bench.loadReference(dir)
+    }
+    val codegen = """"codegen_compiles":{"warmup":31,"p1":2912,"p2":118},""" +
+      """"codegen_compile_s":{"warmup":0.412,"p1":40.125,"p2":1.093},"""
+    val queries = """"queries":{"q1_agg":{"sec":0.254,"p1":0.5,"p2":0.254,"st1":0.0,"st2":0.0},"q_ab":{"sec":0.1,"p1":0.2,"p2":0.1,"st1":0.0,"st2":0.0}}"""
+    val header = """{"metric":"total","value":0.354,"unit":"sec","nq":2,"noisy":0,"steal_sec":0.0,"shuffle_partitions":4,"""
+    val expected = Map("q1_agg" -> 0.254, "q_ab" -> 0.1)
+    for (name <- Seq("BENCH_REF.json", "BENCH_DETAIL.json")) {
+      assert(parseIn(name, header + queries + "}") == expected, s"old header, $name")
+      assert(parseIn(name, header + codegen + queries + "}") == expected, s"new header, $name")
+    }
+  }
 }
