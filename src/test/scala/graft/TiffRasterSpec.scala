@@ -329,8 +329,8 @@ class TiffRasterSpec extends SparkSpec {
   }
 
   test("hostile bytes never throw: every truncation and flip, digest-pinned") {
-    // both byte orders through the raster decoder, and a georeferenced
-    // container through the georef decoder
+    // both byte orders through the raster decoder, the deflate arm, and
+    // a georeferenced container through the georef decoder
     val geo = MultimodalOps.encodeTiffRaster(4, 3, 1, "i16",
       Array.tabulate(12)(i => (i * 7 % 50 - 25).toDouble),
       lzw = true, predictor = true, georef = Some(MultimodalOps.TiffGeoref(
@@ -339,12 +339,14 @@ class TiffRasterSpec extends SparkSpec {
     val d = Seq(
       FuzzDigest.sweep(goldenLzwI16)(MultimodalOps.decodeTiffRaster),
       FuzzDigest.sweep(goldenLzwF32be)(MultimodalOps.decodeTiffRaster),
-      FuzzDigest.sweep(geo)(MultimodalOps.decodeTiffGeoref))
+      FuzzDigest.sweep(geo)(MultimodalOps.decodeTiffGeoref),
+      FuzzDigest.sweep(goldenDeflateU16)(MultimodalOps.decodeTiffRaster))
     // a read past the end refuses: cuts inside the GeoKey directory and
     // flips that send the IFD or the directory past the end are None
     assert(d == Seq(
       "428/48:1d757e3402c1eb7b",
       "388/60:dc82024f628b92bd",
-      "632/299:17fb8be824b98b72"), d)
+      "632/299:17fb8be824b98b72",
+      "512/37:47dff08d1b0d1085"), d)
   }
 }
