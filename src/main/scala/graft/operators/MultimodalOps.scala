@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Bytes
+import graft.sources.{Bytes, Compression}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -234,32 +234,6 @@ object MultimodalOps {
     out.toByteArray
   }
 
-  /** zlib inflate (TIFF Compression=8, what GDAL's COMPRESS=DEFLATE
-    * writes — the actual encoding of the reference's srtm rasters).
-    * None unless the stream inflates to exactly `maxOut` bytes. */
-  private[graft] def inflate(data: Array[Byte], off: Int, len: Int,
-      maxOut: Int): Option[Array[Byte]] = {
-    if (len <= 0 || maxOut < 0) return None
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(data, off, len)
-      val out = new Array[Byte](maxOut)
-      var total = 0
-      var stuck = false
-      while (total < maxOut && !inf.finished() && !stuck) {
-        val n = inf.inflate(out, total, maxOut - total)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) stuck = true
-        total += n
-      }
-      if (stuck || total != maxOut) return None
-      if (!inf.finished() && inf.inflate(new Array[Byte](1)) != 0)
-        return None // stream continues past the expected size
-      Some(out)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
-  }
-
   /** General TIFF raster decoder. Beyond the baseline subset, supports
     * what the reference's real GeoTIFFs use (srtm.tif IFD:
     * Compression=8 deflate, tiled 256×256, PlanarConfiguration=2,
@@ -414,9 +388,9 @@ object MultimodalOps {
         case 5L =>
           lzwDecode(payload, seg.off.toInt, seg.clen.toInt, expect)
             .getOrElse(return None)
-        case _ =>
-          inflate(payload, seg.off.toInt, seg.clen.toInt, expect)
-            .getOrElse(return None)
+        case _ => // zlib deflate, what GDAL's COMPRESS=DEFLATE writes
+          Compression.inflate(payload, seg.off.toInt, seg.clen.toInt, expect,
+            exact = true).getOrElse(return None)
       }
       val rowSamples = seg.sw * segSpp
       val acc = new Array[Int](segSpp)
@@ -623,14 +597,9 @@ object MultimodalOps {
     val strip =
       if (lzw) lzwEncode(raw)
       else if (deflate) {
-        val d = new java.util.zip.Deflater()
-        try {
-          d.setInput(raw); d.finish()
-          val buf = new Array[Byte](raw.length + 64)
-          val out = new java.io.ByteArrayOutputStream(raw.length / 2 + 16)
-          while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-          out.toByteArray
-        } finally d.end()
+        val z = new java.io.ByteArrayOutputStream(raw.length / 2 + 16)
+        Compression.deflate(raw, z)
+        z.toByteArray
       } else raw
     val out = new java.io.ByteArrayOutputStream(strip.length + 256)
     out.write('I'); out.write('I'); out.write(Bytes.le(42, 2)); out.write(Bytes.le(8, 4))

@@ -111,7 +111,7 @@ object ArrowCodec {
   val MaxMetaBytes: Int = 1 << 20
   /** Per-buffer decompressed ceiling (the codecs' MaxInflatedBytes
     * stance): a compressed buffer declaring more refuses the file. */
-  val MaxBufBytes: Long = GzipCodec.MaxInflatedBytes.toLong
+  val MaxBufBytes: Long = Compression.MaxInflatedBytes.toLong
 
   /** Decode a `.arrow` object in either IPC framing, or None on any
     * structural fault or envelope refusal. Never throws. */

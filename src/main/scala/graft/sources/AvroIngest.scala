@@ -32,7 +32,7 @@ object AvroIngest {
     * a bomb file refuses at the first over-budget record instead of
     * accumulating the whole container (same MaxInflatedBytes stance as
     * the gzip/bz2/zstd/zip codecs). */
-  val MaxDecodedBytes: Long = GzipCodec.MaxInflatedBytes.toLong
+  val MaxDecodedBytes: Long = Compression.MaxInflatedBytes.toLong
 
   /** (field, elem_idx, vtype, long_val, float_bits, double_bits,
     * str_val, bytes_val) — elem_idx is None for scalar fields. */

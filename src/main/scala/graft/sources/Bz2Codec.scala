@@ -14,28 +14,12 @@ package graft.sources
   * any fault. Never throws. */
 object Bz2Codec {
 
-  val MaxInflatedBytes: Int = GzipCodec.MaxInflatedBytes
-
   /** Decompress a `.bz2` object (all concatenated streams), or None
     * on bad magic, corrupt data, trailing garbage, or cap breach. */
   def decode(bytes: Array[Byte]): Option[Array[Byte]] = {
     if (bytes.length < 10 || bytes(0) != 'B' || bytes(1) != 'Z' ||
         bytes(2) != 'h' || bytes(3) < '1' || bytes(3) > '9') return None
-    val in = new java.io.ByteArrayInputStream(bytes)
-    try {
-      val bz = new org.apache.commons.compress.compressors.bzip2
-        .BZip2CompressorInputStream(in, true)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = bz.read(buf)
-        while (n >= 0) {
-          if (out.size.toLong + n > MaxInflatedBytes) return None
-          out.write(buf, 0, n)
-          n = bz.read(buf)
-        }
-        Some(out.toByteArray)
-      } finally bz.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Compression.drain(new org.apache.commons.compress.compressors.bzip2
+      .BZip2CompressorInputStream(new java.io.ByteArrayInputStream(bytes), true))
   }
 }

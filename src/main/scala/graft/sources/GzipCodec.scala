@@ -39,27 +39,12 @@ object GzipCodec {
     out.write(0)    // XFL
     out.write(0xff) // OS = unknown
     if (name.nonEmpty) { out.write(name.getBytes("ISO-8859-1")); out.write(0) }
-    val d = new java.util.zip.Deflater(
-      java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    d.setInput(data); d.finish()
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) { val n = d.deflate(buf); out.write(buf, 0, n) }
-    d.end()
+    Compression.deflate(data, out, raw = true)
     val crc = new java.util.zip.CRC32(); crc.update(data)
     out.write(le(crc.getValue, 4))
     out.write(le(data.length, 4)) // ISIZE: the length mod 2^32
     out.toByteArray
   }
-
-  /** Ceiling on total inflated bytes per file. A scan over untrusted
-    * buckets must bound memory per task: a 42 KB zip-bomb member can
-    * legally inflate to 4 GB, and an executor decoding a few of those
-    * concurrently dies. 256 MiB comfortably covers real corpus shards
-    * (Common-Crawl WET shards inflate to ~300-400 MB *compressed at
-    * ~1 GB files*; per-document shards here are KB-scale) while
-    * keeping worst-case task memory bounded. Oversized files decode
-    * to None — the skip contract, not an OOM. */
-  val MaxInflatedBytes: Int = 256 << 20
 
   /** Decode a gzip FILE — one or more back-to-back members per
     * RFC 1952 §2.2 ("a gzip file consists of a series of members");
@@ -67,33 +52,39 @@ object GzipCodec {
     * and readers must concatenate the inflated payloads. Returns the
     * first member's FNAME plus the concatenation; None on any
     * structural violation in ANY member, on trailing non-member
-    * garbage, or past [[MaxInflatedBytes]] — never throws. */
+    * garbage, or past [[Compression.MaxInflatedBytes]] — never throws. */
   def decode(bytes: Array[Byte]): Option[GzipFile] =
     refusing(run(bytes)).flatten
 
   private def run(bytes: Array[Byte]): Option[GzipFile] = {
     if (bytes.length < 18) return None
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(bytes.length.toLong * 4, 1L << 20).toInt)
+    // one inflater for every member; it reports where each trailer starts
+    val inf = Compression.inflater(raw = true)
     var name: String = null
+    var members = List.empty[Array[Byte]]
+    var total = 0
     var at = 0
-    while (at < bytes.length) {
-      decodeMember(bytes, at, out) match {
-        case None => return None
-        case Some((n, next)) =>
-          if (name == null) name = n
-          at = next
+    try {
+      while (at < bytes.length) {
+        val (n, data, next) =
+          decodeMember(bytes, at, inf, Compression.MaxInflatedBytes - total)
+            .getOrElse(return None)
+        if (name == null) name = n
+        members ::= data
+        total += data.length
+        at = next
       }
-    }
-    Some(GzipFile(if (name == null) "" else name, out.toByteArray))
+    } finally inf.end()
+    Some(GzipFile(if (name == null) "" else name,
+      if (members.size == 1) members.head else Array.concat(members.reverse: _*)))
   }
 
-  /** Decode the single member starting at `off`, appending its
-    * inflated payload to `out`; returns (FNAME, offset-after-trailer)
-    * or None on any violation. */
+  /** Decode the single member starting at `off`, inflating at most
+    * `limit` bytes; returns (FNAME, payload, offset-after-trailer) or
+    * None on any violation. */
   private def decodeMember(
-      bytes: Array[Byte], off: Int,
-      out: java.io.ByteArrayOutputStream): Option[(String, Int)] = {
+      bytes: Array[Byte], off: Int, inf: java.util.zip.Inflater,
+      limit: Int): Option[(String, Array[Byte], Int)] = {
     if (bytes.length - off < 18) return None
     if ((bytes(off) & 0xff) != 0x1f || (bytes(off + 1) & 0xff) != 0x8b ||
         bytes(off + 2) != 8) return None
@@ -124,29 +115,14 @@ object GzipCodec {
       if (pos > bytes.length) return None
     }
     if (bytes.length - pos < 8) return None // need at least the trailer
-    val inf = new java.util.zip.Inflater(true)
-    inf.setInput(bytes, pos, bytes.length - pos)
-    val crc = new java.util.zip.CRC32()
-    var memberLen = 0L
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) { inf.end(); return None } // truncated body
-        memberLen += n
-        if (out.size().toLong + n > MaxInflatedBytes) { inf.end(); return None }
-        crc.update(buf, 0, n)
-        out.write(buf, 0, n)
-      }
-    } catch {
-      case _: java.util.zip.DataFormatException => inf.end(); return None
-    }
+    val data = Compression.inflate(inf, bytes, pos, bytes.length - pos, limit,
+      exact = false).getOrElse(return None)
     val consumed = (bytes.length - pos) - inf.getRemaining
-    inf.end()
     val tpos = pos + consumed
     if (tpos + 8 > bytes.length) return None
+    val crc = new java.util.zip.CRC32(); crc.update(data)
     if (le32(bytes, tpos) != crc.getValue) return None
-    if (le32(bytes, tpos + 4) != (memberLen & 0xffffffffL)) return None
-    Some((name, tpos + 8))
+    if (le32(bytes, tpos + 4) != (data.length & 0xffffffffL)) return None
+    Some((name, data, tpos + 8))
   }
 }

@@ -487,7 +487,7 @@ object Hdf5Codec {
     val fullChunkBytes: Int = chunkElems * width
     // one inflater for every chunk, reset per chunk; the assembler's
     // owner ends it
-    private val inf = new java.util.zip.Inflater()
+    private val inf = Compression.inflater()
     def end(): Unit = inf.end()
 
     /** Byte-unshuffle: stored layout groups byte j of every element
@@ -519,25 +519,10 @@ object Hdf5Codec {
       while (fi >= 0) {
         if (((mask >> fi) & 1L) == 0L) {
           filters(fi) match {
-            case 1 => // deflate: inflate to exactly the full chunk size
+            case 1 => // deflate: the stream must end at exactly the full chunk size
               if (data != null) return false // deflate must see stored bytes
-              try {
-                inf.reset()
-                inf.setInput(bytes, childAt.toInt, nbytes.toInt)
-                val outBuf = new Array[Byte](fullChunkBytes)
-                var got = 0
-                while (got < fullChunkBytes && !inf.finished()) {
-                  val r = inf.inflate(outBuf, got, fullChunkBytes - got)
-                  // r == 0 with needsInput = truncated; needsDictionary
-                  // (zlib FDICT) would otherwise spin this loop forever
-                  if (r == 0 && (inf.needsInput() || inf.needsDictionary())) return false
-                  got += r
-                }
-                if (got != fullChunkBytes) return false
-                data = outBuf
-              } catch {
-                case _: java.util.zip.DataFormatException => return false
-              }
+              data = Compression.inflate(inf, bytes, childAt.toInt, nbytes.toInt,
+                fullChunkBytes, exact = true).getOrElse(return false)
             case 2 => // byte shuffle
               if (data == null) {
                 if (nbytes != fullChunkBytes) return false

@@ -60,7 +60,6 @@ object PdfCodec {
   val MaxObjects: Int = 100000
   val MaxPages: Int = 10000
   val MaxRuns: Int = 100000
-  val MaxInflatedBytes: Int = GzipCodec.MaxInflatedBytes
 
   // ---- value model -------------------------------------------------
   private sealed trait PVal
@@ -782,22 +781,14 @@ object PdfCodec {
     var docId: Array[Byte] = null
     var crypt: Option[(Array[Byte], Boolean)] = None // (file key, aes?)
 
+    // every FlateDecode stream of the file draws on one inflation budget
+    var inflated = 0
     def inflate(raw: Array[Byte]): Array[Byte] = {
-      val inf = new java.util.zip.Inflater()
-      try {
-        inf.setInput(raw)
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        while (!inf.finished()) {
-          val n =
-            try inf.inflate(buf)
-            catch { case _: java.util.zip.DataFormatException => refuse() }
-          if (n == 0 && !inf.finished()) refuse() // truncated/stuck
-          out.write(buf, 0, n)
-          if (out.size > MaxInflatedBytes) refuse()
-        }
-        out.toByteArray
-      } finally inf.end()
+      val out = Compression.inflate(raw, 0, raw.length,
+        Compression.MaxInflatedBytes - inflated)
+        .getOrElse(refuse())
+      inflated += out.length
+      out
     }
     /** PNG row unfiltering (predictors 10–15; 1 byte/px as xref
       * streams use): filter byte per row, None/Sub/Up/Average/Paeth. */
@@ -1530,13 +1521,19 @@ object PdfCodec {
           case one => Vector(one)
         }
       }
-      val content = parts.map { part =>
+      // the parts joined by newlines in one builder (linear in their
+      // bytes); an empty prefix takes no separator
+      val streams = parts.map { part =>
         deref(part) match {
           case s: PStream => streamData(s)
           case _ => refuse()
         }
-      }.foldLeft(Array.emptyByteArray)((a, c) =>
-        if (a.isEmpty) c else a ++ Array[Byte]('\n') ++ c)
+      }
+      val content = if (streams.size == 1) streams.head else {
+        val joined = new java.io.ByteArrayOutputStream()
+        streams.foreach { c => if (joined.size > 0) joined.write('\n'); joined.write(c) }
+        joined.toByteArray
+      }
       // token scan: operands collect until an operator consumes them
       val cp = new P(content, 0, content.length)
       // re-bind the parser over the CONTENT bytes, not the file

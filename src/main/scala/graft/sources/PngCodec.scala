@@ -67,12 +67,8 @@ object PngCodec {
       System.arraycopy(pixels, y * stride, raw, y * (1 + stride) + 1, stride)
       y += 1
     }
-    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    d.setInput(raw); d.finish()
     val zOut = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) { val n = d.deflate(buf); zOut.write(buf, 0, n) }
-    d.end()
+    Compression.deflate(raw, zOut)
     val out = new java.io.ByteArrayOutputStream(zOut.size() + 64)
     Signature.foreach(b => out.write(b & 0xff))
     def chunk(typ: String, payload: Array[Byte]): Unit = {
@@ -160,33 +156,10 @@ object PngCodec {
     val rawLen = height.toLong * (1 + stride)
     val outCh = if (colorType == 3) 3 else srcCh
     if (width.toLong * height * outCh > MaxPixelBytes) return None
-    // inflate the concatenated IDAT zlib stream to EXACTLY rawLen
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    val raw = new Array[Byte](rawLen.toInt)
-    var got = 0
-    try {
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        // truncated input, or an FDICT zlib header (needsDictionary):
-        // either way the stream can make no further progress — skip
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) {
-          inf.end(); return None
-        }
-        got += n
-      }
-      // stream must end exactly here: surplus pixel data is a
-      // malformed file, not extra rows to ignore
-      if (got == raw.length && !inf.finished()) {
-        val probe = new Array[Byte](1)
-        if (inf.inflate(probe) != 0) { inf.end(); return None }
-        if (!inf.finished()) { inf.end(); return None }
-      }
-    } catch {
-      case _: java.util.zip.DataFormatException => inf.end(); return None
-    }
-    inf.end()
-    if (got != raw.length) return None
+    // the concatenated IDAT zlib stream must end at EXACTLY rawLen:
+    // surplus pixel data is a malformed file, not extra rows to ignore
+    val raw = Compression.inflate(idat.toByteArray, 0, idat.size, rawLen.toInt,
+      exact = true).getOrElse(return None)
     // reverse the per-row filters in place over a bytes-per-pixel
     // stride (PNG spec 6.2: left/up neighbors are CHANNEL-aligned)
     val bpp = srcCh

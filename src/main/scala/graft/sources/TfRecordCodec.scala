@@ -46,7 +46,7 @@ import Bytes._
 object TfRecordCodec {
 
   /** Per-record payload ceiling and whole-file record ceiling. */
-  val MaxRecordBytes: Int = GzipCodec.MaxInflatedBytes
+  val MaxRecordBytes: Int = Compression.MaxInflatedBytes
   val MaxRecords: Int = 100000
   private val MaxFeatures = 4096
   private val MaxListElems = 1 << 22

@@ -39,7 +39,7 @@ object WarcCodec {
 
   /** Per-record block ceiling and whole-file record ceiling: a scan
     * over untrusted buckets bounds memory per task. */
-  val MaxBlockBytes: Int = GzipCodec.MaxInflatedBytes
+  val MaxBlockBytes: Int = Compression.MaxInflatedBytes
   val MaxRecords: Int = 100000
   private val MaxHeaderLine = 8192
   private val MaxHeaders = 64

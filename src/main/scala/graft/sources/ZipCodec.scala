@@ -15,7 +15,7 @@ import Bytes._
   * Directory record (backward signature scan over the ≤64 KiB comment
   * tail), walk the central directory's file headers, then for each
   * member verify its local header and inflate (method 8, raw deflate
-  * via [[java.util.zip.Inflater]]) or copy (method 0, stored), and
+  * via [[Compression.inflate]]) or copy (method 0, stored), and
   * check CRC-32 + declared size.
   *
   * ZIP64 (APPNOTE 4.5) is first-class: when the EOCD carries the
@@ -45,7 +45,7 @@ object ZipCodec {
   case class Member(name: String, method: Int, data: Array[Byte])
 
   val MaxMembers: Int = 100000
-  val MaxMemberBytes: Int = GzipCodec.MaxInflatedBytes
+  val MaxMemberBytes: Int = Compression.MaxInflatedBytes
   val MaxTotalBytes: Long = 1L << 31
 
   private val EocdSig = 0x06054b50
@@ -172,7 +172,9 @@ object ZipCodec {
       case 0 =>
         if (csize != usize) return None
         java.util.Arrays.copyOfRange(bytes, dataOff, dataOff + csize)
-      case 8 => inflateRaw(bytes, dataOff, csize, usize).getOrElse(return None)
+      case 8 =>
+        Compression.inflate(bytes, dataOff, csize, usize, raw = true, exact = true)
+          .getOrElse(return None)
       case _ => return None // bzip2/lzma/zstd/etc: unsupported method
     }
     if (data.length != usize) return None
@@ -180,32 +182,6 @@ object ZipCodec {
     c.update(data)
     if (c.getValue != crc) return None
     Some(Member(name, method, data))
-  }
-
-  /** Raw-deflate inflate with an exact output budget. */
-  private def inflateRaw(
-      bytes: Array[Byte], off: Int, len: Int, usize: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(bytes, off, len)
-      val out = new Array[Byte](usize)
-      var done = 0
-      while (done < usize) {
-        val n = inf.inflate(out, done, usize - done)
-        if (n == 0) {
-          if (inf.finished() || inf.needsDictionary() || inf.needsInput())
-            return None
-        }
-        done += n
-      }
-      // the stream must END here: a probe byte catches oversize output
-      // (finished() alone can be false until the final block is read)
-      val probe = new Array[Byte](1)
-      if (inf.inflate(probe, 0, 1) > 0) return None
-      Some(out)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
   }
 
   /** Backward scan for the EOCD signature within the spec's maximum

@@ -18,7 +18,7 @@ package graft.sources
   *  - truncated frames, trailing garbage, and bad magics raise inside
   *    the binding and decode to None — the corrupt-skip contract, one
   *    bad shard costs its file, never the scan;
-  *  - total inflated bytes are capped at [[GzipCodec.MaxInflatedBytes]]
+  *  - total inflated bytes are capped at [[Compression.MaxInflatedBytes]]
   *    (a 100-byte zstd bomb can legally inflate to GBs; an executor
   *    decoding several concurrently must stay memory-bounded).
   */
@@ -37,23 +37,8 @@ object ZstdCodec {
     * frame-structure violations, trailing garbage, or past the
     * inflation cap — never throws. */
   def decode(bytes: Array[Byte],
-             maxOut: Int = GzipCodec.MaxInflatedBytes): Option[Array[Byte]] = {
-    if (bytes.length < 4) return None
-    val in = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
-      new java.io.ByteArrayInputStream(bytes))
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(bytes.length.toLong * 4, 1L << 20).toInt)
-    val buf = new Array[Byte](8192)
-    try {
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (out.size().toLong + n > maxOut) return None
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      Some(out.toByteArray)
-    } catch {
-      case _: java.io.IOException => None
-    } finally in.close()
-  }
+             maxOut: Int = Compression.MaxInflatedBytes): Option[Array[Byte]] =
+    if (bytes.length < 4) None
+    else Compression.drain(new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+      new java.io.ByteArrayInputStream(bytes)), maxOut)
 }

@@ -190,4 +190,15 @@ class BytesSpec extends AnyFunSuite {
       }
     if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
   }
+
+  test("src/main: only Compression constructs a zlib inflater or deflater") {
+    // every codec inflates, deflates and drains through Compression, under
+    // its one acceptance rule; a java.util.zip stream wrapper would carry
+    // a loop and a rule of its own
+    val zlib = """new\s+(?:java\.util\.zip\.)?\w*(?:Inflater|Deflater|GZIP)\w*""".r
+    val (home, found) = SourceScan.sites(SourceScan.code(_ => false), zlib)
+      .partition(_._1 == "Compression.scala")
+    assert(home.size == 2, "the scan no longer sees Compression's own inflater and deflater")
+    if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Bz2Codec
+import graft.sources.{Bz2Codec, Compression}
 
 /** Contract specs for the bzip2 codec: multi-stream decode, the
   * refusal contract (magic gate, truncation, trailing garbage,
@@ -36,7 +36,7 @@ class Bz2CodecSpec extends SparkSpec {
   }
 
   test("inflation cap: a shard expanding past the budget refuses") {
-    val huge = compress(new Array[Byte](Bz2Codec.MaxInflatedBytes + 1))
+    val huge = compress(new Array[Byte](Compression.MaxInflatedBytes + 1))
     assert(huge.length < (1 << 20)) // zeros compress tiny: a real bomb shape
     assert(Bz2Codec.decode(huge).isEmpty)
   }

@@ -354,7 +354,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 4
     }
-    assert(fz.hex == "224/65:74793077ed836b55", fz.hex)
+    assert(fz.hex == "224/52:a6dcc58f9a92f44d", fz.hex)
   }
 
   test("layout-v4 extensible array: index-block elements, EADB and EASB walks decode exactly") {
@@ -420,7 +420,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 4
     }
-    assert(fz.hex == "5478/1806:0b79a4360db6b856", fz.hex)
+    assert(fz.hex == "5478/1381:5120f690ce5e8794", fz.hex)
   }
 
   test("layout-v4 v2 B-tree: depth-0 leaf roots and a depth-1 BTIN tree decode exactly") {
@@ -486,7 +486,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 4
     }
-    assert(fz.hex == "60718/30945:d82b85227fef3d4d", fz.hex)
+    assert(fz.hex == "60718/23401:4fb6151b4c67fbdd", fz.hex)
   }
 
   test("paged fixed array: bitmap-gated element pages decode exactly") {
@@ -523,7 +523,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 8
     }
-    assert(fz.hex == "5126/735:f6ed4dd0ca832d81", fz.hex)
+    assert(fz.hex == "5126/336:8fbe16f751837155", fz.hex)
   }
 
   test("paged extensible array: EASB page-init bitmasks gate element pages") {
@@ -569,7 +569,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 7
     }
-    assert(fz.hex == "2054/946:98ca425315763066", fz.hex)
+    assert(fz.hex == "2054/835:cb8c7e74bb344269", fz.hex)
   }
 
   test("paged data blocks referenced from the EA index block decode") {
@@ -625,7 +625,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 5
     }
-    assert(fz.hex == "1739/809:ae875aa7bf431df6", fz.hex)
+    assert(fz.hex == "1739/734:5fc7846c515221c5", fz.hex)
   }
 
   test("v2 refusals: dense link storage and hostile continuations return None") {
@@ -656,7 +656,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 4
     }
-    assert(fz.hex == "237/123:e41095ec7f5a33d6", fz.hex)
+    assert(fz.hex == "237/116:c187d0eccd7fdda2", fz.hex)
   }
 
   test("dense link storage: root direct block and FHIB + depth-1 name tree decode exactly") {
@@ -725,7 +725,7 @@ class Hdf5CodecSpec extends SparkSpec {
       fz.add(Hdf5Codec.decode(m))
       j += 5
     }
-    assert(fz.hex == "644/393:93d9979a29f3a165", fz.hex)
+    assert(fz.hex == "644/366:c44b9b7e53166822", fz.hex)
   }
 
   test("chunked refusals: hostile chunk-tree levels and truncated chunk streams return None") {

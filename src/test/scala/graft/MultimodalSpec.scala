@@ -205,7 +205,7 @@ class MultimodalSpec extends SparkSpec {
       MultimodalOps.decodeTiffRaster(soup)
       graft.sources.WavCodec.decode(soup)
       MultimodalOps.lzwDecode(soup, 0, soup.length, 64)
-      MultimodalOps.inflate(soup, 0, soup.length, 64)
+      graft.sources.Compression.inflate(soup, 0, soup.length, 64)
       val ct = lzwValid.clone()
       (1 to 4).foreach(_ => ct(rnd.nextInt(ct.length)) = rnd.nextInt(256).toByte)
       MultimodalOps.decodeTiffRaster(ct).foreach { r =>

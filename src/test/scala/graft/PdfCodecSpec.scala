@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.PdfCodec
+import graft.sources.{Compression, PdfCodec}
 
 /** Contract specs for the PDF text-run codec: the classic xref walk
   * (incl. incremental-update /Prev chains), the value parser (escape
@@ -62,6 +62,49 @@ class PdfCodecSpec extends SparkSpec {
       j += 1
     }
     assert(fz.hex == "1046/307:7fb0ec1e6e7898e4", fz.hex)
+  }
+
+  test("inflated bytes are bounded per file, not per stream") {
+    // a FlateDecode content stream of zeros that inflates to just over
+    // half the cap, after one text run; a few hundred KB compressed
+    def stream(text: String): Array[Byte] = {
+      val raw = new Array[Byte](Compression.MaxInflatedBytes / 2 + 1)
+      val t = s"BT ($text) Tj ET\n".getBytes("US-ASCII")
+      System.arraycopy(t, 0, raw, 0, t.length)
+      val z = new java.io.ByteArrayOutputStream()
+      Compression.deflate(raw, z)
+      z.toByteArray
+    }
+    def ascii(s: String) = s.getBytes("US-ASCII")
+    // one page whose /Contents array holds `parts`
+    def pdf(parts: Seq[Array[Byte]]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      val offs = scala.collection.mutable.ArrayBuffer.empty[Int]
+      def obj(body: Array[Byte]): Unit = {
+        offs += out.size
+        out.write(ascii(s"${offs.size} 0 obj\n")); out.write(body)
+        out.write(ascii("\nendobj\n"))
+      }
+      out.write(ascii("%PDF-1.4\n"))
+      obj(ascii("<< /Type /Catalog /Pages 2 0 R >>"))
+      obj(ascii("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
+      obj(ascii(parts.indices.map(i => s"${4 + i} 0 R")
+        .mkString("<< /Type /Page /Parent 2 0 R /Contents [", " ", "] >>")))
+      parts.foreach(z => obj(ascii(
+        s"<< /Length ${z.length} /Filter /FlateDecode >>\nstream\n") ++ z ++
+        ascii("\nendstream")))
+      val xref = out.size
+      out.write(ascii(s"xref\n0 ${offs.size + 1}\n0000000000 65535 f \n" +
+        offs.map(o => f"$o%010d 00000 n \n").mkString +
+        s"trailer\n<< /Size ${offs.size + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n"))
+      out.toByteArray
+    }
+    val one = stream("one")
+    val two = stream("two")
+    assert(one.length + two.length < (1 << 20), "zeros compress tiny")
+    assert(PdfCodec.decode(pdf(Seq(one))).get.map(_.text) == Vector("one"))
+    assert(PdfCodec.decode(pdf(Seq(one, two))).isEmpty,
+      "two streams inflate past the file's budget together")
   }
 
   test("refusals: dangling startxref, rootless xref stream, garbage, encryption") {
