@@ -44,8 +44,9 @@ import graft.Tables
   *     driver-side artifact being trained.
   *  3. Apply the merge as a per-row `replace` collapsing the 12-char
   *     pair to the round's 6-char code token, and lazily
-  *     localCheckpoint so round N+1's aggregate materializes a
-  *     lineage-free vocab table (the GraphOps rounds discipline — a
+  *     checkpoint it ([[ScaleOps.materializeLazily]]) so round N+1's
+  *     aggregate materializes a lineage-free vocab table (the
+  *     [[ScaleOps.fixpoint]] rounds discipline — a
   *     plain chain of withColumns would grow the plan per round until
   *     analysis blows up).
   *  4. Stop at [[V]] merges or when no adjacent pair remains.
@@ -729,15 +730,14 @@ object BpeTrain {
   private def train(spark: SparkSession, dir: String): DataFrame = {
     // 1. the one corpus-sized shuffle: word frequencies, then the
     // fixed-width code encoding (per-word transform, done once)
-    var vocab = Tables.documents(spark, dir)
+    var vocab = ScaleOps.materializeOnce(Tables.documents(spark, dir)
       .select(explode(
         expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("word0"))
       .groupBy("word0").agg(count(lit(1)).as("cnt"))
       .withColumn("word", expr(
         "concat_ws('', transform(sequence(1, length(word0)), " +
           "i -> concat('g', lpad(cast(ascii(substring(word0, i, 1)) " +
-          "as string), 5, '0'))))"))
-      .localCheckpoint()
+          "as string), 5, '0'))))")))
 
     val stats = vocab
       .agg(sum(col("cnt") * length(col("word0"))), count(lit(1))).head()
@@ -750,7 +750,7 @@ object BpeTrain {
     // partitions; the fixture's 31 rows collapse to one.
     val parts = math.max(1L, stats.getLong(1) / 65536L).toInt
     if (parts < vocab.rdd.getNumPartitions)
-      vocab = vocab.repartition(parts).localCheckpoint()
+      vocab = ScaleOps.materializeOnce(vocab.repartition(parts))
 
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Int, Int, Long, Long)]
@@ -791,10 +791,9 @@ object BpeTrain {
         val rhs = m.substring(TokW + 1, 2 * TokW).toInt
         merges += ((it, lhs, rhs, mc, totalSyms))
         // 3. apply the merge; new code = 255 + round
-        vocab = vocab
-          .withColumn("word",
-            replace(col("word"), lit(m), lit(tok(255 + it))))
-          .localCheckpoint(false) // lazy: next round's aggregate runs it
+        // lazy: next round's aggregate runs it
+        vocab = ScaleOps.materializeLazily(vocab
+          .withColumn("word", replace(col("word"), lit(m), lit(tok(255 + it)))))
         it += 1
       }
     }

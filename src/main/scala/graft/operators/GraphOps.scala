@@ -14,52 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** RDD blocks behind a localCheckpoint'd DataFrame (the LogicalRDD
-    * the checkpoint rewrote the plan to). Used for the lagged cleanup
-    * below; None for plans that are not checkpoint results. */
-  private def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  /** Two-round-lagged executor-storage cleanup for iterative loops:
-    * push each retired round's DataFrame; once a round is TWO
-    * generations old its blocks can no longer be referenced by any
-    * future job (round N only reads round N-1), so unpersist them
-    * eagerly instead of waiting for the ContextCleaner to GC the
-    * dropped reference — on long-running high-diameter graphs the
-    * lingering blocks otherwise grow executor storage with round
-    * count. The one-round lag also keeps a task RETRY of the round
-    * that is still materializing safe. Spark logs a WARN that the
-    * unpersisted RDD "cannot be recomputed" — intended: retired
-    * rounds are provably never read again. */
-  private final class LaggedCleanup {
-    private val q = scala.collection.mutable.Queue.empty[DataFrame]
-    private def free(df: DataFrame): Unit = backingRdd(df).foreach { rdd =>
-      rdd.unpersist(blocking = false)
-      // Reliable mode: the retired round's checkpoint FILES can never
-      // be read again either, and nothing else deletes them — the
-      // ContextCleaner only removes checkpoint files when
-      // spark.cleaner.referenceTracking.cleanCheckpoints is on (off by
-      // default) and even then only at GC time. Without this delete a
-      // long high-diameter run grows the checkpoint dir by one full
-      // edge-set per round. getCheckpointFile is None for local
-      // checkpoints, so local mode is untouched.
-      rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(rdd.context.hadoopConfiguration).delete(p, true)
-      }
-    }
-    def retire(df: DataFrame): Unit = {
-      q.enqueue(df)
-      if (q.size > 1) free(q.dequeue())
-    }
-    /** End of loop: every queued round predates the returned fixpoint
-      * DataFrame (or the loop failed and nothing is returned), so all
-      * their blocks and checkpoint files can go. */
-    def drain(): Unit = while (q.nonEmpty) free(q.dequeue())
-  }
-
   /** Connected components by iterative min-label propagation
     * (Pregel-style): every node starts labelled with itself; each
     * round every node takes the min of its own label and its
@@ -76,35 +30,25 @@ object GraphOps {
     * Labels only ever DECREASE under min propagation, so the
     * label-sum is strictly monotone until the fixpoint: comparing
     * sums is a complete convergence test and costs one aggregate per
-    * round. Lineage is bounded per round: in the default LOCAL mode
-    * each round's labels persist to executor storage and that
-    * convergence aggregate doubles as the materializing action — ONE
-    * job per round, no separate checkpoint pass; with `checkpointDir`
-    * set, every round instead writes a RELIABLE checkpoint (survives
-    * executor loss — the cluster-scale mode; costs the extra
-    * checkpoint pass per round). Both modes reach the identical
-    * fixpoint (spec-pinned). Deterministic: min is order-independent
+    * round. The rounds run in [[ScaleOps.fixpoint]]: each round's
+    * labels are checkpointed locally and that convergence aggregate
+    * doubles as the materializing action — ONE job per round, lineage
+    * truncated every round. Deterministic: min is order-independent
     * — no vertex-program race affects the fixpoint.
     *
     * @param edges undirected edge list; each row one edge
-    * @param checkpointDir reliable-checkpoint directory; None = local
     * @return (id, lbl) — every node that appears in an edge, labelled
     *         with its component's minimum node id
     */
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, checkpointDir: Option[String] = None): DataFrame = {
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // the symmetric edge list is staged once, ADAPTIVELY: the caller's
     // feeder (e.g. the MinHash candidate generation) keeps AQE, and
     // every round reads the staged copy instead of re-running it
-    val sym = truncate(
+    val sym = ScaleOps.materializeOnce(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
         .distinct())
-    var labels = truncate(
+    val labels = ScaleOps.materializeOnce(
       sym.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")))
     // decimal sum so huge id spaces can't overflow the comparison
@@ -113,10 +57,7 @@ object GraphOps {
         .head().getDecimal(0)
       if (v == null) java.math.BigDecimal.ZERO else v
     }
-    var prevSum = labelSum(labels)
-    var converged = labels.isEmpty
-    var it = 0
-    val cleanup = new LaggedCleanup
+    val seedSum = labelSum(labels)
     // one min-label propagation step (no materialization)
     def step(ls: DataFrame): DataFrame = {
       val viaNeighbours = sym.join(ls, sym("src") === ls("id"))
@@ -125,53 +66,21 @@ object GraphOps {
         .select(col("id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
     }
-    var returned = false
-    try {
-      while (!converged && it < maxIter) {
-        // TWO propagation steps per materialized round: labels cross two
-        // hops per job, halving the scheduling/materialization barriers
-        // for a given diameter. The plan per round holds exactly two
-        // join+agg pairs (bounded — lineage still truncates each round),
-        // and the monotone label-sum convergence test is unaffected (a
-        // fixpoint is a fixpoint of the composed step too).
-        val joined = step(step(labels))
-        // local mode: LAZY localCheckpoint — the labelSum aggregate below
-        // is the one job that materializes this round's labels, decides
-        // convergence, AND truncates lineage (a plain persist would leave
-        // the logical plan growing by one join per round until analysis
-        // blows up on high-diameter graphs). Reliable mode: eager
-        // checkpoint first.
-        // round jobs stay ADAPTIVE: the co-partitioned SMJ shape
-        // measured 40% slower at sf0.1 (SCALE.md, connected components).
-        val next =
-          if (reliable) truncate(joined)
-          else joined.localCheckpoint(false)
-        // hand the current round to the cleanup queue BEFORE the
-        // materializing aggregate: if labelSum throws mid-round, both
-        // the previous round (queued) and this one (tracked as `labels`,
-        // retired in the finally below) are freed — nothing persisted or
-        // checkpointed outlives a failed call. The lag is unchanged:
-        // enqueueing round N-1 frees round N-2, so round N's job can
-        // still read its N-1 parent.
-        cleanup.retire(labels)
-        labels = next
-        val nextSum = labelSum(labels)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        it += 1
-      }
-      require(converged, s"connectedComponents did not converge in $maxIter rounds")
-      returned = true
-      labels
-    } finally {
-      // success: all retired rounds predate the returned fixpoint.
-      // failure (non-convergence or a mid-round job error): nothing is
-      // returned, so the CURRENT round's blocks/files go too. `sym` is
-      // only read inside the loop (the returned labels plan is a
-      // checkpoint result), so it retires in every path.
-      cleanup.retire(sym)
-      if (!returned) cleanup.retire(labels)
-      cleanup.drain()
+    // `sym` is only read inside the loop (the returned labels plan is a
+    // checkpoint result), so it is freed when the loop ends
+    ScaleOps.fixpoint("connectedComponents", 30, labels,
+        if (labels.isEmpty) None else Some(seedSum), loopOnly = Seq(sym)) { ls =>
+      // TWO propagation steps per materialized round: labels cross two
+      // hops per job, halving the scheduling/materialization barriers
+      // for a given diameter. The plan per round holds exactly two
+      // join+agg pairs (bounded — lineage still truncates each round),
+      // and the monotone label-sum convergence test is unaffected (a
+      // fixpoint is a fixpoint of the composed step too). Round jobs
+      // stay ADAPTIVE: the co-partitioned SMJ shape measured 40%
+      // slower at sf0.1 (SCALE.md, connected components).
+      step(step(ls))
+    } { (next, _, prevSum) =>
+      Some(labelSum(next)).filter(_.compareTo(prevSum) != 0)
     }
   }
 
@@ -197,37 +106,27 @@ object GraphOps {
     *
     * Fixpoint: both rewrites leave the edge set unchanged — checked
     * exactly (no checksum-collision risk) by ONE full-outer join on
-    * (u, v) counting rows present on only one side; in local mode
-    * that count is also the job that materializes the round's lazy
-    * localCheckpoint, so each round costs a single job. With
-    * `checkpointDir` set, every round instead writes a RELIABLE
-    * checkpoint (survives executor loss — the cluster-scale mode,
-    * same option as [[connectedComponents]]). At the fixpoint the
-    * graph is a star forest: every node points directly at its
-    * component's minimum.
+    * (u, v) counting rows present on only one side; the round's edge
+    * count before it is also the job that materializes the round's
+    * lazy checkpoint in [[ScaleOps.fixpoint]], so a round whose count
+    * moved costs a single job. At the fixpoint the graph is a star
+    * forest: every node points directly at its component's minimum.
     *
     * Output contract matches [[connectedComponents]] exactly,
     * self-loops included: (id, lbl) for every node appearing in an
     * edge — a node whose only edges are self-loops is its own
     * singleton component (the final left join below restores such
     * nodes, which the star iteration itself never sees). Spec-pinned
-    * on path, clique, random, and self-loop graphs in both
-    * checkpoint modes.
+    * on path, clique, random, and self-loop graphs.
     */
-  def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+  def connectedComponentsStar(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // Materialize the RAW pair list once: both the iteration's seed
     // AND the final all-nodes restore read it. Without this base the
     // closing left join re-executes the caller's whole edge subtree —
     // for dedup graphs that is the banded MinHash candidate
     // generation, easily as expensive as the CC rounds themselves.
-    val base = {
-      val b = edges
-        .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      if (reliable) b.checkpoint() else b.localCheckpoint()
-    }
+    val base = ScaleOps.materializeOnce(edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v")))
     val init = base
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
@@ -265,54 +164,27 @@ object GraphOps {
     // fused fixpoint test: edge sets are distinct, so "unchanged" ⟺
     // the full-outer join on (u, v) has zero one-sided rows — a single
     // shuffle-join + count, half the per-round jobs of the previous
-    // two-sided anti-join emptiness test, and in local mode the count
-    // doubles as the action materializing `next`'s lazy checkpoint
+    // two-sided anti-join emptiness test
     def changedEdges(next: DataFrame, prev: DataFrame): Long =
       next.withColumn("_n", lit(1))
         .join(prev.withColumn("_p", lit(1)), Seq("u", "v"), "full_outer")
         .where(col("_n").isNull || col("_p").isNull)
         .count()
 
-    var g = if (reliable) init.checkpoint() else init.localCheckpoint()
-    var it = 0
-    var converged = g.isEmpty
-    // g was just materialized by isEmpty; its count is a cheap re-read
-    var prevCount = if (converged) 0L else g.count()
-    val cleanup = new LaggedCleanup
-    var fixed = false
-    try {
-      while (!converged && it < maxIter) {
-        val stepped =
-          halfRound(halfRound(g, large = true, dedup = false), large = false, dedup = true)
-        val next = if (reliable) stepped.checkpoint() else stepped.localCheckpoint(false)
-        // `next` enters cleanup tracking (as `g`) BEFORE the
-        // materializing count: a mid-round failure then frees the
-        // just-checkpointed round in the finally below instead of
-        // leaking its blocks/files for the session. The fixpoint test
-        // still reads the previous round — it sits in the queue, not
-        // yet freed (two-round lag).
-        val prev = g
-        cleanup.retire(g)
-        g = next
-        // two-tier exact fixpoint test: the count (which doubles as
-        // the job materializing the lazy checkpoint) differing proves
-        // change without the join; only a stable count pays the
-        // set-equality full-outer join — and both sides arrive
-        // hash-clustered on (u, v) from their round-final distincts,
-        // so that join plans exchange-free.
-        val cnt = g.count()
-        converged = cnt == prevCount && changedEdges(g, prev) == 0L
-        prevCount = cnt
-        it += 1
-      }
-      require(converged, s"connectedComponentsStar did not converge in $maxIter rounds")
-      fixed = true
-    } finally {
-      // success: retired rounds predate the fixpoint `g` read below.
-      // failure (non-convergence or a mid-round job error): the current
-      // round is never read again either — free everything.
-      if (!fixed) cleanup.retire(g)
-      cleanup.drain()
+    val seed = ScaleOps.materializeOnce(init)
+    // the seed is materialized: its isEmpty and count are cheap re-reads
+    val seedCount = if (seed.isEmpty) None else Some(seed.count())
+    val g = ScaleOps.fixpoint("connectedComponentsStar", 50, seed, seedCount) { cur =>
+      halfRound(halfRound(cur, large = true, dedup = false), large = false, dedup = true)
+    } { (next, prev, prevCount) =>
+      // two-tier exact fixpoint test: the count (which doubles as the
+      // job materializing the lazy checkpoint) differing proves change
+      // without the join; only a stable count pays the set-equality
+      // full-outer join — and both sides arrive hash-clustered on
+      // (u, v) from their round-final distincts, so that join plans
+      // exchange-free.
+      val cnt = next.count()
+      if (cnt == prevCount && changedEdges(next, prev) == 0L) None else Some(cnt)
     }
     // star forest → labelling; roots label themselves; nodes the
     // iteration never saw (self-loop-only) are their own component

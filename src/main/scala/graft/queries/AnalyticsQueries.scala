@@ -525,7 +525,7 @@ object AnalyticsQueries {
     * graph (parts sharing ≥ 2 orders, symmetrized). Three rounds of
     * (frontier ⋈ edges) keyed on the node — each round ONE shuffle, the
     * min-distance aggregate is the round's materialization (the
-    * GraphOps fixpoint discipline), and the frontier only carries
+    * ScaleOps.fixpoint discipline), and the frontier only carries
     * NEWLY-reached nodes so repeated expansion of settled nodes never
     * happens. The DuckDB oracle is a recursive CTE with UNION dedup —
     * same semantics, declaratively stated. */
@@ -552,18 +552,17 @@ object AnalyticsQueries {
     // rounds read it instead of re-running the co-purchase pipeline
     val edges = graft.operators.ScaleOps.materializeOnce(
       half.unionByName(half.select(col("d").as("s"), col("s").as("d"))))
-    var dist = Tables.part(spark, dir)
+    var dist = graft.operators.ScaleOps.materializeLazily(Tables.part(spark, dir)
       .filter(col("p_partkey") % 100 === 0)
-      .select(col("p_partkey").as("node"), lit(0).as("dist"))
-      .localCheckpoint(false)
+      .select(col("p_partkey").as("node"), lit(0).as("dist")))
     var frontier = dist
     for (round <- 1 to 3) {
-      val reached = frontier.join(edges, col("node") === col("s"))
-        .select(col("d").as("node"), lit(round).as("dist"))
-        .join(dist.select(col("node").as("seen")), col("node") === col("seen"), "left_anti")
-        .distinct()
-        .localCheckpoint(false)
-      dist = dist.unionByName(reached).localCheckpoint(false)
+      val reached = graft.operators.ScaleOps.materializeLazily(
+        frontier.join(edges, col("node") === col("s"))
+          .select(col("d").as("node"), lit(round).as("dist"))
+          .join(dist.select(col("node").as("seen")), col("node") === col("seen"), "left_anti")
+          .distinct())
+      dist = graft.operators.ScaleOps.materializeLazily(dist.unionByName(reached))
       frontier = reached
     }
     dist.groupBy(col("node")).agg(min(col("dist")).as("dist"))

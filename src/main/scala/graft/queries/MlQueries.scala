@@ -716,7 +716,7 @@ object MlQueries {
     // cls as STRING end-to-end: the labels are numeric, and the union
     // with the 'MACRO' summary row must not coerce the label column
     // back to a numeric type (ANSI would fail casting 'MACRO')
-    val pred = centroidPredictions(spark, dir).localCheckpoint(false)
+    val pred = graft.operators.ScaleOps.materializeLazily(centroidPredictions(spark, dir))
     // one aggregate instead of distinct + three groupBys + three left
     // joins (r19 opt, the evalMetricsFrom unpivot): each prediction
     // row contributes (na, tp-if-diagonal) under its actual label and

@@ -1522,15 +1522,23 @@ object PdfCodec {
         }
       }
       // the parts joined by newlines in one builder (linear in their
-      // bytes); an empty prefix takes no separator
+      // bytes); an empty prefix takes no separator. Joined content
+      // draws on the file's inflation budget too, checked as each part
+      // is read: a /Contents array may list one stream many times
+      var joinedLength = 0L
       val streams = parts.map { part =>
         deref(part) match {
-          case s: PStream => streamData(s)
+          case s: PStream =>
+            val c = streamData(s)
+            joinedLength = if (joinedLength > 0) joinedLength + 1 + c.length else c.length
+            if (parts.size > 1 && joinedLength > Compression.MaxInflatedBytes - inflated) refuse()
+            c
           case _ => refuse()
         }
       }
       val content = if (streams.size == 1) streams.head else {
-        val joined = new java.io.ByteArrayOutputStream()
+        inflated += joinedLength.toInt
+        val joined = new java.io.ByteArrayOutputStream(joinedLength.toInt)
         streams.foreach { c => if (joined.size > 0) joined.write('\n'); joined.write(c) }
         joined.toByteArray
       }

@@ -456,7 +456,7 @@ object StreamingPipelines {
     * order, which is how a crawl's landing zone accretes
     * (monotonically increasing ids per shard). */
   def curationIngest(spark: SparkSession, schema: StructType, srcDir: String,
-                     destDir: String, checkpointDir: String,
+                     destDir: String, checkpointLocation: String,
                      maxFilesPerTrigger: Int = 1): StreamingQuery =
     spark.readStream
       .schema(schema)
@@ -466,7 +466,7 @@ object StreamingPipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         curateBatch(batch, batchId, destDir)
       }
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -482,7 +482,7 @@ object StreamingPipelines {
     * backpressure that lets a crawl-scale landing zone drain in
     * bounded batches. */
   def ingest(spark: SparkSession, format: graft.sources.GeoIngest.Format,
-      srcDir: String, destDir: String, checkpointDir: String): StreamingQuery =
+      srcDir: String, destDir: String, checkpointLocation: String): StreamingQuery =
     spark.readStream
       .format("binaryFile")
       // file stream sources require the schema up front; binaryFile's is fixed
@@ -499,7 +499,7 @@ object StreamingPipelines {
         format.decode(batch)
           .write.mode("overwrite").parquet(s"$destDir/batch_id=$batchId")
       }
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .start()
 
@@ -511,7 +511,7 @@ object StreamingPipelines {
     * batch_id-partitioned parquet layout readable as one table.
     * `maxFilesPerTrigger` is the backpressure knob. */
   def fileIngest(spark: SparkSession, schema: StructType, srcDir: String,
-                 destDir: String, checkpointDir: String,
+                 destDir: String, checkpointLocation: String,
                  maxFilesPerTrigger: Int = 100): StreamingQuery =
     spark.readStream
       .schema(schema)
@@ -521,7 +521,7 @@ object StreamingPipelines {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ingestBatch(batch, batchId, destDir)
       }
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .start()
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, ScaleOps}
 
 /** Connected components: correctness of the min-label fixpoint on
   * shapes that stress the iteration (long paths need multiple
@@ -9,15 +9,6 @@ import graft.operators.GraphOps
 class GraphOpsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  /** rdd-* checkpoint directories below `dir` — after a successful
-    * reliable-mode call only the returned fixpoint's should remain
-    * (retired rounds' files are deleted as they age out). */
-  private def rddCheckpointDirs(dir: String): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      Option(f.listFiles()).toSeq.flatten.flatMap(walk) :+ f
-    walk(new java.io.File(dir)).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
-  }
 
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val df = edges.toDF("src", "dst")
@@ -48,33 +39,13 @@ class GraphOpsSpec extends SparkSpec {
     assert(components(Seq.empty).isEmpty)
   }
 
-  test("reliable-checkpoint mode reaches the identical fixpoint") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L),
-      (20L, 30L), (40L, 41L)).toDF("src", "dst")
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
-    val local = GraphOps.connectedComponents(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    val rel = GraphOps.connectedComponents(edges, "src", "dst",
-        checkpointDir = Some(ckDir))
-      .as[(Long, Long)].collect().toMap
-    assert(rel == local)
-    // the reliable mode actually wrote checkpoint data
-    val wrote = new java.io.File(ckDir).listFiles()
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint was written")
-    // and retired rounds' files were deleted: only the fixpoint remains
-    // (the 7-node path runs multiple rounds, so without the cleanup
-    // several rdd-* dirs would survive here)
-    assert(rddCheckpointDirs(ckDir).size == 1,
-      "retired rounds' checkpoint files were not deleted")
-  }
-
   test("large-star/small-star CC matches label propagation on path, clique, and random graphs") {
     def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.as[(Long, Long)].collect().toMap
     // long path (diameter stress: star CC must finish in O(log n) rounds)
     val path = (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("src", "dst")
     assert(labelsOf(GraphOps.connectedComponentsStar(path, "src", "dst"))
-      == labelsOf(GraphOps.connectedComponents(path, "src", "dst", maxIter = 60)))
+      == labelsOf(GraphOps.connectedComponents(path, "src", "dst")))
     // clique + disjoint pair
     val clique = (for (i <- 1L to 6L; j <- (i + 1) to 6L) yield (i, j)) :+ ((100L, 101L))
     val cliqueDf = clique.toDF("src", "dst")
@@ -93,32 +64,6 @@ class GraphOpsSpec extends SparkSpec {
     assert(GraphOps.connectedComponentsStar(empty, "src", "dst").count() == 0)
   }
 
-  test("star CC reliable-checkpoint mode reaches the identical fixpoint on path, clique, and random graphs") {
-    def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.as[(Long, Long)].collect().toMap
-    val path = (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("src", "dst")
-    val clique = ((for (i <- 1L to 6L; j <- (i + 1) to 6L) yield (i, j)) :+ ((100L, 101L)))
-      .toDF("src", "dst")
-    val rng = new scala.util.Random(11)
-    val rand = (1 to 120).map(_ => (rng.nextInt(60).toLong, rng.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }.toDF("src", "dst")
-    for ((g, shape) <- Seq((path, "path"), (clique, "clique"), (rand, "random"))) {
-      val ckDir = java.nio.file.Files.createTempDirectory("graft_star_ck").toString
-      val local = labelsOf(GraphOps.connectedComponentsStar(g, "src", "dst"))
-      val rel = labelsOf(GraphOps.connectedComponentsStar(g, "src", "dst",
-        checkpointDir = Some(ckDir)))
-      assert(rel == local, s"mode divergence on $shape graph")
-      val wrote = new java.io.File(ckDir).listFiles()
-      assert(wrote != null && wrote.nonEmpty, s"no reliable checkpoint written ($shape)")
-      // exactly TWO checkpoints outlive the call: the fixpoint star
-      // forest and the materialized raw-pair base (the returned plan
-      // reads both — base feeds the all-nodes restore); every retired
-      // ROUND's files must be gone
-      assert(rddCheckpointDirs(ckDir).size == 2,
-        s"retired rounds' checkpoint files were not deleted ($shape)")
-    }
-  }
-
   test("both CC variants label self-loop-only nodes with themselves") {
     // node 9 appears ONLY in a self-loop; node 1-2 is a normal pair with
     // an extra self-loop on 2 — the output contract must match exactly
@@ -129,6 +74,29 @@ class GraphOpsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(prop == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
     assert(star == prop, "star CC diverges from label propagation on self-loop input")
+  }
+
+  test("a fixpoint loop that does not converge fails by name and frees every round") {
+    // ids copied out: a key-set view would hold the RDDs alive
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val start = persisted
+    val seed = ScaleOps.materializeOnce(Seq(1L, 2L, 3L).toDF("x"))
+    val loopOnly = ScaleOps.materializeOnce(Seq(7L).toDF("y"))
+    var rounds = 0
+    val e = intercept[IllegalArgumentException] {
+      ScaleOps.fixpoint("probe", 3, seed, Some(0L), Seq(loopOnly)) { cur =>
+        cur.select((col("x") + 1).as("x"))
+      } { (next, _, total) =>
+        rounds += 1
+        // the sum grows every round: never a fixpoint
+        Some(total + next.agg(sum(col("x"))).head().getLong(0))
+      }
+    }
+    assert(e.getMessage == "requirement failed: probe did not converge in 3 rounds")
+    assert(rounds == 3)
+    // released by the loop itself, not left to the ContextCleaner
+    val held = persisted -- start
+    assert(held.isEmpty, s"RDDs persisted by the failed loop are still held: ${held.toSeq.sorted}")
   }
 
   test("q_dup_clusters representatives are cluster minima and sizes are consistent") {

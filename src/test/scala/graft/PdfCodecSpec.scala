@@ -64,6 +64,35 @@ class PdfCodecSpec extends SparkSpec {
     assert(fz.hex == "1046/307:7fb0ec1e6e7898e4", fz.hex)
   }
 
+  private def ascii(s: String) = s.getBytes("US-ASCII")
+
+  /** One page whose /Contents array lists `streams(i)` for each i in
+    * `contents`; each stream is one object, its dictionary holding
+    * `/Length` and `dict`. */
+  private def onePage(streams: Seq[Array[Byte]], dict: String,
+      contents: Seq[Int]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val offs = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def obj(body: Array[Byte]): Unit = {
+      offs += out.size
+      out.write(ascii(s"${offs.size} 0 obj\n")); out.write(body)
+      out.write(ascii("\nendobj\n"))
+    }
+    out.write(ascii("%PDF-1.4\n"))
+    obj(ascii("<< /Type /Catalog /Pages 2 0 R >>"))
+    obj(ascii("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
+    obj(ascii(contents.map(i => s"${4 + i} 0 R")
+      .mkString("<< /Type /Page /Parent 2 0 R /Contents [", " ", "] >>")))
+    streams.foreach(z => obj(ascii(
+      s"<< /Length ${z.length} $dict >>\nstream\n") ++ z ++
+      ascii("\nendstream")))
+    val xref = out.size
+    out.write(ascii(s"xref\n0 ${offs.size + 1}\n0000000000 65535 f \n" +
+      offs.map(o => f"$o%010d 00000 n \n").mkString +
+      s"trailer\n<< /Size ${offs.size + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n"))
+    out.toByteArray
+  }
+
   test("inflated bytes are bounded per file, not per stream") {
     // a FlateDecode content stream of zeros that inflates to just over
     // half the cap, after one text run; a few hundred KB compressed
@@ -75,36 +104,29 @@ class PdfCodecSpec extends SparkSpec {
       Compression.deflate(raw, z)
       z.toByteArray
     }
-    def ascii(s: String) = s.getBytes("US-ASCII")
-    // one page whose /Contents array holds `parts`
-    def pdf(parts: Seq[Array[Byte]]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val offs = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def obj(body: Array[Byte]): Unit = {
-        offs += out.size
-        out.write(ascii(s"${offs.size} 0 obj\n")); out.write(body)
-        out.write(ascii("\nendobj\n"))
-      }
-      out.write(ascii("%PDF-1.4\n"))
-      obj(ascii("<< /Type /Catalog /Pages 2 0 R >>"))
-      obj(ascii("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
-      obj(ascii(parts.indices.map(i => s"${4 + i} 0 R")
-        .mkString("<< /Type /Page /Parent 2 0 R /Contents [", " ", "] >>")))
-      parts.foreach(z => obj(ascii(
-        s"<< /Length ${z.length} /Filter /FlateDecode >>\nstream\n") ++ z ++
-        ascii("\nendstream")))
-      val xref = out.size
-      out.write(ascii(s"xref\n0 ${offs.size + 1}\n0000000000 65535 f \n" +
-        offs.map(o => f"$o%010d 00000 n \n").mkString +
-        s"trailer\n<< /Size ${offs.size + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n"))
-      out.toByteArray
-    }
+    def pdf(parts: Seq[Array[Byte]]): Array[Byte] =
+      onePage(parts, "/Filter /FlateDecode", parts.indices)
     val one = stream("one")
     val two = stream("two")
     assert(one.length + two.length < (1 << 20), "zeros compress tiny")
     assert(PdfCodec.decode(pdf(Seq(one))).get.map(_.text) == Vector("one"))
     assert(PdfCodec.decode(pdf(Seq(one, two))).isEmpty,
       "two streams inflate past the file's budget together")
+  }
+
+  test("a page's joined /Contents draw on the file's budget: one stream listed past it refuses") {
+    // one unfiltered 512 KiB content stream: a text run, then spaces
+    val part = Array.fill[Byte](1 << 19)(' ')
+    val t = ascii("BT (x) Tj ET\n")
+    System.arraycopy(t, 0, part, 0, t.length)
+    def listed(times: Int) = onePage(Seq(part), "", Seq.fill(times)(0))
+    assert(PdfCodec.decode(listed(3)).get.map(_.text) == Vector("x", "x", "x"))
+    // listed often enough that the joined content passes the cap
+    val times = Compression.MaxInflatedBytes / part.length + 1
+    val file = listed(times)
+    assert(file.length < 1000000, "the file itself stays small")
+    assert(PdfCodec.decode(file).map(_.size).isEmpty,
+      s"$times copies of one stream join past the file's budget")
   }
 
   test("refusals: dangling startxref, rootless xref stream, garbage, encryption") {

@@ -1,10 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
@@ -16,7 +14,9 @@ import org.apache.spark.sql.DataFrame
   * both builds are acted on, when three threads build and collect it
   * at once in one session, and its blocks must be released once the
   * DataFrames are dropped. A failure here means some build freed or
-  * pinned state another build owns; it is never a flaky test.
+  * pinned state another build owns; it is never a flaky test. Two
+  * source scans keep it that way: state is kept only in ScaleOps, and
+  * released only where the allowlist says.
   *
   * Rows are compared as a digest of the sorted, canonically rendered
   * rows against one single build of the same query. */
@@ -114,19 +114,32 @@ class ReentrancySpec extends SparkSpec {
     * never read again; a new release needs a reviewed entry here. */
   private val releases = Seq(
     // LaggedCleanup.free: a loop round two generations old
-    "GraphOps.scala: rdd.unpersist(blocking = false)",
+    "ScaleOps.scala: rdd.unpersist(blocking = false)",
     // logisticProbe and forestProbe: the prepared table each cached
     "MlProbes.scala: } finally df.unpersist()",
     "MlProbes.scala: } finally df.unpersist()",
   )
 
+  /** src/main with comments stripped and string literals emptied, line
+    * numbers kept. */
+  private lazy val code = SourceScan.code(_ => false)
+
+  /** Every code line of src/main matching `re`, as `file: line`
+    * trimmed. */
+  private def lines(re: scala.util.matching.Regex): Seq[String] =
+    code.flatMap { case (name, text) =>
+      text.split("\n", -1).map(_.trim).filter(re.findFirstIn(_).isDefined).map(l => s"$name: $l")
+    }
+
+  private def diffAllowlist(found: Seq[String], allowed: Seq[String], what: String): Seq[String] =
+    found.diff(allowed).map(s"$what not on the allowlist: " + _) ++
+      allowed.diff(found).map(s"allowlisted $what no longer present: " + _)
+
   test("src/main holds no JVM-global RDD collection and unpersists only where it owns the state") {
-    val comment = """^\s*(\*|/\*|//)""".r
-    val literal = """"(?:[^"\\]|\\.)*"""".r
     val decl = """^\s*(?:@\w+\s+)*(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|lazy\s+|override\s+)*(?:val|var)\s+(\w+)""".r
     val rddCollection = """(?:Map|Set|Queue|Buffer|List|Seq|Array|Vector|Stack|Deque)\w*\[[^=]*\bRDD\[""".r
     def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
-    def code(l: String) = l.trim.nonEmpty && comment.findFirstIn(l).isEmpty
+    def isCode(l: String) = l.trim.nonEmpty
     /** The definition headers enclosing line `i`, innermost first: each
       * nearest earlier code line that is less indented. */
     def enclosing(lines: Array[String], i: Int): List[String] = {
@@ -134,24 +147,16 @@ class ReentrancySpec extends SparkSpec {
       var out = List.empty[String]
       var j = i - 1
       while (j >= 0 && ind > 0) {
-        if (code(lines(j)) && indent(lines(j)) < ind) {
+        if (isCode(lines(j)) && indent(lines(j)) < ind) {
           out ::= lines(j); ind = indent(lines(j))
         }
         j -= 1
       }
       out.reverse
     }
-    val files = {
-      val s = Files.walk(Paths.get("src/main/scala"))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sortBy(_.toString)
-      finally s.close()
-    }
-    assert(files.nonEmpty)
-    val scanned = files.map { f =>
-      val name = f.getFileName.toString
-      val lines = new String(Files.readAllBytes(f), "UTF-8").split("\n", -1)
-      val codeLines = lines.indices.filter(i => code(lines(i)))
-      val memos = codeLines.flatMap { i =>
+    val memos = code.flatMap { case (name, src) =>
+      val lines = src.split("\n", -1)
+      lines.indices.filter(i => isCode(lines(i))).flatMap { i =>
         val l = lines(i)
         val text = if (l.trim.endsWith("=") && i + 1 < lines.length) l + lines(i + 1) else l
         // static: every enclosing definition is an object
@@ -163,16 +168,26 @@ class ReentrancySpec extends SparkSpec {
           .filter(_ => rddCollection.findFirstIn(text).isDefined && static)
           .map(m => s"$name:${i + 1} static RDD collection ${m.group(1)}")
       }
-      val released = codeLines.map(i => literal.replaceAllIn(lines(i), "\"\"").replaceAll("//.*", "").trim)
-        .filter(_.contains(".unpersist(")).map(l => s"$name: $l")
-      (memos, released)
     }
-    val memos = scanned.flatMap(_._1)
-    val released = scanned.flatMap(_._2)
-    val added = released.diff(releases)
-    val gone = releases.diff(released)
-    val found = memos ++ added.map("unpersist not on the allowlist: " + _) ++
-      gone.map("allowlisted unpersist no longer present: " + _)
+    val found = memos ++ diffAllowlist(lines("""\.unpersist\(""".r), releases, "unpersist")
     if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
+  }
+
+  /** Every line outside ScaleOps.scala that keeps intermediate state,
+    * pinned as `file: line` like [[releases]]. */
+  private val keeps = Seq(
+    // logisticProbe and forestProbe: a spark.ml fit iterates over its
+    // cached input, which its `finally` in [[releases]] frees
+    "MlProbes.scala: val df = prepare(embeddings).cache()",
+    "MlProbes.scala: val df = prepare(embeddings).cache()",
+  )
+
+  test("src/main keeps intermediate state only in ScaleOps") {
+    val state = """localCheckpoint|\.checkpoint\(|\.persist\(|\.cache\(|setCheckpointDir""".r
+    val kept = lines(state).filterNot(_.startsWith("ScaleOps.scala: "))
+    val found = diffAllowlist(kept, keeps, "state-keeping call")
+    if (found.nonEmpty) fail(found.mkString("\n", "\n", ""))
+    // the one home does keep state: the scan reads the code it guards
+    assert(lines(state).exists(_.startsWith("ScaleOps.scala: ")))
   }
 }

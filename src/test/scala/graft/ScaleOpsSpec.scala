@@ -33,20 +33,25 @@ class ScaleOpsSpec extends SparkSpec {
     val reference = bounded
       .withColumn("shuffle_rank", row_number().over(w).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val engine = ScaleOps.deterministicShuffle(bounded, "event_id", "seed42",
-        numPartitions = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(engine == reference,
-      s"engine path diverges from window reference: ${(engine diff reference).take(5)}")
+    withConfs("spark.sql.shuffle.partitions" -> "5") {
+      val engine = ScaleOps.deterministicShuffle(bounded, "event_id", "seed42")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(engine == reference,
+        s"engine path diverges from window reference: ${(engine diff reference).take(5)}")
+    }
   }
 
   test("deterministic shuffle is partition-count-invariant and a full permutation corpus-wide") {
     val ev = Tables.events(spark, "/root/testdata/sf0.001").select("event_id")
     val n = ev.count()
-    val a = ScaleOps.deterministicShuffle(ev, "event_id", "seed42", numPartitions = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = ScaleOps.deterministicShuffle(ev, "event_id", "seed42", numPartitions = 11)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def ranks(np: Int): Seq[(Long, Long)] =
+      withConfs("spark.sql.shuffle.partitions" -> np.toString) {
+        val df = ScaleOps.deterministicShuffle(ev, "event_id", "seed42")
+        assert(df.rdd.getNumPartitions == np)
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+      }
+    val a = ranks(3)
+    val b = ranks(11)
     assert(a == b, "rank depends on partition count")
     assert(a.map(_._2).sorted == (1L to n), "ranks are not a permutation of 1..N")
   }
@@ -70,9 +75,8 @@ class ScaleOpsSpec extends SparkSpec {
       .withColumn("r", row_number().over(wAll).cast("long"))
       .withColumn("rs", row_number().over(wGrp).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
-    for (np <- Seq(1, 4, 7)) {
-      val engine = ScaleOps.globalRankDual(ev, keys, "g", "r", "rs",
-          numPartitions = np)
+    for (np <- Seq(1, 4, 7)) withConfs("spark.sql.shuffle.partitions" -> np.toString) {
+      val engine = ScaleOps.globalRankDual(ev, keys, "g", "r", "rs")
         .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
       assert(engine == reference,
         s"dual rank at np=$np diverges: ${(engine diff reference).take(5)}")
@@ -91,7 +95,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   /** Run `body` with the given SQL confs, restoring previous values
     * (shared session — a leaked conf would bend sibling suites). */
-  private def withConfs(confs: (String, String)*)(body: => Unit): Unit = {
+  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
     val prev = confs.map { case (k, _) =>
       k -> util.Try(spark.conf.get(k)).toOption }
     try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
